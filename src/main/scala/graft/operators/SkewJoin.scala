@@ -75,11 +75,11 @@ object SkewJoin {
     * relation. `forceOptimizeSkewedJoin` lifts AQE's don't-add-a-
     * shuffle cost guard: the demo aggregates on a non-join key, so the
     * post-join exchange exists anyway and the guard would otherwise
-    * veto the split as "introducing" it. Conf save/restore has the
-    * same SEQUENTIAL-ONLY caveat as the drain machinery (session
-    * conf, queries run one at a time in Verify/Bench/tests). */
-  def aqeSkewJoinDemo(spark: SparkSession)(build: => DataFrame): DataFrame = {
-    val overrides = Seq(
+    * veto the split as "introducing" it. The thresholds apply on a
+    * scoped child session, which `build` receives. */
+  def aqeSkewJoinDemo(spark: SparkSession)(
+      build: SparkSession => DataFrame): DataFrame =
+    graft.sources.GraftSession.scoped(spark,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
@@ -97,11 +97,8 @@ object SkewJoin {
       "spark.sql.shuffle.partitions" -> "32",
       // The skewed side must actually SHUFFLE: at fixture scale the dim
       // would broadcast and there'd be no partition to split.
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val df = build
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") { c =>
+      val df = build(c)
       val rows = df.collect()
       val n = skewSplitJoinCount(df)
       require(n > 0,
@@ -109,9 +106,5 @@ object SkewJoin {
           "runtime skew re-plan (SortMergeJoin/ShuffledHashJoin with " +
           "isSkewJoin=true in the executed plan), not a plain join")
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
-  }
 }

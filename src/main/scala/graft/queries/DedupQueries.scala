@@ -28,6 +28,23 @@ object DedupQueries extends QueryModule {
 
   private val TOKENS = QueryModule.Tokens
 
+  /** Session settings that name the `graftcat` catalog over `root`. */
+  private def graftcat(root: java.nio.file.Path): Seq[(String, String)] = Seq(
+    "spark.sql.catalog.graftcat" -> "graft.sources.GraftCatalog",
+    "spark.sql.catalog.graftcat.root" -> root.toString)
+
+  /** Session settings of the storage-partitioned joins: broadcast and
+    * AQE pinned off, V2 bucketing with partition-value padding on, and
+    * the preserve-data-grouping OPT-IN (the Iceberg conf, mirrored):
+    * reporting KeyGroupedPartitioning forces per-key task grouping on
+    * every scan, so only the session planning the join enables it. */
+  private val Spj = Seq(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.sources.v2.bucketing.enabled" -> "true",
+    "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+    "spark.graft.planning.preserveDataGrouping" -> "true")
+
   /** Distinct word-3-gram shingle SET per doc, in array form:
     * (doc_id, ss: array<string>, sz). This is THE shared unit both
     * near-dup queries persist: the exploded inverted-index rows and the
@@ -2239,19 +2256,18 @@ object DedupQueries extends QueryModule {
         require(dimBytes < factBytes,
           s"pipe_table_join: dim ($dimBytes B) must weigh less than " +
             s"fact ($factBytes B) for the threshold pin to mean anything")
-        def scan(t: java.nio.file.Path, stats: Boolean) = {
-          val r = s.read.format("graft-table")
-          (if (stats) r else r.option("reportStats", "false"))
-            .load(t.toString)
-        }
-        def joined(stats: Boolean) =
-          scan(factT, stats).join(scan(dimT, stats), "lang")
-            .select($"doc_id", $"lang", $"n_chars", $"lang_docs")
-            .where($"doc_id" < 60).orderBy($"doc_id")
-        val prior = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold",
-          ((dimBytes + factBytes) / 2).toString)
-        try {
+        graft.sources.GraftSession.scoped(s,
+            "spark.sql.autoBroadcastJoinThreshold" ->
+              ((dimBytes + factBytes) / 2).toString) { s2 =>
+          def scan(t: java.nio.file.Path, stats: Boolean) = {
+            val r = s2.read.format("graft-table")
+            (if (stats) r else r.option("reportStats", "false"))
+              .load(t.toString)
+          }
+          def joined(stats: Boolean) =
+            scan(factT, stats).join(scan(dimT, stats), "lang")
+              .select($"doc_id", $"lang", $"n_chars", $"lang_docs")
+              .where($"doc_id" < 60).orderBy($"doc_id")
           import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
           val out = joined(stats = true)
           require(out.queryExecution.sparkPlan.collect {
@@ -2267,8 +2283,7 @@ object DedupQueries extends QueryModule {
               "load-bearing")
           val rows = out.collect()
           s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        } finally
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -2308,55 +2323,48 @@ object DedupQueries extends QueryModule {
         VersionedTable.commitPartitioned(s, dimT, 0L,
           fact0.groupBy($"lang").agg(count(lit(1)).as("lang_docs")),
           "lang")
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s2.conf.set("spark.sql.adaptive.enabled", "false")
-        s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s2.conf.set(
-          "spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-        // The preserve-data-grouping OPT-IN (the Iceberg conf, mirrored):
-        // reporting KeyGroupedPartitioning forces per-key task grouping
-        // on every scan, so only the session planning the join enables it.
-        s2.conf.set("spark.graft.planning.preserveDataGrouping", "true")
-        def scan(t: java.nio.file.Path) =
-          s2.read.format("graft-table").load(t.toString)
-        def joined() = scan(factT).join(scan(dimT), "lang")
-          .select($"doc_id", $"lang", $"n_chars", $"lang_docs")
-        import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-        import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-        def shuffles(df: org.apache.spark.sql.DataFrame) =
-          df.queryExecution.executedPlan.collect {
-            case e: ShuffleExchangeExec => e }.size
-        val out = joined().where($"doc_id" < 80)
-        require(shuffles(out) == 0 &&
-            out.queryExecution.executedPlan.collect {
-              case j: SortMergeJoinExec => j }.nonEmpty,
-          "pipe_table_spj: the co-partitioned join must plan a " +
-            "SortMergeJoin with ZERO exchanges from the reported " +
-            "KeyGroupedPartitioning")
-        // Grouping witness: one task per KEY, not per file.
-        val nLangs = VersionedTable.statsManifest(factT, 0L)
-          .flatMap(f => f._1.split('/').collectFirst {
-            case seg if seg.startsWith("lang=") => seg }).distinct.size
-        val full = joined()
-        require(full.rdd.getNumPartitions == nLangs &&
-            VersionedTable.statsManifest(factT, 0L).size > nLangs,
-          s"pipe_table_spj: expected $nLangs key-grouped tasks over " +
-            s"${VersionedTable.statsManifest(factT, 0L).size} files, " +
-            s"got ${full.rdd.getNumPartitions}")
-        // Negative witness: without the opt-in the scan reports no
-        // partitioning and the SAME join shuffles both sides.
-        s2.conf.set("spark.graft.planning.preserveDataGrouping", "false")
-        require(shuffles(joined().where($"doc_id" < 80)) == 2,
-          "pipe_table_spj: without the preserve-data-grouping opt-in " +
-            "the join must fall back to shuffling both sides — the " +
-            "zero-exchange plan is the connector's report, not fixture " +
-            "luck")
-        s2.conf.set("spark.graft.planning.preserveDataGrouping", "true")
-        val sorted = out.orderBy($"doc_id")
-        val rows = sorted.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*),
-          sorted.schema)
+        graft.sources.GraftSession.scoped(s, Spj: _*) { s2 =>
+          def scan(c: SparkSession, t: java.nio.file.Path) =
+            c.read.format("graft-table").load(t.toString)
+          def joined(c: SparkSession) =
+            scan(c, factT).join(scan(c, dimT), "lang")
+              .select($"doc_id", $"lang", $"n_chars", $"lang_docs")
+          import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+          import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+          def shuffles(df: org.apache.spark.sql.DataFrame) =
+            df.queryExecution.executedPlan.collect {
+              case e: ShuffleExchangeExec => e }.size
+          val out = joined(s2).where($"doc_id" < 80)
+          require(shuffles(out) == 0 &&
+              out.queryExecution.executedPlan.collect {
+                case j: SortMergeJoinExec => j }.nonEmpty,
+            "pipe_table_spj: the co-partitioned join must plan a " +
+              "SortMergeJoin with ZERO exchanges from the reported " +
+              "KeyGroupedPartitioning")
+          // Grouping witness: one task per KEY, not per file.
+          val nLangs = VersionedTable.statsManifest(factT, 0L)
+            .flatMap(f => f._1.split('/').collectFirst {
+              case seg if seg.startsWith("lang=") => seg }).distinct.size
+          val full = joined(s2)
+          require(full.rdd.getNumPartitions == nLangs &&
+              VersionedTable.statsManifest(factT, 0L).size > nLangs,
+            s"pipe_table_spj: expected $nLangs key-grouped tasks over " +
+              s"${VersionedTable.statsManifest(factT, 0L).size} files, " +
+              s"got ${full.rdd.getNumPartitions}")
+          // Negative witness: without the opt-in the scan reports no
+          // partitioning and the SAME join shuffles both sides.
+          require(graft.sources.GraftSession.scoped(s2,
+              "spark.graft.planning.preserveDataGrouping" -> "false")(
+              c => shuffles(joined(c).where($"doc_id" < 80))) == 2,
+            "pipe_table_spj: without the preserve-data-grouping opt-in " +
+              "the join must fall back to shuffling both sides — the " +
+              "zero-exchange plan is the connector's report, not fixture " +
+              "luck")
+          val sorted = out.orderBy($"doc_id")
+          val rows = sorted.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*),
+            sorted.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -2391,68 +2399,49 @@ object DedupQueries extends QueryModule {
           t
         }
         // The two table stagings are independent lifecycles on disjoint
-        // paths — overlap them (guide §2.6) so the dim's commit/evolve/
-        // compact jobs back-fill the fact staging's task tails.
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        val factT =
-          try {
-            val fFact = pool.submit(
-              new java.util.concurrent.Callable[java.nio.file.Path] {
-                override def call(): java.nio.file.Path =
-                  mk("fact", ev.where($"event_id" % 3 === 0), 2)
-              })
-            val fDim = pool.submit(
-              new java.util.concurrent.Callable[java.nio.file.Path] {
-                override def call(): java.nio.file.Path = mk("dim",
-                  ev.groupBy($"ts_us").agg(count(lit(1)).as("n_at_ts")), 1)
-              })
-            val t = fFact.get(); fDim.get(); t
-          } finally pool.shutdown()
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s2.conf.set("spark.sql.adaptive.enabled", "false")
-        s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s2.conf.set(
-          "spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-        s2.conf.set("spark.graft.planning.preserveDataGrouping", "true")
-        def joined() = s2.sql(
-          "SELECT f.event_id, f.ts_us, d.n_at_ts " +
-            "FROM graftcat.fact f JOIN graftcat.dim d " +
-            "ON f.ts_us = d.ts_us")
-        import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-        import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-        def shuffles(df: org.apache.spark.sql.DataFrame) =
-          df.queryExecution.executedPlan.collect {
-            case e: ShuffleExchangeExec => e }.size
-        val out = joined()
-        require(shuffles(out) == 0 &&
-            out.queryExecution.executedPlan.collect {
-              case j: SortMergeJoinExec => j }.nonEmpty,
-          "pipe_table_spj_days: the day-partitioned raw-column join " +
-            "must plan a SortMergeJoin with ZERO exchanges from the " +
-            "reported KeyGroupedPartitioning(days(ts_us))")
-        // Grouping witness: one task per DAY, not per file.
-        val factFiles = VersionedTable.statsManifest(factT, 2L).map(_._1)
-        val nDays = factFiles.flatMap(_.split('/').collectFirst {
-          case seg if seg.startsWith("ts_us_day=") => seg }).distinct.size
-        require(out.rdd.getNumPartitions == nDays &&
-            factFiles.size > nDays,
-          s"pipe_table_spj_days: expected $nDays day-grouped tasks " +
-            s"over ${factFiles.size} fact files, got " +
-            s"${out.rdd.getNumPartitions}")
-        // Negative witness: without the opt-in both sides shuffle.
-        s2.conf.set("spark.graft.planning.preserveDataGrouping", "false")
-        require(shuffles(joined()) == 2,
-          "pipe_table_spj_days: without the preserve-data-grouping " +
-            "opt-in the join must fall back to shuffling both sides")
-        s2.conf.set("spark.graft.planning.preserveDataGrouping", "true")
-        val sorted = out.orderBy($"event_id")
-        val rows = sorted.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*),
-          sorted.schema)
+        // paths — overlap them so the dim's commit/evolve/compact jobs
+        // back-fill the fact staging's task tails.
+        val Seq(factT, _) = graft.sources.GraftSession.overlap(
+          () => mk("fact", ev.where($"event_id" % 3 === 0), 2),
+          () => mk("dim",
+            ev.groupBy($"ts_us").agg(count(lit(1)).as("n_at_ts")), 1))
+        graft.sources.GraftSession.scoped(s, graftcat(tmp) ++ Spj: _*) { s2 =>
+          def joined(c: SparkSession) = c.sql(
+            "SELECT f.event_id, f.ts_us, d.n_at_ts " +
+              "FROM graftcat.fact f JOIN graftcat.dim d " +
+              "ON f.ts_us = d.ts_us")
+          import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+          import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+          def shuffles(df: org.apache.spark.sql.DataFrame) =
+            df.queryExecution.executedPlan.collect {
+              case e: ShuffleExchangeExec => e }.size
+          val out = joined(s2)
+          require(shuffles(out) == 0 &&
+              out.queryExecution.executedPlan.collect {
+                case j: SortMergeJoinExec => j }.nonEmpty,
+            "pipe_table_spj_days: the day-partitioned raw-column join " +
+              "must plan a SortMergeJoin with ZERO exchanges from the " +
+              "reported KeyGroupedPartitioning(days(ts_us))")
+          // Grouping witness: one task per DAY, not per file.
+          val factFiles = VersionedTable.statsManifest(factT, 2L).map(_._1)
+          val nDays = factFiles.flatMap(_.split('/').collectFirst {
+            case seg if seg.startsWith("ts_us_day=") => seg }).distinct.size
+          require(out.rdd.getNumPartitions == nDays &&
+              factFiles.size > nDays,
+            s"pipe_table_spj_days: expected $nDays day-grouped tasks " +
+              s"over ${factFiles.size} fact files, got " +
+              s"${out.rdd.getNumPartitions}")
+          // Negative witness: without the opt-in both sides shuffle.
+          require(graft.sources.GraftSession.scoped(s2,
+              "spark.graft.planning.preserveDataGrouping" -> "false")(
+              c => shuffles(joined(c))) == 2,
+            "pipe_table_spj_days: without the preserve-data-grouping " +
+              "opt-in the join must fall back to shuffling both sides")
+          val sorted = out.orderBy($"event_id")
+          val rows = sorted.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*),
+            sorted.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -2476,66 +2465,64 @@ object DedupQueries extends QueryModule {
       import graft.operators.VersionedTable
       val tmp = graft.sources.GraftSession.stagingDir("graft_vts_")
       try {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.sql("""CREATE TABLE graftcat.ev
-                  (event_id BIGINT, ts TIMESTAMP_NTZ, event_type STRING)
-                  PARTITIONED BY (days(ts))""")
-        s2.sql(s"""INSERT INTO graftcat.ev
-                   SELECT event_id, ts, event_type
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "events")}""")
-        val table = tmp.resolve("ev")
-        // The DDL bootstrap's zero-row schema file is flat; every
-        // INSERTED file must carry a day segment derived from the
-        // timestamp.
-        val files = VersionedTable.statsManifest(table, 1L).map(_._1)
-        val inserted = files.filterNot(
-          VersionedTable.statsManifest(table, 0L).map(_._1).toSet)
-        require(inserted.nonEmpty &&
-            inserted.forall(_.contains("ts_day=")),
-          s"pipe_table_timestamp: INSERT must land day segments " +
-            s"derived from the TIMESTAMP column: $inserted")
-        val scan = s2.table("graftcat.ev")
-        require(scan.schema("ts").dataType ==
-            org.apache.spark.sql.types.TimestampNTZType &&
-            !scan.columns.contains("ts_day"),
-          "pipe_table_timestamp: the schema must serve the true NTZ " +
-            "type and hide the derived segment")
-        // One-day slice on the RAW timestamp: planned files == that
-        // day's segment count (hidden partitioning's whole point).
-        val out = scan.where(
-          $"ts" >= org.apache.spark.sql.functions.expr(
-            "TIMESTAMP_NTZ'2024-01-10 00:00:00'") &&
-          $"ts" < org.apache.spark.sql.functions.expr(
-            "TIMESTAMP_NTZ'2024-01-11 00:00:00'"))
-        // Segment-less files (the flat bootstrap) always admit — only
-        // the path is evidence.
-        val dayFiles = files.count(_.contains("ts_day=2024-01-10")) +
-          files.count(!_.contains("ts_day="))
-        require(out.rdd.getNumPartitions == dayFiles &&
-            dayFiles < files.size,
-          s"pipe_table_timestamp: expected $dayFiles planned files " +
-            s"of ${files.size}, got ${out.rdd.getNumPartitions}")
-        // Micros-unit zonemaps after a stats compaction.
-        s2.sql("CALL graftcat.compact('ev', 'ts', 2)").collect()
-        val v2 = VersionedTable.latestVersion(table).get
-        val stats = VersionedTable.statsManifest(table, v2)
-        require(stats.forall { case (_, mn, mx) =>
-            mn > 1600000000000000L && mx < 1900000000000000L },
-          "pipe_table_timestamp: ts zonemaps must store epoch MICROS")
-        val sliced = s2.table("graftcat.ev").where(
-          $"ts" >= org.apache.spark.sql.functions.expr(
-            "TIMESTAMP_NTZ'2024-01-10 00:00:00'") &&
-          $"ts" < org.apache.spark.sql.functions.expr(
-            "TIMESTAMP_NTZ'2024-01-11 00:00:00'"))
-          .selectExpr("event_id",
-            "unix_micros(CAST(ts AS TIMESTAMP)) AS ts_us", "event_type")
-          .orderBy($"event_id")
-        val rows = sliced.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*),
-          sliced.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          s2.sql("""CREATE TABLE graftcat.ev
+                    (event_id BIGINT, ts TIMESTAMP_NTZ, event_type STRING)
+                    PARTITIONED BY (days(ts))""")
+          s2.sql(s"""INSERT INTO graftcat.ev
+                     SELECT event_id, ts, event_type
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "events")}""")
+          val table = tmp.resolve("ev")
+          // The DDL bootstrap's zero-row schema file is flat; every
+          // INSERTED file must carry a day segment derived from the
+          // timestamp.
+          val files = VersionedTable.statsManifest(table, 1L).map(_._1)
+          val inserted = files.filterNot(
+            VersionedTable.statsManifest(table, 0L).map(_._1).toSet)
+          require(inserted.nonEmpty &&
+              inserted.forall(_.contains("ts_day=")),
+            s"pipe_table_timestamp: INSERT must land day segments " +
+              s"derived from the TIMESTAMP column: $inserted")
+          val scan = s2.table("graftcat.ev")
+          require(scan.schema("ts").dataType ==
+              org.apache.spark.sql.types.TimestampNTZType &&
+              !scan.columns.contains("ts_day"),
+            "pipe_table_timestamp: the schema must serve the true NTZ " +
+              "type and hide the derived segment")
+          // One-day slice on the RAW timestamp: planned files == that
+          // day's segment count (hidden partitioning's whole point).
+          val out = scan.where(
+            $"ts" >= org.apache.spark.sql.functions.expr(
+              "TIMESTAMP_NTZ'2024-01-10 00:00:00'") &&
+            $"ts" < org.apache.spark.sql.functions.expr(
+              "TIMESTAMP_NTZ'2024-01-11 00:00:00'"))
+          // Segment-less files (the flat bootstrap) always admit — only
+          // the path is evidence.
+          val dayFiles = files.count(_.contains("ts_day=2024-01-10")) +
+            files.count(!_.contains("ts_day="))
+          require(out.rdd.getNumPartitions == dayFiles &&
+              dayFiles < files.size,
+            s"pipe_table_timestamp: expected $dayFiles planned files " +
+              s"of ${files.size}, got ${out.rdd.getNumPartitions}")
+          // Micros-unit zonemaps after a stats compaction.
+          s2.sql("CALL graftcat.compact('ev', 'ts', 2)").collect()
+          val v2 = VersionedTable.latestVersion(table).get
+          val stats = VersionedTable.statsManifest(table, v2)
+          require(stats.forall { case (_, mn, mx) =>
+              mn > 1600000000000000L && mx < 1900000000000000L },
+            "pipe_table_timestamp: ts zonemaps must store epoch MICROS")
+          val sliced = s2.table("graftcat.ev").where(
+            $"ts" >= org.apache.spark.sql.functions.expr(
+              "TIMESTAMP_NTZ'2024-01-10 00:00:00'") &&
+            $"ts" < org.apache.spark.sql.functions.expr(
+              "TIMESTAMP_NTZ'2024-01-11 00:00:00'"))
+            .selectExpr("event_id",
+              "unix_micros(CAST(ts AS TIMESTAMP)) AS ts_us", "event_type")
+            .orderBy($"event_id")
+          val rows = sliced.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*),
+            sliced.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -2723,39 +2710,37 @@ object DedupQueries extends QueryModule {
         VersionedTable.deleteCommit(s, table, 1L,
           Tables.documents(s, dir).where($"doc_id" % 9 === 4)
             .select($"doc_id"), "doc_id")
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        val v0 = s2.sql(
-          """SELECT doc_id, lang, n_chars FROM graftcat.docs VERSION AS OF 0
-            |WHERE doc_id BETWEEN 10 AND 40""".stripMargin)
-        val latest = s2.sql(
-          """SELECT doc_id, lang, n_chars FROM graftcat.docs
-            |WHERE doc_id BETWEEN 10 AND 40""".stripMargin)
-        // No options anywhere: the BETWEEN must still prune via the
-        // manifest's own STATSCOL declaration.
-        val filesTotal = VersionedTable.statsManifest(table, 1L).size
-        val planned = latest.rdd.getNumPartitions
-        require(planned < filesTotal,
-          s"pipe_sql_time_travel: planned $planned of $filesTotal files " +
-            "— a catalog SQL read must prune from the self-describing " +
-            "manifest")
-        require(s2.sql(
-            """SELECT count(*) AS n FROM graftcat.docs
-              |TIMESTAMP AS OF '2999-01-01'""".stripMargin)
-            .head().getLong(0) == latest
-            .sparkSession.read.format("graft-table")
-            .load(table.toString).count(),
-          "pipe_sql_time_travel: a far-future TIMESTAMP AS OF must " +
-            "serve the latest snapshot")
-        val out = v0.select(lit(0L).as("version"), $"doc_id", $"lang",
-            $"n_chars")
-          .unionAll(latest.select(lit(1L).as("version"), $"doc_id",
-            $"lang", $"n_chars"))
-          .orderBy("version", "doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          val v0 = s2.sql(
+            """SELECT doc_id, lang, n_chars FROM graftcat.docs VERSION AS OF 0
+              |WHERE doc_id BETWEEN 10 AND 40""".stripMargin)
+          val latest = s2.sql(
+            """SELECT doc_id, lang, n_chars FROM graftcat.docs
+              |WHERE doc_id BETWEEN 10 AND 40""".stripMargin)
+          // No options anywhere: the BETWEEN must still prune via the
+          // manifest's own STATSCOL declaration.
+          val filesTotal = VersionedTable.statsManifest(table, 1L).size
+          val planned = latest.rdd.getNumPartitions
+          require(planned < filesTotal,
+            s"pipe_sql_time_travel: planned $planned of $filesTotal files " +
+              "— a catalog SQL read must prune from the self-describing " +
+              "manifest")
+          require(s2.sql(
+              """SELECT count(*) AS n FROM graftcat.docs
+                |TIMESTAMP AS OF '2999-01-01'""".stripMargin)
+              .head().getLong(0) == latest
+              .sparkSession.read.format("graft-table")
+              .load(table.toString).count(),
+            "pipe_sql_time_travel: a far-future TIMESTAMP AS OF must " +
+              "serve the latest snapshot")
+          val out = v0.select(lit(0L).as("version"), $"doc_id", $"lang",
+              $"n_chars")
+            .unionAll(latest.select(lit(1L).as("version"), $"doc_id",
+              $"lang", $"n_chars"))
+            .orderBy("version", "doc_id")
+          val rows = out.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -3349,35 +3334,33 @@ object DedupQueries extends QueryModule {
           docs.where($"doc_id" % 7 === 2)
             .selectExpr("doc_id + 2199023255552L AS doc_id", "lang",
               "n_chars"))
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        def digest(ref: String) = s2.sql(
-          s"""SELECT '$ref' AS ref, CAST(count(*) AS BIGINT) AS n_rows,
-             |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-             |  bit_xor(CAST(conv(substr(md5(concat(
-             |    CAST(doc_id AS STRING), ':',
-             |    CAST(n_chars AS STRING))), 1, 15), 16, 10) AS BIGINT))
-             |    AS content_sig
-             |FROM graftcat.docs VERSION AS OF '$ref'""".stripMargin)
-        require(scala.util.Try(s2.sql(
-            "SELECT * FROM graftcat.docs VERSION AS OF 'nosuchref'")
-            .collect()).isFailure,
-          "pipe_sql_branch: an unknown ref must be an unknown version")
-        // The connector's option('ref') addresses the same head.
-        require(s.read.format("graft-table").option("ref", "exp")
-            .load(table.toString).count() ==
-          docs.count() + docs.where($"doc_id" % 7 === 1).count(),
-          "pipe_sql_branch: option(ref=exp) must read the branch head")
-        require(scala.util.Try(s.read.format("graft-table")
-            .option("ref", "exp").option("version", "0")
-            .load(table.toString).count()).isFailure,
-          "pipe_sql_branch: version and ref together must be refused")
-        val out = digest("exp").unionAll(digest("main"))
-          .unionAll(digest("v0")).orderBy("ref")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          def digest(ref: String) = s2.sql(
+            s"""SELECT '$ref' AS ref, CAST(count(*) AS BIGINT) AS n_rows,
+               |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+               |  bit_xor(CAST(conv(substr(md5(concat(
+               |    CAST(doc_id AS STRING), ':',
+               |    CAST(n_chars AS STRING))), 1, 15), 16, 10) AS BIGINT))
+               |    AS content_sig
+               |FROM graftcat.docs VERSION AS OF '$ref'""".stripMargin)
+          require(scala.util.Try(s2.sql(
+              "SELECT * FROM graftcat.docs VERSION AS OF 'nosuchref'")
+              .collect()).isFailure,
+            "pipe_sql_branch: an unknown ref must be an unknown version")
+          // The connector's option('ref') addresses the same head.
+          require(s.read.format("graft-table").option("ref", "exp")
+              .load(table.toString).count() ==
+            docs.count() + docs.where($"doc_id" % 7 === 1).count(),
+            "pipe_sql_branch: option(ref=exp) must read the branch head")
+          require(scala.util.Try(s.read.format("graft-table")
+              .option("ref", "exp").option("version", "0")
+              .load(table.toString).count()).isFailure,
+            "pipe_sql_branch: version and ref together must be refused")
+          val out = digest("exp").unionAll(digest("main"))
+            .unionAll(digest("v0")).orderBy("ref")
+          val rows = out.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -3503,48 +3486,46 @@ object DedupQueries extends QueryModule {
         val table = tmp.resolve("docs")
         VersionedTable.commit(s, table, 0L,
           Tables.documents(s, dir).select($"doc_id", $"lang", $"n_chars"))
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.sql("DELETE FROM graftcat.docs WHERE doc_id IN (3, 17, 41)")
-        require(VersionedTable.deletionVectors(table, 1L).nonEmpty,
-          "pipe_sql_dml: the SQL DELETE must publish a deletion-vector " +
-            "commit")
-        require(VersionedTable.statsManifest(table, 0L).map(_._1).toSet
-            .subsetOf(VersionedTable.statsManifest(table, 1L).map(_._1)
-              .toSet),
-          "pipe_sql_dml: the SQL DELETE rewrote data files — a delete " +
-            "must cost O(deleted keys)")
-        s2.sql(
-          """INSERT INTO graftcat.docs
-            |SELECT doc_id + 2199023255552, lang, n_chars
-            |FROM graftcat.docs VERSION AS OF 0
-            |WHERE doc_id IN (1, 2)""".stripMargin)
-        require(VersionedTable.versions(table) == Seq(0L, 1L, 2L),
-          "pipe_sql_dml: DELETE then INSERT must land as versions 1 " +
-            s"and 2 — history reads ${VersionedTable.versions(table)}")
-        // A non-key DELETE can't be a key-list DV — since r15 it falls
-        // through to the GROUP-BASED REWRITE path
-        // (SupportsRowLevelOperations) instead of refusing: runtime
-        // group filtering rewrites only the files holding matching
-        // rows (witnessed: something was removed, and any surviving
-        // deletion vector stays correctly scoped to the untouched
-        // files — the oracle proves the deleted keys stay dead either
-        // way), stamped KIND=update for the change feed.
-        s2.sql("DELETE FROM graftcat.docs " +
-          "WHERE n_chars % 2 = 1 AND doc_id < 50")
-        require(VersionedTable.latestVersion(table).contains(3L) &&
-            VersionedTable.commitKind(table, 3L).contains("update"),
-          "pipe_sql_dml: the rewrite DELETE must land as v3, " +
-            "KIND=update")
-        require(VersionedTable.removedDataFiles(table, 3L).nonEmpty,
-          "pipe_sql_dml: the rewrite DELETE must replace the files " +
-            "holding matching rows")
-        val out = s2.sql(
-          "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          s2.sql("DELETE FROM graftcat.docs WHERE doc_id IN (3, 17, 41)")
+          require(VersionedTable.deletionVectors(table, 1L).nonEmpty,
+            "pipe_sql_dml: the SQL DELETE must publish a deletion-vector " +
+              "commit")
+          require(VersionedTable.statsManifest(table, 0L).map(_._1).toSet
+              .subsetOf(VersionedTable.statsManifest(table, 1L).map(_._1)
+                .toSet),
+            "pipe_sql_dml: the SQL DELETE rewrote data files — a delete " +
+              "must cost O(deleted keys)")
+          s2.sql(
+            """INSERT INTO graftcat.docs
+              |SELECT doc_id + 2199023255552, lang, n_chars
+              |FROM graftcat.docs VERSION AS OF 0
+              |WHERE doc_id IN (1, 2)""".stripMargin)
+          require(VersionedTable.versions(table) == Seq(0L, 1L, 2L),
+            "pipe_sql_dml: DELETE then INSERT must land as versions 1 " +
+              s"and 2 — history reads ${VersionedTable.versions(table)}")
+          // A non-key DELETE can't be a key-list DV — it falls
+          // through to the GROUP-BASED REWRITE path
+          // (SupportsRowLevelOperations) instead of refusing: runtime
+          // group filtering rewrites only the files holding matching
+          // rows (witnessed: something was removed, and any surviving
+          // deletion vector stays correctly scoped to the untouched
+          // files — the oracle proves the deleted keys stay dead either
+          // way), stamped KIND=update for the change feed.
+          s2.sql("DELETE FROM graftcat.docs " +
+            "WHERE n_chars % 2 = 1 AND doc_id < 50")
+          require(VersionedTable.latestVersion(table).contains(3L) &&
+              VersionedTable.commitKind(table, 3L).contains("update"),
+            "pipe_sql_dml: the rewrite DELETE must land as v3, " +
+              "KIND=update")
+          require(VersionedTable.removedDataFiles(table, 3L).nonEmpty,
+            "pipe_sql_dml: the rewrite DELETE must replace the files " +
+              "holding matching rows")
+          val out = s2.sql(
+            "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
+          val rows = out.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -3570,40 +3551,38 @@ object DedupQueries extends QueryModule {
           Tables.documents(s, dir).select($"doc_id", $"lang", $"n_chars")
             .repartitionByRange(8, $"doc_id"), "doc_id",
           rowCounts = true)
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.sql("UPDATE graftcat.docs SET n_chars = n_chars + 100000 " +
-          "WHERE doc_id BETWEEN 10 AND 40")
-        require(VersionedTable.latestVersion(table).contains(1L) &&
-            VersionedTable.commitKind(table, 1L).contains("update"),
-          "pipe_sql_update: the statement must land as v1, KIND=update")
-        // The condition reached the operation scan: files whose
-        // zonemap misses [10, 40] were never rewritten.
-        val untouched = VersionedTable.statsManifest(table, 0L).collect {
-          case (f, mn, mx) if !(mx >= 10L && mn <= 40L) => f
-        }.toSet
-        require(untouched.nonEmpty && untouched.subsetOf(
-            VersionedTable.statsManifest(table, 1L).map(_._1).toSet),
-          "pipe_sql_update: an untouched file's manifest line vanished " +
-            "— the SQL UPDATE must rewrite only zonemap-overlapping " +
-            "files")
-        val rc = VersionedTable.rowCounts(table, 1L)
-        require(rc.map(_._1).toSet ==
-            VersionedTable.statsManifest(table, 1L).map(_._1).toSet &&
-            rc.map(_._2).sum == VersionedTable.read(s, table).count(),
-          "pipe_sql_update: ROWS lines must cover v1 exactly and sum " +
-            "to the true row count")
-        // A no-match UPDATE is a no-op: nothing published.
-        s2.sql("UPDATE graftcat.docs SET n_chars = 0 " +
-          "WHERE doc_id BETWEEN -100 AND -50")
-        require(VersionedTable.latestVersion(table).contains(1L),
-          "pipe_sql_update: a no-match UPDATE must publish nothing")
-        val out = s2.sql(
-          "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          s2.sql("UPDATE graftcat.docs SET n_chars = n_chars + 100000 " +
+            "WHERE doc_id BETWEEN 10 AND 40")
+          require(VersionedTable.latestVersion(table).contains(1L) &&
+              VersionedTable.commitKind(table, 1L).contains("update"),
+            "pipe_sql_update: the statement must land as v1, KIND=update")
+          // The condition reached the operation scan: files whose
+          // zonemap misses [10, 40] were never rewritten.
+          val untouched = VersionedTable.statsManifest(table, 0L).collect {
+            case (f, mn, mx) if !(mx >= 10L && mn <= 40L) => f
+          }.toSet
+          require(untouched.nonEmpty && untouched.subsetOf(
+              VersionedTable.statsManifest(table, 1L).map(_._1).toSet),
+            "pipe_sql_update: an untouched file's manifest line vanished " +
+              "— the SQL UPDATE must rewrite only zonemap-overlapping " +
+              "files")
+          val rc = VersionedTable.rowCounts(table, 1L)
+          require(rc.map(_._1).toSet ==
+              VersionedTable.statsManifest(table, 1L).map(_._1).toSet &&
+              rc.map(_._2).sum == VersionedTable.read(s, table).count(),
+            "pipe_sql_update: ROWS lines must cover v1 exactly and sum " +
+              "to the true row count")
+          // A no-match UPDATE is a no-op: nothing published.
+          s2.sql("UPDATE graftcat.docs SET n_chars = 0 " +
+            "WHERE doc_id BETWEEN -100 AND -50")
+          require(VersionedTable.latestVersion(table).contains(1L),
+            "pipe_sql_update: a no-match UPDATE must publish nothing")
+          val out = s2.sql(
+            "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
+          val rows = out.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -3627,37 +3606,35 @@ object DedupQueries extends QueryModule {
         val docs = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
         VersionedTable.commit(s, table, 0L, docs)
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        // The upsert source: +7000 chars for doc_id%6==2 (matched),
-        // clones shifted past the id space for doc_id%11==5
-        // (unmatched) — pipe_merge_commit's u1, as a temp view on the
-        // catalog session.
-        graft.sources.Tables.table(s2, dir, "documents")
-          .select($"doc_id", $"lang", $"n_chars")
-          .where($"doc_id" % 6 === 2)
-          .selectExpr("doc_id", "lang", "n_chars + 7000L AS n_chars")
-          .unionAll(graft.sources.Tables.table(s2, dir, "documents")
-            .where($"doc_id" % 11 === 5)
-            .selectExpr("doc_id + 2199023255552L AS doc_id", "lang",
-              "n_chars"))
-          .createOrReplaceTempView("upserts")
-        s2.sql(
-          """MERGE INTO graftcat.docs t USING upserts u
-            |ON t.doc_id = u.doc_id
-            |WHEN MATCHED THEN UPDATE SET n_chars = u.n_chars
-            |WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
-            |  VALUES (u.doc_id, u.lang, u.n_chars)""".stripMargin)
-        require(VersionedTable.latestVersion(table).contains(1L) &&
-            VersionedTable.commitKind(table, 1L).contains("update"),
-          "pipe_sql_merge: the MERGE must land as one v1 KIND=update " +
-            "commit")
-        val out = s2.sql(
-          "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          // The upsert source: +7000 chars for doc_id%6==2 (matched),
+          // clones shifted past the id space for doc_id%11==5
+          // (unmatched) — pipe_merge_commit's u1, as a temp view on the
+          // catalog session.
+          graft.sources.Tables.table(s2, dir, "documents")
+            .select($"doc_id", $"lang", $"n_chars")
+            .where($"doc_id" % 6 === 2)
+            .selectExpr("doc_id", "lang", "n_chars + 7000L AS n_chars")
+            .unionAll(graft.sources.Tables.table(s2, dir, "documents")
+              .where($"doc_id" % 11 === 5)
+              .selectExpr("doc_id + 2199023255552L AS doc_id", "lang",
+                "n_chars"))
+            .createOrReplaceTempView("upserts")
+          s2.sql(
+            """MERGE INTO graftcat.docs t USING upserts u
+              |ON t.doc_id = u.doc_id
+              |WHEN MATCHED THEN UPDATE SET n_chars = u.n_chars
+              |WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
+              |  VALUES (u.doc_id, u.lang, u.n_chars)""".stripMargin)
+          require(VersionedTable.latestVersion(table).contains(1L) &&
+              VersionedTable.commitKind(table, 1L).contains("update"),
+            "pipe_sql_merge: the MERGE must land as one v1 KIND=update " +
+              "commit")
+          val out = s2.sql(
+            "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
+          val rows = out.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -3682,41 +3659,39 @@ object DedupQueries extends QueryModule {
         val docs = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
         VersionedTable.commit(s, table, 0L, docs)
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        // The source snapshot: every doc_id%3==0 row with bumped
-        // n_chars (matched → update), plus shifted clones (absent from
-        // the target → insert); everything else is ABSENT from the
-        // source (→ delete). Post-merge, the table IS this snapshot.
-        graft.sources.Tables.table(s2, dir, "documents")
-          .where($"doc_id" % 3 === 0)
-          .selectExpr("doc_id", "lang", "n_chars + 1000L AS n_chars")
-          .unionAll(graft.sources.Tables.table(s2, dir, "documents")
-            .where($"doc_id" % 11 === 5)
-            .selectExpr("doc_id + 2199023255552L AS doc_id", "lang",
-              "n_chars"))
-          .createOrReplaceTempView("snapshot")
-        s2.sql(
-          """MERGE INTO graftcat.docs t USING snapshot u
-            |ON t.doc_id = u.doc_id
-            |WHEN MATCHED THEN UPDATE SET n_chars = u.n_chars
-            |WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
-            |  VALUES (u.doc_id, u.lang, u.n_chars)
-            |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
-        require(VersionedTable.latestVersion(table).contains(1L) &&
-            VersionedTable.commitKind(table, 1L).contains("update"),
-          "pipe_sql_merge_sync: the sync must land as one v1 " +
-            "KIND=update commit")
-        val srcN = s2.table("snapshot").count()
-        val out = s2.sql(
-          "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
-        val rows = out.collect()
-        require(rows.length.toLong == srcN,
-          s"pipe_sql_merge_sync: post-sync row count ${rows.length} " +
-            s"!= source snapshot $srcN — source-absent rows survived")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          // The source snapshot: every doc_id%3==0 row with bumped
+          // n_chars (matched → update), plus shifted clones (absent from
+          // the target → insert); everything else is ABSENT from the
+          // source (→ delete). Post-merge, the table IS this snapshot.
+          graft.sources.Tables.table(s2, dir, "documents")
+            .where($"doc_id" % 3 === 0)
+            .selectExpr("doc_id", "lang", "n_chars + 1000L AS n_chars")
+            .unionAll(graft.sources.Tables.table(s2, dir, "documents")
+              .where($"doc_id" % 11 === 5)
+              .selectExpr("doc_id + 2199023255552L AS doc_id", "lang",
+                "n_chars"))
+            .createOrReplaceTempView("snapshot")
+          s2.sql(
+            """MERGE INTO graftcat.docs t USING snapshot u
+              |ON t.doc_id = u.doc_id
+              |WHEN MATCHED THEN UPDATE SET n_chars = u.n_chars
+              |WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
+              |  VALUES (u.doc_id, u.lang, u.n_chars)
+              |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
+          require(VersionedTable.latestVersion(table).contains(1L) &&
+              VersionedTable.commitKind(table, 1L).contains("update"),
+            "pipe_sql_merge_sync: the sync must land as one v1 " +
+              "KIND=update commit")
+          val srcN = s2.table("snapshot").count()
+          val out = s2.sql(
+            "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
+          val rows = out.collect()
+          require(rows.length.toLong == srcN,
+            s"pipe_sql_merge_sync: post-sync row count ${rows.length} " +
+              s"!= source snapshot $srcN — source-absent rows survived")
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -3737,60 +3712,58 @@ object DedupQueries extends QueryModule {
       import graft.operators.VersionedTable
       val tmp = graft.sources.GraftSession.stagingDir("graft_vddl_")
       try {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.sql(s"""CREATE TABLE graftcat.docs AS
-                   SELECT doc_id, lang, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-        val table = tmp.resolve("docs")
-        require(VersionedTable.versions(table) == Seq(0L, 1L),
-          "pipe_sql_ddl: CTAS must land as bootstrap v0 + data v1, " +
-            s"got ${VersionedTable.versions(table)}")
-        require(s2.sql(
-            "SELECT count(*) AS n FROM graftcat.docs VERSION AS OF 0")
-            .head().getLong(0) == 0L,
-          "pipe_sql_ddl: VERSION AS OF 0 must serve the empty " +
-            "schema-pinning declaration")
-        s2.sql("ALTER TABLE graftcat.docs RENAME COLUMN n_chars TO chars")
-        // The rename is metadata-only debt; the compaction
-        // materializes it into the files (and re-clusters).
-        s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
-        require(VersionedTable.columnMappings(table, 3L).isEmpty,
-          "pipe_sql_ddl: compaction must materialize the rename")
-        // DROP is ref-guarded: a pinned release refuses to vanish.
-        s2.sql("CALL graftcat.tag('docs', 'release', 3)")
-        require(scala.util.Try(
-            s2.sql("DROP TABLE graftcat.docs")).isFailure,
-          "pipe_sql_ddl: DROP TABLE must refuse while a tag pins " +
-            "history")
-        // RENAME TABLE (r16) is one atomic directory move — history
-        // rides along; CREATE OR REPLACE re-declares in place (drop +
-        // create, both ref-guarded); an unpinned scratch table then
-        // drops cleanly and is gone.
-        s2.sql("CREATE TABLE graftcat.scratch (id BIGINT)")
-        s2.sql("ALTER TABLE graftcat.scratch RENAME TO graftcat.scratch2")
-        require(VersionedTable.latestVersion(
-            tmp.resolve("scratch")).isEmpty &&
-            VersionedTable.latestVersion(tmp.resolve("scratch2"))
-              .contains(0L),
-          "pipe_sql_ddl: RENAME TO must move the table directory")
-        s2.sql("CREATE OR REPLACE TABLE graftcat.scratch2 " +
-          "AS SELECT 5L AS id")
-        require(s2.sql("SELECT id FROM graftcat.scratch2").head()
-            .getLong(0) == 5L &&
-            VersionedTable.versions(tmp.resolve("scratch2")) ==
-              Seq(0L, 1L),
-          "pipe_sql_ddl: CREATE OR REPLACE must re-declare from v0")
-        s2.sql("DROP TABLE graftcat.scratch2")
-        require(VersionedTable.latestVersion(
-            tmp.resolve("scratch2")).isEmpty,
-          "pipe_sql_ddl: DROP TABLE must remove the unpinned table")
-        val out = s2.sql(
-          "SELECT doc_id, lang, chars FROM graftcat.docs ORDER BY doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          s2.sql(s"""CREATE TABLE graftcat.docs AS
+                     SELECT doc_id, lang, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
+          val table = tmp.resolve("docs")
+          require(VersionedTable.versions(table) == Seq(0L, 1L),
+            "pipe_sql_ddl: CTAS must land as bootstrap v0 + data v1, " +
+              s"got ${VersionedTable.versions(table)}")
+          require(s2.sql(
+              "SELECT count(*) AS n FROM graftcat.docs VERSION AS OF 0")
+              .head().getLong(0) == 0L,
+            "pipe_sql_ddl: VERSION AS OF 0 must serve the empty " +
+              "schema-pinning declaration")
+          s2.sql("ALTER TABLE graftcat.docs RENAME COLUMN n_chars TO chars")
+          // The rename is metadata-only debt; the compaction
+          // materializes it into the files (and re-clusters).
+          s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
+          require(VersionedTable.columnMappings(table, 3L).isEmpty,
+            "pipe_sql_ddl: compaction must materialize the rename")
+          // DROP is ref-guarded: a pinned release refuses to vanish.
+          s2.sql("CALL graftcat.tag('docs', 'release', 3)")
+          require(scala.util.Try(
+              s2.sql("DROP TABLE graftcat.docs")).isFailure,
+            "pipe_sql_ddl: DROP TABLE must refuse while a tag pins " +
+              "history")
+          // RENAME TABLE is one atomic directory move — history
+          // rides along; CREATE OR REPLACE re-declares in place (drop +
+          // create, both ref-guarded); an unpinned scratch table then
+          // drops cleanly and is gone.
+          s2.sql("CREATE TABLE graftcat.scratch (id BIGINT)")
+          s2.sql("ALTER TABLE graftcat.scratch RENAME TO graftcat.scratch2")
+          require(VersionedTable.latestVersion(
+              tmp.resolve("scratch")).isEmpty &&
+              VersionedTable.latestVersion(tmp.resolve("scratch2"))
+                .contains(0L),
+            "pipe_sql_ddl: RENAME TO must move the table directory")
+          s2.sql("CREATE OR REPLACE TABLE graftcat.scratch2 " +
+            "AS SELECT 5L AS id")
+          require(s2.sql("SELECT id FROM graftcat.scratch2").head()
+              .getLong(0) == 5L &&
+              VersionedTable.versions(tmp.resolve("scratch2")) ==
+                Seq(0L, 1L),
+            "pipe_sql_ddl: CREATE OR REPLACE must re-declare from v0")
+          s2.sql("DROP TABLE graftcat.scratch2")
+          require(VersionedTable.latestVersion(
+              tmp.resolve("scratch2")).isEmpty,
+            "pipe_sql_ddl: DROP TABLE must remove the unpinned table")
+          val out = s2.sql(
+            "SELECT doc_id, lang, chars FROM graftcat.docs ORDER BY doc_id")
+          val rows = out.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -3809,64 +3782,62 @@ object DedupQueries extends QueryModule {
       import graft.operators.VersionedTable
       val tmp = graft.sources.GraftSession.stagingDir("graft_vpart_")
       try {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.sql("""CREATE TABLE graftcat.docs
-                  (doc_id BIGINT, lang STRING, n_chars BIGINT)
-                  PARTITIONED BY (lang)""")
-        val table = tmp.resolve("docs")
-        require(VersionedTable.declaredPartitionCols(table, 0L) ==
-            Seq("lang"),
-          "pipe_sql_partitioned: the DDL must declare the layout on " +
-            "the bootstrap")
-        s2.sql(s"""INSERT INTO graftcat.docs
-                   SELECT doc_id, lang, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-        // Every ingested file landed under its partition segment.
-        val added = VersionedTable.addedLines(table, 1L)
-          .filterNot(_.contains('\t'))
-        require(added.nonEmpty && added.forall(_.contains("lang=")),
-          s"pipe_sql_partitioned: INSERT must land col=value files, " +
-            s"got $added")
-        val langs = added.flatMap(f => f.split('/').collectFirst {
-          case seg if seg.startsWith("lang=") => seg }).distinct
-        require(langs.size > 1,
-          "pipe_sql_partitioned: fixture must span several partitions")
-        // MANIFEST PARTITION PRUNING from plain SQL: the scan plans
-        // one input partition per surviving file, so a single-value
-        // predicate must read strictly fewer files than the table
-        // holds (the pipe_partition_commit witness, on a DDL table).
-        val one = s2.sql(
-          "SELECT * FROM graftcat.docs WHERE lang = 'en'")
-        val scanned = one.rdd.getNumPartitions
-        val enFiles = added.count(_.contains("lang=en"))
-        // +1: the flat zero-row bootstrap carries no partition segment
-        // so no value predicate can ever prune it — a constant, not a
-        // scale cost.
-        require(scanned == enFiles + 1 && scanned < added.size + 1,
-          s"pipe_sql_partitioned: predicate scanned $scanned files, " +
-            s"expected the $enFiles lang=en files (+ bootstrap) of " +
-            s"${added.size + 1}")
-        // CTAS PARTITIONED BY lands partitioned the same way.
-        s2.sql(s"""CREATE TABLE graftcat.by_lang PARTITIONED BY (lang)
-                   AS SELECT doc_id, lang, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
-                   WHERE doc_id % 5 = 0""")
-        val t2 = tmp.resolve("by_lang")
-        val ctasFiles = VersionedTable.addedLines(t2, 1L)
-          .filterNot(_.contains('\t'))
-        require(ctasFiles.nonEmpty && ctasFiles.forall(_.contains("lang=")),
-          "pipe_sql_partitioned: CTAS writes must land partitioned")
-        val out = s2.sql(
-          """SELECT d.doc_id, d.lang, d.n_chars,
-             |  CASE WHEN b.doc_id IS NULL THEN 0L ELSE 1L END AS in_ctas
-             |FROM graftcat.docs d LEFT JOIN graftcat.by_lang b
-             |  ON d.doc_id = b.doc_id
-             |ORDER BY d.doc_id""".stripMargin)
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          s2.sql("""CREATE TABLE graftcat.docs
+                    (doc_id BIGINT, lang STRING, n_chars BIGINT)
+                    PARTITIONED BY (lang)""")
+          val table = tmp.resolve("docs")
+          require(VersionedTable.declaredPartitionCols(table, 0L) ==
+              Seq("lang"),
+            "pipe_sql_partitioned: the DDL must declare the layout on " +
+              "the bootstrap")
+          s2.sql(s"""INSERT INTO graftcat.docs
+                     SELECT doc_id, lang, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
+          // Every ingested file landed under its partition segment.
+          val added = VersionedTable.addedLines(table, 1L)
+            .filterNot(_.contains('\t'))
+          require(added.nonEmpty && added.forall(_.contains("lang=")),
+            s"pipe_sql_partitioned: INSERT must land col=value files, " +
+              s"got $added")
+          val langs = added.flatMap(f => f.split('/').collectFirst {
+            case seg if seg.startsWith("lang=") => seg }).distinct
+          require(langs.size > 1,
+            "pipe_sql_partitioned: fixture must span several partitions")
+          // MANIFEST PARTITION PRUNING from plain SQL: the scan plans
+          // one input partition per surviving file, so a single-value
+          // predicate must read strictly fewer files than the table
+          // holds (the pipe_partition_commit witness, on a DDL table).
+          val one = s2.sql(
+            "SELECT * FROM graftcat.docs WHERE lang = 'en'")
+          val scanned = one.rdd.getNumPartitions
+          val enFiles = added.count(_.contains("lang=en"))
+          // +1: the flat zero-row bootstrap carries no partition segment
+          // so no value predicate can ever prune it — a constant, not a
+          // scale cost.
+          require(scanned == enFiles + 1 && scanned < added.size + 1,
+            s"pipe_sql_partitioned: predicate scanned $scanned files, " +
+              s"expected the $enFiles lang=en files (+ bootstrap) of " +
+              s"${added.size + 1}")
+          // CTAS PARTITIONED BY lands partitioned the same way.
+          s2.sql(s"""CREATE TABLE graftcat.by_lang PARTITIONED BY (lang)
+                     AS SELECT doc_id, lang, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
+                     WHERE doc_id % 5 = 0""")
+          val t2 = tmp.resolve("by_lang")
+          val ctasFiles = VersionedTable.addedLines(t2, 1L)
+            .filterNot(_.contains('\t'))
+          require(ctasFiles.nonEmpty && ctasFiles.forall(_.contains("lang=")),
+            "pipe_sql_partitioned: CTAS writes must land partitioned")
+          val out = s2.sql(
+            """SELECT d.doc_id, d.lang, d.n_chars,
+               |  CASE WHEN b.doc_id IS NULL THEN 0L ELSE 1L END AS in_ctas
+               |FROM graftcat.docs d LEFT JOIN graftcat.by_lang b
+               |  ON d.doc_id = b.doc_id
+               |ORDER BY d.doc_id""".stripMargin)
+          val rows = out.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -3898,67 +3869,65 @@ object DedupQueries extends QueryModule {
           carried = VersionedTable.manifest(table, 0L),
           statsCol = Some("doc_id"), rowCounts = true)
         VersionedTable.tagCreate(table, "release", 1L)
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        // $files: one row per live data file, bytes/ROWS/zonemaps from
-        // the manifest (+ a stat call for bytes), partition segments.
-        // Served DISTRIBUTED (r18): the plan must show a real V2
-        // BatchScan — executors parse the manifest and make the stat
-        // calls; a LocalTableScan here would mean a driver-side
-        // per-file materialization at PLAN time, the thing that OOMs
-        // the driver at a 10⁷-file table. $partitions likewise.
-        val filesDf = s2.sql("SELECT * FROM graftcat.`docs$files`")
-        Seq(filesDf,
-            s2.sql("SELECT * FROM graftcat.`docs$partitions`")).foreach {
-          df =>
-            val plan = df.queryExecution.executedPlan
-            require(plan.collect {
-                case b: org.apache.spark.sql.execution.datasources.v2
-                  .BatchScanExec => b }.nonEmpty &&
-              plan.collect {
-                case l: org.apache.spark.sql.execution
-                  .LocalTableScanExec => l }.isEmpty,
-              "pipe_table_meta: file-sized metadata tables must be " +
-                "served by a distributed V2 scan, not a driver-side " +
-                "LocalTableScan")
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          // $files: one row per live data file, bytes/ROWS/zonemaps from
+          // the manifest (+ a stat call for bytes), partition segments.
+          // Served DISTRIBUTED: the plan must show a real V2
+          // BatchScan — executors parse the manifest and make the stat
+          // calls; a LocalTableScan here would mean a driver-side
+          // per-file materialization at PLAN time, the thing that OOMs
+          // the driver at a 10⁷-file table. $partitions likewise.
+          val filesDf = s2.sql("SELECT * FROM graftcat.`docs$files`")
+          Seq(filesDf,
+              s2.sql("SELECT * FROM graftcat.`docs$partitions`")).foreach {
+            df =>
+              val plan = df.queryExecution.executedPlan
+              require(plan.collect {
+                  case b: org.apache.spark.sql.execution.datasources.v2
+                    .BatchScanExec => b }.nonEmpty &&
+                plan.collect {
+                  case l: org.apache.spark.sql.execution
+                    .LocalTableScanExec => l }.isEmpty,
+                "pipe_table_meta: file-sized metadata tables must be " +
+                  "served by a distributed V2 scan, not a driver-side " +
+                  "LocalTableScan")
+          }
+          val files = filesDf.collect()
+          require(files.length ==
+              VersionedTable.statsManifest(table, 1L).size,
+            "pipe_table_meta: $files must inventory the live snapshot")
+          require(files.forall(r => r.getLong(r.fieldIndex("bytes")) > 0 &&
+              !r.isNullAt(r.fieldIndex("row_count")) &&
+              r.getLong(r.fieldIndex("stats_min")) <=
+                r.getLong(r.fieldIndex("stats_max")) &&
+              r.getString(r.fieldIndex("partition")).startsWith("lang=")),
+            "pipe_table_meta: $files rows must carry bytes, ROWS count, " +
+              "zonemap bounds and partition segments")
+          // Time travel composes: v0's inventory is strictly smaller.
+          val v0Files = s2.sql(
+            "SELECT * FROM graftcat.`docs$files` VERSION AS OF 0").count()
+          require(v0Files < files.length && v0Files > 0,
+            s"pipe_table_meta: VERSION AS OF 0 must serve v0's " +
+              s"$v0Files-file inventory")
+          // $history: one row per commit, kind and add/remove counts.
+          val hist = s2.sql("SELECT version, files_added, files_removed " +
+            "FROM graftcat.`docs$history` ORDER BY version").collect()
+          require(hist.map(_.getLong(0)).toSeq == Seq(0L, 1L) &&
+              hist.forall(r => r.getLong(1) > 0 && r.getLong(2) == 0),
+            "pipe_table_meta: $history must report both append commits")
+          // $refs: the tag with its pinned version.
+          val refs = s2.sql("SELECT name, type, version " +
+            "FROM graftcat.`docs$refs`").collect()
+          require(refs.map(r => (r.getString(0), r.getString(1),
+              r.getLong(2))).toSeq == Seq(("release", "tag", 1L)),
+            s"pipe_table_meta: $$refs must list the tag, got " +
+              refs.mkString(", "))
+          // $partitions: the per-lang rollup — the ORACLE-CHECKED half.
+          val out = s2.sql("SELECT lang, row_count " +
+            "FROM graftcat.`docs$partitions` ORDER BY lang")
+          val rows = out.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
         }
-        val files = filesDf.collect()
-        require(files.length ==
-            VersionedTable.statsManifest(table, 1L).size,
-          "pipe_table_meta: $files must inventory the live snapshot")
-        require(files.forall(r => r.getLong(r.fieldIndex("bytes")) > 0 &&
-            !r.isNullAt(r.fieldIndex("row_count")) &&
-            r.getLong(r.fieldIndex("stats_min")) <=
-              r.getLong(r.fieldIndex("stats_max")) &&
-            r.getString(r.fieldIndex("partition")).startsWith("lang=")),
-          "pipe_table_meta: $files rows must carry bytes, ROWS count, " +
-            "zonemap bounds and partition segments")
-        // Time travel composes: v0's inventory is strictly smaller.
-        val v0Files = s2.sql(
-          "SELECT * FROM graftcat.`docs$files` VERSION AS OF 0").count()
-        require(v0Files < files.length && v0Files > 0,
-          s"pipe_table_meta: VERSION AS OF 0 must serve v0's " +
-            s"$v0Files-file inventory")
-        // $history: one row per commit, kind and add/remove counts.
-        val hist = s2.sql("SELECT version, files_added, files_removed " +
-          "FROM graftcat.`docs$history` ORDER BY version").collect()
-        require(hist.map(_.getLong(0)).toSeq == Seq(0L, 1L) &&
-            hist.forall(r => r.getLong(1) > 0 && r.getLong(2) == 0),
-          "pipe_table_meta: $history must report both append commits")
-        // $refs: the tag with its pinned version.
-        val refs = s2.sql("SELECT name, type, version " +
-          "FROM graftcat.`docs$refs`").collect()
-        require(refs.map(r => (r.getString(0), r.getString(1),
-            r.getLong(2))).toSeq == Seq(("release", "tag", 1L)),
-          s"pipe_table_meta: $$refs must list the tag, got " +
-            refs.mkString(", "))
-        // $partitions: the per-lang rollup — the ORACLE-CHECKED half.
-        val out = s2.sql("SELECT lang, row_count " +
-          "FROM graftcat.`docs$partitions` ORDER BY lang")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -3983,104 +3952,102 @@ object DedupQueries extends QueryModule {
       import graft.operators.VersionedTable
       val tmp = graft.sources.GraftSession.stagingDir("graft_vevolve_")
       try {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.sql("""CREATE TABLE graftcat.docs
-                  (doc_id BIGINT, lang STRING, source STRING,
-                   n_chars BIGINT)
-                  PARTITIONED BY (lang)""")
-        val table = tmp.resolve("docs")
-        s2.sql(s"""INSERT INTO graftcat.docs
-                   SELECT doc_id, lang, source, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
-                   WHERE doc_id % 3 = 0""")
-        val oldFiles = VersionedTable.addedLines(table, 1L)
-          .filterNot(_.contains('\t'))
-        require(oldFiles.nonEmpty && oldFiles.forall(_.contains("lang=")),
-          s"pipe_partition_evolve: batch 1 must land lang=… files")
-        // The evolution itself: ONE metadata commit, zero data files.
-        s2.sql("CALL graftcat.evolve_layout('docs', 'source')")
-        require(VersionedTable.latestVersion(table).contains(2L),
-          "pipe_partition_evolve: evolve_layout must publish one commit")
-        val evolveAdds = VersionedTable.addedLines(table, 2L)
-        require(evolveAdds.size == 1 &&
-            evolveAdds.head.startsWith("PARTSPEC\t"),
-          s"pipe_partition_evolve: the evolve commit must add exactly " +
-            s"one PARTSPEC line, got $evolveAdds")
-        require(VersionedTable.writePartitionLayout(table, 2L) ==
-            Seq("source"),
-          "pipe_partition_evolve: the live write layout must be the " +
-            "new spec")
-        // New data lands under the NEW spec; old files keep their
-        // paths (nothing was rewritten).
-        s2.sql(s"""INSERT INTO graftcat.docs
-                   SELECT doc_id, lang, source, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
-                   WHERE doc_id % 3 = 1""")
-        val newFiles = VersionedTable.addedLines(table, 3L)
-          .filterNot(_.contains('\t'))
-        require(newFiles.nonEmpty &&
-            newFiles.forall(f => f.contains("source=") &&
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          s2.sql("""CREATE TABLE graftcat.docs
+                    (doc_id BIGINT, lang STRING, source STRING,
+                     n_chars BIGINT)
+                    PARTITIONED BY (lang)""")
+          val table = tmp.resolve("docs")
+          s2.sql(s"""INSERT INTO graftcat.docs
+                     SELECT doc_id, lang, source, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
+                     WHERE doc_id % 3 = 0""")
+          val oldFiles = VersionedTable.addedLines(table, 1L)
+            .filterNot(_.contains('\t'))
+          require(oldFiles.nonEmpty && oldFiles.forall(_.contains("lang=")),
+            s"pipe_partition_evolve: batch 1 must land lang=… files")
+          // The evolution itself: ONE metadata commit, zero data files.
+          s2.sql("CALL graftcat.evolve_layout('docs', 'source')")
+          require(VersionedTable.latestVersion(table).contains(2L),
+            "pipe_partition_evolve: evolve_layout must publish one commit")
+          val evolveAdds = VersionedTable.addedLines(table, 2L)
+          require(evolveAdds.size == 1 &&
+              evolveAdds.head.startsWith("PARTSPEC\t"),
+            s"pipe_partition_evolve: the evolve commit must add exactly " +
+              s"one PARTSPEC line, got $evolveAdds")
+          require(VersionedTable.writePartitionLayout(table, 2L) ==
+              Seq("source"),
+            "pipe_partition_evolve: the live write layout must be the " +
+              "new spec")
+          // New data lands under the NEW spec; old files keep their
+          // paths (nothing was rewritten).
+          s2.sql(s"""INSERT INTO graftcat.docs
+                     SELECT doc_id, lang, source, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
+                     WHERE doc_id % 3 = 1""")
+          val newFiles = VersionedTable.addedLines(table, 3L)
+            .filterNot(_.contains('\t'))
+          require(newFiles.nonEmpty &&
+              newFiles.forall(f => f.contains("source=") &&
+                !f.contains("lang=")),
+            s"pipe_partition_evolve: batch 2 must land source=… files, " +
+              s"got $newFiles")
+          val srcVals = newFiles.flatMap(_.split('/').collectFirst {
+            case seg if seg.startsWith("source=") => seg }).distinct
+          require(srcVals.size > 1,
+            "pipe_partition_evolve: fixture must span several sources")
+          val oneSrc = srcVals.head.substring("source=".length)
+          // PER-FILE-SPEC PRUNING, pre-compaction: a source predicate
+          // must skip every non-matching NEW-spec file and
+          // conservatively admit every OLD-spec file (+ the flat
+          // bootstrap) — Iceberg's mixed-spec contract.
+          val matching = newFiles.count(_.contains(s"source=$oneSrc"))
+          val scanned = s2.sql("SELECT * FROM graftcat.docs " +
+            s"WHERE source = '$oneSrc'").rdd.getNumPartitions
+          require(scanned == matching + oldFiles.size + 1 &&
+              scanned < oldFiles.size + newFiles.size + 1,
+            s"pipe_partition_evolve: source predicate scanned $scanned " +
+              s"files, expected $matching matching new-spec + " +
+              s"${oldFiles.size} conservatively-admitted old-spec + " +
+              "bootstrap")
+          // …and the OLD spec still prunes its own generation: a lang
+          // predicate skips non-matching old-spec files while admitting
+          // every new-spec file.
+          val oneLang = oldFiles.flatMap(_.split('/').collectFirst {
+            case seg if seg.startsWith("lang=") => seg }).distinct
+            .head.substring("lang=".length)
+          val matchingOld = oldFiles.count(_.contains(s"lang=$oneLang"))
+          val scannedLang = s2.sql("SELECT * FROM graftcat.docs " +
+            s"WHERE lang = '$oneLang'").rdd.getNumPartitions
+          require(scannedLang == matchingOld + newFiles.size + 1,
+            s"pipe_partition_evolve: lang predicate scanned " +
+              s"$scannedLang files, expected $matchingOld old-spec + " +
+              s"${newFiles.size} admitted new-spec + bootstrap")
+          val out = s2.sql("SELECT doc_id, lang, source, n_chars " +
+            "FROM graftcat.docs ORDER BY doc_id")
+          val rows = out.collect()
+          // Compaction un-rags the evolved table: everything rewritten
+          // under the live spec, content identical, and the predicate
+          // now prunes the WHOLE table.
+          s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
+          val v = VersionedTable.latestVersion(table).get
+          val files = VersionedTable.statsManifest(table, v).map(_._1)
+          require(files.forall(f => f.contains("source=") &&
               !f.contains("lang=")),
-          s"pipe_partition_evolve: batch 2 must land source=… files, " +
-            s"got $newFiles")
-        val srcVals = newFiles.flatMap(_.split('/').collectFirst {
-          case seg if seg.startsWith("source=") => seg }).distinct
-        require(srcVals.size > 1,
-          "pipe_partition_evolve: fixture must span several sources")
-        val oneSrc = srcVals.head.substring("source=".length)
-        // PER-FILE-SPEC PRUNING, pre-compaction: a source predicate
-        // must skip every non-matching NEW-spec file and
-        // conservatively admit every OLD-spec file (+ the flat
-        // bootstrap) — Iceberg's mixed-spec contract.
-        val matching = newFiles.count(_.contains(s"source=$oneSrc"))
-        val scanned = s2.sql("SELECT * FROM graftcat.docs " +
-          s"WHERE source = '$oneSrc'").rdd.getNumPartitions
-        require(scanned == matching + oldFiles.size + 1 &&
-            scanned < oldFiles.size + newFiles.size + 1,
-          s"pipe_partition_evolve: source predicate scanned $scanned " +
-            s"files, expected $matching matching new-spec + " +
-            s"${oldFiles.size} conservatively-admitted old-spec + " +
-            "bootstrap")
-        // …and the OLD spec still prunes its own generation: a lang
-        // predicate skips non-matching old-spec files while admitting
-        // every new-spec file.
-        val oneLang = oldFiles.flatMap(_.split('/').collectFirst {
-          case seg if seg.startsWith("lang=") => seg }).distinct
-          .head.substring("lang=".length)
-        val matchingOld = oldFiles.count(_.contains(s"lang=$oneLang"))
-        val scannedLang = s2.sql("SELECT * FROM graftcat.docs " +
-          s"WHERE lang = '$oneLang'").rdd.getNumPartitions
-        require(scannedLang == matchingOld + newFiles.size + 1,
-          s"pipe_partition_evolve: lang predicate scanned " +
-            s"$scannedLang files, expected $matchingOld old-spec + " +
-            s"${newFiles.size} admitted new-spec + bootstrap")
-        val out = s2.sql("SELECT doc_id, lang, source, n_chars " +
-          "FROM graftcat.docs ORDER BY doc_id")
-        val rows = out.collect()
-        // Compaction un-rags the evolved table: everything rewritten
-        // under the live spec, content identical, and the predicate
-        // now prunes the WHOLE table.
-        s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
-        val v = VersionedTable.latestVersion(table).get
-        val files = VersionedTable.statsManifest(table, v).map(_._1)
-        require(files.forall(f => f.contains("source=") &&
-            !f.contains("lang=")),
-          s"pipe_partition_evolve: compaction must rewrite every file " +
-            s"under the live spec, got $files")
-        val after = s2.sql("SELECT doc_id, lang, source, n_chars " +
-          "FROM graftcat.docs ORDER BY doc_id").collect()
-        require(after.toSeq == rows.toSeq,
-          "pipe_partition_evolve: compaction changed the contents")
-        val matchAfter = files.count(_.contains(s"source=$oneSrc"))
-        val scanAfter = s2.sql("SELECT * FROM graftcat.docs " +
-          s"WHERE source = '$oneSrc'").rdd.getNumPartitions
-        require(scanAfter == matchAfter && scanAfter < files.size,
-          s"pipe_partition_evolve: post-compact predicate scanned " +
-            s"$scanAfter of ${files.size}, expected $matchAfter")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+            s"pipe_partition_evolve: compaction must rewrite every file " +
+              s"under the live spec, got $files")
+          val after = s2.sql("SELECT doc_id, lang, source, n_chars " +
+            "FROM graftcat.docs ORDER BY doc_id").collect()
+          require(after.toSeq == rows.toSeq,
+            "pipe_partition_evolve: compaction changed the contents")
+          val matchAfter = files.count(_.contains(s"source=$oneSrc"))
+          val scanAfter = s2.sql("SELECT * FROM graftcat.docs " +
+            s"WHERE source = '$oneSrc'").rdd.getNumPartitions
+          require(scanAfter == matchAfter && scanAfter < files.size,
+            s"pipe_partition_evolve: post-compact predicate scanned " +
+              s"$scanAfter of ${files.size}, expected $matchAfter")
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -4113,89 +4080,87 @@ object DedupQueries extends QueryModule {
         VersionedTable.commitPartitioned(s, table, 0L,
           ev.where("event_id % 3 = 0"), "event_type")
         val oldFiles = VersionedTable.statsManifest(table, 0L).map(_._1)
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        // Unsupported transforms refuse at declaration — never stored
-        // (truncate graduated to a supported transform in r20; the
-        // refusal witness keeps a genuinely-unknown shape).
-        val refused = try {
-          s2.sql("CALL graftcat.evolve_layout('ev', 'void(ts_us)')")
-            .collect(); false
-        } catch { case _: Exception => true }
-        require(refused,
-          "pipe_partition_hidden: void(…) must refuse at declaration")
-        // The evolution: ONE metadata commit, zero data files.
-        s2.sql("CALL graftcat.evolve_layout('ev', 'days(ts_us)')")
-        val evolveAdds = VersionedTable.addedLines(table, 1L)
-        require(evolveAdds.size == 1 &&
-            evolveAdds.head.startsWith("PARTSPEC\t") &&
-            evolveAdds.head.endsWith("days(ts_us)"),
-          s"pipe_partition_hidden: expected one PARTSPEC transform " +
-            s"line, got $evolveAdds")
-        s2.sql(s"""INSERT INTO graftcat.ev
-                   SELECT event_id, unix_micros(CAST(ts AS TIMESTAMP))
-                            AS ts_us, event_type
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "events")}
-                   WHERE event_id % 3 <> 0""")
-        val newFiles = VersionedTable.addedLines(table, 2L)
-          .filterNot(VersionedTable.isMetaManifestLine)
-          .map(_.split('\t').head)
-        require(newFiles.nonEmpty && newFiles.forall(f =>
-            f.contains("ts_us_day=") && !f.contains("event_type=")),
-          s"pipe_partition_hidden: batch 2 must land hidden day files, " +
-            s"got $newFiles")
-        // HIDDEN: the derived segment is never a schema column.
-        val cols = s2.table("graftcat.ev").columns.toSeq
-        require(cols.sorted == Seq("event_id", "event_type", "ts_us"),
-          s"pipe_partition_hidden: ts_us_day leaked into the schema: " +
-            s"$cols")
-        // A RAW ts_us predicate prunes by the derived segments: the
-        // day's files + conservatively-admitted old-spec files.
-        val day = "2024-01-10"
-        val (lo, hi) = graft.operators.PartTransform.microsRangeOfDay(day)
-        val matching = newFiles.count(_.contains(s"ts_us_day=$day"))
-        def dayQuery = s2.sql("SELECT event_id, ts_us, event_type " +
-          s"FROM graftcat.ev WHERE ts_us BETWEEN $lo AND $hi")
-        require(matching > 0 &&
-            dayQuery.rdd.getNumPartitions == matching + oldFiles.size &&
-            matching + oldFiles.size < oldFiles.size + newFiles.size,
-          s"pipe_partition_hidden: raw-predicate scan planned " +
-            s"${dayQuery.rdd.getNumPartitions} files, expected " +
-            s"$matching day files + ${oldFiles.size} old-spec admits")
-        // …and the OLD identity generation still prunes its own files.
-        val oneType = oldFiles.flatMap(_.split('/').collectFirst {
-          case seg if seg.startsWith("event_type=") => seg }).distinct
-          .head.substring("event_type=".length)
-        val matchingOld = oldFiles.count(
-          _.contains(s"event_type=$oneType"))
-        val scannedType = s2.sql("SELECT * FROM graftcat.ev " +
-          s"WHERE event_type = '$oneType'").rdd.getNumPartitions
-        require(scannedType == matchingOld + newFiles.size,
-          s"pipe_partition_hidden: event_type probe scanned " +
-            s"$scannedType, expected $matchingOld old + " +
-            s"${newFiles.size} new-spec admits")
-        val out = dayQuery.orderBy("event_id")
-        val rows = out.collect()
-        // Compaction un-rags everything under the day spec; contents
-        // identical; the raw predicate now prunes the WHOLE table.
-        s2.sql("CALL graftcat.compact('ev', 'event_id', 4)")
-        val v = VersionedTable.latestVersion(table).get
-        val files = VersionedTable.statsManifest(table, v).map(_._1)
-        require(files.forall(f => f.contains("ts_us_day=") &&
-            !f.contains("event_type=")),
-          s"pipe_partition_hidden: compaction must rewrite under the " +
-            s"day spec, got $files")
-        val after = dayQuery.orderBy("event_id").collect()
-        require(after.toSeq == rows.toSeq,
-          "pipe_partition_hidden: compaction changed the contents")
-        val matchAfter = files.count(_.contains(s"ts_us_day=$day"))
-        require(dayQuery.rdd.getNumPartitions == matchAfter &&
-            matchAfter < files.size,
-          "pipe_partition_hidden: post-compact raw predicate must " +
-            "prune the whole table")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          // Unsupported transforms refuse at declaration — never stored
+          // (truncate is a supported transform; the
+          // refusal witness keeps a genuinely-unknown shape).
+          val refused = try {
+            s2.sql("CALL graftcat.evolve_layout('ev', 'void(ts_us)')")
+              .collect(); false
+          } catch { case _: Exception => true }
+          require(refused,
+            "pipe_partition_hidden: void(…) must refuse at declaration")
+          // The evolution: ONE metadata commit, zero data files.
+          s2.sql("CALL graftcat.evolve_layout('ev', 'days(ts_us)')")
+          val evolveAdds = VersionedTable.addedLines(table, 1L)
+          require(evolveAdds.size == 1 &&
+              evolveAdds.head.startsWith("PARTSPEC\t") &&
+              evolveAdds.head.endsWith("days(ts_us)"),
+            s"pipe_partition_hidden: expected one PARTSPEC transform " +
+              s"line, got $evolveAdds")
+          s2.sql(s"""INSERT INTO graftcat.ev
+                     SELECT event_id, unix_micros(CAST(ts AS TIMESTAMP))
+                              AS ts_us, event_type
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "events")}
+                     WHERE event_id % 3 <> 0""")
+          val newFiles = VersionedTable.addedLines(table, 2L)
+            .filterNot(VersionedTable.isMetaManifestLine)
+            .map(_.split('\t').head)
+          require(newFiles.nonEmpty && newFiles.forall(f =>
+              f.contains("ts_us_day=") && !f.contains("event_type=")),
+            s"pipe_partition_hidden: batch 2 must land hidden day files, " +
+              s"got $newFiles")
+          // HIDDEN: the derived segment is never a schema column.
+          val cols = s2.table("graftcat.ev").columns.toSeq
+          require(cols.sorted == Seq("event_id", "event_type", "ts_us"),
+            s"pipe_partition_hidden: ts_us_day leaked into the schema: " +
+              s"$cols")
+          // A RAW ts_us predicate prunes by the derived segments: the
+          // day's files + conservatively-admitted old-spec files.
+          val day = "2024-01-10"
+          val (lo, hi) = graft.operators.PartTransform.microsRangeOfDay(day)
+          val matching = newFiles.count(_.contains(s"ts_us_day=$day"))
+          def dayQuery = s2.sql("SELECT event_id, ts_us, event_type " +
+            s"FROM graftcat.ev WHERE ts_us BETWEEN $lo AND $hi")
+          require(matching > 0 &&
+              dayQuery.rdd.getNumPartitions == matching + oldFiles.size &&
+              matching + oldFiles.size < oldFiles.size + newFiles.size,
+            s"pipe_partition_hidden: raw-predicate scan planned " +
+              s"${dayQuery.rdd.getNumPartitions} files, expected " +
+              s"$matching day files + ${oldFiles.size} old-spec admits")
+          // …and the OLD identity generation still prunes its own files.
+          val oneType = oldFiles.flatMap(_.split('/').collectFirst {
+            case seg if seg.startsWith("event_type=") => seg }).distinct
+            .head.substring("event_type=".length)
+          val matchingOld = oldFiles.count(
+            _.contains(s"event_type=$oneType"))
+          val scannedType = s2.sql("SELECT * FROM graftcat.ev " +
+            s"WHERE event_type = '$oneType'").rdd.getNumPartitions
+          require(scannedType == matchingOld + newFiles.size,
+            s"pipe_partition_hidden: event_type probe scanned " +
+              s"$scannedType, expected $matchingOld old + " +
+              s"${newFiles.size} new-spec admits")
+          val out = dayQuery.orderBy("event_id")
+          val rows = out.collect()
+          // Compaction un-rags everything under the day spec; contents
+          // identical; the raw predicate now prunes the WHOLE table.
+          s2.sql("CALL graftcat.compact('ev', 'event_id', 4)")
+          val v = VersionedTable.latestVersion(table).get
+          val files = VersionedTable.statsManifest(table, v).map(_._1)
+          require(files.forall(f => f.contains("ts_us_day=") &&
+              !f.contains("event_type=")),
+            s"pipe_partition_hidden: compaction must rewrite under the " +
+              s"day spec, got $files")
+          val after = dayQuery.orderBy("event_id").collect()
+          require(after.toSeq == rows.toSeq,
+            "pipe_partition_hidden: compaction changed the contents")
+          val matchAfter = files.count(_.contains(s"ts_us_day=$day"))
+          require(dayQuery.rdd.getNumPartitions == matchAfter &&
+              matchAfter < files.size,
+            "pipe_partition_hidden: post-compact raw predicate must " +
+              "prune the whole table")
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -4221,86 +4186,84 @@ object DedupQueries extends QueryModule {
       val tmp = graft.sources.GraftSession.stagingDir("graft_vtrunc_")
       try {
         val table = tmp.resolve("docs")
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.sql("""CREATE TABLE graftcat.docs
-                  (doc_id BIGINT, lang STRING, n_chars BIGINT)
-                  PARTITIONED BY (truncate(100, doc_id))""")
-        s2.sql(s"""INSERT INTO graftcat.docs
-                   SELECT doc_id, lang, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
-                   WHERE doc_id % 2 = 0""")
-        // The DDL bootstrap's zero-row file carries no segment and is
-        // admitted conservatively by every probe — count it.
-        val boot = VersionedTable.statsManifest(table, 0L).size
-        val gen1 = VersionedTable.addedLines(table, 1L)
-          .filterNot(VersionedTable.isMetaManifestLine)
-          .map(_.split('\t').head)
-        require(gen1.nonEmpty && gen1.forall(_.contains("doc_id_trunc=")),
-          s"pipe_partition_truncate: batch 1 must land hidden width " +
-            s"segments, got $gen1")
-        // HIDDEN: the derived segment is never a schema column.
-        val cols = s2.table("graftcat.docs").columns.toSeq
-        require(cols.sorted == Seq("doc_id", "lang", "n_chars"),
-          s"pipe_partition_truncate: doc_id_trunc leaked: $cols")
-        // An integral segment IS a zonemap: the raw BETWEEN probe
-        // plans exactly the matching segment's files.
-        val matching1 = gen1.count(_.contains("doc_id_trunc=100/"))
-        def slice = s2.sql("SELECT doc_id, lang, n_chars " +
-          "FROM graftcat.docs WHERE doc_id BETWEEN 100 AND 199")
-        require(matching1 > 0 &&
-            slice.rdd.getNumPartitions == matching1 + boot &&
-            matching1 < gen1.size,
-          s"pipe_partition_truncate: range probe planned " +
-            s"${slice.rdd.getNumPartitions} files, expected $matching1 " +
-            s"of ${gen1.size}")
-        // …and an equality probe pins one segment the same way.
-        require(s2.sql("SELECT * FROM graftcat.docs WHERE doc_id = 250")
-            .rdd.getNumPartitions ==
-          gen1.count(_.contains("doc_id_trunc=200/")) + boot,
-          "pipe_partition_truncate: equality probe must pin the one " +
-            "covering segment")
-        // EVOLVE to the string-prefix layout: one metadata commit.
-        s2.sql("CALL graftcat.evolve_layout('docs', 'truncate(1,lang)')")
-        val evolveAdds = VersionedTable.addedLines(table, 2L)
-        require(evolveAdds.size == 1 &&
-            evolveAdds.head.startsWith("PARTSPEC\t") &&
-            evolveAdds.head.endsWith("truncate(1,lang)"),
-          s"pipe_partition_truncate: expected one PARTSPEC line, got " +
-            s"$evolveAdds")
-        s2.sql(s"""INSERT INTO graftcat.docs
-                   SELECT doc_id, lang, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
-                   WHERE doc_id % 2 = 1""")
-        val gen2 = VersionedTable.addedLines(table, 3L)
-          .filterNot(VersionedTable.isMetaManifestLine)
-          .map(_.split('\t').head)
-        require(gen2.nonEmpty && gen2.forall(f =>
-            f.contains("lang_trunc=") && !f.contains("doc_id_trunc=")),
-          s"pipe_partition_truncate: batch 2 must land letter " +
-            s"segments, got $gen2")
-        // Equality and LIKE-prefix probes prune the NEW generation;
-        // old-generation files admit conservatively (no lang segment).
-        val oneLang = s2.sql(
-          "SELECT lang FROM graftcat.docs ORDER BY lang").head().getString(0)
-        val letter = oneLang.substring(0, 1)
-        val matching2 = gen2.count(_.contains(s"lang_trunc=$letter/"))
-        val eqScan = s2.sql("SELECT * FROM graftcat.docs " +
-          s"WHERE lang = '$oneLang'").rdd.getNumPartitions
-        require(matching2 > 0 && matching2 < gen2.size &&
-            eqScan == matching2 + gen1.size + boot,
-          s"pipe_partition_truncate: lang probe scanned $eqScan, " +
-            s"expected $matching2 new + ${gen1.size}+$boot admits")
-        val likeScan = s2.sql("SELECT * FROM graftcat.docs " +
-          s"WHERE lang LIKE '$letter%'").rdd.getNumPartitions
-        require(likeScan == matching2 + gen1.size + boot,
-          s"pipe_partition_truncate: prefix probe scanned $likeScan, " +
-            s"expected $matching2 new + ${gen1.size} old-spec admits")
-        val out = slice.orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          s2.sql("""CREATE TABLE graftcat.docs
+                    (doc_id BIGINT, lang STRING, n_chars BIGINT)
+                    PARTITIONED BY (truncate(100, doc_id))""")
+          s2.sql(s"""INSERT INTO graftcat.docs
+                     SELECT doc_id, lang, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
+                     WHERE doc_id % 2 = 0""")
+          // The DDL bootstrap's zero-row file carries no segment and is
+          // admitted conservatively by every probe — count it.
+          val boot = VersionedTable.statsManifest(table, 0L).size
+          val gen1 = VersionedTable.addedLines(table, 1L)
+            .filterNot(VersionedTable.isMetaManifestLine)
+            .map(_.split('\t').head)
+          require(gen1.nonEmpty && gen1.forall(_.contains("doc_id_trunc=")),
+            s"pipe_partition_truncate: batch 1 must land hidden width " +
+              s"segments, got $gen1")
+          // HIDDEN: the derived segment is never a schema column.
+          val cols = s2.table("graftcat.docs").columns.toSeq
+          require(cols.sorted == Seq("doc_id", "lang", "n_chars"),
+            s"pipe_partition_truncate: doc_id_trunc leaked: $cols")
+          // An integral segment IS a zonemap: the raw BETWEEN probe
+          // plans exactly the matching segment's files.
+          val matching1 = gen1.count(_.contains("doc_id_trunc=100/"))
+          def slice = s2.sql("SELECT doc_id, lang, n_chars " +
+            "FROM graftcat.docs WHERE doc_id BETWEEN 100 AND 199")
+          require(matching1 > 0 &&
+              slice.rdd.getNumPartitions == matching1 + boot &&
+              matching1 < gen1.size,
+            s"pipe_partition_truncate: range probe planned " +
+              s"${slice.rdd.getNumPartitions} files, expected $matching1 " +
+              s"of ${gen1.size}")
+          // …and an equality probe pins one segment the same way.
+          require(s2.sql("SELECT * FROM graftcat.docs WHERE doc_id = 250")
+              .rdd.getNumPartitions ==
+            gen1.count(_.contains("doc_id_trunc=200/")) + boot,
+            "pipe_partition_truncate: equality probe must pin the one " +
+              "covering segment")
+          // EVOLVE to the string-prefix layout: one metadata commit.
+          s2.sql("CALL graftcat.evolve_layout('docs', 'truncate(1,lang)')")
+          val evolveAdds = VersionedTable.addedLines(table, 2L)
+          require(evolveAdds.size == 1 &&
+              evolveAdds.head.startsWith("PARTSPEC\t") &&
+              evolveAdds.head.endsWith("truncate(1,lang)"),
+            s"pipe_partition_truncate: expected one PARTSPEC line, got " +
+              s"$evolveAdds")
+          s2.sql(s"""INSERT INTO graftcat.docs
+                     SELECT doc_id, lang, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
+                     WHERE doc_id % 2 = 1""")
+          val gen2 = VersionedTable.addedLines(table, 3L)
+            .filterNot(VersionedTable.isMetaManifestLine)
+            .map(_.split('\t').head)
+          require(gen2.nonEmpty && gen2.forall(f =>
+              f.contains("lang_trunc=") && !f.contains("doc_id_trunc=")),
+            s"pipe_partition_truncate: batch 2 must land letter " +
+              s"segments, got $gen2")
+          // Equality and LIKE-prefix probes prune the NEW generation;
+          // old-generation files admit conservatively (no lang segment).
+          val oneLang = s2.sql(
+            "SELECT lang FROM graftcat.docs ORDER BY lang").head().getString(0)
+          val letter = oneLang.substring(0, 1)
+          val matching2 = gen2.count(_.contains(s"lang_trunc=$letter/"))
+          val eqScan = s2.sql("SELECT * FROM graftcat.docs " +
+            s"WHERE lang = '$oneLang'").rdd.getNumPartitions
+          require(matching2 > 0 && matching2 < gen2.size &&
+              eqScan == matching2 + gen1.size + boot,
+            s"pipe_partition_truncate: lang probe scanned $eqScan, " +
+              s"expected $matching2 new + ${gen1.size}+$boot admits")
+          val likeScan = s2.sql("SELECT * FROM graftcat.docs " +
+            s"WHERE lang LIKE '$letter%'").rdd.getNumPartitions
+          require(likeScan == matching2 + gen1.size + boot,
+            s"pipe_partition_truncate: prefix probe scanned $likeScan, " +
+              s"expected $matching2 new + ${gen1.size} old-spec admits")
+          val out = slice.orderBy("doc_id")
+          val rows = out.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -4320,53 +4283,51 @@ object DedupQueries extends QueryModule {
       import graft.operators.VersionedTable
       val tmp = graft.sources.GraftSession.stagingDir("graft_vndv_")
       try {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.sql(s"""CREATE TABLE graftcat.docs AS
-                   SELECT doc_id, lang, source, n_chars,
-                     CASE WHEN doc_id % 7 = 0 THEN NULL
-                          ELSE lang END AS maybe_lang
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-        val table = tmp.resolve("docs")
-        val before = VersionedTable.latestVersion(table).get
-        s2.sql("CALL graftcat.analyze('docs', " +
-          "'lang,source,doc_id,maybe_lang')")
-        val v = VersionedTable.latestVersion(table).get
-        require(v == before + 1 &&
-            VersionedTable.addedLines(table, v)
-              .forall(_.startsWith("NDV\t")),
-          "pipe_table_analyze: ANALYZE must publish one pure-meta " +
-            "delta of NDV lines")
-        val ndv = VersionedTable.ndvStats(table, v)
-        // Exact truth for the envelope check and the oracle.
-        val exact = s2.sql("""SELECT count(DISTINCT lang) AS d_lang,
-             count(DISTINCT source) AS d_source,
-             count(DISTINCT doc_id) AS d_doc,
-             count(DISTINCT maybe_lang) AS d_maybe,
-             count(CASE WHEN maybe_lang IS NULL THEN 1 END) AS z_maybe
-             FROM graftcat.docs""").head()
-        def within(est: Long, ex: Long): Boolean =
-          math.abs(est - ex) <= math.max(1L, (ex * 0.10).toLong)
-        require(within(ndv("lang")._1, exact.getLong(0)) &&
-            within(ndv("source")._1, exact.getLong(1)) &&
-            within(ndv("doc_id")._1, exact.getLong(2)) &&
-            within(ndv("maybe_lang")._1, exact.getLong(3)) &&
-            ndv("maybe_lang")._2 == exact.getLong(4) &&
-            ndv("lang")._2 == 0L,
-          s"pipe_table_analyze: served stats $ndv outside the HLL " +
-            s"envelope of $exact")
-        val out = s2.sql(
-          """SELECT CAST(count(DISTINCT lang) AS BIGINT) AS d_lang,
-            |  CAST(count(DISTINCT source) AS BIGINT) AS d_source,
-            |  CAST(count(DISTINCT doc_id) AS BIGINT) AS d_doc,
-            |  CAST(count(DISTINCT maybe_lang) AS BIGINT) AS d_maybe,
-            |  CAST(count(CASE WHEN maybe_lang IS NULL THEN 1 END)
-            |    AS BIGINT) AS n_null
-            |FROM graftcat.docs""".stripMargin)
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          s2.sql(s"""CREATE TABLE graftcat.docs AS
+                     SELECT doc_id, lang, source, n_chars,
+                       CASE WHEN doc_id % 7 = 0 THEN NULL
+                            ELSE lang END AS maybe_lang
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
+          val table = tmp.resolve("docs")
+          val before = VersionedTable.latestVersion(table).get
+          s2.sql("CALL graftcat.analyze('docs', " +
+            "'lang,source,doc_id,maybe_lang')")
+          val v = VersionedTable.latestVersion(table).get
+          require(v == before + 1 &&
+              VersionedTable.addedLines(table, v)
+                .forall(_.startsWith("NDV\t")),
+            "pipe_table_analyze: ANALYZE must publish one pure-meta " +
+              "delta of NDV lines")
+          val ndv = VersionedTable.ndvStats(table, v)
+          // Exact truth for the envelope check and the oracle.
+          val exact = s2.sql("""SELECT count(DISTINCT lang) AS d_lang,
+               count(DISTINCT source) AS d_source,
+               count(DISTINCT doc_id) AS d_doc,
+               count(DISTINCT maybe_lang) AS d_maybe,
+               count(CASE WHEN maybe_lang IS NULL THEN 1 END) AS z_maybe
+               FROM graftcat.docs""").head()
+          def within(est: Long, ex: Long): Boolean =
+            math.abs(est - ex) <= math.max(1L, (ex * 0.10).toLong)
+          require(within(ndv("lang")._1, exact.getLong(0)) &&
+              within(ndv("source")._1, exact.getLong(1)) &&
+              within(ndv("doc_id")._1, exact.getLong(2)) &&
+              within(ndv("maybe_lang")._1, exact.getLong(3)) &&
+              ndv("maybe_lang")._2 == exact.getLong(4) &&
+              ndv("lang")._2 == 0L,
+            s"pipe_table_analyze: served stats $ndv outside the HLL " +
+              s"envelope of $exact")
+          val out = s2.sql(
+            """SELECT CAST(count(DISTINCT lang) AS BIGINT) AS d_lang,
+              |  CAST(count(DISTINCT source) AS BIGINT) AS d_source,
+              |  CAST(count(DISTINCT doc_id) AS BIGINT) AS d_doc,
+              |  CAST(count(DISTINCT maybe_lang) AS BIGINT) AS d_maybe,
+              |  CAST(count(CASE WHEN maybe_lang IS NULL THEN 1 END)
+              |    AS BIGINT) AS n_null
+              |FROM graftcat.docs""".stripMargin)
+          val rows = out.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -4386,53 +4347,51 @@ object DedupQueries extends QueryModule {
       import graft.operators.VersionedTable
       val tmp = graft.sources.GraftSession.stagingDir("graft_vsqlmv_")
       try {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.sql(s"""CREATE TABLE graftcat.docs AS
-                   SELECT doc_id, lang, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
-                   WHERE doc_id % 3 = 0""")
-        val created = s2.sql("CALL graftcat.create_mv('docs_by_lang', " +
-          "'docs', 'lang', 'SELECT lang, count(*) AS n, " +
-          "sum(n_chars) AS chars FROM __BASE__ GROUP BY lang')")
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        require(created("cursor") == 1L,
-          s"pipe_sql_mv: CREATE must pin the cursor at the base head, " +
-            s"got $created")
-        s2.sql(s"""INSERT INTO graftcat.docs
-                   SELECT doc_id, lang, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
-                   WHERE doc_id % 3 = 1""")
-        s2.sql(s"""INSERT INTO graftcat.docs
-                   SELECT doc_id, lang, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
-                   WHERE doc_id % 3 = 2""")
-        val base = tmp.resolve("docs")
-        val appended = (2L to 3L).map(v =>
-          VersionedTable.addedLines(base, v)
-            .count(!_.contains('\t'))).sum
-        val res = s2.sql(
-          "CALL graftcat.refresh_mv('docs_by_lang', 'docs')")
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        require(res("delta_files_read") == appended &&
-            res("delta_files_read") < res("base_files_total"),
-          s"pipe_sql_mv: refresh witness $res, expected exactly the " +
-            s"$appended appended files")
-        // The MV is an ordinary catalog table: time travel below the
-        // refresh reflects batch 1 alone.
-        val v0n = s2.sql("SELECT sum(n) AS t FROM " +
-          "graftcat.docs_by_lang VERSION AS OF 0").head().getLong(0)
-        val batch1 = s2.sql(
-          "SELECT count(*) AS n FROM graftcat.docs VERSION AS OF 1")
-          .head().getLong(0)
-        require(v0n == batch1,
-          s"pipe_sql_mv: MV v0 must reflect batch 1 ($batch1), got $v0n")
-        val out = s2.sql("SELECT lang, n, chars " +
-          "FROM graftcat.docs_by_lang ORDER BY lang")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          s2.sql(s"""CREATE TABLE graftcat.docs AS
+                     SELECT doc_id, lang, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
+                     WHERE doc_id % 3 = 0""")
+          val created = s2.sql("CALL graftcat.create_mv('docs_by_lang', " +
+            "'docs', 'lang', 'SELECT lang, count(*) AS n, " +
+            "sum(n_chars) AS chars FROM __BASE__ GROUP BY lang')")
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          require(created("cursor") == 1L,
+            s"pipe_sql_mv: CREATE must pin the cursor at the base head, " +
+              s"got $created")
+          s2.sql(s"""INSERT INTO graftcat.docs
+                     SELECT doc_id, lang, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
+                     WHERE doc_id % 3 = 1""")
+          s2.sql(s"""INSERT INTO graftcat.docs
+                     SELECT doc_id, lang, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
+                     WHERE doc_id % 3 = 2""")
+          val base = tmp.resolve("docs")
+          val appended = (2L to 3L).map(v =>
+            VersionedTable.addedLines(base, v)
+              .count(!_.contains('\t'))).sum
+          val res = s2.sql(
+            "CALL graftcat.refresh_mv('docs_by_lang', 'docs')")
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          require(res("delta_files_read") == appended &&
+              res("delta_files_read") < res("base_files_total"),
+            s"pipe_sql_mv: refresh witness $res, expected exactly the " +
+              s"$appended appended files")
+          // The MV is an ordinary catalog table: time travel below the
+          // refresh reflects batch 1 alone.
+          val v0n = s2.sql("SELECT sum(n) AS t FROM " +
+            "graftcat.docs_by_lang VERSION AS OF 0").head().getLong(0)
+          val batch1 = s2.sql(
+            "SELECT count(*) AS n FROM graftcat.docs VERSION AS OF 1")
+            .head().getLong(0)
+          require(v0n == batch1,
+            s"pipe_sql_mv: MV v0 must reflect batch 1 ($batch1), got $v0n")
+          val out = s2.sql("SELECT lang, n, chars " +
+            "FROM graftcat.docs_by_lang ORDER BY lang")
+          val rows = out.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -4528,59 +4487,57 @@ object DedupQueries extends QueryModule {
       import graft.operators.VersionedTable
       val tmp = graft.sources.GraftSession.stagingDir("graft_vmvdel_")
       try {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.sql(s"""CREATE TABLE graftcat.docs AS
-                   SELECT doc_id, lang, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-        s2.sql("CALL graftcat.create_mv('mv_del', 'docs', 'lang', " +
-          "'SELECT lang, count(*) AS n_docs, sum(n_chars) AS chars " +
-          "FROM __BASE__ GROUP BY lang')").collect()
-        // Appends and deletes INTERLEAVE below the cursor walk: clones
-        // append, then a partial delete, then one lang dies entirely.
-        s2.sql(s"""INSERT INTO graftcat.docs
-                   SELECT doc_id + 1000000, lang, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
-                   WHERE doc_id % 10 = 0""")
-        // Distributed-key DV deletes (r19): zero data-sized driver
-        // round-trips — the key frames stay distributed end to end
-        // (the r18 shape collected ~700 ids into a SQL IN-list, a
-        // parse bomb at 100×). The library face is the route because
-        // a DV delete is what an MV can refresh over: a SQL predicate
-        // DELETE (`WHERE doc_id % 7 = 3`) plans as a copy-on-write
-        // REWRITE, which the refresh rightly refuses toward re-create.
-        import graft.operators.{VersionedTable => VT}
-        val docsT = tmp.resolve("docs")
-        require(s2.sql("SELECT count(*) AS n FROM graftcat.docs " +
-            "WHERE doc_id % 7 = 3").head().getLong(0) > 0,
-          "pipe_mv_delete: empty partial set")
-        VT.deleteCommit(s2, docsT, VT.latestVersion(docsT).get + 1,
-          s2.sql("SELECT doc_id FROM graftcat.docs WHERE doc_id % 7 = 3"),
-          "doc_id")
-        val deadLang = s2.sql("SELECT min(lang) FROM graftcat.docs")
-          .head().getString(0)
-        VT.deleteCommit(s2, docsT, VT.latestVersion(docsT).get + 1,
-          s2.sql("SELECT doc_id FROM graftcat.docs " +
-            s"WHERE lang = '$deadLang'"), "doc_id")
-        // The refresh must SUCCEED (r17 refused here), with the
-        // positive delta still O(appended files).
-        val res = s2.sql("CALL graftcat.refresh_mv('mv_del', 'docs')")
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        require(res("delta_files_read") < res("base_files_total"),
-          s"pipe_mv_delete: refresh was not incremental: $res")
-        // The dead lang's group must VANISH rather than linger at 0
-        // (refresh ≡ recompute is the ORACLE's job — the relational
-        // replay over ingested-minus-deleted IS the recompute, so an
-        // in-path recompute here would just pay the aggregation twice).
-        val out = s2.sql(
-          "SELECT lang, n_docs, chars FROM graftcat.mv_del")
-          .orderBy("lang")
-        val rows = out.collect()
-        require(!rows.exists(_.getString(0) == deadLang),
-          s"pipe_mv_delete: emptied group '$deadLang' must vanish")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          s2.sql(s"""CREATE TABLE graftcat.docs AS
+                     SELECT doc_id, lang, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
+          s2.sql("CALL graftcat.create_mv('mv_del', 'docs', 'lang', " +
+            "'SELECT lang, count(*) AS n_docs, sum(n_chars) AS chars " +
+            "FROM __BASE__ GROUP BY lang')").collect()
+          // Appends and deletes INTERLEAVE below the cursor walk: clones
+          // append, then a partial delete, then one lang dies entirely.
+          s2.sql(s"""INSERT INTO graftcat.docs
+                     SELECT doc_id + 1000000, lang, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
+                     WHERE doc_id % 10 = 0""")
+          // Distributed-key DV deletes: zero data-sized driver
+          // round-trips — the key frames stay distributed end to end
+          // (collecting them puts ~700 ids into a SQL IN-list, a
+          // parse bomb at 100×). The library face is the route because
+          // a DV delete is what an MV can refresh over: a SQL predicate
+          // DELETE (`WHERE doc_id % 7 = 3`) plans as a copy-on-write
+          // REWRITE, which the refresh rightly refuses toward re-create.
+          import graft.operators.{VersionedTable => VT}
+          val docsT = tmp.resolve("docs")
+          require(s2.sql("SELECT count(*) AS n FROM graftcat.docs " +
+              "WHERE doc_id % 7 = 3").head().getLong(0) > 0,
+            "pipe_mv_delete: empty partial set")
+          VT.deleteCommit(s2, docsT, VT.latestVersion(docsT).get + 1,
+            s2.sql("SELECT doc_id FROM graftcat.docs WHERE doc_id % 7 = 3"),
+            "doc_id")
+          val deadLang = s2.sql("SELECT min(lang) FROM graftcat.docs")
+            .head().getString(0)
+          VT.deleteCommit(s2, docsT, VT.latestVersion(docsT).get + 1,
+            s2.sql("SELECT doc_id FROM graftcat.docs " +
+              s"WHERE lang = '$deadLang'"), "doc_id")
+          // The refresh must SUCCEED, not refuse, with the
+          // positive delta still O(appended files).
+          val res = s2.sql("CALL graftcat.refresh_mv('mv_del', 'docs')")
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          require(res("delta_files_read") < res("base_files_total"),
+            s"pipe_mv_delete: refresh was not incremental: $res")
+          // The dead lang's group must VANISH rather than linger at 0
+          // (refresh ≡ recompute is the ORACLE's job — the relational
+          // replay over ingested-minus-deleted IS the recompute, so an
+          // in-path recompute here would just pay the aggregation twice).
+          val out = s2.sql(
+            "SELECT lang, n_docs, chars FROM graftcat.mv_del")
+            .orderBy("lang")
+          val rows = out.collect()
+          require(!rows.exists(_.getString(0) == deadLang),
+            s"pipe_mv_delete: emptied group '$deadLang' must vanish")
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -4605,59 +4562,57 @@ object DedupQueries extends QueryModule {
       import graft.operators.VersionedTable
       val tmp = graft.sources.GraftSession.stagingDir("graft_vmvavg_")
       try {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.sql(s"""CREATE TABLE graftcat.docs AS
-                   SELECT doc_id, lang, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-        s2.sql("CALL graftcat.create_mv('mv_avg', 'docs', 'lang', " +
-          "'SELECT lang, count(*) AS n_docs, avg(n_chars) AS avg_chars " +
-          "FROM __BASE__ GROUP BY lang')").collect()
-        val mvT = tmp.resolve("mv_avg")
-        // The rewrite witness: stored ratio + maintained partials.
-        val phys = VersionedTable.read(s2, mvT).columns.toSeq
-        require(phys == Seq("lang", "n_docs", "avg_chars",
-            "avg_chars__asum", "avg_chars__acnt"),
-          s"pipe_mv_avg: expected ratio + partial columns, got $phys")
-        // Appends and a distributed-key DV delete interleave below the
-        // refresh (the key frame never touches the driver — see
-        // pipe_mv_delete for why the DV route, not a predicate
-        // rewrite, is what an MV refreshes over).
-        s2.sql(s"""INSERT INTO graftcat.docs
-                   SELECT doc_id + 1000000, lang, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
-                   WHERE doc_id % 10 = 0""")
-        val docsT = tmp.resolve("docs")
-        graft.operators.VersionedTable.deleteCommit(s2, docsT,
-          graft.operators.VersionedTable.latestVersion(docsT).get + 1,
-          s2.sql("SELECT doc_id FROM graftcat.docs WHERE doc_id % 7 = 3"),
-          "doc_id")
-        val res = s2.sql("CALL graftcat.refresh_mv('mv_avg', 'docs')")
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        require(res("delta_files_read") < res("base_files_total"),
-          s"pipe_mv_avg: refresh was not incremental: $res")
-        // THE SQL SURFACE WITNESS (r20, ADVICE): the same catalog
-        // identifier create_mv declared the MV on serves the DECLARED
-        // schema — partials hidden, ratio present and post-refresh.
-        val sqlFace = s2.sql("SELECT * FROM graftcat.mv_avg")
-        require(sqlFace.columns.toSeq ==
-            Seq("lang", "n_docs", "avg_chars"),
-          "pipe_mv_avg: SELECT * through the catalog must serve the " +
-            s"declared shape, got ${sqlFace.columns.toSeq}")
-        val out = VersionedTable.readMaterializedSql(s2, mvT)
-          .orderBy("lang")
-        require(out.columns.toSeq == Seq("lang", "n_docs", "avg_chars"),
-          s"pipe_mv_avg: the serve face must fold partials back into " +
-            s"the declared shape, got ${out.columns.toSeq}")
-        val rows = out.collect()
-        // Library face and SQL face agree row-for-row.
-        val sqlRows = sqlFace.orderBy("lang").collect()
-        require(sqlRows.sameElements(rows),
-          "pipe_mv_avg: catalog SQL rows disagree with the library " +
-            "serve face")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          s2.sql(s"""CREATE TABLE graftcat.docs AS
+                     SELECT doc_id, lang, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
+          s2.sql("CALL graftcat.create_mv('mv_avg', 'docs', 'lang', " +
+            "'SELECT lang, count(*) AS n_docs, avg(n_chars) AS avg_chars " +
+            "FROM __BASE__ GROUP BY lang')").collect()
+          val mvT = tmp.resolve("mv_avg")
+          // The rewrite witness: stored ratio + maintained partials.
+          val phys = VersionedTable.read(s2, mvT).columns.toSeq
+          require(phys == Seq("lang", "n_docs", "avg_chars",
+              "avg_chars__asum", "avg_chars__acnt"),
+            s"pipe_mv_avg: expected ratio + partial columns, got $phys")
+          // Appends and a distributed-key DV delete interleave below the
+          // refresh (the key frame never touches the driver — see
+          // pipe_mv_delete for why the DV route, not a predicate
+          // rewrite, is what an MV refreshes over).
+          s2.sql(s"""INSERT INTO graftcat.docs
+                     SELECT doc_id + 1000000, lang, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
+                     WHERE doc_id % 10 = 0""")
+          val docsT = tmp.resolve("docs")
+          graft.operators.VersionedTable.deleteCommit(s2, docsT,
+            graft.operators.VersionedTable.latestVersion(docsT).get + 1,
+            s2.sql("SELECT doc_id FROM graftcat.docs WHERE doc_id % 7 = 3"),
+            "doc_id")
+          val res = s2.sql("CALL graftcat.refresh_mv('mv_avg', 'docs')")
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          require(res("delta_files_read") < res("base_files_total"),
+            s"pipe_mv_avg: refresh was not incremental: $res")
+          // THE SQL SURFACE WITNESS: the same catalog
+          // identifier create_mv declared the MV on serves the DECLARED
+          // schema — partials hidden, ratio present and post-refresh.
+          val sqlFace = s2.sql("SELECT * FROM graftcat.mv_avg")
+          require(sqlFace.columns.toSeq ==
+              Seq("lang", "n_docs", "avg_chars"),
+            "pipe_mv_avg: SELECT * through the catalog must serve the " +
+              s"declared shape, got ${sqlFace.columns.toSeq}")
+          val out = VersionedTable.readMaterializedSql(s2, mvT)
+            .orderBy("lang")
+          require(out.columns.toSeq == Seq("lang", "n_docs", "avg_chars"),
+            s"pipe_mv_avg: the serve face must fold partials back into " +
+              s"the declared shape, got ${out.columns.toSeq}")
+          val rows = out.collect()
+          // Library face and SQL face agree row-for-row.
+          val sqlRows = sqlFace.orderBy("lang").collect()
+          require(sqlRows.sameElements(rows),
+            "pipe_mv_avg: catalog SQL rows disagree with the library " +
+              "serve face")
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -4672,56 +4627,54 @@ object DedupQueries extends QueryModule {
       import graft.operators.VersionedTable
       val tmp = graft.sources.GraftSession.stagingDir("graft_vmvmm_")
       try {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.sql(s"""CREATE TABLE graftcat.docs AS
-                   SELECT doc_id, lang, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-        s2.sql("CALL graftcat.create_mv('mv_mm', 'docs', 'lang', " +
-          "'SELECT lang, count(*) AS n_docs, min(n_chars) AS min_chars, " +
-          "max(n_chars) AS max_chars FROM __BASE__ GROUP BY lang')")
-          .collect()
-        val mvT = tmp.resolve("mv_mm")
-        require(VersionedTable.mvFoldOps(mvT, 0L) ==
-            Map("min_chars" -> "min", "max_chars" -> "max"),
-          "pipe_mv_minmax: the declaration must record the MVFOLD " +
-            "merge operators")
-        // The append DOUBLES one clone's n_chars (moves maxima) and
-        // floors another at 1 (moves minima) — the fold must track
-        // real extremum movement, not ride unchanged groups.
-        s2.sql(s"""INSERT INTO graftcat.docs
-                   SELECT doc_id + 1000000, lang,
-                     CASE WHEN doc_id % 20 = 0 THEN n_chars * 2
-                          ELSE 1 END AS n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
-                   WHERE doc_id % 10 = 0""")
-        val res = s2.sql("CALL graftcat.refresh_mv('mv_mm', 'docs')")
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        require(res("delta_files_read") < res("base_files_total"),
-          s"pipe_mv_minmax: refresh was not incremental: $res")
-        // DV DELETES (r20, the r19 refusal closed): min/max are not
-        // subtractable, but whether a deletion REMOVED an extremum is
-        // decidable per group — the refresh folds sum columns by
-        // negation, and recomputes ONLY groups whose killed extremum
-        // TIED the standing one (VersionedTableSpec witnesses the
-        // incremental/repair split deterministically). The deleted
-        // set below includes the doubled clones (every lang's standing
-        // max where present) AND plain interior rows, so both paths
-        // run; the oracle replays min/max over ingested-minus-deleted.
-        val docsT = tmp.resolve("docs")
-        VersionedTable.deleteCommit(s2, docsT,
-          VersionedTable.latestVersion(docsT).get + 1,
-          s2.sql("SELECT doc_id FROM graftcat.docs " +
-            "WHERE doc_id % 20 = 0 OR doc_id % 13 = 4"),
-          "doc_id")
-        s2.sql("CALL graftcat.refresh_mv('mv_mm', 'docs')").collect()
-        val out = s2.sql(
-          "SELECT lang, n_docs, min_chars, max_chars FROM graftcat.mv_mm")
-          .orderBy("lang")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          s2.sql(s"""CREATE TABLE graftcat.docs AS
+                     SELECT doc_id, lang, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
+          s2.sql("CALL graftcat.create_mv('mv_mm', 'docs', 'lang', " +
+            "'SELECT lang, count(*) AS n_docs, min(n_chars) AS min_chars, " +
+            "max(n_chars) AS max_chars FROM __BASE__ GROUP BY lang')")
+            .collect()
+          val mvT = tmp.resolve("mv_mm")
+          require(VersionedTable.mvFoldOps(mvT, 0L) ==
+              Map("min_chars" -> "min", "max_chars" -> "max"),
+            "pipe_mv_minmax: the declaration must record the MVFOLD " +
+              "merge operators")
+          // The append DOUBLES one clone's n_chars (moves maxima) and
+          // floors another at 1 (moves minima) — the fold must track
+          // real extremum movement, not ride unchanged groups.
+          s2.sql(s"""INSERT INTO graftcat.docs
+                     SELECT doc_id + 1000000, lang,
+                       CASE WHEN doc_id % 20 = 0 THEN n_chars * 2
+                            ELSE 1 END AS n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
+                     WHERE doc_id % 10 = 0""")
+          val res = s2.sql("CALL graftcat.refresh_mv('mv_mm', 'docs')")
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          require(res("delta_files_read") < res("base_files_total"),
+            s"pipe_mv_minmax: refresh was not incremental: $res")
+          // DV DELETES: min/max are not
+          // subtractable, but whether a deletion REMOVED an extremum is
+          // decidable per group — the refresh folds sum columns by
+          // negation, and recomputes ONLY groups whose killed extremum
+          // TIED the standing one (VersionedTableSpec witnesses the
+          // incremental/repair split deterministically). The deleted
+          // set below includes the doubled clones (every lang's standing
+          // max where present) AND plain interior rows, so both paths
+          // run; the oracle replays min/max over ingested-minus-deleted.
+          val docsT = tmp.resolve("docs")
+          VersionedTable.deleteCommit(s2, docsT,
+            VersionedTable.latestVersion(docsT).get + 1,
+            s2.sql("SELECT doc_id FROM graftcat.docs " +
+              "WHERE doc_id % 20 = 0 OR doc_id % 13 = 4"),
+            "doc_id")
+          s2.sql("CALL graftcat.refresh_mv('mv_mm', 'docs')").collect()
+          val out = s2.sql(
+            "SELECT lang, n_docs, min_chars, max_chars FROM graftcat.mv_mm")
+            .orderBy("lang")
+          val rows = out.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -4756,40 +4709,38 @@ object DedupQueries extends QueryModule {
           s"pipe_partition_compact: need a fragmented scope, " +
             s"got $enBefore lang=en files")
         val chainBefore = VersionedTable.chainLength(table, 1L)
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        val res = s2.sql("CALL graftcat.compact_partitions(" +
-          "'docs', 'lang', 'en', files => 2)").collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        require(res("files_rewritten") == enBefore &&
-            res("version") == 2L,
-          s"pipe_partition_compact: CALL witness $res, expected " +
-            s"$enBefore files rewritten at version 2")
-        val after = VersionedTable.statsManifest(table, 2L).map(_._1)
-        val enAfter = after.count(_.contains("lang=en"))
-        require(enAfter <= 2 && enAfter < enBefore,
-          s"pipe_partition_compact: scope still holds $enAfter files")
-        // Untouched partitions carry byte-verbatim; the commit is an
-        // RM delta (chain +1), KIND=compact.
-        val beforeLines = VersionedTable.manifest(table, 1L).toSet
-        val carried = VersionedTable.manifest(table, 2L)
-          .filterNot(l => l.contains("lang=en") || l.startsWith("PART"))
-        require(carried.nonEmpty && carried.forall(beforeLines),
-          "pipe_partition_compact: untouched partitions' lines must " +
-            "carry byte-verbatim")
-        require(VersionedTable.chainLength(table, 2L) == chainBefore + 1,
-          "pipe_partition_compact: the scoped rewrite must publish an " +
-            "RM delta, not a full manifest")
-        require(VersionedTable.commitKind(table, 2L).contains("compact"),
-          "pipe_partition_compact: the commit must stamp KIND=compact")
-        val out = s2.sql("""SELECT lang, count(*) AS n,
-                           |  sum(n_chars) AS chars
-                           |FROM graftcat.docs
-                           |GROUP BY lang ORDER BY lang""".stripMargin)
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          val res = s2.sql("CALL graftcat.compact_partitions(" +
+            "'docs', 'lang', 'en', files => 2)").collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap
+          require(res("files_rewritten") == enBefore &&
+              res("version") == 2L,
+            s"pipe_partition_compact: CALL witness $res, expected " +
+              s"$enBefore files rewritten at version 2")
+          val after = VersionedTable.statsManifest(table, 2L).map(_._1)
+          val enAfter = after.count(_.contains("lang=en"))
+          require(enAfter <= 2 && enAfter < enBefore,
+            s"pipe_partition_compact: scope still holds $enAfter files")
+          // Untouched partitions carry byte-verbatim; the commit is an
+          // RM delta (chain +1), KIND=compact.
+          val beforeLines = VersionedTable.manifest(table, 1L).toSet
+          val carried = VersionedTable.manifest(table, 2L)
+            .filterNot(l => l.contains("lang=en") || l.startsWith("PART"))
+          require(carried.nonEmpty && carried.forall(beforeLines),
+            "pipe_partition_compact: untouched partitions' lines must " +
+              "carry byte-verbatim")
+          require(VersionedTable.chainLength(table, 2L) == chainBefore + 1,
+            "pipe_partition_compact: the scoped rewrite must publish an " +
+              "RM delta, not a full manifest")
+          require(VersionedTable.commitKind(table, 2L).contains("compact"),
+            "pipe_partition_compact: the commit must stamp KIND=compact")
+          val out = s2.sql("""SELECT lang, count(*) AS n,
+                             |  sum(n_chars) AS chars
+                             |FROM graftcat.docs
+                             |GROUP BY lang ORDER BY lang""".stripMargin)
+          val rows = out.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -4809,53 +4760,51 @@ object DedupQueries extends QueryModule {
       import graft.operators.VersionedTable
       val tmp = graft.sources.GraftSession.stagingDir("graft_vaddc_")
       try {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.sql(s"""CREATE TABLE graftcat.docs AS
-                   SELECT doc_id, lang, n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-        val table = tmp.resolve("docs")
-        s2.sql("ALTER TABLE graftcat.docs ADD COLUMN quality BIGINT")
-        require(VersionedTable.columnMappings(table, 2L) ==
-            Seq(("addcol", "quality", "bigint")),
-          "pipe_sql_add_column: the ALTER must land as one metadata-" +
-            "only ADDCOL commit")
-        // Visible to the very next statement: every legacy row serves
-        // a typed NULL, no compaction in between.
-        val n = s2.sql("SELECT count(*) AS n FROM graftcat.docs")
-          .head().getLong(0)
-        require(s2.sql("SELECT count(*) AS n FROM graftcat.docs " +
-            "WHERE quality IS NULL").head().getLong(0) == n && n > 0,
-          "pipe_sql_add_column: legacy rows must read as typed NULLs " +
-            "immediately after the ALTER")
-        // Time travel below the ALTER sees the old schema.
-        require(!s2.sql("SELECT * FROM graftcat.docs VERSION AS OF 1")
-            .schema.fieldNames.contains("quality"),
-          "pipe_sql_add_column: VERSION AS OF below the ALTER must " +
-            "not show the added column")
-        // New rows land real values next to the NULL-serving history.
-        s2.sql(s"""INSERT INTO graftcat.docs
-                   SELECT doc_id + 4398046511104L AS doc_id, lang,
-                          n_chars, n_chars * 2L AS quality
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
-                   WHERE doc_id % 9 = 4""")
-        val out = s2.sql("SELECT doc_id, lang, n_chars, quality " +
-          "FROM graftcat.docs ORDER BY doc_id")
-        val rows = out.collect()
-        // The compaction MATERIALIZES the union (mapping retired,
-        // content byte-identical) — the debt-repayment half.
-        s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
-        require(VersionedTable.columnMappings(table,
-            VersionedTable.latestVersion(table).get).isEmpty,
-          "pipe_sql_add_column: compaction must retire the ADDCOL " +
-            "mapping")
-        val after = s2.sql("SELECT doc_id, lang, n_chars, quality " +
-          "FROM graftcat.docs ORDER BY doc_id").collect()
-        require(after.toSeq == rows.toSeq,
-          "pipe_sql_add_column: compaction changed the table contents")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          s2.sql(s"""CREATE TABLE graftcat.docs AS
+                     SELECT doc_id, lang, n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
+          val table = tmp.resolve("docs")
+          s2.sql("ALTER TABLE graftcat.docs ADD COLUMN quality BIGINT")
+          require(VersionedTable.columnMappings(table, 2L) ==
+              Seq(("addcol", "quality", "bigint")),
+            "pipe_sql_add_column: the ALTER must land as one metadata-" +
+              "only ADDCOL commit")
+          // Visible to the very next statement: every legacy row serves
+          // a typed NULL, no compaction in between.
+          val n = s2.sql("SELECT count(*) AS n FROM graftcat.docs")
+            .head().getLong(0)
+          require(s2.sql("SELECT count(*) AS n FROM graftcat.docs " +
+              "WHERE quality IS NULL").head().getLong(0) == n && n > 0,
+            "pipe_sql_add_column: legacy rows must read as typed NULLs " +
+              "immediately after the ALTER")
+          // Time travel below the ALTER sees the old schema.
+          require(!s2.sql("SELECT * FROM graftcat.docs VERSION AS OF 1")
+              .schema.fieldNames.contains("quality"),
+            "pipe_sql_add_column: VERSION AS OF below the ALTER must " +
+              "not show the added column")
+          // New rows land real values next to the NULL-serving history.
+          s2.sql(s"""INSERT INTO graftcat.docs
+                     SELECT doc_id + 4398046511104L AS doc_id, lang,
+                            n_chars, n_chars * 2L AS quality
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
+                     WHERE doc_id % 9 = 4""")
+          val out = s2.sql("SELECT doc_id, lang, n_chars, quality " +
+            "FROM graftcat.docs ORDER BY doc_id")
+          val rows = out.collect()
+          // The compaction MATERIALIZES the union (mapping retired,
+          // content byte-identical) — the debt-repayment half.
+          s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
+          require(VersionedTable.columnMappings(table,
+              VersionedTable.latestVersion(table).get).isEmpty,
+            "pipe_sql_add_column: compaction must retire the ADDCOL " +
+              "mapping")
+          val after = s2.sql("SELECT doc_id, lang, n_chars, quality " +
+            "FROM graftcat.docs ORDER BY doc_id").collect()
+          require(after.toSeq == rows.toSeq,
+            "pipe_sql_add_column: compaction changed the table contents")
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -4873,52 +4822,50 @@ object DedupQueries extends QueryModule {
       import graft.operators.VersionedTable
       val tmp = graft.sources.GraftSession.stagingDir("graft_vdropc_")
       try {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.sql(s"""CREATE TABLE graftcat.docs AS
-                   SELECT doc_id, lang, n_chars,
-                          n_chars * 3L AS scratch
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-        val table = tmp.resolve("docs")
-        s2.sql("ALTER TABLE graftcat.docs DROP COLUMN scratch")
-        require(VersionedTable.columnMappings(table, 2L) ==
-            Seq(("dropcol", "scratch", "")),
-          "pipe_sql_drop_column: the ALTER must land as one metadata-" +
-            "only DROPCOL commit")
-        require(!s2.sql("SELECT * FROM graftcat.docs")
-            .schema.fieldNames.contains("scratch"),
-          "pipe_sql_drop_column: the column must vanish immediately")
-        require(s2.sql("SELECT * FROM graftcat.docs VERSION AS OF 1")
-            .schema.fieldNames.contains("scratch"),
-          "pipe_sql_drop_column: time travel below the ALTER must " +
-            "still see the column")
-        s2.sql(s"""INSERT INTO graftcat.docs
-                   SELECT doc_id + 8796093022208L AS doc_id, lang,
-                          n_chars
-                   FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
-                   WHERE doc_id % 8 = 1""")
-        // Re-adding the dropped name refuses while old bytes live…
-        require(scala.util.Try(s2.sql(
-            "ALTER TABLE graftcat.docs ADD COLUMN scratch BIGINT"))
-            .isFailure,
-          "pipe_sql_drop_column: re-adding a dropped name must refuse " +
-            "before compaction (stale-byte resurrection)")
-        val out = s2.sql("SELECT doc_id, lang, n_chars " +
-          "FROM graftcat.docs ORDER BY doc_id")
-        val rows = out.collect()
-        // …and succeeds once compaction physically drops them.
-        s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
-        require(VersionedTable.columnMappings(table,
-            VersionedTable.latestVersion(table).get).isEmpty,
-          "pipe_sql_drop_column: compaction must retire the mapping")
-        s2.sql("ALTER TABLE graftcat.docs ADD COLUMN scratch BIGINT")
-        require(s2.sql("SELECT count(*) AS n FROM graftcat.docs " +
-            "WHERE scratch IS NULL").head().getLong(0) == rows.length,
-          "pipe_sql_drop_column: the re-added column must be all-NULL " +
-            "(no stale bytes resurrected)")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          s2.sql(s"""CREATE TABLE graftcat.docs AS
+                     SELECT doc_id, lang, n_chars,
+                            n_chars * 3L AS scratch
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
+          val table = tmp.resolve("docs")
+          s2.sql("ALTER TABLE graftcat.docs DROP COLUMN scratch")
+          require(VersionedTable.columnMappings(table, 2L) ==
+              Seq(("dropcol", "scratch", "")),
+            "pipe_sql_drop_column: the ALTER must land as one metadata-" +
+              "only DROPCOL commit")
+          require(!s2.sql("SELECT * FROM graftcat.docs")
+              .schema.fieldNames.contains("scratch"),
+            "pipe_sql_drop_column: the column must vanish immediately")
+          require(s2.sql("SELECT * FROM graftcat.docs VERSION AS OF 1")
+              .schema.fieldNames.contains("scratch"),
+            "pipe_sql_drop_column: time travel below the ALTER must " +
+              "still see the column")
+          s2.sql(s"""INSERT INTO graftcat.docs
+                     SELECT doc_id + 8796093022208L AS doc_id, lang,
+                            n_chars
+                     FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
+                     WHERE doc_id % 8 = 1""")
+          // Re-adding the dropped name refuses while old bytes live…
+          require(scala.util.Try(s2.sql(
+              "ALTER TABLE graftcat.docs ADD COLUMN scratch BIGINT"))
+              .isFailure,
+            "pipe_sql_drop_column: re-adding a dropped name must refuse " +
+              "before compaction (stale-byte resurrection)")
+          val out = s2.sql("SELECT doc_id, lang, n_chars " +
+            "FROM graftcat.docs ORDER BY doc_id")
+          val rows = out.collect()
+          // …and succeeds once compaction physically drops them.
+          s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
+          require(VersionedTable.columnMappings(table,
+              VersionedTable.latestVersion(table).get).isEmpty,
+            "pipe_sql_drop_column: compaction must retire the mapping")
+          s2.sql("ALTER TABLE graftcat.docs ADD COLUMN scratch BIGINT")
+          require(s2.sql("SELECT count(*) AS n FROM graftcat.docs " +
+              "WHERE scratch IS NULL").head().getLong(0) == rows.length,
+            "pipe_sql_drop_column: the re-added column must be all-NULL " +
+              "(no stale bytes resurrected)")
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 
@@ -4946,40 +4893,38 @@ object DedupQueries extends QueryModule {
           Tables.documents(s, dir).select($"doc_id", $"lang", $"n_chars")
             .repartition(32))
         VersionedTable.constraintCommit(s, table, 1L, "n_chars >= 0")
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.graftcat.root", tmp.toString)
-        s2.sql("DELETE FROM graftcat.docs WHERE doc_id IN (3, 17)")
-        val res = s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        require(res("version") == 3L && res("files") <= 4L,
-          s"pipe_sql_maintain: CALL compact must report v3 with <= 4 " +
-            s"files, got $res")
-        require(VersionedTable.deletionVectors(table, 3L).isEmpty &&
-            VersionedTable.checkConstraints(table, 3L)
-              == Seq("n_chars >= 0"),
-          "pipe_sql_maintain: compaction must fold the DV and carry " +
-            "the CHECK")
-        s2.sql("CALL graftcat.tag('docs', 'release', 3)")
-        val exp = s2.sql("CALL graftcat.expire('docs', 3)")
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        require(exp("files_deleted") > 0L && exp("versions_expired") >= 3L,
-          s"pipe_sql_maintain: the vacuum must reclaim the fragmented " +
-            s"pre-compaction files and manifests, got $exp")
-        val nDocs = Tables.documents(s, dir).count()
-        require(VersionedTable.readRef(s, table, "release").count()
-            == nDocs - 2L,
-          "pipe_sql_maintain: the release tag must read the compacted " +
-            s"snapshot ($nDocs - 2 deleted) after the vacuum")
-        require(scala.util.Try(
-            VersionedTable.read(s, table, Some(0L))).isFailure,
-          "pipe_sql_maintain: the expired fragmented version must be " +
-            "unreadable after the vacuum")
-        val out = s2.sql(
-          "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
+          s2.sql("DELETE FROM graftcat.docs WHERE doc_id IN (3, 17)")
+          val res = s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          require(res("version") == 3L && res("files") <= 4L,
+            s"pipe_sql_maintain: CALL compact must report v3 with <= 4 " +
+              s"files, got $res")
+          require(VersionedTable.deletionVectors(table, 3L).isEmpty &&
+              VersionedTable.checkConstraints(table, 3L)
+                == Seq("n_chars >= 0"),
+            "pipe_sql_maintain: compaction must fold the DV and carry " +
+              "the CHECK")
+          s2.sql("CALL graftcat.tag('docs', 'release', 3)")
+          val exp = s2.sql("CALL graftcat.expire('docs', 3)")
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          require(exp("files_deleted") > 0L && exp("versions_expired") >= 3L,
+            s"pipe_sql_maintain: the vacuum must reclaim the fragmented " +
+              s"pre-compaction files and manifests, got $exp")
+          val nDocs = Tables.documents(s, dir).count()
+          require(VersionedTable.readRef(s, table, "release").count()
+              == nDocs - 2L,
+            "pipe_sql_maintain: the release tag must read the compacted " +
+              s"snapshot ($nDocs - 2 deleted) after the vacuum")
+          require(scala.util.Try(
+              VersionedTable.read(s, table, Some(0L))).isFailure,
+            "pipe_sql_maintain: the expired fragmented version must be " +
+              "unreadable after the vacuum")
+          val out = s2.sql(
+            "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
+          val rows = out.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        }
       } finally graft.streaming.EventStreams.deleteTree(tmp)
     }),
 

@@ -54,25 +54,15 @@ object EmbeddingQueries extends QueryModule {
     knnPlan(s, dir, 3, corpusWhere).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
 
-  /** [[exactTop3]] submitted on a one-thread pool (r21, guide §2.6):
-    * the yardstick reads the fixture corpus, never the index under
-    * test, so the ANN lifecycle queries start it the moment its
-    * inputs are final and join at the recall gate — its corpus scan
-    * back-fills the cores the commit/serve machinery leaves idle.
-    * The pool is shut down immediately after submit: the task still
-    * runs, the thread reclaims itself, and no finally is needed. */
+  /** [[exactTop3]] started asynchronously: the yardstick reads the
+    * fixture corpus, never the index under test, so the ANN lifecycle
+    * queries start it the moment its inputs are final and join at the
+    * recall gate — its corpus scan back-fills the cores the
+    * commit/serve machinery leaves idle. */
   private def exactTop3Async(s: SparkSession, dir: String,
       corpusWhere: Option[String] = None)
-      : java.util.concurrent.Future[Set[(Long, Long)]] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val f = pool.submit(
-      new java.util.concurrent.Callable[Set[(Long, Long)]] {
-        override def call(): Set[(Long, Long)] =
-          exactTop3(s, dir, corpusWhere)
-      })
-    pool.shutdown()
-    f
-  }
+      : graft.sources.GraftSession.Running[Set[(Long, Long)]] =
+    graft.sources.GraftSession.async(exactTop3(s, dir, corpusWhere))
 
   /** The in-memory IVF route (emb_ivf_topk's body), factored so the
     * persisted-index variant can gate EXACT row equality against it:
@@ -256,8 +246,8 @@ object EmbeddingQueries extends QueryModule {
     adj.map { case (k, v) => k -> v.toArray.sorted }.toMap
   }
 
-  /** Graph-ANN parameters, pinned by the measured ef/efC sweep
-    * (tools/HnswProbe): serve beam 16 over graphs built with
+  /** Graph-ANN parameters, pinned by a measured ef/efC sweep of
+    * recall and visited work: serve beam 16 over graphs built with
     * efC=48/m=12/degree≤24 gives 30/30 recall at sf0.01 and 29/30 at
     * sf0.1 while visiting under half the brute-force scan. Visited
     * work per probe per segment asymptotes at ~ef·degree regardless
@@ -660,21 +650,6 @@ object EmbeddingQueries extends QueryModule {
       () => served.select($"qid", $"seg", $"visited").distinct()
         .agg(sum($"visited")).head().getLong(0),
       g.count(), probes.length.toLong, segments)
-  }
-
-  /** Parameter probe (dev tool): recall + visited at a given ef. */
-  private[graft] def hnswProbe(s: SparkSession, dir: String,
-      ef: Int, efC: Int = 24, m: Int = 8, maxDeg: Int = 16): String = {
-    val tmp = graft.sources.GraftSession.stagingDir("graft_hnswprobe_")
-    try {
-      val h = hnswBuildServe(s, dir, tmp.resolve("graph"), 4, ef,
-        efC, m, maxDeg)
-      val rows = h.out.collect()
-      val exact = exactTop3(s, dir)
-      val got = rows.map(r => (r.getLong(0), r.getLong(2))).toSet
-      s"visited=${h.visitedTotal()} budget=${h.nVec * h.nProbes} " +
-        s"recall=${exact.count(got)}/${exact.size}"
-    } finally graft.streaming.EventStreams.deleteTree(tmp)
   }
 
   /** Hard ceiling for the deliberately-quadratic exactness yardstick
@@ -1963,30 +1938,21 @@ object EmbeddingQueries extends QueryModule {
           .write.parquet(idx.resolve("centroids").toString)
         val centS = s.read.parquet(idx.resolve("centroids").toString)
         // The two segment writes assign DISJOINT row sets to the same
-        // frozen codebook — independent jobs, overlapped (guide §2.6)
-        // so the smaller batch write back-fills the initial write's
-        // task tail.
+        // frozen codebook — independent jobs, overlapped so the smaller
+        // batch write back-fills the initial write's task tail.
         var segN = 0L; var batchN = 0L
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        try {
-          val f0 = pool.submit(new Runnable {
-            override def run(): Unit =
-              assignToCells(initial.select($"vec_id", $"embedding"), centS)
-                .write.partitionBy("cell")
-                .parquet(idx.resolve("seg-000").toString)
-          })
+        graft.sources.GraftSession.overlap(
+          () => assignToCells(initial.select($"vec_id", $"embedding"), centS)
+            .write.partitionBy("cell")
+            .parquet(idx.resolve("seg-000").toString),
           // APPEND: batch-only assignment to the frozen codebook.
-          val f1 = pool.submit(new Runnable {
-            override def run(): Unit = {
-              assignToCells(batch.select($"vec_id", $"embedding"), centS)
-                .write.partitionBy("cell")
-                .parquet(idx.resolve("seg-001").toString)
-              segN = s.read.parquet(idx.resolve("seg-001").toString).count()
-              batchN = batch.count()
-            }
+          () => {
+            assignToCells(batch.select($"vec_id", $"embedding"), centS)
+              .write.partitionBy("cell")
+              .parquet(idx.resolve("seg-001").toString)
+            segN = s.read.parquet(idx.resolve("seg-001").toString).count()
+            batchN = batch.count()
           })
-          f0.get(); f1.get()
-        } finally pool.shutdown()
         require(segN == batchN,
           s"emb_ivf_append: the appended segment holds $segN rows for a " +
             s"$batchN-row batch — append cost must track the batch exactly")
@@ -2045,31 +2011,24 @@ object EmbeddingQueries extends QueryModule {
       val probes = emb.where($"vec_id" < 10)
         .select($"vec_id".as("qid"), $"embedding".as("qe"))
       // Yardstick async + the four INDEPENDENT width sweeps overlapped
-      // (guide §2.6, same shape as emb_recall_curve); the cache is
-      // forced once so concurrent sweeps share one fill.
+      // (same shape as emb_recall_curve); the cache is forced once so
+      // concurrent sweeps share one fill.
       val exactF = exactTop3Async(s, dir)
       emb.count()
       val widths = Seq(8, 16, 32, 64)
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(widths.size)
-      val gotF = widths.map { d =>
-        pool.submit(new java.util.concurrent.Callable[Array[(Long, Long)]] {
-          override def call(): Array[(Long, Long)] = {
-            val w = Window.partitionBy($"qid").orderBy($"sim".desc, $"vec_id")
-            emb.join(broadcast(probes), $"vec_id" =!= $"qid")
-              .withColumn("sim", call_function("cosine_sim",
-                expr(s"slice(qe, 1, $d)"), expr(s"slice(embedding, 1, $d)")))
-              .withColumn("rank", row_number().over(w))
-              .where($"rank" <= 3)
-              .select($"qid", $"vec_id")
-              .collect().map(r => (r.getLong(0), r.getLong(1)))
-          }
-        })
-      }
-      pool.shutdown()
+      val got = graft.sources.GraftSession.overlap(widths.map { d => () =>
+        val w = Window.partitionBy($"qid").orderBy($"sim".desc, $"vec_id")
+        emb.join(broadcast(probes), $"vec_id" =!= $"qid")
+          .withColumn("sim", call_function("cosine_sim",
+            expr(s"slice(qe, 1, $d)"), expr(s"slice(embedding, 1, $d)")))
+          .withColumn("rank", row_number().over(w))
+          .where($"rank" <= 3)
+          .select($"qid", $"vec_id")
+          .collect().map(r => (r.getLong(0), r.getLong(1)))
+      }: _*)
       val exact = exactF.get()
-      val curve = widths.zip(gotF).map { case (d, f) =>
-        val hits = f.get().count(exact.contains).toLong
+      val curve = widths.zip(got).map { case (d, pairs) =>
+        val hits = pairs.count(exact.contains).toLong
         (d, hits, exact.size.toLong, hits * 1000000L / exact.size)
       }
       require(curve.last._4 == 1000000L,
@@ -2110,37 +2069,30 @@ object EmbeddingQueries extends QueryModule {
       val cells = assigned.where($"crk" === 1)
         .select($"vec_id", $"cell", $"embedding")
       val probes = assigned.where($"vec_id" < 10)
-      // Yardstick async + INDEPENDENT per-nprobe sweeps overlapped
-      // (guide §2.6): each sweep is one read of the persisted
-      // assignment, so they back-fill one another's task tails. The
-      // cache is forced ONCE first — concurrent first-fills would
-      // duplicate the assignment pass instead of sharing it.
+      // Yardstick async + INDEPENDENT per-nprobe sweeps overlapped:
+      // each sweep is one read of the persisted assignment, so they
+      // back-fill one another's task tails. The cache is forced ONCE
+      // first — concurrent first-fills would duplicate the assignment
+      // pass instead of sharing it.
       val exactF = exactTop3Async(s, dir)
       assigned.count()
       val sweep = (Seq(1, 2, 3) ++ Seq(k)).distinct.filter(_ <= k)
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(sweep.size)
-      val gotF = sweep.map { np =>
-        pool.submit(new java.util.concurrent.Callable[Array[(Long, Long)]] {
-          override def call(): Array[(Long, Long)] = {
-            val probeCells = probes.where($"crk" <= np)
-              .select($"vec_id".as("qid"), $"embedding".as("qe"), $"cell")
-            val w = Window.partitionBy($"qid").orderBy($"sim".desc, $"vec_id")
-            cells.join(broadcast(probeCells), Seq("cell"))
-              .where($"vec_id" =!= $"qid")
-              .withColumn("sim",
-                call_function("cosine_sim", $"qe", $"embedding"))
-              .withColumn("rank", row_number().over(w))
-              .where($"rank" <= 3)
-              .select($"qid", $"vec_id")
-              .collect().map(r => (r.getLong(0), r.getLong(1)))
-          }
-        })
-      }
-      pool.shutdown()
+      val got = graft.sources.GraftSession.overlap(sweep.map { np => () =>
+        val probeCells = probes.where($"crk" <= np)
+          .select($"vec_id".as("qid"), $"embedding".as("qe"), $"cell")
+        val w = Window.partitionBy($"qid").orderBy($"sim".desc, $"vec_id")
+        cells.join(broadcast(probeCells), Seq("cell"))
+          .where($"vec_id" =!= $"qid")
+          .withColumn("sim",
+            call_function("cosine_sim", $"qe", $"embedding"))
+          .withColumn("rank", row_number().over(w))
+          .where($"rank" <= 3)
+          .select($"qid", $"vec_id")
+          .collect().map(r => (r.getLong(0), r.getLong(1)))
+      }: _*)
       val exact = exactF.get()
-      val curve = sweep.zip(gotF).map { case (np, f) =>
-        val hits = f.get().count(exact.contains).toLong
+      val curve = sweep.zip(got).map { case (np, pairs) =>
+        val hits = pairs.count(exact.contains).toLong
         (np, hits, exact.size.toLong, hits * 1000000L / exact.size)
       }
       curve.sliding(2).foreach {
@@ -2223,39 +2175,31 @@ object EmbeddingQueries extends QueryModule {
         // BUILD: one corpus pass for the codebook, one to encode, one
         // to lay down rerank storage. The rerank-storage write (and
         // the corpus count) are independent of the codebook→encode
-        // chain — overlap them from a 2-thread pool so the encode's
-        // task tail back-fills the vector write's idle cores (guide
-        // §2.6, the rel_source_roundtrip pattern).
+        // chain — overlap them so the encode's task tail back-fills the
+        // vector write's idle cores (the rel_source_roundtrip pattern).
         val sumAgg = udaf(new ElementwiseSum(64))
         val emb = Tables.embeddings(s, dir).select($"vec_id", $"embedding")
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
         var codes: Array[Array[Double]] = null
         var corpusN = 0L
-        try {
-          val fCodes = pool.submit(new Runnable {
-            override def run(): Unit = {
-              Tables.embeddings(s, dir)
-                .selectExpr("label",
-                  "transform(cast(embedding AS array<double>), x -> CAST(floor(x * 1000000) AS BIGINT)) AS e6")
-                .groupBy($"label").agg(count(lit(1)).as("n"), sumAgg($"e6").as("sums"))
-                .selectExpr("label", "transform(sums, x -> x / (n * 1e6)) AS cvec")
-                .write.parquet(idx.resolve("codebook").toString)
-              codes = s.read
-                .parquet(idx.resolve("codebook").toString)
-                .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-                .sortBy(_._1).map(_._2)
-              pqEncode(s, emb, codes)
-                .write.parquet(idx.resolve("pqcodes").toString)
-            }
+        graft.sources.GraftSession.overlap(
+          () => {
+            Tables.embeddings(s, dir)
+              .selectExpr("label",
+                "transform(cast(embedding AS array<double>), x -> CAST(floor(x * 1000000) AS BIGINT)) AS e6")
+              .groupBy($"label").agg(count(lit(1)).as("n"), sumAgg($"e6").as("sums"))
+              .selectExpr("label", "transform(sums, x -> x / (n * 1e6)) AS cvec")
+              .write.parquet(idx.resolve("codebook").toString)
+            codes = s.read
+              .parquet(idx.resolve("codebook").toString)
+              .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+              .sortBy(_._1).map(_._2)
+            pqEncode(s, emb, codes)
+              .write.parquet(idx.resolve("pqcodes").toString)
+          },
+          () => {
+            emb.write.parquet(idx.resolve("vectors").toString)
+            corpusN = emb.count()
           })
-          val fVecs = pool.submit(new Runnable {
-            override def run(): Unit = {
-              emb.write.parquet(idx.resolve("vectors").toString)
-              corpusN = emb.count()
-            }
-          })
-          fCodes.get(); fVecs.get()
-        } finally pool.shutdown()
         // SERVE: stored artifacts only — no Tables.* reference below.
         val encS = s.read.parquet(idx.resolve("pqcodes").toString)
         val vecS = s.read.parquet(idx.resolve("vectors").toString)

@@ -123,9 +123,8 @@ object EventsQueries extends QueryModule {
       // require it); cast back to ntz so the sink parquet's type matches
       // the batch reader's convention (UTC session ⇒ same wall clock).
       graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (src, nf) =>
-        graft.streaming.EventStreams.drainAppend(
-            graft.streaming.EventStreams.hourlyCounts(src),
-            "graft_ev_stream_", minBatches = nf)
+        graft.streaming.EventStreams.drainAppend(s, "graft_ev_stream_",
+            minBatches = nf)(c => graft.streaming.EventStreams.hourlyCounts(src(c)))
           .select(col("hour_start").cast("timestamp_ntz").as("hour_start"),
             col("event_type"), col("n"))
           .orderBy("hour_start", "event_type")
@@ -161,9 +160,9 @@ object EventsQueries extends QueryModule {
       import s.implicits._
       graft.streaming.EventStreams.withLateEvents(s, dir) { (src, nf) =>
         val (out, dropped) =
-          graft.streaming.EventStreams.drainAppendDropCounted(
-            graft.streaming.EventStreams.hourlyCounts(src),
-            "graft_ev_late_", minBatches = nf)
+          graft.streaming.EventStreams.drainAppendDropCounted(s,
+            "graft_ev_late_", minBatches = nf)(
+            c => graft.streaming.EventStreams.hourlyCounts(src(c)))
         val ev = Tables.events(s, dir).withColumn("ts_us", expr(TS_US))
         val b = ev.agg(min($"ts_us"), max($"ts_us")).head()
         val (tmin, tmax) = (b.getLong(0), b.getLong(1))
@@ -198,13 +197,13 @@ object EventsQueries extends QueryModule {
     // ev_stream_hourly: observation must not perturb the plan.
     "ev_stream_observe" -> ((s, dir) => {
       graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (src, nf) =>
-        val audited = src.observe("src_audit",
-          count(lit(1)).as("rows_seen"),
-          sum(expr("CASE WHEN value IS NULL THEN 1 ELSE 0 END"))
-            .as("null_values"))
         val (out, obs) = graft.streaming.EventStreams.drainAppendObserved(
-          graft.streaming.EventStreams.hourlyCounts(audited),
-          "graft_ev_obs_", "src_audit", minBatches = nf)
+            s, "graft_ev_obs_", "src_audit", minBatches = nf) { c =>
+          graft.streaming.EventStreams.hourlyCounts(src(c).observe("src_audit",
+            count(lit(1)).as("rows_seen"),
+            sum(expr("CASE WHEN value IS NULL THEN 1 ELSE 0 END"))
+              .as("null_values")))
+        }
         val expected = Tables.events(s, dir).count()
         val seen = obs.getOrElse("rows_seen", -1L)
         require(seen == expected,
@@ -227,9 +226,9 @@ object EventsQueries extends QueryModule {
     // the batches — the driver row proves exactly that equivalence.
     "ev_stream_ptime" -> ((s, dir) => {
       graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (src, nf) =>
-        graft.streaming.EventStreams.drainProcessingTime(
-            graft.streaming.EventStreams.hourlyCounts(src),
-            "graft_ev_ptime_", minBatches = nf)
+        graft.streaming.EventStreams.drainProcessingTime(s,
+            "graft_ev_ptime_", minBatches = nf)(
+            c => graft.streaming.EventStreams.hourlyCounts(src(c)))
           .select(col("hour_start").cast("timestamp_ntz").as("hour_start"),
             col("event_type"), col("n"))
           .orderBy("hour_start", "event_type")
@@ -507,9 +506,8 @@ object EventsQueries extends QueryModule {
       // operators both see the watermark advance batch-by-batch — the
       // hourly stage's emissions feed the daily stage incrementally.
       graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (src, nf) =>
-        graft.streaming.EventStreams.drainAppend(
-            graft.streaming.EventStreams.hourlyThenDaily(src),
-            "graft_ev_daily_", minBatches = nf)
+        graft.streaming.EventStreams.drainAppend(s, "graft_ev_daily_",
+            minBatches = nf)(c => graft.streaming.EventStreams.hourlyThenDaily(src(c)))
           .select(col("day").cast("timestamp_ntz").as("day"),
             col("event_type"), col("n"))
           .orderBy("day", "event_type")
@@ -541,12 +539,14 @@ object EventsQueries extends QueryModule {
       // which implies any remaining match would be late itself). State
       // for pairs the advancing watermark has passed evicts batch by
       // batch instead of all at the end.
-      graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (ev, nf) =>
-        graft.streaming.EventStreams.drainAppend(
-            graft.streaming.EventStreams.attributePurchases(
-              ev.where($"event_type" === "click"),
-              ev.where($"event_type" === "purchase")),
-            "graft_ev_attrib_", minBatches = nf)
+      graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (src, nf) =>
+        graft.streaming.EventStreams.drainAppend(s, "graft_ev_attrib_",
+            minBatches = nf) { c =>
+          val ev = src(c)
+          graft.streaming.EventStreams.attributePurchases(
+            ev.where($"event_type" === "click"),
+            ev.where($"event_type" === "purchase"))
+        }
           .groupBy($"click_user".as("user_id"))
           .agg(count(lit(1)).as("n_attributed"))
           .orderBy("user_id")
@@ -576,13 +576,13 @@ object EventsQueries extends QueryModule {
     "ev_stream_sessions" -> ((s, dir) => {
       import s.implicits._
       graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (src, nf) =>
-        val evs = src
-          .selectExpr("user_id AS userId", s"$TS_US AS tsUs",
-            "event_type AS eventType")
-          .as[graft.streaming.Ev]
-        graft.streaming.EventStreams.drainAppend(
-            graft.streaming.EventStreams.closedSessions(evs).toDF(),
-            "graft_ev_sess_", minBatches = nf)
+        graft.streaming.EventStreams.drainAppend(s, "graft_ev_sess_",
+            minBatches = nf) { c =>
+          graft.streaming.EventStreams.closedSessions(src(c)
+            .selectExpr("user_id AS userId", s"$TS_US AS tsUs",
+              "event_type AS eventType")
+            .as[graft.streaming.Ev]).toDF()
+        }
           .select($"userId".as("user_id"), $"startUs".as("start_us"),
             $"endUs".as("end_us"), $"nEvents".as("n_events"))
           .orderBy("user_id", "start_us")
@@ -608,13 +608,13 @@ object EventsQueries extends QueryModule {
     "ev_stream_compact" -> ((s, dir) => {
       import s.implicits._
       graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (src, nf) =>
-      val evs = src
-        .selectExpr("user_id AS userId", "event_id AS eventId",
-          s"$TS_US AS tsUs", "event_type AS eventType", "value")
-        .as[graft.streaming.EvRec]
-      graft.streaming.EventStreams.drainUpdate(
-          graft.streaming.EventStreams.latestState(evs).toDF(),
-          "graft_ev_cdc_", minBatches = nf)
+      graft.streaming.EventStreams.drainUpdate(s, "graft_ev_cdc_",
+          minBatches = nf) { c =>
+        graft.streaming.EventStreams.latestState(src(c)
+          .selectExpr("user_id AS userId", "event_id AS eventId",
+            s"$TS_US AS tsUs", "event_type AS eventType", "value")
+          .as[graft.streaming.EvRec]).toDF()
+      }
         .groupBy($"userId", $"eventType")
         .agg(max(struct($"nEvents", $"lastTsUs", $"lastEventId", $"lastValue"))
           .as("m"))
@@ -647,11 +647,10 @@ object EventsQueries extends QueryModule {
       // batches (3 MERGE rounds) instead of 6.
       graft.streaming.EventStreams.withSplitEvents(s, dir, 3,
           redeliver = true, filesPerTrigger = 2) { (src, nf) =>
-        val keyed = src.selectExpr("user_id", "event_type",
-          s"struct($TS_US AS ts_us, event_id, value) AS m")
         graft.streaming.EventStreams.drainMergeTarget(
-            keyed, "graft_ev_upsert_", Seq("user_id", "event_type"),
-            minBatches = nf)
+            s, "graft_ev_upsert_", Seq("user_id", "event_type"),
+            minBatches = nf)(c => src(c).selectExpr("user_id", "event_type",
+              s"struct($TS_US AS ts_us, event_id, value) AS m"))
           .select($"user_id", $"event_type",
             $"m.event_id".as("last_event_id"), $"m.ts_us".as("last_ts_us"),
             $"m.value".as("last_value"))
@@ -678,7 +677,7 @@ object EventsQueries extends QueryModule {
       import s.implicits._
       graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (src, nf) =>
         graft.streaming.EventStreams.drainVersionedCommits(
-            src.selectExpr("event_id", "user_id", "event_type", "value"),
+            src(s).selectExpr("event_id", "user_id", "event_type", "value"),
             "graft_ev_vcommit_", minBatches = nf)
           .orderBy("event_id")
       }
@@ -771,8 +770,8 @@ object EventsQueries extends QueryModule {
       // default heap-backed store first at 100 TB — so it runs on the
       // at-scale provider (off-heap RocksDB state, changelog-style
       // commits) and the driver's oracle proves the provider swap is
-      // semantics-preserving. Since r20 every RocksDB drain also runs
-      // CHANGELOG CHECKPOINTING (withStateProvider sets it): each
+      // semantics-preserving. Every RocksDB drain also runs
+      // CHANGELOG CHECKPOINTING (EventStreams.stateConf sets it): each
       // batch commits its O(batch) changelog instead of a full
       // O(state) snapshot — the dominant per-batch term for this
       // drain. DrainProfile r20 (sf0.1, 3 reps interleaved):
@@ -790,10 +789,9 @@ object EventsQueries extends QueryModule {
       // them), everything older is late-filtered.
       graft.streaming.EventStreams.withSplitEvents(s, dir, 3,
           redeliver = true, filesPerTrigger = 2) { (src, nf) =>
-        graft.streaming.EventStreams.drainAppend(
-            graft.streaming.EventStreams.dedupEvents(src),
-            "graft_ev_dedup_", statePartitions = 8, minBatches = nf,
-            rocksdb = true)
+        graft.streaming.EventStreams.drainAppend(s, "graft_ev_dedup_",
+            statePartitions = 8, minBatches = nf, rocksdb = true)(
+            c => graft.streaming.EventStreams.dedupEvents(src(c)))
           .select($"event_id", $"user_id", $"event_type", $"value")
           .orderBy("event_id")
       }
@@ -818,9 +816,9 @@ object EventsQueries extends QueryModule {
       // against EACH micro-batch — the per-batch planning that defines
       // a stream-static join, visible only with >1 batch.
       graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (src, nf) =>
-        graft.streaming.EventStreams.drainAppend(
-            graft.streaming.EventStreams.enrichWithUsers(src, dim),
-            "graft_ev_enrich_", minBatches = nf)
+        graft.streaming.EventStreams.drainAppend(s, "graft_ev_enrich_",
+            minBatches = nf)(
+            c => graft.streaming.EventStreams.enrichWithUsers(src(c), dim))
           .groupBy(coalesce($"segment", lit("(unmatched)")).as("segment"))
           .agg(count(lit(1)).as("n"), countDistinct($"user_id").as("n_users"))
           .orderBy("segment")
@@ -893,13 +891,15 @@ object EventsQueries extends QueryModule {
       // oracle is identical; what multi-batch adds is the actual
       // interleaving of match-state insertion, cross-batch matching and
       // watermark-driven eviction.
-      graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (ev, nf) =>
-        graft.streaming.EventStreams.drainAppend(
-            graft.streaming.EventStreams.attributePurchases(
-              ev.where($"event_type" === "click"),
-              ev.where($"event_type" === "purchase"),
-              "left_outer"),
-            "graft_ev_funnel_", minBatches = nf)
+      graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (src, nf) =>
+        graft.streaming.EventStreams.drainAppend(s, "graft_ev_funnel_",
+            minBatches = nf) { c =>
+          val ev = src(c)
+          graft.streaming.EventStreams.attributePurchases(
+            ev.where($"event_type" === "click"),
+            ev.where($"event_type" === "purchase"),
+            "left_outer")
+        }
           .groupBy($"click_user".as("user_id"))
           .agg(count($"purch_user").as("n_attributed"),
             sum(when($"purch_user".isNull, 1L).otherwise(0L)).as("n_expired"))
@@ -923,13 +923,15 @@ object EventsQueries extends QueryModule {
     // fraud/debug side left-outer cannot see).
     "ev_stream_fulljoin" -> ((s, dir) => {
       import s.implicits._
-      graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (ev, nf) =>
-        graft.streaming.EventStreams.drainAppend(
-            graft.streaming.EventStreams.attributePurchases(
-              ev.where($"event_type" === "click"),
-              ev.where($"event_type" === "purchase"),
-              "full_outer"),
-            "graft_ev_fullj_", minBatches = nf)
+      graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (src, nf) =>
+        graft.streaming.EventStreams.drainAppend(s, "graft_ev_fullj_",
+            minBatches = nf) { c =>
+          val ev = src(c)
+          graft.streaming.EventStreams.attributePurchases(
+            ev.where($"event_type" === "click"),
+            ev.where($"event_type" === "purchase"),
+            "full_outer")
+        }
           .groupBy(coalesce($"click_user", $"purch_user").as("user_id"))
           .agg(
             sum(when($"click_user".isNotNull && $"purch_user".isNotNull,
@@ -973,11 +975,7 @@ object EventsQueries extends QueryModule {
     "ev_stream_sessionize" -> ((s, dir) => {
       import s.implicits._
       graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (src, nf) =>
-        val evs = src
-          .selectExpr("user_id AS userId", s"$TS_US AS tsUs",
-            "event_type AS eventType")
-          .as[graft.streaming.Ev]
-        // RocksDB provider (r11): this drain's state GROWS per key for
+        // RocksDB provider: this drain's state GROWS per key for
         // the whole run (mapGroupsWithState, NoTimeout — one snapshot
         // entry per user, never evicted), which is exactly the state
         // class that outgrows heap snapshots at 100 TB; running it on
@@ -988,9 +986,13 @@ object EventsQueries extends QueryModule {
         // 1.74 s min-of-3 on this exact shape at sf0.1 — the ~0.2 s
         // constant is the changelog/SST machinery, the price of state
         // that no longer lives on the JVM heap).
-        graft.streaming.EventStreams.drainUpdate(
-            graft.streaming.EventStreams.sessionize(evs).toDF(),
-            "graft_ev_sessz_", minBatches = nf, rocksdb = true)
+        graft.streaming.EventStreams.drainUpdate(s, "graft_ev_sessz_",
+            minBatches = nf, rocksdb = true) { c =>
+          graft.streaming.EventStreams.sessionize(src(c)
+            .selectExpr("user_id AS userId", s"$TS_US AS tsUs",
+              "event_type AS eventType")
+            .as[graft.streaming.Ev]).toDF()
+        }
           .groupBy($"userId")
           .agg(max(struct($"nEvents", $"nSessions")).as("m"))
           .select($"userId".as("user_id"), $"m.nEvents".as("n_events"),
@@ -1020,14 +1022,15 @@ object EventsQueries extends QueryModule {
           lead($"ts_us", 1).over(wp).as("valid_to"),
           row_number().over(wp).as("version"), $"value".as("d_value"))
       graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (src, nf) =>
-        val views = src.where($"event_type" === "view")
-          .selectExpr("user_id", "event_id", s"$TS_US AS v_ts")
-        val joined = views.join(broadcast(dim),
-          $"user_id" === $"d_user" && $"v_ts" >= $"valid_from" &&
-            ($"valid_to".isNull || $"v_ts" < $"valid_to"))
-          .select($"user_id", $"event_id", $"version", $"d_value")
-        graft.streaming.EventStreams.drainAppend(joined,
-            "graft_ev_scdj_", minBatches = nf)
+        graft.streaming.EventStreams.drainAppend(s, "graft_ev_scdj_",
+            minBatches = nf) { c =>
+          src(c).where($"event_type" === "view")
+            .selectExpr("user_id", "event_id", s"$TS_US AS v_ts")
+            .join(broadcast(dim),
+              $"user_id" === $"d_user" && $"v_ts" >= $"valid_from" &&
+                ($"valid_to".isNull || $"v_ts" < $"valid_to"))
+            .select($"user_id", $"event_id", $"version", $"d_value")
+        }
           .groupBy($"user_id", $"version")
           .agg(count(lit(1)).as("n_views"), max($"d_value").as("version_value"))
           .orderBy("user_id", "version")
@@ -1047,13 +1050,13 @@ object EventsQueries extends QueryModule {
     "ev_stream_tws" -> ((s, dir) => {
       import s.implicits._
       graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (src, nf) =>
-        val evs = src
-          .selectExpr("user_id AS userId", s"$TS_US AS tsUs",
-            "event_type AS eventType")
-          .as[graft.streaming.Ev]
-        graft.streaming.EventStreams.drainUpdate(
-            graft.streaming.EventStreams.typeCounts(evs).toDF(),
-            "graft_ev_tws_", minBatches = nf, rocksdb = true)
+        graft.streaming.EventStreams.drainUpdate(s, "graft_ev_tws_",
+            minBatches = nf, rocksdb = true) { c =>
+          graft.streaming.EventStreams.typeCounts(src(c)
+            .selectExpr("user_id AS userId", s"$TS_US AS tsUs",
+              "event_type AS eventType")
+            .as[graft.streaming.Ev]).toDF()
+        }
           .groupBy($"userId", $"eventType")
           .agg(max($"n").as("n"))
           .select($"userId".as("user_id"), $"eventType".as("event_type"), $"n")
@@ -1170,11 +1173,12 @@ object EventsQueries extends QueryModule {
     "ev_stream_hll" -> ((s, dir) => {
       import s.implicits._
       graft.streaming.EventStreams.withSplitEvents(s, dir, 3) { (src, nf) =>
-        val agg = src.groupBy($"event_type")
-          .agg(hll_sketch_agg($"user_id", 12).as("sk"),
-            count(lit(1)).as("n"))
         val log = graft.streaming.EventStreams.drainUpdate(
-          agg, "graft_ev_hll_", minBatches = nf)
+            s, "graft_ev_hll_", minBatches = nf) { c =>
+          src(c).groupBy($"event_type")
+            .agg(hll_sketch_agg($"user_id", 12).as("sk"),
+              count(lit(1)).as("n"))
+        }
         val w = Window.partitionBy($"event_type").orderBy($"n".desc)
         val out = log
           .withColumn("rk", row_number().over(w))

@@ -188,16 +188,16 @@ object RelationalQueries extends QueryModule {
       // map task) is unsplittable no matter how skewed — at 100 TB the
       // fact side has thousands of mappers and this is a no-op shape;
       // here it recreates that multi-mapper geometry at fixture scale.
-      val fact = Tables.lineitem(s, dir).select(
-        when($"l_orderkey" % 3 === 0, lit(1L)).otherwise($"l_suppkey")
-          .as("skey"),
-        dec($"l_extendedprice").as("price"))
-        .repartition(16)
-      val dim = Tables.supplier(s, dir)
-        .join(broadcast(Tables.nation(s, dir)),
-          $"s_nationkey" === $"n_nationkey")
-        .select($"s_suppkey".as("skey"), $"n_name")
-      graft.operators.SkewJoin.aqeSkewJoinDemo(s) {
+      graft.operators.SkewJoin.aqeSkewJoinDemo(s) { c =>
+        val fact = Tables.lineitem(c, dir).select(
+          when($"l_orderkey" % 3 === 0, lit(1L)).otherwise($"l_suppkey")
+            .as("skey"),
+          dec($"l_extendedprice").as("price"))
+          .repartition(16)
+        val dim = Tables.supplier(c, dir)
+          .join(broadcast(Tables.nation(c, dir)),
+            $"s_nationkey" === $"n_nationkey")
+          .select($"s_suppkey".as("skey"), $"n_name")
         fact.hint("merge").join(dim, "skey")
           .groupBy($"n_name")
           .agg(
@@ -609,30 +609,29 @@ object RelationalQueries extends QueryModule {
       // parquet sits in useV1SourceList by default, so both confs must
       // flip for this ONE read. Flipping them on the shared session
       // would silently reroute any concurrently compiling parquet scan
-      // to the V2 path (ADVICE r11) — so the pins land on a CHILD
-      // session (`newSession()`: same SparkContext + cached data,
-      // isolated SQLConf) and die with it; the caller's session is
-      // never mutated and nothing needs restoring.
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-      s2.conf.set("spark.sql.sources.useV1SourceList",
-        s2.conf.get("spark.sql.sources.useV1SourceList")
-          .split(',').filterNot(_.trim == "parquet").mkString(","))
-      // Integral/floating columns only: timestamp min/max is outside
-      // the pushdown-supported types and would silently veto the
-      // whole pushdown (observed — the in-path require caught it).
-      val out = graft.sources.Tables.table(s2, dir, "lineitem")
-        .agg(count(lit(1)).as("n"),
-          min(col("l_orderkey")).as("min_okey"),
-          max(col("l_orderkey")).as("max_okey"),
-          min(col("l_quantity")).as("min_qty"),
-          max(col("l_quantity")).as("max_qty"))
-      QueryModule.gatedPlans.put("rel_agg_pushdown", out)
-      val rows = out.collect()
-      require(out.queryExecution.executedPlan.toString
-          .contains("PushedAggregation: [COUNT(*)"),
-        "rel_agg_pushdown: aggregate did not reach the parquet footer")
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      // to the V2 path — so the pins land on a scoped child session and
+      // die with it (the result is collected in-scope).
+      graft.sources.GraftSession.scoped(s,
+          "spark.sql.parquet.aggregatePushdown" -> "true",
+          "spark.sql.sources.useV1SourceList" ->
+            s.conf.get("spark.sql.sources.useV1SourceList")
+              .split(',').filterNot(_.trim == "parquet").mkString(",")) { s2 =>
+        // Integral/floating columns only: timestamp min/max is outside
+        // the pushdown-supported types and would silently veto the
+        // whole pushdown (observed — the in-path require caught it).
+        val out = graft.sources.Tables.table(s2, dir, "lineitem")
+          .agg(count(lit(1)).as("n"),
+            min(col("l_orderkey")).as("min_okey"),
+            max(col("l_orderkey")).as("max_okey"),
+            min(col("l_quantity")).as("min_qty"),
+            max(col("l_quantity")).as("max_qty"))
+        QueryModule.gatedPlans.put("rel_agg_pushdown", out)
+        val rows = out.collect()
+        require(out.queryExecution.executedPlan.toString
+            .contains("PushedAggregation: [COUNT(*)"),
+          "rel_agg_pushdown: aggregate did not reach the parquet footer")
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      }
     }),
 
     // COST-BASED BROADCAST (r12) — ANALYZE-computed statistics driving
@@ -661,70 +660,67 @@ object RelationalQueries extends QueryModule {
     // (stats may only change the plan, never the rows).
     "rel_cbo_broadcast" -> ((s, dir) => {
       import s.implicits._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.cbo.enabled", "true")
-      s2.conf.set("spark.sql.cbo.planStats.enabled", "true")
-      s2.conf.set("spark.sql.adaptive.enabled", "false")
       val tname = "graft_cbo_" +
         java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      Tables.orders(s2, dir).select($"o_orderkey", $"o_custkey")
-        .write.format("parquet").saveAsTable(tname)
       // Plan statistics resolve SQLConf through the ACTIVE session
       // (thread-local), not the DataFrame's own — a stats read while
       // the parent session is active would consult the parent's conf
       // AND memoize that answer on the catalog-cached relation,
       // poisoning every later read (observed: both estimates came
-      // back as the bare file size). Pin s2 active for the whole
-      // body; restored in finally.
-      val prevActive = org.apache.spark.sql.SparkSession.getActiveSession
-      org.apache.spark.sql.SparkSession.setActiveSession(s2)
-      try {
-        s2.sql(s"ANALYZE TABLE $tname COMPUTE STATISTICS")
-        s2.sql(s"ANALYZE TABLE $tname COMPUTE STATISTICS FOR COLUMNS o_custkey")
-        val k0 = Tables.orders(s2, dir).agg(min($"o_custkey")).head.getLong(0)
-        def filtered = s2.table(tname).where($"o_custkey" === k0)
-        // Both estimates under CBO: the unfiltered relation prices at
-        // rowCount x row width; the filtered side at 1/ndv(o_custkey)
-        // of it. The ratio is scale-free (ndv grows with the table),
-        // so the threshold between them self-calibrates at any SF.
-        val estBig = s2.table(tname).queryExecution.optimizedPlan
-          .stats.sizeInBytes
-        val estStats = filtered.queryExecution.optimizedPlan
-          .stats.sizeInBytes
-        require(estStats * 4 <= estBig,
-          s"rel_cbo_broadcast: stats-based filtered estimate ($estStats " +
-            s"B) must undercut the unfiltered one ($estBig B) 4x for " +
-            "the A/B to be meaningful — did ANALYZE collect column stats?")
-        val thr = BigInt(math.sqrt((estStats * estBig).toDouble).toLong)
-          .max(BigInt(1024))
-        s2.conf.set("spark.sql.autoBroadcastJoinThreshold", thr.toString)
-        def joined = Tables.lineitem(s2, dir)
-          .join(filtered, $"l_orderkey" === $"o_orderkey")
-          .agg(
-            countDistinct($"o_orderkey").as("n_orders"),
-            count(lit(1)).as("n_items"),
-            sum($"l_quantity".cast("decimal(18,2)")).cast("double")
-              .as("sum_qty"))
-        val out = joined
-        QueryModule.gatedPlans.put("rel_cbo_broadcast", out)
-        val planOn = out.queryExecution.executedPlan.toString
-        require(planOn.contains("BroadcastHashJoin"),
-          s"rel_cbo_broadcast: CBO + column stats under threshold $thr " +
-            "must plan a broadcast join")
-        s2.conf.set("spark.sql.cbo.enabled", "false")
-        val planOff = joined.queryExecution.executedPlan.toString
-        require(!planOff.contains("BroadcastHashJoin") &&
-            planOff.contains("SortMergeJoin"),
-          "rel_cbo_broadcast: the control (CBO off, same threshold) " +
-            "must fall back to a shuffle join — otherwise the stats " +
-            "were not the deciding input")
-        s2.conf.set("spark.sql.cbo.enabled", "true")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        org.apache.spark.sql.SparkSession.setActiveSession(
-          prevActive.getOrElse(s))
-        s2.sql(s"DROP TABLE IF EXISTS $tname")
+      // back as the bare file size). `scoped` makes each child the
+      // active session for its body.
+      graft.sources.GraftSession.scoped(s,
+          "spark.sql.cbo.enabled" -> "true",
+          "spark.sql.cbo.planStats.enabled" -> "true",
+          "spark.sql.adaptive.enabled" -> "false") { s2 =>
+        Tables.orders(s2, dir).select($"o_orderkey", $"o_custkey")
+          .write.format("parquet").saveAsTable(tname)
+        try {
+          s2.sql(s"ANALYZE TABLE $tname COMPUTE STATISTICS")
+          s2.sql(s"ANALYZE TABLE $tname COMPUTE STATISTICS FOR COLUMNS o_custkey")
+          val k0 = Tables.orders(s2, dir).agg(min($"o_custkey")).head.getLong(0)
+          def filtered(c: SparkSession) = c.table(tname).where($"o_custkey" === k0)
+          // Both estimates under CBO: the unfiltered relation prices at
+          // rowCount x row width; the filtered side at 1/ndv(o_custkey)
+          // of it. The ratio is scale-free (ndv grows with the table),
+          // so the threshold between them self-calibrates at any SF.
+          val estBig = s2.table(tname).queryExecution.optimizedPlan
+            .stats.sizeInBytes
+          val estStats = filtered(s2).queryExecution.optimizedPlan
+            .stats.sizeInBytes
+          require(estStats * 4 <= estBig,
+            s"rel_cbo_broadcast: stats-based filtered estimate ($estStats " +
+              s"B) must undercut the unfiltered one ($estBig B) 4x for " +
+              "the A/B to be meaningful — did ANALYZE collect column stats?")
+          val thr = BigInt(math.sqrt((estStats * estBig).toDouble).toLong)
+            .max(BigInt(1024))
+          def joined(c: SparkSession) = Tables.lineitem(c, dir)
+            .join(filtered(c), $"l_orderkey" === $"o_orderkey")
+            .agg(
+              countDistinct($"o_orderkey").as("n_orders"),
+              count(lit(1)).as("n_items"),
+              sum($"l_quantity".cast("decimal(18,2)")).cast("double")
+                .as("sum_qty"))
+          graft.sources.GraftSession.scoped(s2,
+              "spark.sql.autoBroadcastJoinThreshold" -> thr.toString) { on =>
+            val out = joined(on)
+            QueryModule.gatedPlans.put("rel_cbo_broadcast", out)
+            val planOn = out.queryExecution.executedPlan.toString
+            require(planOn.contains("BroadcastHashJoin"),
+              s"rel_cbo_broadcast: CBO + column stats under threshold $thr " +
+                "must plan a broadcast join")
+            val planOff = graft.sources.GraftSession.scoped(on,
+                "spark.sql.cbo.enabled" -> "false")(
+              joined(_).queryExecution.executedPlan.toString)
+            require(!planOff.contains("BroadcastHashJoin") &&
+                planOff.contains("SortMergeJoin"),
+              "rel_cbo_broadcast: the control (CBO off, same threshold) " +
+                "must fall back to a shuffle join — otherwise the stats " +
+                "were not the deciding input")
+            val rows = out.collect()
+            s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+          }
+        } finally s2.sql(s"DROP TABLE IF EXISTS $tname")
       }
     }),
 
@@ -746,28 +742,28 @@ object RelationalQueries extends QueryModule {
     // the plain join aggregate — injection may only change the plan.
     "rel_runtime_filter" -> ((s, dir) => {
       import s.implicits._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      s2.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        "10GB")
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter." +
-        "applicationSideScanSizeThreshold", "0")
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val out = Tables.lineitem(s2, dir)
-        .join(Tables.orders(s2, dir).where($"o_totalprice" > 400000),
-          $"l_orderkey" === $"o_orderkey")
-        .agg(count(lit(1)).as("n_items"),
-          countDistinct($"o_orderkey").as("n_orders"),
-          sum($"l_extendedprice".cast("decimal(18,2)")).cast("double")
-            .as("sum_price"))
-      QueryModule.gatedPlans.put("rel_runtime_filter", out)
-      val plan = out.queryExecution.executedPlan.toString
-      require(plan.contains("might_contain"),
-        "rel_runtime_filter: the optimizer did not inject the runtime " +
-          "bloom filter onto the fact-side scan")
-      val rows = out.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      graft.sources.GraftSession.scoped(s,
+          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+          "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" ->
+            "10GB",
+          "spark.sql.optimizer.runtime.bloomFilter." +
+            "applicationSideScanSizeThreshold" -> "0",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") { s2 =>
+        val out = Tables.lineitem(s2, dir)
+          .join(Tables.orders(s2, dir).where($"o_totalprice" > 400000),
+            $"l_orderkey" === $"o_orderkey")
+          .agg(count(lit(1)).as("n_items"),
+            countDistinct($"o_orderkey").as("n_orders"),
+            sum($"l_extendedprice".cast("decimal(18,2)")).cast("double")
+              .as("sum_price"))
+        QueryModule.gatedPlans.put("rel_runtime_filter", out)
+        val plan = out.queryExecution.executedPlan.toString
+        require(plan.contains("might_contain"),
+          "rel_runtime_filter: the optimizer did not inject the runtime " +
+            "bloom filter onto the fact-side scan")
+        val rows = out.collect()
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      }
     }),
 
     // ANSI-SAFE ARITHMETIC (r12) — the try_* error-handling surface
@@ -903,21 +899,21 @@ object RelationalQueries extends QueryModule {
     // skew cutoffs without any client logic. The oracle expresses the
     // identical dataflow relationally (the parameter as a CTE scalar),
     // proving the scripted binding changes nothing about the result.
-    "rel_sql_script" -> ((s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.scripting.enabled", "true")
-      s2.sql(
-        s"""BEGIN
-           |  DECLARE VARIABLE p90 DOUBLE;
-           |  SET p90 = (SELECT percentile(value, 0.9)
-           |             FROM ${graft.queries.QueryModule.srcView(s2, dir, "events")});
-           |  SELECT event_type, count(*) AS n,
-           |    CAST(floor(min(value) * 1000000) AS BIGINT) AS min_e6
-           |  FROM ${graft.queries.QueryModule.srcView(s2, dir, "events")}
-           |  WHERE value > p90
-           |  GROUP BY event_type ORDER BY event_type;
-           |END""".stripMargin)
-    }),
+    "rel_sql_script" -> ((s, dir) =>
+      graft.sources.GraftSession.scoped(s,
+          "spark.sql.scripting.enabled" -> "true") { s2 =>
+        s2.sql(
+          s"""BEGIN
+             |  DECLARE VARIABLE p90 DOUBLE;
+             |  SET p90 = (SELECT percentile(value, 0.9)
+             |             FROM ${graft.queries.QueryModule.srcView(s2, dir, "events")});
+             |  SELECT event_type, count(*) AS n,
+             |    CAST(floor(min(value) * 1000000) AS BIGINT) AS min_e6
+             |  FROM ${graft.queries.QueryModule.srcView(s2, dir, "events")}
+             |  WHERE value > p90
+             |  GROUP BY event_type ORDER BY event_type;
+             |END""".stripMargin)
+      }),
 
     // LATERAL CORRELATED SUBQUERY (r12) — the per-row-subquery surface
     // (SQL:1999 LATERAL): for each qualifying order, the top-2
@@ -1082,28 +1078,18 @@ object RelationalQueries extends QueryModule {
             $"o_orderpriority", $"o_totalprice")
         val schema = slice.schema
         val formats = Seq("csv", "json", "orc", "xml")
-        // The four format writes are INDEPENDENT jobs — submit them
-        // from a small pool so each write's task tail back-fills the
-        // others' idle cores (guide §2.6 overlap; the XML render is
-        // ~2x the others, so sequential writes left most of the
-        // session idle for half the query). Reads need no such help:
-        // the per-format aggregates union into ONE action below, so
-        // their scans already share a job. Job groups/descriptions
-        // are thread-local, so concurrent writes stay attributable.
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(formats.size)
-        try {
-          formats.map { f =>
-            pool.submit(new Runnable {
-              override def run(): Unit = {
-                val w = slice.write.mode("overwrite").format(f)
-                (if (f == "xml") w.option("rowTag", "order")
-                 else if (f == "csv") w.option("header", "true")
-                 else w).save(s"$stage/$f")
-              }
-            })
-          }.foreach(_.get())
-        } finally pool.shutdown()
+        // The four format writes are INDEPENDENT jobs — overlap them
+        // so each write's task tail back-fills the others' idle cores
+        // (the XML render is ~2x the others, so sequential writes left
+        // most of the session idle for half the query). Reads need no
+        // such help: the per-format aggregates union into ONE action
+        // below, so their scans already share a job.
+        graft.sources.GraftSession.overlap(formats.map { f => () =>
+          val w = slice.write.mode("overwrite").format(f)
+          (if (f == "xml") w.option("rowTag", "order")
+           else if (f == "csv") w.option("header", "true")
+           else w).save(s"$stage/$f")
+        }: _*)
         val perFormat = formats.map { f =>
           val r = s.read.format(f).schema(schema)
           val back = (if (f == "xml") r.option("rowTag", "order")

@@ -59,6 +59,78 @@ object GraftSession {
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
 
+  /** Run `body` on a child of `s` that carries the caller's SQL config
+    * plus `settings`. The child (`s.newSession()`) shares the
+    * SparkContext, cached data and extensions but owns its SQLConf,
+    * temp views and streams, so a setting made here is never seen by
+    * another query on `s`, concurrent ones included, and nothing needs
+    * restoring. The caller's query-execution and streaming listeners
+    * are registered on the child too, so what runs there stays visible
+    * to whoever observes `s`. The child is the active session while
+    * `body` runs:
+    * plan statistics resolve their conf through the active session,
+    * not the DataFrame's own. A DataFrame stays bound to the session
+    * that built it, so whatever the settings must govern, a streaming
+    * topology included, has to be built on the session `body` gets. */
+  def scoped[T](s: SparkSession, settings: (String, String)*)(
+      body: SparkSession => T): T = {
+    val child = s.newSession()
+    val inherited = child.conf.getAll
+    (s.conf.getAll.filter { case (k, v) => !inherited.get(k).contains(v) } ++
+      settings).foreach { case (k, v) => child.conf.set(k, v) }
+    org.apache.spark.sql.GraftSessionAccess.queryListeners(s)
+      .foreach(child.listenerManager.register)
+    // Touch the child's streams only when there is a listener to carry
+    // over, and skip the ones every session registers for itself.
+    val streamListeners = s.streams.listListeners()
+    if (streamListeners.nonEmpty) {
+      val own = child.streams.listListeners().toSet
+      streamListeners.filterNot(own).foreach(child.streams.addListener)
+    }
+    val prev = SparkSession.getActiveSession
+    SparkSession.setActiveSession(child)
+    try body(child)
+    finally prev match {
+      case Some(p) => SparkSession.setActiveSession(p)
+      case None    => SparkSession.clearActiveSession()
+    }
+  }
+
+  /** Run independent tasks concurrently, one fresh thread each, and
+    * return their results in task order. Every task is joined before
+    * this returns, so no thread outlives the call; the first failure in
+    * task order is then rethrown. A thread created by the caller
+    * inherits its Spark local properties (job group, description,
+    * scheduler pool) and active session, so the tasks' jobs stay
+    * attributed to the calling query — the reason these are fresh
+    * threads rather than a reused pool. */
+  def overlap[T](tasks: (() => T)*): Seq[T] = {
+    val running = tasks.map(t => async(t()))
+    running.foreach(_.await())
+    running.map(_.get())
+  }
+
+  /** Start `body` now on a fresh thread, as one [[overlap]] task, and
+    * return the handle that joins it. */
+  def async[T](body: => T): Running[T] = new Running(() => body)
+
+  /** A task started by [[async]]. */
+  final class Running[T] private[GraftSession] (body: () => T) {
+    private var outcome: Either[Throwable, T] = _
+    private val thread = new Thread(() =>
+      outcome = try Right(body()) catch { case e: Throwable => Left(e) },
+      "graft-overlap")
+    // A task whose caller failed before joining it must not hold the
+    // JVM open.
+    thread.setDaemon(true)
+    thread.start()
+
+    private[GraftSession] def await(): Unit = thread.join()
+
+    /** Wait for the task; its result, or its failure rethrown. */
+    def get(): T = { await(); outcome.fold(e => throw e, identity) }
+  }
+
   /** Silence WindowExec's "No Partition Defined" warning — HARNESS
     * MAINS ONLY (Verify/Bench call this; the library itself never
     * does, so consumers keep the canary). The suite contains exactly
@@ -77,16 +149,6 @@ object GraftSession {
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
 
-  /** Where this build's graft classes live (sbt runs from a classes
-    * directory, not a jar, so local-cluster dev smoke runs must ship it
-    * to executor JVMs explicitly). Derived from the loaded class's own
-    * code source so the path tracks wherever the repo is checked out;
-    * `SPARK_GRAFT_CLASSPATH` overrides for exotic layouts — and is
-    * REQUIRED under a classloader that reports no code source (some
-    * app-container loaders return null there). Resolution goes through
-    * `toURI`/`Paths.get`, not `URL.getPath`, so a checkout path with
-    * spaces (percent-encoded in the URL) still yields a usable
-    * filesystem path. */
   /** Staging root for operators that WRITE a dataset mid-query and
     * read it back through executors (mm_ingest's `binaryFile` media
     * tree, rel_bucketed_join's bucketed warehouse). Default: a
@@ -114,6 +176,16 @@ object GraftSession {
       case None => java.nio.file.Files.createTempDirectory(tag)
     }
 
+  /** Where this build's graft classes live (sbt runs from a classes
+    * directory, not a jar, so local-cluster dev smoke runs must ship it
+    * to executor JVMs explicitly). Derived from the loaded class's own
+    * code source so the path tracks wherever the repo is checked out;
+    * `SPARK_GRAFT_CLASSPATH` overrides for exotic layouts — and is
+    * REQUIRED under a classloader that reports no code source (some
+    * app-container loaders return null there). Resolution goes through
+    * `toURI`/`Paths.get`, not `URL.getPath`, so a checkout path with
+    * spaces (percent-encoded in the URL) still yields a usable
+    * filesystem path. */
   def classesDir: String = sys.env.get("SPARK_GRAFT_CLASSPATH")
     .orElse(
       Option(GraftSession.getClass.getProtectionDomain.getCodeSource)

@@ -208,9 +208,10 @@ object EventStreams {
     * dropped. A 3-slice version (0,2,1) drops NOTHING — measured, and
     * exactly what the two-watermark model predicts. Every slice must
     * be non-empty or the scenario degenerates — staging fails loudly
-    * rather than silently testing nothing. */
+    * rather than silently testing nothing. Staged on `spark`; `f` gets
+    * the scan as a builder, like [[withSplitEvents]]. */
   def withLateEvents[T](spark: SparkSession, dir: String)(
-      f: (DataFrame, Int) => T): T = {
+      f: (SparkSession => DataFrame, Int) => T): T = {
     val staged = splitCache.computeIfAbsent((dir + "#late", 4, false), _ => {
       val tmp = tempDir("graft_ev_latestage_")
       try {
@@ -218,7 +219,7 @@ object EventStreams {
         tmp -> cnt
       } catch { case e: Throwable => deleteTree(tmp); throw e }
     })
-    f(scanStaged(spark, staged._1.resolve("src")), staged._2)
+    f(scanStaged(_, staged._1.resolve("src")), staged._2)
   }
 
   /** [[stageSplit]]'s slice math with delivery ranks 0,3,2,1. Both the
@@ -277,7 +278,11 @@ object EventStreams {
     * deleted eagerly and never cached. Keys are few by construction
     * (every caller uses n=3, redeliver ∈ {t,f}, one sfDir per run).
     *
-    * `filesPerTrigger` (r21): batch up to that many staged files per
+    * The staging runs on `spark`; `f` gets the streaming scan as a
+    * builder, so a drain can build it on its own scoped session (see
+    * [[drainAppend]]).
+    *
+    * `filesPerTrigger`: batch up to that many staged files per
     * micro-batch — the staggered redeliver layout keeps every copy in
     * a later batch than its original at 2 files per trigger, so the
     * redeliver drains exercise the same cross-batch at-least-once
@@ -286,7 +291,7 @@ object EventStreams {
     * The expected-data-batch count passed to `f` scales accordingly. */
   def withSplitEvents[T](spark: SparkSession, dir: String, n: Int,
       redeliver: Boolean = false, filesPerTrigger: Int = 1)(
-      f: (DataFrame, Int) => T): T = {
+      f: (SparkSession => DataFrame, Int) => T): T = {
     val staged = splitCache.computeIfAbsent((dir, n, redeliver), _ => {
       val tmp = tempDir("graft_ev_split_")
       try {
@@ -296,7 +301,7 @@ object EventStreams {
     })
     val expectedBatches =
       (staged._2 + filesPerTrigger - 1) / filesPerTrigger
-    f(scanStaged(spark, staged._1.resolve("src"), filesPerTrigger),
+    f(scanStaged(_, staged._1.resolve("src"), filesPerTrigger),
       expectedBatches)
   }
 
@@ -600,23 +605,21 @@ object EventStreams {
       // drains; all of file 2's event times sit at/above the cut, hence
       // above drain 1's watermark — nothing arrives late by design.
       val cut = ((tmin + (tmax - tmin) * 3 / 5) / hourUs) * hourUs + hourUs / 2
-      val stream = spark.readStream.schema(schema).parquet(src.toString)
-        .withColumn("ts_utc", col("ts").cast("timestamp"))
-      val agg = hourlyCounts(stream)
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "2")
-      val (got1, n1, got2, n2) =
-        try {
+      val (got1, n1, got2, n2, aggSchema) =
+        graft.sources.GraftSession.scoped(spark, stateConf(2): _*) { c =>
+          val agg = hourlyCounts(
+            c.readStream.schema(schema).parquet(src.toString)
+              .withColumn("ts_utc", col("ts").cast("timestamp")))
           val n1 = stageSourceFile(tmp, src,
             raw.where(col("ts_us") < cut).drop("ts_us"), "t0.parquet")
-          val got1 = checkpointedDrain(spark, agg, tmp)
+          val got1 = checkpointedDrain(c, agg, tmp)
           val n2 = stageSourceFile(tmp, src,
             raw.where(col("ts_us") >= cut).drop("ts_us"), "t1.parquet")
-          val got2 = checkpointedDrain(spark, agg, tmp)
-          (got1, n1, got2, n2)
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+          val got2 = checkpointedDrain(c, agg, tmp)
+          (got1, n1, got2, n2, agg.schema)
+        }
       assertIncremental(got1, n1, got2, n2)
-      loadAndClean(spark, tmp, agg.schema)
+      loadAndClean(spark, tmp, aggSchema)
     } catch { case e: Throwable => deleteTree(tmp); throw e }
   }
 
@@ -896,46 +899,42 @@ object EventStreams {
       // commits below (the pipe_table_spj_days overlap pattern:
       // disjoint table roots, VersionedTable holds no shared mutable
       // statics); joined before the stream needs either table.
-      val bootPool = java.util.concurrent.Executors.newFixedThreadPool(1)
-      val boot = bootPool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = VersionedTable.commit(spark, sinkTable, 0L,
+      val boot = graft.sources.GraftSession.async(
+        VersionedTable.commit(spark, sinkTable, 0L,
           ev.limit(0).selectExpr("ts_us AS hour_us", "event_type",
             "CAST(0 AS BIGINT) AS n", "CAST(0.0 AS DOUBLE) AS total_value")
-            .coalesce(1))
-      })
-      bootPool.shutdown()
+            .coalesce(1)))
       VersionedTable.commit(spark, srcTable, 0L, slice(0))
       VersionedTable.appendCommit(spark, srcTable, slice(1))
       VersionedTable.appendCommit(spark, srcTable, slice(2))
       boot.get()
-      val agg = spark.readStream.format("graft-changes")
-        .load(srcTable.toString)
-        .withColumn("ts_utc", expr("timestamp_micros(ts_us)"))
-        .withWatermark("ts_utc", "2 hours")
-        .groupBy(window(col("ts_utc"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,2)")).cast("double")
-            .as("total_value"))
-        .selectExpr("unix_micros(w.start) AS hour_us", "event_type",
-          "n", "total_value")
-      // Same reduced state-partition override as drainAppend (r21):
-      // this drain previously inherited the session's 32 shuffle
-      // partitions, so every micro-batch committed 32 state stores
-      // (and the sink received 32-way epoch writes) for an
-      // hours×types-sized aggregate — JobProfile billed each batch
-      // ~0.8-1.2 s of per-partition state machinery. Hour-grain
-      // aggregate state is small at any corpus scale; a production
-      // deployment sizes this off its key cardinality, not its core
-      // count.
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "2")
+      // The same reduced state partitions as drainAppend: with the
+      // session's full count every micro-batch committed that many
+      // state stores (and the sink received as many epoch writes) for
+      // an hours×types-sized aggregate — about 0.8-1.2 s of
+      // per-partition state machinery per batch at 32 partitions.
+      // Hour-grain aggregate state is small at any corpus scale; a
+      // production deployment sizes this off its key cardinality, not
+      // its core count.
       val batches =
-        try awaitCounted(spark,
-          agg.writeStream.format("graft-table")
-            .option("checkpointLocation", tmp.resolve("ckpt").toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start(sinkTable.toString))._2
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+        graft.sources.GraftSession.scoped(spark, stateConf(2): _*) { c =>
+          awaitCounted(c,
+            c.readStream.format("graft-changes")
+              .load(srcTable.toString)
+              .withColumn("ts_utc", expr("timestamp_micros(ts_us)"))
+              .withWatermark("ts_utc", "2 hours")
+              .groupBy(window(col("ts_utc"), "1 hour").as("w"),
+                col("event_type"))
+              .agg(count(lit(1)).as("n"),
+                sum(col("value").cast("decimal(18,2)")).cast("double")
+                  .as("total_value"))
+              .selectExpr("unix_micros(w.start) AS hour_us", "event_type",
+                "n", "total_value")
+              .writeStream.format("graft-table")
+              .option("checkpointLocation", tmp.resolve("ckpt").toString)
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+              .start(sinkTable.toString))._2
+        }
       assertBatches(batches, 3) // one micro-batch per source commit
       require(VersionedTable.versions(sinkTable).size >= 3,
         "pipelineDrain: emitting epochs must land as their own atomic " +
@@ -969,7 +968,7 @@ object EventStreams {
     try {
       val sinkTable = tmp.resolve("sink")
       withSplitEvents(spark, dir, 3) { (src, nf) =>
-        val shaped = src.selectExpr("event_id", "event_type",
+        val shaped = src(spark).selectExpr("event_id", "event_type",
           "unix_micros(CAST(ts AS TIMESTAMP)) AS ts_us",
           "CAST(value AS DOUBLE) AS value")
         // Bootstrap pins the schema AND declares the layout before any
@@ -1053,14 +1052,9 @@ object EventStreams {
     * served zero rows for, e.g. a KIND=compact skip). */
   private def checkpointedDrainCounted(spark: SparkSession, df: DataFrame,
       tmp: java.nio.file.Path): (Long, Int, Int) =
-    awaitCounted(spark,
-      df.writeStream
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
+    awaitCounted(spark, appendSink(df, tmp)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start())
 
   /** Per-run progress accumulator. Counting via a listener — NOT
     * `q.recentProgress` — because the retained progress array is capped
@@ -1094,9 +1088,8 @@ object EventStreams {
     * every numeric field of the named observation across micro-batches
     * (`observe()` emits one metrics row per batch; no-data batches may
     * emit none — absence is simply not added). Not keyed by runId: the
-    * listener lives only for one drain and the drain helpers are
-    * SEQUENTIAL-ONLY by contract, so exactly one run reports while it
-    * is registered. */
+    * listener is registered on the drain's own child session, whose
+    * only query is that drain, so exactly one run reports to it. */
   private final class ObservedSums(obsName: String)
       extends org.apache.spark.sql.streaming.StreamingQueryListener {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -1122,8 +1115,8 @@ object EventStreams {
   }
 
   /** Accumulates `numRowsDroppedByWatermark` across a run's stateful
-    * operators and micro-batches. Same lifetime/sequentiality contract
-    * as [[ObservedSums]]. */
+    * operators and micro-batches. Same one-drain lifetime as
+    * [[ObservedSums]]. */
   private final class DroppedCounter
       extends org.apache.spark.sql.streaming.StreamingQueryListener {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -1143,30 +1136,12 @@ object EventStreams {
     * a StreamingSpec boundary test (a row whose window end equals the
     * watermark exactly IS dropped), the mirror of the append-emission
     * horizon's `<=`. */
-  def drainAppendDropCounted(df: DataFrame, tag: String,
-      statePartitions: Int = 2, minBatches: Int = 0): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    recordProvider(tag, rocksdb = false)
+  def drainAppendDropCounted(spark: SparkSession, tag: String,
+      statePartitions: Int = 2, minBatches: Int = 0)(
+      topology: SparkSession => DataFrame): (DataFrame, Long) = {
     val acc = new DroppedCounter
-    spark.streams.addListener(acc)
-    val tmp = tempDir(tag)
-    try {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      val batches =
-        try awaitCounted(spark,
-          df.writeStream
-            .format("parquet")
-            .option("path", s"$tmp/out")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode(OutputMode.Append)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())._2
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-      assertBatches(batches, minBatches)
-    } catch { case e: Throwable => deleteTree(tmp); throw e }
-    finally spark.streams.removeListener(acc)
-    (loadAndClean(spark, tmp, df.schema), acc.dropped.get)
+    (scopedDrain(spark, tag, statePartitions, minBatches)(topology)(
+      appendNow(acc)), acc.dropped.get)
   }
 
   /** [[drainAppend]] plus the OBSERVABILITY path: the caller passes a
@@ -1177,32 +1152,14 @@ object EventStreams {
     * a second scan: CollectMetrics rides the existing plan as a
     * zero-shuffle accumulator, and the listener is push-based (no
     * `recentProgress` cap — same rationale as [[DrainCounter]]). */
-  def drainAppendObserved(df: DataFrame, tag: String, obsName: String,
-      statePartitions: Int = 2, minBatches: Int = 0): (DataFrame, Map[String, Long]) = {
-    val spark = df.sparkSession
-    recordProvider(tag, rocksdb = false)
+  def drainAppendObserved(spark: SparkSession, tag: String, obsName: String,
+      statePartitions: Int = 2, minBatches: Int = 0)(
+      topology: SparkSession => DataFrame): (DataFrame, Map[String, Long]) = {
     val acc = new ObservedSums(obsName)
-    spark.streams.addListener(acc)
-    val tmp = tempDir(tag)
-    try {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      val batches =
-        try awaitCounted(spark,
-          df.writeStream
-            .format("parquet")
-            .option("path", s"$tmp/out")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode(OutputMode.Append)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())._2
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-      assertBatches(batches, minBatches)
-    } catch { case e: Throwable => deleteTree(tmp); throw e }
-    finally spark.streams.removeListener(acc)
+    val out = scopedDrain(spark, tag, statePartitions, minBatches)(topology)(
+      appendNow(acc))
     import scala.jdk.CollectionConverters._
-    (loadAndClean(spark, tmp, df.schema),
-      acc.sums.asScala.map { case (k, v) => k -> v.longValue }.toMap)
+    (out, acc.sums.asScala.map { case (k, v) => k -> v.longValue }.toMap)
   }
 
   /** Block until the (AvailableNow) query self-terminates and return
@@ -1211,12 +1168,15 @@ object EventStreams {
     * emit what the final watermark closed. Listener events are async:
     * after `awaitTermination` the method waits for the run's terminated
     * event so every progress update has been delivered before the
-    * counts are read. */
+    * counts are read — to the `extra` listeners too, which are
+    * registered beside the counter for the run. */
   private def awaitCounted(spark: SparkSession,
-      start: => org.apache.spark.sql.streaming.StreamingQuery)
+      start: => org.apache.spark.sql.streaming.StreamingQuery,
+      extra: Seq[org.apache.spark.sql.streaming.StreamingQueryListener] = Nil)
       : (Long, Int, Int) = {
     val counter = new DrainCounter
-    spark.streams.addListener(counter)
+    val listeners = counter +: extra
+    listeners.foreach(spark.streams.addListener)
     try {
       val q = start
       if (!q.awaitTermination(600000L)) q.stop()
@@ -1227,7 +1187,7 @@ object EventStreams {
       (Option(counter.rows.get(run)).map(_.longValue).getOrElse(0L),
         Option(counter.dataBatches.get(run)).map(_.intValue).getOrElse(0),
         Option(counter.emptyBatches.get(run)).map(_.intValue).getOrElse(0))
-    } finally spark.streams.removeListener(counter)
+    } finally listeners.foreach(spark.streams.removeListener)
   }
 
   /** Processing-time-trigger counterpart of [[awaitCounted]]: a
@@ -1313,6 +1273,11 @@ object EventStreams {
     * makes each call a full drain. Used by the driver-facing
     * `ev_stream_*` queries.
     *
+    * `topology` builds the streaming query, source included, on the
+    * session it is given: a child of `spark` scoped to the drain's
+    * [[stateConf]], so the reduced state-partition count never reaches
+    * another query on `spark`. The result is read back on `spark`.
+    *
     * The drain runs with a reduced shuffle-partition count (default 2):
     * every stateful operator commits one state-store delta per
     * partition per micro-batch — a per-partition CONSTANT that
@@ -1321,17 +1286,9 @@ object EventStreams {
     * of state; 8→2 cut the stream-stream drains ~25%). Callers whose
     * state is per-ROW sized pass a higher count (see ev_stream_dedup);
     * on a real cluster pass the session's own setting — state
-    * parallelism should match executor cores there. The override is
-    * restored after the drain; a checkpoint pins its partition count in
-    * its own metadata, so resuming is unaffected by the restore.
-    *
-    * SEQUENTIAL-ONLY assumption: the shuffle-partition override is a
-    * session-global conf — any query PLANNED on the same SparkSession
-    * while a drain is in flight would silently plan with the reduced
-    * count. Verify and Bench run queries strictly one at a time, which
-    * is what makes this safe; a caller that parallelizes queries must
-    * give each drain its own SparkSession (`spark.newSession()` shares
-    * the context but isolates the conf) or drop the override.
+    * parallelism should match executor cores there. A checkpoint pins
+    * its partition count in its own metadata, so a resumed query keeps
+    * the count it started with.
     *
     * `minBatches > 0` hard-asserts the drain consumed at least that
     * many DATA micro-batches (pair with [[splitEventsSource]]'s staged
@@ -1341,33 +1298,52 @@ object EventStreams {
     * expiry the query is stopped and whatever the sink holds is
     * returned (a partial result fails the oracle compare loudly instead
     * of blocking it silently). */
-  def drainAppend(df: DataFrame, tag: String, statePartitions: Int = 2,
-      minBatches: Int = 0, rocksdb: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
+  def drainAppend(spark: SparkSession, tag: String, statePartitions: Int = 2,
+      minBatches: Int = 0, rocksdb: Boolean = false)(
+      topology: SparkSession => DataFrame): DataFrame =
+    scopedDrain(spark, tag, statePartitions, minBatches, rocksdb)(topology)(
+      appendNow())
+
+  /** What every settings-scoped drain shares: a scratch tree, the
+    * topology built on a child of `spark` scoped to [[stateConf]], `run`
+    * starting the query and returning its data-batch count, the
+    * `minBatches` witness, and the sink read back on `spark`. */
+  private def scopedDrain(spark: SparkSession, tag: String,
+      statePartitions: Int, minBatches: Int, rocksdb: Boolean = false)(
+      topology: SparkSession => DataFrame)(
+      run: (SparkSession, DataFrame, java.nio.file.Path) => Int): DataFrame = {
     recordProvider(tag, rocksdb)
     val tmp = tempDir(tag)
     // Any failure from here on (drain error OR a failed batch-count
     // assert) must not leak the checkpoint/out tree — loadAndClean is
     // otherwise the only cleanup path.
-    try {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      val batches =
-        try withStateProvider(spark, rocksdb) {
-          awaitCounted(spark,
-            df.writeStream
-              .format("parquet")
-              .option("path", s"$tmp/out")
-              .option("checkpointLocation", s"$tmp/ckpt")
-              .outputMode(OutputMode.Append)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start())._2
-        }
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-      assertBatches(batches, minBatches)
-    } catch { case e: Throwable => deleteTree(tmp); throw e }
-    loadAndClean(spark, tmp, df.schema)
+    val schema =
+      try graft.sources.GraftSession.scoped(spark,
+          stateConf(statePartitions, rocksdb): _*) { c =>
+        val df = topology(c)
+        assertBatches(run(c, df, tmp), minBatches)
+        df.schema
+      } catch { case e: Throwable => deleteTree(tmp); throw e }
+    loadAndClean(spark, tmp, schema)
   }
+
+  /** One AvailableNow run of `df` into [[appendSink]], with `extra`
+    * listeners on the run; its data-batch count. */
+  private def appendNow(
+      extra: org.apache.spark.sql.streaming.StreamingQueryListener*)(
+      c: SparkSession, df: DataFrame, tmp: java.nio.file.Path): Int =
+    awaitCounted(c, appendSink(df, tmp)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start(), extra)._2
+
+  /** `df` into the append-mode parquet sink `$tmp/out`, checkpointed at
+    * `$tmp/ckpt`. */
+  private def appendSink(df: DataFrame, tmp: java.nio.file.Path) =
+    df.writeStream
+      .format("parquet")
+      .option("path", s"$tmp/out")
+      .option("checkpointLocation", s"$tmp/ckpt")
+      .outputMode(OutputMode.Append)
 
   /** [[drainAppend]] under a `Trigger.ProcessingTime` clock — the
     * resident-cluster shape (a standing query whose micro-batches fire
@@ -1381,77 +1357,48 @@ object EventStreams {
     * query ([[awaitQuiescent]]). The short interval only sets tick
     * granularity at fixture scale; a production deployment picks the
     * latency/cost point (seconds to minutes), the semantics are
-    * interval-independent. Same shuffle-partition override, minBatches
+    * interval-independent. Same scoped state partitions, minBatches
     * witness and temp-tree hygiene as drainAppend. */
-  def drainProcessingTime(df: DataFrame, tag: String,
+  def drainProcessingTime(spark: SparkSession, tag: String,
       statePartitions: Int = 2, minBatches: Int = 0,
-      intervalMs: Long = 100): DataFrame = {
-    val spark = df.sparkSession
-    recordProvider(tag, rocksdb = false)
-    val tmp = tempDir(tag)
-    try {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      val batches =
-        try awaitQuiescent(spark,
-          df.writeStream
-            .format("parquet")
-            .option("path", s"$tmp/out")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode(OutputMode.Append)
-            .trigger(org.apache.spark.sql.streaming.Trigger
-              .ProcessingTime(intervalMs, java.util.concurrent.TimeUnit.MILLISECONDS))
-            .start())
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-      assertBatches(batches, minBatches)
-    } catch { case e: Throwable => deleteTree(tmp); throw e }
-    loadAndClean(spark, tmp, df.schema)
-  }
+      intervalMs: Long = 100)(
+      topology: SparkSession => DataFrame): DataFrame =
+    scopedDrain(spark, tag, statePartitions, minBatches)(topology) {
+      (c, df, tmp) =>
+        awaitQuiescent(c, appendSink(df, tmp)
+          .trigger(org.apache.spark.sql.streaming.Trigger
+            .ProcessingTime(intervalMs, java.util.concurrent.TimeUnit.MILLISECONDS))
+          .start())
+    }
 
-  /** Run `body` with the session's state-store provider switched to
-    * RocksDB, restoring the previous setting after (same
-    * SEQUENTIAL-ONLY caveat as the shuffle-partition override — the
-    * conf is session-global and read at query START, then pinned in
-    * the checkpoint's own metadata for the query's lifetime).
+  /** The session settings a drain's stateful operators run under:
+    * `statePartitions` shuffle partitions and, with `rocksdb`, the
+    * RocksDB state store. Read when a query starts, then pinned in its
+    * checkpoint's own metadata for the query's lifetime.
     *
     * RocksDB is the at-100-TB state store choice: state lives off the
     * executor HEAP in native memory + local SST files instead of as a
     * JVM object map (HDFSBackedStateStore), so data-sized state (e.g.
     * one entry per event id in a dedup horizon) neither bloats GC nor
     * caps at executor memory, and commits upload changelogs rather
-    * than full snapshots. Pure configuration — no query change. */
-  private def withStateProvider[T](spark: SparkSession, rocksdb: Boolean)(
-      body: => T): T =
-    if (!rocksdb) body
-    else {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      // CHANGELOG CHECKPOINTING (r20, VERDICT r19 #6): commit each
-      // micro-batch's state CHANGELOG instead of a full RocksDB
-      // snapshot — for data-sized state (the dedup key set) the
-      // full-snapshot upload is the dominant per-batch cost, and the
-      // changelog is O(batch) where the snapshot is O(state).
-      // Snapshots still happen, just asynchronously every N commits
-      // (Spark's maintenance interval). Pure durability-strategy knob:
-      // same state semantics, same oracle.
-      val clKey = "spark.sql.streaming.stateStore.rocksdb" +
-        ".changelogCheckpointing.enabled"
-      val prev = spark.conf.getOption(key)
-      val prevCl = spark.conf.getOption(clKey)
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(clKey, "true")
-      try body
-      finally {
-        prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None    => spark.conf.unset(key)
-        }
-        prevCl match {
-          case Some(v) => spark.conf.set(clKey, v)
-          case None    => spark.conf.unset(clKey)
-        }
-      }
-    }
+    * than full snapshots. Pure configuration — no query change.
+    *
+    * With it comes CHANGELOG CHECKPOINTING: commit each micro-batch's
+    * state changelog instead of a full RocksDB snapshot — for
+    * data-sized state (the dedup key set) the full-snapshot upload is
+    * the dominant per-batch cost, and the changelog is O(batch) where
+    * the snapshot is O(state). Snapshots still happen, just
+    * asynchronously every N commits (Spark's maintenance interval).
+    * Same state semantics, same oracle. */
+  private def stateConf(statePartitions: Int,
+      rocksdb: Boolean = false): Seq[(String, String)] =
+    ("spark.sql.shuffle.partitions" -> statePartitions.toString) +: (
+      if (!rocksdb) Nil
+      else Seq(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb" +
+          ".changelogCheckpointing.enabled" -> "true"))
 
   /** Update-mode counterpart of [[drainAppend]]: a files sink can't
     * take update-mode output directly, so each micro-batch's refreshed
@@ -1459,34 +1406,23 @@ object EventStreams {
     * changelog-to-files pattern — and the caller compacts the read-back
     * changelog to its final row per key (each key's emissions carry a
     * monotonically growing counter, so max-over-struct picks the
-    * newest). Same reduced state-partition override (and the same
-    * SEQUENTIAL-ONLY assumption — see drainAppend), capped wait,
-    * `minBatches` witness and temp-tree cleanup as drainAppend. */
-  def drainUpdate(df: DataFrame, tag: String, statePartitions: Int = 2,
-      minBatches: Int = 0, rocksdb: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    recordProvider(tag, rocksdb)
-    val tmp = tempDir(tag)
-    try {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      val batches =
-        try withStateProvider(spark, rocksdb) {
-          awaitCounted(spark,
-            df.writeStream
-              .outputMode(OutputMode.Update)
-              .option("checkpointLocation", s"$tmp/ckpt")
-              .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-                batch.write.mode("append").parquet(s"$tmp/out"); ()
-              }
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start())._2
-        }
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-      assertBatches(batches, minBatches)
-    } catch { case e: Throwable => deleteTree(tmp); throw e }
-    loadAndClean(spark, tmp, df.schema)
-  }
+    * newest). Same scoped state settings, capped wait, `minBatches`
+    * witness and temp-tree cleanup as drainAppend. */
+  def drainUpdate(spark: SparkSession, tag: String, statePartitions: Int = 2,
+      minBatches: Int = 0, rocksdb: Boolean = false)(
+      topology: SparkSession => DataFrame): DataFrame =
+    scopedDrain(spark, tag, statePartitions, minBatches, rocksdb)(topology) {
+      (c, df, tmp) =>
+        awaitCounted(c,
+          df.writeStream
+            .outputMode(OutputMode.Update)
+            .option("checkpointLocation", s"$tmp/ckpt")
+            .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+              batch.write.mode("append").parquet(s"$tmp/out"); ()
+            }
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start())._2
+    }
 
   /** MERGE-INTO-TARGET counterpart of [[drainUpdate]] (r11): where
     * drainUpdate lands a CHANGELOG (per-batch refreshed rows appended,
@@ -1511,17 +1447,16 @@ object EventStreams {
     *
     * Input contract: `df` = `keyCols` plus one struct column `m` whose
     * field-lexicographic max is latest-wins (ts first). */
-  def drainMergeTarget(df: DataFrame, tag: String, keyCols: Seq[String],
-      minBatches: Int = 0): DataFrame = {
-    val spark = df.sparkSession
+  def drainMergeTarget(spark: SparkSession, tag: String, keyCols: Seq[String],
+      minBatches: Int = 0)(topology: SparkSession => DataFrame): DataFrame = {
     val tmp = tempDir(tag)
     val keyExprs = keyCols.map(col)
     val current = new java.util.concurrent.atomic.AtomicReference[String](null)
     try {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "2")
-      val batches =
-        try awaitCounted(spark,
+      val schema = graft.sources.GraftSession.scoped(spark,
+          stateConf(2): _*) { c =>
+        val df = topology(c)
+        assertBatches(awaitCounted(c,
           df.writeStream
             .outputMode(OutputMode.Append)
             .option("checkpointLocation", s"$tmp/ckpt")
@@ -1530,12 +1465,12 @@ object EventStreams {
                 val out = s"$tmp/target_$bid"
                 val done = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
                 val fs = done.getFileSystem(
-                  spark.sparkContext.hadoopConfiguration)
+                  c.sparkContext.hadoopConfiguration)
                 if (!fs.exists(done)) {
                   val delta = batch
                     .groupBy(keyExprs: _*).agg(max(col("m")).as("m"))
                   val merged = Option(current.get) match {
-                    case Some(p) => spark.read.parquet(p)
+                    case Some(p) => c.read.parquet(p)
                       .unionByName(delta)
                       .groupBy(keyExprs: _*).agg(max(col("m")).as("m"))
                     case None => delta
@@ -1546,9 +1481,9 @@ object EventStreams {
                 ()
             }
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())._2
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-      assertBatches(batches, minBatches)
+            .start())._2, minBatches)
+        df.schema
+      }
       Option(current.get) match {
         case Some(p) =>
           // Same driver-side read-back contract as loadAndClean: the
@@ -1557,7 +1492,7 @@ object EventStreams {
           spark.createDataFrame(
             java.util.Arrays.asList(raw.collect(): _*), raw.schema)
         case None => spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)
+          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
       }
     } finally deleteTree(tmp)
   }

@@ -17,28 +17,29 @@ object DrainProfile {
     import spark.implicits._
     // warm both batch and streaming paths
     spark.range(10000).groupBy($"id" % 7).count().count()
-    val warmEv = graft.streaming.EventStreams.fromParquetDir(spark, sfDir)
-    graft.streaming.EventStreams.drainAppend(
-      graft.streaming.EventStreams.hourlyCounts(warmEv), "warm_", parts).count()
+    graft.streaming.EventStreams.drainAppend(spark, "warm_", parts)(c =>
+      graft.streaming.EventStreams.hourlyCounts(
+        graft.streaming.EventStreams.fromParquetDir(c, sfDir))).count()
 
-    def profile(tag: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      // Same scratch resolution as the harness drains (ADVICE r8: a
-      // profiler placing its sink/ckpt on disk-backed java.io.tmpdir
-      // while the harness runs tmpfs measures a constant the harness
-      // doesn't pay). SPARK_GRAFT_SCRATCH stays the disk-vs-tmpfs A/B
-      // lever for both.
+    def profile(tag: String,
+        topology: SparkSession => org.apache.spark.sql.DataFrame): Unit = {
+      // Same scratch resolution as the harness drains (a profiler
+      // placing its sink/ckpt on disk-backed java.io.tmpdir while the
+      // harness runs tmpfs measures a constant the harness doesn't
+      // pay). SPARK_GRAFT_SCRATCH stays the disk-vs-tmpfs A/B lever for
+      // both.
       val tmp = graft.streaming.EventStreams.tempDir("prof_")
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
       val t0 = System.nanoTime()
-      val q = df.writeStream.format("parquet")
-        .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q = graft.sources.GraftSession.scoped(spark,
+          "spark.sql.shuffle.partitions" -> parts.toString) { c =>
+        topology(c).writeStream.format("parquet")
+          .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ckpt")
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+      }
       q.awaitTermination(600000L)
       val total = (System.nanoTime() - t0) / 1e9
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
       println(f"[prof] $tag parts=$parts total=$total%.2f s, batches=${q.recentProgress.length}")
       q.recentProgress.foreach { p =>
         val d = p.durationMs
@@ -47,21 +48,22 @@ object DrainProfile {
       }
       graft.streaming.EventStreams.deleteTree(tmp)
     }
-    val ev = graft.streaming.EventStreams.fromParquetDir(spark, sfDir)
-    profile("hourly/1batch", graft.streaming.EventStreams.hourlyCounts(ev))
-    val ev2 = graft.streaming.EventStreams.fromParquetDir(spark, sfDir)
-    profile("funnel/1batch", graft.streaming.EventStreams.attributePurchases(
-      ev2.where($"event_type" === "click"),
-      ev2.where($"event_type" === "purchase"), "left_outer"))
-    // The shapes the driver-facing queries actually run since r7:
+    def funnel(ev: org.apache.spark.sql.DataFrame) =
+      graft.streaming.EventStreams.attributePurchases(
+        ev.where($"event_type" === "click"),
+        ev.where($"event_type" === "purchase"), "left_outer")
+    profile("hourly/1batch", c => graft.streaming.EventStreams.hourlyCounts(
+      graft.streaming.EventStreams.fromParquetDir(c, sfDir)))
+    profile("funnel/1batch",
+      c => funnel(graft.streaming.EventStreams.fromParquetDir(c, sfDir)))
+    // The shapes the driver-facing queries actually run:
     // 3 event-time-contiguous staged files, one micro-batch per file.
     graft.streaming.EventStreams.withSplitEvents(spark, sfDir, 3) { (src, _) =>
-      profile("hourly/split3", graft.streaming.EventStreams.hourlyCounts(src))
+      profile("hourly/split3",
+        c => graft.streaming.EventStreams.hourlyCounts(src(c)))
     }
     graft.streaming.EventStreams.withSplitEvents(spark, sfDir, 3) { (src, _) =>
-      profile("funnel/split3", graft.streaming.EventStreams.attributePurchases(
-        src.where($"event_type" === "click"),
-        src.where($"event_type" === "purchase"), "left_outer"))
+      profile("funnel/split3", c => funnel(src(c)))
     }
     // Heap vs RocksDB A/B on the EXACT ev_stream_dedup drain shape (the
     // suite's one data-sized state: one id per event in the watermark
@@ -73,10 +75,9 @@ object DrainProfile {
         graft.streaming.EventStreams.withSplitEvents(spark, sfDir, 3,
             redeliver = true) { (src, nf) =>
           val t0 = System.nanoTime()
-          graft.streaming.EventStreams.drainAppend(
-            graft.streaming.EventStreams.dedupEvents(src),
-            "prof_dedup_", statePartitions = 8, minBatches = nf,
-            rocksdb = rocks).count()
+          graft.streaming.EventStreams.drainAppend(spark, "prof_dedup_",
+            statePartitions = 8, minBatches = nf, rocksdb = rocks)(
+            c => graft.streaming.EventStreams.dedupEvents(src(c))).count()
           val t = (System.nanoTime() - t0) / 1e9
           println(f"[prof] dedup/${if (rocks) "rocksdb" else "heap"}/rep$rep total=$t%.2f s")
         }
@@ -93,14 +94,14 @@ object DrainProfile {
         graft.streaming.EventStreams.withSplitEvents(spark, sfDir, 3) {
           (src, nf) =>
             val t0 = System.nanoTime()
-            val evs = src
-              .selectExpr("user_id AS userId",
-                s"${graft.queries.QueryModule.TsUs} AS tsUs",
-                "event_type AS eventType")
-              .as[graft.streaming.Ev]
-            graft.streaming.EventStreams.drainUpdate(
-              graft.streaming.EventStreams.sessionize(evs).toDF(),
-              "prof_sessz_", minBatches = nf, rocksdb = rocks).count()
+            graft.streaming.EventStreams.drainUpdate(spark, "prof_sessz_",
+                minBatches = nf, rocksdb = rocks) { c =>
+              graft.streaming.EventStreams.sessionize(src(c)
+                .selectExpr("user_id AS userId",
+                  s"${graft.queries.QueryModule.TsUs} AS tsUs",
+                  "event_type AS eventType")
+                .as[graft.streaming.Ev]).toDF()
+            }.count()
             val t = (System.nanoTime() - t0) / 1e9
             println(f"[prof] sessionize/${if (rocks) "rocksdb" else "heap"}/rep$rep total=$t%.2f s")
         }

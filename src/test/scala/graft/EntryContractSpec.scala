@@ -91,4 +91,31 @@ class EntryContractSpec extends AnyFunSuite {
     assert(out.isEmpty,
       s"uncast integer aggregates (HUGEINT) or unbindable oracle SQL: $out")
   }
+
+  test("library code scopes session config and overlaps jobs only through GraftSession") {
+    // A conf.set on a shared session is visible to every concurrent
+    // query on it; an ad-hoc pool loses track of its threads. Library
+    // code goes through GraftSession.scoped / overlap instead. The one
+    // exemption is VersionedTable's footer pool: footer IO, no Spark
+    // jobs.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"source root not found under ${root.toAbsolutePath}")
+    val banned = Seq("conf.set(", "conf.unset(", "newFixedThreadPool(")
+    val walk = java.nio.file.Files.walk(root)
+    val files =
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val hits = for {
+      f <- files if f.getFileName.toString != "GraftSession.scala"
+      lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+      (l, i) <- lines.zipWithIndex
+      t = l.trim
+      if !Seq("//", "*", "/*").exists(t.startsWith) && banned.exists(t.contains)
+      if !(t.contains("newFixedThreadPool(") &&
+        lines.slice(i - 2, i).exists(_.contains("footerPool =")))
+    } yield s"$f:${i + 1}: $t"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }

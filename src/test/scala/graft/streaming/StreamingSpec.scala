@@ -4,6 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import scala.jdk.CollectionConverters._
 
 class StreamingSpec extends SparkSpec {
 
@@ -380,13 +381,39 @@ class StreamingSpec extends SparkSpec {
   test("pipeline drain equals the batch hourly rollup and restores the " +
       "session's shuffle partitions (r21 state-partition override)") {
     import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val streamed = graft.SparkEntry.queries("ev_stream_pipeline")(spark, sf0001)
-      .select($"hour_start".cast("string"), $"event_type", $"n",
-        $"total_value")
-      .as[(String, String, Long, Double)].collect().toSet
-    // The override is scoped to the drain: a leak would poison every
-    // later query in a 270-query sweep.
+    // While the drain runs, a second query on the SAME session must
+    // keep seeing the session's own count, both in the conf and in the
+    // shuffle its aggregate plans: the drain's 2 state partitions live
+    // on its scoped child session only.
+    val draining = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val planned = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val watcher = new Thread(() =>
+      while (draining.get()) {
+        seen.add(spark.conf.get("spark.sql.shuffle.partitions"))
+        val plan = spark.range(100).groupBy($"id" % 3).count()
+          .queryExecution.executedPlan match {
+            case a: AdaptiveSparkPlanExec => a.initialPlan
+            case p => p
+          }
+        plan.collect { case e: ShuffleExchangeExec => e.numPartitions }
+          .foreach(planned.add)
+      })
+    watcher.start()
+    val streamed =
+      try graft.SparkEntry.queries("ev_stream_pipeline")(spark, sf0001)
+        .select($"hour_start".cast("string"), $"event_type", $"n",
+          $"total_value")
+        .as[(String, String, Long, Double)].collect().toSet
+      finally { draining.set(false); watcher.join() }
+    assert(seen.asScala == Set(prev),
+      s"a concurrent reader saw the drain's override: $seen")
+    assert(planned.asScala == Set(prev.toInt),
+      s"a concurrent aggregate planned with $planned shuffle partitions, " +
+        s"not the session's $prev")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == prev,
       "pipelineDrain leaked its shuffle-partition override")
     // Oracle shape: horizon-bounded hourly count + exact decimal sum
@@ -476,12 +503,12 @@ class StreamingSpec extends SparkSpec {
   test("observed drain: source audit sums equal the batch table; output unperturbed") {
     import spark.implicits._
     EventStreams.withSplitEvents(spark, sf0001, 3) { (src, nf) =>
-      val audited = src.observe("audit_spec",
-        count(lit(1)).as("rows_seen"),
-        sum(expr("CASE WHEN value IS NULL THEN 1 ELSE 0 END")).as("null_values"))
-      val (out, obs) = EventStreams.drainAppendObserved(
-        EventStreams.hourlyCounts(audited), "graft_spec_obs_",
-        "audit_spec", minBatches = nf)
+      val (out, obs) = EventStreams.drainAppendObserved(spark,
+          "graft_spec_obs_", "audit_spec", minBatches = nf) { c =>
+        EventStreams.hourlyCounts(src(c).observe("audit_spec",
+          count(lit(1)).as("rows_seen"),
+          sum(expr("CASE WHEN value IS NULL THEN 1 ELSE 0 END")).as("null_values")))
+      }
       val ev = graft.sources.Tables.events(spark, sf0001)
       assert(obs("rows_seen") == ev.count(),
         "CollectMetrics missed or double-counted a micro-batch")
