@@ -5,6 +5,10 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType,
+  DataType, DateType, Decimal, DecimalType, DoubleType, FloatType,
+  IntegerType, LongType, NumericType, ShortType, StringType,
+  StructType, TimestampNTZType, TimestampType}
 
 /** Minimal versioned-table commit protocol — the manifest/commit-log
   * layer (the Delta/Iceberg core idea, re-derived from first
@@ -104,8 +108,7 @@ object VersionedTable {
     * honest move is to refuse, not to silently mutate the caller's
     * session mid-commit.) */
   private[graft] def ensureMicrosTimestamps(df: DataFrame): Unit = {
-    import org.apache.spark.sql.types.{ArrayType, DataType, MapType,
-      StructType, TimestampType}
+    import org.apache.spark.sql.types.MapType
     def hasTs(dt: DataType): Boolean = dt match {
       case TimestampType => true
       case st: StructType => st.fields.exists(f => hasTs(f.dataType))
@@ -1935,17 +1938,183 @@ object VersionedTable {
       (p, keyCol, origin.toLong)
     }
 
+  /** The live deletion vectors of one read, resolved on the driver.
+    * `covering` maps each covered data file to the DV files whose
+    * origin scope lists it; a file appended after a delete is covered
+    * by none, so re-inserted keys survive. `keys` holds each DV file's
+    * non-NULL keys, decoded once and held in `keyType` — the data
+    * column's type, in the representation [[groupValue]] reads it
+    * (Catalyst's internal one). Both read paths (`readLive` and the
+    * graft-table scan) filter rows against these sets; neither opens
+    * a DV file again. */
+  private[graft] final case class LiveDeletes(keyCol: String,
+      keyType: DataType, keys: Map[String, Set[Any]],
+      covering: Map[String, Seq[String]]) {
+    /** The keys the given covering DVs delete, as one set. */
+    def keysOf(dvFiles: Seq[String]): Set[Any] = dvFiles match {
+      case Seq(one) => keys(one)
+      case many => many.iterator.flatMap(keys).toSet
+    }
+  }
+
+  /** Resolve the deletion vectors live at `version` for a read of
+    * `files`; None when there are none. Each DV's scope is its origin
+    * version's file list, resolved once per distinct origin; only DVs
+    * that cover a file of `files` are decoded, each exactly once.
+    * `keyTypeOf` gives the data column's type for the key column. */
+  private[graft] def liveDeletes(table: Path, version: Long,
+      files: Seq[String], keyTypeOf: String => DataType)
+      : Option[LiveDeletes] = {
+    val dvs = deletionVectors(table, version)
+    if (dvs.isEmpty) None
+    else {
+      val keyCols = dvs.map(_._2).distinct
+      require(keyCols.size == 1,
+        s"mixed deletion-vector key columns at version $version: $keyCols")
+      val wanted = files.toSet
+      val covering = dvs.groupBy(_._3).toSeq.flatMap { case (origin, group) =>
+        statsManifest(table, origin).map(_._1).filter(wanted)
+          .flatMap(f => group.map(dv => f -> dv._1))
+      }.groupMap(_._1)(_._2).map { case (f, d) => f -> d.distinct.sorted }
+      val used = covering.valuesIterator.flatten.toSeq.distinct.sorted
+      val keyType = keyTypeOf(keyCols.head)
+      val keys = used.zip(mapFooters(used)(dv =>
+        dvKeys(table.resolve(dv), keyCols.head, keyType))).toMap
+      Some(LiveDeletes(keyCols.head, keyType, keys, covering))
+    }
+  }
+
+  /** One DV file's non-NULL keys, converted from the DV's own column
+    * type to `keyType` the way Spark's `=` compares mixed numeric
+    * types: a key outside `keyType`'s range, or with no exact value in
+    * it, matches no row and is dropped. Non-numeric types must match
+    * exactly. */
+  private def dvKeys(file: Path, keyCol: String,
+                     keyType: DataType): Set[Any] = {
+    val p = new org.apache.hadoop.fs.Path(file.toString)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, footerConf))
+    val out = Set.newBuilder[Any]
+    try {
+      val dvType = footerSchema(p, r.getFooter)(keyCol).dataType
+      val schema = r.getFooter.getFileMetaData.getSchema
+      val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
+      var pages = r.readNextRowGroup()
+      while (pages != null) {
+        val rows = io.getRecordReader(pages,
+          new org.apache.parquet.example.data.simple.convert
+            .GroupRecordConverter(schema))
+        var n = 0L
+        while (n < pages.getRowCount) {
+          val g = rows.read()
+          val i = g.getType.getFieldIndex(keyCol)
+          if (g.getFieldRepetitionCount(i) > 0)
+            out ++= coerceKey(groupValue(g, i, dvType), dvType, keyType)
+          n += 1
+        }
+        pages = r.readNextRowGroup()
+      }
+    } finally r.close()
+    out.result()
+  }
+
+  private def coerceKey(v: Any, from: DataType, to: DataType): Option[Any] =
+    (from, to) match {
+      case _ if from == to => Some(v)
+      case (_: NumericType, _: NumericType) =>
+        val integralKey = v.isInstanceOf[java.lang.Long] ||
+          v.isInstanceOf[java.lang.Integer] ||
+          v.isInstanceOf[java.lang.Short] || v.isInstanceOf[java.lang.Byte]
+        val double = v match {
+          case d: Decimal => d.toDouble
+          case n: java.lang.Number => n.doubleValue
+        }
+        // The key's exact value, for integral and decimal columns.
+        lazy val exact: Option[java.math.BigDecimal] = v match {
+          case d: Decimal => Some(d.toJavaBigDecimal)
+          case n: java.lang.Number if integralKey =>
+            Some(java.math.BigDecimal.valueOf(n.longValue))
+          case _ => Option.when(!double.isNaN && !double.isInfinite)(
+            java.math.BigDecimal.valueOf(double))
+        }
+        def whole(lo: Long, hi: Long): Option[Long] = exact
+          .flatMap(b => scala.util.Try(b.longValueExact).toOption)
+          .filter(l => l >= lo && l <= hi)
+        to match {
+          case DoubleType => Some(double)
+          case FloatType =>
+            if (integralKey) Some(v.asInstanceOf[java.lang.Number].floatValue)
+            else Option.when(double.toFloat.toDouble == double)(double.toFloat)
+          case ByteType => whole(Byte.MinValue, Byte.MaxValue).map(_.toByte)
+          case ShortType => whole(Short.MinValue, Short.MaxValue).map(_.toShort)
+          case IntegerType => whole(Int.MinValue, Int.MaxValue).map(_.toInt)
+          case LongType => whole(Long.MinValue, Long.MaxValue)
+          case t: DecimalType =>
+            exact
+              .flatMap(b => scala.util.Try(b.setScale(t.scale)).toOption)
+              .filter(_.precision <= t.precision)
+              .map(Decimal(_, t.precision, t.scale))
+          case _ => None
+        }
+      case _ => throw new IllegalArgumentException(
+        s"deletion-vector keys of type ${from.simpleString} cannot be " +
+          s"compared with column type ${to.simpleString}")
+    }
+
+  /** Field `i` of a parquet-mr row as Catalyst holds a `dt` value
+    * internally (epoch micros for timestamps, epoch days for dates,
+    * UTF8String, Decimal, GenericArrayData for the format's one nested
+    * shape, the standard 3-level list). The caller checks for NULL. */
+  private[graft] def groupValue(g: org.apache.parquet.example.data.Group,
+      i: Int, dt: DataType): Any = dt match {
+    case LongType | TimestampType | TimestampNTZType => g.getLong(i, 0)
+    case IntegerType | DateType => g.getInteger(i, 0)
+    case ShortType => g.getInteger(i, 0).toShort
+    case ByteType => g.getInteger(i, 0).toByte
+    case DoubleType => g.getDouble(i, 0)
+    case FloatType => g.getFloat(i, 0)
+    case BooleanType => g.getBoolean(i, 0)
+    case StringType =>
+      org.apache.spark.unsafe.types.UTF8String
+        .fromBytes(g.getBinary(i, 0).getBytes)
+    case t: DecimalType =>
+      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+      g.getType.getType(i).asPrimitiveType.getPrimitiveTypeName match {
+        case INT32 => Decimal(g.getInteger(i, 0).toLong, t.precision, t.scale)
+        case INT64 => Decimal(g.getLong(i, 0), t.precision, t.scale)
+        case _ => Decimal(new java.math.BigDecimal(
+          new java.math.BigInteger(g.getBinary(i, 0).getBytes), t.scale),
+          t.precision, t.scale)
+      }
+    case ArrayType(elem, _) =>
+      val lg = g.getGroup(i, 0)
+      val n = lg.getFieldRepetitionCount(0)
+      val vals = new Array[Any](n)
+      var j = 0
+      while (j < n) {
+        val el = lg.getGroup(0, j)
+        vals(j) =
+          if (el.getFieldRepetitionCount(0) == 0) null
+          else groupValue(el, 0, elem)
+        j += 1
+      }
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(vals)
+    case other => throw new IllegalStateException(
+      s"unsupported column type ${other.simpleString} in a parquet row")
+  }
+
   /** MERGE-ON-READ DELETE — the cheap-delete answer of every modern
     * table format (Delta deletion vectors / Iceberg delete files):
     * instead of rewriting every data file that contains a doomed row
     * (copy-on-write — cost O(touched files), the [[transact]] shape),
     * the commit writes ONLY a tiny key-list sidecar and carries the
-    * previous version's data lines BYTE-VERBATIM; readers anti-join
-    * the union of live deletion vectors at plan time. Delete cost is
-    * O(deleted keys) regardless of table size — at 100 TB the
-    * difference between a GDPR erasure finishing in seconds or
-    * rewriting terabytes. The debt is read-time (one broadcast-sized
-    * anti-join per scan), repaid when a compaction commit
+    * previous version's data lines BYTE-VERBATIM; readers decode the
+    * live deletion vectors once on the driver ([[liveDeletes]]) and
+    * drop the rows whose key they list. Delete cost is O(deleted
+    * keys) regardless of table size — at 100 TB the difference
+    * between a GDPR erasure finishing in seconds or rewriting
+    * terabytes. The debt is read-time (every read decodes and applies
+    * the deleted keys), repaid when a compaction commit
     * ([[transact]] or `commit`) materializes the surviving rows and
     * drops the DV lines — exactly the merge-on-read → copy-on-write
     * fold production tables schedule.
@@ -2082,8 +2251,8 @@ object VersionedTable {
     require(all.nonEmpty,
       s"readRange at version $v of $table: the manifest lists no data files")
     val live = all.filter { case (_, mn, mx) => mx >= lo && mn <= hi }
-    // Deletion vectors COMPOSE with stats pruning (r13): the DV
-    // anti-join applies to the pruned file set exactly as read()
+    // Deletion vectors COMPOSE with stats pruning: the DV key
+    // filter applies to the pruned file set exactly as read()
     // applies it to the full set — a DV's origin scope covers a
     // subset the same way it covers the whole, so a GDPR-erased
     // table keeps its range reads without waiting for compaction.
@@ -2175,6 +2344,27 @@ object VersionedTable {
     * per footer would cost more than the Spark job the footer path
     * replaces. Hadoop Configuration is thread-safe for reads. */
   private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
+
+  /** The Spark schema of one parquet file, read from its footer
+    * exactly as Spark's parquet schema inference reads it: the row
+    * schema a Spark writer stores, else the footer's parquet schema
+    * converted under `conf`. */
+  private def footerSchema(file: Path,
+      conf: org.apache.spark.sql.internal.SQLConf): StructType = {
+    val p = new org.apache.hadoop.fs.Path(file.toString)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, footerConf))
+    try footerSchema(p, r.getFooter, conf) finally r.close()
+  }
+
+  private def footerSchema(p: org.apache.hadoop.fs.Path,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      conf: org.apache.spark.sql.internal.SQLConf =
+        org.apache.spark.sql.internal.SQLConf.get): StructType =
+    org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      .readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(p, footer),
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetToSparkSchemaConverter(conf))
 
   /** The footer's row-group metadata for one parquet file. */
   private def footerBlocks(file: Path)
@@ -4216,15 +4406,22 @@ object VersionedTable {
     * subset) at version `v`, applying the version's live deletion
     * vectors and schema mappings.
     *
-    * Merge-on-read: anti-join the live deletion vectors, each SCOPED
-    * to the data files its origin version listed — files appended
-    * after a delete are not covered, so re-inserted keys survive
-    * (sequence-number semantics, not eternal tombstones). Data files
-    * group by the set of DVs covering them (in any sane history a
-    * handful of groups); each group anti-joins its own key union.
-    * The DV side is O(deleted keys) — broadcast-sized; a compaction
-    * commit folds it away entirely. Scoping composes with pruning:
-    * a DV covers a pruned subset exactly as it covers the whole.
+    * The data schema comes from one footer — the file Spark's own
+    * inference would pick, the lexicographically first path — so no
+    * schema-inference job runs; `mergeSchema` keeps Spark's inference.
+    *
+    * Merge-on-read: the live deletion vectors are decoded once on the
+    * driver ([[liveDeletes]]), each SCOPED to the data files its
+    * origin version listed — files appended after a delete are not
+    * covered, so re-inserted keys survive (sequence-number semantics,
+    * not eternal tombstones). Data files group by the set of DVs
+    * covering them (in any sane history a handful of groups); each
+    * group keeps the rows whose key is NULL or not in its key union,
+    * exactly the rows a `left_anti` join on the key would keep. The
+    * keys ride in the plan as literals, so the filter costs no job;
+    * a compaction commit folds them away entirely. Scoping composes
+    * with pruning: a DV covers a pruned subset exactly as it covers
+    * the whole.
     *
     * Schema mappings (RENAME/WIDEN) apply per WRITER DIRECTORY — all
     * files of one commit share one footer schema, so grouping by
@@ -4234,22 +4431,26 @@ object VersionedTable {
                        relFiles: Seq[String],
                        mergeSchema: Boolean = false): DataFrame = {
     val maps = columnMappings(table, v)
-    val dvs = deletionVectors(table, v)
-    val keyCols = dvs.map(_._2).distinct
-    require(keyCols.size <= 1,
-      s"mixed deletion-vector key columns at version $v: $keyCols")
+    lazy val schema =
+      footerSchema(table.resolve(relFiles.min), s.sessionState.conf)
     // A rename could retarget a DV's key column between its origin and
     // this version — refuse the ambiguity; compaction resolves it.
-    require(dvs.isEmpty || maps.isEmpty,
-      s"version $v carries both deletion vectors and schema mappings " +
-        "— compact (a rewrite commit) before combining the two")
+    val deletes =
+      if (maps.isEmpty) liveDeletes(table, v, relFiles, schema(_).dataType)
+      else {
+        require(deletionVectors(table, v).isEmpty,
+          s"version $v carries both deletion vectors and schema mappings " +
+            "— compact (a rewrite commit) before combining the two")
+        None
+      }
     // mergeSchema: a version whose commits span an ADDED column
     // reconciles per-file footers into the union schema at plan time —
     // old files surface typed NULLs. Off by default: single-schema
     // reads should not pay the footer sweep.
     def readFiles(fs: Seq[String]): DataFrame =
       if (maps.isEmpty)
-        s.read.option("mergeSchema", mergeSchema.toString)
+        (if (mergeSchema) s.read.option("mergeSchema", "true")
+         else s.read.schema(schema))
           .parquet(fs.map(f => table.resolve(f).toString): _*)
       else
         fs.groupBy(f => f.substring(0, f.lastIndexOf('/')))
@@ -4275,26 +4476,23 @@ object VersionedTable {
             }
           }
           .reduce(_.unionByName(_, allowMissingColumns = true))
-    if (dvs.isEmpty) readFiles(relFiles)
-    else {
-      val covered: Map[String, Set[String]] = dvs
-        .groupBy(_._3)
-        .flatMap { case (origin, group) =>
-          val scope = statsManifest(table, origin).map(_._1).toSet
-          group.map(dv => dv._1 -> scope)
-        }
-      val groups = relFiles.groupBy(f =>
-        covered.collect { case (dv, scope) if scope.contains(f) => dv }.toSet)
-      groups.map { case (dvSet, fs) =>
-        val part = readFiles(fs)
-        if (dvSet.isEmpty) part
-        else {
-          val keys = s.read
-            .parquet(dvSet.toSeq.sorted.map(table.resolve(_).toString): _*)
-            .distinct()
-          part.join(keys, Seq(keyCols.head), "left_anti")
-        }
-      }.reduce(_ unionByName _)
+    deletes match {
+      case None => readFiles(relFiles)
+      case Some(d) =>
+        relFiles.groupBy(f => d.covering.getOrElse(f, Nil)).toSeq
+          .sortBy(_._1.mkString("\n"))
+          .map { case (dvFiles, fs) =>
+            val part = readFiles(fs)
+            val keys = d.keysOf(dvFiles)
+            if (keys.isEmpty) part
+            else {
+              val k = part(d.keyCol)
+              part.where(k.isNull || !k.isin(keys.toSeq.map(x =>
+                org.apache.spark.sql.catalyst.CatalystTypeConverters
+                  .convertToScala(x, d.keyType)): _*))
+            }
+          }
+          .reduce(_ unionByName _)
     }
   }
 }

@@ -2010,7 +2010,7 @@ object DedupQueries extends QueryModule {
     // byte-verbatim (in-path require), so erasing k rows costs O(k)
     // regardless of table size — at 100 TB the difference between a
     // GDPR erasure finishing in seconds or rewriting terabytes.
-    // Readers anti-join the union of live DVs at plan time; the debt
+    // Readers drop the live DVs' keys as they read; the debt
     // is repaid by a COMPACTION commit that materializes survivors
     // and drops the DV lines (merge-on-read → copy-on-write fold,
     // require-gated: v3 carries no DVs and fewer rows than v0's
@@ -2064,7 +2064,7 @@ object DedupQueries extends QueryModule {
 
     // DELETION VECTORS × STATS PRUNING (r13) — the composition r12
     // refused: a range read over a DV-bearing version applies the
-    // origin-scoped anti-join INSIDE the pruned file set, so a
+    // origin-scoped key filter INSIDE the pruned file set, so a
     // GDPR-erased 100-TB table keeps its cheap range reads without
     // waiting for compaction to repay the merge-on-read debt. Staged:
     // v0 = range-clustered stats commit (8 files); v1 = DV delete of
@@ -2158,15 +2158,15 @@ object DedupQueries extends QueryModule {
     // bespoke API — flows through Catalyst's V2 pushdown into
     // MANIFEST-level file pruning, and the version's live deletion
     // vectors apply AT SCAN LEVEL (each input partition = one
-    // surviving file + its covering DV key lists; the executor hashes
-    // O(deleted keys) and filters as it reads — no join in the plan
-    // at all). Staged exactly as pipe_dv_skip (range-clustered stats
+    // surviving file + the names of its covering DVs, whose keys the
+    // driver decoded once; the executor filters as it reads — no join
+    // in the plan at all). Staged exactly as pipe_dv_skip (range-clustered stats
     // commit → DV delete → re-insert of a killed key), so the same
     // oracle proves the same rows now arrive through the connector
     // path. In-path requires: the scan's partition count (== files
     // opened) is strictly below the manifest's file count (pushdown
-    // pruned), and the physical plan contains NO join node (the DV
-    // anti-join really was absorbed into the scan).
+    // pruned), and the physical plan contains NO join node (the DVs
+    // really are applied inside the scan).
     "pipe_table_scan" -> ((s, dir) => {
       import s.implicits._
       import graft.operators.VersionedTable

@@ -7,7 +7,6 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader,
   GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
 
 import scala.jdk.CollectionConverters._
 
@@ -104,26 +103,19 @@ object AvroIO {
     })
   }
 
-  /** The session's Hadoop configuration, broadcast-shaped — executor
-    * tasks and driver listings must resolve filesystems with the SAME
-    * settings the user configured (s3a credentials, custom schemes);
-    * a bare `new Configuration()` silently drops them (ADVICE r17). */
-  private def hadoopConf(spark: SparkSession): SerializableConfiguration =
-    new SerializableConfiguration(spark.sessionState.newHadoopConf())
-
   /** Distributed write: each partition streams to ONE container file
     * under `dir` (empty partitions write nothing). Returns the number
     * of files written. */
   def write(df: DataFrame, dir: String): Long = {
     val avroJson = avroSchema(df.schema).toString
     val names = df.schema.fieldNames
-    val conf = hadoopConf(df.sparkSession)
+    val conf = GraftSession.hadoopConf(df.sparkSession)
     val written = df.rdd.mapPartitionsWithIndex { (pid, rows) =>
       if (!rows.hasNext) Iterator.empty
       else {
         val sch = new Schema.Parser().parse(avroJson)
         val path = new org.apache.hadoop.fs.Path(dir, f"part-$pid%05d.avro")
-        val out = path.getFileSystem(conf.value).create(path, true)
+        val out = path.getFileSystem(conf.value.value).create(path, true)
         val w = new DataFileWriter[GenericRecord](
           new GenericDatumWriter[GenericRecord](sch))
         w.setCodec(CodecFactory.deflateCodec(6))
@@ -172,9 +164,9 @@ object AvroIO {
     * `spark.sql.files.maxPartitionBytes`. */
   def read(spark: SparkSession, dir: String,
            splitBytes: Long = 0L): DataFrame = {
-    val conf = hadoopConf(spark)
+    val conf = GraftSession.hadoopConf(spark)
     val pattern = new org.apache.hadoop.fs.Path(dir, "*.avro")
-    val fs = pattern.getFileSystem(conf.value)
+    val fs = pattern.getFileSystem(conf.value.value)
     val files = fs.globStatus(pattern)
     require(files != null && files.nonEmpty,
       s"AvroIO.read: no .avro container files under $dir")
@@ -200,7 +192,7 @@ object AvroIO {
       .flatMap { case (pathStr, start, end) =>
         val path = new org.apache.hadoop.fs.Path(pathStr)
         val in = new FsSeekableInput(
-          path.getFileSystem(conf.value), path)
+          path.getFileSystem(conf.value.value), path)
         // The reader constructor and the sync can THROW (corrupt or
         // truncated container, transient FS error) — the opened input
         // stream must not leak across task retries, so it closes on

@@ -176,7 +176,7 @@ private[sources] class GraftReplaceDataWrite(path: String,
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
     new GraftWriterFactory(path, stagingRel, schema,
-      replaceDataRows = true)
+      GraftSession.hadoopConf(), replaceDataRows = true)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val staged = messages.flatMap {

@@ -3,7 +3,6 @@ package graft.sources
 import java.util
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -41,14 +40,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *    every filter stays residual: Spark re-applies it row-level, and
   *    acceptance here is a planning optimization, never a correctness
   *    dependency (the graft-history discipline).
-  *  - MERGE-ON-READ AT SCAN LEVEL: each input partition is one
-  *    surviving data file plus the deletion vectors whose
-  *    origin-version scope covers it; the executor loads the DV key
-  *    lists into a hash set (O(deleted keys) — the same bound the
-  *    DataFrame anti-join pays) and filters rows as it reads, so a
-  *    DV-bearing version scans in one pass with no join in the plan
-  *    at all. Origin scoping is preserved exactly: a file appended
-  *    after a delete is covered by no DV, so re-inserted keys survive.
+  *  - MERGE-ON-READ AT SCAN LEVEL: planning decodes each live
+  *    deletion vector once on the driver
+  *    (`VersionedTable.liveDeletes`, the resolution
+  *    `VersionedTable.read` uses too) and the reader factory ships the
+  *    key sets once per scan; each input partition is one surviving
+  *    data file plus the names of the DVs whose origin-version scope
+  *    covers it, and the executor drops the rows whose key those sets
+  *    hold as it reads — one pass, no join in the plan, no DV file
+  *    opened on an executor. Origin scoping is preserved exactly: a
+  *    file appended after a delete is covered by no DV, so re-inserted
+  *    keys survive.
   *  - COLUMN PRUNING ([[SupportsPushDownRequiredColumns]]): only
   *    requested fields are materialized (plus, transiently, the DV
   *    key column where a file has live DVs).
@@ -307,7 +309,7 @@ object GraftTableSource {
         s"graft-table: version $version of $path lists no data files"))._1
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(table.resolve(first).toString),
-      new Configuration()))
+      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
     val msg = try reader.getFileMetaData.getSchema finally reader.close()
     StructType(msg.getFields.asScala.map { f =>
       StructField(f.getName, GraftTableSource.sparkTypeOf(f),
@@ -820,12 +822,13 @@ private[sources] class GraftScanBuilder(path: String, version: Long,
     }
 
   override def build(): Scan =
-    new GraftScan(path, version, statsCol, required, pushed, metaAgg,
-      reportStats)
+    new GraftScan(path, version, statsCol, schema0, required, pushed,
+      metaAgg, reportStats)
 }
 
 private[sources] class GraftScan(path: String, version: Long,
-    statsCol: Option[String], required: StructType, pushed: Array[Filter],
+    statsCol: Option[String], tableSchema: StructType, required: StructType,
+    pushed: Array[Filter],
     metaAgg: Option[MetaAggPlan] = None, reportStats: Boolean = true)
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
@@ -1234,25 +1237,10 @@ private[sources] class GraftScan(path: String, version: Long,
       s"graft-table: version $version of $path carries both deletion " +
         "vectors and schema mappings — compact before combining the two")
     val live = livePrunedFiles()
-    // Merge-on-read: attach to each file the DV key lists whose
-    // origin-version scope covers it (origin scoping preserved — a
-    // file appended after a delete is covered by no DV).
-    val dvs = VersionedTable.deletionVectors(table, version)
-    val keyCols = dvs.map(_._2).distinct
-    require(keyCols.size <= 1,
-      s"graft-table: mixed deletion-vector key columns at version " +
-        s"$version: $keyCols")
-    val covering: Map[String, Seq[String]] =
-      if (dvs.isEmpty) Map.empty
-      else {
-        val scopes = dvs.map { case (dvFile, _, origin) =>
-          dvFile -> VersionedTable.statsManifest(table, origin)
-            .map(_._1).toSet
-        }
-        live.map(_._1).map { f =>
-          f -> scopes.collect { case (dv, scope) if scope(f) => dv }
-        }.toMap
-      }
+    // Merge-on-read: each file names the DVs whose origin-version
+    // scope covers it (a file appended after a delete is covered by
+    // none); the decoded keys ride in the reader factory, once.
+    val covering = deletes.fold(Map.empty[String, Seq[String]])(_.covering)
     // Ordered key tuples for storage-partitioned joins: attached only
     // when the snapshot reports KeyGroupedPartitioning (every file
     // carries every key segment) — Spark groups same-key files into
@@ -1260,8 +1248,7 @@ private[sources] class GraftScan(path: String, version: Long,
     // are INTs (the transform's result type); identity keys strings.
     live.map { case (f, _, _) =>
       val vals = GraftTableSource.partitionValues(f)
-      GraftTablePartition(path, f, covering.getOrElse(f, Nil),
-        keyCols.headOption.getOrElse(""), vals,
+      GraftTablePartition(path, f, covering.getOrElse(f, Nil), vals,
         spjSpecs.map { specs =>
           val m = vals.toMap
           specs.map(t => m(t.derivedName)).toArray
@@ -1272,8 +1259,19 @@ private[sources] class GraftScan(path: String, version: Long,
     }.toArray
   }
 
+  /** This version's live deletion vectors, decoded once per scan on
+    * the driver over every data file of the version, so runtime file
+    * filtering after planning can only narrow what it covers. */
+  private lazy val deletes: Option[VersionedTable.LiveDeletes] = {
+    val table = java.nio.file.Paths.get(path)
+    VersionedTable.liveDeletes(table, version,
+      VersionedTable.statsManifest(table, version).map(_._1),
+      tableSchema(_).dataType)
+  }
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftTableReaderFactory(required,
+    new GraftTableReaderFactory(required, GraftSession.hadoopConf(),
+      deletes.map(d => d.copy(covering = Map.empty)),
       // Only ADDCOL-introduced columns may legitimately be absent from
       // a file's footer (files predating the add) — the same gate the
       // change-feed reader applies. Any OTHER missing field is a real
@@ -1297,7 +1295,7 @@ private[sources] class GraftScan(path: String, version: Long,
   * task and co-locate joins. `keyIsBucket` marks INT bucket keys (a
   * bucket transform's result type); identity keys are strings. */
 private[sources] case class GraftTablePartition(path: String, file: String,
-    dvFiles: Seq[String], keyCol: String,
+    dvFiles: Seq[String],
     partValues: Seq[(String, String)] = Nil,
     keyVals: Array[String] = null,
     keyIsBucket: Array[Boolean] = null) extends InputPartition
@@ -1315,9 +1313,17 @@ private[sources] case class GraftTablePartition(path: String, file: String,
 private[sources] case class MetaAggPartition(rows: Array[Array[Any]])
     extends InputPartition
 
+/** `deletes` carries the scan's decoded deletion-vector keys (without
+  * the planning-only file coverage), shipped with the factory rather
+  * than copied into every split; `hadoopConf` is the session's
+  * broadcast Hadoop configuration. */
 private[sources] class GraftTableReaderFactory(schema: StructType,
+    hadoopConf: org.apache.spark.broadcast.Broadcast[
+      org.apache.spark.util.SerializableConfiguration],
+    deletes: Option[graft.operators.VersionedTable.LiveDeletes],
     nullableMissing: Set[String] = Set.empty)
     extends PartitionReaderFactory {
+  import graft.operators.VersionedTable
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     p match {
@@ -1337,52 +1343,27 @@ private[sources] class GraftTableReaderFactory(schema: StructType,
       case _ => ()
     }
     val gp = p.asInstanceOf[GraftTablePartition]
-    val root = java.nio.file.Paths.get(gp.path)
-
-    def open(rel: String): ParquetReader[Group] =
-      ParquetReader.builder[Group](new GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(root.resolve(rel).toString))
-        .withConf(new Configuration())
-        .build()
-
-    def keyValue(g: Group, i: Int): Any =
-      g.getType.getType(i).asPrimitiveType().getPrimitiveTypeName match {
-        case INT64 => java.lang.Long.valueOf(g.getLong(i, 0))
-        case INT32 => java.lang.Integer.valueOf(g.getInteger(i, 0))
-        case BINARY => g.getBinary(i, 0).toStringUsingUTF8
-        case other => throw new IllegalStateException(
-          s"graft-table: unsupported deletion-vector key type $other")
-      }
-
-    // The executor's share of merge-on-read: this file's covering DV
-    // key lists, hashed — O(this table's deleted keys), the same bound
-    // the plan-level anti-join pays, with no join in the plan at all.
-    val deadKeys: java.util.HashSet[Any] = {
-      val set = new java.util.HashSet[Any]()
-      gp.dvFiles.foreach { dv =>
-        val r = open(dv)
-        try {
-          var g = r.read()
-          while (g != null) {
-            if (g.getFieldRepetitionCount(0) > 0)
-              set.add(keyValue(g, g.getType.getFieldIndex(gp.keyCol)))
-            g = r.read()
-          }
-        } finally r.close()
-      }
-      set
-    }
+    // The executor's share of merge-on-read: a lookup in the keys the
+    // driver decoded for this file's covering DVs, compared in the
+    // key column's type (no DV file is opened here).
+    val dead: Set[Any] = deletes.fold(Set.empty[Any])(_.keysOf(gp.dvFiles))
+    val (keyCol, keyType) =
+      deletes.fold(("", NullType: DataType))(d => (d.keyCol, d.keyType))
 
     new PartitionReader[InternalRow] {
-      private val reader = open(gp.file)
+      private val reader = ParquetReader.builder[Group](new GroupReadSupport(),
+        new org.apache.hadoop.fs.Path(
+          java.nio.file.Paths.get(gp.path).resolve(gp.file).toString))
+        .withConf(hadoopConf.value.value)
+        .build()
       private var cur: Group = _
       override def next(): Boolean = {
         cur = reader.read()
         // Skip rows a covering deletion vector killed.
-        while (cur != null && !deadKeys.isEmpty && {
-          val i = cur.getType.getFieldIndex(gp.keyCol)
+        while (cur != null && dead.nonEmpty && {
+          val i = cur.getType.getFieldIndex(keyCol)
           cur.getFieldRepetitionCount(i) > 0 &&
-            deadKeys.contains(keyValue(cur, i))
+            dead.contains(VersionedTable.groupValue(cur, i, keyType))
         }) cur = reader.read()
         cur != null
       }
@@ -1405,46 +1386,9 @@ private[sources] class GraftTableReaderFactory(schema: StructType,
           else if (!cur.getType.containsField(f.name) &&
               nullableMissing.contains(f.name)) null
           else {
-          val i = cur.getType.getFieldIndex(f.name)
-          if (cur.getFieldRepetitionCount(i) == 0) null
-          else f.dataType match {
-            case LongType | TimestampType | TimestampNTZType =>
-              cur.getLong(i, 0)
-            case IntegerType | DateType => cur.getInteger(i, 0)
-            case DoubleType => cur.getDouble(i, 0)
-            case FloatType => cur.getFloat(i, 0)
-            case BooleanType => cur.getBoolean(i, 0)
-            case StringType =>
-              UTF8String.fromBytes(cur.getBinary(i, 0).getBytes)
-            // ARRAY payload (r19): unwrap the standard 3-level list
-            // the writer emits (LIST group → repeated list → element).
-            case ArrayType(elem, _) =>
-              val lg = cur.getGroup(i, 0)
-              val n = lg.getFieldRepetitionCount(0)
-              val vals = new Array[Any](n)
-              var j = 0
-              while (j < n) {
-                val el = lg.getGroup(0, j)
-                vals(j) =
-                  if (el.getFieldRepetitionCount(0) == 0) null
-                  else elem match {
-                    case LongType | TimestampType | TimestampNTZType =>
-                      el.getLong(0, 0)
-                    case IntegerType | DateType => el.getInteger(0, 0)
-                    case DoubleType => el.getDouble(0, 0)
-                    case FloatType => el.getFloat(0, 0)
-                    case BooleanType => el.getBoolean(0, 0)
-                    case StringType =>
-                      UTF8String.fromBytes(el.getBinary(0, 0).getBytes)
-                    case other => throw new IllegalStateException(
-                      s"graft-table: unsupported array element $other")
-                  }
-                j += 1
-              }
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(vals)
-            case other => throw new IllegalStateException(
-              s"graft-table: unsupported read type $other")
-          }
+            val i = cur.getType.getFieldIndex(f.name)
+            if (cur.getFieldRepetitionCount(i) == 0) null
+            else VersionedTable.groupValue(cur, i, f.dataType)
           }
         }
         InternalRow.fromSeq(vals.toIndexedSeq)

@@ -163,7 +163,7 @@ private[sources] class GraftBatchWrite(path: String, stagingRel: String,
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
     new GraftWriterFactory(path, stagingRel, schema,
-      partCols = partCols)
+      GraftSession.hadoopConf(), partCols = partCols)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.flatMap {
@@ -262,7 +262,8 @@ private[sources] class GraftStreamingWrite(path: String, stagingRel: String,
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftWriterFactory(path, stagingRel, schema, partCols = partCols)
+    new GraftWriterFactory(path, stagingRel, schema,
+      GraftSession.hadoopConf(), partCols = partCols)
 
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit = {
@@ -406,8 +407,13 @@ private[sources] object GraftWriterFactory {
   }
 }
 
+/** `hadoopConf` is the session's broadcast Hadoop configuration; each
+  * writer copies it to carry its file schema. */
 private[sources] class GraftWriterFactory(path: String, stagingRel: String,
-    schema: StructType, replaceDataRows: Boolean = false,
+    schema: StructType,
+    hadoopConf: org.apache.spark.broadcast.Broadcast[
+      org.apache.spark.util.SerializableConfiguration],
+    replaceDataRows: Boolean = false,
     partCols: Seq[String] = Nil)
     extends DataWriterFactory with StreamingDataWriterFactory {
 
@@ -455,7 +461,7 @@ private[sources] class GraftWriterFactory(path: String, stagingRel: String,
       private val payloadIdx =
         payload.fields.map(f => schema.fieldIndex(f.name))
       private val msgType = GraftWriterFactory.messageType(payload)
-      private val conf = new Configuration()
+      private val conf = new Configuration(hadoopConf.value.value)
       GroupWriteSupport.setSchema(msgType, conf)
       private val open = scala.collection.mutable.Map
         .empty[String, (org.apache.parquet.hadoop.ParquetWriter[
@@ -551,7 +557,7 @@ private[sources] class GraftWriterFactory(path: String, stagingRel: String,
       private val rel = f"$stagingRel/part-$partitionId%05d-$taskId.parquet"
       private val full = java.nio.file.Paths.get(path).resolve(rel)
       private val msgType = GraftWriterFactory.messageType(schema)
-      private val conf = new Configuration()
+      private val conf = new Configuration(hadoopConf.value.value)
       GroupWriteSupport.setSchema(msgType, conf)
       private val out = ExampleParquetWriter
         .builder(new org.apache.hadoop.fs.Path(full.toString))

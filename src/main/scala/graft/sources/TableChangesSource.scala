@@ -3,7 +3,6 @@ package graft.sources
 import java.util
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -133,7 +132,7 @@ object TableChangesSource {
         s"graft-changes: version $v of $path lists no data files"))._1
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(table.resolve(first).toString),
-      new Configuration()))
+      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
     val msg = try reader.getFileMetaData.getSchema finally reader.close()
     val dataFields = msg.getFields.asScala.map { f =>
       require(f.isPrimitive,
@@ -476,7 +475,7 @@ private[sources] class ChangesStream(path: String, schema: StructType,
     }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ChangesReaderFactory(schema,
+    new ChangesReaderFactory(schema, GraftSession.hadoopConf(),
       // Only ADDCOL-introduced columns may legitimately be absent from
       // a file's footer (files predating the add); any OTHER missing
       // field is a real schema mismatch and must stay a loud failure,
@@ -510,6 +509,8 @@ private[sources] case class ChangesPartition(path: String, version: Long,
 }
 
 private[sources] class ChangesReaderFactory(schema: StructType,
+    hadoopConf: org.apache.spark.broadcast.Broadcast[
+      org.apache.spark.util.SerializableConfiguration],
     nullableMissing: Set[String] = Set.empty)
     extends PartitionReaderFactory {
 
@@ -521,7 +522,7 @@ private[sources] class ChangesReaderFactory(schema: StructType,
       private val reader: ParquetReader[Group] =
         ParquetReader.builder[Group](new GroupReadSupport(),
           new org.apache.hadoop.fs.Path(full))
-          .withConf(new Configuration())
+          .withConf(hadoopConf.value.value)
           .build()
       private var cur: Group = _
       override def next(): Boolean = {
@@ -538,18 +539,7 @@ private[sources] class ChangesReaderFactory(schema: StructType,
             nullableMissing.contains(f.name)) return null
         val i = fileType.getFieldIndex(f.name)
         if (cur.getFieldRepetitionCount(i) == 0) null
-        else f.dataType match {
-          case LongType => cur.getLong(i, 0)
-          case IntegerType => cur.getInteger(i, 0)
-          case DoubleType => cur.getDouble(i, 0)
-          case FloatType => cur.getFloat(i, 0)
-          case BooleanType => cur.getBoolean(i, 0)
-          case StringType =>
-            UTF8String.fromBytes(cur.getBinary(i, 0).getBytes)
-          case other =>
-            throw new IllegalStateException(
-              s"graft-changes: unsupported read type $other")
-        }
+        else graft.operators.VersionedTable.groupValue(cur, i, f.dataType)
       }
       // Partition columns are split constants served from the file's
       // own path segments — footers never carry them.

@@ -92,29 +92,54 @@ class EntryContractSpec extends AnyFunSuite {
       s"uncast integer aggregates (HUGEINT) or unbindable oracle SQL: $out")
   }
 
+  /** Every code line of `src/main/scala` (comment lines skipped) as
+    * (file, all of its lines, index): what the source guards scan. */
+  private def mainCodeLines(): Seq[(java.nio.file.Path, IndexedSeq[String], Int)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"source root not found under ${root.toAbsolutePath}")
+    val walk = java.nio.file.Files.walk(root)
+    val files =
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    for {
+      f <- files
+      lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+      i <- lines.indices
+      if !Seq("//", "*", "/*").exists(lines(i).trim.startsWith)
+    } yield (f, lines, i)
+  }
+
   test("library code scopes session config and overlaps jobs only through GraftSession") {
     // A conf.set on a shared session is visible to every concurrent
     // query on it; an ad-hoc pool loses track of its threads. Library
     // code goes through GraftSession.scoped / overlap instead. The one
     // exemption is VersionedTable's footer pool: footer IO, no Spark
     // jobs.
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root),
-      s"source root not found under ${root.toAbsolutePath}")
     val banned = Seq("conf.set(", "conf.unset(", "newFixedThreadPool(")
-    val walk = java.nio.file.Files.walk(root)
-    val files =
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
     val hits = for {
-      f <- files if f.getFileName.toString != "GraftSession.scala"
-      lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
-      (l, i) <- lines.zipWithIndex
-      t = l.trim
-      if !Seq("//", "*", "/*").exists(t.startsWith) && banned.exists(t.contains)
+      (f, lines, i) <- mainCodeLines()
+      if f.getFileName.toString != "GraftSession.scala"
+      t = lines(i).trim
+      if banned.exists(t.contains)
       if !(t.contains("newFixedThreadPool(") &&
         lines.slice(i - 2, i).exists(_.contains("footerPool =")))
+    } yield s"$f:${i + 1}: $t"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("library code takes Hadoop settings from the session, never a bare Configuration") {
+    // A bare Configuration drops the user's filesystem settings (s3a
+    // credentials, custom schemes); readers and writers take
+    // GraftSession.hadoopConf instead. The one exemption is
+    // VersionedTable.footerConf, shared by the driver-side footer reads.
+    val banned = Seq("new Configuration()",
+      "new org.apache.hadoop.conf.Configuration()")
+    val hits = for {
+      (f, lines, i) <- mainCodeLines()
+      t = lines(i).trim
+      if banned.exists(t.contains) && !t.contains("footerConf =")
     } yield s"$f:${i + 1}: $t"
     assert(hits.isEmpty, hits.mkString("\n"))
   }

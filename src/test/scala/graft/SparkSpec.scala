@@ -7,6 +7,39 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
+
+  /** The number of Spark jobs `body` launches on this session. A marker
+    * job after `body` flushes the asynchronous listener bus: once its
+    * start event arrives, every earlier job's has arrived too. */
+  def jobsLaunchedBy(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "jobs-" + java.util.UUID.randomUUID()
+    val marker = group + "-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach { p =>
+            if (p.getProperty("spark.job.description") == marker) flushed.countDown()
+            else jobs.incrementAndGet()
+          }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      body
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker job's start event never arrived")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
   def sf001 = "/root/testdata/sf0.01"
 }
 

@@ -469,6 +469,53 @@ class VersionedTableSpec extends SparkSpec {
       (10L to 30L).filterNot(_ == 15L))
   }
 
+  test("a read with live deletion vectors launches no more jobs than after compaction") {
+    val t = freshTable()
+    VersionedTable.commit(spark, t, 0L,
+      spark.range(0, 40).toDF("id").repartition(4))
+    import spark.implicits._
+    // Two origins (an append between the deletes), so the read groups
+    // files by covering DV set.
+    VersionedTable.deleteCommit(spark, t, 1L, Seq(3L, 17L).toDF("id"), "id")
+    VersionedTable.commit(spark, t, 2L, spark.range(40, 50).toDF("id"),
+      carried = VersionedTable.manifest(t, 1L))
+    VersionedTable.deleteCommit(spark, t, 3L, Seq(5L, 44L).toDF("id"), "id")
+    VersionedTable.deleteCommit(spark, t, 4L, Seq(21L, 99L).toDF("id"), "id")
+    val expected = (0L until 50L).filterNot(Set(3L, 17L, 5L, 44L, 21L))
+    var rows = Seq.empty[Long]
+    val atDvs = jobsLaunchedBy {
+      rows = VersionedTable.read(spark, t).collect().map(_.getLong(0)).toSeq
+    }
+    assert(rows.sorted == expected)
+    VersionedTable.compactCommit(spark, t)
+    assert(VersionedTable.deletionVectors(t, 5L).isEmpty)
+    val compacted = jobsLaunchedBy {
+      rows = VersionedTable.read(spark, t).collect().map(_.getLong(0)).toSeq
+    }
+    assert(rows.sorted == expected)
+    assert(atDvs <= compacted,
+      s"read with 3 live DVs launched $atDvs jobs, after compaction $compacted")
+  }
+
+  test("the data schema comes from one footer and equals Spark's inference") {
+    import spark.implicits._
+    val t = freshTable()
+    val data = Seq(
+      (1L, 1, "a", BigDecimal("1.25"), java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), Seq(1L, 2L)),
+      (2L, 2, null, BigDecimal("2.50"), null, Seq.empty[Long]))
+      .toDF("l", "i", "s", "d", "ts", "arr")
+      .withColumn("d", $"d".cast("decimal(12,2)"))
+    VersionedTable.commit(spark, t, 0L, data)
+    VersionedTable.commit(spark, t, 1L, data.limit(1),
+      carried = VersionedTable.manifest(t, 0L))
+    VersionedTable.deleteCommit(spark, t, 2L, Seq(2L).toDF("l"), "l")
+    val files = VersionedTable.statsManifest(t, 2L).map(f => t.resolve(f._1).toString)
+    val inferred = spark.read.parquet(files: _*).schema
+    assert(VersionedTable.read(spark, t, Some(1L)).schema == inferred)
+    assert(VersionedTable.read(spark, t).schema == inferred)
+    assert(VersionedTable.read(spark, t).count() == 2)
+  }
+
   test("read/readRange refuse a data-file-less manifest with a clear error") {
     import spark.implicits._
     val t = freshTable()

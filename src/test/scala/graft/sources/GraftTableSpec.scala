@@ -66,6 +66,91 @@ class GraftTableSpec extends SparkSpec {
     assert(read(t, "version" -> "0").count() == 3)
   }
 
+  /** The ids both read paths serve at the latest version, sorted. */
+  private def bothPaths[A: Ordering](t: java.nio.file.Path,
+      get: org.apache.spark.sql.Row => A): (Seq[A], Seq[A]) =
+    (VersionedTable.read(spark, t).collect().toSeq.map(get).sorted,
+      read(t).collect().toSeq.map(get).sorted)
+
+  test("both read paths compare DV keys in the data column's type") {
+    import spark.implicits._
+    // INT data, BIGINT deletion vector: 2 matches; 2^32 + 1 is out of
+    // INT range and must match nothing (not truncate to 1).
+    val t = fresh()
+    VersionedTable.commit(spark, t, 0L, Seq(1, 2, 3).toDF("id"))
+    VersionedTable.deleteCommit(spark, t, 1L,
+      Seq(2L, (1L << 32) + 1L).toDF("id"), "id")
+    assert(bothPaths(t, _.getInt(0)) == ((Seq(1, 3), Seq(1, 3))))
+    // BIGINT data, INT deletion vector.
+    val u = fresh()
+    VersionedTable.commit(spark, u, 0L, Seq(1L, 2L, 3L).toDF("id"))
+    VersionedTable.deleteCommit(spark, u, 1L, Seq(3).toDF("id"), "id")
+    assert(bothPaths(u, _.getLong(0)) == ((Seq(1L, 2L), Seq(1L, 2L))))
+  }
+
+  test("both read paths keep NULL-key rows and apply STRING-keyed DVs") {
+    import spark.implicits._
+    val t = fresh()
+    VersionedTable.commit(spark, t, 0L,
+      Seq(("a", 1L), ("b", 2L), (null, 3L), ("c", 4L)).toDF("k", "v"))
+    // A NULL key in the DV deletes nothing; a NULL key in the data is
+    // never deleted (what a left_anti join on the key keeps).
+    VersionedTable.deleteCommit(spark, t, 1L,
+      Seq(Some("b"), None, Some("zz")).toDF("k"), "k")
+    val expected = Seq(1L, 3L, 4L)
+    assert(bothPaths(t, _.getLong(1)) == ((expected, expected)))
+  }
+
+  test("a scan with live DVs launches no more jobs than after compaction") {
+    import spark.implicits._
+    val t = fresh()
+    VersionedTable.commit(spark, t, 0L,
+      spark.range(0, 40).toDF("id").repartition(4))
+    VersionedTable.deleteCommit(spark, t, 1L, Seq(3L, 17L).toDF("id"), "id")
+    VersionedTable.deleteCommit(spark, t, 2L, Seq(5L, 39L).toDF("id"), "id")
+    val expected = (0L until 40L).filterNot(Set(3L, 17L, 5L, 39L))
+    var rows = Seq.empty[Long]
+    val atDvs = jobsLaunchedBy {
+      rows = read(t).collect().map(_.getLong(0)).toSeq.sorted
+    }
+    assert(rows == expected)
+    VersionedTable.compactCommit(spark, t)
+    val compacted = jobsLaunchedBy {
+      rows = read(t).collect().map(_.getLong(0)).toSeq.sorted
+    }
+    assert(rows == expected)
+    assert(atDvs <= compacted,
+      s"scan with 2 live DVs launched $atDvs jobs, after compaction $compacted")
+  }
+
+  test("V2 writers write the same bytes under the session's Hadoop conf") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("s", StringType)))
+    def written(conf: org.apache.spark.broadcast.Broadcast[
+                  org.apache.spark.util.SerializableConfiguration],
+                partCols: Seq[String]): Seq[Array[Byte]] = {
+      val root = Files.createTempDirectory("graft_table_conf_")
+      val w = new GraftWriterFactory(root.toString, "stage", schema, conf,
+        partCols = partCols).createWriter(0, 0L)
+      (1 to 4).foreach(i => w.write(
+        InternalRow(i.toLong, UTF8String.fromString(s"r${i % 2}"))))
+      val GraftCommitMessage(rels) = w.commit()
+      rels.map(r => Files.readAllBytes(root.resolve(r)))
+    }
+    val default = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(
+        new org.apache.hadoop.conf.Configuration()))
+    for (parts <- Seq(Nil, Seq("s"))) {
+      val a = written(GraftSession.hadoopConf(spark), parts)
+      val b = written(default, parts)
+      assert(a.nonEmpty && a.map(_.toSeq) == b.map(_.toSeq),
+        s"partCols=$parts: files differ")
+    }
+  }
+
   test("merge commits serve their latest generation through the connector") {
     import spark.implicits._
     val t = fresh()
