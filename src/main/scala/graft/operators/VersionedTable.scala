@@ -166,89 +166,96 @@ object VersionedTable {
     if (cs.isEmpty) Nil
     else {
       enforceConstraints(s, table, dataDir, prior, what)
-      cs.map(CheckPrefix + _).filterNot(carried.contains)
+      cs.map(Check(_).line).filterNot(carried.contains)
     }
   }
 
   /** Manifest lines for freshly-staged files under `dataDir`, matching
-    * the INDEX SHAPE of the base manifest (r15 — ingest must not
-    * degrade pruning until the next compaction): stats-bearing data
-    * lines when the base declares STATSCOL, ROWS lines when the base
-    * records them, BLOOM and secondary-zonemap lines recomputed for
-    * every column the base indexes. Plain lines when the base declares
-    * nothing — deciding costs one string scan of the already-resolved
-    * base lines, no extra IO; recomputation costs one aggregation per
+    * the INDEX SHAPE of the base snapshot (ingest must not degrade
+    * pruning until the next compaction): stats-bearing data lines when
+    * the base declares STATSCOL, ROWS lines when the base records them,
+    * BLOOM and secondary-zonemap lines recomputed for every column the
+    * base indexes. Plain lines when the base declares nothing —
+    * deciding costs no IO; recomputation costs one aggregation per
     * indexed column over the NEW files only. */
   private def indexedLines(s: SparkSession, table: Path, dataDir: Path,
-                           baseLines: Seq[String],
+                           base: Snapshot,
                            only: String => Boolean = _ => true): Seq[String] = {
-    val scOpt = baseLines.collectFirst {
-      case l if l.startsWith(StatsColPrefix) =>
-        l.substring(StatsColPrefix.length)
-    }
-    val hadRows = baseLines.exists(_.startsWith(RowsPrefix))
-    val bloomCols = baseLines.collect {
-      case l if l.startsWith(BloomPrefix) => l.split('\t')(2)
-    }.distinct
-    val secCols = baseLines.collect {
-      case l if l.startsWith(StatsPrefix) => l.split('\t')(2)
-    }.distinct.filterNot(scOpt.contains)
-    val data = scOpt match {
+    val hadRows = base.rowCounts.nonEmpty
+    val bloomCols = base.bloomColumns
+    val secCols = base.secondaryStats.map(_._2).distinct
+      .filterNot(base.statsCol.contains)
+    val data = base.statsCol match {
       case Some(c) =>
-        val st = fileColStats(s, table, dataDir, c).filter(t => only(t._1))
-        st.map { case (f, mn, mx, _) => s"$f\t$mn\t$mx" } ++
-          (if (hadRows)
-             st.map { case (f, _, _, n) => s"$RowsPrefix$f\t$n" }
-           else Nil)
+        statsRowsLines(fileColStats(s, table, dataDir, c)
+          .filter(t => only(t._1)), hadRows)
       case None =>
         partFiles(table, dataDir).filter(only) ++
           (if (hadRows)
-             fileRowsLines(s, table, dataDir)
-               .filter(l => only(l.split('\t')(1)))
+             fileRowsLines(s, table, dataDir).filter(l => only(fileOfLine(l)))
            else Nil)
     }
     data ++
-      bloomCols.flatMap(c => fileBloomLines(s, table, dataDir, c)
-        .filter(l => only(l.split('\t')(1)))) ++
-      secCols.flatMap(c =>
-        fileColStats(s, table, dataDir, c).filter(t => only(t._1)).map {
-          case (f, mn, mx, _) => s"$StatsPrefix$f\t$c\t$mn\t$mx"
-        })
+      (bloomCols.flatMap(fileBloomLines(s, table, dataDir, _)) ++
+        secCols.flatMap(secondaryLines(s, table, dataDir, _)))
+        .filter(l => only(fileOfLine(l)))
   }
 
-  /** [[indexedLines]] against the LATEST manifest — the V2 batch
-    * INSERT path's index continuity (executors staged the files under
-    * `dataDir`; the driver shapes their manifest lines). Plain lines
-    * when the table declares no indexes or has no commits yet.
-    * `files` is the commit-message-derived list of table-relative
-    * staged paths: the manifest is restricted to exactly those files,
-    * so an orphan left in the staging dir by a zombie/speculative task
-    * attempt (whose abort never ran) is never committed — it stays
-    * invisible and reclaimable, same as every raced commit attempt's
-    * leftovers. */
+  /** The data file a per-file index line (BLOOM/STATS/ROWS) indexes. */
+  private def fileOfLine(line: String): String = fileOf(parse(line)).get
+
+  /** Data lines with their zonemaps for `stats` (per-file path, min,
+    * max, rows), plus a ROWS line per file when `rows`. */
+  private def statsRowsLines(stats: Seq[(String, Long, Long, Long)],
+                             rows: Boolean): Seq[String] =
+    stats.map { case (f, mn, mx, _) => DataFile(f, Some((mn, mx))).line } ++
+      (if (rows) stats.map { case (f, _, _, n) => Rows(f, n).line } else Nil)
+
+  /** Secondary-zonemap STATS lines on `col` for the files under
+    * `dataDir`. */
+  private def secondaryLines(s: SparkSession, table: Path, dataDir: Path,
+                             col: String): Seq[String] =
+    fileColStats(s, table, dataDir, col).map { case (f, mn, mx, _) =>
+      ColStats(f, col, mn, mx).line }
+
+  /** [[indexedLines]] against `base` — the V2 batch INSERT path's index
+    * continuity (executors staged the files under `dataDir`; the
+    * driver shapes their manifest lines). Plain lines when the table
+    * declares no indexes or has no commits yet. `files` is the
+    * commit-message-derived list of table-relative staged paths: the
+    * manifest is restricted to exactly those files, so an orphan left
+    * in the staging dir by a zombie/speculative task attempt (whose
+    * abort never ran) is never committed — it stays invisible and
+    * reclaimable, same as every raced commit attempt's leftovers. */
   private[graft] def ingestLines(s: SparkSession, table: Path,
-                                 dataDir: Path,
+                                 base: Option[Snapshot], dataDir: Path,
                                  files: Seq[String]): Seq[String] = {
     val only = files.toSet
-    latestVersion(table) match {
-      case Some(v) =>
-        indexedLines(s, table, dataDir, manifest(table, v), only)
+    base match {
+      case Some(b) => indexedLines(s, table, dataDir, b, only)
       case None => partFiles(table, dataDir).filter(only)
     }
   }
 
-  /** [[ingestLines]] plus the restated STATSCOL declaration — a FULL
-    * manifest (INSERT OVERWRITE) must restate table-wide declarations
-    * or the rewrite silently drops them (the same amnesia rule as
-    * CHECK constraints). */
+  /** [[ingestLines]] plus the restated table-wide declarations
+    * (STATSCOL, PARTCOL, PARTSPEC) — a FULL manifest (INSERT OVERWRITE)
+    * must restate them or the rewrite silently drops them (the same
+    * amnesia rule as CHECK constraints). */
   private[graft] def overwriteLines(s: SparkSession, table: Path,
-                                    dataDir: Path,
+                                    base: Option[Snapshot], dataDir: Path,
                                     files: Seq[String]): Seq[String] =
-    ingestLines(s, table, dataDir, files) ++
-      latestVersion(table).toSeq.flatMap(v =>
-        statsColumns(table, v).headOption.map(StatsColPrefix + _) ++
-          declaredPartitionCols(table, v).map(PartColPrefix + _) ++
-          partSpecLines(table, v))
+    ingestLines(s, table, base, dataDir, files) ++
+      base.toSeq.flatMap(restatedDeclarations(_, keepStatsCol = true))
+
+  /** The table-wide declarations a full-manifest rewrite of `base`
+    * restates: STATSCOL (when kept), PARTCOL and every PARTSPEC
+    * generation (all generations carry, so numbering and history
+    * survive any number of rewrites). */
+  private def restatedDeclarations(base: Snapshot,
+                                   keepStatsCol: Boolean): Seq[String] =
+    (if (keepStatsCol) base.statsCol.map(StatsCol(_).line).toSeq else Nil) ++
+      base.declaredPartitionCols.map(PartCol(_).line) ++
+      base.partitionSpecs.map { case (g, cs) => PartSpec(g, cs).line }
 
   /** Each commit ATTEMPT writes under its own unique slug: a crashed
     * or raced attempt's files can never collide with the winner's —
@@ -311,228 +318,377 @@ object VersionedTable {
     val dataDir = newDataDir(table, version)
     writeData(df, dataDir)
     val stats = fileColStats(s, table, dataDir, statsCol)
-    val lines = stats.map { case (f, mn, mx, _) => s"$f\t$mn\t$mx" }
     // ROWS lines ride the same single stats pass — metadata-only
-    // count(*) costs nothing extra at commit time.
-    val rows = if (rowCounts)
-      stats.map { case (f, _, _, n) => s"$RowsPrefix$f\t$n" } else Nil
-    // `carried` lines (an append commit) keep whatever stats their own
-    // commit recorded — stats ride the manifest line, so a carry is
-    // byte-verbatim exactly as in [[commit]].
+    // count(*) costs nothing extra at commit time. `carried` lines (an
+    // append commit) keep whatever stats their own commit recorded —
+    // stats ride the manifest line, so a carry is byte-verbatim exactly
+    // as in [[commit]].
     publish(table, version,
-      carried ++ lines ++ rows ++
+      carried ++ statsRowsLines(stats, rowCounts) ++
         carryChecks(s, table, version, dataDir, carried,
-          "commitWithStats") :+ s"$StatsColPrefix$statsCol")
-    lines.map(_.split('\t').head)
+          "commitWithStats") :+ StatsCol(statsCol).line)
+    stats.map(_._1)
   }
 
-  /** Deletion-vector manifest lines are namespaced `DV\t<path>\t<keyCol>`
-    * — a plain data path can never collide (paths live under data/,
-    * the literal "DV" does not). */
-  private val DvPrefix = "DV\t"
+  // ===== THE MANIFEST LINE FORMAT =====
 
-  /** Schema-evolution manifest lines (r13): `RENAME\t<from>\t<to>` and
-    * `WIDEN\t<col>\t<sqlType>` ride manifests like DV lines — a
-    * metadata-only commit records the mapping, no data file is ever
-    * rewritten (the field-ID column-mapping idea of real formats,
-    * keyed by name since this layer never reuses a dropped name).
-    * `ADDCOL\t<name>\t<sqlType>` (r16) appends a NULLABLE column the
-    * same way: files written before it surface typed NULLs at read
-    * time, files written after it carry real values, and the next
-    * compaction materializes the union — the Delta/Iceberg add-column
-    * story, still O(1) metadata at any table size. */
-  private val RenamePrefix = "RENAME\t"
-  private val WidenPrefix = "WIDEN\t"
-  private val AddColPrefix = "ADDCOL\t"
-  /** `DROPCOL\t<name>` (r16): the inverse of ADDCOL, same O(1)
-    * metadata cost — readers stop SERVING the column (files still
-    * carry the bytes until the next compaction physically drops them),
-    * time travel below the commit still sees it. Refused while the
-    * column is load-bearing (stats/bloom/zonemap/DV-key/partition/
-    * CHECK) or while rename/widen mappings live (those record the
-    * column's footer-time name; a drop recorded under an evolved name
-    * would miss). */
-  private val DropColPrefix = "DROPCOL\t"
+  /** One parsed manifest line. [[parse]] is the one reader of the line
+    * format and each entry's `line` its one writer; the kinds, their
+    * fields and their carry rules are tabulated on [[Snapshot]]. */
+  sealed trait Entry { def line: String }
 
-  /** Per-file bloom-filter manifest lines (r13):
-    * `BLOOM\t<file>\t<col>\t<base64 bits>` — a point-lookup skipping
-    * index riding the manifest next to the zonemap stats, pruning
-    * equality probes on UNCLUSTERED columns (see [[FileBloom]]). */
-  private val BloomPrefix = "BLOOM\t"
+  /** A data file; `stats` is its primary zonemap (min, max of the
+    * STATSCOL column) when the line records one. */
+  final case class DataFile(path: String,
+      stats: Option[(Long, Long)] = None) extends Entry {
+    def min: Long = stats.fold(Long.MinValue)(_._1)
+    def max: Long = stats.fold(Long.MaxValue)(_._2)
+    def line: String = stats.fold(path) { case (mn, mx) => s"$path\t$mn\t$mx" }
+  }
+  final case class Dv(path: String, keyCol: String, origin: Long)
+      extends Entry {
+    def line: String = s"DV\t$path\t$keyCol\t$origin"
+  }
+  /** A schema mapping: `op` is rename (`col` becomes `arg`), widen or
+    * addcol (`arg` is the SQL type), or dropcol (`arg` is empty). */
+  final case class Mapping(op: String, col: String, arg: String)
+      extends Entry {
+    def line: String =
+      if (op == "dropcol") s"DROPCOL\t$col"
+      else s"${op.toUpperCase(java.util.Locale.ROOT)}\t$col\t$arg"
+  }
+  final case class Bloom(file: String, col: String, b64: String)
+      extends Entry {
+    def line: String = s"BLOOM\t$file\t$col\t$b64"
+  }
+  final case class StatsCol(col: String) extends Entry {
+    def line: String = s"STATSCOL\t$col"
+  }
+  final case class ColStats(file: String, col: String, min: Long, max: Long)
+      extends Entry {
+    def line: String = s"STATS\t$file\t$col\t$min\t$max"
+  }
+  final case class Rows(file: String, count: Long) extends Entry {
+    def line: String = s"ROWS\t$file\t$count"
+  }
+  final case class Check(expr: String) extends Entry {
+    def line: String = s"CHECK\t$expr"
+  }
+  final case class PartCol(col: String) extends Entry {
+    def line: String = s"PARTCOL\t$col"
+  }
+  final case class PartSpec(gen: Long, specs: Seq[String]) extends Entry {
+    def line: String = s"PARTSPEC\t$gen\t${specs.mkString(",")}"
+  }
+  final case class Ndv(col: String, distinct: Long, nulls: Long)
+      extends Entry {
+    def line: String = s"NDV\t$col\t$distinct\t$nulls"
+  }
+  final case class MvOf(base: Long) extends Entry {
+    def line: String = s"MVOF\t$base"
+  }
+  final case class MvSql(groupCols: Seq[String], sql: String) extends Entry {
+    def line: String = s"MVSQL\t${groupCols.mkString(",")}\t$sql"
+  }
+  final case class MvAvg(name: String, sumCol: String, countCol: String)
+      extends Entry {
+    def line: String = s"MVAVG\t$name\t$sumCol\t$countCol"
+  }
+  final case class MvFold(col: String, op: String) extends Entry {
+    def line: String = s"MVFOLD\t$col\t$op"
+  }
+  final case class Kind(verb: String) extends Entry {
+    def line: String = s"KIND\t$verb"
+  }
+  final case class Base(version: Long) extends Entry {
+    def line: String = s"BASE\t$version"
+  }
+  final case class Rm(file: String) extends Entry {
+    def line: String = s"RM\t$file"
+  }
 
-  /** `STATSCOL\t<col>` (r13): records WHICH column a commit's per-file
-    * min/max describe, making the manifest fully self-describing —
-    * readers that can't pass options (a SQL catalog scan) still know
-    * what to prune on. */
-  private val StatsColPrefix = "STATSCOL\t"
+  /** Parse one manifest line. A line with no known kind prefix is a
+    * data file: data paths live under `data/`, so no kind literal can
+    * collide with one. */
+  def parse(line: String): Entry = {
+    val tab = line.indexOf('\t')
+    if (tab < 0) return DataFile(line)
+    val rest = line.substring(tab + 1)
+    lazy val f = line.split("\t", -1)
+    line.substring(0, tab) match {
+      case "DV" => Dv(f(1), f(2), f(3).toLong)
+      case "RENAME" | "WIDEN" | "ADDCOL" =>
+        Mapping(f(0).toLowerCase(java.util.Locale.ROOT), f(1), f(2))
+      case "DROPCOL" => Mapping("dropcol", rest, "")
+      case "BLOOM" => Bloom(f(1), f(2), f(3))
+      case "STATSCOL" => StatsCol(rest)
+      case "STATS" => ColStats(f(1), f(2), f(3).toLong, f(4).toLong)
+      case "ROWS" => Rows(f(1), f(2).toLong)
+      case "CHECK" => Check(rest)
+      case "PARTCOL" => PartCol(rest)
+      case "PARTSPEC" =>
+        // Paren-aware split: `bucket(8,doc_id),lang` is two specs.
+        val t = rest.indexOf('\t')
+        PartSpec(rest.substring(0, t).toLong,
+          PartTransform.split(rest.substring(t + 1)))
+      case "NDV" => Ndv(f(1), f(2).toLong, f(3).toLong)
+      case "MVOF" => MvOf(rest.trim.toLong)
+      case "MVSQL" =>
+        val t = rest.indexOf('\t')
+        MvSql(rest.substring(0, t).split(',').toSeq.map(_.trim)
+          .filter(_.nonEmpty), rest.substring(t + 1))
+      case "MVAVG" => MvAvg(f(1), f(2), f(3))
+      case "MVFOLD" => MvFold(f(1), f(2))
+      case "KIND" => Kind(rest)
+      case "BASE" => Base(rest.trim.toLong)
+      case "RM" => Rm(rest)
+      case _ => DataFile(f(0), Some((f(1).toLong, f(2).toLong)))
+    }
+  }
 
-  /** `STATS\t<file>\t<col>\t<mn>\t<mx>` (r13): SECONDARY per-file
-    * zonemaps — the primary stats column rides the data line itself;
-    * additional columns (a z-order's other dimensions) ride these meta
-    * lines, so a multi-dimensional box predicate prunes on EVERY
-    * clustered column at once (see [[commitMultiStats]]/[[readBox]]). */
-  private val StatsPrefix = "STATS\t"
+  /** The data file an entry describes: a data line's own path, or the
+    * file a BLOOM/STATS/ROWS line indexes (it dies with that file when
+    * a rewrite or an RM removes it). Table-wide lines describe none. */
+  private def fileOf(e: Entry): Option[String] = e match {
+    case d: DataFile => Some(d.path)
+    case b: Bloom => Some(b.file)
+    case s: ColStats => Some(s.file)
+    case r: Rows => Some(r.file)
+    case _ => None
+  }
 
-  /** `ROWS\t<file>\t<count>` (r13): per-file ROW COUNTS in the manifest
-    * — what lets `count(*)` (and partition-grouped counts) be answered
-    * from METADATA alone, never opening a data file: the
-    * Iceberg-manifest/Delta-checkpoint `record_count` idea. At 100 TB
-    * the difference between a row-count dashboard query costing one
-    * manifest read and costing a full table scan. Written by
-    * stats-bearing commits on request ([[commitWithStats]]/
-    * [[commitPartitioned]] `rowCounts = true`); readers that predate
-    * the line kind skip it like any meta line. */
-  private val RowsPrefix = "ROWS\t"
+  /** The data files among `lines`, by path. */
+  private def dataFiles(lines: Seq[String]): Seq[String] =
+    lines.map(parse).collect { case d: DataFile => d.path }
 
-  /** `CHECK\t<sql expr>` (r13): a TABLE CONSTRAINT riding the manifest
-    * — the Delta `ADD CONSTRAINT` idea: once declared, every
-    * row-adding commit path validates its NEW files against the live
-    * CHECK expressions before publishing (one aggregate pass over the
-    * batch — cost O(commit), never O(table)), so a poisoned batch
-    * fails BEFORE the commit point and the table can never hold a
-    * violating row. SQL semantics: a row violates only when the
-    * expression evaluates FALSE — NULL passes, as standard CHECK. */
-  private val CheckPrefix = "CHECK\t"
+  /** One resolved chain level: its KIND-free lines, parsed, the
+    * commit's own KIND and how many manifest files resolving it reads. */
+  private final case class Level(lines: Vector[(String, Entry)],
+      kind: Option[String], depth: Int)
 
-  /** `PARTCOL\t<col>` (r16): the DECLARED partition layout — written
-    * by DDL `CREATE TABLE … PARTITIONED BY`, where the layout must be
-    * known BEFORE any data file's path can exhibit it (the zero-row
-    * bootstrap is flat). Readers and writers consult
-    * [[partitionLayout]] = declared ∪ path-derived, so DDL-declared
-    * and `commitPartitioned`-grown layouts behave identically. Like
-    * STATSCOL, a full-manifest rewrite must restate it. */
-  private val PartColPrefix = "PARTCOL\t"
-
-  /** `PARTSPEC\t<gen>\t<c1,c2,…>` (r17): a NUMBERED partition-spec
-    * GENERATION — Iceberg's partition-spec-evolution idea: the table's
-    * WRITE layout can change mid-life in one O(1) metadata commit,
-    * rewriting nothing. Old files keep their `col=value` paths (every
-    * file self-describes the spec its PATH exhibits, and readers
-    * re-attach/prune each file under its own spec), new commits land
-    * under the HIGHEST generation ([[writePartitionLayout]]), and a
-    * compaction un-rags the table by rewriting the whole snapshot
-    * under the live spec. An EMPTY column list is a legal generation
-    * (evolve back to flat). Like STATSCOL/PARTCOL, a full-manifest
-    * rewrite must restate every generation line (amnesia rule). */
-  private val PartSpecPrefix = "PARTSPEC\t"
-
-  /** `MVOF\t<base version>` (r17): a MATERIALIZED VIEW's refresh
-    * CURSOR — the base-table version whose rows this MV snapshot
-    * reflects (the Delta/materialized-lake idea: an MV is an
-    * aggregate TABLE plus a position in its base's commit log).
-    * Latest-wins (each refresh adds one; readers take the max), so a
-    * refresh is an ordinary delta commit and full rewrites restate
-    * only the live cursor. [[refreshMaterialized]] consumes it. */
-  private val MvOfPrefix = "MVOF\t"
-
-  /** `NDV\t<col>\t<distinct>\t<nulls>` (r17): table-level COLUMN
-    * statistics from `ANALYZE` — the approximate distinct count (HLL
-    * sketch pass, the only affordable answer at 100 TB) and null
-    * count the V2 scan serves to Catalyst as `columnStats`, which is
-    * what a cost-based optimizer sizes join OUTPUTS with (sizeInBytes
-    * alone only sizes inputs). Latest line per column wins, so
-    * re-analyzing is an ordinary delta commit. Appends make the
-    * numbers drift (advisory, like every engine's ANALYZE); full
-    * REWRITES drop them — a compaction reorganizes enough that stale
-    * certainty is worse than none. */
-  private val NdvPrefix = "NDV\t"
-
-  /** `MVSQL\t<group cols csv>\t<sql>` (r17): the MV's DEFINITION as
-    * stored SQL — the aggregate statement (base referenced as
-    * `__BASE__`) plus its group columns, which is what makes the MV
-    * refreshable FROM SQL with no Scala in sight: a refresh runs the
-    * stored statement over the delta and folds partials by summing
-    * every non-group column (the sum/count-mergeable restriction
-    * every incremental view-maintenance system imposes; avg = sum +
-    * count). Declared once at CREATE, carried like CHECK lines. */
-  private val MvSqlPrefix = "MVSQL\t"
-
-  /** `MVAVG\t<served name>\t<sum col>\t<count col>` (r19): one line
-    * per `avg(expr) AS name` the MV's CREATE statement declared. The
-    * declaration REWRITES the avg into maintained sum+count partial
-    * columns (avg itself does not fold across deltas — old_avg +
-    * delta_avg is not the ratio; the partials fold by the ordinary
-    * SUM merge), and this line records how [[readMaterializedSql]]
-    * recombines them at serve time: `name = CAST(sum AS
-    * DOUBLE)/count`, NULL where the count is 0. Carried by every
-    * refresh like the MVSQL definition. */
-  private val MvAvgPrefix = "MVAVG\t"
-
-  /** `MVFOLD\t<col>\t<min|max>` (r19): the per-column merge operator
-    * of an MV output that is NOT sum-folded — bare min/max aggregates
-    * are incrementally maintainable for APPEND-ONLY deltas (new_min =
-    * min(old_min, delta_min)), so the declaration admits them and
-    * records the fold here; columns without a line fold by SUM as
-    * always. A DV-delete refresh REFUSES while any MVFOLD line lives:
-    * a deletion may have removed the extremum, and min is not
-    * subtractable — re-create is the only honest answer. Carried by
-    * every refresh like MVSQL/MVAVG. */
-  private val MvFoldPrefix = "MVFOLD\t"
-
-  /** `KIND\t<verb>` (r14): a PER-COMMIT annotation naming the commit's
-    * intent — `update` (a stats-pruned copy-on-write rewrite) or
-    * `compact` (a content-preserving reorganization, the Delta
-    * `dataChange=false` idea). The change feed keys on it: an `update`
-    * commit's RM'd/added files serve as `update_preimage`/
-    * `update_postimage` rows; a `compact` commit serves NOTHING (no
-    * data changed — downstream mirrors skip it instead of
-    * full-restarting). Unlike every other meta line, a KIND line
-    * describes ONE commit, never the table: [[manifest]] strips it
-    * during resolution, so it can never leak into a later version's
-    * carry or checkpoint. Read it via [[commitKind]]. */
-  private val KindPrefix = "KIND\t"
-
-  /** The per-commit KIND annotation of `version`, if its writer
-    * declared one ("update" / "compact"). */
-  def commitKind(table: Path, version: Long): Option[String] =
-    rawManifest(table, version).collectFirst {
-      case l if l.startsWith(KindPrefix) => l.substring(KindPrefix.length)
+  /** Resolve `version` into `memo`, reading each manifest of its BASE
+    * chain that `memo` does not already hold once. A `BASE\tN` head
+    * splices in N's resolved lines; `RM\t<f>` tail lines drop f's data
+    * line and every line indexing f; KIND lines describe one commit and
+    * are stripped, so no carry or checkpoint inherits one. Chain depth
+    * is bounded by the writers' `checkpointEvery`. */
+  private def resolve(table: Path, version: Long,
+      memo: Map[Long, Level]): Map[Long, Level] =
+    if (memo.contains(version)) memo
+    else {
+      val raw = rawManifest(table, version).toVector.map(l => (l, parse(l)))
+      val kind = raw.collectFirst { case (_, Kind(k)) => k }
+      val (lines, depth, m) = raw.headOption.map(_._2) match {
+        case Some(Base(b)) =>
+          val m = resolve(table, b, memo)
+          val (rm, added) = raw.tail.partition(_._2.isInstanceOf[Rm])
+          val dead = rm.map(_._2.asInstanceOf[Rm].file).toSet
+          val kept = if (dead.isEmpty) m(b).lines
+            else m(b).lines.filterNot(l => fileOf(l._2).exists(dead))
+          (kept ++ added, m(b).depth + 1, m)
+        case _ => (raw, 1, memo)
+      }
+      m + (version ->
+        Level(lines.filterNot(_._2.isInstanceOf[Kind]), kind, depth))
     }
 
-  private def isMetaLine(line: String): Boolean =
-    line.startsWith(DvPrefix) || line.startsWith(RenamePrefix) ||
-      line.startsWith(WidenPrefix) || line.startsWith(AddColPrefix) ||
-      line.startsWith(DropColPrefix) || line.startsWith(BloomPrefix) ||
-      line.startsWith(StatsColPrefix) || line.startsWith(StatsPrefix) ||
-      line.startsWith(RowsPrefix) || line.startsWith(CheckPrefix) ||
-      line.startsWith(KindPrefix) || line.startsWith(PartColPrefix) ||
-      line.startsWith(PartSpecPrefix) || line.startsWith(MvOfPrefix) ||
-      line.startsWith(MvSqlPrefix) || line.startsWith(NdvPrefix) ||
-      line.startsWith(MvAvgPrefix) || line.startsWith(MvFoldPrefix)
+  /** ONE TABLE VERSION, parsed once: a single resolution of the
+    * version's manifest chain and a single parse of its lines. Every
+    * reader takes one snapshot per statement and reads its fields; the
+    * derived views (layouts, transforms, decoded bloom bits) are lazy,
+    * so a question costs only its own work.
+    *
+    * The line kinds, their fields, and what a FULL-manifest rewrite
+    * (compaction, transact, overwrite, full-touch DML) does with them:
+    * {{{
+    *   line                               field(s)               full rewrite
+    *   <path>[\t<min>\t<max>]             statsManifest          lists its own new files
+    *   DV\t<dv path>\t<key col>\t<origin> deletionVectors        folds them into data
+    *   RENAME\t<from>\t<to>               columnMappings         materializes (drops) them
+    *   WIDEN|ADDCOL\t<col>\t<sql type>    columnMappings         materializes (drops) them
+    *   DROPCOL\t<col>                     columnMappings         materializes (drops) them
+    *   BLOOM\t<file>\t<col>\t<base64>     blooms                 recomputes for its files
+    *   STATSCOL\t<col>                    statsColumns           restates
+    *   STATS\t<file>\t<col>\t<min>\t<max> secondaryStats         recomputes for its files
+    *   ROWS\t<file>\t<count>              rowCounts              recomputes iff base had any
+    *   CHECK\t<sql expr>                  checks                 restates
+    *   PARTCOL\t<col>                     declaredPartitionCols  restates
+    *   PARTSPEC\t<gen>\t<spec,spec,…>     partitionSpecs         restates every generation
+    *   NDV\t<col>\t<distinct>\t<nulls>    ndvStats               drops them
+    *   MVOF\t<base version>               mvCursor               restates the live cursor
+    *   MVSQL\t<group cols>\t<sql>         mvDefinition           an MV refresh restates
+    *   MVAVG\t<name>\t<sum col>\t<count>  mvAvgFolds             an MV refresh restates
+    *   MVFOLD\t<col>\t<min|max>           mvFoldOps              an MV refresh restates
+    *   KIND\t<update|compact>             kind (this commit)     never carried
+    *   BASE\t<version> (first line)       (delta structure)      never in a resolution
+    *   RM\t<file>                         (delta structure)      never in a resolution
+    * }}}
+    *
+    * Why the kinds are what they are:
+    *  - DV: merge-on-read delete. A DV is SCOPED to the data files of
+    *    its origin version, so a later append that re-inserts a deleted
+    *    key survives (sequence-number semantics, not a tombstone).
+    *  - Mappings are O(1) metadata schema evolution: no data file is
+    *    rewritten. Files written before an ADDCOL read typed NULLs; a
+    *    DROPCOL stops serving a column whose bytes stay until the next
+    *    compaction, and is refused while the column is load-bearing.
+    *  - STATSCOL makes the manifest self-describing, so readers that
+    *    cannot pass options (a SQL catalog scan) still know what the
+    *    data-line zonemaps describe; STATS lines add zonemaps for a
+    *    z-order's other dimensions.
+    *  - ROWS answers count(*) from metadata alone (the Iceberg
+    *    `record_count` idea); a file without a line is simply absent,
+    *    so callers check coverage.
+    *  - CHECK is a table contract (Delta ADD CONSTRAINT): every
+    *    row-adding commit validates its new files against it before
+    *    the commit point; NULL passes, as in SQL.
+    *  - PARTCOL declares a layout before any path can exhibit it (the
+    *    zero-row DDL bootstrap is flat); PARTSPEC numbers the
+    *    generations of an evolving layout (Iceberg spec evolution):
+    *    old files keep their paths, new commits land under the highest
+    *    generation, and an empty column list is a legal (flat) one.
+    *  - NDV: ANALYZE column statistics, latest per column wins.
+    *    Appends make them drift (advisory); a rewrite drops them,
+    *    because stale certainty is worse than none.
+    *  - MV lines: an MV is an aggregate table plus a cursor into its
+    *    base's log (latest wins). MVSQL stores the refreshable
+    *    definition, MVAVG how an avg recombines from its maintained
+    *    sum/count partials, MVFOLD a min/max column's merge operator
+    *    (a DV-delete refresh refuses while one lives).
+    *  - KIND names one commit's intent: `update` replays through the
+    *    change feed as preimage/postimage pairs, `compact` serves
+    *    nothing (the Delta `dataChange=false` idea). */
+  final class Snapshot private (val table: Path, val version: Long,
+      levels: Map[Long, Level]) {
+    private val level = levels(version)
 
-  /** Is `line` a metadata line (never a data-file line)? The change
-    * feed's skip set: meta lines carry no rows to serve. */
-  private[graft] def isMetaManifestLine(line: String): Boolean =
-    isMetaLine(line)
+    /** The resolved lines — what a full-manifest writer carries
+      * forward verbatim. */
+    val lines: Seq[String] = level.lines.map(_._1)
+    val entries: Seq[Entry] = level.lines.map(_._2)
+    /** This commit's own KIND annotation, if its writer declared one. */
+    def kind: Option[String] = level.kind
+    /** How many manifest files resolving this version reads (1 for a
+      * full manifest): the checkpoint-cadence input. */
+    def chainLength: Int = level.depth
 
-  /** Does any data-file path of `version`'s manifest carry Hive-style
-    * `col=value` partition segments (a [[commitPartitioned]] layout)?
-    * Those files' partition column lives ONLY in the path — any
-    * rewrite that reads leaves raw and writes flat would silently drop
-    * it, so partition-layout tables gate the copy-on-write verbs. */
-  private def physicalPartitionColsOf(table: Path,
-                                      version: Long): Seq[String] =
-    statsManifest(table, version)
-      .flatMap(_._1.split('/').dropRight(1).toSeq.collect {
+    /** Data files as (path, min, max); a file committed without stats
+      * has the full range (never skippable, always correct). */
+    lazy val statsManifest: Seq[(String, Long, Long)] =
+      entries.collect { case d: DataFile => (d.path, d.min, d.max) }
+    lazy val files: Seq[String] = statsManifest.map(_._1)
+    lazy val rowCounts: Seq[(String, Long)] =
+      entries.collect { case Rows(f, n) => (f, n) }
+    /** Declared stats columns, distinct in commit order (practically
+      * one per table). */
+    lazy val statsColumns: Seq[String] =
+      entries.collect { case StatsCol(c) => c }.distinct
+    def statsCol: Option[String] = statsColumns.headOption
+    /** (dvPath, keyColumn, originVersion). */
+    lazy val deletionVectors: Seq[(String, String, Long)] =
+      entries.collect { case Dv(p, k, o) => (p, k, o) }
+    /** (op, col, arg) in commit order — see [[Mapping]]. */
+    lazy val columnMappings: Seq[(String, String, String)] =
+      entries.collect { case Mapping(op, c, a) => (op, c, a) }
+    /** Bloom-indexed columns, distinct in commit order. */
+    lazy val bloomColumns: Seq[String] =
+      entries.collect { case b: Bloom => b.col }.distinct
+    /** (file, column, filter bits), decoded on first use. */
+    lazy val blooms: Seq[(String, String, Array[Byte])] =
+      entries.collect { case Bloom(f, c, b64) =>
+        (f, c, java.util.Base64.getDecoder.decode(b64)) }
+    /** Secondary zonemaps: (file, column, min, max). */
+    lazy val secondaryStats: Seq[(String, String, Long, Long)] =
+      entries.collect { case ColStats(f, c, mn, mx) => (f, c, mn, mx) }
+    /** CHECK constraints in declaration order. */
+    lazy val checks: Seq[String] =
+      entries.collect { case Check(e) => e }.distinct
+    /** DDL-declared partition columns, in declaration order. */
+    lazy val declaredPartitionCols: Seq[String] =
+      entries.collect { case PartCol(c) => c }
+    /** Partition-spec generations, ascending: (gen, specs). */
+    lazy val partitionSpecs: Seq[(Long, Seq[String])] =
+      entries.collect { case PartSpec(g, cs) => (g, cs) }.sortBy(_._1)
+    /** Column statistics: column → (approx distinct, nulls). */
+    lazy val ndvStats: Map[String, (Long, Long)] =
+      entries.collect { case Ndv(c, d, n) => c -> (d, n) }.toMap
+    /** The MV refresh cursor: the highest MVOF base version. */
+    lazy val mvCursor: Option[Long] =
+      entries.collect { case MvOf(b) => b }.maxOption
+    /** The MV's stored definition: (group columns, statement). */
+    lazy val mvDefinition: Option[(Seq[String], String)] =
+      entries.collectFirst { case MvSql(g, sql) => (g, sql) }
+    /** Non-SUM merge operators: column → "min" | "max". */
+    lazy val mvFoldOps: Map[String, String] =
+      entries.collect { case MvFold(c, op) => c -> op }.toMap
+    /** (served name, sum partial, count partial). */
+    lazy val mvAvgFolds: Seq[(String, String, String)] =
+      entries.collect { case MvAvg(n, s, c) => (n, s, c) }
+
+    /** Every path-borne `col=value` segment name, hidden transform
+      * segments included — the physical layout (`t$partitions`). */
+    private lazy val pathPartitionCols: Seq[String] =
+      files.flatMap(_.split('/').dropRight(1).toSeq.collect {
         case seg if seg.contains('=') => seg.substring(0, seg.indexOf('='))
       }).distinct
+    private lazy val transforms: Seq[PartTransform] =
+      partitionSpecs.flatMap(_._2).map(PartTransform.parse)
+        .filterNot(_.isIdentity)
+    /** Derived segment names of every transform any generation
+      * declared (`ts_day`, `doc_id_bucket`): they ride paths and prune,
+      * but are never served as columns. Retired generations count —
+      * their files still carry the segments. */
+    lazy val hiddenSegmentNames: Set[String] =
+      transforms.map(_.derivedName).toSet
+    /** Every transform spec any generation declared — what the scan
+      * prunes raw-column predicates through. */
+    lazy val liveTransforms: Seq[PartTransform] = transforms.distinct
+    /** Path-derived partition columns without hidden segments, in
+      * first-appearance order: what the served schema re-attaches. */
+    lazy val partitionCols: Seq[String] =
+      pathPartitionCols.filterNot(hiddenSegmentNames)
+    /** Declared ∪ every path-borne segment, hidden ones included. */
+    lazy val physicalPartitionLayout: Seq[String] =
+      (declaredPartitionCols ++ pathPartitionCols).distinct
+    /** Declared columns first, then any path-derived one: what readers
+      * re-attach and `GraftTable.partitioning()` reports. */
+    lazy val partitionLayout: Seq[String] =
+      (declaredPartitionCols ++ partitionCols).distinct
+    /** The layout NEW writes land under: the latest spec generation if
+      * the table ever evolved, else [[partitionLayout]]. Entries may be
+      * transform specs (`days(ts)`). Readers keep the union. */
+    lazy val writePartitionLayout: Seq[String] =
+      partitionSpecs.lastOption.map(_._2).getOrElse(partitionLayout)
 
-  /** Path-derived partition columns EXCLUDING hidden transform
-    * segments (r18) — what the served schema and the reader union may
-    * surface; the physical variant exists for metadata tables and
-    * compaction's ragged checks. */
-  private def partitionColsOf(table: Path, version: Long): Seq[String] = {
-    val hidden = hiddenSegmentNames(table, version)
-    physicalPartitionColsOf(table, version).filterNot(hidden)
+    /** The resolved lines whose entry satisfies `p`, verbatim. */
+    def linesWhere(p: Entry => Boolean): Seq[String] =
+      level.lines.collect { case (l, e) if p(e) => l }
+
+    /** The snapshot of version `v`: a level of this version's own
+      * chain costs no IO; any other version resolves, reading only the
+      * manifests this snapshot has not read. */
+    private[VersionedTable] def at(v: Long): Snapshot =
+      if (v == version) this
+      else new Snapshot(table, v, resolve(table, v, levels))
   }
 
-  /** The PHYSICAL partition layout (declared ∪ every path-borne
-    * segment name, hidden transform segments INCLUDED) — the DBA's
-    * truth for `t$partitions`; the served schema uses
-    * [[partitionLayout]], which hides transform segments. */
-  def physicalPartitionLayout(table: Path, version: Long): Seq[String] =
-    (declaredPartitionCols(table, version) ++
-      physicalPartitionColsOf(table, version)).distinct
+  object Snapshot {
+    private[VersionedTable] def apply(table: Path, version: Long): Snapshot =
+      new Snapshot(table, version, resolve(table, version, Map.empty))
+  }
+
+  /** Version `version` of `table`, resolved and parsed once. */
+  def snapshot(table: Path, version: Long): Snapshot =
+    Snapshot(table, version)
+
+  /** The latest version's snapshot, if any commit ever succeeded. */
+  def latestSnapshot(table: Path): Option[Snapshot] =
+    latestVersion(table).map(snapshot(table, _))
+
+  /** The per-commit KIND annotation of `version`, if its writer
+    * declared one ("update" / "compact"). One raw manifest read. */
+  def commitKind(table: Path, version: Long): Option[String] =
+    rawManifest(table, version).map(parse).collectFirst { case Kind(k) => k }
 
   /** The manifest line declaring `col` as a partition column — what a
     * DDL bootstrap passes as `carried` so the layout is known before
@@ -541,7 +697,7 @@ object VersionedTable {
     require(col.nonEmpty && !col.contains('\t') && !col.contains('\n') &&
         !col.contains('/') && !col.contains('='),
       s"partColLine: invalid partition column name '$col'")
-    s"$PartColPrefix$col"
+    PartCol(col).line
   }
 
   /** The manifest line declaring partition-spec generation `gen` with
@@ -558,78 +714,8 @@ object VersionedTable {
     require(derived.distinct == derived,
       s"partSpecLine: two specs derive the same segment name " +
         s"(${derived.mkString(", ")})")
-    s"$PartSpecPrefix$gen\t${parsed.map(_.spec).mkString(",")}"
+    PartSpec(gen, parsed.map(_.spec)).line
   }
-
-  /** The DECLARED partition columns at a version (DDL `PARTITIONED
-    * BY`), in declaration order — Nil for layouts grown only from
-    * `commitPartitioned` paths. */
-  def declaredPartitionCols(table: Path, version: Long): Seq[String] =
-    manifest(table, version).collect {
-      case l if l.startsWith(PartColPrefix) =>
-        l.substring(PartColPrefix.length)
-    }
-
-  /** The version's full partition layout: declared columns first, then
-    * any path-derived column the declaration missed. What V2 writers
-    * write under and `GraftTable.partitioning()` reports. */
-  def partitionLayout(table: Path, version: Long): Seq[String] =
-    (declaredPartitionCols(table, version) ++
-      partitionColsOf(table, version)).distinct
-
-  /** All partition-spec GENERATIONS at a version, generation-ascending:
-    * (gen, columns); an empty column list is a flat generation. Empty
-    * when the table never evolved (pre-r17 tables). */
-  def partitionSpecs(table: Path, version: Long): Seq[(Long, Seq[String])] =
-    manifest(table, version).collect {
-      case l if l.startsWith(PartSpecPrefix) =>
-        val rest = l.substring(PartSpecPrefix.length)
-        val tab = rest.indexOf('\t')
-        val gen = rest.substring(0, tab).toLong
-        // Paren-aware split (r18): `bucket(8,doc_id),lang` is two
-        // specs — a transform's inner comma is not a separator.
-        val cols = PartTransform.split(rest.substring(tab + 1))
-        (gen, cols)
-    }.sortBy(_._1)
-
-  /** HIDDEN segment names at a version (r18): the derived path-segment
-    * names of every transform spec any generation declared (`ts_day`,
-    * `doc_id_bucket`, …). These ride file paths like any partition
-    * value but are NEVER served as schema columns — hidden
-    * partitioning's whole point. All generations count: files written
-    * under a retired transform spec still carry (and prune on) their
-    * derived segments. */
-  def hiddenSegmentNames(table: Path, version: Long): Set[String] =
-    partitionSpecs(table, version).flatMap(_._2).map(PartTransform.parse)
-      .filterNot(_.isIdentity).map(_.derivedName).toSet
-
-  /** Every TRANSFORM spec any generation declared, parsed — what the
-    * scan prunes raw-column predicates through. */
-  def liveTransforms(table: Path, version: Long): Seq[PartTransform] =
-    partitionSpecs(table, version).flatMap(_._2).map(PartTransform.parse)
-      .filterNot(_.isIdentity).distinct
-
-  /** The live PARTSPEC manifest lines at a version — what every
-    * full-manifest rewrite must restate (the amnesia rule; all
-    * generations carry, so gen numbering and history survive any
-    * number of rewrites). */
-  private def partSpecLines(table: Path, version: Long): Seq[String] =
-    partitionSpecs(table, version).map { case (g, cs) =>
-      s"$PartSpecPrefix$g\t${cs.mkString(",")}"
-    }
-
-  /** The layout NEW writes land under: the latest spec generation if
-    * the table ever evolved ([[evolvePartitionLayout]]), else the full
-    * declared-∪-path layout — pre-evolution tables behave exactly as
-    * before. Entries may be TRANSFORM specs (`days(ts)`) since r18;
-    * writers parse them via [[PartTransform.parse]]. READERS keep
-    * consulting [[partitionLayout]] (the union): a mixed-spec table's
-    * served schema must surface every column any file's path carries,
-    * whichever generation wrote it — hidden transform segments
-    * excepted. */
-  def writePartitionLayout(table: Path, version: Long): Seq[String] =
-    partitionSpecs(table, version).lastOption.map(_._2)
-      .getOrElse(partitionLayout(table, version))
 
   /** Write `out` under a (possibly transform-bearing) spec: transforms
     * derive their segment column via the SAME rendering the V2 row
@@ -658,8 +744,8 @@ object VersionedTable {
     * in ONE O(1) metadata commit, rewriting nothing (Iceberg's
     * partition-spec evolution): publishes a delta manifest whose only
     * payload is the next `PARTSPEC` generation. From this version on,
-    * INSERTs (V2 and library writers that consult
-    * [[writePartitionLayout]]) land `c=v/` files under the NEW spec;
+    * INSERTs (V2 and library writers that consult the snapshot's
+    * `writePartitionLayout`) land `c=v/` files under the NEW spec;
     * every existing file keeps its old path and keeps pruning under
     * the spec its path exhibits (the V2 scan prunes per-file, so a
     * predicate on a new-spec column skips new-spec files and
@@ -689,12 +775,11 @@ object VersionedTable {
       s"evolvePartitionLayout: duplicate columns/derived names in " +
         s"$newCols")
     specs.foreach(t => partColLine(t.rawCol)) // tab/newline/slash/= gate
-    val base = latestVersion(table).getOrElse(
-      throw new IllegalArgumentException(
-        s"evolvePartitionLayout: no committed version at $table"))
-    val pathCols = partitionLayout(table, base).toSet
-    lazy val payload = read(s, table, Some(base),
-      mergeSchema = columnMappings(table, base).nonEmpty).schema
+    val snap = latest(table, "evolvePartitionLayout")
+    val base = snap.version
+    val pathCols = snap.partitionLayout.toSet
+    lazy val payload = readSnapshot(s, snap,
+      mergeSchema = snap.columnMappings.nonEmpty).schema
     specs.foreach {
       case IdentityPart(c) if !pathCols(c) =>
         val f = payload.fields.find(_.name == c).getOrElse(
@@ -731,25 +816,11 @@ object VersionedTable {
           s"evolvePartitionLayout: derived segment name " +
             s"'${t.derivedName}' collides with an existing column")
     }
-    val gen = partitionSpecs(table, base).lastOption
-      .map(_._1).getOrElse(0L) + 1
-    val version = base + 1
-    publish(table, version, deltaLines(table, version,
-      Seq(s"$PartSpecPrefix$gen\t${specs.map(_.spec).mkString(",")}"),
-      checkpointEvery))
-    version
+    val gen = snap.partitionSpecs.lastOption.map(_._1).getOrElse(0L) + 1
+    publish(table, base + 1, deltaLines(Some(snap),
+      Seq(PartSpec(gen, specs.map(_.spec)).line), checkpointEvery))
+    base + 1
   }
-
-  /** The MV refresh cursor live at a version — the highest `MVOF`
-    * base version the manifest carries. */
-  def mvCursor(mv: Path, version: Long): Option[Long] =
-    manifest(mv, version).collect {
-      case l if l.startsWith(MvOfPrefix) =>
-        l.substring(MvOfPrefix.length).trim.toLong
-    } match {
-      case Nil => None
-      case vs => Some(vs.max)
-    }
 
   /** MATERIALIZED VIEW bootstrap (r17): commit `agg(base snapshot)` as
     * the MV table's v0, carrying the refresh cursor (`MVOF` = the base
@@ -758,24 +829,19 @@ object VersionedTable {
     * catalog; only the cursor line distinguishes it. */
   def createMaterialized(s: SparkSession, base: Path, mv: Path,
       agg: DataFrame => DataFrame): Long = {
-    val bv = latestVersion(base).getOrElse(
-      throw new IllegalArgumentException(
-        s"createMaterialized: no committed version at $base"))
-    commit(s, mv, 0L, agg(snapshotWithPartitions(s, base, bv)),
-      carried = Seq(s"$MvOfPrefix$bv"))
+    val snap = latest(base, "createMaterialized")
+    commit(s, mv, 0L, agg(snapshotWithPartitions(s, snap)),
+      carried = Seq(MvOf(snap.version).line))
     0L
   }
 
   /** The base snapshot with path-borne partition columns re-attached
     * (flat tables read plainly) — what MV creation aggregates over, so
     * group-by-partition-column views work on partitioned bases. */
-  private def snapshotWithPartitions(s: SparkSession, base: Path,
-                                     bv: Long): DataFrame = {
-    val layout = partitionLayout(base, bv)
-    if (layout.isEmpty) read(s, base, Some(bv))
-    else readMultiPartitionedFiles(s, base, layout,
-      statsManifest(base, bv).map(_._1), asOf = Some(bv))
-  }
+  private def snapshotWithPartitions(s: SparkSession,
+                                     snap: Snapshot): DataFrame =
+    if (snap.partitionLayout.isEmpty) readSnapshot(s, snap)
+    else readMultiPartitionedFiles(s, snap, snap.partitionLayout, snap.files)
 
   /** INCREMENTAL MV REFRESH (r17) — the maintenance loop that makes a
     * 100-TB dashboard aggregate affordable: instead of recomputing
@@ -819,36 +885,35 @@ object VersionedTable {
       dropDeadGroups: DataFrame => DataFrame = identity,
       repair: DataFrame => DataFrame = identity)
       : (Long, Int, Int) = {
-    val mvV = latestVersion(mv).getOrElse(
-      throw new IllegalArgumentException(
-        s"refreshMaterialized: no committed version at $mv"))
-    val cursor = mvCursor(mv, mvV).getOrElse(
+    val mvSnap = latest(mv, "refreshMaterialized")
+    val mvV = mvSnap.version
+    val cursor = mvSnap.mvCursor.getOrElse(
       throw new IllegalArgumentException(
         s"refreshMaterialized: $mv carries no MVOF cursor — create it " +
           "via createMaterialized"))
-    val bv = latestVersion(base).getOrElse(
-      throw new IllegalArgumentException(
-        s"refreshMaterialized: no committed version at $base"))
-    val baseTotal = statsManifest(base, bv).size
+    val baseSnap = latest(base, "refreshMaterialized")
+    val bv = baseSnap.version
+    val baseTotal = baseSnap.files.size
     if (bv == cursor) return (mvV, 0, baseTotal)
+    val history = versions(base)
     // The walk enumerates SURVIVING manifests: if expire() removed the
     // cursor version, the first survivor's addedLines diff against a
     // vanished ancestor would return its ENTIRE manifest and every
     // already-folded row would aggregate AGAIN — the silent
     // double-count this function exists to refuse (ADVICE r17).
-    require(versions(base).contains(cursor),
+    require(history.contains(cursor),
       s"refreshMaterialized: the MV cursor (base version $cursor) was " +
         s"expired from $base — the delta since the cursor is no longer " +
         "enumerable; re-create the MV from the current snapshot")
-    val pending = versions(base).filter(v => v > cursor && v <= bv)
+    val pending = history.filter(v => v > cursor && v <= bv)
     val negatives = scala.collection.mutable.ArrayBuffer
       .empty[DataFrame]
     val deltaFiles = pending.flatMap { v =>
       commitKind(base, v) match {
         case Some("compact") => Nil // content-preserving: nothing new
         case _ =>
-          val added = addedLines(base, v)
-          val dvAdds = added.filter(_.startsWith(DvPrefix))
+          val added = addedLines(base, v).map(parse)
+          val dvAdds = added.collect { case d: Dv => d }
           // A true rewrite removes manifest lines — unrepresentable as
           // a delta either way; a DV delete is representable exactly
           // when the caller can negate (sum-mergeable aggregates).
@@ -864,53 +929,49 @@ object VersionedTable {
             // path-borne partition columns. Scope must be the FULL
             // prior snapshot — deleteCommit (origin = v, same files)
             // and mergeCommit (origin = prev) both qualify.
-            val prev = versions(base).filter(_ < v).last
-            val prevFiles = statsManifest(base, prev).map(_._1).toSet
-            dvAdds.map(_.split('\t'))
-              .groupBy(a => (a(2), a(3).toLong)).foreach {
-                case ((keyCol, origin), lines) =>
-                  require(statsManifest(base, origin).map(_._1).toSet ==
-                      prevFiles,
-                    s"refreshMaterialized: the DV at base version $v " +
-                      s"scopes origin $origin, not the full prior " +
-                      "snapshot — re-create the MV")
-                  val keys = s.read.parquet(
-                    lines.map(a => base.resolve(a(1)).toString): _*)
-                  val snap = s.read.format("graft-table")
-                    .option("version", prev.toString)
-                    .load(base.toString)
-                  val killed = snap.join(
-                    org.apache.spark.sql.functions.broadcast(keys),
-                    Seq(keyCol), "left_semi")
-                  negatives += negateDelta.get(killed)
-              }
+            val prev = history.filter(_ < v).last
+            val prevFiles = baseSnap.at(prev).files.toSet
+            dvAdds.groupBy(d => (d.keyCol, d.origin)).foreach {
+              case ((keyCol, origin), dvs) =>
+                require(baseSnap.at(origin).files.toSet == prevFiles,
+                  s"refreshMaterialized: the DV at base version $v " +
+                    s"scopes origin $origin, not the full prior " +
+                    "snapshot — re-create the MV")
+                val keys = s.read.parquet(
+                  dvs.map(d => base.resolve(d.path).toString): _*)
+                val snap = s.read.format("graft-table")
+                  .option("version", prev.toString)
+                  .load(base.toString)
+                val killed = snap.join(
+                  org.apache.spark.sql.functions.broadcast(keys),
+                  Seq(keyCol), "left_semi")
+                negatives += negateDelta.get(killed)
+            }
           }
-          added.filterNot(isMetaLine).map(_.split('\t').head)
+          added.collect { case d: DataFile => d.path }
       }
     }
     if (deltaFiles.isEmpty && negatives.isEmpty) {
       // Only content-preserving commits since the cursor (compactions):
       // the rows are already right — advance the cursor as a pure-meta
       // delta, no MV row rewritten.
-      publish(mv, mvV + 1,
-        deltaLines(mv, mvV + 1, Seq(s"$MvOfPrefix$bv"), 8))
+      publish(mv, mvV + 1, deltaLines(Some(mvSnap), Seq(MvOf(bv).line), 8))
       return (mvV + 1, 0, baseTotal)
     }
     // PARTITIONED bases (r17): the delta files re-attach their
     // path-borne partition columns per commit dir — the same
     // mixed-layout read compaction uses — so a day-partitioned fact
     // table refreshes its MVs exactly like a flat one.
-    val layout = partitionLayout(base, bv)
+    val layout = baseSnap.partitionLayout
     val positive =
       if (deltaFiles.isEmpty) None
       else if (layout.isEmpty)
         Some(s.read.parquet(
           deltaFiles.map(f => base.resolve(f).toString): _*))
-      else Some(readMultiPartitionedFiles(s, base, layout, deltaFiles,
-        asOf = Some(bv)))
+      else Some(readMultiPartitionedFiles(s, baseSnap, layout, deltaFiles))
     val folded = negatives.foldLeft(
-      positive.fold(read(s, mv, Some(mvV)))(d =>
-        merge(read(s, mv, Some(mvV)), aggDelta(d))))(merge)
+      positive.fold(readSnapshot(s, mvSnap))(d =>
+        merge(readSnapshot(s, mvSnap), aggDelta(d))))(merge)
     // `repair` (r20): the caller's post-merge fix-up pass — the
     // extremum-ledger hook (groups whose deleted rows TIED a standing
     // min/max recompute from the base; everything else rides the
@@ -923,22 +984,12 @@ object VersionedTable {
     // (if declared) restates like every table-wide contract: a refresh
     // must not be the commit that forgets what the MV computes.
     commit(s, mv, mvV + 1, merged,
-      carried = manifest(mv, mvV).filter(l =>
-        l.startsWith(MvSqlPrefix) || l.startsWith(MvAvgPrefix) ||
-        l.startsWith(MvFoldPrefix)) ++
-        Seq(s"$MvOfPrefix$bv", s"${KindPrefix}update"))
+      carried = mvSnap.linesWhere {
+        case _: MvSql | _: MvAvg | _: MvFold => true
+        case _ => false
+      } ++ Seq(MvOf(bv).line, Kind("update").line))
     (mvV + 1, deltaFiles.size, baseTotal)
   }
-
-  /** Column statistics live at a version: column → (approx distinct
-    * count, null count). Latest ANALYZE wins per column. */
-  def ndvStats(table: Path, version: Long): Map[String, (Long, Long)] =
-    manifest(table, version).foldLeft(Map.empty[String, (Long, Long)]) {
-      case (m, l) if l.startsWith(NdvPrefix) =>
-        val Array(_, c, d, n) = l.split('\t')
-        m + (c -> (d.toLong, n.toLong))
-      case (m, _) => m
-    }
 
   /** `ANALYZE TABLE`-shape column statistics (r17): ONE aggregate pass
     * over the snapshot computing `approx_count_distinct` (HLL — the
@@ -956,12 +1007,10 @@ object VersionedTable {
     refuseBranched(table, "analyzeCommit")
     require(cols.nonEmpty && cols.distinct == cols,
       s"analyzeCommit: invalid column list $cols")
-    val base = latestVersion(table).getOrElse(
-      throw new IllegalArgumentException(
-        s"analyzeCommit: no committed version at $table"))
-    val snap = snapshotWithPartitions(s, table, base)
+    val base = latest(table, "analyzeCommit")
+    val snap = snapshotWithPartitions(s, base)
     cols.foreach(c => require(snap.columns.contains(c),
-      s"analyzeCommit: column '$c' does not exist at version $base " +
+      s"analyzeCommit: column '$c' does not exist at version ${base.version} " +
         s"of $table (${snap.columns.mkString(", ")})"))
     val row = snap.agg(
       count(lit(1)).as("__n"),
@@ -969,23 +1018,11 @@ object VersionedTable {
         approx_count_distinct(col(c)).as(s"d_$c"),
         count(when(col(c).isNull, lit(1))).as(s"z_$c"))): _*).head()
     val lines = cols.map(c =>
-      s"$NdvPrefix$c\t${row.getAs[Long](s"d_$c")}\t${row.getAs[Long](s"z_$c")}")
-    val version = base + 1
-    publish(table, version, deltaLines(table, version, lines,
-      checkpointEvery))
-    version
+      Ndv(c, row.getAs[Long](s"d_$c"), row.getAs[Long](s"z_$c")).line)
+    publish(table, base.version + 1,
+      deltaLines(Some(base), lines, checkpointEvery))
+    base.version + 1
   }
-
-  /** The MV's stored SQL definition at a version: (group columns,
-    * statement with `__BASE__` placeholder). */
-  def mvDefinition(mv: Path, version: Long): Option[(Seq[String], String)] =
-    manifest(mv, version).collectFirst {
-      case l if l.startsWith(MvSqlPrefix) =>
-        val rest = l.substring(MvSqlPrefix.length)
-        val tab = rest.indexOf('\t')
-        (rest.substring(0, tab).split(',').toSeq.map(_.trim)
-          .filter(_.nonEmpty), rest.substring(tab + 1))
-    }
 
   /** Run an MV's stored SQL over `input` (served as `__BASE__`). */
   private def runMvSql(s: SparkSession, sql: String,
@@ -1043,10 +1080,8 @@ object VersionedTable {
       "createMaterializedSql: the statement must reference __BASE__")
     require(groupCols.nonEmpty && groupCols.distinct == groupCols,
       s"createMaterializedSql: invalid group columns $groupCols")
-    val bv = latestVersion(base).getOrElse(
-      throw new IllegalArgumentException(
-        s"createMaterializedSql: no committed version at $base"))
-    val out0 = runMvSql(s, sql, snapshotWithPartitions(s, base, bv))
+    val baseSnap = latest(base, "createMaterializedSql")
+    val out0 = runMvSql(s, sql, snapshotWithPartitions(s, baseSnap))
     groupCols.foreach(c => require(out0.columns.contains(c),
       s"createMaterializedSql: group column '$c' is not an output " +
         s"column of the statement (${out0.columns.mkString(", ")})"))
@@ -1080,7 +1115,7 @@ object VersionedTable {
     }
     val out =
       if (avgNames.isEmpty) out0
-      else runMvSql(s, storedSql, snapshotWithPartitions(s, base, bv))
+      else runMvSql(s, storedSql, snapshotWithPartitions(s, baseSnap))
     require(out.columns.length > groupCols.length,
       "createMaterializedSql: the statement must produce at least one " +
         "aggregate column beyond the group columns")
@@ -1196,21 +1231,12 @@ object VersionedTable {
           }
       }.flatten
     }
-    commit(s, mv, 0L, out, carried = Seq(s"$MvOfPrefix$bv",
-      s"$MvSqlPrefix${groupCols.mkString(",")}\t$storedSql") ++
-      avgFolds.map { case (n, sc, cc) => s"$MvAvgPrefix$n\t$sc\t$cc" } ++
-      foldOps.map { case (c, op) => s"$MvFoldPrefix$c\t$op" })
+    commit(s, mv, 0L, out, carried = Seq(MvOf(baseSnap.version).line,
+      MvSql(groupCols, storedSql).line) ++
+      avgFolds.map { case (n, sc, cc) => MvAvg(n, sc, cc).line } ++
+      foldOps.map { case (c, op) => MvFold(c, op).line })
     0L
   }
-
-  /** The non-SUM per-column merge operators an MV's declaration
-    * recorded: column → "min" | "max". Empty for pure sum/count MVs. */
-  def mvFoldOps(mv: Path, version: Long): Map[String, String] =
-    manifest(mv, version).collect {
-      case l if l.startsWith(MvFoldPrefix) =>
-        val Array(c, op) = l.substring(MvFoldPrefix.length).split('\t')
-        c -> op
-    }.toMap
 
   /** Textual select-list rewrite backing the avg declaration: each
     * `avg(expr) AS name` item (for `names`, located in the statement's
@@ -1306,15 +1332,6 @@ object VersionedTable {
       names.map(n => (n, s"${n}__asum", s"${n}__acnt")))
   }
 
-  /** The avg fold triples an MV's declaration recorded: (served name,
-    * sum partial column, count partial column). */
-  def mvAvgFolds(mv: Path, version: Long): Seq[(String, String, String)] =
-    manifest(mv, version).collect {
-      case l if l.startsWith(MvAvgPrefix) =>
-        val Array(n, sc, cc) = l.substring(MvAvgPrefix.length).split('\t')
-        (n, sc, cc)
-    }
-
   /** Serve a SQL-defined MV in its DECLARED shape: every avg the
     * CREATE rewrote into sum/count partials recombines here
     * (`CAST(sum AS DOUBLE)/count`, NULL where the count is 0 — the
@@ -1324,11 +1341,9 @@ object VersionedTable {
   def readMaterializedSql(s: SparkSession, mv: Path,
                           asOf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, when}
-    val v = asOf.orElse(latestVersion(mv)).getOrElse(
-      throw new IllegalArgumentException(
-        s"readMaterializedSql: no committed version at $mv"))
-    val folds = mvAvgFolds(mv, v)
-    val raw = read(s, mv, Some(v))
+    val snap = asOf.fold(latest(mv, "readMaterializedSql"))(snapshot(mv, _))
+    val folds = snap.mvAvgFolds
+    val raw = readSnapshot(s, snap)
     if (folds.isEmpty) return raw
     if (folds.forall(f => raw.columns.contains(f._1))) {
       // r20 MV: the served ratio is physically stored (create/refresh
@@ -1357,10 +1372,8 @@ object VersionedTable {
   def refreshMaterializedSql(s: SparkSession, base: Path,
                              mv: Path): (Long, Int, Int) = {
     import org.apache.spark.sql.functions.col
-    val mvV = latestVersion(mv).getOrElse(
-      throw new IllegalArgumentException(
-        s"refreshMaterializedSql: no committed version at $mv"))
-    val (groupCols, sql) = mvDefinition(mv, mvV).getOrElse(
+    val mvSnap = latest(mv, "refreshMaterializedSql")
+    val (groupCols, sql) = mvSnap.mvDefinition.getOrElse(
       throw new IllegalArgumentException(
         s"refreshMaterializedSql: $mv carries no MVSQL definition — " +
           "create it via createMaterializedSql"))
@@ -1371,9 +1384,9 @@ object VersionedTable {
     lazy val countStarCol: Option[String] = {
       import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
       import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
-      val bv = latestVersion(base).get
       val probe = runMvSql(s, sql,
-        snapshotWithPartitions(s, base, bv).limit(0))
+        snapshotWithPartitions(s, latest(base, "refreshMaterializedSql"))
+          .limit(0))
       probe.queryExecution.analyzed.collectFirst {
         case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
           a.aggregateExpressions.collectFirst {
@@ -1385,8 +1398,8 @@ object VersionedTable {
           }
       }.flatten
     }
-    val foldOps = mvFoldOps(mv, mvV)
-    val avgFolds = mvAvgFolds(mv, mvV)
+    val foldOps = mvSnap.mvFoldOps
+    val avgFolds = mvSnap.mvAvgFolds
     // Per-DV KILLED-ROW AGGREGATES captured for the extremum repair —
     // the negation closure already runs the statement over each DV's
     // killed rows, so the repair folds those aggregates instead of
@@ -1404,9 +1417,9 @@ object VersionedTable {
     // base column.
     lazy val groupBaseCols: Option[Map[String, String]] = {
       import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
-      val bv = latestVersion(base).get
       val probe = runMvSql(s, sql,
-        snapshotWithPartitions(s, base, bv).limit(0))
+        snapshotWithPartitions(s, latest(base, "refreshMaterializedSql"))
+          .limit(0))
       probe.queryExecution.analyzed.collectFirst {
         case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
           val m = groupCols.flatMap { g =>
@@ -1506,8 +1519,8 @@ object VersionedTable {
             .where(tie)
             .select(groupCols.map(g => merged(g)): _*).distinct()
           val aff = renamed(affected, "__a_")
-          val bv = latestVersion(base).get
-          val snap = snapshotWithPartitions(s, base, bv)
+          val snap = snapshotWithPartitions(s,
+            latest(base, "refreshMaterializedSql"))
           val scoped = groupBaseCols match {
             case Some(m) =>
               // Pre-filter the base scan to the affected groups — a
@@ -1550,13 +1563,10 @@ object VersionedTable {
     * commit pay a full manifest resolution just to learn there was no
     * constraint). */
   def checkConstraints(table: Path, version: Long): Seq[String] = {
-    val raw = rawManifest(table, version)
-    val own = raw.collect {
-      case l if l.startsWith(CheckPrefix) => l.substring(CheckPrefix.length)
-    }
+    val raw = rawManifest(table, version).map(parse)
+    val own = raw.collect { case Check(e) => e }
     (raw.headOption match {
-      case Some(h) if h.startsWith(BasePrefix) =>
-        checkConstraints(table, h.stripPrefix(BasePrefix).trim.toLong) ++ own
+      case Some(Base(b)) => checkConstraints(table, b) ++ own
       case _ => own
     }).distinct
   }
@@ -1581,23 +1591,20 @@ object VersionedTable {
       "constraintCommit: the expression must not contain tab/newline " +
         "(manifest lines are TAB-structured)")
     refuseBranched(table, "constraintCommit")
-    val base = latestVersion(table).getOrElse(
-      throw new IllegalArgumentException(
-        s"constraintCommit: no committed version at $table"))
-    // Footer-provable snapshot (r21): proving over the manifest's data
-    // files is a SUPERSET of the live rows (DV-killed rows included),
-    // so a footer pass that proves every file proves the snapshot; any
+    val base = latest(table, "constraintCommit")
+    // Footer-provable snapshot: proving over the manifest's data files
+    // is a SUPERSET of the live rows (DV-killed rows included), so a
+    // footer pass that proves every file proves the snapshot; any
     // unprovable shape (incl. pre-rename footer names on old files)
     // falls back to the scan, which stays the refusing authority.
-    if (!footerProvesChecks(table,
-        statsManifest(table, base).map(_._1), Seq(expr)))
-      violations(read(s, table, Some(base)), Seq(expr)).foreach {
+    if (!footerProvesChecks(table, base.files, Seq(expr)))
+      violations(readSnapshot(s, base), Seq(expr)).foreach {
         case (e, n) => require(n == 0L,
           s"constraintCommit: $n existing row(s) violate CHECK ($e) — " +
             "a constraint the current snapshot breaks must not be declared")
       }
-    publish(table, version,
-      deltaLines(table, version, Seq(s"$CheckPrefix$expr"), checkpointEvery))
+    publish(table, version, deltaLines(priorSnapshot(table, version),
+      Seq(Check(expr).line), checkpointEvery))
   }
 
   /** Violation counts per CHECK expression over `data`, in ONE
@@ -1649,7 +1656,7 @@ object VersionedTable {
     if (cs.isEmpty) Nil
     else {
       enforceConstraintsOnFiles(s, table, files, prior, what)
-      cs.map(CheckPrefix + _)
+      cs.map(Check(_).line)
     }
   }
 
@@ -1682,50 +1689,10 @@ object VersionedTable {
     }
   }
 
-  /** The per-file row counts recorded at a version: (file, rows).
-    * A file committed without a ROWS line is simply absent — callers
-    * deciding whether metadata can answer a count must check coverage
-    * ([[graft.sources.GraftTableSource]] does). */
-  def rowCounts(table: Path, version: Long): Seq[(String, Long)] =
-    manifest(table, version).filter(_.startsWith(RowsPrefix)).map { line =>
-      val Array(_, f, n) = line.split('\t')
-      (f, n.toLong)
-    }
-
-  /** The stats columns a version's manifests declared, distinct in
-    * commit order (practically a single column per table family). */
-  def statsColumns(table: Path, version: Long): Seq[String] =
-    manifest(table, version).collect {
-      case l if l.startsWith(StatsColPrefix) =>
-        l.substring(StatsColPrefix.length)
-    }.distinct
-
-  /** Parsed `(path, min, max)` DATA-file stats of a version's manifest
-    * (deletion-vector and schema-mapping lines are metadata, not
-    * scannable data); files committed without stats get the full-range
-    * (Long.Min, Long.Max) — never skippable, always correct. */
+  /** `(path, min, max)` of a version's data files — see
+    * [[Snapshot.statsManifest]]. */
   def statsManifest(table: Path, version: Long): Seq[(String, Long, Long)] =
-    manifest(table, version).filterNot(isMetaLine).map { line =>
-      line.split('\t') match {
-        case Array(f, mn, mx) => (f, mn.toLong, mx.toLong)
-        case Array(f) => (f, Long.MinValue, Long.MaxValue)
-      }
-    }
-
-  /** Schema mappings live at a version, in commit order:
-    * ("rename", from, to), ("widen", col, sqlType), or
-    * ("addcol", col, sqlType). */
-  def columnMappings(table: Path, version: Long): Seq[(String, String, String)] =
-    manifest(table, version).collect {
-      case l if l.startsWith(RenamePrefix) =>
-        val Array(_, from, to) = l.split('\t'); ("rename", from, to)
-      case l if l.startsWith(WidenPrefix) =>
-        val Array(_, c, t) = l.split('\t'); ("widen", c, t)
-      case l if l.startsWith(AddColPrefix) =>
-        val Array(_, c, t) = l.split('\t'); ("addcol", c, t)
-      case l if l.startsWith(DropColPrefix) =>
-        ("dropcol", l.substring(DropColPrefix.length), "")
-    }
+    snapshot(table, version).statsManifest
 
   /** Every column name an ADDCOL commit EVER introduced at this table,
     * across all of history — one raw-manifest read per version, no
@@ -1740,9 +1707,8 @@ object VersionedTable {
     * stays a loud failure. (Checkpoint manifests restating live ADDCOL
     * lines only re-add names already collected.) */
   def historicalAddColNames(table: Path): Set[String] =
-    versions(table).flatMap(v => rawManifest(table, v).collect {
-      case l if l.startsWith(AddColPrefix) =>
-        l.substring(AddColPrefix.length).split('\t')(0)
+    versions(table).flatMap(v => rawManifest(table, v).map(parse).collect {
+      case Mapping("addcol", c, _) => c
     }).toSet
 
   /** Metadata-only RENAME commit: one manifest line, zero data files
@@ -1752,7 +1718,8 @@ object VersionedTable {
   def renameCommit(table: Path, version: Long, from: String, to: String,
                    checkpointEvery: Int = 8): Seq[String] = {
     refuseBranched(table, "renameCommit")
-    require(version == 0L || deletionVectors(table, version - 1).isEmpty,
+    val base = priorSnapshot(table, version)
+    require(base.forall(_.deletionVectors.isEmpty),
       s"renameCommit: live deletion vectors at $table — compact " +
         "(folding the DVs) first; mappings and DVs cannot coexist")
     // A transform in the LIVE WRITE SPEC derives its segments from
@@ -1762,17 +1729,14 @@ object VersionedTable {
     // payloads are complete; only their conservative pruning is
     // forfeited), so the remedy — evolve the layout away first — is
     // actually satisfiable. Same dead-end guard as dropColumnCommit.
-    def liveSpecTransforms(v: Long): Seq[PartTransform] =
-      writePartitionLayout(table, v).map(PartTransform.parse)
-        .filterNot(_.isIdentity)
-    require(version == 0L ||
-        !liveSpecTransforms(version - 1).exists(_.rawCol == from),
+    val liveSpecTransforms = base.toSeq.flatMap(_.writePartitionLayout)
+      .map(PartTransform.parse).filterNot(_.isIdentity)
+    require(!liveSpecTransforms.exists(_.rawCol == from),
       s"renameCommit: '$from' feeds the live partition spec " +
-        s"(${liveSpecTransforms(version - 1).map(_.spec)
-          .mkString(", ")}) — evolve the layout away from it first")
-    publish(table, version,
-      deltaLines(table, version, Seq(s"$RenamePrefix$from\t$to"),
-        checkpointEvery))
+        s"(${liveSpecTransforms.map(_.spec).mkString(", ")}) — evolve " +
+        "the layout away from it first")
+    publish(table, version, deltaLines(base,
+      Seq(Mapping("rename", from, to).line), checkpointEvery))
   }
 
   /** Metadata-only type-WIDENING commit (e.g. int → bigint): readers
@@ -1780,12 +1744,12 @@ object VersionedTable {
   def widenCommit(table: Path, version: Long, col: String, sqlType: String,
                   checkpointEvery: Int = 8): Seq[String] = {
     refuseBranched(table, "widenCommit")
-    require(version == 0L || deletionVectors(table, version - 1).isEmpty,
+    val base = priorSnapshot(table, version)
+    require(base.forall(_.deletionVectors.isEmpty),
       s"widenCommit: live deletion vectors at $table — compact " +
         "(folding the DVs) first; mappings and DVs cannot coexist")
-    publish(table, version,
-      deltaLines(table, version, Seq(s"$WidenPrefix$col\t$sqlType"),
-        checkpointEvery))
+    publish(table, version, deltaLines(base,
+      Seq(Mapping("widen", col, sqlType).line), checkpointEvery))
   }
 
   /** Metadata-only ADD COLUMN commit (r16) — the most common schema
@@ -1818,34 +1782,32 @@ object VersionedTable {
         "primitive surface (bigint/int/double/float/boolean/string)")
     // Plan-time schema only (one footer + the mapping fold) — the
     // metadata-only contract must not pay a per-file footer sweep.
-    val existing = read(s, table, Some(version - 1)).schema.fieldNames
+    val base = snapshot(table, version - 1)
+    val existing = readSnapshot(s, base).schema.fieldNames
     require(!existing.exists(_.equalsIgnoreCase(name)),
       s"addColumnCommit: column '$name' already exists in " +
         s"${existing.mkString("[", ", ", "]")}")
     // Path-borne partition columns are not in the payload schema the
     // check above reads — a duplicate add would shadow them. Hidden
     // transform segments reserve their names too (r18).
-    require(!partitionLayout(table, version - 1)
-        .exists(_.equalsIgnoreCase(name)) &&
-        !hiddenSegmentNames(table, version - 1)
-          .exists(_.equalsIgnoreCase(name)),
+    require(!base.partitionLayout.exists(_.equalsIgnoreCase(name)) &&
+        !base.hiddenSegmentNames.exists(_.equalsIgnoreCase(name)),
       s"addColumnCommit: '$name' is a partition-layout column or " +
         "hidden transform segment")
     // The mirror of deleteCommit's guard: an evolution over live DVs
     // creates the same both-sides-refuse dead end.
-    require(deletionVectors(table, version - 1).isEmpty,
+    require(base.deletionVectors.isEmpty,
       s"addColumnCommit: live deletion vectors at $table — compact " +
         "(folding the DVs) first; mappings and DVs cannot coexist")
     // Re-adding a name a live DROPCOL removed would resurrect the old
     // files' STALE BYTES (the reader finds the footer field and serves
     // it) — refuse until a compaction physically drops them.
-    require(!columnMappings(table, version - 1)
+    require(!base.columnMappings
         .exists(m => m._1 == "dropcol" && m._2.equalsIgnoreCase(name)),
       s"addColumnCommit: '$name' was dropped by a live DROPCOL " +
         "mapping — compact first so the old files' bytes are gone")
-    publish(table, version,
-      deltaLines(table, version, Seq(s"$AddColPrefix$name\t$sqlType"),
-        checkpointEvery))
+    publish(table, version, deltaLines(Some(base),
+      Seq(Mapping("addcol", name, sqlType).line), checkpointEvery))
   }
 
   /** Metadata-only DROP COLUMN commit (r16) — one manifest line, zero
@@ -1863,38 +1825,39 @@ object VersionedTable {
                        name: String,
                        checkpointEvery: Int = 8): Seq[String] = {
     refuseBranched(table, "dropColumnCommit")
-    val base = version - 1
-    require(columnMappings(table, base).forall(m =>
+    val base = snapshot(table, version - 1)
+    require(base.columnMappings.forall(m =>
         m._1 == "addcol" || m._1 == "dropcol"),
-      s"dropColumnCommit: rename/widen mappings live at version $base " +
-        "— compact first (they record footer-time column names)")
-    val schema = read(s, table, Some(base)).schema
+      s"dropColumnCommit: rename/widen mappings live at version " +
+        s"${base.version} — compact first (they record footer-time " +
+        "column names)")
+    val schema = readSnapshot(s, base).schema
     require(schema.fieldNames.contains(name),
       s"dropColumnCommit: column '$name' is not in " +
         s"${schema.fieldNames.mkString("[", ", ", "]")}")
     require(schema.fieldNames.length > 1,
       s"dropColumnCommit: '$name' is the table's last column")
-    require(!statsColumns(table, base).contains(name),
+    require(!base.statsColumns.contains(name),
       s"dropColumnCommit: '$name' is the table's stats column — " +
         "compact onto another stats column first")
-    require(!blooms(table, base).exists(_._2 == name) &&
-        !secondaryStats(table, base).exists(_._2 == name),
+    require(!base.bloomColumns.contains(name) &&
+        !base.secondaryStats.exists(_._2 == name),
       s"dropColumnCommit: '$name' carries a skipping index — compact " +
         "first")
-    require(deletionVectors(table, base).isEmpty,
+    require(base.deletionVectors.isEmpty,
       s"dropColumnCommit: live deletion vectors at $table — compact " +
         "(folding the DVs) first; mappings and DVs cannot coexist")
-    require(!partitionLayout(table, base).contains(name) &&
-        !writePartitionLayout(table, base).contains(name),
+    require(!base.partitionLayout.contains(name) &&
+        !base.writePartitionLayout.contains(name),
       s"dropColumnCommit: '$name' is a partition-layout column")
     // A transform in the LIVE WRITE SPEC derives its segments from a
     // payload column — dropping the raw column would brick every
     // future INSERT. Retired generations don't block (evolve-away is
     // the documented remedy and must actually work), r18.
-    require(!writePartitionLayout(table, base).map(PartTransform.parse)
+    require(!base.writePartitionLayout.map(PartTransform.parse)
         .exists(t => !t.isIdentity && t.rawCol == name),
       s"dropColumnCommit: '$name' feeds the live partition spec " +
-        s"(${writePartitionLayout(table, base).mkString(", ")}) — " +
+        s"(${base.writePartitionLayout.mkString(", ")}) — " +
         "evolve the layout away from it first")
     // CHECK references are resolved the way Spark will resolve them:
     // parse the constraint and collect its attribute references,
@@ -1906,7 +1869,7 @@ object VersionedTable {
     // string literal. An unparseable constraint (none of ours are)
     // falls back to the conservative case-insensitive word regex.
     val dropLc = name.toLowerCase(java.util.Locale.ROOT)
-    checkConstraints(table, base).foreach { expr =>
+    base.checks.foreach { expr =>
       val referenced: Boolean =
         try s.sessionState.sqlParser.parseExpression(expr).collect {
           case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
@@ -1923,20 +1886,14 @@ object VersionedTable {
         s"dropColumnCommit: '$name' is referenced by CHECK ($expr) — " +
           "drop or rewrite the constraint first")
     }
-    publish(table, version,
-      deltaLines(table, version, Seq(s"$DropColPrefix$name"),
-        checkpointEvery))
+    publish(table, version, deltaLines(Some(base),
+      Seq(Mapping("dropcol", name, "").line), checkpointEvery))
   }
 
-  /** The deletion vectors live at a version:
-    * (dvPath, keyColumn, originVersion). The origin version scopes
-    * the DV to the data files that existed when the delete committed
-    * — see [[deleteCommit]]. */
+  /** The deletion vectors live at a version — see
+    * [[Snapshot.deletionVectors]] and [[deleteCommit]]. */
   def deletionVectors(table: Path, version: Long): Seq[(String, String, Long)] =
-    manifest(table, version).filter(_.startsWith(DvPrefix)).map { line =>
-      val Array(_, p, keyCol, origin) = line.split('\t')
-      (p, keyCol, origin.toLong)
-    }
+    snapshot(table, version).deletionVectors
 
   /** The live deletion vectors of one read, resolved on the driver.
     * `covering` maps each covered data file to the DV files whose
@@ -1957,25 +1914,31 @@ object VersionedTable {
     }
   }
 
-  /** Resolve the deletion vectors live at `version` for a read of
+  /** Resolve the deletion vectors live in `snap` for a read of
     * `files`; None when there are none. Each DV's scope is its origin
-    * version's file list, resolved once per distinct origin; only DVs
-    * that cover a file of `files` are decoded, each exactly once.
+    * version's file list: an origin on the snapshot's own BASE chain
+    * costs no IO, any other reads each manifest once. Only DVs that
+    * cover a file of `files` are decoded, each exactly once.
     * `keyTypeOf` gives the data column's type for the key column. */
-  private[graft] def liveDeletes(table: Path, version: Long,
-      files: Seq[String], keyTypeOf: String => DataType)
-      : Option[LiveDeletes] = {
-    val dvs = deletionVectors(table, version)
+  private[graft] def liveDeletes(snap: Snapshot, files: Seq[String],
+      keyTypeOf: String => DataType): Option[LiveDeletes] = {
+    val dvs = snap.deletionVectors
+    val table = snap.table
     if (dvs.isEmpty) None
     else {
       val keyCols = dvs.map(_._2).distinct
-      require(keyCols.size == 1,
-        s"mixed deletion-vector key columns at version $version: $keyCols")
+      require(keyCols.size == 1, s"mixed deletion-vector key columns at " +
+        s"version ${snap.version}: $keyCols")
       val wanted = files.toSet
-      val covering = dvs.groupBy(_._3).toSeq.flatMap { case (origin, group) =>
-        statsManifest(table, origin).map(_._1).filter(wanted)
-          .flatMap(f => group.map(dv => f -> dv._1))
-      }.groupMap(_._1)(_._2).map { case (f, d) => f -> d.distinct.sorted }
+      val (_, pairs) = dvs.groupBy(_._3).toSeq.sortBy(_._1)
+        .foldLeft((snap, Seq.empty[(String, String)])) {
+          case ((known, acc), (origin, group)) =>
+            val scope = known.at(origin)
+            (scope, acc ++ scope.files.filter(wanted)
+              .flatMap(f => group.map(dv => f -> dv._1)))
+        }
+      val covering = pairs.groupMap(_._1)(_._2)
+        .map { case (f, d) => f -> d.distinct.sorted }
       val used = covering.valuesIterator.flatten.toSeq.distinct.sorted
       val keyType = keyTypeOf(keyCols.head)
       val keys = used.zip(mapFooters(used)(dv =>
@@ -2018,7 +1981,7 @@ object VersionedTable {
     out.result()
   }
 
-  private def coerceKey(v: Any, from: DataType, to: DataType): Option[Any] =
+  private[graft] def coerceKey(v: Any, from: DataType, to: DataType): Option[Any] =
     (from, to) match {
       case _ if from == to => Some(v)
       case (_: NumericType, _: NumericType) =>
@@ -2139,7 +2102,8 @@ object VersionedTable {
     // resolution path would be bricked: compaction reads through
     // readLive, which refuses too. Refuse at COMMIT time, where the
     // user still has a working table and a working remedy.
-    require(version == 0L || columnMappings(table, version - 1).isEmpty,
+    val base = priorSnapshot(table, version)
+    require(base.forall(_.columnMappings.isEmpty),
       s"deleteCommit: schema-evolution mappings live at $table — " +
         "compact first (a DV over a mapped version would make every " +
         "read, and the compaction that fixes it, refuse)")
@@ -2150,8 +2114,7 @@ object VersionedTable {
     // Refuse up front; a partition-valued delete is a file-level
     // operation (drop the partition's files via a rewrite commit),
     // not a row-level DV.
-    require(version == 0L ||
-        !partitionLayout(table, version - 1).contains(keyCol),
+    require(!base.exists(_.partitionLayout.contains(keyCol)),
       s"deleteCommit: key column '$keyCol' is a partition-layout " +
         "column — its values ride file paths, not row payloads, so a " +
         "deletion vector cannot apply; drop the partition's files via " +
@@ -2159,11 +2122,10 @@ object VersionedTable {
     val dvDir = table.resolve("dv").resolve(
       f"v$version%06d-" + java.util.UUID.randomUUID().toString.take(8))
     writeData(keys.select(keyCol), dvDir)
-    val dvLines = partFiles(table, dvDir)
-      .map(p => s"$DvPrefix$p\t$keyCol\t$version")
+    val dvLines = partFiles(table, dvDir).map(Dv(_, keyCol, version).line)
     // A delete is additive metadata (data lines are never removed, a
     // DV line is added), so it publishes as a delta like an append.
-    publish(table, version, deltaLines(table, version, dvLines, checkpointEvery))
+    publish(table, version, deltaLines(base, dvLines, checkpointEvery))
   }
 
   /** MERGE (upsert) as ONE atomic merge-on-read commit — the row-level
@@ -2186,10 +2148,9 @@ object VersionedTable {
   def mergeCommit(s: SparkSession, table: Path, updates: DataFrame,
                   keyCol: String, checkpointEvery: Int = 8): Long = {
     refuseBranched(table, "mergeCommit")
-    val base = latestVersion(table).getOrElse(
-      throw new IllegalArgumentException(
-        s"mergeCommit: no committed version at $table to merge into"))
-    require(columnMappings(table, base).isEmpty,
+    val snap = latest(table, "mergeCommit")
+    val base = snap.version
+    require(snap.columnMappings.isEmpty,
       s"mergeCommit: schema-evolution mappings live at $table — " +
         "compact first (a DV over a mapped version would make every " +
         "read, and the compaction that fixes it, refuse)")
@@ -2197,8 +2158,7 @@ object VersionedTable {
     val dvDir = table.resolve("dv").resolve(
       f"v$version%06d-merge-" + java.util.UUID.randomUUID().toString.take(8))
     writeData(updates.select(keyCol).distinct(), dvDir)
-    val dvLines = partFiles(table, dvDir)
-      .map(p => s"$DvPrefix$p\t$keyCol\t$base")
+    val dvLines = partFiles(table, dvDir).map(Dv(_, keyCol, base).line)
     val dataDir = newDataDir(table, version)
     writeData(updates, dataDir)
     // The upsert's new rows honor CHECK constraints (deletes cannot
@@ -2207,9 +2167,9 @@ object VersionedTable {
     // Index continuity (r15): the upsert's new files join the base's
     // skipping indexes (stats/ROWS/BLOOM/secondary) instead of
     // carrying unprunable plain lines until the next compaction.
-    val dataLines = indexedLines(s, table, dataDir, manifest(table, base))
+    val dataLines = indexedLines(s, table, dataDir, snap)
     publish(table, version,
-      deltaLines(table, version, dvLines ++ dataLines, checkpointEvery))
+      deltaLines(Some(snap), dvLines ++ dataLines, checkpointEvery))
     version
   }
 
@@ -2241,13 +2201,13 @@ object VersionedTable {
                 lo: Long, hi: Long,
                 version: Option[Long] = None): (DataFrame, Int, Int) = {
     import org.apache.spark.sql.functions.col
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalArgumentException(s"no committed version at $table"))
-    require(columnMappings(table, v).isEmpty,
+    val snap = snapshotAt(table, version)
+    val v = snap.version
+    require(snap.columnMappings.isEmpty,
       s"readRange at version $v: schema mappings could have renamed " +
         s"'$statsCol' since the stats were recorded — use read() or " +
         "compact first")
-    val all = statsManifest(table, v)
+    val all = snap.statsManifest
     require(all.nonEmpty,
       s"readRange at version $v of $table: the manifest lists no data files")
     val live = all.filter { case (_, mn, mx) => mx >= lo && mn <= hi }
@@ -2261,7 +2221,7 @@ object VersionedTable {
         // No file can match: an empty frame with the right schema,
         // derived from ONE file's footer without reading its rows.
         s.read.parquet(table.resolve(all.head._1).toString).limit(0)
-      else readLive(s, table, v, live.map(_._1))
+      else readLive(s, snap, live.map(_._1))
     (df.where(col(statsCol) >= lo && col(statsCol) <= hi),
       live.size, all.size)
   }
@@ -2300,11 +2260,8 @@ object VersionedTable {
       // the two orthogonal skipping mechanisms compose on one manifest
       // entry ([[readPartitionRange]] consumes both).
       case Some(c) =>
-        val stats = fileColStats(s, table, dataDir, c)
-        stats.map { case (f, mn, mx, _) => s"$f\t$mn\t$mx" } ++
-          (if (rowCounts)
-             stats.map { case (f, _, _, n) => s"$RowsPrefix$f\t$n" }
-           else Nil) :+ s"$StatsColPrefix$c"
+        statsRowsLines(fileColStats(s, table, dataDir, c), rowCounts) :+
+          StatsCol(c).line
       case None =>
         // Row counts without a stats column: one footer-free count
         // pass grouped on file (the same shape as the stats pass).
@@ -2320,9 +2277,9 @@ object VersionedTable {
   private def fileRowsLinesAll(s: SparkSession, table: Path,
                                dataDir: Path): Seq[String] = {
     val counted = fileRowsLines(s, table, dataDir)
-    val seen = counted.map(_.split('\t')(1)).toSet
+    val seen = counted.map(fileOfLine).toSet
     (counted ++ partFiles(table, dataDir).filterNot(seen)
-      .map(f => s"$RowsPrefix$f\t0")).sorted
+      .map(Rows(_, 0L).line)).sorted
   }
 
   /** Per-file `ROWS` manifest lines for every parquet file under
@@ -2336,7 +2293,7 @@ object VersionedTable {
                             dataDir: Path): Seq[String] =
     mapFooters(partFiles(table, dataDir)) { f =>
       val n = footerBlocks(table.resolve(f)).map(_.getRowCount).sum
-      if (n == 0L) None else Some(s"$RowsPrefix$f\t$n")
+      if (n == 0L) None else Some(Rows(f, n).line)
     }.flatten.sorted
 
   /** One Hadoop conf for all footer reads — Configuration construction
@@ -2684,8 +2641,7 @@ object VersionedTable {
 
   private def fileStatsLines(s: SparkSession, table: Path, dataDir: Path,
                              statsCol: String): Seq[String] =
-    fileColStats(s, table, dataDir, statsCol)
-      .map { case (f, mn, mx, _) => s"$f\t$mn\t$mx" }
+    statsRowsLines(fileColStats(s, table, dataDir, statsCol), rows = false)
 
   /** [[fileColStats]] over `dataDir` with ZERO-ROW SYNTHESIS: a
     * zero-row parquet file (a truncate/compact of an emptied table)
@@ -2715,23 +2671,12 @@ object VersionedTable {
     val dataDir = newDataDir(table, version)
     writeData(df, dataDir)
     val primary = fileStatsLines(s, table, dataDir, cols.head)
-    val secondary = cols.tail.flatMap(c =>
-      fileColStats(s, table, dataDir, c).map { case (f, mn, mx, _) =>
-        s"$StatsPrefix$f\t$c\t$mn\t$mx"
-      })
-    val lines = (primary ++ secondary) :+ s"$StatsColPrefix${cols.head}"
+    val secondary = cols.tail.flatMap(secondaryLines(s, table, dataDir, _))
+    val lines = (primary ++ secondary) :+ StatsCol(cols.head).line
     publish(table, version, carried ++ lines ++
       carryChecks(s, table, version, dataDir, carried, "commitMultiStats"))
     lines
   }
-
-  /** The SECONDARY zonemaps at a version: (file, column, min, max). */
-  def secondaryStats(table: Path,
-                     version: Long): Seq[(String, String, Long, Long)] =
-    manifest(table, version).filter(_.startsWith(StatsPrefix)).map { line =>
-      val Array(_, f, c, mn, mx) = line.split('\t')
-      (f, c, mn.toLong, mx.toLong)
-    }
 
   /** Multi-dimensional BOX read: plans over only the files whose
     * zonemap on EVERY requested column overlaps its range (primary
@@ -2746,16 +2691,15 @@ object VersionedTable {
               version: Option[Long] = None)
       : (DataFrame, Int, Map[String, Int], Int) = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalArgumentException(
-        s"readBox: no committed version at $table"))
-    val all = statsManifest(table, v)
+    val snap = snapshotAt(table, version)
+    val v = snap.version
+    val all = snap.statsManifest
     require(all.nonEmpty,
       s"readBox at version $v of $table: the manifest lists no data files")
     val colStats: Map[String, Map[String, (Long, Long)]] =
-      (statsColumns(table, v).headOption.map(c =>
+      (snap.statsCol.map(c =>
         c -> all.map { case (f, mn, mx) => f -> (mn, mx) }.toMap).toSeq ++
-        secondaryStats(table, v).groupBy(_._2).map { case (c, rows) =>
+        snap.secondaryStats.groupBy(_._2).map { case (c, rows) =>
           c -> rows.map(r => r._1 -> (r._3, r._4)).toMap
         }).toMap
     def admits(f: String, c: String, lo: Long, hi: Long): Boolean =
@@ -2771,7 +2715,7 @@ object VersionedTable {
     val df =
       if (live.isEmpty)
         s.read.parquet(table.resolve(files.head).toString).limit(0)
-      else readLive(s, table, v, live)
+      else readLive(s, snap, live)
     val filtered = ranges.foldLeft(df) { case (d, (c, lo, hi)) =>
       d.where(col(c) >= lit(lo) && col(c) <= lit(hi))
     }
@@ -2793,7 +2737,7 @@ object VersionedTable {
         val p = java.nio.file.Paths.get(new java.net.URI(r.getString(0)))
         val b64 = java.util.Base64.getEncoder
           .encodeToString(r.getAs[Array[Byte]]("bits"))
-        s"$BloomPrefix${table.relativize(p)}\t$bloomCol\t$b64"
+        Bloom(table.relativize(p).toString, bloomCol, b64).line
       }.toIndexedSeq.sorted
   }
 
@@ -2811,20 +2755,11 @@ object VersionedTable {
     val dataDir = newDataDir(table, version)
     writeData(df, dataDir)
     val lines = fileStatsLines(s, table, dataDir, statsCol) ++
-      fileBloomLines(s, table, dataDir, bloomCol) :+
-      s"$StatsColPrefix$statsCol"
+      fileBloomLines(s, table, dataDir, bloomCol) :+ StatsCol(statsCol).line
     publish(table, version, carried ++ lines ++
       carryChecks(s, table, version, dataDir, carried, "commitIndexed"))
     lines
   }
-
-  /** The bloom skipping indexes live at a version:
-    * (file, column, filter bits). */
-  def blooms(table: Path, version: Long): Seq[(String, String, Array[Byte])] =
-    manifest(table, version).filter(_.startsWith(BloomPrefix)).map { line =>
-      val Array(_, f, c, b64) = line.split('\t')
-      (f, c, java.util.Base64.getDecoder.decode(b64))
-    }
 
   /** POINT LOOKUP with bloom skipping: plans over only the files whose
     * bloom for `col` might contain `value` (files without a bloom line
@@ -2836,21 +2771,20 @@ object VersionedTable {
   def readEquals(s: SparkSession, table: Path, colName: String, value: Any,
                  version: Option[Long] = None): (DataFrame, Int, Int) = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalArgumentException(
-        s"readEquals: no committed version at $table"))
-    val all = statsManifest(table, v).map(_._1)
+    val snap = snapshotAt(table, version)
+    val v = snap.version
+    val all = snap.files
     require(all.nonEmpty,
       s"readEquals at version $v of $table: the manifest lists no data files")
     val probe = String.valueOf(value)
-    val filters = blooms(table, v)
+    val filters = snap.blooms
       .collect { case (f, c, bits) if c == colName => f -> bits }.toMap
     val live = all.filter(f =>
       filters.get(f).forall(FileBloom.mightContain(_, probe)))
     val df =
       if (live.isEmpty)
         s.read.parquet(table.resolve(all.head).toString).limit(0)
-      else readLive(s, table, v, live)
+      else readLive(s, snap, live)
     (df.where(col(colName) === lit(value)), live.size, all.size)
   }
 
@@ -2865,9 +2799,9 @@ object VersionedTable {
   def readPartitions(s: SparkSession, table: Path, partCol: String,
                      values: Seq[String],
                      version: Option[Long] = None): (DataFrame, Int, Int) = {
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalArgumentException(s"no committed version at $table"))
-    val all = statsManifest(table, v).map(_._1)
+    val snap = snapshotAt(table, version)
+    val v = snap.version
+    val all = snap.files
     require(all.nonEmpty,
       s"readPartitions at version $v of $table: no data files")
     def valueOf(f: String): Option[String] =
@@ -2886,36 +2820,29 @@ object VersionedTable {
     val live = byValue.filter { case (value, _) => want.contains(value) }
     require(live.nonEmpty,
       s"readPartitions at version $v: no files match $partCol in $values")
-    (readPartitionedFiles(s, table, partCol, live.map(_._2),
-      asOf = Some(v)), live.size, all.size)
+    (readMultiPartitionedFiles(s, snap, Seq(partCol), live.map(_._2)),
+      live.size, all.size)
   }
 
-  /** Plan a read over partitioned-layout manifest files: one scan per
-    * COMMIT DIR (basePath recovers the partition column from the
+  /** Plan a read over partitioned-layout files of `snap`: one scan per
+    * COMMIT DIR (basePath recovers the partition columns from the
     * `col=value` path segments), not per value — union legs scale with
     * the handful of commits, never with partition-value cardinality.
-    * The column is pinned to string so the read schema doesn't depend
-    * on what partition inference guesses per dir. */
-  private def readPartitionedFiles(s: SparkSession, table: Path,
-                                   partCol: String, files: Seq[String],
-                                   asOf: Option[Long] = None): DataFrame =
-    readMultiPartitionedFiles(s, table, Seq(partCol), files, asOf)
-
-  private def readMultiPartitionedFiles(s: SparkSession, table: Path,
+    * The columns are pinned to string so the read schema doesn't
+    * depend on what partition inference guesses per dir. */
+  private def readMultiPartitionedFiles(s: SparkSession, snap: Snapshot,
                                         partCols: Seq[String],
-                                        files: Seq[String],
-                                        asOf: Option[Long] = None)
-      : DataFrame = {
-    // HIDDEN transform segments (r18) also surface through path
-    // discovery — drop them: the raw column rides the payload, so the
-    // derived segment is redundant AND ragged across generations
-    // (a days-spec group would union 4 columns against an identity
-    // group's 3). Hidden names are resolved AT THE VERSION BEING READ
-    // (default latest): a column that was real payload at an older
-    // version and only later became a derived segment name
-    // (drop-then-evolve) must survive that older version's read.
-    val hidden = asOf.orElse(latestVersion(table))
-      .map(hiddenSegmentNames(table, _)).getOrElse(Set.empty)
+                                        files: Seq[String]): DataFrame = {
+    // HIDDEN transform segments also surface through path discovery —
+    // drop them: the raw column rides the payload, so the derived
+    // segment is redundant AND ragged across generations (a days-spec
+    // group would union 4 columns against an identity group's 3).
+    // Hidden names are those of the version being read: a column that
+    // was real payload at an older version and only later became a
+    // derived segment name (drop-then-evolve) must survive that older
+    // version's read.
+    val table = snap.table
+    val hidden = snap.hiddenSegmentNames
     files
       .groupBy(f => f.split('/').take(2).mkString("/"))
       .toSeq.sortBy(_._1)
@@ -2949,12 +2876,12 @@ object VersionedTable {
                          lo: Long, hi: Long, version: Option[Long] = None)
       : (DataFrame, Int, Int, Int) = {
     import org.apache.spark.sql.functions.col
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalArgumentException(s"no committed version at $table"))
-    require(columnMappings(table, v).isEmpty,
+    val snap = snapshotAt(table, version)
+    val v = snap.version
+    require(snap.columnMappings.isEmpty,
       s"readPartitionRange at version $v: schema mappings could have " +
         s"renamed '$statsCol' — use read() or compact first")
-    val all = statsManifest(table, v)
+    val all = snap.statsManifest
     require(all.nonEmpty,
       s"readPartitionRange at version $v of $table: no data files")
     val want = values.toSet
@@ -2970,10 +2897,9 @@ object VersionedTable {
     val live = part.filter { case (_, mn, mx) => mx >= lo && mn <= hi }
     val df =
       if (live.isEmpty)
-        readPartitionedFiles(s, table, partCol, Seq(part.head._1),
-          asOf = Some(v)).limit(0)
-      else readPartitionedFiles(s, table, partCol, live.map(_._1),
-        asOf = Some(v))
+        readMultiPartitionedFiles(s, snap, Seq(partCol), Seq(part.head._1))
+          .limit(0)
+      else readMultiPartitionedFiles(s, snap, Seq(partCol), live.map(_._1))
     (df.where(col(statsCol) >= lo && col(statsCol) <= hi),
       live.size, part.size, all.size)
   }
@@ -3016,10 +2942,13 @@ object VersionedTable {
     // unreferenced file, so pinning never retains data.
     val pinned = scala.collection.mutable.Set[Long]()
     def visit(v: Long): Unit = if (pinned.add(v)) {
-      rawManifest(table, v).headOption
-        .filter(_.startsWith(BasePrefix))
-        .foreach(h => visit(h.stripPrefix(BasePrefix).trim.toLong))
-      deletionVectors(table, v).map(_._3).foreach(visit)
+      rawManifest(table, v).headOption.map(parse)
+        .collect { case Base(b) => b }.foreach(visit)
+      snapshot(table, v).deletionVectors.map(_._3).foreach(visit)
+    }
+    def filesOf(v: Long): Seq[String] = {
+      val snap = snapshot(table, v)
+      snap.files ++ snap.deletionVectors.map(_._1)
     }
     // Ref heads (tags, branch tips) are ROOTS like live versions: a
     // release tag pinned at version 2 must survive an expire(keepFrom=
@@ -3029,14 +2958,10 @@ object VersionedTable {
     // Deletion-vector sidecars are referenced files like any other: a
     // DV listed by a retained version must survive, one referenced
     // only by expired versions is reclaimable.
-    val referenced = anchors.flatMap(v =>
-      statsManifest(table, v).map(_._1) ++
-        deletionVectors(table, v).map(_._1)).toSet
+    val referenced = anchors.flatMap(filesOf).toSet
     // Published-somewhere set for the orphan-grace split — resolved
     // only when a grace is in force (it reads every dead manifest).
-    lazy val everReferenced: Set[String] = all.flatMap(v =>
-      statsManifest(table, v).map(_._1) ++
-        deletionVectors(table, v).map(_._1)).toSet
+    lazy val everReferenced: Set[String] = all.flatMap(filesOf).toSet
     val now = System.currentTimeMillis()
     var deleted = 0
     for (root <- Seq(table.resolve("data"), table.resolve("dv"))
@@ -3099,14 +3024,15 @@ object VersionedTable {
     // ADDED constraint races like any metadata; the winner's declare
     // already validated the whole table, which includes nothing of
     // ours until our publish succeeds).
-    enforceConstraints(s, table, dataDir, latestVersion(table),
+    val base0 = latestSnapshot(table)
+    enforceConstraints(s, table, dataDir, base0.map(_.version),
       "appendCommit")
-    // Index continuity (r15): the appended files join the base's
-    // skipping indexes instead of degrading them — stats/ROWS/BLOOM/
-    // secondary lines matching the base's shape (plain lines on an
-    // unindexed table, as before).
-    val mine = latestVersion(table) match {
-      case Some(v) => indexedLines(s, table, dataDir, manifest(table, v))
+    // Index continuity: the appended files join the base's skipping
+    // indexes instead of degrading them — stats/ROWS/BLOOM/secondary
+    // lines matching the base's shape (plain lines on an unindexed
+    // table, as before).
+    val mine = base0 match {
+      case Some(b) => indexedLines(s, table, dataDir, b)
       case None => partFiles(table, dataDir)
     }
     var conflicts = 0
@@ -3116,7 +3042,9 @@ object VersionedTable {
           s"appendCommit: no committed version at $table to append to")) + 1
       beforeAttempt(target)
       try {
-        publish(table, target, deltaLines(table, target, mine, checkpointEvery))
+        val base = base0.filter(_.version == target - 1)
+          .getOrElse(snapshot(table, target - 1))
+        publish(table, target, deltaLines(Some(base), mine, checkpointEvery))
         return Committed(target, conflicts)
       } catch {
         case _: java.nio.file.FileAlreadyExistsException => conflicts += 1
@@ -3141,23 +3069,40 @@ object VersionedTable {
         require(base < version,
           s"publishDelta: version $version is not beyond latest $base")
         if (chainLength(table, base) + 1 > checkpointEvery)
-          manifest(table, base) ++ files
-        else (BasePrefix + base) +: files
+          snapshot(table, base).lines ++ files
+        else Base(base).line +: files
     }
     publish(table, version, lines)
   }
 
-  /** The manifest body for an additive commit of `added` at `target`:
-    * a 1+|added|-line DELTA against target−1 (metadata cost tracks the
-    * commit, not the table), unless the resolution chain would exceed
-    * `checkpointEvery` files — then the full list is materialized (a
-    * CHECKPOINT, bounding every future read's chain walk). */
-  private def deltaLines(table: Path, target: Long, added: Seq[String],
-                         checkpointEvery: Int): Seq[String] =
-    if (target == 0L) added
-    else if (chainLength(table, target - 1) + 1 > checkpointEvery)
-      manifest(table, target - 1) ++ added
-    else (BasePrefix + (target - 1)) +: added
+  /** The manifest body for an additive commit of `added` on `base`
+    * (None: the table's first version): a 1+|added|-line DELTA (metadata
+    * cost tracks the commit, not the table), unless the resolution
+    * chain would exceed `checkpointEvery` files — then the full list is
+    * materialized (a CHECKPOINT, bounding every future read's chain
+    * walk). */
+  private def deltaLines(base: Option[Snapshot], added: Seq[String],
+                         checkpointEvery: Int): Seq[String] = base match {
+    case None => added
+    case Some(b) if b.chainLength + 1 > checkpointEvery => b.lines ++ added
+    case Some(b) => Base(b.version).line +: added
+  }
+
+  /** The snapshot a commit pinned at `version` builds on: version − 1's,
+    * none for version 0. */
+  private def priorSnapshot(table: Path, version: Long): Option[Snapshot] =
+    if (version == 0L) None else Some(snapshot(table, version - 1))
+
+  /** The latest snapshot, or `what` refuses. */
+  private def latest(table: Path, what: String): Snapshot =
+    latestSnapshot(table).getOrElse(throw new IllegalArgumentException(
+      s"$what: no committed version at $table"))
+
+  /** The pinned version's snapshot, else the latest one. */
+  private def snapshotAt(table: Path, version: Option[Long]): Snapshot =
+    version.fold(latestSnapshot(table).getOrElse(
+      throw new IllegalArgumentException(
+        s"no committed version at $table")))(snapshot(table, _))
 
   /** General optimistic TRANSACTION — the copy-on-write half: `op`
     * reads the snapshot at the latest version and returns the full
@@ -3193,7 +3138,7 @@ object VersionedTable {
       // compactCommit discipline applied to the other full-manifest
       // writer. Validated per attempt against the attempt's own base.
       enforceConstraints(s, table, dataDir, Some(base), "transact")
-      val checks = checkConstraints(table, base).map(CheckPrefix + _)
+      val checks = checkConstraints(table, base).map(Check(_).line)
       beforeAttempt(base + 1)
       try {
         publish(table, base + 1, partFiles(table, dataDir) ++ checks)
@@ -3205,16 +3150,6 @@ object VersionedTable {
     throw new IllegalStateException(
       s"transact: lost $maxAttempts straight races at $table")
   }
-
-  /** The data file a meta line describes, if it describes one —
-    * BLOOM/STATS/ROWS lines index a specific file and must die with it
-    * when a rewrite replaces that file; STATSCOL/RENAME/WIDEN lines
-    * describe the table and survive; DV lines reference dv/ sidecars,
-    * never data files. */
-  private def metaFile(line: String): Option[String] =
-    if (line.startsWith(BloomPrefix) || line.startsWith(StatsPrefix) ||
-        line.startsWith(RowsPrefix)) Some(line.split('\t')(1))
-    else None
 
   /** Row-level UPDATE as a STATS-PRUNED copy-on-write commit — the
     * `UPDATE … WHERE statsCol BETWEEN lo AND hi SET …` every production
@@ -3250,24 +3185,23 @@ object VersionedTable {
     import org.apache.spark.sql.functions.{col, expr, when}
     refuseBranched(table, "updateWhere")
     require(set.nonEmpty, "updateWhere: no SET assignments")
-    val base = latestVersion(table).getOrElse(
-      throw new IllegalArgumentException(
-        s"updateWhere: no committed version at $table"))
-    require(columnMappings(table, base).isEmpty,
+    val snap = latest(table, "updateWhere")
+    val base = snap.version
+    require(snap.columnMappings.isEmpty,
       s"updateWhere at version $base: schema mappings could have renamed " +
         s"'$statsCol' since the stats were recorded — compact first")
-    require(deletionVectors(table, base).isEmpty,
+    require(snap.deletionVectors.isEmpty,
       s"updateWhere at version $base: live deletion vectors — compact " +
         "(fold the DVs into data) before a copy-on-write update")
     // Hive-partitioned layout: the partition column lives ONLY in the
     // manifest paths — a raw-leaf rewrite would silently drop it from
     // the rewritten rows. Refuse, like the DV/mapping gates above;
     // compactCommit (partition-aware since r14) is the resolution.
-    require(partitionLayout(table, base).isEmpty,
+    require(snap.partitionLayout.isEmpty,
       s"updateWhere at version $base: partition-layout files " +
         "(col=value path segments) — their partition column is not in " +
         "the payload and a rewrite would drop it; compact first")
-    val all = statsManifest(table, base)
+    val all = snap.statsManifest
     require(all.nonEmpty,
       s"updateWhere at version $base of $table: no data files")
     val touched = all.collect {
@@ -3289,36 +3223,17 @@ object VersionedTable {
     // files are refused above (their column is path-only); a transform
     // file's payload is complete, so the rewrite is information-safe
     // either way.
-    val writeCols = writePartitionLayout(table, base)
+    val writeCols = snap.writePartitionLayout
     if (writeCols.nonEmpty) writeUnderSpec(updated, writeCols, dataDir)
     else writeData(updated, dataDir)
     // The rewritten rows honor CHECK constraints — an UPDATE must not
     // be the path that smuggles a violation in.
     enforceConstraints(s, table, dataDir, Some(base), "updateWhere")
     val stats = fileColStats(s, table, dataDir, statsCol)
-    val newLines = stats.map { case (f, mn, mx, _) => s"$f\t$mn\t$mx" }
-    val baseLines = manifest(table, base)
-    val rowsLines =
-      if (baseLines.exists(_.startsWith(RowsPrefix)))
-        stats.map { case (f, _, _, n) => s"$RowsPrefix$f\t$n" }
-      else Nil
-    // INDEX MAINTENANCE (r15, the replaceFilesCommit discipline): when
-    // the touched files carried BLOOM or secondary-zonemap lines,
-    // recompute them for the rewritten files in the same commit-time
-    // window — an UPDATE must not degrade point-lookup or box-read
-    // pruning until the next compaction.
-    val indexLines = {
-      val bloomCols = blooms(table, base)
-        .collect { case (f, c, _) if touched.contains(f) => c }.distinct
-      val secCols = secondaryStats(table, base)
-        .collect { case (f, c, _, _) if touched.contains(f) => c }
-        .distinct
-      bloomCols.flatMap(c => fileBloomLines(s, table, dataDir, c)) ++
-        secCols.flatMap(c =>
-          fileColStats(s, table, dataDir, c).map {
-            case (f, mn, mx, _) => s"$StatsPrefix$f\t$c\t$mn\t$mx"
-          })
-    }
+    // INDEX MAINTENANCE (the replaceFilesCommit discipline): an UPDATE
+    // must not degrade point-lookup or box-read pruning until the next
+    // compaction.
+    val indexLines = reindexLines(s, table, dataDir, snap, touched)
     // O(commit) metadata (r13): BASE + RM(touched) + the new lines —
     // at a 10⁶-file table an update touching 3 files writes 7 manifest
     // lines, not the full list. Resolution drops the RM'd data lines
@@ -3329,18 +3244,42 @@ object VersionedTable {
     // files replay as update_preimage rows, its new files as
     // update_postimage — a mirror applies the pair instead of
     // full-restarting. Stripped at resolution (never carried).
-    val added =
-      newLines ++ rowsLines ++ indexLines :+ s"${KindPrefix}update"
-    val lines =
-      if (chainLength(table, base) + 1 > checkpointEvery)
-        baseLines.filter { line =>
-          if (isMetaLine(line)) metaFile(line).forall(!touched.contains(_))
-          else !touched.contains(line.split('\t').head)
-        } ++ added
-      else (BasePrefix + base) +:
-        (touched.toSeq.sorted.map(RmPrefix + _) ++ added)
-    publish(table, version, lines)
+    val added = statsRowsLines(stats, snap.rowCounts.nonEmpty) ++
+      indexLines :+ Kind("update").line
+    publish(table, version,
+      rewriteLines(snap, touched.toSeq.sorted, added, checkpointEvery))
     (version, touched.size, all.size)
+  }
+
+  /** BLOOM and secondary-zonemap lines for the files under `dataDir`,
+    * for every column whose index covered a `touched` file of `base` —
+    * a rewrite recomputes them in the same commit-time window (one
+    * aggregation per indexed column over the NEW files only), so an
+    * UPDATE or MERGE prunes exactly as well after as before. */
+  private def reindexLines(s: SparkSession, table: Path, dataDir: Path,
+                           base: Snapshot,
+                           touched: Set[String]): Seq[String] = {
+    val bloomCols = base.entries
+      .collect { case Bloom(f, c, _) if touched(f) => c }.distinct
+    val secCols = base.secondaryStats
+      .collect { case (f, c, _, _) if touched(f) => c }.distinct
+    bloomCols.flatMap(fileBloomLines(s, table, dataDir, _)) ++
+      secCols.flatMap(secondaryLines(s, table, dataDir, _))
+  }
+
+  /** The manifest of a partial rewrite of `base` that removes the
+    * (sorted) data files `removed` and adds `added`: BASE + RM lines +
+    * `added` — O(commit) metadata, the Delta add+remove-actions shape;
+    * resolution drops each RM'd data line and every line indexing it —
+    * or, at the checkpoint cadence, the base's surviving lines carried
+    * byte-verbatim plus `added`. */
+  private def rewriteLines(base: Snapshot, removed: Seq[String],
+                           added: Seq[String],
+                           checkpointEvery: Int): Seq[String] = {
+    val dead = removed.toSet
+    if (base.chainLength + 1 > checkpointEvery)
+      base.linesWhere(e => fileOf(e).forall(!dead(_))) ++ added
+    else Base(base.version).line +: (removed.map(Rm(_).line) ++ added)
   }
 
   /** GROUP-REPLACEMENT COMMIT (r15) — the commit point of the SQL
@@ -3389,7 +3328,8 @@ object VersionedTable {
     // (the from-scratch manifest drops the line — correctly, the new
     // files embody it). RENAME/WIDEN still wait for compaction: they
     // record footer-time names the partial rewrite would half-apply.
-    require(columnMappings(table, base).forall(m =>
+    val snap = snapshot(table, base)
+    require(snap.columnMappings.forall(m =>
         m._1 == "addcol" || m._1 == "dropcol"),
       s"$what at version $base: rename/widen schema mappings live — " +
         "compact first (the scan refuses these too)")
@@ -3398,11 +3338,11 @@ object VersionedTable {
     // the exception: it reads NOTHING (the staged zero-row file
     // carries the full schema incl. the partition columns, the DDL
     // bootstrap shape) and the declared layout is restated below.
-    require(truncate || partitionLayout(table, base).isEmpty,
+    require(truncate || snap.partitionLayout.isEmpty,
       s"$what at version $base: partition-layout files (col=value " +
         "path segments) — their partition column is not in the payload " +
         "and a rewrite would drop it; compact first")
-    val all = statsManifest(table, base).map(_._1)
+    val all = snap.files
     val touched = replaced.toSet
     require(touched.subsetOf(all.toSet),
       s"$what: replaced files ${touched -- all.toSet} are not in " +
@@ -3421,9 +3361,8 @@ object VersionedTable {
         "table, or DELETE by key (a deletion-vector commit keeps the " +
         "files), or overwrite with replacement rows")
     enforceConstraintsOnFiles(s, table, staged, Some(base), what)
-    val baseLines = manifest(table, base)
-    val statsColOpt = statsColumns(table, base).headOption
-    val hadRows = baseLines.exists(_.startsWith(RowsPrefix))
+    val statsColOpt = snap.statsCol
+    val hadRows = snap.rowCounts.nonEmpty
     // Staged files share one staging dir (the V2 writer's namespace) —
     // stats/ROWS recompute in one pass over the new files only.
     val dataDir = staged.headOption
@@ -3448,55 +3387,26 @@ object VersionedTable {
     }
     val stagedLines =
       if (statsColOpt.isDefined && staged.nonEmpty)
-        stagedStats.map { case (f, mn, mx, _) => s"$f\t$mn\t$mx" }
-      else staged
-    val rowsLines =
-      if (!hadRows || staged.isEmpty) Nil
-      else if (statsColOpt.isDefined)
-        stagedStats.map { case (f, _, _, n) => s"$RowsPrefix$f\t$n" }
-      else fileRowsLines(s, table, dataDir)
-    // INDEX MAINTENANCE (r15): a DML rewrite must not silently degrade
-    // the skipping indexes — when the replaced files carried BLOOM or
-    // secondary-zonemap STATS lines, recompute them for the staged
-    // files in the same commit-time window (one aggregation per
-    // indexed column over the NEW files only, the commitIndexed cost
-    // discipline). Untouched files' index lines carry as before, so a
-    // point lookup prunes exactly as well after an UPDATE as before.
+        statsRowsLines(stagedStats, hadRows)
+      else staged ++
+        (if (hadRows && staged.nonEmpty) fileRowsLines(s, table, dataDir)
+         else Nil)
+    // INDEX MAINTENANCE: untouched files' index lines carry as before,
+    // the staged files' are recomputed ([[reindexLines]]).
     val indexLines =
       if (staged.isEmpty) Nil
-      else {
-        val bloomCols = blooms(table, base)
-          .collect { case (f, c, _) if touched.contains(f) => c }.distinct
-        val secCols = secondaryStats(table, base)
-          .collect { case (f, c, _, _) if touched.contains(f) => c }
-          .distinct
-        bloomCols.flatMap(c => fileBloomLines(s, table, dataDir, c)) ++
-          secCols.flatMap(c =>
-            fileColStats(s, table, dataDir, c).map {
-              case (f, mn, mx, _) => s"$StatsPrefix$f\t$c\t$mn\t$mx"
-            })
-      }
-    val added =
-      stagedLines ++ rowsLines ++ indexLines :+ s"${KindPrefix}update"
+      else reindexLines(s, table, dataDir, snap, touched)
     val lines =
       if (touched == all.toSet)
         // Full rewrite: a from-scratch snapshot — DVs folded away by
         // the scan, CHECK, STATSCOL and the declared partition layout
         // carried (the compactCommit amnesia rule), indexes recomputed
         // above.
-        stagedLines ++ rowsLines ++ indexLines ++
-          checkConstraints(table, base).map(CheckPrefix + _) ++
-          statsColOpt.map(StatsColPrefix + _).toSeq ++
-          declaredPartitionCols(table, base).map(PartColPrefix + _) ++
-          partSpecLines(table, base) :+
-          s"${KindPrefix}update"
-      else if (chainLength(table, base) + 1 > checkpointEvery)
-        baseLines.filter { line =>
-          if (isMetaLine(line)) metaFile(line).forall(!touched.contains(_))
-          else !touched.contains(line.split('\t').head)
-        } ++ added
-      else (BasePrefix + base) +:
-        (replaced.sorted.map(RmPrefix + _) ++ added)
+        stagedLines ++ indexLines ++ snap.checks.map(Check(_).line) ++
+          restatedDeclarations(snap, keepStatsCol = true) :+
+          Kind("update").line
+      else rewriteLines(snap, replaced.sorted,
+        stagedLines ++ indexLines :+ Kind("update").line, checkpointEvery)
     try publish(table, version, lines)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
@@ -3529,154 +3439,125 @@ object VersionedTable {
                     files: Int = 4): Long = {
     import org.apache.spark.sql.functions.col
     refuseBranched(table, "compactCommit")
-    val base = latestVersion(table).getOrElse(
-      throw new IllegalArgumentException(
-        s"compactCommit: no committed version at $table"))
+    val snap = latest(table, "compactCommit")
+    val base = snap.version
     val version = base + 1
-    // Hive-partitioned layout (r14, was silent corruption; r16:
-    // multi-column): the partition columns live only in the manifest
-    // paths, so the rewrite re-attaches them from those paths
+    // Hive-partitioned layout: the partition columns live only in the
+    // manifest paths, so the rewrite re-attaches them from those paths
     // (partition discovery per writer directory) and writes
     // partitionBy on the full layout — layout, pruning, and the
     // columns all survive the compaction. No DVs/mappings in the mix
     // (the flat path composes those; partitioned commits never carry
     // them today — refuse rather than guess), and RAGGED layouts
     // refuse below.
-    val partCols = partitionLayout(table, base)
-    // PARTITION-SPEC EVOLUTION (r17): reads re-attach every file's
-    // path-borne columns under the file's OWN spec (the union layout),
-    // but the REWRITE lands under the LIVE spec — compaction is the
-    // maintenance verb that un-rags an evolved table.
-    val writeCols = writePartitionLayout(table, base)
-    val evolved = partitionSpecs(table, base).nonEmpty
+    val partCols = snap.partitionLayout
+    // PARTITION-SPEC EVOLUTION: reads re-attach every file's path-borne
+    // columns under the file's OWN spec (the union layout), but the
+    // REWRITE lands under the LIVE spec — compaction is the maintenance
+    // verb that un-rags an evolved table.
+    val writeCols = snap.writePartitionLayout
+    val evolved = snap.partitionSpecs.nonEmpty
     val dataDir = newDataDir(table, version)
-    val hadRows = manifest(table, base).exists(_.startsWith(RowsPrefix))
-    val lines = partCols.headOption match {
-      case Some(_) =>
-        require(deletionVectors(table, base).isEmpty &&
-            columnMappings(table, base).isEmpty,
-          s"compactCommit at version $base: partition-layout files " +
-            "combined with deletion vectors or schema mappings — " +
-            "unsupported composition")
-        // A healthy NON-EVOLVED layout is UNIFORM: every data file
-        // carries every layout column's segment (the flat zero-row DDL
-        // bootstrap is the one exception). A RAGGED mix — files
-        // partitioned on different column sets — has no faithful
-        // rewrite under ONE declared layout (partitionBy would
-        // materialize NULL segments); refuse rather than guess. An
-        // EVOLVED table is legitimately ragged (each file under its
-        // generation's spec); there the check relaxes to "every
-        // segment column is a known layout column" and the rewrite
-        // below un-rags under the live spec.
-        val declared = declaredPartitionCols(table, base)
-        statsManifest(table, base).map(_._1).foreach { f =>
-          val fileCols = f.split('/').dropRight(1).collect {
-            case seg if seg.contains('=') =>
-              seg.substring(0, seg.indexOf('='))
-          }.toSet
-          if (evolved)
-            require(fileCols.subsetOf(partCols.toSet ++
-                hiddenSegmentNames(table, base)),
-              s"compactCommit at version $base: file $f carries " +
-                s"partition segments $fileCols outside the table's " +
-                s"known layout columns $partCols")
-          else
-            require(fileCols == partCols.toSet ||
-                (fileCols.isEmpty && declared.nonEmpty),
-              s"compactCommit at version $base: file $f carries " +
-                s"partition segments $fileCols but the table layout is " +
-                s"$partCols — ragged layouts refuse")
-        }
-        val snap = readMultiPartitionedFiles(s, table, partCols,
-          statsManifest(table, base).map(_._1), asOf = Some(base))
-        // A ZERO-ROW snapshot (a truncated/emptied partitioned table)
-        // must not flow through dynamic partitionBy — with no rows it
-        // writes NO files at all, and the published manifest would
-        // list no data lines (an unreadable table). Fall back to the
-        // flat zero-row bootstrap shape: one schema-carrying empty
-        // file, partition columns riding the payload, declared layout
-        // restated below.
-        if (snap.isEmpty)
-          writeData(snap.coalesce(1), dataDir)
-        else {
-          val out = statsCol match {
-            case Some(c) => snap.repartitionByRange(files, col(c))
-            case None => snap.repartition(files)
-          }
-          if (writeCols.nonEmpty)
-            writeUnderSpec(out, writeCols, dataDir)
-          else // evolved back to flat: path columns fold into the payload
-            writeData(out, dataDir)
-        }
-        statsCol match {
-          case Some(c) =>
-            val stats = fileColStatsAll(s, table, dataDir, c)
-            stats.map { case (f, mn, mx, _) => s"$f\t$mn\t$mx" } ++
-              (if (hadRows)
-                 stats.map { case (f, _, _, n) => s"$RowsPrefix$f\t$n" }
-               else Nil) :+ s"$StatsColPrefix$c"
-          case None =>
-            partFiles(table, dataDir) ++
-              (if (hadRows) fileRowsLinesAll(s, table, dataDir) else Nil)
-        }
-      case None =>
-        val snap = read(s, table, Some(base),
-          mergeSchema = columnMappings(table, base).nonEmpty)
-        val out = statsCol match {
-          case Some(c) => snap.repartitionByRange(files, col(c))
-          case None => snap.repartition(files)
-        }
-        // A flat-file table whose spec evolved to a partitioned layout
-        // before any partitioned insert landed: the compaction itself
-        // moves the snapshot under the live spec (empty snapshots keep
-        // the flat schema-carrying shape — dynamic partitionBy of zero
-        // rows would write no files at all).
-        if (writeCols.nonEmpty && !snap.isEmpty)
-          writeUnderSpec(out, writeCols, dataDir)
-        else
-          writeData(out, dataDir)
-        statsCol match {
-          case Some(c) =>
-            val stats = fileColStatsAll(s, table, dataDir, c)
-            stats.map { case (f, mn, mx, _) => s"$f\t$mn\t$mx" } ++
-              (if (hadRows)
-                 stats.map { case (f, _, _, n) => s"$RowsPrefix$f\t$n" }
-               else Nil) :+ s"$StatsColPrefix$c"
-          case None =>
-            partFiles(table, dataDir) ++
-              (if (hadRows) fileRowsLinesAll(s, table, dataDir) else Nil)
-        }
+    def clustered(df: DataFrame): DataFrame = statsCol match {
+      case Some(c) => df.repartitionByRange(files, col(c))
+      case None => df.repartition(files)
     }
-    val checks = checkConstraints(table, base).map(CheckPrefix + _)
-    // INDEX MAINTENANCE (r15): compaction must not be the path that
-    // silently drops the skipping indexes either — recompute BLOOM and
+    if (partCols.nonEmpty) {
+      require(snap.deletionVectors.isEmpty && snap.columnMappings.isEmpty,
+        s"compactCommit at version $base: partition-layout files " +
+          "combined with deletion vectors or schema mappings — " +
+          "unsupported composition")
+      // A healthy NON-EVOLVED layout is UNIFORM: every data file
+      // carries every layout column's segment (the flat zero-row DDL
+      // bootstrap is the one exception). A RAGGED mix — files
+      // partitioned on different column sets — has no faithful
+      // rewrite under ONE declared layout (partitionBy would
+      // materialize NULL segments); refuse rather than guess. An
+      // EVOLVED table is legitimately ragged (each file under its
+      // generation's spec); there the check relaxes to "every
+      // segment column is a known layout column" and the rewrite
+      // below un-rags under the live spec.
+      snap.files.foreach { f =>
+        val fileCols = f.split('/').dropRight(1).collect {
+          case seg if seg.contains('=') =>
+            seg.substring(0, seg.indexOf('='))
+        }.toSet
+        if (evolved)
+          require(fileCols.subsetOf(partCols.toSet ++
+              snap.hiddenSegmentNames),
+            s"compactCommit at version $base: file $f carries " +
+              s"partition segments $fileCols outside the table's " +
+              s"known layout columns $partCols")
+        else
+          require(fileCols == partCols.toSet ||
+              (fileCols.isEmpty && snap.declaredPartitionCols.nonEmpty),
+            s"compactCommit at version $base: file $f carries " +
+              s"partition segments $fileCols but the table layout is " +
+              s"$partCols — ragged layouts refuse")
+      }
+      val rows = readMultiPartitionedFiles(s, snap, partCols, snap.files)
+      // A ZERO-ROW snapshot (a truncated/emptied partitioned table)
+      // must not flow through dynamic partitionBy — with no rows it
+      // writes NO files at all, and the published manifest would
+      // list no data lines (an unreadable table). Fall back to the
+      // flat zero-row bootstrap shape: one schema-carrying empty
+      // file, partition columns riding the payload, declared layout
+      // restated below.
+      if (rows.isEmpty) writeData(rows.coalesce(1), dataDir)
+      else if (writeCols.nonEmpty)
+        writeUnderSpec(clustered(rows), writeCols, dataDir)
+      else // evolved back to flat: path columns fold into the payload
+        writeData(clustered(rows), dataDir)
+    } else {
+      val rows = readSnapshot(s, snap,
+        mergeSchema = snap.columnMappings.nonEmpty)
+      // A flat-file table whose spec evolved to a partitioned layout
+      // before any partitioned insert landed: the compaction itself
+      // moves the snapshot under the live spec (empty snapshots keep
+      // the flat schema-carrying shape — dynamic partitionBy of zero
+      // rows would write no files at all).
+      if (writeCols.nonEmpty && !rows.isEmpty)
+        writeUnderSpec(clustered(rows), writeCols, dataDir)
+      else
+        writeData(clustered(rows), dataDir)
+    }
+    val lines = compactedLines(s, table, dataDir, statsCol,
+      snap.rowCounts.nonEmpty) ++ statsCol.map(StatsCol(_).line)
+    // INDEX MAINTENANCE: compaction must not be the path that silently
+    // drops the skipping indexes either — recompute BLOOM and
     // secondary-zonemap lines for every column the base indexed, over
     // the fresh files (flat layouts only; partitioned bases never
     // carry these compositions today). The primary stats column's
     // zonemaps already ride the data lines above.
     val indexLines =
       if (partCols.nonEmpty || writeCols.nonEmpty) Nil
-      else {
-        val bloomCols = blooms(table, base).map(_._2).distinct
-        val secCols = secondaryStats(table, base).map(_._2).distinct
-          .filterNot(statsCol.contains)
-        bloomCols.flatMap(c => fileBloomLines(s, table, dataDir, c)) ++
-          secCols.flatMap(c =>
-            fileColStats(s, table, dataDir, c).map {
-              case (f, mn, mx, _) => s"$StatsPrefix$f\t$c\t$mn\t$mx"
-            })
-      }
+      else snap.bloomColumns.flatMap(fileBloomLines(s, table, dataDir, _)) ++
+        snap.secondaryStats.map(_._2).distinct.filterNot(statsCol.contains)
+          .flatMap(secondaryLines(s, table, dataDir, _))
     // KIND=compact marks the commit content-preserving (dataChange=
     // false): the change feed skips it instead of failing downstream
     // mirrors into a full restart. A DECLARED partition layout is a
     // table-wide contract like STATSCOL — the full-manifest rewrite
     // restates it (amnesia rule).
-    val partDecl = declaredPartitionCols(table, base).map(PartColPrefix + _) ++
-      partSpecLines(table, base)
-    publish(table, version,
-      lines ++ indexLines ++ checks ++ partDecl :+ s"${KindPrefix}compact")
+    publish(table, version, lines ++ indexLines ++
+      snap.checks.map(Check(_).line) ++
+      restatedDeclarations(snap, keepStatsCol = false) :+
+      Kind("compact").line)
     version
   }
+
+  /** Data lines for every file a compaction wrote under `dataDir`,
+    * zero-row files included: zonemaps on `statsCol` when given, and a
+    * ROWS line per file when the base recorded row counts. */
+  private def compactedLines(s: SparkSession, table: Path, dataDir: Path,
+      statsCol: Option[String], hadRows: Boolean): Seq[String] =
+    statsCol match {
+      case Some(c) =>
+        statsRowsLines(fileColStatsAll(s, table, dataDir, c), hadRows)
+      case None =>
+        partFiles(table, dataDir) ++
+          (if (hadRows) fileRowsLinesAll(s, table, dataDir) else Nil)
+    }
 
   /** PARTITION-SCOPED COMPACTION (r17) — the maintenance shape a
     * 100-TB table actually runs: nobody compacts three years of
@@ -3700,18 +3581,16 @@ object VersionedTable {
     refuseBranched(table, "compactPartitionsCommit")
     require(values.nonEmpty && files > 0,
       s"compactPartitionsCommit: need partition values and files > 0")
-    val base = latestVersion(table).getOrElse(
-      throw new IllegalArgumentException(
-        s"compactPartitionsCommit: no committed version at $table"))
-    require(deletionVectors(table, base).isEmpty &&
-        columnMappings(table, base).isEmpty,
+    val snap = latest(table, "compactPartitionsCommit")
+    val base = snap.version
+    require(snap.deletionVectors.isEmpty && snap.columnMappings.isEmpty,
       s"compactPartitionsCommit at version $base: deletion vectors or " +
         "schema mappings live — run a full compactCommit first")
-    val layout = partitionLayout(table, base)
+    val layout = snap.partitionLayout
     require(layout.contains(partCol),
       s"compactPartitionsCommit: '$partCol' is not a partition column " +
         s"of $table (layout $layout)")
-    val all = statsManifest(table, base).map(_._1)
+    val all = snap.files
     val want = values.toSet
     def valueOf(f: String): Option[String] =
       f.split('/').collectFirst {
@@ -3722,50 +3601,29 @@ object VersionedTable {
     val touched = all.filter(f => valueOf(f).exists(want))
     if (touched.isEmpty) return (base, 0, all.size)
     val version = base + 1
-    val writeCols = writePartitionLayout(table, base)
-    val snap = readMultiPartitionedFiles(s, table, layout, touched,
-      asOf = Some(base))
+    val writeCols = snap.writePartitionLayout
+    val rows = readMultiPartitionedFiles(s, snap, layout, touched)
     val dataDir = newDataDir(table, version)
-    val statsColOpt = statsColumns(table, base).headOption
-    val hadRows = manifest(table, base).exists(_.startsWith(RowsPrefix))
-    if (!snap.isEmpty) {
-      val out = statsColOpt match {
-        case Some(c) => snap.repartitionByRange(files, col(c))
-        case None => snap.repartition(files)
+    if (!rows.isEmpty) {
+      val out = snap.statsCol match {
+        case Some(c) => rows.repartitionByRange(files, col(c))
+        case None => rows.repartition(files)
       }
       if (writeCols.nonEmpty)
         writeUnderSpec(out, writeCols, dataDir)
       else writeData(out, dataDir)
     }
     val staged =
-      if (snap.isEmpty) Nil
-      else statsColOpt match {
-        case Some(c) =>
-          val stats = fileColStatsAll(s, table, dataDir, c)
-          stats.map { case (f, mn, mx, _) => s"$f\t$mn\t$mx" } ++
-            (if (hadRows)
-               stats.map { case (f, _, _, n) => s"$RowsPrefix$f\t$n" }
-             else Nil)
-        case None =>
-          partFiles(table, dataDir) ++
-            (if (hadRows) fileRowsLinesAll(s, table, dataDir) else Nil)
-      }
+      if (rows.isEmpty) Nil
+      else compactedLines(s, table, dataDir, snap.statsCol,
+        snap.rowCounts.nonEmpty)
     // A scope that holds only zero-row files compacts away entirely —
     // legal as long as the table keeps a data line (its schema source).
     require(staged.nonEmpty || touched.size < all.size,
       s"compactPartitionsCommit: the scope covers every file of $table " +
         "and holds no rows — TRUNCATE is the legitimate verb")
-    val dead = touched.toSet
-    val added = staged :+ s"${KindPrefix}compact"
-    val lines =
-      if (chainLength(table, base) + 1 > checkpointEvery)
-        manifest(table, base).filter { line =>
-          if (isMetaLine(line)) metaFile(line).forall(!dead.contains(_))
-          else !dead.contains(line.split('\t').head)
-        } ++ added
-      else (BasePrefix + base) +:
-        (touched.sorted.map(RmPrefix + _) ++ added)
-    try publish(table, version, lines)
+    try publish(table, version, rewriteLines(snap, touched.sorted,
+      staged :+ Kind("compact").line, checkpointEvery))
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new IllegalStateException(
@@ -3829,17 +3687,15 @@ object VersionedTable {
     require(cols.nonEmpty && cols.size <= 2,
       s"clusterCommit: 1 (range) or 2 (Morton) cluster columns, got $cols")
     require(files > 0, s"clusterCommit: files=$files must be positive")
-    val base = latestVersion(table).getOrElse(
-      throw new IllegalArgumentException(
-        s"clusterCommit: no committed version at $table"))
-    val version = base + 1
-    require(partitionLayout(table, base).isEmpty &&
-        writePartitionLayout(table, base).isEmpty,
+    val base = latest(table, "clusterCommit")
+    val version = base.version + 1
+    require(base.partitionLayout.isEmpty &&
+        base.writePartitionLayout.isEmpty,
       s"clusterCommit: $table has a partition layout (or live " +
         "transform spec) — cluster rewrites the snapshot flat and " +
         "would drop it; compact instead")
-    val snap = read(s, table, Some(base),
-      mergeSchema = columnMappings(table, base).nonEmpty)
+    val snap = readSnapshot(s, base,
+      mergeSchema = base.columnMappings.nonEmpty)
     cols.foreach(c => require(snap.schema.fields.exists(f =>
         f.name == c && f.dataType == org.apache.spark.sql.types.LongType),
       s"clusterCommit: column '$c' must exist with type BIGINT (the " +
@@ -3856,27 +3712,17 @@ object VersionedTable {
           .drop("__z")
     }
     writeData(clustered, dataDir)
-    val hadRows = manifest(table, base).exists(_.startsWith(RowsPrefix))
-    val stats = fileColStatsAll(s, table, dataDir, cols.head)
-    val lines = stats.map { case (f, mn, mx, _) => s"$f\t$mn\t$mx" } ++
-      (if (hadRows)
-         stats.map { case (f, _, _, n) => s"$RowsPrefix$f\t$n" }
-       else Nil) :+ s"$StatsColPrefix${cols.head}"
+    val lines = compactedLines(s, table, dataDir, Some(cols.head),
+      base.rowCounts.nonEmpty) :+ StatsCol(cols.head).line
     // Secondary zonemaps: the OTHER clustered dimension(s), plus any
     // secondary column the base already indexed (maintenance must not
     // be the path that drops an index — the compactCommit amnesia rule).
-    val secCols = (cols.tail ++
-      secondaryStats(table, base).map(_._2)).distinct
-      .filterNot(_ == cols.head)
-    val secondary = secCols.flatMap(c =>
-      fileColStats(s, table, dataDir, c).map { case (f, mn, mx, _) =>
-        s"$StatsPrefix$f\t$c\t$mn\t$mx"
-      })
-    val bloomLines = blooms(table, base).map(_._2).distinct
-      .flatMap(c => fileBloomLines(s, table, dataDir, c))
-    val checks = checkConstraints(table, base).map(CheckPrefix + _)
-    publish(table, version,
-      lines ++ secondary ++ bloomLines ++ checks :+ s"${KindPrefix}compact")
+    val secondary = (cols.tail ++ base.secondaryStats.map(_._2)).distinct
+      .filterNot(_ == cols.head).flatMap(secondaryLines(s, table, dataDir, _))
+    val bloomLines =
+      base.bloomColumns.flatMap(fileBloomLines(s, table, dataDir, _))
+    publish(table, version, lines ++ secondary ++ bloomLines ++
+      base.checks.map(Check(_).line) :+ Kind("compact").line)
     version
   }
 
@@ -3924,41 +3770,38 @@ object VersionedTable {
       s"promoteBranch: ref '$into' is a $intoKind — tags are immutable")
     val fork = fromEntries.head._3
     val fromHead = fromEntries.last._3
-    val forkLines = manifest(table, fork)
-    val headLines = manifest(table, fromHead)
+    val forkLines = snapshot(table, fork).lines
+    val headLines = snapshot(table, fromHead).lines
     val forkSet = forkLines.toSet
     val headSet = headLines.toSet
     // The branch's NET change since the fork: lines it added, lines it
     // removed (rewrites). Removals rebase as RM deltas below; a
     // removed CHECK line refuses outright (contracts don't merge away).
     val removed = forkLines.filterNot(headSet)
-    require(!removed.exists(_.startsWith(CheckPrefix)),
+    require(!removed.exists(parse(_).isInstanceOf[Check]),
       s"promoteBranch: branch '$from' dropped a CHECK constraint since " +
         s"its fork at v$fork — a contract change cannot ride a promote")
     val removedPaths = removed.map { line =>
-      if (isMetaLine(line)) metaFile(line).getOrElse(
+      fileOf(parse(line)).getOrElse(
         throw new IllegalArgumentException(
           s"promoteBranch: branch '$from' removed table-wide metadata " +
             s"'${line.takeWhile(_ != '\t')}' since its fork — " +
             "unrebasable; compact first"))
-      else line.split('\t').head
     }.distinct
     // A per-FILE index line (BLOOM/STATS/ROWS) removed while its data
     // file survives cannot rebase: the replay RM names the FILE, which
     // would drop the kept data line along with the index. (DV removals
     // stand alone by design — folding a deletion vector away is a
     // legitimate net change whose RM names only the DV sidecar.)
-    val removedDataPaths =
-      removed.filterNot(isMetaLine).map(_.split('\t').head).toSet
-    removed.filter(l => l.startsWith(BloomPrefix) ||
-        l.startsWith(StatsPrefix) || l.startsWith(RowsPrefix)).foreach {
-      m => require(metaFile(m).forall(removedDataPaths.contains),
+    val removedDataPaths = dataFiles(removed).toSet
+    removed.filterNot(parse(_).isInstanceOf[DataFile]).foreach {
+      m => require(fileOf(parse(m)).forall(removedDataPaths.contains),
         s"promoteBranch: branch '$from' dropped index metadata " +
           s"('${m.takeWhile(_ != '\t')}') for a data file it kept — " +
           "unrebasable as a file-level RM; compact first")
     }
     val added = headLines.filterNot(forkSet)
-    val addedFiles = added.filterNot(isMetaLine).map(_.split('\t').head)
+    val addedFiles = dataFiles(added)
     var conflicts = 0
     // The TARGET branch's constraints gate the promote: `into` may
     // have declared a stricter CHECK after the fork, and a
@@ -3993,7 +3836,7 @@ object VersionedTable {
       // `into`'s manifest — if `into` touched the same file (line gone
       // or re-statted), the rebase would silently discard its change.
       if (removed.nonEmpty) {
-        val intoSet = manifest(table, intoHead).toSet
+        val intoSet = snapshot(table, intoHead).lines.toSet
         val conflicting = removed.filterNot(intoSet)
         require(conflicting.isEmpty,
           s"promoteBranch($from -> $into): both branches touched " +
@@ -4003,10 +3846,10 @@ object VersionedTable {
             "resolve manually")
       }
       val target = latestVersion(table).get + 1
-      val lines = (BasePrefix + intoHead) +: (
+      val lines = Base(intoHead).line +: (
         if (removed.isEmpty) added
-        else removedPaths.sorted.map(RmPrefix + _) ++ added :+
-          s"${KindPrefix}update")
+        else removedPaths.sorted.map(Rm(_).line) ++ added :+
+          Kind("update").line)
       try {
         publish(table, target, lines)
         try {
@@ -4232,8 +4075,8 @@ object VersionedTable {
       // of history. Checkpoint on the branch's own chain depth.
       val lines =
         if (chainLength(table, headVersion) + 1 > checkpointEvery)
-          manifest(table, headVersion) ++ mine
-        else (BasePrefix + headVersion) +: mine
+          snapshot(table, headVersion).lines ++ mine
+        else Base(headVersion).line +: mine
       try {
         publish(table, target, lines)
         try {
@@ -4256,22 +4099,10 @@ object VersionedTable {
       s"branchCommit: lost $maxAttempts straight races on ref '$name'")
   }
 
-  /** A delta manifest's first line names the version it extends; the
-    * rest are this version's ADDED lines. The literal "BASE" can never
-    * collide with a data path (those live under data/ or dv/). */
-  private val BasePrefix = "BASE\t"
-
-  /** `RM\t<file>` (r13): a REMOVAL inside a delta manifest — the
-    * Delta-log add+remove-actions shape that makes PARTIAL REWRITES
-    * O(commit) metadata too: an [[updateWhere]] touching 3 of 10⁶
-    * files publishes BASE + 3 RM lines + 3 new stats lines, never the
-    * full list (checkpoints still bound the chain). Resolution drops
-    * the named data line AND every meta line indexing it (BLOOM/STATS/
-    * ROWS — a stale skipping index must die with its file). RM deltas
-    * are REWRITES to the change feed: [[removedLines]] reports them,
-    * so `graft-changes` refuses the version exactly as it refuses a
-    * full-manifest rewrite. */
-  private val RmPrefix = "RM\t"
+  /** Manifest files read so far by this JVM — each [[rawManifest]]
+    * call is one. The per-statement read count specs and run records
+    * difference it. */
+  private[graft] val manifestReads = new java.util.concurrent.atomic.AtomicLong
 
   /** The stored lines of version `version`'s manifest file, unresolved
     * (a delta keeps its BASE pointer). */
@@ -4279,76 +4110,38 @@ object VersionedTable {
     val m = commitsDir(table).resolve(manifestName(version))
     require(Files.isRegularFile(m),
       s"version $version was never committed at $table")
+    manifestReads.incrementAndGet()
     Files.readAllLines(m, StandardCharsets.UTF_8).asScala.toSeq
       .filter(_.nonEmpty)
   }
 
-  /** The file list of a committed version, with delta chains resolved:
-    * a `BASE\tN` head splices in version N's resolved lines; `RM\t<f>`
-    * tail lines drop f's data line and every meta line indexing f from
-    * the spliced base. Chain depth is bounded by the writers'
-    * `checkpointEvery`, so resolution cost is O(live files), not
-    * O(history). */
-  def manifest(table: Path, version: Long): Seq[String] = {
-    val raw = rawManifest(table, version)
-    val resolved = raw.headOption match {
-      case Some(h) if h.startsWith(BasePrefix) =>
-        val base = manifest(table, h.stripPrefix(BasePrefix).trim.toLong)
-        val (rm, added) = raw.tail.partition(_.startsWith(RmPrefix))
-        if (rm.isEmpty) base ++ added
-        else {
-          val dead = rm.map(_.substring(RmPrefix.length)).toSet
-          base.filterNot { line =>
-            if (isMetaLine(line)) metaFile(line).exists(dead)
-            else dead.contains(line.split('\t').head)
-          } ++ added
-        }
-      case _ => raw
-    }
-    // KIND annotations describe one commit, never the table: strip them
-    // from every resolution so no later carry/checkpoint inherits one.
-    resolved.filterNot(_.startsWith(KindPrefix))
-  }
+  /** The resolved lines of a committed version — see [[Snapshot.lines]]. */
+  def manifest(table: Path, version: Long): Seq[String] =
+    snapshot(table, version).lines
 
   /** How many manifest FILES a resolution of `version` reads (1 for a
     * full manifest) — the checkpoint-cadence decision and its test
-    * witness. */
-  def chainLength(table: Path, version: Long): Int = {
-    val raw = rawManifest(table, version)
-    raw.headOption match {
-      case Some(h) if h.startsWith(BasePrefix) =>
-        1 + chainLength(table, h.stripPrefix(BasePrefix).trim.toLong)
+    * witness. Reads only the chain's raw manifests. */
+  def chainLength(table: Path, version: Long): Int =
+    rawManifest(table, version).headOption.map(parse) match {
+      case Some(Base(b)) => 1 + chainLength(table, b)
       case _ => 1
     }
-  }
 
-  /** The manifest lines version `version` ADDED over its predecessor —
-    * the change-feed primitive ([[graft.sources.TableChangesSource]]
-    * plans micro-batches from it). For a delta manifest this is the
-    * stored tail (zero extra reads); for a full manifest it is the
-    * set difference against version-1's resolved lines (v0, or a
-    * rewrite commit, adds everything it lists). */
   /** The manifest lines version `version` REMOVED vs its predecessor —
     * nonempty exactly for REWRITE commits (compaction, transact's
-    * copy-on-write), which a change feed cannot represent as
-    * appends+deletes. Deltas are pure additions, so only full
-    * manifests can remove. */
+    * copy-on-write, RM deltas), which a change feed cannot represent as
+    * appends+deletes. */
   def removedLines(table: Path, version: Long): Seq[String] = {
     val raw = rawManifest(table, version)
-    raw.headOption match {
-      case Some(h) if h.startsWith(BasePrefix) =>
+    raw.headOption.map(parse) match {
+      case Some(Base(b)) =>
         // An RM-bearing delta removes: resolve exactly what its BASE
         // listed for the named files (data line + indexing meta lines)
         // — the same answer a full-manifest diff would give.
-        val dead = raw.tail.collect {
-          case l if l.startsWith(RmPrefix) => l.substring(RmPrefix.length)
-        }.toSet
+        val dead = raw.tail.map(parse).collect { case Rm(f) => f }.toSet
         if (dead.isEmpty) Seq.empty
-        else manifest(table, h.stripPrefix(BasePrefix).trim.toLong)
-          .filter { line =>
-            if (isMetaLine(line)) metaFile(line).exists(dead)
-            else dead.contains(line.split('\t').head)
-          }
+        else snapshot(table, b).linesWhere(e => fileOf(e).exists(dead))
       case _ =>
         versions(table).filter(_ < version).lastOption match {
           case None => Seq.empty
@@ -4364,14 +4157,19 @@ object VersionedTable {
     * die with their file but carry no rows). The change feed serves
     * these as `update_preimage` rows for a KIND=update commit. */
   def removedDataFiles(table: Path, version: Long): Seq[String] =
-    removedLines(table, version).filterNot(isMetaLine)
-      .map(_.split('\t').head)
+    dataFiles(removedLines(table, version))
 
+  /** The manifest lines version `version` ADDED over its predecessor —
+    * the change-feed primitive ([[graft.sources.TableChangesSource]]
+    * plans micro-batches from it). For a delta manifest this is the
+    * stored tail (zero extra reads); for a full manifest it is the
+    * set difference against the closest committed ancestor's resolved
+    * lines (v0, or a rewrite commit, adds everything it lists). KIND
+    * lines are never reported. */
   def addedLines(table: Path, version: Long): Seq[String] = {
     val raw = rawManifest(table, version)
-    (raw.headOption match {
-      case Some(h) if h.startsWith(BasePrefix) =>
-        raw.tail.filterNot(_.startsWith(RmPrefix))
+    (raw.headOption.map(parse) match {
+      case Some(Base(_)) => raw.tail.filterNot(parse(_).isInstanceOf[Rm])
       case _ =>
         // Full manifest: diff against the closest committed ancestor
         // (batch-id histories may skip versions, so not version−1).
@@ -4381,8 +4179,13 @@ object VersionedTable {
             val prevSet = manifest(table, prev).toSet
             raw.filterNot(prevSet)
         }
-    }).filterNot(_.startsWith(KindPrefix))
+    }).filterNot(parse(_).isInstanceOf[Kind])
   }
+
+  /** The data files version `version` ADDED — [[addedLines]] narrowed
+    * to payload paths. */
+  def addedFiles(table: Path, version: Long): Seq[String] =
+    dataFiles(addedLines(table, version))
 
   /** Snapshot read: latest version by default, time travel via
     * `version`. Plans over exactly the manifest's files — orphans from
@@ -4390,16 +4193,18 @@ object VersionedTable {
     * [[statsManifest]] so stats-bearing and plain manifest lines read
     * alike.) */
   def read(s: SparkSession, table: Path, version: Option[Long] = None,
-           mergeSchema: Boolean = false): DataFrame = {
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalArgumentException(s"no committed version at $table"))
-    val relFiles = statsManifest(table, v).map(_._1)
+           mergeSchema: Boolean = false): DataFrame =
+    readSnapshot(s, snapshotAt(table, version), mergeSchema)
+
+  /** [[read]] of an already-resolved snapshot. */
+  private def readSnapshot(s: SparkSession, snap: Snapshot,
+                           mergeSchema: Boolean = false): DataFrame = {
     // A manifest carrying only metadata lines (every data file deleted
     // and compacted away) has no schema to serve — refuse with the
     // cause, not a reduce-on-empty crash.
-    require(relFiles.nonEmpty,
-      s"read at version $v of $table: the manifest lists no data files")
-    readLive(s, table, v, relFiles, mergeSchema)
+    require(snap.files.nonEmpty, s"read at version ${snap.version} of " +
+      s"${snap.table}: the manifest lists no data files")
+    readLive(s, snap, snap.files, mergeSchema)
   }
 
   /** Plan a read over `relFiles` (the full manifest, or a pruned
@@ -4427,19 +4232,20 @@ object VersionedTable {
     * files of one commit share one footer schema, so grouping by
     * parent dir reads each historical schema once, maps it to the
     * current one, and unions (missing columns surface typed NULLs). */
-  private def readLive(s: SparkSession, table: Path, v: Long,
+  private def readLive(s: SparkSession, snap: Snapshot,
                        relFiles: Seq[String],
                        mergeSchema: Boolean = false): DataFrame = {
-    val maps = columnMappings(table, v)
+    val table = snap.table
+    val maps = snap.columnMappings
     lazy val schema =
       footerSchema(table.resolve(relFiles.min), s.sessionState.conf)
     // A rename could retarget a DV's key column between its origin and
     // this version — refuse the ambiguity; compaction resolves it.
     val deletes =
-      if (maps.isEmpty) liveDeletes(table, v, relFiles, schema(_).dataType)
+      if (maps.isEmpty) liveDeletes(snap, relFiles, schema(_).dataType)
       else {
-        require(deletionVectors(table, v).isEmpty,
-          s"version $v carries both deletion vectors and schema mappings " +
+        require(snap.deletionVectors.isEmpty, s"version ${snap.version} " +
+          "carries both deletion vectors and schema mappings " +
             "— compact (a rewrite commit) before combining the two")
         None
       }

@@ -1897,19 +1897,21 @@ object DedupQueries extends QueryModule {
         VersionedTable.commitWithStats(s, table, 0L, base, "doc_id")
         // Data lines only: since r13 a stats commit also declares its
         // STATSCOL as a metadata line, which carries no range to price.
-        val v0Lines = VersionedTable.manifest(table, 0L)
-          .filter(_.split('\t').length == 3)
-        def range(line: String): (Long, Long) = {
-          val p = line.split('\t'); (p(1).toLong, p(2).toLong)
-        }
+        def file(line: String): VersionedTable.DataFile =
+          VersionedTable.parse(line).asInstanceOf[VersionedTable.DataFile]
+        val v0Lines = VersionedTable.manifest(table, 0L).filter(l =>
+          VersionedTable.parse(l) match {
+            case VersionedTable.DataFile(_, Some(_)) => true
+            case _ => false
+          })
         val (affected, carriedLines) = v0Lines.partition { l =>
-          val (mn, mx) = range(l); mx >= 0L && mn <= 63L
+          file(l).max >= 0L && file(l).min <= 63L
         }
         require(affected.nonEmpty && carriedLines.nonEmpty,
           "pipe_cdf: the [0,63] batch must touch some files and spare " +
             "others — otherwise the partial rewrite proves nothing")
         val touched = s.read.parquet(
-          affected.map(l => table.resolve(l.split('\t').head).toString): _*)
+          affected.map(l => table.resolve(file(l).path).toString): _*)
         val rewritten = touched
           .where(!($"doc_id" < 64 && $"doc_id" % 10 === 3))
           .select($"doc_id", $"lang",
@@ -1922,7 +1924,7 @@ object DedupQueries extends QueryModule {
           "pipe_cdf: the carried files must be exactly the shared set")
         def readLines(lines: Set[String]): DataFrame =
           s.read.parquet(lines.toSeq.sorted
-            .map(l => table.resolve(l.split('\t').head).toString): _*)
+            .map(l => table.resolve(file(l).path).toString): _*)
         val oldRows = readLines(v0Set diff v1Set)
           .select($"doc_id", $"n_chars".as("old_n_chars"))
         val newRows = readLines(v1Set diff v0Set)
@@ -3224,7 +3226,7 @@ object DedupQueries extends QueryModule {
             "vanished in the rewrite")
         // Metadata row counts track the rewrite: full coverage, and
         // the manifest-summed count equals the real one.
-        val rc = VersionedTable.rowCounts(table, 1L)
+        val rc = VersionedTable.snapshot(table, 1L).rowCounts
         require(rc.map(_._1).toSet ==
             VersionedTable.statsManifest(table, 1L).map(_._1).toSet &&
             rc.map(_._2).sum == VersionedTable.read(s, table).count(),
@@ -3444,8 +3446,7 @@ object DedupQueries extends QueryModule {
           "pipe_branch_promote: a rebase with removals must stamp " +
             "KIND=update for the change feed")
         require(VersionedTable.removedDataFiles(table, promoted2.version)
-            .toSet == VersionedTable.manifest(table, 0L)
-            .map(_.split('\t').head).toSet,
+            .toSet == VersionedTable.snapshot(table, 0L).files.toSet,
           "pipe_branch_promote: the rebase must remove exactly the " +
             "fork files the fix branch rewrote")
         val out = Seq("exp", "fix", "main").map { r =>
@@ -3567,7 +3568,7 @@ object DedupQueries extends QueryModule {
             "pipe_sql_update: an untouched file's manifest line vanished " +
               "— the SQL UPDATE must rewrite only zonemap-overlapping " +
               "files")
-          val rc = VersionedTable.rowCounts(table, 1L)
+          val rc = VersionedTable.snapshot(table, 1L).rowCounts
           require(rc.map(_._1).toSet ==
               VersionedTable.statsManifest(table, 1L).map(_._1).toSet &&
               rc.map(_._2).sum == VersionedTable.read(s, table).count(),
@@ -3729,7 +3730,7 @@ object DedupQueries extends QueryModule {
           // The rename is metadata-only debt; the compaction
           // materializes it into the files (and re-clusters).
           s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
-          require(VersionedTable.columnMappings(table, 3L).isEmpty,
+          require(VersionedTable.snapshot(table, 3L).columnMappings.isEmpty,
             "pipe_sql_ddl: compaction must materialize the rename")
           // DROP is ref-guarded: a pinned release refuses to vanish.
           s2.sql("CALL graftcat.tag('docs', 'release', 3)")
@@ -3787,7 +3788,7 @@ object DedupQueries extends QueryModule {
                     (doc_id BIGINT, lang STRING, n_chars BIGINT)
                     PARTITIONED BY (lang)""")
           val table = tmp.resolve("docs")
-          require(VersionedTable.declaredPartitionCols(table, 0L) ==
+          require(VersionedTable.snapshot(table, 0L).declaredPartitionCols ==
               Seq("lang"),
             "pipe_sql_partitioned: the DDL must declare the layout on " +
               "the bootstrap")
@@ -3795,8 +3796,7 @@ object DedupQueries extends QueryModule {
                      SELECT doc_id, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
           // Every ingested file landed under its partition segment.
-          val added = VersionedTable.addedLines(table, 1L)
-            .filterNot(_.contains('\t'))
+          val added = VersionedTable.addedFiles(table, 1L)
           require(added.nonEmpty && added.forall(_.contains("lang=")),
             s"pipe_sql_partitioned: INSERT must land col=value files, " +
               s"got $added")
@@ -3825,8 +3825,7 @@ object DedupQueries extends QueryModule {
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 5 = 0""")
           val t2 = tmp.resolve("by_lang")
-          val ctasFiles = VersionedTable.addedLines(t2, 1L)
-            .filterNot(_.contains('\t'))
+          val ctasFiles = VersionedTable.addedFiles(t2, 1L)
           require(ctasFiles.nonEmpty && ctasFiles.forall(_.contains("lang=")),
             "pipe_sql_partitioned: CTAS writes must land partitioned")
           val out = s2.sql(
@@ -3962,8 +3961,7 @@ object DedupQueries extends QueryModule {
                      SELECT doc_id, lang, source, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 3 = 0""")
-          val oldFiles = VersionedTable.addedLines(table, 1L)
-            .filterNot(_.contains('\t'))
+          val oldFiles = VersionedTable.addedFiles(table, 1L)
           require(oldFiles.nonEmpty && oldFiles.forall(_.contains("lang=")),
             s"pipe_partition_evolve: batch 1 must land lang=… files")
           // The evolution itself: ONE metadata commit, zero data files.
@@ -3971,11 +3969,12 @@ object DedupQueries extends QueryModule {
           require(VersionedTable.latestVersion(table).contains(2L),
             "pipe_partition_evolve: evolve_layout must publish one commit")
           val evolveAdds = VersionedTable.addedLines(table, 2L)
+            .map(VersionedTable.parse)
           require(evolveAdds.size == 1 &&
-              evolveAdds.head.startsWith("PARTSPEC\t"),
+              evolveAdds.head.isInstanceOf[VersionedTable.PartSpec],
             s"pipe_partition_evolve: the evolve commit must add exactly " +
               s"one PARTSPEC line, got $evolveAdds")
-          require(VersionedTable.writePartitionLayout(table, 2L) ==
+          require(VersionedTable.snapshot(table, 2L).writePartitionLayout ==
               Seq("source"),
             "pipe_partition_evolve: the live write layout must be the " +
               "new spec")
@@ -3985,8 +3984,7 @@ object DedupQueries extends QueryModule {
                      SELECT doc_id, lang, source, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 3 = 1""")
-          val newFiles = VersionedTable.addedLines(table, 3L)
-            .filterNot(_.contains('\t'))
+          val newFiles = VersionedTable.addedFiles(table, 3L)
           require(newFiles.nonEmpty &&
               newFiles.forall(f => f.contains("source=") &&
                 !f.contains("lang=")),
@@ -4093,9 +4091,12 @@ object DedupQueries extends QueryModule {
           // The evolution: ONE metadata commit, zero data files.
           s2.sql("CALL graftcat.evolve_layout('ev', 'days(ts_us)')")
           val evolveAdds = VersionedTable.addedLines(table, 1L)
-          require(evolveAdds.size == 1 &&
-              evolveAdds.head.startsWith("PARTSPEC\t") &&
-              evolveAdds.head.endsWith("days(ts_us)"),
+            .map(VersionedTable.parse)
+          require(evolveAdds.size == 1 && (evolveAdds.head match {
+              case VersionedTable.PartSpec(_, specs) =>
+                specs.lastOption.contains("days(ts_us)")
+              case _ => false
+            }),
             s"pipe_partition_hidden: expected one PARTSPEC transform " +
               s"line, got $evolveAdds")
           s2.sql(s"""INSERT INTO graftcat.ev
@@ -4103,9 +4104,7 @@ object DedupQueries extends QueryModule {
                               AS ts_us, event_type
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "events")}
                      WHERE event_id % 3 <> 0""")
-          val newFiles = VersionedTable.addedLines(table, 2L)
-            .filterNot(VersionedTable.isMetaManifestLine)
-            .map(_.split('\t').head)
+          val newFiles = VersionedTable.addedFiles(table, 2L)
           require(newFiles.nonEmpty && newFiles.forall(f =>
               f.contains("ts_us_day=") && !f.contains("event_type=")),
             s"pipe_partition_hidden: batch 2 must land hidden day files, " +
@@ -4197,9 +4196,7 @@ object DedupQueries extends QueryModule {
           // The DDL bootstrap's zero-row file carries no segment and is
           // admitted conservatively by every probe — count it.
           val boot = VersionedTable.statsManifest(table, 0L).size
-          val gen1 = VersionedTable.addedLines(table, 1L)
-            .filterNot(VersionedTable.isMetaManifestLine)
-            .map(_.split('\t').head)
+          val gen1 = VersionedTable.addedFiles(table, 1L)
           require(gen1.nonEmpty && gen1.forall(_.contains("doc_id_trunc=")),
             s"pipe_partition_truncate: batch 1 must land hidden width " +
               s"segments, got $gen1")
@@ -4227,18 +4224,19 @@ object DedupQueries extends QueryModule {
           // EVOLVE to the string-prefix layout: one metadata commit.
           s2.sql("CALL graftcat.evolve_layout('docs', 'truncate(1,lang)')")
           val evolveAdds = VersionedTable.addedLines(table, 2L)
-          require(evolveAdds.size == 1 &&
-              evolveAdds.head.startsWith("PARTSPEC\t") &&
-              evolveAdds.head.endsWith("truncate(1,lang)"),
+            .map(VersionedTable.parse)
+          require(evolveAdds.size == 1 && (evolveAdds.head match {
+              case VersionedTable.PartSpec(_, specs) =>
+                specs.lastOption.contains("truncate(1,lang)")
+              case _ => false
+            }),
             s"pipe_partition_truncate: expected one PARTSPEC line, got " +
               s"$evolveAdds")
           s2.sql(s"""INSERT INTO graftcat.docs
                      SELECT doc_id, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 2 = 1""")
-          val gen2 = VersionedTable.addedLines(table, 3L)
-            .filterNot(VersionedTable.isMetaManifestLine)
-            .map(_.split('\t').head)
+          val gen2 = VersionedTable.addedFiles(table, 3L)
           require(gen2.nonEmpty && gen2.forall(f =>
               f.contains("lang_trunc=") && !f.contains("doc_id_trunc=")),
             s"pipe_partition_truncate: batch 2 must land letter " +
@@ -4295,11 +4293,11 @@ object DedupQueries extends QueryModule {
             "'lang,source,doc_id,maybe_lang')")
           val v = VersionedTable.latestVersion(table).get
           require(v == before + 1 &&
-              VersionedTable.addedLines(table, v)
-                .forall(_.startsWith("NDV\t")),
+              VersionedTable.addedLines(table, v).map(VersionedTable.parse)
+                .forall(_.isInstanceOf[VersionedTable.Ndv]),
             "pipe_table_analyze: ANALYZE must publish one pure-meta " +
               "delta of NDV lines")
-          val ndv = VersionedTable.ndvStats(table, v)
+          val ndv = VersionedTable.snapshot(table, v).ndvStats
           // Exact truth for the envelope check and the oracle.
           val exact = s2.sql("""SELECT count(DISTINCT lang) AS d_lang,
                count(DISTINCT source) AS d_source,
@@ -4369,8 +4367,7 @@ object DedupQueries extends QueryModule {
                      WHERE doc_id % 3 = 2""")
           val base = tmp.resolve("docs")
           val appended = (2L to 3L).map(v =>
-            VersionedTable.addedLines(base, v)
-              .count(!_.contains('\t'))).sum
+            VersionedTable.addedFiles(base, v).size).sum
           val res = s2.sql(
             "CALL graftcat.refresh_mv('docs_by_lang', 'docs')")
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -4426,20 +4423,19 @@ object DedupQueries extends QueryModule {
             .agg(sum(col("n")).as("n"), sum(col("chars")).as("chars"))
         VersionedTable.commit(s, base, 0L, docs.where("doc_id % 3 = 0"))
         VersionedTable.createMaterialized(s, base, mv, agg)
-        require(VersionedTable.mvCursor(mv, 0L).contains(0L),
+        require(VersionedTable.snapshot(mv, 0L).mvCursor.contains(0L),
           "pipe_mv_refresh: the bootstrap must carry the MVOF cursor")
         // Two appends land; the refresh reads ONLY their files.
         VersionedTable.appendCommit(s, base, docs.where("doc_id % 3 = 1"))
         VersionedTable.appendCommit(s, base, docs.where("doc_id % 3 = 2"))
         val newFiles = (1L to 2L).map(v =>
-          VersionedTable.addedLines(base, v)
-            .count(!_.contains('\t'))).sum
+          VersionedTable.addedFiles(base, v).size).sum
         val (mvV, read1, total1) =
           VersionedTable.refreshMaterialized(s, base, mv, agg, merge)
         require(mvV == 1L && read1 == newFiles && read1 < total1,
           s"pipe_mv_refresh: refresh read $read1 of $total1 files, " +
             s"expected exactly the $newFiles appended ones")
-        require(VersionedTable.mvCursor(mv, 1L).contains(2L),
+        require(VersionedTable.snapshot(mv, 1L).mvCursor.contains(2L),
           "pipe_mv_refresh: the cursor must advance to the base head")
         // A content-preserving compaction of the base contributes
         // nothing: the next refresh is a no-op (zero files read, no
@@ -4448,11 +4444,11 @@ object DedupQueries extends QueryModule {
         val (mvV2, read2, _) =
           VersionedTable.refreshMaterialized(s, base, mv, agg, merge)
         require(read2 == 0 && mvV2 == 2L &&
-            VersionedTable.mvCursor(mv, 2L).contains(3L),
+            VersionedTable.snapshot(mv, 2L).mvCursor.contains(3L),
           s"pipe_mv_refresh: a KIND=compact of the base must advance " +
             s"the cursor reading zero files, got read=$read2 v=$mvV2")
-        require(VersionedTable.addedLines(mv, 2L)
-            .forall(_.startsWith("MVOF")),
+        require(VersionedTable.addedLines(mv, 2L).map(VersionedTable.parse)
+            .forall(_.isInstanceOf[VersionedTable.MvOf]),
           "pipe_mv_refresh: the compaction-only refresh must be a " +
             "pure cursor-advance delta, no MV row rewritten")
         // The incremental MV equals the full recompute (the oracle
@@ -4636,7 +4632,7 @@ object DedupQueries extends QueryModule {
             "max(n_chars) AS max_chars FROM __BASE__ GROUP BY lang')")
             .collect()
           val mvT = tmp.resolve("mv_mm")
-          require(VersionedTable.mvFoldOps(mvT, 0L) ==
+          require(VersionedTable.snapshot(mvT, 0L).mvFoldOps ==
               Map("min_chars" -> "min", "max_chars" -> "max"),
             "pipe_mv_minmax: the declaration must record the MVFOLD " +
               "merge operators")
@@ -4725,7 +4721,12 @@ object DedupQueries extends QueryModule {
           // RM delta (chain +1), KIND=compact.
           val beforeLines = VersionedTable.manifest(table, 1L).toSet
           val carried = VersionedTable.manifest(table, 2L)
-            .filterNot(l => l.contains("lang=en") || l.startsWith("PART"))
+            .filterNot(l => l.contains("lang=en") ||
+              (VersionedTable.parse(l) match {
+                case _: VersionedTable.PartCol | _: VersionedTable.PartSpec =>
+                  true
+                case _ => false
+              }))
           require(carried.nonEmpty && carried.forall(beforeLines),
             "pipe_partition_compact: untouched partitions' lines must " +
               "carry byte-verbatim")
@@ -4766,7 +4767,7 @@ object DedupQueries extends QueryModule {
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
           val table = tmp.resolve("docs")
           s2.sql("ALTER TABLE graftcat.docs ADD COLUMN quality BIGINT")
-          require(VersionedTable.columnMappings(table, 2L) ==
+          require(VersionedTable.snapshot(table, 2L).columnMappings ==
               Seq(("addcol", "quality", "bigint")),
             "pipe_sql_add_column: the ALTER must land as one metadata-" +
               "only ADDCOL commit")
@@ -4795,8 +4796,8 @@ object DedupQueries extends QueryModule {
           // The compaction MATERIALIZES the union (mapping retired,
           // content byte-identical) — the debt-repayment half.
           s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
-          require(VersionedTable.columnMappings(table,
-              VersionedTable.latestVersion(table).get).isEmpty,
+          require(VersionedTable.snapshot(table,
+              VersionedTable.latestVersion(table).get).columnMappings.isEmpty,
             "pipe_sql_add_column: compaction must retire the ADDCOL " +
               "mapping")
           val after = s2.sql("SELECT doc_id, lang, n_chars, quality " +
@@ -4829,7 +4830,7 @@ object DedupQueries extends QueryModule {
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
           val table = tmp.resolve("docs")
           s2.sql("ALTER TABLE graftcat.docs DROP COLUMN scratch")
-          require(VersionedTable.columnMappings(table, 2L) ==
+          require(VersionedTable.snapshot(table, 2L).columnMappings ==
               Seq(("dropcol", "scratch", "")),
             "pipe_sql_drop_column: the ALTER must land as one metadata-" +
               "only DROPCOL commit")
@@ -4856,8 +4857,8 @@ object DedupQueries extends QueryModule {
           val rows = out.collect()
           // …and succeeds once compaction physically drops them.
           s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
-          require(VersionedTable.columnMappings(table,
-              VersionedTable.latestVersion(table).get).isEmpty,
+          require(VersionedTable.snapshot(table,
+              VersionedTable.latestVersion(table).get).columnMappings.isEmpty,
             "pipe_sql_drop_column: compaction must retire the mapping")
           s2.sql("ALTER TABLE graftcat.docs ADD COLUMN scratch BIGINT")
           require(s2.sql("SELECT count(*) AS n FROM graftcat.docs " +

@@ -1623,10 +1623,9 @@ object EmbeddingQueries extends QueryModule {
           s"emb_hnsw_versioned: append committed v$v1, expected v1")
         // O(batch) witness: the append delta is data lines only, and
         // every added file's seg zonemap is exactly the new segment.
-        val added = VersionedTable.addedLines(idx, v1)
-          .filterNot(VersionedTable.isMetaManifestLine)
+        val added = VersionedTable.addedFiles(idx, v1)
         val stats1 = VersionedTable.statsManifest(idx, v1)
-        val addedFiles = added.map(_.split('\t').head).toSet
+        val addedFiles = added.toSet
         require(added.nonEmpty && stats1.filter(t => addedFiles(t._1))
             .forall { case (_, mn, mx) => mn == S && mx == S },
           s"emb_hnsw_versioned: append delta must add only seg=$S " +
@@ -1761,7 +1760,8 @@ object EmbeddingQueries extends QueryModule {
         // (1) O(kill-set): the delete delta adds DV lines ONLY and
         // removes nothing — no graph file was rewritten.
         val added = VersionedTable.addedLines(idx, vDel)
-        require(added.nonEmpty && added.forall(_.startsWith("DV\t")) &&
+        require(added.nonEmpty && added.map(VersionedTable.parse)
+            .forall(_.isInstanceOf[VersionedTable.Dv]) &&
             VersionedTable.removedLines(idx, vDel).isEmpty,
           s"emb_hnsw_delete: the delete must publish a pure DV delta, " +
             s"got $added")

@@ -223,7 +223,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
             org.apache.spark.sql.SparkSession.active, basePath, mvPath,
             groups, in.getUTF8String(3).toString)
           Seq("version" -> 0L,
-            "cursor" -> VersionedTable.mvCursor(mvPath, 0L).get)
+            "cursor" -> VersionedTable.snapshot(mvPath, 0L).mvCursor.get)
         })
       case "refresh_mv" => proc("refresh_mv",
         "Incrementally refresh a SQL-defined MATERIALIZED VIEW from " +
@@ -287,7 +287,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
           val v = VersionedTable.evolvePartitionLayout(
             org.apache.spark.sql.SparkSession.active, t, cols)
           Seq("version" -> v,
-            "generation" -> VersionedTable.partitionSpecs(t, v)
+            "generation" -> VersionedTable.snapshot(t, v).partitionSpecs
               .last._1)
         })
       case "hnsw_merge" => proc("hnsw_merge",
@@ -571,24 +571,17 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
         (ident.name.substring(0, i), ident.name.substring(i + 1))
       if (!GraftMetaTables.Kinds.contains(meta))
         throw new NoSuchTableException(ident)
-      val p = validName(base)
-      if (VersionedTable.latestVersion(p).isEmpty)
-        throw new NoSuchTableException(ident)
-      return GraftMetaTables(p, meta,
-        GraftTableSource.resolveVersion(p.toString, version))
+      return GraftMetaTables(snapshotOf(validName(base), version, ident),
+        meta)
     }
-    val p = tableRoot(ident)
-    if (VersionedTable.latestVersion(p).isEmpty)
-      throw new NoSuchTableException(ident)
-    val path = p.toString
-    val v = GraftTableSource.resolveVersion(path, version)
+    val snap = snapshotOf(tableRoot(ident), version, ident)
     // The footer schema is the WRITE-time one; the version's live
-    // rename/widen mappings evolve it to the CURRENT names/types (r15
-    // — ALTER TABLE must be visible to the very next statement). The
-    // scan still refuses mapped versions until a compaction
-    // materializes the mapping; the NAME surface evolves immediately.
-    val evolved = VersionedTable.columnMappings(p, v).foldLeft(
-      GraftTableSource.dataSchema(path, v)) {
+    // rename/widen mappings evolve it to the CURRENT names/types (ALTER
+    // TABLE must be visible to the very next statement). The scan
+    // still refuses mapped versions until a compaction materializes
+    // the mapping; the NAME surface evolves immediately.
+    val evolved = snap.columnMappings.foldLeft(
+      GraftTableSource.dataSchema(snap)) {
       case (sch, ("rename", from, to)) =>
         StructType(sch.fields.map(f =>
           if (f.name == from) f.copy(name = to) else f))
@@ -600,8 +593,16 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
           else f))
       case (sch, _) => sch
     }
-    new GraftTable(path, evolved, v,
-      VersionedTable.statsColumns(p, v).headOption)
+    new GraftTable(snap, evolved, snap.statsCol)
+  }
+
+  /** The one snapshot a statement reads: `_commits/` is listed once,
+    * the version resolved once. */
+  private def snapshotOf(p: java.nio.file.Path, version: Option[Long],
+      ident: Identifier): VersionedTable.Snapshot = {
+    val history = VersionedTable.versions(p)
+    if (history.isEmpty) throw new NoSuchTableException(ident)
+    GraftTableSource.snapshotFor(p, version, history)
   }
 
   override def loadTable(ident: Identifier): Table = load(ident, None)

@@ -57,13 +57,13 @@ object GraftMetaTables {
   val Kinds: Set[String] =
     Set("history", "files", "partitions", "refs", "stats", "specs")
 
-  def apply(table: Path, kind: String, version: Long): Table =
-    new GraftMetaTable(table, kind, version)
+  def apply(snap: VersionedTable.Snapshot, kind: String): Table =
+    new GraftMetaTable(snap, kind)
 
   private def utf(s: String): UTF8String = UTF8String.fromString(s)
 
-  private[sources] def schemaOf(table: Path, kind: String,
-                                version: Long): StructType = kind match {
+  private[sources] def schemaOf(snap: VersionedTable.Snapshot,
+                                kind: String): StructType = kind match {
     case "history" => StructType(Seq(
       StructField("version", LongType, nullable = false),
       StructField("committed_ms", LongType, nullable = false),
@@ -81,7 +81,7 @@ object GraftMetaTables {
       // The PHYSICAL layout (r18): hidden transform segments are the
       // DBA's business here — `ts_day` appears as a rollup column in
       // $partitions even though the data schema hides it.
-      VersionedTable.physicalPartitionLayout(table, version).map(c =>
+      snap.physicalPartitionLayout.map(c =>
         StructField(c, StringType, nullable = true)) ++ Seq(
         StructField("files", LongType, nullable = false),
         StructField("row_count", LongType, nullable = true)))
@@ -104,22 +104,22 @@ object GraftMetaTables {
         s"one of ${Kinds.toSeq.sorted.mkString(", ")}")
   }
 
-  private[sources] def rowsOf(table: Path, kind: String,
-                              version: Long): Array[InternalRow] = kind match {
+  private[sources] def rowsOf(snap: VersionedTable.Snapshot,
+                              kind: String): Array[InternalRow] = kind match {
     case "history" =>
-      val times = VersionedTable.versionTimes(table).toMap
-      VersionedTable.versions(table).filter(_ <= version).map { v =>
-        InternalRow(v, times.getOrElse(v, 0L),
-          VersionedTable.commitKind(table, v).map(utf).orNull,
-          VersionedTable.addedLines(table, v)
-            .count(!VersionedTable.isMetaManifestLine(_)).toLong,
-          VersionedTable.removedDataFiles(table, v).size.toLong)
+      val table = snap.table
+      VersionedTable.versionTimes(table).filter(_._1 <= snap.version).map {
+        case (v, ms) =>
+          InternalRow(v, ms,
+            VersionedTable.commitKind(table, v).map(utf).orNull,
+            VersionedTable.addedFiles(table, v).size.toLong,
+            VersionedTable.removedDataFiles(table, v).size.toLong)
       }.toArray
     case "files" | "partitions" => throw new IllegalStateException(
       s"graft-table: '$kind' is served by the distributed scan, " +
         "never materialized on the driver")
     case "refs" =>
-      VersionedTable.refs(table).map { case (name, tpe, head) =>
+      VersionedTable.refs(snap.table).map { case (name, tpe, head) =>
         InternalRow(utf(name), utf(tpe), head)
       }.toArray
     case "stats" =>
@@ -128,15 +128,12 @@ object GraftMetaTables {
       // counts, per-column bloom-indexed file counts, and zonemap
       // coverage (the primary stats column's ranges ride every data
       // line; secondary columns ride STATS lines).
-      val ndv = VersionedTable.ndvStats(table, version)
-      val bloomBy = VersionedTable.blooms(table, version)
-        .groupBy(_._2).map { case (c, bs) => c -> bs.size.toLong }
-      val nFiles = VersionedTable.statsManifest(table, version)
-        .size.toLong
-      val zoneBy = VersionedTable.secondaryStats(table, version)
+      val ndv = snap.ndvStats
+      val bloomBy = snap.entries.collect { case b: VersionedTable.Bloom => b }
+        .groupBy(_.col).map { case (c, bs) => c -> bs.size.toLong }
+      val zoneBy = snap.secondaryStats
         .groupBy(_._2).map { case (c, zs) => c -> zs.size.toLong } ++
-        VersionedTable.statsColumns(table, version).headOption
-          .map(_ -> nFiles).toMap
+        snap.statsCol.map(_ -> snap.files.size.toLong).toMap
       (ndv.keySet ++ bloomBy.keySet ++ zoneBy.keySet).toSeq.sorted
         .map { c =>
           InternalRow(utf(c),
@@ -149,14 +146,14 @@ object GraftMetaTables {
       // transforms as written, highest generation = the live write
       // layout. Generation 0 = the implicit pre-evolution layout when
       // the table never evolved. Spec text NULL for a flat generation.
-      val gens = VersionedTable.partitionSpecs(table, version)
+      val gens = snap.partitionSpecs
       val rows =
         if (gens.nonEmpty) gens.map { case (g, cols) =>
           (g, if (cols.isEmpty) null else cols.mkString(","),
             g == gens.last._1)
         }
         else Seq((0L,
-          VersionedTable.partitionLayout(table, version) match {
+          snap.partitionLayout match {
             case Nil => null
             case cols => cols.mkString(",")
           }, true))
@@ -173,9 +170,10 @@ object GraftMetaTables {
     * the per-file `Files.size` stat calls distribute with the slice. */
   private[sources] def fileRowsChunk(table: Path, version: Long,
       chunk: Int, nChunks: Int): Iterator[InternalRow] = {
-    val hasStats = VersionedTable.statsColumns(table, version).nonEmpty
-    val rows = VersionedTable.rowCounts(table, version).toMap
-    VersionedTable.statsManifest(table, version).iterator.zipWithIndex
+    val snap = VersionedTable.snapshot(table, version)
+    val hasStats = snap.statsColumns.nonEmpty
+    val rows = snap.rowCounts.toMap
+    snap.statsManifest.iterator.zipWithIndex
       .collect { case ((f, mn, mx), i) if i % nChunks == chunk =>
         val part = f.split('/').dropRight(1)
           .filter(_.contains('=')).mkString("/")
@@ -195,9 +193,10 @@ object GraftMetaTables {
   private[sources] def partitionRowsChunk(table: Path, version: Long,
       layout: Seq[String], chunk: Int,
       nChunks: Int): Iterator[InternalRow] = {
-    val rows = VersionedTable.rowCounts(table, version).toMap
+    val snap = VersionedTable.snapshot(table, version)
+    val rows = snap.rowCounts.toMap
     val hasRows = rows.nonEmpty
-    VersionedTable.statsManifest(table, version).iterator.map(_._1)
+    snap.files.iterator
       .map { f =>
         val vals = GraftTableSource.partitionValues(f).toMap
         (layout.map(vals.get), f)
@@ -269,14 +268,13 @@ private[sources] class GraftMetaBatchScan(table: String, kind: String,
     s"graft-meta $table$$$kind@v$version (distributed manifest scan)"
 }
 
-private[sources] class GraftMetaTable(table: Path, kind: String,
-    version: Long) extends Table with SupportsRead {
+private[sources] class GraftMetaTable(snap: VersionedTable.Snapshot,
+    kind: String) extends Table with SupportsRead {
 
   override def name(): String =
-    s"${table.getFileName}$$$kind@v$version"
+    s"${snap.table.getFileName}$$$kind@v${snap.version}"
 
-  override def schema(): StructType =
-    GraftMetaTables.schemaOf(table, kind, version)
+  override def schema(): StructType = GraftMetaTables.schemaOf(snap, kind)
 
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
@@ -288,13 +286,12 @@ private[sources] class GraftMetaTable(table: Path, kind: String,
         // FILE-SIZED tables go distributed (r18): manifests parse on
         // executors, never materializing per-file rows on the driver.
         case "files" | "partitions" =>
-          new GraftMetaBatchScan(table.toString, kind, version,
-            VersionedTable.physicalPartitionLayout(table, version),
-            schema())
+          new GraftMetaBatchScan(snap.table.toString, kind, snap.version,
+            snap.physicalPartitionLayout, schema())
         // COMMIT-SIZED tables (O(versions)/O(refs)/O(columns) rows)
         // stay plan-time local — a distributed scan would be overhead.
         case _ => new LocalScan {
-          private val out = GraftMetaTables.rowsOf(table, kind, version)
+          private val out = GraftMetaTables.rowsOf(snap, kind)
           override def readSchema(): StructType = schema()
           override def rows(): Array[InternalRow] = out
           override def description(): String =

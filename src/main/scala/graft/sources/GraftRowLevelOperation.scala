@@ -67,17 +67,20 @@ import graft.operators.VersionedTable
   * [[graft.operators.VersionedTable.mergeCommit]] stays the
   * merge-on-read alternative (no rewrite at all — a DV plus appends).
   */
-private[sources] class GraftRowLevelOperationBuilder(path: String,
-    schema0: StructType, version: Long, statsCol: Option[String],
+private[sources] class GraftRowLevelOperationBuilder(
+    snap: VersionedTable.Snapshot, schema0: StructType,
+    statsCol: Option[String],
     info: RowLevelOperationInfo) extends RowLevelOperationBuilder {
   override def build(): RowLevelOperation =
-    new GraftRowLevelOperation(path, schema0, version, statsCol,
-      info.command)
+    new GraftRowLevelOperation(snap, schema0, statsCol, info.command)
 }
 
-private[sources] class GraftRowLevelOperation(path: String,
-    schema0: StructType, version: Long, statsCol: Option[String],
+private[sources] class GraftRowLevelOperation(snap: VersionedTable.Snapshot,
+    schema0: StructType, statsCol: Option[String],
     cmd: RowLevelOperation.Command) extends RowLevelOperation {
+
+  private val path = snap.table.toString
+  private val version = snap.version
 
   /** The files the operation scan planned — the GROUPS this statement
     * replaces. Written at scan-planning time, read at commit time; the
@@ -107,7 +110,7 @@ private[sources] class GraftRowLevelOperation(path: String,
       .column("_file"))
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(path, version, statsCol, schema0) {
+    new GraftScanBuilder(snap, statsCol, schema0) {
       override def build(): Scan =
         new RecordingScan(super.build(), GraftRowLevelOperation.this)
     }

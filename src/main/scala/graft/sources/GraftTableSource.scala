@@ -70,24 +70,20 @@ class GraftTableSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-table"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GraftTableSource.dataSchema(options.get("path"),
-      GraftTableSource.resolveVersion(options.get("path"),
-        GraftTableSource.requestedVersion(options)))
+    GraftTableSource.dataSchema(GraftTableSource.snapshotFor(
+      options.get("path"), GraftTableSource.requestedVersion(options)))
 
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    val path = opts.get("path")
-    val version = GraftTableSource.resolveVersion(path,
+    val snap = GraftTableSource.snapshotFor(opts.get("path"),
       GraftTableSource.requestedVersion(opts))
     // statsCol falls back to the manifest's own STATSCOL declaration —
     // self-describing, so SQL catalog scans (no options) still prune.
-    val statsCol = Option(opts.get("statsCol")).orElse(
-      graft.operators.VersionedTable
-        .statsColumns(java.nio.file.Paths.get(path), version).headOption)
-    new GraftTable(path, schema, version, statsCol)
+    new GraftTable(snap, schema,
+      Option(opts.get("statsCol")).orElse(snap.statsCol))
   }
 }
 
@@ -113,21 +109,30 @@ object GraftTableSource {
     }
   }
 
-  private[sources] def resolveVersion(path: String,
-                                      requested: Option[Long]): Long = {
+  /** The snapshot a read of `path` serves: the requested version, else
+    * the latest one. */
+  private[sources] def snapshotFor(path: String,
+      requested: Option[Long]): VersionedTable.Snapshot = {
     require(path != null && path.nonEmpty,
       "graft-table: a table root path is required (…load(root))")
     val table = java.nio.file.Paths.get(path)
-    requested match {
+    snapshotFor(table, requested, VersionedTable.versions(table))
+  }
+
+  /** [[snapshotFor]] against an already-listed `history`. */
+  private[sources] def snapshotFor(table: java.nio.file.Path,
+      requested: Option[Long],
+      history: Seq[Long]): VersionedTable.Snapshot = {
+    val v = requested match {
       case Some(v) =>
-        require(VersionedTable.versions(table).contains(v),
-          s"graft-table: version $v was never committed at $path")
+        require(history.contains(v),
+          s"graft-table: version $v was never committed at $table")
         v
       case None =>
-        VersionedTable.latestVersion(table).getOrElse(
-          throw new IllegalArgumentException(
-            s"graft-table: no committed version at $path"))
+        history.lastOption.getOrElse(throw new IllegalArgumentException(
+          s"graft-table: no committed version at $table"))
     }
+    VersionedTable.snapshot(table, v)
   }
 
   /** Percent-decode a partition path value — %XX ONLY, never the
@@ -148,19 +153,6 @@ object GraftTableSource {
         val i = seg.indexOf('=')
         seg.substring(0, i) -> pctDecode(seg.substring(i + 1))
     }
-
-  /** Partition columns across a version's manifest, in first-appearance
-    * order — self-describing from the Hive-style paths a partitioned
-    * commit records; no option needed. HIDDEN transform segments
-    * (`ts_day=…` from a `days(ts)` spec) are excluded: they prune, but
-    * they are never schema columns (r18). */
-  private[sources] def partitionCols(table: java.nio.file.Path,
-                                     version: Long): Seq[String] = {
-    val hidden = VersionedTable.hiddenSegmentNames(table, version)
-    VersionedTable.statsManifest(table, version)
-      .flatMap(l => partitionValues(l._1).map(_._1)).distinct
-      .filterNot(hidden)
-  }
 
   /** The connector Transform for `truncate(n, col)`: the
     * width-parameterized named form `truncate_<n>(<col>)`, resolvable
@@ -297,16 +289,16 @@ object GraftTableSource {
     }
   }
 
-  /** Data schema from the version's first manifest file's parquet
-    * footer — one footer read; schema inference must not scan data.
-    * Partition columns ride the manifest PATHS, not the payload
-    * (partitionBy strips them), and are re-attached as strings — the
+  /** Data schema from the snapshot's first data file's parquet footer
+    * — one footer read; schema inference must not scan data. Partition
+    * columns ride the manifest PATHS, not the payload (partitionBy
+    * strips them), and are re-attached as strings — the
     * [[graft.operators.VersionedTable.readPartitions]] contract. */
-  private[sources] def dataSchema(path: String, version: Long): StructType = {
-    val table = java.nio.file.Paths.get(path)
-    val first = VersionedTable.statsManifest(table, version).headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"graft-table: version $version of $path lists no data files"))._1
+  private[sources] def dataSchema(snap: VersionedTable.Snapshot): StructType = {
+    val table = snap.table
+    val first = snap.files.headOption.getOrElse(
+      throw new IllegalArgumentException(s"graft-table: version " +
+        s"${snap.version} of $table lists no data files"))
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(table.resolve(first).toString),
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
@@ -317,7 +309,7 @@ object GraftTableSource {
     }.toSeq match {
       case dataFields =>
         val names = dataFields.map(_.name).toSet
-        val withParts = dataFields ++ partitionCols(table, version)
+        val withParts = dataFields ++ snap.partitionCols
           .filterNot(names).map(StructField(_, StringType, nullable = true))
         // ADDCOL/DROPCOL mappings (r16), folded IN COMMIT ORDER:
         // a column added by a metadata-only commit appears in the
@@ -327,17 +319,16 @@ object GraftTableSource {
         // dropped column vanishes from the served schema while its
         // bytes wait for compaction. Order matters: add q then drop
         // q nets to nothing.
-        VersionedTable.columnMappings(table, version)
-          .foldLeft(withParts) {
-            case (fields, ("addcol", c, t))
-                if !fields.exists(_.name == c) =>
-              fields :+ StructField(c,
-                org.apache.spark.sql.types.DataType.fromDDL(t),
-                nullable = true)
-            case (fields, ("dropcol", c, _)) =>
-              fields.filterNot(_.name == c)
-            case (fields, _) => fields
-          } match {
+        snap.columnMappings.foldLeft(withParts) {
+          case (fields, ("addcol", c, t))
+              if !fields.exists(_.name == c) =>
+            fields :+ StructField(c,
+              org.apache.spark.sql.types.DataType.fromDDL(t),
+              nullable = true)
+          case (fields, ("dropcol", c, _)) =>
+            fields.filterNot(_.name == c)
+          case (fields, _) => fields
+        } match {
           case mapped =>
             // MV avg partials (r20): an MV declared with `avg(x) AS n`
             // physically stores the served ratio `n` PLUS maintained
@@ -345,7 +336,7 @@ object GraftTableSource {
             // The partials are maintenance state, not declared shape —
             // hide them, so SELECT * through the catalog serves
             // exactly what CALL create_mv declared (ADVICE r19).
-            val partials = VersionedTable.mvAvgFolds(table, version)
+            val partials = snap.mvAvgFolds
               .filter(f => mapped.exists(_.name == f._1)) // ratio stored
               .flatMap(f => Seq(f._2, f._3)).toSet
             if (partials.isEmpty) mapped
@@ -492,8 +483,11 @@ object GraftTableSource {
     colValuePredicateSet(p).collect { case ("_file", vs) => vs }
 }
 
-private[sources] class GraftTable(path: String, schema0: StructType,
-    version: Long, statsCol: Option[String])
+/** A table version, served from its one [[VersionedTable.Snapshot]]:
+  * the scans, the row-level operation and the metadata delete all read
+  * the snapshot resolved when the table was loaded. */
+private[sources] class GraftTable(snap: graft.operators.VersionedTable.Snapshot,
+    schema0: StructType, statsCol: Option[String])
     extends Table
     with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
@@ -501,6 +495,8 @@ private[sources] class GraftTable(path: String, schema0: StructType,
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
   import graft.operators.VersionedTable
+
+  private val path = snap.table.toString
 
   /** The table's WRITE partition layout as identity transforms —
     * declared (DDL `PARTITIONED BY`), grown from `commitPartitioned`
@@ -511,9 +507,7 @@ private[sources] class GraftTable(path: String, schema0: StructType,
     * from their own paths). */
   override def partitioning()
       : Array[org.apache.spark.sql.connector.expressions.Transform] =
-    VersionedTable.writePartitionLayout(java.nio.file.Paths.get(path),
-        version)
-      .map(graft.operators.PartTransform.parse)
+    snap.writePartitionLayout.map(graft.operators.PartTransform.parse)
       .map {
         case graft.operators.DaysPart(c) =>
           org.apache.spark.sql.connector.expressions.Expressions.days(c)
@@ -554,10 +548,9 @@ private[sources] class GraftTable(path: String, schema0: StructType,
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    new GraftRowLevelOperationBuilder(path, schema0, version, statsCol,
-      info)
+    new GraftRowLevelOperationBuilder(snap, schema0, statsCol, info)
 
-  override def name(): String = s"graft-table($path@v$version)"
+  override def name(): String = s"graft-table($path@v${snap.version})"
   override def schema(): StructType = schema0
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
@@ -565,7 +558,7 @@ private[sources] class GraftTable(path: String, schema0: StructType,
       TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(path, version, statsCol, schema0,
+    new GraftScanBuilder(snap, statsCol, schema0,
       options.getBoolean("reportStats", true))
 
   override def newWriteBuilder(
@@ -625,9 +618,8 @@ private[sources] class GraftTable(path: String, schema0: StructType,
         .map(p => table.relativize(p).toString).toSeq.sorted
       finally walk.close()
     }
-    VersionedTable.replaceFilesCommit(spark, table, version,
-      VersionedTable.statsManifest(table, version).map(_._1), staged,
-      "graft-table TRUNCATE", truncate = true)
+    VersionedTable.replaceFilesCommit(spark, table, snap.version, snap.files,
+      staged, "graft-table TRUNCATE", truncate = true)
     true
   }
 
@@ -643,11 +635,10 @@ private[sources] class GraftTable(path: String, schema0: StructType,
     require(VersionedTable.refs(table).forall(_._2 != "branch"),
       s"graft-table: $path has branch refs — DELETE through the " +
         "protocol against an explicit ref instead")
-    val base = VersionedTable.latestVersion(table).getOrElse(
+    val base = VersionedTable.latestSnapshot(table).getOrElse(
       throw new IllegalArgumentException(
         s"graft-table: no committed version at $path"))
-    val existingKeyCols =
-      VersionedTable.deletionVectors(table, base).map(_._2).distinct
+    val existingKeyCols = base.deletionVectors.map(_._2).distinct
     require(existingKeyCols.forall(_ == keyCol),
       s"graft-table: live deletion vectors key on $existingKeyCols — a " +
         s"DELETE keyed on '$keyCol' would poison merge-on-read")
@@ -664,7 +655,7 @@ private[sources] class GraftTable(path: String, schema0: StructType,
     val keys = spark.createDataFrame(
       values.map(v => org.apache.spark.sql.Row(coerce(v))).asJava,
       StructType(Seq(field)))
-    VersionedTable.deleteCommit(spark, table, base + 1, keys, keyCol)
+    VersionedTable.deleteCommit(spark, table, base.version + 1, keys, keyCol)
     ()
   }
 }
@@ -676,7 +667,8 @@ private[sources] case object MetaMax extends MetaAggFunc
 private[sources] case class MetaAggPlan(groupCols: Seq[String],
     funcs: Seq[MetaAggFunc]) extends Serializable
 
-private[sources] class GraftScanBuilder(path: String, version: Long,
+private[sources] class GraftScanBuilder(
+    snap: graft.operators.VersionedTable.Snapshot,
     statsCol: Option[String], schema0: StructType,
     reportStats: Boolean = true)
     extends ScanBuilder
@@ -687,31 +679,10 @@ private[sources] class GraftScanBuilder(path: String, version: Long,
   private var pushed: Array[Filter] = Array.empty
   private var metaAgg: Option[MetaAggPlan] = None
 
-  /** Columns with a BLOOM line in this version's manifest — equality
-    * probes on them prune files whatever the layout (the manifest is
-    * self-describing here; no option needed). One metadata read. */
-  private lazy val bloomCols: Set[String] =
-    graft.operators.VersionedTable
-      .blooms(java.nio.file.Paths.get(path), version).map(_._2).toSet
-
-  /** Partition columns riding the manifest paths — equality probes on
-    * them prune files by path segment alone (self-describing too). */
-  private lazy val partCols: Set[String] =
-    GraftTableSource.partitionCols(java.nio.file.Paths.get(path), version)
-      .toSet
-
   /** Columns with SECONDARY zonemap lines (a z-order's other
     * dimensions) — range predicates on them prune like the primary. */
   private lazy val secondaryStatsCols: Set[String] =
-    graft.operators.VersionedTable
-      .secondaryStats(java.nio.file.Paths.get(path), version)
-      .map(_._2).toSet
-
-  /** Transform specs from EVERY generation (r18) — a predicate on the
-    * RAW column prunes files by their derived path segments. */
-  private lazy val transforms: Seq[graft.operators.PartTransform] =
-    graft.operators.VersionedTable
-      .liveTransforms(java.nio.file.Paths.get(path), version)
+    snap.secondaryStats.map(_._2).toSet
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
@@ -728,11 +699,13 @@ private[sources] class GraftScanBuilder(path: String, version: Long,
     pushed = filters.filter(f =>
       statsPrunable(f) ||
         secondaryStatsCols.exists(GraftTableSource.prunable(f, _)) ||
-        GraftTableSource.bloomPrunable(f, bloomCols) ||
-        GraftTableSource.partPrunable(f, partCols) ||
-        // Hidden partitioning (r18): a raw-column predicate prunes
-        // through the transform that derived the path segments.
-        transforms.exists(GraftTableSource.transformPrunable(f, _)))
+        // Equality probes on a bloom-indexed column prune whatever the
+        // layout; partition columns prune by path segment alone.
+        GraftTableSource.bloomPrunable(f, snap.bloomColumns.toSet) ||
+        GraftTableSource.partPrunable(f, snap.partitionCols.toSet) ||
+        // Hidden partitioning: a raw-column predicate prunes through
+        // the transform that derived the path segments.
+        snap.liveTransforms.exists(GraftTableSource.transformPrunable(f, _)))
     filters
   }
 
@@ -756,8 +729,6 @@ private[sources] class GraftScanBuilder(path: String, version: Long,
     * false and Spark plans the ordinary scan+aggregate — pruning
     * optimizations never become correctness dependencies. */
   private def planMetaAgg(agg: Aggregation): Option[MetaAggPlan] = {
-    import graft.operators.VersionedTable
-    val table = java.nio.file.Paths.get(path)
     def name(e: Expression): Option[String] = e match {
       case r: NamedReference if r.fieldNames.length == 1 =>
         Some(r.fieldNames()(0))
@@ -766,21 +737,21 @@ private[sources] class GraftScanBuilder(path: String, version: Long,
     def longTyped(c: String): Boolean =
       schema0.fields.find(_.name == c).exists(_.dataType == LongType)
     if (pushed.nonEmpty) return None
-    if (VersionedTable.columnMappings(table, version).nonEmpty) return None
-    if (VersionedTable.deletionVectors(table, version).nonEmpty) return None
-    val files = VersionedTable.statsManifest(table, version)
+    if (snap.columnMappings.nonEmpty) return None
+    if (snap.deletionVectors.nonEmpty) return None
+    val files = snap.statsManifest
     if (files.isEmpty) return None
     val gcols = agg.groupByExpressions.toSeq.map(name)
     if (gcols.exists(_.isEmpty)) return None
     val groupCols = gcols.flatten
     // Every group column must be a partition column present on EVERY
     // file's manifest path — the per-file partition value IS the group.
-    if (!groupCols.forall(partCols.contains)) return None
+    if (!groupCols.forall(snap.partitionCols.contains)) return None
     if (!files.forall { case (f, _, _) =>
           val vals = GraftTableSource.partitionValues(f).map(_._1).toSet
           groupCols.forall(vals.contains)
         }) return None
-    val rows = VersionedTable.rowCounts(table, version).toMap
+    val rows = snap.rowCounts.toMap
     val exactStats = statsCol.exists(longTyped) && files.forall {
       case (_, mn, mx) => !(mn == Long.MinValue && mx == Long.MaxValue)
     }
@@ -822,11 +793,12 @@ private[sources] class GraftScanBuilder(path: String, version: Long,
     }
 
   override def build(): Scan =
-    new GraftScan(path, version, statsCol, schema0, required, pushed,
-      metaAgg, reportStats)
+    new GraftScan(snap, statsCol, schema0, required, pushed, metaAgg,
+      reportStats)
 }
 
-private[sources] class GraftScan(path: String, version: Long,
+private[sources] class GraftScan(
+    snap: graft.operators.VersionedTable.Snapshot,
     statsCol: Option[String], tableSchema: StructType, required: StructType,
     pushed: Array[Filter],
     metaAgg: Option[MetaAggPlan] = None, reportStats: Boolean = true)
@@ -835,6 +807,9 @@ private[sources] class GraftScan(path: String, version: Long,
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
   import graft.operators.VersionedTable
+
+  private val path = snap.table.toString
+  private val version = snap.version
 
   /** RUNTIME GROUP FILTERING (r15) — the scan accepts a runtime
     * IN-predicate on `_file` and narrows its planned files to exactly
@@ -857,17 +832,14 @@ private[sources] class GraftScan(path: String, version: Long,
     * partition pruning hand us value sets). */
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    val table = java.nio.file.Paths.get(path)
     val names = required.fieldNames.toSet
-    val parts = VersionedTable.partitionLayout(table, version)
-      .filter(names.contains)
+    val parts = snap.partitionLayout.filter(names.contains)
     // Hidden partitioning (r18): the RAW column of a transform spec is
     // runtime-filterable too — join-driven DPP hands a value set on
     // `ts_us` and the scan prunes files by the DERIVED day/bucket
     // segments each value maps to (a date-dim join prunes the fact
     // scan with no layout column in the query).
-    val raws = VersionedTable.liveTransforms(table, version)
-      .map(_.rawCol).filter(names.contains)
+    val raws = snap.liveTransforms.map(_.rawCol).filter(names.contains)
     ((if (names.contains("_file")) Seq("_file") else Nil) ++ parts ++
       raws).distinct
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
@@ -877,14 +849,9 @@ private[sources] class GraftScan(path: String, version: Long,
   override def filter(
       predicates: Array[org.apache.spark.sql.connector.expressions
         .filter.Predicate]): Unit = {
-    val table = java.nio.file.Paths.get(path)
-    val partCols = VersionedTable.partitionLayout(table, version).toSet
-    val transformsByRaw = VersionedTable.liveTransforms(table, version)
-      .groupBy(_.rawCol)
-    // One manifest resolution for the whole call, not one per
-    // predicate (BASE-chain resolution does file IO).
-    lazy val allFiles = VersionedTable.statsManifest(table, version)
-      .map(_._1)
+    val partCols = snap.partitionLayout.toSet
+    val transformsByRaw = snap.liveTransforms.groupBy(_.rawCol)
+    val allFiles = snap.files
     val sets = predicates.flatMap { p =>
       GraftTableSource.colValuePredicateSet(p).flatMap {
         case ("_file", vs) => Some(vs)
@@ -959,7 +926,6 @@ private[sources] class GraftScan(path: String, version: Long,
       .get("spark.graft.planning.preserveDataGrouping", "false") == "true"
     catch { case scala.util.control.NonFatal(_) => false }
     if (!optIn) return None
-    val table = java.nio.file.Paths.get(path)
     // The key set is the physical clustering every live file exhibits:
     // the live WRITE spec on an evolved table (identity, bucket and —
     // r19 — time-grain transforms; transform keys resolve through the
@@ -968,11 +934,9 @@ private[sources] class GraftScan(path: String, version: Long,
     // day-partitioned layouts: rows equal on the raw column share a
     // segment by construction, so a raw-column equi-join co-locates.
     val specs: Seq[graft.operators.PartTransform] =
-      if (VersionedTable.partitionSpecs(table, version).nonEmpty)
-        VersionedTable.writePartitionLayout(table, version)
-          .map(graft.operators.PartTransform.parse)
-      else VersionedTable.partitionLayout(table, version)
-        .map(graft.operators.IdentityPart(_))
+      if (snap.partitionSpecs.nonEmpty)
+        snap.writePartitionLayout.map(graft.operators.PartTransform.parse)
+      else snap.partitionLayout.map(graft.operators.IdentityPart(_))
     if (specs.isEmpty) return None
     val live = livePrunedFiles()
     if (live.isEmpty) return None
@@ -1033,24 +997,25 @@ private[sources] class GraftScan(path: String, version: Long,
     * always admit), every partition path segment is admitted, and any
     * runtime file set contains it. */
   private def livePrunedFiles(): Seq[(String, Long, Long)] = {
-    val table = java.nio.file.Paths.get(path)
-    val all = VersionedTable.statsManifest(table, version)
+    val all = snap.statsManifest
     require(all.nonEmpty,
       s"graft-table: version $version of $path lists no data files")
+    // Bloom bits decode only when a pushed filter can prune on them.
+    val bloomCols = snap.bloomColumns
+      .filter(c => pushed.exists(GraftTableSource.bloomPrunable(_, Set(c))))
     val bloomsByFile: Map[(String, String), Array[Byte]] =
-      VersionedTable.blooms(table, version)
-        .map { case (f, c, bits) => (f, c) -> bits }.toMap
-    val bloomCols = bloomsByFile.keysIterator.map(_._2).toSet
+      if (bloomCols.isEmpty) Map.empty
+      else snap.blooms.map { case (f, c, bits) => (f, c) -> bits }.toMap
     // Secondary zonemaps (a z-order's other dimensions) prune exactly
     // like the primary data-line stats.
     val secondary: Map[(String, String), (Long, Long)] =
-      VersionedTable.secondaryStats(table, version)
-        .map { case (f, c, mn, mx) => (f, c) -> (mn, mx) }.toMap
+      snap.secondaryStats.map { case (f, c, mn, mx) => (f, c) -> (mn, mx) }
+        .toMap
     val secondaryCols = secondary.keysIterator.map(_._2).toSet
-    // Hidden partitioning (r18): raw-column predicates prune each
-    // file by its derived path segments — files WITHOUT a transform's
-    // segment (older generations, flat bootstraps) always admit.
-    val transforms = VersionedTable.liveTransforms(table, version)
+    // Hidden partitioning: raw-column predicates prune each file by
+    // its derived path segments — files WITHOUT a transform's segment
+    // (older generations, flat bootstraps) always admit.
+    val transforms = snap.liveTransforms
     all.filter { case (f, mn, mx) =>
       runtimeFiles.forall(_.contains(f)) &&
       statsCol.forall(c =>
@@ -1097,7 +1062,7 @@ private[sources] class GraftScan(path: String, version: Long,
     }
     if (!reportStats) return unknown
     try {
-      val table = java.nio.file.Paths.get(path)
+      val table = snap.table
       metaAgg match {
         case Some(plan) =>
           // The scan's output IS the finished aggregate rows.
@@ -1117,7 +1082,7 @@ private[sources] class GraftScan(path: String, version: Long,
       val factor = try org.apache.spark.sql.SparkSession.active
         .sessionState.conf.fileCompressionFactor
       catch { case scala.util.control.NonFatal(_) => 1.0 }
-      val rows = VersionedTable.rowCounts(table, version).toMap
+      val rows = snap.rowCounts.toMap
       val nRows: OptionalLong =
         if (live.forall(f => rows.contains(f._1)))
           OptionalLong.of(live.map(f => rows(f._1)).sum)
@@ -1138,7 +1103,7 @@ private[sources] class GraftScan(path: String, version: Long,
         val m = new java.util.HashMap[
           org.apache.spark.sql.connector.expressions.NamedReference,
           org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-        val ndv = VersionedTable.ndvStats(table, version)
+        val ndv = snap.ndvStats
         def longTyped(c: String): Boolean =
           required.fields.find(_.name == c).exists(_.dataType == LongType)
         val ranges: Map[String, (Long, Long)] = {
@@ -1149,7 +1114,7 @@ private[sources] class GraftScan(path: String, version: Long,
             else Some(c -> (real.map(_._2).min, real.map(_._3).max))
           }
           val liveSet = live.map(_._1).toSet
-          val secondary = VersionedTable.secondaryStats(table, version)
+          val secondary = snap.secondaryStats
             .filter { case (f, c, _, _) => liveSet(f) && longTyped(c) }
             .groupBy(_._2).map { case (c, zs) =>
               c -> (zs.map(_._3).min, zs.map(_._4).max)
@@ -1195,10 +1160,8 @@ private[sources] class GraftScan(path: String, version: Long,
     * values fold per-file ROWS counts / zonemap bounds. One partition,
     * zero data files opened (the whole point). */
   private def metaAggRows(plan: MetaAggPlan): Array[Array[Any]] = {
-    val table = java.nio.file.Paths.get(path)
-    val files = VersionedTable.statsManifest(table, version)
-    val rows = VersionedTable.rowCounts(table, version).toMap
-    files.groupBy { case (f, _, _) =>
+    val rows = snap.rowCounts.toMap
+    snap.statsManifest.groupBy { case (f, _, _) =>
       val vals = GraftTableSource.partitionValues(f).toMap
       plan.groupCols.map(vals(_))
     }.toSeq.sortBy(_._1.mkString("\u0001"))
@@ -1217,7 +1180,6 @@ private[sources] class GraftScan(path: String, version: Long,
         return Array(MetaAggPartition(metaAggRows(plan)))
       case None => ()
     }
-    val table = java.nio.file.Paths.get(path)
     // Schema-evolved versions carry a per-directory mapping the scan
     // must not guess at — refuse with the working alternative. ADDCOL
     // mappings (r16) are the exception the reader CAN serve exactly:
@@ -1227,13 +1189,12 @@ private[sources] class GraftScan(path: String, version: Long,
     // wait for the compaction that materializes them, and an ADDCOL
     // never coexists with live deletion vectors keyed on it (guarded
     // below like VersionedTable.read's rule).
-    val maps = VersionedTable.columnMappings(table, version)
+    val maps = snap.columnMappings
     require(maps.forall(m => m._1 == "addcol" || m._1 == "dropcol"),
       s"graft-table: version $version of $path carries schema-evolution " +
         "mappings (RENAME/WIDEN) — read it via VersionedTable.read, or " +
         "compact first")
-    require(maps.isEmpty ||
-        VersionedTable.deletionVectors(table, version).isEmpty,
+    require(maps.isEmpty || snap.deletionVectors.isEmpty,
       s"graft-table: version $version of $path carries both deletion " +
         "vectors and schema mappings — compact before combining the two")
     val live = livePrunedFiles()
@@ -1262,12 +1223,8 @@ private[sources] class GraftScan(path: String, version: Long,
   /** This version's live deletion vectors, decoded once per scan on
     * the driver over every data file of the version, so runtime file
     * filtering after planning can only narrow what it covers. */
-  private lazy val deletes: Option[VersionedTable.LiveDeletes] = {
-    val table = java.nio.file.Paths.get(path)
-    VersionedTable.liveDeletes(table, version,
-      VersionedTable.statsManifest(table, version).map(_._1),
-      tableSchema(_).dataType)
-  }
+  private lazy val deletes: Option[VersionedTable.LiveDeletes] =
+    VersionedTable.liveDeletes(snap, snap.files, tableSchema(_).dataType)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftTableReaderFactory(required, GraftSession.hadoopConf(),
@@ -1277,8 +1234,7 @@ private[sources] class GraftScan(path: String, version: Long,
       // change-feed reader applies. Any OTHER missing field is a real
       // schema mismatch (manifest corruption, a foreign file) and must
       // stay a loud failure, never a silent all-NULL column.
-      VersionedTable.columnMappings(java.nio.file.Paths.get(path), version)
-        .collect { case ("addcol", c, _) => c }.toSet)
+      snap.columnMappings.collect { case ("addcol", c, _) => c }.toSet)
 
   override def description(): String =
     s"graft-table path=$path version=$version " +

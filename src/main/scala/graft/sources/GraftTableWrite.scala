@@ -68,10 +68,8 @@ private[sources] class GraftWrite(path: String, schema: StructType,
     * writer, so DDL-created partitioned tables get manifest partition
     * pruning from day one. */
   private val partCols: Seq[String] =
-    VersionedTable.latestVersion(java.nio.file.Paths.get(path))
-      .map(v => VersionedTable.writePartitionLayout(
-        java.nio.file.Paths.get(path), v))
-      .getOrElse(Nil)
+    VersionedTable.latestSnapshot(java.nio.file.Paths.get(path))
+      .map(_.writePartitionLayout).getOrElse(Nil)
   // Entries may be TRANSFORM specs (r18, hidden partitioning): the
   // RAW column must be writable with the type the derivation demands;
   // identity columns keep the STRING rule (their value IS the path).
@@ -198,14 +196,14 @@ private[sources] class GraftBatchWrite(path: String, stagingRel: String,
       var attempts = 0
       var done = false
       while (!done && attempts < 10) {
-        val target =
-          if (truncate) VersionedTable.latestVersion(table)
-            .map(_ + 1).getOrElse(0L)
-          else VersionedTable.latestVersion(table).getOrElse(
-            throw new IllegalArgumentException(
-              s"graft-table: batch append needs a committed version at " +
-                s"$path to append to — bootstrap the table via " +
-                "VersionedTable.commit first")) + 1
+        // One snapshot per attempt: the base every line below derives
+        // from.
+        val base = VersionedTable.latestSnapshot(table)
+        require(truncate || base.isDefined,
+          s"graft-table: batch append needs a committed version at " +
+            s"$path to append to — bootstrap the table via " +
+            "VersionedTable.commit first")
+        val target = base.fold(0L)(_.version + 1)
         // Both V2 paths honor CHECK constraints like every row-adding
         // writer: a violating INSERT fails here, Spark aborts, and the
         // abort path discards the staged orphans. The overwrite is a
@@ -219,7 +217,7 @@ private[sources] class GraftBatchWrite(path: String, stagingRel: String,
               "graft-table overwrite")
           else {
             VersionedTable.enforceConstraintsOnFiles(spark, table, files,
-              VersionedTable.latestVersion(table), "graft-table append")
+              base.map(_.version), "graft-table append")
             Nil
           }
         // Index continuity (r15): SQL INSERTs join the table's skipping
@@ -232,8 +230,8 @@ private[sources] class GraftBatchWrite(path: String, stagingRel: String,
         // never committed (and never bypasses the CHECK gate above).
         val lines =
           if (truncate)
-            VersionedTable.overwriteLines(spark, table, dataDir, files)
-          else VersionedTable.ingestLines(spark, table, dataDir, files)
+            VersionedTable.overwriteLines(spark, table, base, dataDir, files)
+          else VersionedTable.ingestLines(spark, table, base, dataDir, files)
         try {
           // Overwrite = a rewrite commit: the staged files ARE the
           // snapshot (full manifest, no BASE) plus the carried CHECK
@@ -280,7 +278,10 @@ private[sources] class GraftStreamingWrite(path: String, stagingRel: String,
       // commit would carry none of this sink's staging namespace; the
       // distinction is checked so corruption fails loudly.
       require(VersionedTable.addedLines(table, version)
-          .forall(l => !l.contains('\t')),
+          .map(VersionedTable.parse).forall {
+            case VersionedTable.DataFile(_, None) => true
+            case _ => false
+          },
         s"graft-table: version $version of $path was committed outside " +
           "this streaming sink — one writer owns a sink table")
       GraftWriterFactory.discard(path, messages)

@@ -124,12 +124,13 @@ object TableChangesSource {
     require(path != null && path.nonEmpty,
       "graft-changes: a table root path is required (…load(root))")
     val table = java.nio.file.Paths.get(path)
-    val v = VersionedTable.latestVersion(table).getOrElse(
+    val snap = VersionedTable.latestSnapshot(table).getOrElse(
       throw new IllegalArgumentException(
         s"graft-changes: no committed version at $path"))
-    val first = VersionedTable.statsManifest(table, v).headOption.getOrElse(
+    val first = snap.files.headOption.getOrElse(
       throw new IllegalArgumentException(
-        s"graft-changes: version $v of $path lists no data files"))._1
+        s"graft-changes: version ${snap.version} of $path lists no " +
+          "data files"))
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(table.resolve(first).toString),
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
@@ -160,23 +161,21 @@ object TableChangesSource {
     // first manifest file happens to carry. (Rename/widen commits
     // still fail the running feed at their version — schema is pinned
     // at start.)
-    val evolved = VersionedTable.columnMappings(table, v)
-      .foldLeft(dataFields) {
-        case (fields, ("addcol", c, t)) if !fields.exists(_.name == c) =>
-          fields :+ StructField(c,
-            org.apache.spark.sql.types.DataType.fromDDL(t),
-            nullable = true)
-        case (fields, ("dropcol", c, _)) => fields.filterNot(_.name == c)
-        case (fields, _) => fields
-      }
+    val evolved = snap.columnMappings.foldLeft(dataFields) {
+      case (fields, ("addcol", c, t)) if !fields.exists(_.name == c) =>
+        fields :+ StructField(c,
+          org.apache.spark.sql.types.DataType.fromDDL(t),
+          nullable = true)
+      case (fields, ("dropcol", c, _)) => fields.filterNot(_.name == c)
+      case (fields, _) => fields
+    }
     // PARTITION COLUMNS (r17): path-borne values never reach a footer,
     // but a mirror of a partitioned table must not LOSE the column —
     // serve them re-attached per file (string-typed, the batch
     // connector's contract). Union across the manifest: every
     // generation's columns appear, each file filling its own.
     val withParts = evolved ++
-      GraftTableSource.partitionCols(table, v)
-        .filterNot(c => evolved.exists(_.name == c))
+      snap.partitionCols.filterNot(c => evolved.exists(_.name == c))
         .map(StructField(_, StringType, nullable = true))
     val base = withParts :+
       StructField(VersionColumn, LongType, nullable = false)
@@ -213,7 +212,7 @@ private[sources] class ChangesTable(path: String, schema0: StructType,
             s"columns=[${required.fieldNames.mkString(",")}]"
         override def toMicroBatchStream(
             checkpointLocation: String): MicroBatchStream =
-          new ChangesStream(path, required, startingVersion,
+          new ChangesStream(path, required, schema0, startingVersion,
             maxVersionsPerTrigger, ignoreDeletes, readChangeFeed, ref)
       }
     }
@@ -225,8 +224,11 @@ private[sources] case class VersionOffset(version: Long) extends Offset {
   override def json(): String = version.toString
 }
 
+/** `schema` is the pruned output, `tableSchema` the full one (a DV key
+  * column's type, when the output does not carry it). */
 private[sources] class ChangesStream(path: String, schema: StructType,
-    startingVersion: Long, maxVersionsPerTrigger: Int, ignoreDeletes: Boolean,
+    tableSchema: StructType, startingVersion: Long,
+    maxVersionsPerTrigger: Int, ignoreDeletes: Boolean,
     readChangeFeed: Boolean, ref: Option[String] = None)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
   import graft.operators.VersionedTable
@@ -351,12 +353,13 @@ private[sources] class ChangesStream(path: String, schema: StructType,
         // only — "skip history before N").
         if (v == startingVersion &&
             VersionedTable.removedLines(table, v).nonEmpty) {
-          require(VersionedTable.deletionVectors(table, v).isEmpty,
+          val snap = VersionedTable.snapshot(table, v)
+          require(snap.deletionVectors.isEmpty,
             s"graft-changes: startingVersion=$v is a rewrite commit " +
               "with live deletion vectors — the raw-file snapshot " +
               "would replay deleted rows; compact first or start at " +
               "a DV-free version")
-          VersionedTable.statsManifest(table, v).map(_._1).map(f =>
+          snap.files.map(f =>
             ChangesPartition(path, v, f,
               changeType = "insert"): InputPartition)
         }
@@ -414,68 +417,52 @@ private[sources] class ChangesStream(path: String, schema: StructType,
     * the key-list partitions change-feed mode serves as delete rows. */
   private def addPartitions(v: Long,
       changeType: String): Seq[InputPartition] =
-    VersionedTable.addedLines(table, v).flatMap { line =>
-      if (!line.contains('\t'))
-        Some(ChangesPartition(path, v, line,
+    VersionedTable.addedLines(table, v).map(VersionedTable.parse).flatMap {
+      case d: VersionedTable.DataFile =>
+        Some(ChangesPartition(path, v, d.path,
           changeType = changeType): InputPartition)
-      else if (line.startsWith("DV\t")) {
+      case dv: VersionedTable.Dv =>
         if (readChangeFeed) {
           // Full change feed: the DV's key list becomes delete
           // rows — key column populated, everything else NULL.
-          val Array(_, dvFile, keyCol, _) = line.split('\t')
-          Some(ChangesPartition(path, v, dvFile,
-            deleteKeyCol = keyCol, changeType = "delete"): InputPartition)
+          Some(ChangesPartition(path, v, dv.path,
+            deleteKeyCol = dv.keyCol, changeType = "delete"): InputPartition)
         } else if (ignoreDeletes) None
         else throw new IllegalStateException(
           s"graft-changes: version $v is a DELETE commit — an " +
             "append feed cannot represent it; set ignoreDeletes=" +
             "true to skip delete commits, or readChangeFeed=true " +
             "to serve them as _change_type='delete' rows")
-      } else if (line.startsWith("RENAME\t") ||
-          line.startsWith("WIDEN\t") || line.startsWith("ADDCOL\t") ||
-          line.startsWith("DROPCOL\t"))
+      case _: VersionedTable.Mapping =>
         throw new IllegalStateException(
           s"graft-changes: version $v evolves the schema — restart " +
             "the stream to pick up the new schema")
-      else if (line.startsWith("PARTSPEC\t")) {
+      case spec: VersionedTable.PartSpec =>
         // A spec evolution that introduces a brand-new IDENTITY
         // partition column mid-stream evolves the schema exactly like
         // RENAME/WIDEN (future files carry a path-borne column this
         // stream's fixed schema cannot serve); a transform's RAW
         // column must likewise exist. Known columns (re-ordering, a
         // transform over an existing payload column) pass — the
-        // mirror's schema is unchanged (ADVICE r17).
+        // mirror's schema is unchanged.
         val known = schema.fieldNames.toSet
-        // (an evolve-to-flat spec has an EMPTY column list — the
-        // trailing field vanishes under split, and there is nothing
+        // (an evolve-to-flat spec has an EMPTY column list — nothing
         // to check)
-        graft.operators.PartTransform
-          .split(line.split('\t').drop(2).mkString)
-          .map(graft.operators.PartTransform.parse)
+        spec.specs.map(graft.operators.PartTransform.parse)
           .foreach(t => if (!known.contains(t.rawCol))
             throw new IllegalStateException(
               s"graft-changes: version $v evolves the partition spec " +
                 s"with column '${t.rawCol}' unknown to this stream's " +
                 "schema — restart the stream to pick up the new schema"))
         None
-      }
-      else if (VersionedTable.isMetaManifestLine(line))
-        // Metadata lines carry no rows to serve: skipping indexes
-        // (BLOOM/STATS/ROWS), table contracts (CHECK/STATSCOL/PARTCOL/
-        // PARTSPEC), commit annotations (KIND). Before r17 only
-        // BLOOM/STATSCOL were skipped — an appended ROWS line (a
-        // stats-indexed table's ingest) or a CHECK/PARTSPEC
-        // declaration fell through to the data-line branch below and
-        // was served as a phantom file named "ROWS"/"CHECK" (or
-        // double-served its file).
-        None
-      else // a stats-bearing data line: path<TAB>min<TAB>max
-        Some(ChangesPartition(path, v, line.split('\t').head,
-          changeType = changeType): InputPartition)
+      // Every other kind carries no rows to serve: skipping indexes
+      // (BLOOM/STATS/ROWS), table contracts (CHECK/STATSCOL/PARTCOL),
+      // statistics and MV state.
+      case _ => None
     }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ChangesReaderFactory(schema, GraftSession.hadoopConf(),
+    new ChangesReaderFactory(schema, tableSchema, GraftSession.hadoopConf(),
       // Only ADDCOL-introduced columns may legitimately be absent from
       // a file's footer (files predating the add); any OTHER missing
       // field is a real schema mismatch and must stay a loud failure,
@@ -509,10 +496,12 @@ private[sources] case class ChangesPartition(path: String, version: Long,
 }
 
 private[sources] class ChangesReaderFactory(schema: StructType,
+    tableSchema: StructType,
     hadoopConf: org.apache.spark.broadcast.Broadcast[
       org.apache.spark.util.SerializableConfiguration],
     nullableMissing: Set[String] = Set.empty)
     extends PartitionReaderFactory {
+  import graft.operators.VersionedTable
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val cp = p.asInstanceOf[ChangesPartition]
@@ -525,9 +514,28 @@ private[sources] class ChangesReaderFactory(schema: StructType,
           .withConf(hadoopConf.value.value)
           .build()
       private var cur: Group = _
+      /** A delete row's key in the column's type: Some(null) for a NULL
+        * key, None for a key with no exact value in that type. */
+      private var deleteKey: Option[Any] = None
       override def next(): Boolean = {
         cur = reader.read()
+        // A DV key that converts to no value of the column's type
+        // deletes nothing, so no delete row is served for it.
+        while (isDelete && cur != null && { deleteKey = dvKey(); deleteKey.isEmpty })
+          cur = reader.read()
         cur != null
+      }
+      /** The DV row's key, decoded in the DV file's own type and
+        * converted to the column's type exactly as both read paths
+        * convert it ([[graft.operators.VersionedTable.coerceKey]]). */
+      private def dvKey(): Option[Any] = {
+        val i = cur.getType.getFieldIndex(cp.deleteKeyCol)
+        if (cur.getFieldRepetitionCount(i) == 0) Some(null)
+        else {
+          val dvType = GraftTableSource.sparkTypeOf(cur.getType.getType(i))
+          VersionedTable.coerceKey(VersionedTable.groupValue(cur, i, dvType),
+            dvType, tableSchema(cp.deleteKeyCol).dataType)
+        }
       }
       private def readField(f: StructField): Any = {
         val fileType = cur.getType
@@ -539,7 +547,7 @@ private[sources] class ChangesReaderFactory(schema: StructType,
             nullableMissing.contains(f.name)) return null
         val i = fileType.getFieldIndex(f.name)
         if (cur.getFieldRepetitionCount(i) == 0) null
-        else graft.operators.VersionedTable.groupValue(cur, i, f.dataType)
+        else VersionedTable.groupValue(cur, i, f.dataType)
       }
       // Partition columns are split constants served from the file's
       // own path segments — footers never carry them.
@@ -555,7 +563,7 @@ private[sources] class ChangesReaderFactory(schema: StructType,
           else if (isDelete) {
             // A delete row carries ONLY its key; the DV file's single
             // column is the key column, everything else is NULL.
-            if (f.name == cp.deleteKeyCol) readField(f) else null
+            if (f.name == cp.deleteKeyCol) deleteKey.orNull else null
           } else if (partConst.contains(f.name)) partConst(f.name)
           else readField(f)
         }

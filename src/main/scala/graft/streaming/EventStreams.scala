@@ -987,8 +987,7 @@ object EventStreams {
         assertBatches(batches, nf)
         val v = VersionedTable.latestVersion(sinkTable).get
         val streamed = (1L to v).flatMap(ver =>
-          VersionedTable.addedLines(sinkTable, ver)
-            .filterNot(_.contains('\t')))
+          VersionedTable.addedFiles(sinkTable, ver))
         require(streamed.nonEmpty &&
             streamed.forall(_.contains("event_type=")),
           s"partitionedSinkDrain: streamed files must land under " +

@@ -143,4 +143,19 @@ class EntryContractSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: $t"
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  test("the manifest line format stays inside VersionedTable") {
+    // A line-kind literal elsewhere re-implements the format; readers
+    // take typed entries (VersionedTable.parse, Snapshot fields).
+    val kinds = Seq("DV", "RENAME", "WIDEN", "ADDCOL", "DROPCOL", "BLOOM",
+      "STATSCOL", "STATS", "ROWS", "CHECK", "PARTCOL", "PARTSPEC", "NDV",
+      "MVOF", "MVSQL", "MVAVG", "MVFOLD", "KIND", "BASE", "RM")
+    val hits = for {
+      (f, lines, i) <- mainCodeLines()
+      if f.getFileName.toString != "VersionedTable.scala"
+      t = lines(i)
+      if kinds.exists(k => t.contains("\"" + k + "\\t"))
+    } yield s"$f:${i + 1}: ${t.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }

@@ -26,6 +26,69 @@ class VersionedTableSpec extends SparkSpec {
     intercept[IllegalArgumentException] { VersionedTable.read(spark, t) }
   }
 
+  test("the snapshot parser recognizes every line kind the writers emit") {
+    import spark.implicits._
+    // Indexes, contracts, statistics and a deletion vector.
+    val a = freshTable()
+    val rows = (0L until 40L).map(i => (i, i % 7)).toDF("id", "v")
+    VersionedTable.commitWithStats(spark, a, 0L, rows.coalesce(1), "id",
+      rowCounts = true)
+    VersionedTable.commitIndexed(spark, a, 1L, rows.where($"id" < 5), "id",
+      "v", carried = VersionedTable.manifest(a, 0L))
+    VersionedTable.constraintCommit(spark, a, 2L, "id >= 0")
+    VersionedTable.analyzeCommit(spark, a, Seq("id"))
+    VersionedTable.clusterCommit(spark, a, Seq("id", "v"), files = 2)
+    VersionedTable.deleteCommit(spark, a, 5L, Seq(3L).toDF("id"), "id")
+    // A declared partition layout and schema mappings.
+    val b = freshTable()
+    VersionedTable.commit(spark, b, 0L,
+      Seq.empty[(Long, String, Long)].toDF("id", "g", "x"),
+      carried = Seq(VersionedTable.partColLine("g"),
+        VersionedTable.partSpecLine(1L, Seq("g"))))
+    VersionedTable.addColumnCommit(spark, b, 1L, "z", "bigint")
+    VersionedTable.dropColumnCommit(spark, b, 2L, "z")
+    VersionedTable.renameCommit(b, 3L, "x", "y")
+    // A SQL-defined materialized view.
+    val base = freshTable()
+    VersionedTable.commit(spark, base, 0L, rows.withColumnRenamed("v", "g"))
+    val mv = freshTable()
+    VersionedTable.createMaterializedSql(spark, base, mv, Seq("g"),
+      "SELECT g, count(*) AS n, avg(id) AS av, min(id) AS mn " +
+        "FROM __BASE__ GROUP BY g")
+    val snaps = Seq(VersionedTable.snapshot(a, 3L),
+      VersionedTable.snapshot(a, 4L), VersionedTable.snapshot(a, 5L),
+      VersionedTable.snapshot(b, 3L), VersionedTable.snapshot(mv, 0L))
+    // A kind the parser missed would read as a data file: every data
+    // entry must be a parquet file on disk, and every entry must render
+    // back to its stored line.
+    for (sn <- snaps) {
+      assert(sn.files.nonEmpty && sn.files.forall(f => f.endsWith(".parquet")
+        && Files.isRegularFile(sn.table.resolve(f))), sn.files)
+      sn.lines.zip(sn.entries).foreach { case (l, e) => assert(e.line == l) }
+    }
+    val a5 = VersionedTable.snapshot(a, 5L)
+    assert(a5.statsManifest.forall(_._2 != Long.MinValue))
+    assert(a5.rowCounts.map(_._2).sum == 45L)
+    assert(a5.statsColumns == Seq("id") && a5.statsCol.contains("id"))
+    assert(a5.bloomColumns == Seq("v") && a5.blooms.nonEmpty)
+    assert(a5.secondaryStats.map(_._2).toSet == Set("v"))
+    assert(a5.checks == Seq("id >= 0"))
+    assert(a5.deletionVectors.map(d => (d._2, d._3)) == Seq(("id", 5L)))
+    assert(VersionedTable.snapshot(a, 4L).kind.contains("compact") &&
+      a5.kind.isEmpty)
+    assert(VersionedTable.snapshot(a, 3L).ndvStats.keySet == Set("id"))
+    val b3 = VersionedTable.snapshot(b, 3L)
+    assert(b3.declaredPartitionCols == Seq("g") &&
+      b3.partitionSpecs == Seq((1L, Seq("g"))) &&
+      b3.writePartitionLayout == Seq("g"))
+    assert(b3.columnMappings == Seq(("addcol", "z", "bigint"),
+      ("dropcol", "z", ""), ("rename", "x", "y")))
+    val m0 = VersionedTable.snapshot(mv, 0L)
+    assert(m0.mvCursor.contains(0L) && m0.mvDefinition.exists(_._1 ==
+      Seq("g")) && m0.mvAvgFolds.map(_._1) == Seq("av") &&
+      m0.mvFoldOps == Map("mn" -> "min"))
+  }
+
   test("commit then read round-trips; latest resolves the max version") {
     val t = freshTable()
     VersionedTable.commit(spark, t, 0L, df(1, 2, 3))
@@ -561,7 +624,7 @@ class VersionedTableSpec extends SparkSpec {
       case (f, mn, mx) =>
         f.contains("g=") && (mn, mx) != (Long.MinValue, Long.MaxValue)
     })
-    assert(VersionedTable.statsColumns(t, 0L) == Seq("id"))
+    assert(VersionedTable.snapshot(t, 0L).statsColumns == Seq("id"))
     val (df, nRead, nPart, nTotal) =
       VersionedTable.readPartitionRange(spark, t, "g", Seq("a"), "id", 0L, 20L)
     assert(nPart < nTotal, "partition stage must prune")
@@ -591,7 +654,7 @@ class VersionedTableSpec extends SparkSpec {
       f.matches(".*/g=[ab]/h=[012]/.*") &&
         (mn, mx) != (Long.MinValue, Long.MaxValue)
     })
-    assert(VersionedTable.rowCounts(t, 0L).map(_._2).sum == 120L)
+    assert(VersionedTable.snapshot(t, 0L).rowCounts.map(_._2).sum == 120L)
     // The connector prunes on both columns at once.
     val pruned = spark.read.format("graft-table").load(t.toString)
       .where($"g" === "a" && $"h" === "0")
@@ -678,7 +741,7 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.commitIndexed(spark, t, 0L,
       spark.range(0, 400).toDF("id")
         .repartitionByRange(4, $"id" % 4), "id", "id")
-    assert(VersionedTable.blooms(t, 0L).size == 4)
+    assert(VersionedTable.snapshot(t, 0L).blooms.size == 4)
     // No false negatives: every present key is found, exactly once.
     Seq(0L, 7L, 399L).foreach { k =>
       val (df, read, total) = VersionedTable.readEquals(spark, t, "id", k)
@@ -709,8 +772,8 @@ class VersionedTableSpec extends SparkSpec {
       .repartitionByRange(16, org.apache.spark.sql.functions.expr(
         "(x div 8) * 4 + (y div 8)"))
     VersionedTable.commitMultiStats(spark, t, 0L, grid, Seq("x", "y"))
-    assert(VersionedTable.statsColumns(t, 0L) == Seq("x"))
-    assert(VersionedTable.secondaryStats(t, 0L).nonEmpty)
+    assert(VersionedTable.snapshot(t, 0L).statsColumns == Seq("x"))
+    assert(VersionedTable.snapshot(t, 0L).secondaryStats.nonEmpty)
     val (df, nRead, perDim, nTotal) = VersionedTable.readBox(spark, t,
       Seq(("x", 0L, 7L), ("y", 0L, 7L)))
     assert(nTotal == 16)
@@ -741,7 +804,7 @@ class VersionedTableSpec extends SparkSpec {
     val t = freshTable()
     VersionedTable.commitWithStats(spark, t, 0L,
       df(1L to 20L: _*).repartition(4), "id", rowCounts = true)
-    val rc = VersionedTable.rowCounts(t, 0L)
+    val rc = VersionedTable.snapshot(t, 0L).rowCounts
     assert(rc.map(_._1).toSet ==
       VersionedTable.statsManifest(t, 0L).map(_._1).toSet,
       "every data file must carry a ROWS line")
@@ -819,7 +882,7 @@ class VersionedTableSpec extends SparkSpec {
     val kept = v0.collect { case (f, mn, mx) if !(mx >= 1L && mn <= 10L) => f }
     val v1Files = VersionedTable.statsManifest(t, 1L).map(_._1).toSet
     assert(kept.forall(v1Files.contains))
-    val rc = VersionedTable.rowCounts(t, 1L)
+    val rc = VersionedTable.snapshot(t, 1L).rowCounts
     assert(rc.map(_._1).toSet == v1Files && rc.map(_._2).sum == 100L)
     // Row-level result: exactly ids 1..10 updated.
     val got = VersionedTable.read(spark, t)
@@ -922,7 +985,7 @@ class VersionedTableSpec extends SparkSpec {
     // Compacting folds the DV; the rename then lands cleanly.
     VersionedTable.compactCommit(spark, t, Some("id"))
     VersionedTable.renameCommit(t, 4L, "len", "n")
-    assert(VersionedTable.columnMappings(t, 4L) ==
+    assert(VersionedTable.snapshot(t, 4L).columnMappings ==
       Seq(("rename", "len", "n")))
     // The supported single-debt path: a table with DVs OR mappings
     // (not both) compacts cleanly. Fresh table with DVs + constraint:
@@ -938,7 +1001,7 @@ class VersionedTableSpec extends SparkSpec {
       "compaction must fold the deletion vectors away")
     assert(VersionedTable.checkConstraints(t2, v3) == Seq("len >= 0"),
       "compaction must carry the CHECK forward")
-    val rc = VersionedTable.rowCounts(t2, v3)
+    val rc = VersionedTable.snapshot(t2, v3).rowCounts
     assert(rc.map(_._2).sum == 39L, "ROWS recomputed over the fold")
     assert(VersionedTable.read(spark, t2, Some(v3)).count() == 39L)
     intercept[IllegalArgumentException] {
@@ -950,7 +1013,7 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.commit(spark, t3, 0L, Seq((1L, 5L)).toDF("id", "len"))
     VersionedTable.renameCommit(t3, 1L, "len", "n")
     val v2 = VersionedTable.compactCommit(spark, t3)
-    assert(VersionedTable.columnMappings(t3, v2).isEmpty,
+    assert(VersionedTable.snapshot(t3, v2).columnMappings.isEmpty,
       "compaction must materialize the mapping, not carry it")
     assert(VersionedTable.read(spark, t3).columns.toSeq == Seq("id", "n"))
   }
@@ -1115,7 +1178,7 @@ class VersionedTableSpec extends SparkSpec {
     // AND no coverage is lost (r15): every v1 file carries a bloom —
     // rewritten files' filters recomputed, untouched files' carried.
     val v1Files = VersionedTable.statsManifest(t, 1L).map(_._1).toSet
-    assert(VersionedTable.blooms(t, 1L)
+    assert(VersionedTable.snapshot(t, 1L).blooms
       .collect { case (f, "v", _) => f }.toSet == v1Files,
       "bloom coverage must survive the rewrite exactly")
     // The recomputed filter has teeth on an updated value (id=3 →
@@ -1158,9 +1221,9 @@ class VersionedTableSpec extends SparkSpec {
       "the partition column (and its rows) must survive the rewrite")
     // Content losslessness + recomputed metadata.
     assert(VersionedTable.read(spark, t, Some(v)).count() == 60)
-    assert(VersionedTable.rowCounts(t, v).map(_._2).sum == 60L,
+    assert(VersionedTable.snapshot(t, v).rowCounts.map(_._2).sum == 60L,
       "ROWS lines must be recomputed for the compacted files")
-    assert(VersionedTable.statsColumns(t, v) == Seq("id"))
+    assert(VersionedTable.snapshot(t, v).statsColumns == Seq("id"))
     // RAGGED layouts (files partitioned on different column sets)
     // refuse rather than guess — uniform multi-column layouts compact
     // fine (see the multi-column layout test above).
@@ -1187,10 +1250,10 @@ class VersionedTableSpec extends SparkSpec {
     assert(ev == 1L)
     assert(VersionedTable.addedLines(t, ev) == Seq("PARTSPEC\t1\th"),
       "the evolve commit must add exactly one PARTSPEC line")
-    assert(VersionedTable.partitionSpecs(t, ev) == Seq((1L, Seq("h"))))
-    assert(VersionedTable.writePartitionLayout(t, ev) == Seq("h"),
+    assert(VersionedTable.snapshot(t, ev).partitionSpecs == Seq((1L, Seq("h"))))
+    assert(VersionedTable.snapshot(t, ev).writePartitionLayout == Seq("h"),
       "new writes must land under the latest spec generation")
-    assert(VersionedTable.partitionLayout(t, ev) == Seq("g"),
+    assert(VersionedTable.snapshot(t, ev).partitionLayout == Seq("g"),
       "the reader union still carries the old generation's column")
     // A new batch lands under the NEW spec; old files keep their paths.
     val batch2 = Seq.tabulate(10)(i =>
@@ -1221,8 +1284,8 @@ class VersionedTableSpec extends SparkSpec {
       "both generations' rows (and the retired column) must survive")
     // The full-manifest rewrite restates the spec history (amnesia
     // rule) — writes after compaction keep landing under the live spec.
-    assert(VersionedTable.partitionSpecs(t, v) == Seq((1L, Seq("h"))))
-    assert(VersionedTable.writePartitionLayout(t, v) == Seq("h"))
+    assert(VersionedTable.snapshot(t, v).partitionSpecs == Seq((1L, Seq("h"))))
+    assert(VersionedTable.snapshot(t, v).writePartitionLayout == Seq("h"))
   }
 
   test("materialized-view refresh: O(delta) reads, kind-aware walk, refusals") {
@@ -1312,7 +1375,7 @@ class VersionedTableSpec extends SparkSpec {
     val (dfp, _, _) = VersionedTable.readPartitions(spark, t, "g", Seq("g1"))
     assert(dfp.collect().map(_.getLong(0)).sorted.toSeq ==
       (0L until 40L).filter(_ % 2 == 1).toSeq)
-    assert(VersionedTable.rowCounts(t, 1L).map(_._2).sum == 40L)
+    assert(VersionedTable.snapshot(t, 1L).rowCounts.map(_._2).sum == 40L)
     // Empty scope publishes nothing.
     val filesNow = VersionedTable.statsManifest(t, 1L).size
     assert(VersionedTable.compactPartitionsCommit(spark, t, "g",
@@ -1342,16 +1405,16 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.latestVersion(t).contains(0L),
       "refused evolutions must publish nothing")
     val v1 = VersionedTable.evolvePartitionLayout(spark, t, Seq("s"))
-    assert(VersionedTable.writePartitionLayout(t, v1) == Seq("s"))
+    assert(VersionedTable.snapshot(t, v1).writePartitionLayout == Seq("s"))
     // A live-spec column is load-bearing: DROP COLUMN refuses it.
     intercept[IllegalArgumentException] {
       VersionedTable.dropColumnCommit(spark, t, v1 + 1, "s")
     }
     // Evolving BACK TO FLAT is a legal generation.
     val v2 = VersionedTable.evolvePartitionLayout(spark, t, Nil)
-    assert(VersionedTable.partitionSpecs(t, v2) ==
+    assert(VersionedTable.snapshot(t, v2).partitionSpecs ==
       Seq((1L, Seq("s")), (2L, Nil)))
-    assert(VersionedTable.writePartitionLayout(t, v2).isEmpty)
+    assert(VersionedTable.snapshot(t, v2).writePartitionLayout.isEmpty)
   }
 
   test("transact validates and carries CHECK constraints per attempt") {
@@ -1489,7 +1552,7 @@ class VersionedTableSpec extends SparkSpec {
       "id", "v")
     val v = VersionedTable.compactCommit(spark, t, Some("id"), files = 2)
     val vFiles = VersionedTable.statsManifest(t, v).map(_._1).toSet
-    assert(VersionedTable.blooms(t, v)
+    assert(VersionedTable.snapshot(t, v).blooms
       .collect { case (f, "v", _) => f }.toSet == vFiles,
       "compaction must recompute bloom coverage, not drop it")
     val (hit, read, total) = VersionedTable.readEquals(spark, t, "v",
@@ -1522,7 +1585,7 @@ class VersionedTableSpec extends SparkSpec {
     // The v-dimension zonemaps cover the staged files with true
     // bounds — the box read prunes on BOTH dims exactly as before the
     // rewrite.
-    val sec = VersionedTable.secondaryStats(t, v)
+    val sec = VersionedTable.snapshot(t, v).secondaryStats
       .collect { case (f, "v", mn, mx) => (f, mn, mx) }
     assert(sec.map(_._1).toSet == staged.toSet)
     assert(sec.forall { case (_, mn, mx) => mn >= 4L && mx <= 121L })
@@ -1690,9 +1753,7 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.evolvePartitionLayout(spark, t, Seq("days(ts_us)"))
     rows.where($"id" >= 8).write.format("graft-table").mode("append")
       .save(t.toString)
-    val newFiles = VersionedTable.addedLines(t, 2L)
-      .filterNot(VersionedTable.isMetaManifestLine)
-      .map(_.split('\t').head)
+    val newFiles = VersionedTable.addedFiles(t, 2L)
     assert(newFiles.nonEmpty &&
       newFiles.forall(_.contains("ts_us_day=2024-01-")),
       s"expected hidden day segments, got $newFiles")
@@ -1705,8 +1766,7 @@ class VersionedTableSpec extends SparkSpec {
       .microsRangeOfDay("2024-01-03")
     val pruned = scan.where($"ts_us" >= lo && $"ts_us" <= hi)
     val matching = newFiles.count(_.contains("ts_us_day=2024-01-03"))
-    val oldFiles = VersionedTable.addedLines(t, 0L)
-      .count(l => !VersionedTable.isMetaManifestLine(l))
+    val oldFiles = VersionedTable.addedFiles(t, 0L).size
     assert(pruned.rdd.getNumPartitions == matching + oldFiles &&
       matching + oldFiles < newFiles.size + oldFiles,
       s"day predicate scanned ${pruned.rdd.getNumPartitions}, expected " +
@@ -1734,9 +1794,7 @@ class VersionedTableSpec extends SparkSpec {
     // files re-derive their bucket segments from the rewritten rows.
     val (uv, _, _) = VersionedTable.updateWhere(spark, t, "id", 7L, 7L,
       Seq("kind" -> "'upd'"))
-    val updFiles = VersionedTable.addedLines(t, uv)
-      .filterNot(VersionedTable.isMetaManifestLine)
-      .map(_.split('\t').head)
+    val updFiles = VersionedTable.addedFiles(t, uv)
     assert(updFiles.nonEmpty && updFiles.forall(_.contains("id_bucket=")),
       s"update replacements must land under the live spec: $updFiles")
     val updated = spark.read.format("graft-table").load(t.toString)
@@ -1828,7 +1886,7 @@ class VersionedTableSpec extends SparkSpec {
     // refresh folds and the connector hides).
     assert(VersionedTable.read(spark, mv).columns.toSeq ==
       Seq("g", "n", "avg_v", "avg_v__asum", "avg_v__acnt"))
-    assert(VersionedTable.mvAvgFolds(mv, 0L) ==
+    assert(VersionedTable.snapshot(mv, 0L).mvAvgFolds ==
       Seq(("avg_v", "avg_v__asum", "avg_v__acnt")))
     def served(): Seq[(String, Long, Option[Double])] =
       VersionedTable.readMaterializedSql(spark, mv).collect()
@@ -1944,7 +2002,7 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.createMaterializedSql(spark, base, mv, Seq("g"),
       "SELECT g, count(*) AS n, min(v) AS mn, max(v) AS mx " +
         "FROM __BASE__ GROUP BY g")
-    assert(VersionedTable.mvFoldOps(mv, 0L) ==
+    assert(VersionedTable.snapshot(mv, 0L).mvFoldOps ==
       Map("mn" -> "min", "mx" -> "max"))
     def served(): Seq[(String, Long, Long, Long)] =
       VersionedTable.read(spark, mv).collect()

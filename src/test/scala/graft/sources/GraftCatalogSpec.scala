@@ -123,8 +123,7 @@ class GraftCatalogSpec extends SparkSpec {
     import spark.implicits._
     VersionedTable.appendCommit(spark, root.resolve("nums"),
       Seq(2000L, 2001L).toDF("id"))
-    val appended = VersionedTable.addedLines(root.resolve("nums"), 2L)
-      .count(l => !VersionedTable.isMetaManifestLine(l)).toLong
+    val appended = VersionedTable.addedFiles(root.resolve("nums"), 2L).size.toLong
     val res = s2.sql("CALL g.refresh_mv('m1', 'nums')").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(res("delta_files_read") == appended &&
@@ -138,6 +137,31 @@ class GraftCatalogSpec extends SparkSpec {
     s2.sql("CALL g.refresh_mv('m1', 'nums')").collect()
     assert(s2.sql("SELECT sum(n) AS t FROM g.m1").head().getLong(0)
       == 104L)
+  }
+
+  test("a SELECT reads each manifest of the versions it touches once") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_cat_reads_")
+    val t = root.resolve("t")
+    VersionedTable.commit(spark, t, 0L, Seq(1L, 2L, 3L, 4L).toDF("id"))
+    VersionedTable.appendCommit(spark, t, Seq(5L, 6L).toDF("id"))
+    VersionedTable.deleteCommit(spark, t, 2L, Seq(2L).toDF("id"), "id")
+    // A checkpoint: v3 restates the list, so its DVs' origin (2) lies
+    // outside its own chain.
+    VersionedTable.mergeCommit(spark, t, Seq(6L).toDF("id"), "id",
+      checkpointEvery = 1)
+    assert(VersionedTable.chainLength(t, 3L) == 1)
+    val s2 = session(root)
+    def reads(sql: String): (Long, Seq[Long]) = {
+      val before = VersionedTable.manifestReads.get
+      val ids = s2.sql(sql).collect().map(_.getLong(0)).toSeq.sorted
+      (VersionedTable.manifestReads.get - before, ids)
+    }
+    // v2 = BASE 1 = BASE 0; its DV's origin is v2 itself: 3 versions.
+    assert(reads("SELECT id FROM g.t VERSION AS OF 2") ==
+      ((3L, Seq(1L, 3L, 4L, 5L, 6L))))
+    // v3 (full) plus the origin's chain 2, 1, 0: 4 versions.
+    assert(reads("SELECT id FROM g.t") == ((4L, Seq(1L, 3L, 4L, 5L, 6L))))
   }
 
   test("tables resolve by name; versions via VERSION AS OF") {
@@ -279,11 +303,11 @@ class GraftCatalogSpec extends SparkSpec {
     assert(VersionedTable.commitKind(t, 1L).contains("update"))
     // Stats metadata survives the SQL rewrite: ROWS covers v1 exactly
     // and sums true; STATSCOL still declared.
-    val rc = VersionedTable.rowCounts(t, 1L)
+    val rc = VersionedTable.snapshot(t, 1L).rowCounts
     assert(rc.map(_._1).toSet ==
       VersionedTable.statsManifest(t, 1L).map(_._1).toSet)
     assert(rc.map(_._2).sum == 100L)
-    assert(VersionedTable.statsColumns(t, 1L).headOption.contains("id"))
+    assert(VersionedTable.snapshot(t, 1L).statsColumns.headOption.contains("id"))
     // A no-match UPDATE is a no-op: nothing published.
     s2.sql("UPDATE g.nums SET v = 0 WHERE id BETWEEN -100 AND -50")
     assert(VersionedTable.latestVersion(t).contains(1L))
@@ -351,7 +375,7 @@ class GraftCatalogSpec extends SparkSpec {
     // Full bloom coverage survives the rewrite: replaced files'
     // filters recomputed, untouched files' carried.
     val files1 = VersionedTable.statsManifest(t, 1L).map(_._1).toSet
-    assert(VersionedTable.blooms(t, 1L)
+    assert(VersionedTable.snapshot(t, 1L).blooms
       .collect { case (f, "v", _) => f }.toSet == files1)
     // And the recomputed filters have teeth: a point lookup on an
     // UPDATED value still prunes files.
@@ -378,16 +402,16 @@ class GraftCatalogSpec extends SparkSpec {
       200L, 239L)
     assert(hit.count() == 40 && read < total,
       s"range read $read of $total files after INSERT INTO")
-    assert(VersionedTable.rowCounts(t, v1).map(_._1).toSet ==
+    assert(VersionedTable.snapshot(t, v1).rowCounts.map(_._1).toSet ==
       VersionedTable.statsManifest(t, v1).map(_._1).toSet,
       "ROWS coverage must survive the insert")
     // INSERT OVERWRITE: the full manifest restates STATSCOL and
     // carries fresh stats — pruning survives the rewrite.
     s2.sql("INSERT OVERWRITE g.nums SELECT id, id AS v FROM range(50)")
     val v2 = VersionedTable.latestVersion(t).get
-    assert(VersionedTable.statsColumns(t, v2).headOption.contains("id"),
+    assert(VersionedTable.snapshot(t, v2).statsColumns.headOption.contains("id"),
       "the overwrite must restate the STATSCOL declaration")
-    assert(VersionedTable.rowCounts(t, v2).map(_._2).sum == 50L)
+    assert(VersionedTable.snapshot(t, v2).rowCounts.map(_._2).sum == 50L)
     // An overwrite staging zero rows refuses (the table would lose its
     // schema source) — TRUNCATE TABLE is the legitimate verb.
     val e = intercept[Exception] {
@@ -616,10 +640,10 @@ class GraftCatalogSpec extends SparkSpec {
     val vT = VersionedTable.latestVersion(t).get
     // STATSCOL survives the rewrite; the synthesized line is the
     // full (never-skippable) range; ROWS records zero.
-    assert(VersionedTable.statsColumns(t, vT) == Seq("id"))
+    assert(VersionedTable.snapshot(t, vT).statsColumns == Seq("id"))
     assert(VersionedTable.statsManifest(t, vT).map(m => (m._2, m._3)) ==
       Seq((Long.MinValue, Long.MaxValue)))
-    assert(VersionedTable.rowCounts(t, vT).map(_._2) == Seq(0L))
+    assert(VersionedTable.snapshot(t, vT).rowCounts.map(_._2) == Seq(0L))
     // The emptied table still ingests with index continuity intact.
     s2.sql("INSERT INTO g.st SELECT 7 AS id")
     assert(s2.sql("SELECT sum(id) AS s FROM g.st").head().getLong(0) == 7)
@@ -733,7 +757,7 @@ class GraftCatalogSpec extends SparkSpec {
     s2.sql("CREATE TABLE g.p (id BIGINT, region STRING) " +
       "PARTITIONED BY (region)")
     val t = root.resolve("p")
-    assert(VersionedTable.declaredPartitionCols(t, 0L) == Seq("region"))
+    assert(VersionedTable.snapshot(t, 0L).declaredPartitionCols == Seq("region"))
     s2.sql("INSERT INTO g.p VALUES (1, 'east'), (2, 'west'), (3, 'east')")
     val files = VersionedTable.addedLines(t, 1L).filterNot(_.contains('\t'))
     assert(files.forall(_.contains("region=")) && files.size == 2,
@@ -781,15 +805,15 @@ class GraftCatalogSpec extends SparkSpec {
     val v2files = VersionedTable.statsManifest(m, 2L).map(_._1)
     assert(v2files.forall(_.matches(".*d=d[12]/r=(east|west)/.*")),
       s"compaction must keep the layout, got $v2files")
-    assert(VersionedTable.declaredPartitionCols(m, 2L) == Seq("d", "r"))
+    assert(VersionedTable.snapshot(m, 2L).declaredPartitionCols == Seq("d", "r"))
     assert(s2.sql("SELECT sum(id) AS s FROM g.m").head().getLong(0) == 10)
     // TRUNCATE on a partitioned table: reads nothing, keeps the
     // declared layout (PARTCOL restated), and re-inserts land
     // partitioned again.
     s2.sql("TRUNCATE TABLE g.m")
     assert(s2.sql("SELECT count(*) AS n FROM g.m").head().getLong(0) == 0)
-    assert(VersionedTable.declaredPartitionCols(m,
-      VersionedTable.latestVersion(m).get) == Seq("d", "r"))
+    assert(VersionedTable.snapshot(m,
+      VersionedTable.latestVersion(m).get).declaredPartitionCols == Seq("d", "r"))
     s2.sql("INSERT INTO g.m VALUES (9, 'd3', 'east')")
     assert(VersionedTable.addedLines(m,
         VersionedTable.latestVersion(m).get)
@@ -830,7 +854,7 @@ class GraftCatalogSpec extends SparkSpec {
     val s2 = session(root)
     s2.sql("ALTER TABLE g.d ADD COLUMN extra STRING")
     // Metadata-only: no data dir grew, one ADDCOL mapping lives.
-    assert(VersionedTable.columnMappings(t, 1L) ==
+    assert(VersionedTable.snapshot(t, 1L).columnMappings ==
       Seq(("addcol", "extra", "string")))
     // Legacy rows read as typed NULLs from SQL immediately; stats
     // pruning on the original column still works underneath.
@@ -1335,8 +1359,7 @@ class GraftCatalogSpec extends SparkSpec {
     val supp = "𝕏ray" // 𝕏ray
     s2.sql(s"INSERT INTO g.trstr VALUES (1, 'alpha'), (2, '$supp')")
     val table = root.resolve("trstr")
-    val files = VersionedTable.addedLines(table, 1L)
-      .filterNot(VersionedTable.isMetaManifestLine).map(_.split('\t').head)
+    val files = VersionedTable.addedFiles(table, 1L)
     assert(files.exists(_.contains("s_trunc=")), s"no segments in $files")
     val got = s2.sql(s"SELECT id FROM g.trstr WHERE s = '$supp'")
       .collect().map(_.getLong(0)).toSeq
@@ -1435,13 +1458,11 @@ class GraftCatalogSpec extends SparkSpec {
     // layout is the transform from version 0 (the only way a
     // streaming-sink table can be transform-partitioned: the sink owns
     // every later version).
-    assert(VersionedTable.writePartitionLayout(t, 0L) ==
+    assert(VersionedTable.snapshot(t, 0L).writePartitionLayout ==
       Seq("days(ts_us)"))
     s2.sql("INSERT INTO g.evd VALUES (1, 1704067200000000), " +
       "(2, 1704153600000000)") // 2024-01-01, 2024-01-02
-    val added = VersionedTable.addedLines(t, 1L)
-      .filterNot(VersionedTable.isMetaManifestLine)
-      .map(_.split('\t').head)
+    val added = VersionedTable.addedFiles(t, 1L)
     assert(added.forall(_.contains("ts_us_day=2024-01-0")),
       s"INSERT must land hidden day files: $added")
     // The derived segment never reaches the schema surface.
@@ -1462,7 +1483,7 @@ class GraftCatalogSpec extends SparkSpec {
     // bucket DDL bootstraps too.
     s2.sql("""CREATE TABLE g.evb (id BIGINT, v BIGINT)
               PARTITIONED BY (bucket(4, id))""")
-    assert(VersionedTable.writePartitionLayout(root.resolve("evb"), 0L) ==
+    assert(VersionedTable.snapshot(root.resolve("evb"), 0L).writePartitionLayout ==
       Seq("bucket(4,id)"))
     // Derived-name discipline (self-review r18): a schema column
     // shadowing the derived segment, and two transforms deriving the

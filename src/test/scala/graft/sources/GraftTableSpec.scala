@@ -206,8 +206,8 @@ class GraftTableSpec extends SparkSpec {
     VersionedTable.commitPartitioned(spark, t, 0L,
       Seq((1L, "en"), (2L, "fr"), (3L, "de"), (4L, "en"))
         .toDF("id", "lang"), "lang")
-    val table = new GraftTable(t.toString,
-      GraftTableSource.dataSchema(t.toString, 0L), 0L, None)
+    val snap = VersionedTable.snapshot(t, 0L)
+    val table = new GraftTable(snap, GraftTableSource.dataSchema(snap), None)
     // The scan advertises the partition column as runtime-filterable
     // (resolvable in its output) — never _file, which a plain read
     // does not serve (the pre-r16 unconditional advertisement broke
@@ -278,7 +278,7 @@ class GraftTableSpec extends SparkSpec {
       Seq.tabulate(200)(i => (i.toLong, s"g${i % 7}",
         if (i % 5 == 0) null else s"v$i")).toDF("id", "g", "s"))
     val v = VersionedTable.analyzeCommit(spark, t, Seq("g", "s"))
-    val ndv = VersionedTable.ndvStats(t, v)
+    val ndv = VersionedTable.snapshot(t, v).ndvStats
     assert(ndv("g")._1 == 7L && ndv("g")._2 == 0L)
     assert(ndv("s")._2 == 40L, "null count must be exact")
     assert(math.abs(ndv("s")._1 - 160L) <= 16L,
@@ -533,8 +533,8 @@ class GraftTableSpec extends SparkSpec {
     Seq.tabulate(12)(i => (i.toLong, us(day0 + i % 3, i.toLong)))
       .toDF("id", "ts_us")
       .write.format("graft-table").mode("append").save(t.toString)
-    val table = new GraftTable(t.toString,
-      GraftTableSource.dataSchema(t.toString, 1L), 1L, None)
+    val snap = VersionedTable.snapshot(t, 1L)
+    val table = new GraftTable(snap, GraftTableSource.dataSchema(snap), None)
     val scan = table.newScanBuilder(
       org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
       .build().asInstanceOf[GraftScan]

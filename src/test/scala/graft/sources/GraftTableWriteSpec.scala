@@ -89,12 +89,14 @@ class GraftTableWriteSpec extends SparkSpec {
     // Two real files sit in the staging dir; only one is in messages.
     val good = plant(t, staging, "part-good.parquet", Seq(3L))
     plant(t, staging, "part-zombie.parquet", Seq(99L))
-    val ingest = VersionedTable.ingestLines(spark, t, staging, Seq(good))
+    val ingest = VersionedTable.ingestLines(spark, t,
+      VersionedTable.latestSnapshot(t), staging, Seq(good))
     // Stats-bearing data lines + ROWS lines for the good file ONLY.
     assert(ingest.nonEmpty)
     assert(ingest.forall(_.contains("part-good.parquet")),
       s"orphan leaked into manifest lines: $ingest")
-    val over = VersionedTable.overwriteLines(spark, t, staging, Seq(good))
+    val over = VersionedTable.overwriteLines(spark, t,
+      VersionedTable.latestSnapshot(t), staging, Seq(good))
     assert(over.filterNot(_.startsWith("STATSCOL"))
       .forall(_.contains("part-good.parquet")),
       s"orphan leaked into overwrite lines: $over")
@@ -104,7 +106,8 @@ class GraftTableWriteSpec extends SparkSpec {
     val st2 = t2.resolve("data").resolve("v2w-orphantest")
     val good2 = plant(t2, st2, "part-good.parquet", Seq(2L))
     plant(t2, st2, "part-zombie.parquet", Seq(98L))
-    assert(VersionedTable.ingestLines(spark, t2, st2, Seq(good2)) ==
+    assert(VersionedTable.ingestLines(spark, t2,
+      VersionedTable.latestSnapshot(t2), st2, Seq(good2)) ==
       Seq(good2))
   }
 

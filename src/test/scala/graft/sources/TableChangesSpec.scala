@@ -182,6 +182,34 @@ class TableChangesSpec extends SparkSpec {
       VersionedTable.read(spark, t).collect().map(_.getLong(0)).sorted.toSeq)
   }
 
+  test("readChangeFeed serves DV keys in the column's type") {
+    import spark.implicits._
+    // INT table, BIGINT deletion vector: 2 converts; 2^32 + 1 has no
+    // INT value, deletes nothing, and so serves no delete row.
+    val t = freshTable()
+    VersionedTable.commit(spark, t, 0L, Seq(1, 2, 3).toDF("id"))
+    VersionedTable.deleteCommit(spark, t, 1L,
+      Seq(2L, (1L << 32) + 1L).toDF("id"), "id")
+    val tmp = Files.createTempDirectory("graft_changes_dvtype_")
+    val q = spark.readStream.format("graft-changes")
+      .option("readChangeFeed", "true")
+      .load(t.toString)
+      .writeStream.format("parquet")
+      .option("path", s"$tmp/out")
+      .option("checkpointLocation", s"$tmp/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    if (!q.awaitTermination(120000L)) q.stop()
+    q.exception.foreach(throw _)
+    val rows = spark.read.parquet(s"$tmp/out").collect().map { r =>
+      (r.getLong(r.fieldIndex("_commit_version")),
+        r.getString(r.fieldIndex("_change_type")),
+        r.getInt(r.fieldIndex("id")))
+    }.toSeq.sorted
+    assert(rows == Seq((0L, "insert", 1), (0L, "insert", 2),
+      (0L, "insert", 3), (1L, "delete", 2)))
+  }
+
   test("a rewrite commit fails the feed; startingVersion at it serves a snapshot") {
     val t = freshTable()
     VersionedTable.commit(spark, t, 0L, df(1, 2, 3))
@@ -402,8 +430,8 @@ class TableChangesSpec extends SparkSpec {
     // mappings still live at head (ADVICE r16: gating on live mappings
     // crashed exactly this replay on getFieldIndex).
     VersionedTable.compactCommit(spark, t)
-    assert(VersionedTable.columnMappings(t,
-      VersionedTable.latestVersion(t).get).isEmpty)
+    assert(VersionedTable.snapshot(t,
+      VersionedTable.latestVersion(t).get).columnMappings.isEmpty)
     val tmp = Files.createTempDirectory("graft_changes_retired_")
     val q = spark.readStream.format("graft-changes")
       .option("startingVersion", "2")
