@@ -46,7 +46,7 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType,
   * at a shared mount; an object-store port swaps these few lines for
   * conditional PUTs, the protocol is unchanged).
   *
-  * Metadata scaling (r13): a manifest may be a DELTA — first line
+  * Metadata scaling: a manifest may be a DELTA — first line
   * `BASE\t<version>`, remaining lines the versions's ADDED entries —
   * so an append/delete commit's metadata cost is O(the commit), never
   * O(table). Readers resolve the chain (base's lines ++ delta lines);
@@ -89,15 +89,21 @@ object VersionedTable {
     * publish the manifest = carried ++ new. Returns the published
     * file list. `carried` is relative paths from a previous manifest
     * that remain live in this version (append/partial-rewrite
-    * commits); pass Nil for a full copy-on-write snapshot.
-    *
-    * Branched tables refuse (r15, like every version-pinned variant):
-    * a raw commit's CHECK carry derives from the globally closest
-    * prior snapshot, which on an interleaved log may belong to
-    * ANOTHER branch — enforcing (and injecting) a foreign line of
-    * history's contract. Write through [[branchCommit]] instead; the
-    * ref-free escape hatch is raw [[publish]] of hand-built lines. */
-  /** Commit-time INT96 refusal (r20): the graft footer reader refuses
+    * commits); pass Nil for a full copy-on-write snapshot. The raw
+    * commits are full manifests on the closest committed version below
+    * `version` (the [[produce]] table); on a branched table that
+    * version may belong to another line of history, so they refuse:
+    * write through [[branchCommit]] instead. */
+  def commit(s: SparkSession, table: Path, version: Long,
+             df: DataFrame, carried: Seq[String] = Nil): Seq[String] = {
+    val dataDir = newDataDir(table, version)
+    lazy val files = { writeData(df, dataDir); carried ++ partFiles(table, dataDir) }
+    produce(s, table, "commit", At(version))(_ =>
+      stagedIn(table, dataDir, Full(files)))
+    files
+  }
+
+  /** Commit-time INT96 refusal: the graft footer reader refuses
     * INT96 timestamps, but a session NOT built through
     * `GraftSession.configure` keeps Spark's INT96 parquet default — a
     * library commit from it would successfully publish a version that
@@ -135,71 +141,39 @@ object VersionedTable {
     else df.write.partitionBy(partCols: _*).parquet(dir.toString)
   }
 
-  def commit(s: SparkSession, table: Path, version: Long,
-             df: DataFrame, carried: Seq[String] = Nil): Seq[String] = {
-    refuseBranched(table, "commit")
-    val dataDir = newDataDir(table, version)
-    writeData(df, dataDir)
-    val files = carried ++ partFiles(table, dataDir)
-    publish(table, version,
-      files ++ carryChecks(s, table, version, dataDir, carried, "commit"))
-    files
-  }
-
-  /** CHECK lines a full-manifest writer at `version` must CARRY from
-    * the closest committed ancestor (r14 — a declared table contract
-    * must survive every rewrite, not just [[compactCommit]]'s), minus
-    * any the caller's `carried` lines already restate; the new files
-    * under `dataDir` are validated against them first, so the rewrite
-    * cannot be the path that smuggles a violation in. Nil when no
-    * ancestor or no constraint exists — the common case pays one
-    * directory listing plus one raw-chain CHECK scan (O(chain) tiny
-    * metadata reads, bounded by the checkpoint cadence; the full
-    * file-list splice is NOT paid — see [[checkConstraints]]).
-    * Callers are branch-guarded (see [[commit]]), so "closest prior"
-    * is always this line of history. */
-  private def carryChecks(s: SparkSession, table: Path, version: Long,
-                          dataDir: Path, carried: Seq[String],
-                          what: String): Seq[String] = {
-    val prior = versions(table).filter(_ < version).lastOption
-    val cs = prior.map(checkConstraints(table, _)).getOrElse(Nil)
-    if (cs.isEmpty) Nil
-    else {
-      enforceConstraints(s, table, dataDir, prior, what)
-      cs.map(Check(_).line).filterNot(carried.contains)
-    }
-  }
-
   /** Manifest lines for freshly-staged files under `dataDir`, matching
     * the INDEX SHAPE of the base snapshot (ingest must not degrade
     * pruning until the next compaction): stats-bearing data lines when
     * the base declares STATSCOL, ROWS lines when the base records them,
     * BLOOM and secondary-zonemap lines recomputed for every column the
-    * base indexes. Plain lines when the base declares nothing —
-    * deciding costs no IO; recomputation costs one aggregation per
-    * indexed column over the NEW files only. */
+    * base indexes. Plain lines when the base declares nothing or there
+    * is no base — deciding costs no IO; recomputation costs one
+    * aggregation per indexed column over the NEW files only. `only`
+    * restricts the lines to the files a V2 write's commit messages
+    * name, so an orphan a zombie task attempt left in the staging dir
+    * is never committed. */
   private def indexedLines(s: SparkSession, table: Path, dataDir: Path,
-                           base: Snapshot,
-                           only: String => Boolean = _ => true): Seq[String] = {
-    val hadRows = base.rowCounts.nonEmpty
-    val bloomCols = base.bloomColumns
-    val secCols = base.secondaryStats.map(_._2).distinct
-      .filterNot(base.statsCol.contains)
-    val data = base.statsCol match {
-      case Some(c) =>
-        statsRowsLines(fileColStats(s, table, dataDir, c)
-          .filter(t => only(t._1)), hadRows)
-      case None =>
-        partFiles(table, dataDir).filter(only) ++
-          (if (hadRows)
-             fileRowsLines(s, table, dataDir).filter(l => only(fileOfLine(l)))
-           else Nil)
+                           base: Option[Snapshot],
+                           only: String => Boolean = _ => true): Seq[String] =
+    base.fold(partFiles(table, dataDir).filter(only)) { base =>
+      val hadRows = base.rowCounts.nonEmpty
+      val secCols = base.secondaryStats.map(_._2).distinct
+        .filterNot(base.statsCol.contains)
+      val data = base.statsCol match {
+        case Some(c) =>
+          statsRowsLines(fileColStats(s, table, dataDir, c)
+            .filter(t => only(t._1)), hadRows)
+        case None =>
+          partFiles(table, dataDir).filter(only) ++
+            (if (hadRows)
+               fileRowsLines(s, table, dataDir).filter(l => only(fileOfLine(l)))
+             else Nil)
+      }
+      data ++
+        (base.bloomColumns.flatMap(fileBloomLines(s, table, dataDir, _)) ++
+          secCols.flatMap(secondaryLines(s, table, dataDir, _)))
+          .filter(l => only(fileOfLine(l)))
     }
-    data ++
-      (bloomCols.flatMap(fileBloomLines(s, table, dataDir, _)) ++
-        secCols.flatMap(secondaryLines(s, table, dataDir, _)))
-        .filter(l => only(fileOfLine(l)))
-  }
 
   /** The data file a per-file index line (BLOOM/STATS/ROWS) indexes. */
   private def fileOfLine(line: String): String = fileOf(parse(line)).get
@@ -217,45 +191,6 @@ object VersionedTable {
                              col: String): Seq[String] =
     fileColStats(s, table, dataDir, col).map { case (f, mn, mx, _) =>
       ColStats(f, col, mn, mx).line }
-
-  /** [[indexedLines]] against `base` — the V2 batch INSERT path's index
-    * continuity (executors staged the files under `dataDir`; the
-    * driver shapes their manifest lines). Plain lines when the table
-    * declares no indexes or has no commits yet. `files` is the
-    * commit-message-derived list of table-relative staged paths: the
-    * manifest is restricted to exactly those files, so an orphan left
-    * in the staging dir by a zombie/speculative task attempt (whose
-    * abort never ran) is never committed — it stays invisible and
-    * reclaimable, same as every raced commit attempt's leftovers. */
-  private[graft] def ingestLines(s: SparkSession, table: Path,
-                                 base: Option[Snapshot], dataDir: Path,
-                                 files: Seq[String]): Seq[String] = {
-    val only = files.toSet
-    base match {
-      case Some(b) => indexedLines(s, table, dataDir, b, only)
-      case None => partFiles(table, dataDir).filter(only)
-    }
-  }
-
-  /** [[ingestLines]] plus the restated table-wide declarations
-    * (STATSCOL, PARTCOL, PARTSPEC) — a FULL manifest (INSERT OVERWRITE)
-    * must restate them or the rewrite silently drops them (the same
-    * amnesia rule as CHECK constraints). */
-  private[graft] def overwriteLines(s: SparkSession, table: Path,
-                                    base: Option[Snapshot], dataDir: Path,
-                                    files: Seq[String]): Seq[String] =
-    ingestLines(s, table, base, dataDir, files) ++
-      base.toSeq.flatMap(restatedDeclarations(_, keepStatsCol = true))
-
-  /** The table-wide declarations a full-manifest rewrite of `base`
-    * restates: STATSCOL (when kept), PARTCOL and every PARTSPEC
-    * generation (all generations carry, so numbering and history
-    * survive any number of rewrites). */
-  private def restatedDeclarations(base: Snapshot,
-                                   keepStatsCol: Boolean): Seq[String] =
-    (if (keepStatsCol) base.statsCol.map(StatsCol(_).line).toSeq else Nil) ++
-      base.declaredPartitionCols.map(PartCol(_).line) ++
-      base.partitionSpecs.map { case (g, cs) => PartSpec(g, cs).line }
 
   /** Each commit ATTEMPT writes under its own unique slug: a crashed
     * or raced attempt's files can never collide with the winner's —
@@ -314,19 +249,17 @@ object VersionedTable {
                       df: DataFrame, statsCol: String,
                       carried: Seq[String] = Nil,
                       rowCounts: Boolean = false): Seq[String] = {
-    refuseBranched(table, "commitWithStats")
     val dataDir = newDataDir(table, version)
-    writeData(df, dataDir)
-    val stats = fileColStats(s, table, dataDir, statsCol)
     // ROWS lines ride the same single stats pass — metadata-only
-    // count(*) costs nothing extra at commit time. `carried` lines (an
-    // append commit) keep whatever stats their own commit recorded —
-    // stats ride the manifest line, so a carry is byte-verbatim exactly
-    // as in [[commit]].
-    publish(table, version,
-      carried ++ statsRowsLines(stats, rowCounts) ++
-        carryChecks(s, table, version, dataDir, carried,
-          "commitWithStats") :+ StatsCol(statsCol).line)
+    // count(*) costs nothing extra at commit time. `carried` lines keep
+    // whatever stats their own commit recorded (a byte-verbatim carry).
+    lazy val stats = {
+      writeData(df, dataDir)
+      fileColStats(s, table, dataDir, statsCol)
+    }
+    produce(s, table, "commitWithStats", At(version))(_ =>
+      stagedIn(table, dataDir, Full(carried ++ statsRowsLines(stats, rowCounts),
+        tail = Seq(StatsCol(statsCol).line))))
     stats.map(_._1)
   }
 
@@ -685,6 +618,13 @@ object VersionedTable {
   def latestSnapshot(table: Path): Option[Snapshot] =
     latestVersion(table).map(snapshot(table, _))
 
+  /** The latest snapshot, reusing `held` while it still is the latest
+    * (one listing, no manifest read) and reading only the manifests it
+    * lacks otherwise. */
+  private[graft] def latestFrom(held: Snapshot): Snapshot =
+    latestVersion(held.table).fold(throw new IllegalArgumentException(
+      s"no committed version at ${held.table}"))(held.at)
+
   /** The per-commit KIND annotation of `version`, if its writer
     * declared one ("update" / "compact"). One raw manifest read. */
   def commitKind(table: Path, version: Long): Option[String] =
@@ -740,7 +680,7 @@ object VersionedTable {
     writeData(derived, dataDir, specs.map(_.derivedName))
   }
 
-  /** PARTITION-SPEC EVOLUTION (r17) — change the table's write layout
+  /** PARTITION-SPEC EVOLUTION — change the table's write layout
     * in ONE O(1) metadata commit, rewriting nothing (Iceberg's
     * partition-spec evolution): publishes a delta manifest whose only
     * payload is the next `PARTSPEC` generation. From this version on,
@@ -764,8 +704,7 @@ object VersionedTable {
   def evolvePartitionLayout(s: SparkSession, table: Path,
                             newCols: Seq[String],
                             checkpointEvery: Int = 8): Long = {
-    refuseBranched(table, "evolvePartitionLayout")
-    // TRANSFORM specs (r18): each entry is an identity column, a time
+    // TRANSFORM specs: each entry is an identity column, a time
     // grain (`years/months/days/hours(col)`) or `bucket(n, col)` —
     // parse refuses unknown shapes loudly (a `truncate(4, s)` must
     // never be stored as a column name).
@@ -817,12 +756,12 @@ object VersionedTable {
             s"'${t.derivedName}' collides with an existing column")
     }
     val gen = snap.partitionSpecs.lastOption.map(_._1).getOrElse(0L) + 1
-    publish(table, base + 1, deltaLines(Some(snap),
-      Seq(PartSpec(gen, specs.map(_.spec)).line), checkpointEvery))
-    base + 1
+    produce(s, table, "evolvePartitionLayout", At(base + 1),
+      checkpointEvery = checkpointEvery, held = Some(snap))(_ =>
+      Staged(Delta(Seq(PartSpec(gen, specs.map(_.spec)).line)))).version
   }
 
-  /** MATERIALIZED VIEW bootstrap (r17): commit `agg(base snapshot)` as
+  /** MATERIALIZED VIEW bootstrap: commit `agg(base snapshot)` as
     * the MV table's v0, carrying the refresh cursor (`MVOF` = the base
     * version the aggregate reflects). The MV is an ordinary graft
     * table — time-travelable, taggable, SQL-readable through the
@@ -843,7 +782,7 @@ object VersionedTable {
     if (snap.partitionLayout.isEmpty) readSnapshot(s, snap)
     else readMultiPartitionedFiles(s, snap, snap.partitionLayout, snap.files)
 
-  /** INCREMENTAL MV REFRESH (r17) — the maintenance loop that makes a
+  /** INCREMENTAL MV REFRESH — the maintenance loop that makes a
     * 100-TB dashboard aggregate affordable: instead of recomputing
     * `agg(base)` per refresh (O(base) — the thing that kills naive
     * MVs at scale), read ONLY the rows the base appended since the
@@ -861,13 +800,13 @@ object VersionedTable {
     * MVs like flat ones. Publishes the merged MV as a rewrite commit
     * carrying the advanced cursor.
     *
-    * DV DELETES (r18): for SUM-mergeable aggregates a deletion is
+    * DV DELETES: for SUM-mergeable aggregates a deletion is
     * SUBTRACTABLE — the rows a DV kills are exactly the key-matching
     * rows alive in the snapshot the DV scopes (read through the
     * connector, which applies every EARLIER DV, so sequential deletes
     * never double-subtract), and `negateDelta` aggregates them with
     * negated partials, folded in by the same `merge`. Callers that
-    * pass `negateDelta = None` (the default) keep the r17 refusal.
+    * pass `negateDelta = None` (the default) keep the append-only refusal.
     * `dropDeadGroups` runs once after all folds IFF a negative was
     * applied — the SQL face uses the MV's count(*) column to remove
     * groups whose last row died (a group a recompute would not
@@ -900,7 +839,7 @@ object VersionedTable {
     // cursor version, the first survivor's addedLines diff against a
     // vanished ancestor would return its ENTIRE manifest and every
     // already-folded row would aggregate AGAIN — the silent
-    // double-count this function exists to refuse (ADVICE r17).
+    // double-count this function exists to refuse.
     require(history.contains(cursor),
       s"refreshMaterialized: the MV cursor (base version $cursor) was " +
         s"expired from $base — the delta since the cursor is no longer " +
@@ -955,10 +894,11 @@ object VersionedTable {
       // Only content-preserving commits since the cursor (compactions):
       // the rows are already right — advance the cursor as a pure-meta
       // delta, no MV row rewritten.
-      publish(mv, mvV + 1, deltaLines(Some(mvSnap), Seq(MvOf(bv).line), 8))
+      produce(s, mv, "refreshMaterialized", At(mvV + 1), held = Some(mvSnap))(
+        _ => Staged(Delta(Seq(MvOf(bv).line))))
       return (mvV + 1, 0, baseTotal)
     }
-    // PARTITIONED bases (r17): the delta files re-attach their
+    // PARTITIONED bases: the delta files re-attach their
     // path-borne partition columns per commit dir — the same
     // mixed-layout read compaction uses — so a day-partitioned fact
     // table refreshes its MVs exactly like a flat one.
@@ -972,7 +912,7 @@ object VersionedTable {
     val folded = negatives.foldLeft(
       positive.fold(readSnapshot(s, mvSnap))(d =>
         merge(readSnapshot(s, mvSnap), aggDelta(d))))(merge)
-    // `repair` (r20): the caller's post-merge fix-up pass — the
+    // `repair`: the caller's post-merge fix-up pass — the
     // extremum-ledger hook (groups whose deleted rows TIED a standing
     // min/max recompute from the base; everything else rides the
     // incremental fold). Identity when no deletes ran.
@@ -991,7 +931,7 @@ object VersionedTable {
     (mvV + 1, deltaFiles.size, baseTotal)
   }
 
-  /** `ANALYZE TABLE`-shape column statistics (r17): ONE aggregate pass
+  /** `ANALYZE TABLE`-shape column statistics: ONE aggregate pass
     * over the snapshot computing `approx_count_distinct` (HLL — the
     * only affordable distinct count at 100 TB) and the null count for
     * each named column, published as NDV manifest lines in an O(1)
@@ -1004,7 +944,6 @@ object VersionedTable {
                     checkpointEvery: Int = 8): Long = {
     import org.apache.spark.sql.functions.{approx_count_distinct, col,
       count, lit, when}
-    refuseBranched(table, "analyzeCommit")
     require(cols.nonEmpty && cols.distinct == cols,
       s"analyzeCommit: invalid column list $cols")
     val base = latest(table, "analyzeCommit")
@@ -1012,16 +951,16 @@ object VersionedTable {
     cols.foreach(c => require(snap.columns.contains(c),
       s"analyzeCommit: column '$c' does not exist at version ${base.version} " +
         s"of $table (${snap.columns.mkString(", ")})"))
-    val row = snap.agg(
-      count(lit(1)).as("__n"),
-      cols.flatMap(c => Seq(
-        approx_count_distinct(col(c)).as(s"d_$c"),
-        count(when(col(c).isNull, lit(1))).as(s"z_$c"))): _*).head()
-    val lines = cols.map(c =>
-      Ndv(c, row.getAs[Long](s"d_$c"), row.getAs[Long](s"z_$c")).line)
-    publish(table, base.version + 1,
-      deltaLines(Some(base), lines, checkpointEvery))
-    base.version + 1
+    produce(s, table, "analyzeCommit", At(base.version + 1),
+      checkpointEvery = checkpointEvery, held = Some(base)) { _ =>
+      val row = snap.agg(
+        count(lit(1)).as("__n"),
+        cols.flatMap(c => Seq(
+          approx_count_distinct(col(c)).as(s"d_$c"),
+          count(when(col(c).isNull, lit(1))).as(s"z_$c"))): _*).head()
+      Staged(Delta(cols.map(c =>
+        Ndv(c, row.getAs[Long](s"d_$c"), row.getAs[Long](s"z_$c")).line)))
+    }.version
   }
 
   /** Run an MV's stored SQL over `input` (served as `__BASE__`). */
@@ -1038,7 +977,7 @@ object VersionedTable {
     * rows with the delta aggregate and fold every non-group column by
     * its declared operator — SUM by default (the sum/count/avg-partial
     * surface), MIN/MAX for the append-only extremum columns the
-    * declaration recorded as MVFOLD lines (r19). Column order pinned
+    * declaration recorded as MVFOLD lines. Column order pinned
     * to the MV's. */
   private def mvMerge(groupCols: Seq[String], old: DataFrame,
                       delta: DataFrame,
@@ -1046,7 +985,7 @@ object VersionedTable {
                       avgFolds: Seq[(String, String, String)] = Nil)
       : DataFrame = {
     import org.apache.spark.sql.functions.{col, when}
-    // Served avg ratios (r20) do NOT fold — drop them from both sides,
+    // Served avg ratios do NOT fold — drop them from both sides,
     // fold their sum/count partials by the ordinary SUM merge, then
     // recompute each ratio over the MERGED partials.
     val served = avgFolds.map(_._1).toSet
@@ -1064,7 +1003,7 @@ object VersionedTable {
     }.select(old.columns.map(col).toIndexedSeq: _*)
   }
 
-  /** SQL-defined MATERIALIZED VIEW bootstrap (r17) — the CALL-surface
+  /** SQL-defined MATERIALIZED VIEW bootstrap — the CALL-surface
     * face of [[createMaterialized]]: validates the statement (must
     * reference `__BASE__`, group columns must be output columns, every
     * other output column must be BIGINT or DOUBLE — the mergeable-sum
@@ -1085,7 +1024,7 @@ object VersionedTable {
     groupCols.foreach(c => require(out0.columns.contains(c),
       s"createMaterializedSql: group column '$c' is not an output " +
         s"column of the statement (${out0.columns.mkString(", ")})"))
-    // AVG REWRITE (r19): avg(x) is mechanically derivable — the
+    // AVG REWRITE: avg(x) is mechanically derivable — the
     // DECLARATION rewrites each bare `avg(expr) AS name` into
     // maintained `sum(expr)/count(expr)` partial columns (which fold
     // by the ordinary SUM merge across appends AND DV-delete
@@ -1130,7 +1069,7 @@ object VersionedTable {
     // The type proxy above is necessary but not SUFFICIENT: avg(x),
     // min/max, count(DISTINCT …) and HAVING all type-check as
     // BIGINT/DOUBLE yet do NOT fold by SUM — a refresh would silently
-    // serve wrong aggregates after the first delta (ADVICE r17). The
+    // serve wrong aggregates after the first delta. The
     // ANALYZED plan is the ground truth: exactly one Aggregate, every
     // aggregate function sum/count, no DISTINCT, no FILTER clause, no
     // Filter ABOVE the aggregate (HAVING re-evaluates a predicate on
@@ -1163,7 +1102,7 @@ object VersionedTable {
         // A bare passthrough column is legal ONLY as a DECLARED group
         // column: `SELECT g, id, sum(v) … GROUP BY g, id` with
         // groupCols=[g] would type-check and then SUM `id` across
-        // deltas in the fold (self-review r18).
+        // deltas in the fold.
         case a: org.apache.spark.sql.catalyst.expressions.Attribute
             if groupCols.contains(a.name) => ()
         case a: org.apache.spark.sql.catalyst.expressions.Attribute =>
@@ -1174,7 +1113,7 @@ object VersionedTable {
               "it; declare it as a group column")
         case al: org.apache.spark.sql.catalyst.expressions.Alias
             if groupCols.contains(al.name) => ()
-        // The avg rewrite's OWN served-ratio composite (r20): it does
+        // The avg rewrite's OWN served-ratio composite: it does
         // not fold by SUM — the merge drops it and recomputes it from
         // the merged partials, so the shape is safe BY CONSTRUCTION
         // (the MVAVG line is the witness). User composites still
@@ -1205,7 +1144,7 @@ object VersionedTable {
             "to the statement's WHERE clause")
         ae.aggregateFunction match {
           case _: Sum | _: Count => ()
-          // min/max (r19): incrementally maintainable for APPEND-ONLY
+          // min/max: incrementally maintainable for APPEND-ONLY
           // deltas (new_min = min(old_min, delta_min)) — admitted and
           // recorded as MVFOLD lines below; the DV-delete refresh
           // refuses while they live (an extremum is not subtractable).
@@ -1244,7 +1183,7 @@ object VersionedTable {
     * ratio in place — `CASE WHEN count(expr) > 0 THEN CAST(sum(expr)
     * AS DOUBLE) / count(expr) END AS name` — with the maintained
     * `sum(expr) AS name__asum, count(expr) AS name__acnt` partials
-    * appended at the END of the select list (r20: the ratio is
+    * appended at the END of the select list (the ratio is
     * PHYSICALLY stored so every SQL surface serves the declared shape;
     * the partials are what the refresh folds, and the connector hides
     * them). An avg the ANALYZER saw but this parse cannot locate
@@ -1346,7 +1285,7 @@ object VersionedTable {
     val raw = readSnapshot(s, snap)
     if (folds.isEmpty) return raw
     if (folds.forall(f => raw.columns.contains(f._1))) {
-      // r20 MV: the served ratio is physically stored (create/refresh
+      // The served ratio is physically stored (create/refresh
       // recompute it from the merged partials) — just hide the
       // maintenance partials, like the connector schema does.
       val partials = folds.flatMap(f => Seq(f._2, f._3)).toSet
@@ -1443,7 +1382,7 @@ object VersionedTable {
       // DV-delete subtraction: aggregate the killed rows with the
       // stored statement, then NEGATE every sum-foldable column — the
       // ordinary merge folds it in (sum-mergeability is exactly what
-      // createMaterializedSql validated). EXTREMUM columns (r20) are
+      // createMaterializedSql validated). EXTREMUM columns are
       // not subtractable, so their negation emits NULL (which the
       // min/max merge folds away); whether a deletion actually REMOVED
       // an extremum is decided by the repair pass below, per group.
@@ -1454,7 +1393,7 @@ object VersionedTable {
             "emptied groups — re-create the MV (or declare it with " +
             "count(*))")
         val agg = runMvSql(s, sql, killed)
-        // persist (r21, ADVICE r20): this frame is evaluated once
+        // persist: this frame is evaluated once
         // inside the negation fold and AGAIN in the repair's
         // killed-extremum union — without the cache the killed rows'
         // whole lineage (snapshot semi-join included) runs twice per
@@ -1470,7 +1409,7 @@ object VersionedTable {
       },
       dropDeadGroups = df =>
         countStarCol.fold(df)(c => df.where(col(c) > 0)),
-      // EXTREMUM REPAIR (r20, the r19 verdict's last missing verb):
+      // EXTREMUM REPAIR:
       // min/max fold incrementally through a DV delete UNLESS the
       // deleted rows' per-group extremum TIES the merged one — the
       // pre-repair merged extremum folds over every row ever appended
@@ -1552,59 +1491,40 @@ object VersionedTable {
       try df.unpersist() catch { case scala.util.control.NonFatal(_) => () })
   }
 
-  /** The CHECK constraints live at a version, in declaration order.
-    * Computed by a RAW-chain walk (base's constraints ++ this delta's
-    * CHECK tail) rather than full manifest resolution: CHECK lines are
-    * only ever added (RM names data files, never constraints) and every
-    * full-manifest writer carries them, so the walk gives the same
-    * answer as resolving — without splicing the O(live files) list.
-    * This keeps the per-commit [[carryChecks]] probe O(chain) metadata
-    * reads (ADVICE r14: the old resolution-based probe made every raw
-    * commit pay a full manifest resolution just to learn there was no
-    * constraint). */
-  def checkConstraints(table: Path, version: Long): Seq[String] = {
-    val raw = rawManifest(table, version).map(parse)
-    val own = raw.collect { case Check(e) => e }
-    (raw.headOption match {
-      case Some(Base(b)) => checkConstraints(table, b) ++ own
-      case _ => own
-    }).distinct
-  }
+  /** The CHECK constraints live at a version, in declaration order —
+    * see [[Snapshot.checks]]. */
+  def checkConstraints(table: Path, version: Long): Seq[String] =
+    snapshot(table, version).checks
 
   /** Declare a CHECK constraint as a METADATA-ONLY commit — after
     * validating the CURRENT snapshot against it (the Delta ADD
     * CONSTRAINT contract: a constraint the existing data violates must
     * be refused, which costs one scan — the one place this surface
     * pays O(table), exactly as production formats do). From this
-    * version on, every row-adding commit validates its new files.
-    * Unlike per-file metadata (BLOOM/STATS/ROWS), a CHECK is a TABLE
-    * contract: every full-manifest writer — [[compactCommit]],
-    * [[transact]], raw [[commit]] and the stats/partitioned/indexed
-    * variants, the V2 overwrite path — carries live CHECK lines
-    * forward and validates its new files against them (r14; dropping
-    * a declared safety gate silently was the r13 amnesia ADVICE.md
-    * flagged). Only a publish() of hand-built lines can still shed
-    * one, and that is the raw-primitive escape hatch, not a path. */
+    * version on, every commit that adds rows validates them, and every
+    * full manifest restates the constraint ([[produce]]); only a raw
+    * [[publish]] of hand-built lines can shed one. */
   def constraintCommit(s: SparkSession, table: Path, version: Long,
                        expr: String, checkpointEvery: Int = 8): Seq[String] = {
     require(!expr.exists(c => c == '\t' || c == '\n' || c == '\r'),
       "constraintCommit: the expression must not contain tab/newline " +
         "(manifest lines are TAB-structured)")
-    refuseBranched(table, "constraintCommit")
     val base = latest(table, "constraintCommit")
-    // Footer-provable snapshot: proving over the manifest's data files
-    // is a SUPERSET of the live rows (DV-killed rows included), so a
-    // footer pass that proves every file proves the snapshot; any
-    // unprovable shape (incl. pre-rename footer names on old files)
-    // falls back to the scan, which stays the refusing authority.
-    if (!footerProvesChecks(table, base.files, Seq(expr)))
-      violations(readSnapshot(s, base), Seq(expr)).foreach {
-        case (e, n) => require(n == 0L,
-          s"constraintCommit: $n existing row(s) violate CHECK ($e) — " +
-            "a constraint the current snapshot breaks must not be declared")
-      }
-    publish(table, version, deltaLines(priorSnapshot(table, version),
-      Seq(Check(expr).line), checkpointEvery))
+    produce(s, table, "constraintCommit", At(version),
+      checkpointEvery = checkpointEvery, held = Some(base)) { _ =>
+      // Footer-provable snapshot: proving over the manifest's data files
+      // is a SUPERSET of the live rows (DV-killed rows included), so a
+      // footer pass that proves every file proves the snapshot; any
+      // unprovable shape (incl. pre-rename footer names on old files)
+      // falls back to the scan, which stays the refusing authority.
+      if (!footerProvesChecks(table, base.files, Seq(expr)))
+        violations(readSnapshot(s, base), Seq(expr)).foreach {
+          case (e, n) => require(n == 0L,
+            s"constraintCommit: $n existing row(s) violate CHECK ($e) — " +
+              "a constraint the current snapshot breaks must not be declared")
+        }
+      Staged(Delta(Seq(Check(expr).line)))
+    }.lines
   }
 
   /** Violation counts per CHECK expression over `data`, in ONE
@@ -1620,75 +1540,6 @@ object VersionedTable {
       cs.zipWithIndex.map { case (e, i) => (e, row.getLong(i)) }
     }
 
-  /** Validate staged RELATIVE files against the CHECK constraints of
-    * `asOf` — the V2 write paths' hook (executors stage, the driver
-    * commits; a violating batch fails BEFORE the publish link and the
-    * abort path discards the orphans). No-op when no constraint is
-    * declared or the batch is empty. */
-  private[graft] def enforceConstraintsOnFiles(
-      s: SparkSession, table: Path, files: Seq[String],
-      asOf: Option[Long], what: String): Unit = {
-    val cs = asOf.map(checkConstraints(table, _)).getOrElse(Nil)
-    if (cs.isEmpty || files.isEmpty) return
-    // Footer-provable batch (r21): the clean-commit fast path — the
-    // scan below stays the deciding (and refusing) authority whenever
-    // the footers cannot prove every row passes.
-    if (footerProvesChecks(table, files, cs)) return
-    violations(
-      s.read.parquet(files.map(f => table.resolve(f).toString): _*), cs)
-      .foreach { case (e, n) => require(n == 0L,
-        s"$what: $n row(s) in this commit violate CHECK ($e) — " +
-          "refused before the commit point (no partial state published)")
-      }
-  }
-
-  /** The full-manifest CHECK carry for writers that stage RELATIVE
-    * files (the V2 overwrite path): validate `files` against the
-    * latest committed version's constraints, then return the CHECK
-    * lines the new manifest must restate. Nil when the table is empty
-    * or unconstrained. r15 — INSERT OVERWRITE was the one remaining
-    * full-manifest writer that silently dropped a declared contract
-    * (the r14 amnesia fix missed it, flagged by ADVICE). */
-  private[graft] def carryChecksOnFiles(s: SparkSession, table: Path,
-      files: Seq[String], what: String): Seq[String] = {
-    val prior = latestVersion(table)
-    val cs = prior.map(checkConstraints(table, _)).getOrElse(Nil)
-    if (cs.isEmpty) Nil
-    else {
-      enforceConstraintsOnFiles(s, table, files, prior, what)
-      cs.map(Check(_).line)
-    }
-  }
-
-  /** Enforce the CHECK constraints of version `asOf` against the
-    * freshly-written files under `dataDir` — called by every
-    * row-adding commit path between the data write and the publish
-    * link, so a violating batch leaves only invisible orphans, never
-    * a committed violation. Reads the files back (one pass over the
-    * new files, like the stats pass) rather than recomputing the
-    * caller's frame. No-op when no constraint is declared or the dir
-    * holds no files (empty batch). */
-  private def enforceConstraints(s: SparkSession, table: Path,
-                                 dataDir: Path, asOf: Option[Long],
-                                 what: String): Unit = {
-    val cs = asOf.map(checkConstraints(table, _)).getOrElse(Nil)
-    if (cs.isEmpty) return
-    val walk = Files.walk(dataDir)
-    val any = try walk.iterator().asScala.exists(p =>
-      Files.isRegularFile(p) &&
-        p.getFileName.toString.endsWith(".parquet"))
-    finally walk.close()
-    if (!any) return
-    // Footer-provable batch (r21): see [[footerProvesChecks]] — scan
-    // only when the footers cannot prove every row passes.
-    if (footerProvesChecks(table, partFiles(table, dataDir), cs)) return
-    violations(s.read.parquet(dataDir.toString), cs).foreach {
-      case (e, n) => require(n == 0L,
-        s"$what: $n row(s) in this commit violate CHECK ($e) — " +
-          "refused before the commit point (no partial state published)")
-    }
-  }
-
   /** `(path, min, max)` of a version's data files — see
     * [[Snapshot.statsManifest]]. */
   def statsManifest(table: Path, version: Long): Seq[(String, Long, Long)] =
@@ -1700,8 +1551,8 @@ object VersionedTable {
     * serves pre-add files whose footers lack the column; the mapping
     * may since have been RETIRED by a compaction (head footers carry
     * the column), so gating the typed-NULL fallback on the mappings
-    * still live at head would crash a history replay on getFieldIndex
-    * (ADVICE r16). The union over history is the correct gate: a name
+    * still live at head would crash a history replay on
+    * getFieldIndex. The union over history is the correct gate: a name
     * in it was introduced by the add-column contract at SOME version,
     * so a footer missing it is legitimate; any other missing field
     * stays a loud failure. (Checkpoint manifests restating live ADDCOL
@@ -1717,7 +1568,6 @@ object VersionedTable {
     * time travel below `version` still sees the old name. */
   def renameCommit(table: Path, version: Long, from: String, to: String,
                    checkpointEvery: Int = 8): Seq[String] = {
-    refuseBranched(table, "renameCommit")
     val base = priorSnapshot(table, version)
     require(base.forall(_.deletionVectors.isEmpty),
       s"renameCommit: live deletion vectors at $table — compact " +
@@ -1735,24 +1585,23 @@ object VersionedTable {
       s"renameCommit: '$from' feeds the live partition spec " +
         s"(${liveSpecTransforms.map(_.spec).mkString(", ")}) — evolve " +
         "the layout away from it first")
-    publish(table, version, deltaLines(base,
-      Seq(Mapping("rename", from, to).line), checkpointEvery))
+    schemaCommit(table, version, "renameCommit", base,
+      Mapping("rename", from, to), checkpointEvery)
   }
 
   /** Metadata-only type-WIDENING commit (e.g. int → bigint): readers
     * cast files written under the narrow type at plan time. */
   def widenCommit(table: Path, version: Long, col: String, sqlType: String,
                   checkpointEvery: Int = 8): Seq[String] = {
-    refuseBranched(table, "widenCommit")
     val base = priorSnapshot(table, version)
     require(base.forall(_.deletionVectors.isEmpty),
       s"widenCommit: live deletion vectors at $table — compact " +
         "(folding the DVs) first; mappings and DVs cannot coexist")
-    publish(table, version, deltaLines(base,
-      Seq(Mapping("widen", col, sqlType).line), checkpointEvery))
+    schemaCommit(table, version, "widenCommit", base,
+      Mapping("widen", col, sqlType), checkpointEvery)
   }
 
-  /** Metadata-only ADD COLUMN commit (r16) — the most common schema
+  /** Metadata-only ADD COLUMN commit — the most common schema
     * evolution, at the same O(1) cost as rename/widen: one manifest
     * line, zero data files touched. The column is NULLABLE by
     * construction (every pre-existing row reads as a typed NULL — a
@@ -1767,7 +1616,6 @@ object VersionedTable {
   def addColumnCommit(s: SparkSession, table: Path, version: Long,
                       name: String, sqlType: String,
                       checkpointEvery: Int = 8): Seq[String] = {
-    refuseBranched(table, "addColumnCommit")
     require(name.nonEmpty && !name.contains('\t') && !name.contains('\n'),
       s"addColumnCommit: invalid column name '$name'")
     val dt = org.apache.spark.sql.types.DataType.fromDDL(sqlType)
@@ -1789,7 +1637,7 @@ object VersionedTable {
         s"${existing.mkString("[", ", ", "]")}")
     // Path-borne partition columns are not in the payload schema the
     // check above reads — a duplicate add would shadow them. Hidden
-    // transform segments reserve their names too (r18).
+    // transform segments reserve their names too.
     require(!base.partitionLayout.exists(_.equalsIgnoreCase(name)) &&
         !base.hiddenSegmentNames.exists(_.equalsIgnoreCase(name)),
       s"addColumnCommit: '$name' is a partition-layout column or " +
@@ -1806,11 +1654,11 @@ object VersionedTable {
         .exists(m => m._1 == "dropcol" && m._2.equalsIgnoreCase(name)),
       s"addColumnCommit: '$name' was dropped by a live DROPCOL " +
         "mapping — compact first so the old files' bytes are gone")
-    publish(table, version, deltaLines(Some(base),
-      Seq(Mapping("addcol", name, sqlType).line), checkpointEvery))
+    schemaCommit(table, version, "addColumnCommit", Some(base),
+      Mapping("addcol", name, sqlType), checkpointEvery)
   }
 
-  /** Metadata-only DROP COLUMN commit (r16) — one manifest line, zero
+  /** Metadata-only DROP COLUMN commit — one manifest line, zero
     * data files touched: readers stop serving the column immediately,
     * the bytes stay in the files until the next compaction physically
     * drops them, time travel below `version` still sees it. Refused
@@ -1824,7 +1672,6 @@ object VersionedTable {
   def dropColumnCommit(s: SparkSession, table: Path, version: Long,
                        name: String,
                        checkpointEvery: Int = 8): Seq[String] = {
-    refuseBranched(table, "dropColumnCommit")
     val base = snapshot(table, version - 1)
     require(base.columnMappings.forall(m =>
         m._1 == "addcol" || m._1 == "dropcol"),
@@ -1853,7 +1700,7 @@ object VersionedTable {
     // A transform in the LIVE WRITE SPEC derives its segments from a
     // payload column — dropping the raw column would brick every
     // future INSERT. Retired generations don't block (evolve-away is
-    // the documented remedy and must actually work), r18.
+    // the documented remedy and must actually work).
     require(!base.writePartitionLayout.map(PartTransform.parse)
         .exists(t => !t.isIdentity && t.rawCol == name),
       s"dropColumnCommit: '$name' feeds the live partition spec " +
@@ -1864,7 +1711,7 @@ object VersionedTable {
     // compared case-INSENSITIVELY (Spark's resolution is — a
     // constraint written `CHECK (V >= 0)` over column `v` binds, and a
     // guard that missed it would let the drop brick every subsequent
-    // write on an unresolvable-column error; ADVICE r16). Parsing also
+    // write on an unresolvable-column error). Parsing also
     // stops the false refusal when the name appears only inside a
     // string literal. An unparseable constraint (none of ours are)
     // falls back to the conservative case-insensitive word regex.
@@ -1886,9 +1733,17 @@ object VersionedTable {
         s"dropColumnCommit: '$name' is referenced by CHECK ($expr) — " +
           "drop or rewrite the constraint first")
     }
-    publish(table, version, deltaLines(Some(base),
-      Seq(Mapping("dropcol", name, "").line), checkpointEvery))
+    schemaCommit(table, version, "dropColumnCommit", Some(base),
+      Mapping("dropcol", name, ""), checkpointEvery)
   }
+
+  /** A schema verb's one-line delta on `base`: no data file is staged,
+    * so no session is needed. */
+  private def schemaCommit(table: Path, version: Long, what: String,
+      base: Option[Snapshot], m: Mapping, checkpointEvery: Int): Seq[String] =
+    produce(SparkSession.active, table, what, At(version),
+      checkpointEvery = checkpointEvery, held = base)(_ =>
+      Staged(Delta(Seq(m.line)))).lines
 
   /** The deletion vectors live at a version — see
     * [[Snapshot.deletionVectors]] and [[deleteCommit]]. */
@@ -2091,18 +1946,24 @@ object VersionedTable {
     * lines. */
   def deleteCommit(s: SparkSession, table: Path, version: Long,
                    keys: DataFrame, keyCol: String,
-                   checkpointEvery: Int = 8): Seq[String] = {
-    // Version-pinned but chain-BASED on the global latest (deltaLines
-    // below) — the same interleave hazard as every version-unaware
-    // writer once branch refs exist (r14, ADVICE parity with
-    // mergeCommit/appendCommit).
-    refuseBranched(table, "deleteCommit")
+                   checkpointEvery: Int = 8): Seq[String] =
+    deleteOn(s, table, version, priorSnapshot(table, version), keys, keyCol,
+      checkpointEvery)
+
+  /** [[deleteCommit]] on the latest snapshot the caller already holds
+    * (the SQL DELETE's): one version past it. */
+  private[graft] def deleteCommit(s: SparkSession, base: Snapshot,
+      keys: DataFrame, keyCol: String): Seq[String] =
+    deleteOn(s, base.table, base.version + 1, Some(base), keys, keyCol, 8)
+
+  private def deleteOn(s: SparkSession, table: Path, version: Long,
+      base: Option[Snapshot], keys: DataFrame, keyCol: String,
+      checkpointEvery: Int): Seq[String] = {
     // A DV and live schema mappings MUST NOT coexist (readLive and the
     // connector both refuse the combination) — and critically, the
     // resolution path would be bricked: compaction reads through
     // readLive, which refuses too. Refuse at COMMIT time, where the
     // user still has a working table and a working remedy.
-    val base = priorSnapshot(table, version)
     require(base.forall(_.columnMappings.isEmpty),
       s"deleteCommit: schema-evolution mappings live at $table — " +
         "compact first (a DV over a mapped version would make every " +
@@ -2121,11 +1982,13 @@ object VersionedTable {
         "a rewrite commit instead")
     val dvDir = table.resolve("dv").resolve(
       f"v$version%06d-" + java.util.UUID.randomUUID().toString.take(8))
-    writeData(keys.select(keyCol), dvDir)
-    val dvLines = partFiles(table, dvDir).map(Dv(_, keyCol, version).line)
     // A delete is additive metadata (data lines are never removed, a
     // DV line is added), so it publishes as a delta like an append.
-    publish(table, version, deltaLines(base, dvLines, checkpointEvery))
+    produce(s, table, "deleteCommit", At(version),
+      checkpointEvery = checkpointEvery, held = base) { _ =>
+      writeData(keys.select(keyCol), dvDir)
+      Staged(Delta(partFiles(table, dvDir).map(Dv(_, keyCol, version).line)))
+    }.lines
   }
 
   /** MERGE (upsert) as ONE atomic merge-on-read commit — the row-level
@@ -2147,7 +2010,6 @@ object VersionedTable {
     * a plain delete. Returns the merge's published version. */
   def mergeCommit(s: SparkSession, table: Path, updates: DataFrame,
                   keyCol: String, checkpointEvery: Int = 8): Long = {
-    refuseBranched(table, "mergeCommit")
     val snap = latest(table, "mergeCommit")
     val base = snap.version
     require(snap.columnMappings.isEmpty,
@@ -2157,40 +2019,68 @@ object VersionedTable {
     val version = base + 1
     val dvDir = table.resolve("dv").resolve(
       f"v$version%06d-merge-" + java.util.UUID.randomUUID().toString.take(8))
-    writeData(updates.select(keyCol).distinct(), dvDir)
-    val dvLines = partFiles(table, dvDir).map(Dv(_, keyCol, base).line)
     val dataDir = newDataDir(table, version)
-    writeData(updates, dataDir)
-    // The upsert's new rows honor CHECK constraints (deletes cannot
-    // introduce a violation).
-    enforceConstraints(s, table, dataDir, Some(base), "mergeCommit")
-    // Index continuity (r15): the upsert's new files join the base's
-    // skipping indexes (stats/ROWS/BLOOM/secondary) instead of
-    // carrying unprunable plain lines until the next compaction.
-    val dataLines = indexedLines(s, table, dataDir, snap)
-    publish(table, version,
-      deltaLines(Some(snap), dvLines ++ dataLines, checkpointEvery))
-    version
+    // The upsert's new rows are validated against the CHECK contract
+    // (the DV cannot introduce a violation) and join the base's
+    // skipping indexes instead of carrying unprunable plain lines until
+    // the next compaction.
+    produce(s, table, "mergeCommit", At(version),
+      checkpointEvery = checkpointEvery, held = Some(snap)) { _ =>
+      writeData(updates.select(keyCol).distinct(), dvDir)
+      writeData(updates, dataDir)
+      stagedIn(table, dataDir, Delta(
+        partFiles(table, dvDir).map(Dv(_, keyCol, base).line) ++
+          indexedLines(s, table, dataDir, Some(snap))))
+    }.version
   }
 
   /** Append at a PINNED version — the streaming-sink shape (version =
     * micro-batch id, so a replayed batch's publish hits the version
     * conflict and exactly-once falls out of the commit point). Same
-    * delta/checkpoint metadata cost as [[appendCommit]], without the
-    * retry loop: the caller owns conflict semantics. */
+    * delta/checkpoint metadata cost as [[appendCommit]], on the latest
+    * version (sink numbering is sparse: empty micro-batches publish
+    * nothing), without the retry loop: the caller owns conflict
+    * semantics. */
   def commitAppend(s: SparkSession, table: Path, version: Long,
                    df: DataFrame, checkpointEvery: Int = 8): Seq[String] = {
-    // The version is pinned but the delta BASES on the global latest —
-    // the same interleave hazard as any version-unaware writer.
-    refuseBranched(table, "commitAppend")
     val dataDir = newDataDir(table, version)
-    writeData(df, dataDir)
-    // The streaming-sink path honors CHECK constraints too: a poisoned
-    // micro-batch fails its epoch before the commit point.
-    enforceConstraints(s, table, dataDir, latestVersion(table),
-      "commitAppend")
-    publishDelta(table, version, partFiles(table, dataDir), checkpointEvery)
+    produce(s, table, "commitAppend", At(version, beyondLatest = true),
+      checkpointEvery = checkpointEvery) { _ =>
+      writeData(df, dataDir)
+      stagedIn(table, dataDir, Delta(partFiles(table, dataDir)))
+    }.lines
   }
+
+  /** The V2 batch write's commit point: executors staged `files` under
+    * `dataDir`, and the driver publishes them on the latest version,
+    * rebasing on a lost race (one more manifest write, never a data
+    * rewrite). An append is a delta whose lines join the base's
+    * skipping indexes; an overwrite is a full manifest restating the
+    * declarations and the CHECK contract. `held` is the snapshot the
+    * write was planned on. Only the message-named `files` are
+    * committed: an orphan a zombie task attempt left in `dataDir` stays
+    * invisible. */
+  private[graft] def commitStaged(s: SparkSession, table: Path, what: String,
+      held: Option[Snapshot], dataDir: Path, files: Seq[String],
+      overwrite: Boolean): Long =
+    produce(s, table, what, Next, Rebase(10), held = held) { base =>
+      require(overwrite || base.isDefined,
+        s"$what: batch append needs a committed version at $table to " +
+          "append to — bootstrap the table via VersionedTable.commit first")
+      val lines = indexedLines(s, table, dataDir, base, files.toSet)
+      Staged(if (overwrite) Full(lines, Seq(Declarations(true), Checks))
+        else Delta(lines), files)
+    }.version
+
+  /** The streaming sink's commit of one epoch's staged `files` at
+    * `version`: a plain delta on the latest version (see
+    * [[commitAppend]]), reusing `held` — the snapshot the sink was
+    * planned on — while it is still the latest. */
+  private[graft] def commitEpoch(s: SparkSession, held: Snapshot,
+      version: Long, files: Seq[String]): Unit =
+    produce(s, held.table, "graft-table sink",
+      At(version, beyondLatest = true), held = Some(held))(_ =>
+      Staged(Delta(files), files))
 
   /** Range read with FILE-LEVEL skipping: plans over only the files
     * whose [min, max] overlaps [lo, hi], then re-applies the predicate
@@ -2239,7 +2129,7 @@ object VersionedTable {
     commitPartitionedMulti(s, table, version, df, Seq(partCol), carried,
       statsCol, rowCounts)
 
-  /** [[commitPartitioned]] with SEVERAL partition columns (r16) — the
+  /** [[commitPartitioned]] with SEVERAL partition columns — the
     * day-one real layout ((date, region), (lang, shard)): values nest
     * as `c1=v1/c2=v2/…` path segments in declaration order, every
     * reader parses all segments ([[readPartitions]] prunes on any of
@@ -2250,26 +2140,26 @@ object VersionedTable {
                              carried: Seq[String] = Nil,
                              statsCol: Option[String] = None,
                              rowCounts: Boolean = false): Seq[String] = {
-    refuseBranched(table, "commitPartitioned")
     require(partCols.nonEmpty && partCols.distinct == partCols,
       s"commitPartitioned: invalid partition columns $partCols")
     val dataDir = newDataDir(table, version)
-    writeData(df, dataDir, partCols)
-    val files = statsCol match {
-      // Partition value in the path AND per-file min/max on the line:
-      // the two orthogonal skipping mechanisms compose on one manifest
-      // entry ([[readPartitionRange]] consumes both).
-      case Some(c) =>
-        statsRowsLines(fileColStats(s, table, dataDir, c), rowCounts) :+
-          StatsCol(c).line
-      case None =>
-        // Row counts without a stats column: one footer-free count
-        // pass grouped on file (the same shape as the stats pass).
-        partFiles(table, dataDir) ++
-          (if (rowCounts) fileRowsLines(s, table, dataDir) else Nil)
-    }
-    publish(table, version, carried ++ files ++
-      carryChecks(s, table, version, dataDir, carried, "commitPartitioned"))
+    produce(s, table, "commitPartitioned", At(version)) { _ =>
+      writeData(df, dataDir, partCols)
+      val files = statsCol match {
+        // Partition value in the path AND per-file min/max on the line:
+        // the two orthogonal skipping mechanisms compose on one manifest
+        // entry ([[readPartitionRange]] consumes both).
+        case Some(c) =>
+          statsRowsLines(fileColStats(s, table, dataDir, c), rowCounts) :+
+            StatsCol(c).line
+        case None =>
+          // Row counts without a stats column: one footer-free count
+          // pass grouped on file (the same shape as the stats pass).
+          partFiles(table, dataDir) ++
+            (if (rowCounts) fileRowsLines(s, table, dataDir) else Nil)
+      }
+      stagedIn(table, dataDir, Full(carried ++ files))
+    }.lines
   }
 
   /** [[fileRowsLines]] with zero-row synthesis (`ROWS <f> 0` for
@@ -2284,7 +2174,7 @@ object VersionedTable {
 
   /** Per-file `ROWS` manifest lines for every parquet file under
     * `dataDir` — row counts come straight from the footers the write
-    * just produced (r21): a count pass over freshly-written files
+    * just produced: a count pass over freshly-written files
     * re-reads the commit's own data, O(new data) where O(new files)
     * suffices. Zero-row files contribute no line (matching the old
     * aggregation pass, whose groupBy never saw them —
@@ -2353,7 +2243,7 @@ object VersionedTable {
         math.min(16, Runtime.getRuntime.availableProcessors()),
         r => { val t = new Thread(r, "graft-footer"); t.setDaemon(true); t }))
 
-  /** FOOTER-derived [[fileColStats]] (r21, guide §6): real table
+  /** FOOTER-derived [[fileColStats]]: real table
     * formats aggregate parquet footer statistics into the manifest at
     * write time instead of re-scanning the rows they just wrote — the
     * commit-time stats pass was the one place this protocol re-read
@@ -2436,7 +2326,7 @@ object VersionedTable {
 
   /** Attempt to PROVE the declared CHECK constraints hold for every
     * row of the staged `files` from parquet FOOTER statistics alone
-    * (r21, guide §6) — the [[footerColStats]] write-time-stats
+    * — the [[footerColStats]] write-time-stats
     * discipline applied to constraint enforcement, so the common clean
     * commit pays O(new files) metadata reads instead of a second full
     * scan of its own data. Strictly SOUND, never complete: `true` only
@@ -2590,7 +2480,7 @@ object VersionedTable {
   /** Per-file `(path, min, max, rowCount)` for every parquet file under
     * `dataDir`. Served from the parquet FOOTERS the write just produced
     * whenever the column's physical shape makes the footer value the
-    * zonemap unit (r21, [[footerColStats]]) — O(new files) metadata
+    * zonemap unit ([[footerColStats]]) — O(new files) metadata
     * reads instead of a distributed re-scan of the commit's own data;
     * otherwise the original aggregation pass ([[aggColStats]]) runs,
     * keeping manifests byte-identical for exotic column shapes. */
@@ -2607,7 +2497,7 @@ object VersionedTable {
                                  statsCol: String): Seq[(String, Long, Long, Long)] = {
     import org.apache.spark.sql.functions.{col, count, expr, input_file_name, lit, max, min}
     val df = s.read.parquet(dataDir.toString)
-    // Zonemap units per column type (r19): TIMESTAMP flavors store
+    // Zonemap units per column type: TIMESTAMP flavors store
     // epoch MICROS (a plain CAST(ts AS LONG) would store SECONDS —
     // a floor'd max wrongly prunes sub-second probes), DATE stores
     // epoch DAYS, numerics store their long value. The scan's admits
@@ -2617,7 +2507,7 @@ object VersionedTable {
       case Some(org.apache.spark.sql.types.TimestampType) =>
         expr(s"unix_micros(`$statsCol`)")
       case Some(org.apache.spark.sql.types.TimestampNTZType) =>
-        // TZ-independent (r20) — see PartTransform.ntzMicrosSql: the
+        // TZ-independent — see PartTransform.ntzMicrosSql: the
         // session-zone CAST route would skew zonemaps written from a
         // non-UTC session against the scan's as-if-UTC probes.
         expr(graft.operators.PartTransform.ntzMicrosSql(statsCol))
@@ -2666,15 +2556,16 @@ object VersionedTable {
   def commitMultiStats(s: SparkSession, table: Path, version: Long,
                        df: DataFrame, cols: Seq[String],
                        carried: Seq[String] = Nil): Seq[String] = {
-    refuseBranched(table, "commitMultiStats")
     require(cols.nonEmpty, "commitMultiStats: at least one stats column")
     val dataDir = newDataDir(table, version)
-    writeData(df, dataDir)
-    val primary = fileStatsLines(s, table, dataDir, cols.head)
-    val secondary = cols.tail.flatMap(secondaryLines(s, table, dataDir, _))
-    val lines = (primary ++ secondary) :+ StatsCol(cols.head).line
-    publish(table, version, carried ++ lines ++
-      carryChecks(s, table, version, dataDir, carried, "commitMultiStats"))
+    lazy val lines = {
+      writeData(df, dataDir)
+      fileStatsLines(s, table, dataDir, cols.head) ++
+        cols.tail.flatMap(secondaryLines(s, table, dataDir, _)) :+
+        StatsCol(cols.head).line
+    }
+    produce(s, table, "commitMultiStats", At(version))(_ =>
+      stagedIn(table, dataDir, Full(carried ++ lines)))
     lines
   }
 
@@ -2751,13 +2642,14 @@ object VersionedTable {
   def commitIndexed(s: SparkSession, table: Path, version: Long,
                     df: DataFrame, statsCol: String, bloomCol: String,
                     carried: Seq[String] = Nil): Seq[String] = {
-    refuseBranched(table, "commitIndexed")
     val dataDir = newDataDir(table, version)
-    writeData(df, dataDir)
-    val lines = fileStatsLines(s, table, dataDir, statsCol) ++
-      fileBloomLines(s, table, dataDir, bloomCol) :+ StatsCol(statsCol).line
-    publish(table, version, carried ++ lines ++
-      carryChecks(s, table, version, dataDir, carried, "commitIndexed"))
+    lazy val lines = {
+      writeData(df, dataDir)
+      fileStatsLines(s, table, dataDir, statsCol) ++
+        fileBloomLines(s, table, dataDir, bloomCol) :+ StatsCol(statsCol).line
+    }
+    produce(s, table, "commitIndexed", At(version))(_ =>
+      stagedIn(table, dataDir, Full(carried ++ lines)))
     lines
   }
 
@@ -2916,7 +2808,7 @@ object VersionedTable {
     * invisible), never a manifest pointing at deleted data. Returns
     * (filesDeleted, versionsExpired).
     *
-    * `orphanGraceMs` (r20, the Iceberg remove-orphan-files guard): a
+    * `orphanGraceMs` (the Iceberg remove-orphan-files guard): a
     * file referenced by SOME manifest — even an expired one — was
     * PUBLISHED, so deleting it once no retained version lists it is
     * always safe. A file referenced by NO manifest at all may instead
@@ -2996,15 +2888,15 @@ object VersionedTable {
   /** Blind APPEND with optimistic concurrency — the cheap half of a
     * multi-writer protocol. Data files are written exactly ONCE (an
     * append's content does not depend on the snapshot it lands on);
-    * only the manifest publish retries: each attempt re-resolves the
-    * latest version and carries ITS file list plus the already-written
-    * new files, so losing a race costs one tiny metadata round,
-    * never a data rewrite. This is why real table formats classify
-    * appends as auto-rebaseable: they commute with any concurrent
-    * commit, so conflict resolution is mechanical re-carry.
+    * only the manifest publish retries, so losing a race costs one tiny
+    * metadata round, never a data rewrite. This is why real table
+    * formats classify appends as auto-rebaseable: they commute with any
+    * concurrent commit, so conflict resolution is mechanical re-carry.
+    * The appended files join the base's skipping indexes (stats, ROWS,
+    * BLOOM and secondary lines matching the base's shape).
     *
     * `beforeAttempt(targetVersion)` fires after the attempt's target
-    * version is resolved and before its publish — the race-injection
+    * version is chosen and before its publish — the race-injection
     * seam (a test/witness commits the target version inside it,
     * forcing the real FileAlreadyExistsException conflict path;
     * production passes the default no-op). Same design stance as
@@ -3014,78 +2906,213 @@ object VersionedTable {
                    maxAttempts: Int = 10,
                    beforeAttempt: Long => Unit = _ => (),
                    checkpointEvery: Int = 8): Committed = {
-    refuseBranched(table, "appendCommit")
     val dataDir = table.resolve("data").resolve(
       "append-" + java.util.UUID.randomUUID().toString.take(8))
-    writeData(df, dataDir)
-    // CHECK constraints gate the batch BEFORE any publish attempt — a
-    // violating batch leaves only invisible orphans. Validated against
-    // the latest snapshot's declarations at call time (a concurrently
-    // ADDED constraint races like any metadata; the winner's declare
-    // already validated the whole table, which includes nothing of
-    // ours until our publish succeeds).
-    val base0 = latestSnapshot(table)
-    enforceConstraints(s, table, dataDir, base0.map(_.version),
-      "appendCommit")
-    // Index continuity: the appended files join the base's skipping
-    // indexes instead of degrading them — stats/ROWS/BLOOM/secondary
-    // lines matching the base's shape (plain lines on an unindexed
-    // table, as before).
-    val mine = base0 match {
-      case Some(b) => indexedLines(s, table, dataDir, b)
-      case None => partFiles(table, dataDir)
-    }
+    lazy val written = writeData(df, dataDir)
+    produce(s, table, "appendCommit", Next, Rebase(maxAttempts),
+      checkpointEvery, beforeAttempt = (_, target) => beforeAttempt(target)) {
+      base =>
+        require(base.isDefined,
+          s"appendCommit: no committed version at $table to append to")
+        written
+        stagedIn(table, dataDir, Delta(indexedLines(s, table, dataDir, base)))
+    }.committed
+  }
+
+  // ===== THE COMMIT PRODUCER =====
+
+  /** Where a commit lands and the version it builds on. */
+  private sealed trait Target
+  /** The latest version + 1, on the latest version. */
+  private case object Next extends Target
+  /** A pinned version, on the closest committed version below it.
+    * `beyondLatest` refuses a version below the latest (a sink's sparse
+    * numbering must never fill a hole under later history); the latest
+    * itself goes on to conflict, so a replayed batch skips. */
+  private final case class At(version: Long, beyondLatest: Boolean = false)
+      extends Target
+  /** The latest version + 1, on a branch's head; the ref then CASes
+    * forward. */
+  private final case class OnBranch(name: String) extends Target
+
+  /** A manifest body before it meets its base. */
+  private sealed trait Body
+  /** `added` lines, minus the data files `removed` and every line
+    * indexing them. */
+  private final case class Delta(added: Seq[String],
+      removed: Seq[String] = Nil) extends Body
+  /** A full manifest: `lines`, then the base's table-wide lines that
+    * `restate` names, in that order, then `tail`. */
+  private final case class Full(lines: Seq[String],
+      restate: Seq[Restate] = Seq(Checks), tail: Seq[String] = Nil)
+      extends Body
+
+  /** The base's table-wide lines a full manifest restates. */
+  private sealed trait Restate
+  /** The CHECK constraints not already among the body's lines. */
+  private case object Checks extends Restate
+  /** STATSCOL (when kept), PARTCOL and every PARTSPEC generation. */
+  private final case class Declarations(keepStatsCol: Boolean)
+      extends Restate
+
+  /** What a lost publish race does. */
+  private sealed trait OnConflict
+  /** Stage again on the winner's snapshot, at most `attempts` times. */
+  private final case class Rebase(attempts: Int) extends OnConflict
+  /** Refuse: the staged files derive from the superseded snapshot. */
+  private case object Refuse extends OnConflict
+  /** Rethrow the FileAlreadyExistsException to the caller that pinned
+    * the version (a streaming replay skips on it). */
+  private case object Rethrow extends OnConflict
+
+  /** One attempt's staging: its body and the new data files the CHECK
+    * contract validates, read from `dir` when the verb wrote one (so a
+    * partitioned write's path-borne columns resolve). */
+  private final case class Staged(body: Body, files: Seq[String] = Nil,
+      dir: Option[Path] = None)
+
+  /** `body`, validating every data file under `dataDir`. */
+  private def stagedIn(table: Path, dataDir: Path, body: Body): Staged =
+    Staged(body, partFiles(table, dataDir), Some(dataDir))
+
+  /** A published commit: its version, the races it lost on the way, and
+    * the lines it published. */
+  private final case class Published(version: Long, conflicts: Int,
+      lines: Seq[String]) {
+    def committed: Committed = Committed(version, conflicts)
+  }
+
+  /** THE COMMIT PRODUCER — the one path from staged files to
+    * `_commits/` (Iceberg's SnapshotProducer, Delta's
+    * OptimisticTransaction). Every attempt:
+    *  1. lists `_commits/` once and picks the base version and the
+    *     target (a branch reads its ref log) — see the table below;
+    *  2. refuses a branched table unless the verb is branch-aware;
+    *  3. resolves the base [[Snapshot]] once — `held`, the snapshot the
+    *     verb already holds, when it is still the base, else only the
+    *     manifests `held` lacks — and runs `stage` on it, which writes
+    *     the verb's data on first use and returns its [[Staged]] body;
+    *  4. validates the staged files against `base.checks`: the footer
+    *     proof first, the scan only when it cannot prove the rows, and
+    *     neither again while the CHECK set and the files are those
+    *     already validated — a constraint a racing winner declared is
+    *     checked before the retry publishes;
+    *  5. renders the body from the base: a delta (`BASE` + `RM` lines +
+    *     the added lines), or the base's surviving lines + the added ones
+    *     once the chain would exceed `checkpointEvery` manifests (a
+    *     CHECKPOINT, bounding every read's chain walk); a full manifest
+    *     restates the table-wide lines that its verb names;
+    *  6. publishes, then CASes a branch ref forward, and on a lost race
+    *     applies the verb's [[OnConflict]].
+    *
+    * {{{
+    *   verb                                base                       body               lost race
+    *   commit, commitWithStats,            closest version below      full + CHECK       rethrow
+    *     commitPartitioned(Multi),           the pinned one
+    *     commitMultiStats, commitIndexed,
+    *     MV create/refresh (via commit)
+    *   deleteCommit, constraintCommit,     closest version below      delta              rethrow
+    *     rename/widen/addColumn/dropColumn   the pinned one
+    *   commitAppend, the streaming sink    latest, below the pinned   delta              rethrow
+    *   mergeCommit, analyzeCommit,         latest (pinned at +1)      delta              rethrow
+    *     evolvePartitionLayout, MV cursor
+    *   updateWhere                         latest (pinned at +1)      RM delta           rethrow
+    *   compactCommit                       latest (pinned at +1)      full + CHECK,      rethrow
+    *                                                                    PARTCOL, PARTSPEC
+    *   clusterCommit                       latest (pinned at +1)      full + CHECK       rethrow
+    *   compactPartitionsCommit             latest (pinned at +1)      RM delta           refuse, re-run
+    *   replaceFilesCommit (SQL UPDATE,     the statement's version    RM delta, or full  refuse, re-run
+    *     MERGE, TRUNCATE)                                               + CHECK + decls
+    *   appendCommit, V2 INSERT             latest                     delta              rebase
+    *   transact, V2 INSERT OVERWRITE       latest                     full + CHECK       rebase
+    *                                                                    (+ decls for V2)
+    *   branchCommit                        the branch head            delta              rebase
+    *   promoteBranch                       the target branch head     RM delta, never    rebase
+    *                                                                    a checkpoint
+    * }}}
+    *
+    * `beforeAttempt(base, target)` fires after step 1: the seam a test
+    * or witness drives a race through. */
+  private def produce(s: => SparkSession, table: Path, what: String,
+      target: Target, conflict: OnConflict = Rethrow,
+      checkpointEvery: Int = 8, held: Option[Snapshot] = None,
+      beforeAttempt: (Option[Long], Long) => Unit = (_, _) => ())(
+      stage: Option[Snapshot] => Staged): Published = {
+    var base = held
+    var validated = Option.empty[(Seq[String], Seq[String])]
     var conflicts = 0
-    while (conflicts < maxAttempts) {
-      val target = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(
-          s"appendCommit: no committed version at $table to append to")) + 1
-      beforeAttempt(target)
+    while (true) {
+      val history = versions(table)
+      val (baseV, version, ref) = target match {
+        case Next => (history.lastOption, history.lastOption.fold(0L)(_ + 1), None)
+        case At(v, beyondLatest) =>
+          require(!beyondLatest || history.forall(_ <= v),
+            s"$what: version $v is not beyond the latest ${history.last}")
+          (history.filter(_ < v).lastOption, v, None)
+        case OnBranch(name) =>
+          val (seq, kind, head) = refEntries(table, name).lastOption.getOrElse(
+            throw new IllegalArgumentException(s"no ref '$name' at $table"))
+          require(kind == "branch", s"ref '$name' is a $kind — tags are immutable")
+          (Some(head), history.last + 1, Some((name, seq)))
+      }
+      if (ref.isEmpty) refuseBranched(table, what)
+      beforeAttempt(baseV, version)
+      base = baseV.map(v => base.fold(snapshot(table, v))(_.at(v)))
+      val staged = stage(base)
+      val checks = base.fold(Seq.empty[String])(_.checks)
+      if (!validated.contains((checks, staged.files))) {
+        if (checks.nonEmpty && staged.files.nonEmpty &&
+            !footerProvesChecks(table, staged.files, checks))
+          violations(staged.dir.fold(s.read.parquet(
+              staged.files.map(f => table.resolve(f).toString): _*))(d =>
+              s.read.parquet(d.toString)), checks).foreach { case (e, n) =>
+            require(n == 0L, s"$what: $n row(s) in this commit violate " +
+              s"CHECK ($e) — refused before the commit point (no partial " +
+              "state published)")
+          }
+        validated = Some((checks, staged.files))
+      }
+      val lines = staged.body match {
+        case Delta(added, removed) => base match {
+          case None => added
+          case Some(b) if b.chainLength + 1 > checkpointEvery =>
+            val dead = removed.toSet
+            b.linesWhere(e => fileOf(e).forall(!dead(_))) ++ added
+          case Some(b) => Base(b.version).line +: (removed.map(Rm(_).line) ++ added)
+        }
+        case Full(own, restate, tail) =>
+          own ++ restate.flatMap {
+            case Checks => base.toSeq.flatMap(_.checks).map(Check(_).line)
+              .filterNot(own.contains)
+            case Declarations(keep) => base.toSeq.flatMap { b =>
+              (if (keep) b.statsCol.map(StatsCol(_).line).toSeq else Nil) ++
+                b.declaredPartitionCols.map(PartCol(_).line) ++
+                b.partitionSpecs.map { case (g, cs) => PartSpec(g, cs).line }
+            }
+          } ++ tail
+      }
       try {
-        val base = base0.filter(_.version == target - 1)
-          .getOrElse(snapshot(table, target - 1))
-        publish(table, target, deltaLines(Some(base), mine, checkpointEvery))
-        return Committed(target, conflicts)
+        publish(table, version, lines)
+        ref.foreach { case (name, seq) =>
+          publishRef(table, name, seq + 1, "branch", version) }
+        return Published(version, conflicts, lines)
       } catch {
-        case _: java.nio.file.FileAlreadyExistsException => conflicts += 1
+        // A lost ref CAS leaves the published snapshot orphaned —
+        // unreachable from any ref, reclaimed by expire().
+        case lost: java.nio.file.FileAlreadyExistsException => conflict match {
+          case Rebase(attempts) =>
+            conflicts += 1
+            if (conflicts >= attempts) throw new IllegalStateException(
+              s"$what: lost $attempts straight races at $table")
+          case Refuse => throw new IllegalStateException(
+            s"$what: version $version was committed concurrently — the " +
+              "staged files derive from the superseded snapshot; re-run " +
+              "against the new snapshot")
+          case Rethrow => throw lost
+        }
       }
     }
-    throw new IllegalStateException(
-      s"appendCommit: lost $maxAttempts straight races at $table")
-  }
-
-  /** Publish ALREADY-STAGED files as an O(batch) delta commit at a
-    * pinned version — the V2 write path's commit point (executors
-    * staged the files; this is the driver-side putIfAbsent). Bases on
-    * the LATEST committed version, not version−1: sink version
-    * numbering is sparse (empty micro-batches publish nothing), and a
-    * delta chain needs some committed ancestor, not a dense one. Same
-    * conflict semantics as [[publish]]: the caller owns retries. */
-  def publishDelta(table: Path, version: Long, files: Seq[String],
-                   checkpointEvery: Int = 8): Seq[String] = {
-    val lines = latestVersion(table) match {
-      case None => files
-      case Some(base) =>
-        require(base < version,
-          s"publishDelta: version $version is not beyond latest $base")
-        if (chainLength(table, base) + 1 > checkpointEvery)
-          snapshot(table, base).lines ++ files
-        else Base(base).line +: files
-    }
-    publish(table, version, lines)
-  }
-
-  /** The manifest body for an additive commit of `added` on `base`
-    * (None: the table's first version): a 1+|added|-line DELTA (metadata
-    * cost tracks the commit, not the table), unless the resolution
-    * chain would exceed `checkpointEvery` files — then the full list is
-    * materialized (a CHECKPOINT, bounding every future read's chain
-    * walk). */
-  private def deltaLines(base: Option[Snapshot], added: Seq[String],
-                         checkpointEvery: Int): Seq[String] = base match {
-    case None => added
-    case Some(b) if b.chainLength + 1 > checkpointEvery => b.lines ++ added
-    case Some(b) => Base(b.version).line +: added
+    throw new IllegalStateException("unreachable")
   }
 
   /** The snapshot a commit pinned at `version` builds on: version − 1's,
@@ -3107,12 +3134,10 @@ object VersionedTable {
   /** General optimistic TRANSACTION — the copy-on-write half: `op`
     * reads the snapshot at the latest version and returns the full
     * new table contents (a MERGE/UPDATE shape). On a publish conflict
-    * the transaction REBASES: it re-runs `op` against the winner's
-    * snapshot and tries again — the semantics every optimistic table
-    * format gives UPDATE/MERGE (serializable as long as `op` is a
-    * function of the snapshot). Each attempt writes its own data dir;
-    * a lost attempt's files are orphans, invisible by construction
-    * and reclaimed by [[expire]].
+    * the transaction re-runs `op` against the winner's snapshot —
+    * serializable as long as `op` is a function of the snapshot. Each
+    * attempt writes its own data dir; a lost attempt's files are
+    * orphans, invisible by construction and reclaimed by [[expire]].
     *
     * Fixture-scale note: `op` here returns the WHOLE table (full
     * rewrite per attempt). Production narrows the rewrite to touched
@@ -3122,33 +3147,14 @@ object VersionedTable {
                op: DataFrame => DataFrame,
                maxAttempts: Int = 5,
                beforeAttempt: Long => Unit = _ => ()): Committed = {
-    refuseBranched(table, "transact")
-    var conflicts = 0
-    while (conflicts < maxAttempts) {
-      val base = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(
-          s"transact: no committed version at $table"))
-      val out = op(read(s, table, Some(base)))
-      val dataDir = newDataDir(table, base + 1)
-      writeData(out, dataDir)
-      // A transaction's full rewrite carries the table's CHECK
-      // contract forward AND honors it (r14, was silent amnesia):
-      // `op` must not be the path that smuggles a violation in, and a
-      // declared safety gate must survive the rewrite — the
-      // compactCommit discipline applied to the other full-manifest
-      // writer. Validated per attempt against the attempt's own base.
-      enforceConstraints(s, table, dataDir, Some(base), "transact")
-      val checks = checkConstraints(table, base).map(Check(_).line)
-      beforeAttempt(base + 1)
-      try {
-        publish(table, base + 1, partFiles(table, dataDir) ++ checks)
-        return Committed(base + 1, conflicts)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => conflicts += 1
-      }
-    }
-    throw new IllegalStateException(
-      s"transact: lost $maxAttempts straight races at $table")
+    produce(s, table, "transact", Next, Rebase(maxAttempts),
+      beforeAttempt = (_, target) => beforeAttempt(target)) { base =>
+      val b = base.getOrElse(throw new IllegalArgumentException(
+        s"transact: no committed version at $table"))
+      val dataDir = newDataDir(table, b.version + 1)
+      writeData(op(readSnapshot(s, b)), dataDir)
+      stagedIn(table, dataDir, Full(partFiles(table, dataDir)))
+    }.committed
   }
 
   /** Row-level UPDATE as a STATS-PRUNED copy-on-write commit — the
@@ -3183,7 +3189,6 @@ object VersionedTable {
                   set: Seq[(String, String)],
                   checkpointEvery: Int = 8): (Long, Int, Int) = {
     import org.apache.spark.sql.functions.{col, expr, when}
-    refuseBranched(table, "updateWhere")
     require(set.nonEmpty, "updateWhere: no SET assignments")
     val snap = latest(table, "updateWhere")
     val base = snap.version
@@ -3196,7 +3201,7 @@ object VersionedTable {
     // Hive-partitioned layout: the partition column lives ONLY in the
     // manifest paths — a raw-leaf rewrite would silently drop it from
     // the rewritten rows. Refuse, like the DV/mapping gates above;
-    // compactCommit (partition-aware since r14) is the resolution.
+    // compactCommit (partition-aware) is the resolution.
     require(snap.partitionLayout.isEmpty,
       s"updateWhere at version $base: partition-layout files " +
         "(col=value path segments) — their partition column is not in " +
@@ -3216,38 +3221,29 @@ object VersionedTable {
         .map(f => table.resolve(f).toString): _*)) {
       case (d, (c, e)) => d.withColumn(c, when(hit, expr(e)).otherwise(col(c)))
     }
-    // TRANSFORM layouts (r18): replacement files land UNDER the live
-    // write spec (segments re-derived from the rewritten rows — a SET
-    // on the raw column re-routes correctly), so a copy-on-write
-    // update never degrades hidden-partition pruning. Identity-layout
-    // files are refused above (their column is path-only); a transform
-    // file's payload is complete, so the rewrite is information-safe
-    // either way.
-    val writeCols = snap.writePartitionLayout
-    if (writeCols.nonEmpty) writeUnderSpec(updated, writeCols, dataDir)
-    else writeData(updated, dataDir)
-    // The rewritten rows honor CHECK constraints — an UPDATE must not
-    // be the path that smuggles a violation in.
-    enforceConstraints(s, table, dataDir, Some(base), "updateWhere")
-    val stats = fileColStats(s, table, dataDir, statsCol)
-    // INDEX MAINTENANCE (the replaceFilesCommit discipline): an UPDATE
-    // must not degrade point-lookup or box-read pruning until the next
-    // compaction.
-    val indexLines = reindexLines(s, table, dataDir, snap, touched)
-    // O(commit) metadata (r13): BASE + RM(touched) + the new lines —
-    // at a 10⁶-file table an update touching 3 files writes 7 manifest
-    // lines, not the full list. Resolution drops the RM'd data lines
-    // and their indexing meta lines; every `checkpointEvery`-th commit
-    // still materializes the full list (carried byte-verbatim + new),
-    // bounding the chain exactly as appends do.
-    // KIND=update annotates the commit for the change feed: its RM'd
-    // files replay as update_preimage rows, its new files as
-    // update_postimage — a mirror applies the pair instead of
-    // full-restarting. Stripped at resolution (never carried).
-    val added = statsRowsLines(stats, snap.rowCounts.nonEmpty) ++
-      indexLines :+ Kind("update").line
-    publish(table, version,
-      rewriteLines(snap, touched.toSeq.sorted, added, checkpointEvery))
+    produce(s, table, "updateWhere", At(version),
+      checkpointEvery = checkpointEvery, held = Some(snap)) { _ =>
+      // TRANSFORM layouts: replacement files land UNDER the live write
+      // spec (segments re-derived from the rewritten rows — a SET on the
+      // raw column re-routes correctly), so a copy-on-write update never
+      // degrades hidden-partition pruning. Identity-layout files are
+      // refused above (their column is path-only); a transform file's
+      // payload is complete, so the rewrite is information-safe.
+      val writeCols = snap.writePartitionLayout
+      if (writeCols.nonEmpty) writeUnderSpec(updated, writeCols, dataDir)
+      else writeData(updated, dataDir)
+      // INDEX MAINTENANCE (the replaceFilesCommit discipline): an UPDATE
+      // must not degrade point-lookup or box-read pruning until the next
+      // compaction. KIND=update annotates the commit for the change
+      // feed: its RM'd files replay as update_preimage rows, its new
+      // files as update_postimage — a mirror applies the pair instead of
+      // full-restarting. Stripped at resolution (never carried).
+      stagedIn(table, dataDir, Delta(
+        statsRowsLines(fileColStats(s, table, dataDir, statsCol),
+          snap.rowCounts.nonEmpty) ++
+          reindexLines(s, table, dataDir, snap, touched) :+ Kind("update").line,
+        removed = touched.toSeq.sorted))
+    }
     (version, touched.size, all.size)
   }
 
@@ -3267,22 +3263,7 @@ object VersionedTable {
       secCols.flatMap(secondaryLines(s, table, dataDir, _))
   }
 
-  /** The manifest of a partial rewrite of `base` that removes the
-    * (sorted) data files `removed` and adds `added`: BASE + RM lines +
-    * `added` — O(commit) metadata, the Delta add+remove-actions shape;
-    * resolution drops each RM'd data line and every line indexing it —
-    * or, at the checkpoint cadence, the base's surviving lines carried
-    * byte-verbatim plus `added`. */
-  private def rewriteLines(base: Snapshot, removed: Seq[String],
-                           added: Seq[String],
-                           checkpointEvery: Int): Seq[String] = {
-    val dead = removed.toSet
-    if (base.chainLength + 1 > checkpointEvery)
-      base.linesWhere(e => fileOf(e).forall(!dead(_))) ++ added
-    else Base(base.version).line +: (removed.map(Rm(_).line) ++ added)
-  }
-
-  /** GROUP-REPLACEMENT COMMIT (r15) — the commit point of the SQL
+  /** GROUP-REPLACEMENT COMMIT — the commit point of the SQL
     * row-level DML path ([[graft.sources.GraftTable]] as
     * `SupportsRowLevelOperations`): Spark's group-based rewrite read
     * version `base`, planned `replaced` (the files whose groups the
@@ -3298,29 +3279,32 @@ object VersionedTable {
     * inside the scan, so a full replacement folds them away; a subset
     * replacement leaves the DV lines live for the untouched files
     * they still scope to). Stats and ROWS lines are recomputed for the
-    * staged files when the base manifest declares them; CHECK
-    * constraints validate the staged files and carry into a full
-    * manifest. KIND=update annotates the commit — a SQL UPDATE, MERGE
-    * or rewrite-shaped DELETE all replay through the change feed as
-    * update_preimage/update_postimage pairs.
-    *
-    * Optimistic concurrency, detect-and-refuse: the staged rows are a
-    * function of `base`'s snapshot, so unlike an append a lost race
-    * cannot be replayed by this layer — if the table moved past
-    * `base`, or the publish itself collides, the statement fails with
-    * the re-run instruction (the serializable-conflict answer every
-    * optimistic format gives UPDATE/MERGE). */
+    * staged files when the base manifest declares them. KIND=update
+    * annotates the commit — a SQL UPDATE, MERGE or rewrite-shaped
+    * DELETE all replay through the change feed as
+    * update_preimage/update_postimage pairs. The staged rows are a
+    * function of `base`'s snapshot, so a table that moved past `base`
+    * refuses with the re-run instruction, as a lost race does
+    * ([[produce]]). */
   def replaceFilesCommit(s: SparkSession, table: Path, base: Long,
                          replaced: Seq[String], staged: Seq[String],
                          what: String, checkpointEvery: Int = 8,
-                         truncate: Boolean = false): Long = {
-    refuseBranched(table, what)
+                         truncate: Boolean = false): Long =
+    replaceFilesOn(s, snapshot(table, base), replaced, staged, what,
+      checkpointEvery, truncate)
+
+  /** [[replaceFilesCommit]] on the snapshot the statement read. */
+  private[graft] def replaceFilesOn(s: SparkSession, snap: Snapshot,
+      replaced: Seq[String], staged: Seq[String], what: String,
+      checkpointEvery: Int = 8, truncate: Boolean = false): Long = {
+    val table = snap.table
+    val base = snap.version
     val latest = latestVersion(table)
     require(latest.contains(base),
       s"$what: the statement read version $base but the table is now " +
         s"at ${latest.fold("<empty>")(_.toString)} — concurrent commit; " +
         "re-run the statement against the new snapshot")
-    // ADDCOL/DROPCOL mappings compose with a rewrite (r16): the
+    // ADDCOL/DROPCOL mappings compose with a rewrite: the
     // operation scan already serves the evolved schema (NULLs for
     // missing added columns, dropped columns omitted), so the staged
     // files carry the evolved schema physically; untouched files keep
@@ -3328,7 +3312,6 @@ object VersionedTable {
     // (the from-scratch manifest drops the line — correctly, the new
     // files embody it). RENAME/WIDEN still wait for compaction: they
     // record footer-time names the partial rewrite would half-apply.
-    val snap = snapshot(table, base)
     require(snap.columnMappings.forall(m =>
         m._1 == "addcol" || m._1 == "dropcol"),
       s"$what at version $base: rename/widen schema mappings live — " +
@@ -3360,62 +3343,53 @@ object VersionedTable {
         "needs at least one data file (its schema source); DROP the " +
         "table, or DELETE by key (a deletion-vector commit keeps the " +
         "files), or overwrite with replacement rows")
-    enforceConstraintsOnFiles(s, table, staged, Some(base), what)
     val statsColOpt = snap.statsCol
     val hadRows = snap.rowCounts.nonEmpty
     // Staged files share one staging dir (the V2 writer's namespace) —
     // stats/ROWS recompute in one pass over the new files only.
     val dataDir = staged.headOption
       .map(f => table.resolve(f).getParent).orNull
-    val stagedStats = statsColOpt match {
-      case Some(c) if staged.nonEmpty =>
-        val st = fileColStats(s, table, dataDir, c)
-        // Orphans (a zombie attempt's leftovers in the staging dir)
-        // must never be committed: every aggregated file must be one
-        // the write actually staged.
-        require(st.map(_._1).toSet.subsetOf(staged.toSet),
-          s"$what: staging dir $dataDir holds files the write did not " +
-            s"commit (${st.map(_._1).toSet -- staged.toSet})")
-        // The reverse gap is legitimate: a ZERO-ROW staged file
-        // (TRUNCATE's schema-carrying empty file) contributes no
-        // aggregation row — synthesize the never-skippable full range
-        // and ROWS 0 so stats-bearing tables can truncate too.
-        val aggregated = st.map(_._1).toSet
-        st ++ staged.filterNot(aggregated).sorted
-          .map(f => (f, Long.MinValue, Long.MaxValue, 0L))
-      case _ => Nil
-    }
-    val stagedLines =
-      if (statsColOpt.isDefined && staged.nonEmpty)
-        statsRowsLines(stagedStats, hadRows)
-      else staged ++
-        (if (hadRows && staged.nonEmpty) fileRowsLines(s, table, dataDir)
-         else Nil)
-    // INDEX MAINTENANCE: untouched files' index lines carry as before,
-    // the staged files' are recomputed ([[reindexLines]]).
-    val indexLines =
-      if (staged.isEmpty) Nil
-      else reindexLines(s, table, dataDir, snap, touched)
-    val lines =
-      if (touched == all.toSet)
-        // Full rewrite: a from-scratch snapshot — DVs folded away by
-        // the scan, CHECK, STATSCOL and the declared partition layout
-        // carried (the compactCommit amnesia rule), indexes recomputed
-        // above.
-        stagedLines ++ indexLines ++ snap.checks.map(Check(_).line) ++
-          restatedDeclarations(snap, keepStatsCol = true) :+
-          Kind("update").line
-      else rewriteLines(snap, replaced.sorted,
-        stagedLines ++ indexLines :+ Kind("update").line, checkpointEvery)
-    try publish(table, version, lines)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"$what: version $version was committed concurrently — the " +
-            "staged rows derive from the superseded snapshot; re-run " +
-            "the statement")
-    }
-    version
+    produce(s, table, what, At(version), Refuse, checkpointEvery,
+      Some(snap)) { _ =>
+      val stagedStats = statsColOpt match {
+        case Some(c) if staged.nonEmpty =>
+          val st = fileColStats(s, table, dataDir, c)
+          // Orphans (a zombie attempt's leftovers in the staging dir)
+          // must never be committed: every aggregated file must be one
+          // the write actually staged.
+          require(st.map(_._1).toSet.subsetOf(staged.toSet),
+            s"$what: staging dir $dataDir holds files the write did not " +
+              s"commit (${st.map(_._1).toSet -- staged.toSet})")
+          // The reverse gap is legitimate: a ZERO-ROW staged file
+          // (TRUNCATE's schema-carrying empty file) contributes no
+          // aggregation row — synthesize the never-skippable full range
+          // and ROWS 0 so stats-bearing tables can truncate too.
+          val aggregated = st.map(_._1).toSet
+          st ++ staged.filterNot(aggregated).sorted
+            .map(f => (f, Long.MinValue, Long.MaxValue, 0L))
+        case _ => Nil
+      }
+      val stagedLines =
+        if (statsColOpt.isDefined && staged.nonEmpty)
+          statsRowsLines(stagedStats, hadRows)
+        else staged ++
+          (if (hadRows && staged.nonEmpty) fileRowsLines(s, table, dataDir)
+           else Nil)
+      // INDEX MAINTENANCE: untouched files' index lines carry as before,
+      // the staged files' are recomputed ([[reindexLines]]).
+      val indexLines =
+        if (staged.isEmpty) Nil
+        else reindexLines(s, table, dataDir, snap, touched)
+      val update = Kind("update").line
+      // A full rewrite is a from-scratch snapshot: DVs folded away by
+      // the scan, indexes recomputed above, the contract and the
+      // declarations restated.
+      Staged(if (touched == all.toSet)
+          Full(stagedLines ++ indexLines, Seq(Checks, Declarations(true)),
+            Seq(update))
+        else Delta(stagedLines ++ indexLines :+ update, replaced.sorted),
+        staged)
+    }.version
   }
 
   /** COMPACTION WITHOUT METADATA AMNESIA — the merge-on-read →
@@ -3428,17 +3402,13 @@ object VersionedTable {
     * publishes a FULL manifest that: recomputes per-file stats + ROWS
     * (ROWS iff the base recorded any), re-declares STATSCOL,
     * RECOMPUTES the bloom and secondary-zonemap indexes the base
-    * carried (r15 — pruning must not degrade through maintenance), and
-    * CARRIES the CHECK constraints forward — compaction must not be
-    * the path that silently drops a table's contract (raw
-    * `commit`-as-compaction does, documented on [[constraintCommit]]).
-    * Cost O(live rows), the price of any compaction. Returns the
-    * published version. */
+    * carried (pruning must not degrade through maintenance) and
+    * restates the table-wide lines ([[produce]]). Cost O(live rows),
+    * the price of any compaction. Returns the published version. */
   def compactCommit(s: SparkSession, table: Path,
                     statsCol: Option[String] = None,
                     files: Int = 4): Long = {
     import org.apache.spark.sql.functions.col
-    refuseBranched(table, "compactCommit")
     val snap = latest(table, "compactCommit")
     val base = snap.version
     val version = base + 1
@@ -3495,55 +3465,53 @@ object VersionedTable {
               s"partition segments $fileCols but the table layout is " +
               s"$partCols — ragged layouts refuse")
       }
-      val rows = readMultiPartitionedFiles(s, snap, partCols, snap.files)
-      // A ZERO-ROW snapshot (a truncated/emptied partitioned table)
-      // must not flow through dynamic partitionBy — with no rows it
-      // writes NO files at all, and the published manifest would
-      // list no data lines (an unreadable table). Fall back to the
-      // flat zero-row bootstrap shape: one schema-carrying empty
-      // file, partition columns riding the payload, declared layout
-      // restated below.
-      if (rows.isEmpty) writeData(rows.coalesce(1), dataDir)
-      else if (writeCols.nonEmpty)
-        writeUnderSpec(clustered(rows), writeCols, dataDir)
-      else // evolved back to flat: path columns fold into the payload
-        writeData(clustered(rows), dataDir)
-    } else {
-      val rows = readSnapshot(s, snap,
-        mergeSchema = snap.columnMappings.nonEmpty)
-      // A flat-file table whose spec evolved to a partitioned layout
-      // before any partitioned insert landed: the compaction itself
-      // moves the snapshot under the live spec (empty snapshots keep
-      // the flat schema-carrying shape — dynamic partitionBy of zero
-      // rows would write no files at all).
-      if (writeCols.nonEmpty && !rows.isEmpty)
-        writeUnderSpec(clustered(rows), writeCols, dataDir)
-      else
-        writeData(clustered(rows), dataDir)
     }
-    val lines = compactedLines(s, table, dataDir, statsCol,
-      snap.rowCounts.nonEmpty) ++ statsCol.map(StatsCol(_).line)
-    // INDEX MAINTENANCE: compaction must not be the path that silently
-    // drops the skipping indexes either — recompute BLOOM and
-    // secondary-zonemap lines for every column the base indexed, over
-    // the fresh files (flat layouts only; partitioned bases never
-    // carry these compositions today). The primary stats column's
-    // zonemaps already ride the data lines above.
-    val indexLines =
-      if (partCols.nonEmpty || writeCols.nonEmpty) Nil
-      else snap.bloomColumns.flatMap(fileBloomLines(s, table, dataDir, _)) ++
-        snap.secondaryStats.map(_._2).distinct.filterNot(statsCol.contains)
-          .flatMap(secondaryLines(s, table, dataDir, _))
-    // KIND=compact marks the commit content-preserving (dataChange=
-    // false): the change feed skips it instead of failing downstream
-    // mirrors into a full restart. A DECLARED partition layout is a
-    // table-wide contract like STATSCOL — the full-manifest rewrite
-    // restates it (amnesia rule).
-    publish(table, version, lines ++ indexLines ++
-      snap.checks.map(Check(_).line) ++
-      restatedDeclarations(snap, keepStatsCol = false) :+
-      Kind("compact").line)
-    version
+    produce(s, table, "compactCommit", At(version), held = Some(snap)) { _ =>
+      if (partCols.nonEmpty) {
+        val rows = readMultiPartitionedFiles(s, snap, partCols, snap.files)
+        // A ZERO-ROW snapshot (a truncated/emptied partitioned table)
+        // must not flow through dynamic partitionBy — with no rows it
+        // writes NO files at all, and the published manifest would
+        // list no data lines (an unreadable table). Fall back to the
+        // flat zero-row bootstrap shape: one schema-carrying empty
+        // file, partition columns riding the payload, declared layout
+        // restated.
+        if (rows.isEmpty) writeData(rows.coalesce(1), dataDir)
+        else if (writeCols.nonEmpty)
+          writeUnderSpec(clustered(rows), writeCols, dataDir)
+        else // evolved back to flat: path columns fold into the payload
+          writeData(clustered(rows), dataDir)
+      } else {
+        val rows = readSnapshot(s, snap,
+          mergeSchema = snap.columnMappings.nonEmpty)
+        // A flat-file table whose spec evolved to a partitioned layout
+        // before any partitioned insert landed: the compaction itself
+        // moves the snapshot under the live spec (empty snapshots keep
+        // the flat schema-carrying shape — dynamic partitionBy of zero
+        // rows would write no files at all).
+        if (writeCols.nonEmpty && !rows.isEmpty)
+          writeUnderSpec(clustered(rows), writeCols, dataDir)
+        else
+          writeData(clustered(rows), dataDir)
+      }
+      // INDEX MAINTENANCE: compaction must not be the path that silently
+      // drops the skipping indexes either — recompute BLOOM and
+      // secondary-zonemap lines for every column the base indexed, over
+      // the fresh files (flat layouts only; partitioned bases never
+      // carry these compositions today). The primary stats column's
+      // zonemaps ride the data lines. KIND=compact marks the commit
+      // content-preserving (dataChange=false): the change feed skips it
+      // instead of failing downstream mirrors into a full restart.
+      val indexLines =
+        if (partCols.nonEmpty || writeCols.nonEmpty) Nil
+        else snap.bloomColumns.flatMap(fileBloomLines(s, table, dataDir, _)) ++
+          snap.secondaryStats.map(_._2).distinct.filterNot(statsCol.contains)
+            .flatMap(secondaryLines(s, table, dataDir, _))
+      Staged(Full(compactedLines(s, table, dataDir, statsCol,
+          snap.rowCounts.nonEmpty) ++ statsCol.map(StatsCol(_).line) ++
+          indexLines, Seq(Checks, Declarations(false)),
+        Seq(Kind("compact").line)))
+    }.version
   }
 
   /** Data lines for every file a compaction wrote under `dataDir`,
@@ -3559,7 +3527,7 @@ object VersionedTable {
           (if (hadRows) fileRowsLinesAll(s, table, dataDir) else Nil)
     }
 
-  /** PARTITION-SCOPED COMPACTION (r17) — the maintenance shape a
+  /** PARTITION-SCOPED COMPACTION — the maintenance shape a
     * 100-TB table actually runs: nobody compacts three years of
     * history to fix yesterday's small files. Rewrites ONLY the files
     * whose `partCol=value` path segment matches `values` (the hot
@@ -3578,7 +3546,6 @@ object VersionedTable {
       partCol: String, values: Seq[String], files: Int = 4,
       checkpointEvery: Int = 8): (Long, Int, Int) = {
     import org.apache.spark.sql.functions.col
-    refuseBranched(table, "compactPartitionsCommit")
     require(values.nonEmpty && files > 0,
       s"compactPartitionsCommit: need partition values and files > 0")
     val snap = latest(table, "compactPartitionsCommit")
@@ -3602,34 +3569,29 @@ object VersionedTable {
     if (touched.isEmpty) return (base, 0, all.size)
     val version = base + 1
     val writeCols = snap.writePartitionLayout
-    val rows = readMultiPartitionedFiles(s, snap, layout, touched)
     val dataDir = newDataDir(table, version)
-    if (!rows.isEmpty) {
-      val out = snap.statsCol match {
-        case Some(c) => rows.repartitionByRange(files, col(c))
-        case None => rows.repartition(files)
+    produce(s, table, "compactPartitionsCommit", At(version), Refuse,
+      checkpointEvery, Some(snap)) { _ =>
+      val rows = readMultiPartitionedFiles(s, snap, layout, touched)
+      if (!rows.isEmpty) {
+        val out = snap.statsCol match {
+          case Some(c) => rows.repartitionByRange(files, col(c))
+          case None => rows.repartition(files)
+        }
+        if (writeCols.nonEmpty)
+          writeUnderSpec(out, writeCols, dataDir)
+        else writeData(out, dataDir)
       }
-      if (writeCols.nonEmpty)
-        writeUnderSpec(out, writeCols, dataDir)
-      else writeData(out, dataDir)
-    }
-    val staged =
-      if (rows.isEmpty) Nil
-      else compactedLines(s, table, dataDir, snap.statsCol,
-        snap.rowCounts.nonEmpty)
-    // A scope that holds only zero-row files compacts away entirely —
-    // legal as long as the table keeps a data line (its schema source).
-    require(staged.nonEmpty || touched.size < all.size,
-      s"compactPartitionsCommit: the scope covers every file of $table " +
-        "and holds no rows — TRUNCATE is the legitimate verb")
-    try publish(table, version, rewriteLines(snap, touched.sorted,
-      staged :+ Kind("compact").line, checkpointEvery))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"compactPartitionsCommit: version $version was committed " +
-            "concurrently — the staged rewrite derives from the " +
-            "superseded snapshot; re-run against the new snapshot")
+      val staged =
+        if (rows.isEmpty) Nil
+        else compactedLines(s, table, dataDir, snap.statsCol,
+          snap.rowCounts.nonEmpty)
+      // A scope that holds only zero-row files compacts away entirely —
+      // legal as long as the table keeps a data line (its schema source).
+      require(staged.nonEmpty || touched.size < all.size,
+        s"compactPartitionsCommit: the scope covers every file of $table " +
+          "and holds no rows — TRUNCATE is the legitimate verb")
+      Staged(Delta(staged :+ Kind("compact").line, touched.sorted))
     }
     (version, touched.size, all.size)
   }
@@ -3663,7 +3625,7 @@ object VersionedTable {
         spread(norm(col(c2), r.getLong(2), r.getLong(3)).cast("long")), 1))
   }
 
-  /** Z-ORDER CLUSTERING AS A MAINTENANCE COMMIT (r17) — the verb that
+  /** Z-ORDER CLUSTERING AS A MAINTENANCE COMMIT — the verb that
     * lets a production table SCHEDULE layout maintenance through the
     * protocol (reachable as `CALL <cat>.cluster(...)`): rewrites the
     * latest snapshot in Morton order over two BIGINT columns (or
@@ -3671,8 +3633,8 @@ object VersionedTable {
     * publishes ONE full manifest with fresh zonemaps on EVERY
     * clustered column (primary on `cols.head` data lines, the rest as
     * secondary STATS lines), ROWS iff the base recorded them,
-    * recomputed BLOOM + other secondary indexes the base carried, the
-    * CHECK constraints, and KIND=compact — so change feeds skip it and
+    * recomputed BLOOM + other secondary indexes the base carried, and
+    * KIND=compact — so change feeds skip it and
     * box predicates prune on every dimension from the moment it
     * commits (the pipe_zorder_skip machinery, now schedulable).
     * Deletion vectors and live schema mappings fold away exactly as
@@ -3683,7 +3645,6 @@ object VersionedTable {
   def clusterCommit(s: SparkSession, table: Path, cols: Seq[String],
                     files: Int = 16): Long = {
     import org.apache.spark.sql.functions.col
-    refuseBranched(table, "clusterCommit")
     require(cols.nonEmpty && cols.size <= 2,
       s"clusterCommit: 1 (range) or 2 (Morton) cluster columns, got $cols")
     require(files > 0, s"clusterCommit: files=$files must be positive")
@@ -3701,7 +3662,7 @@ object VersionedTable {
       s"clusterCommit: column '$c' must exist with type BIGINT (the " +
         "zonemap domain)"))
     val dataDir = newDataDir(table, version)
-    val clustered = cols match {
+    lazy val clustered = cols match {
       case Seq(c) =>
         snap.repartitionByRange(files, col(c)).sortWithinPartitions(col(c))
       case Seq(c1, c2) =>
@@ -3711,19 +3672,19 @@ object VersionedTable {
           .sortWithinPartitions(col("__z"))
           .drop("__z")
     }
-    writeData(clustered, dataDir)
-    val lines = compactedLines(s, table, dataDir, Some(cols.head),
-      base.rowCounts.nonEmpty) :+ StatsCol(cols.head).line
-    // Secondary zonemaps: the OTHER clustered dimension(s), plus any
-    // secondary column the base already indexed (maintenance must not
-    // be the path that drops an index — the compactCommit amnesia rule).
-    val secondary = (cols.tail ++ base.secondaryStats.map(_._2)).distinct
-      .filterNot(_ == cols.head).flatMap(secondaryLines(s, table, dataDir, _))
-    val bloomLines =
-      base.bloomColumns.flatMap(fileBloomLines(s, table, dataDir, _))
-    publish(table, version, lines ++ secondary ++ bloomLines ++
-      base.checks.map(Check(_).line) :+ Kind("compact").line)
-    version
+    produce(s, table, "clusterCommit", At(version), held = Some(base)) { _ =>
+      writeData(clustered, dataDir)
+      // Secondary zonemaps: the OTHER clustered dimension(s), plus any
+      // secondary column the base already indexed (maintenance must not
+      // be the path that drops an index — the compactCommit amnesia rule).
+      Staged(Full(compactedLines(s, table, dataDir, Some(cols.head),
+          base.rowCounts.nonEmpty) ++ Seq(StatsCol(cols.head).line) ++
+          (cols.tail ++ base.secondaryStats.map(_._2)).distinct
+            .filterNot(_ == cols.head)
+            .flatMap(secondaryLines(s, table, dataDir, _)) ++
+          base.bloomColumns.flatMap(fileBloomLines(s, table, dataDir, _)),
+        tail = Seq(Kind("compact").line)))
+    }.version
   }
 
   /** PROMOTE a branch into another branch — the merge that turns a
@@ -3736,7 +3697,7 @@ object VersionedTable {
     *
     * Append-only branches FAST-FORWARD (BASE + added lines). A branch
     * that REWROTE files since the fork (updateWhere-shaped history,
-    * hand-published rewrites) REBASES (r15): its net removals replay
+    * hand-published rewrites) REBASES: its net removals replay
     * as RM lines against `into`'s head, its net additions append —
     * provided every removed line is still VERBATIM in `into`'s head
     * manifest. If `into` touched any of the same files (the removed
@@ -3751,12 +3712,10 @@ object VersionedTable {
     * change must be explicit, not a merge side effect.
     *
     * `from` itself is untouched (read it after the promote and it
-    * still serves its own head). Conflict semantics as
-    * [[branchCommit]]: lost snapshot-id or ref races retry on tiny
-    * metadata. `beforeAttempt(intoHead)` is the race seam
-    * ([[appendCommit]]'s pattern): it runs after each attempt reads
-    * the target head, so a test can advance `into` underneath the
-    * promote deterministically. */
+    * still serves its own head). `beforeAttempt(intoHead)` is the race
+    * seam ([[appendCommit]]'s pattern): it runs after each attempt
+    * reads the target head, so a test can advance `into` underneath
+    * the promote deterministically. */
   def promoteBranch(s: SparkSession, table: Path, from: String,
                     into: String, maxAttempts: Int = 10,
                     beforeAttempt: Long => Unit = _ => ()): Committed = {
@@ -3801,42 +3760,19 @@ object VersionedTable {
           "unrebasable as a file-level RM; compact first")
     }
     val added = headLines.filterNot(forkSet)
-    val addedFiles = dataFiles(added)
-    var conflicts = 0
-    // The TARGET branch's constraints gate the promote: `into` may
-    // have declared a stricter CHECK after the fork, and a
-    // fast-forward must not be the path that smuggles violating rows
-    // past it. Validated INSIDE the retry loop against the FRESH head
-    // (r15 — the old single pre-loop validation raced: a CHECK
-    // declared on `into` between a lost ref CAS and the retry was
-    // silently bypassed, since the retry republished onto the new
-    // head unvalidated). Keyed on the head's constraint SET, so the
-    // common retry cause — a concurrent append, constraints unchanged
-    // — re-pays only the O(chain) metadata probe, never the
-    // O(added rows) scan.
-    var validated: Option[Seq[String]] = None
-    while (conflicts < maxAttempts) {
-      val entries = refEntries(table, into)
-      val (headSeq, _, intoHead) = entries.last
-      beforeAttempt(intoHead)
-      val checks = checkConstraints(table, intoHead)
-      if (!validated.contains(checks)) {
-        if (checks.nonEmpty && addedFiles.nonEmpty)
-          violations(s.read.parquet(
-            addedFiles.map(f => table.resolve(f).toString): _*), checks)
-            .foreach { case (e, n) => require(n == 0L,
-              s"promoteBranch($from -> $into): $n row(s) violate CHECK " +
-                s"($e) on the target branch — refused before the commit " +
-                "point (no partial state published)")
-            }
-        validated = Some(checks)
-      }
+    // The TARGET branch's constraints gate the promote on every attempt
+    // (`into` may have declared a stricter CHECK after the fork, or
+    // between a lost race and the retry); the rebase is a delta that
+    // never checkpoints.
+    produce(s, table, s"promoteBranch($from -> $into)", OnBranch(into),
+      Rebase(maxAttempts), Int.MaxValue,
+      beforeAttempt = (head, _) => beforeAttempt(head.get)) { base =>
       // Overlapping-RM conflict check, per attempt against the FRESH
       // head: every line the branch removed must still sit VERBATIM in
       // `into`'s manifest — if `into` touched the same file (line gone
       // or re-statted), the rebase would silently discard its change.
       if (removed.nonEmpty) {
-        val intoSet = snapshot(table, intoHead).lines.toSet
+        val intoSet = base.get.lines.toSet
         val conflicting = removed.filterNot(intoSet)
         require(conflicting.isEmpty,
           s"promoteBranch($from -> $into): both branches touched " +
@@ -3845,32 +3781,10 @@ object VersionedTable {
             "conflict; rebase the branch's logic on the new base or " +
             "resolve manually")
       }
-      val target = latestVersion(table).get + 1
-      val lines = Base(intoHead).line +: (
-        if (removed.isEmpty) added
-        else removedPaths.sorted.map(Rm(_).line) ++ added :+
-          Kind("update").line)
-      try {
-        publish(table, target, lines)
-        try {
-          publishRef(table, into, headSeq + 1, "branch", target)
-          return Committed(target, conflicts)
-        } catch {
-          // Lost the ref CAS: the head MOVED, so the just-published
-          // snapshot's BASE is stale — it stays ORPHANED in the log
-          // (manifest-only: its data lines are the from-branch's
-          // files, still referenced there, so expire() reclaims just
-          // the one manifest) and the retry republishes on the fresh
-          // head.
-          case _: java.nio.file.FileAlreadyExistsException => conflicts += 1
-        }
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => conflicts += 1
-      }
-    }
-    throw new IllegalStateException(
-      s"promoteBranch: lost $maxAttempts straight races promoting " +
-        s"'$from' into '$into'")
+      Staged(Delta(
+        if (removed.isEmpty) added else added :+ Kind("update").line,
+        removedPaths.sorted), dataFiles(added))
+    }.committed
   }
 
   /** Committed versions with their manifest publish times (epoch
@@ -4006,13 +3920,13 @@ object VersionedTable {
     publishRef(table, name, 0L, "branch", version)
   }
 
-  /** Version-unaware writers (appendCommit, transact, mergeCommit,
-    * updateWhere, compactCommit) base on the GLOBAL latest snapshot —
-    * which, once branch refs exist, may be whichever line of history
-    * last interleaved a commit. Basing trunk work on another branch's
-    * head would silently merge histories, so those writers REFUSE
-    * branched tables (the change feed's stance): write through
-    * [[branchCommit]] against an explicit ref instead. */
+  /** Every writer but [[branchCommit]] and [[promoteBranch]] bases on
+    * the GLOBAL log — which, once branch refs exist, may be whichever
+    * line of history last interleaved a commit. Basing trunk work on
+    * another branch's head would silently merge histories, so
+    * [[produce]] refuses those writers on branched tables (the change
+    * feed's stance): write through [[branchCommit]] against an
+    * explicit ref instead. */
   private def refuseBranched(table: Path, what: String): Unit =
     require(refs(table).forall(_._2 != "branch"),
       s"$what: $table has branch refs — lines of history interleave in " +
@@ -4047,56 +3961,20 @@ object VersionedTable {
     * head (global next id — branches interleave in one log), then CAS
     * the ref forward. Data files are written exactly once; on a lost
     * race (snapshot id taken, or the ref advanced underneath us) only
-    * tiny metadata retries. Returns the published (version, conflicts
-    * absorbed). */
+    * tiny metadata retries. Constraints are per LINE OF HISTORY: the
+    * rows validate against the branch head's declarations. Returns the
+    * published (version, conflicts absorbed). */
   def branchCommit(s: SparkSession, table: Path, name: String,
                    df: DataFrame, maxAttempts: Int = 10,
                    checkpointEvery: Int = 8): Committed = {
-    val (kind0, _) = refHead(table, name).getOrElse(
-      throw new IllegalArgumentException(s"no ref '$name' at $table"))
-    require(kind0 == "branch", s"ref '$name' is a $kind0 — tags are immutable")
     val dataDir = table.resolve("data").resolve(
       s"branch-$name-" + java.util.UUID.randomUUID().toString.take(8))
-    writeData(df, dataDir)
-    // Constraints are per-LINE-OF-HISTORY: validate against the branch
-    // head's declarations, not the global latest snapshot.
-    enforceConstraints(s, table, dataDir,
-      refHead(table, name).map(_._2), s"branchCommit($name)")
-    val mine = partFiles(table, dataDir)
-    var conflicts = 0
-    while (conflicts < maxAttempts) {
-      val entries = refEntries(table, name)
-      val (headSeq, _, headVersion) = entries.last
-      val target = latestVersion(table).getOrElse(
-        throw new IllegalStateException(
-          s"branchCommit: ref '$name' exists but no version does")) + 1
-      // A branch delta bases on the BRANCH head, not target−1 — the
-      // whole point of interleaving: resolution follows the ref's line
-      // of history. Checkpoint on the branch's own chain depth.
-      val lines =
-        if (chainLength(table, headVersion) + 1 > checkpointEvery)
-          snapshot(table, headVersion).lines ++ mine
-        else Base(headVersion).line +: mine
-      try {
-        publish(table, target, lines)
-        try {
-          publishRef(table, name, headSeq + 1, "branch", target)
-          return Committed(target, conflicts)
-        } catch {
-          // Lost the ref CAS: someone advanced the branch first. Our
-          // published snapshot is orphaned (unreachable from any ref —
-          // expire() reclaims its files); retry from the new head.
-          case _: java.nio.file.FileAlreadyExistsException =>
-            conflicts += 1
-        }
-      } catch {
-        // Snapshot id taken by a concurrent committer — retry with a
-        // fresh id; the ref head may or may not have moved.
-        case _: java.nio.file.FileAlreadyExistsException => conflicts += 1
-      }
-    }
-    throw new IllegalStateException(
-      s"branchCommit: lost $maxAttempts straight races on ref '$name'")
+    lazy val written = writeData(df, dataDir)
+    produce(s, table, s"branchCommit($name)", OnBranch(name),
+      Rebase(maxAttempts), checkpointEvery) { _ =>
+      written
+      stagedIn(table, dataDir, Delta(partFiles(table, dataDir)))
+    }.committed
   }
 
   /** Manifest files read so far by this JVM — each [[rawManifest]]
@@ -4120,13 +3998,9 @@ object VersionedTable {
     snapshot(table, version).lines
 
   /** How many manifest FILES a resolution of `version` reads (1 for a
-    * full manifest) — the checkpoint-cadence decision and its test
-    * witness. Reads only the chain's raw manifests. */
+    * full manifest) — see [[Snapshot.chainLength]]. */
   def chainLength(table: Path, version: Long): Int =
-    rawManifest(table, version).headOption.map(parse) match {
-      case Some(Base(b)) => 1 + chainLength(table, b)
-      case _ => 1
-    }
+    snapshot(table, version).chainLength
 
   /** The manifest lines version `version` REMOVED vs its predecessor —
     * nonempty exactly for REWRITE commits (compaction, transact's

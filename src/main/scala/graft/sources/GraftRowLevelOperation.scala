@@ -121,8 +121,8 @@ private[sources] class GraftRowLevelOperation(snap: VersionedTable.Snapshot,
         private val stagingRel =
           "data/rlo-" + java.util.UUID.randomUUID().toString.take(8)
         override def toBatch: BatchWrite =
-          new GraftReplaceDataWrite(path, stagingRel, info.schema(),
-            version, cmd, GraftRowLevelOperation.this)
+          new GraftReplaceDataWrite(snap, stagingRel, info.schema(), cmd,
+            GraftRowLevelOperation.this)
         override def description(): String =
           s"graft-replace-data $cmd $path@v$version"
       }
@@ -171,10 +171,12 @@ private[sources] class RecordingScan(inner: Scan,
     inner.toBatch.createReaderFactory()
 }
 
-private[sources] class GraftReplaceDataWrite(path: String,
-    stagingRel: String, schema: StructType, version: Long,
+private[sources] class GraftReplaceDataWrite(snap: VersionedTable.Snapshot,
+    stagingRel: String, schema: StructType,
     cmd: RowLevelOperation.Command,
     op: GraftRowLevelOperation) extends BatchWrite {
+
+  private val path = snap.table.toString
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
@@ -187,10 +189,8 @@ private[sources] class GraftReplaceDataWrite(path: String,
       case other => throw new IllegalStateException(
         s"graft-replace-data: unexpected commit message $other")
     }.sorted.toSeq
-    VersionedTable.replaceFilesCommit(
-      org.apache.spark.sql.SparkSession.active,
-      java.nio.file.Paths.get(path), version, op.scannedFiles, staged,
-      s"graft-table SQL $cmd")
+    VersionedTable.replaceFilesOn(org.apache.spark.sql.SparkSession.active,
+      snap, op.scannedFiles, staged, s"graft-table SQL $cmd")
     ()
   }
 

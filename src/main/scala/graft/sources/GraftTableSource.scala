@@ -20,6 +20,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.operators.VersionedTable
+
 /** BATCH TABLE READ over a [[graft.operators.VersionedTable]] — the
   * engine's third DataSource V2 connector, and the one that makes the
   * commit protocol a first-class Spark TABLE:
@@ -69,17 +71,33 @@ class GraftTableSource extends TableProvider with DataSourceRegister {
 
   override def shortName(): String = "graft-table"
 
+  /** The snapshot this load resolved, keyed by the options that pick it.
+    * Spark builds a new provider for every `load`/`save` and calls
+    * `inferSchema`, then `getTable`: both read this one snapshot, so a
+    * commit landing between the two calls cannot pair one version's
+    * schema with another version's files. */
+  private var resolved: Option[((String, String, String), VersionedTable.Snapshot)] =
+    None
+
+  private def snapshot(opts: CaseInsensitiveStringMap): VersionedTable.Snapshot = {
+    val key = (opts.get("path"), opts.get("version"), opts.get("ref"))
+    resolved.collect { case (k, snap) if k == key => snap }.getOrElse {
+      val snap = GraftTableSource.snapshotFor(opts.get("path"),
+        GraftTableSource.requestedVersion(opts))
+      resolved = Some((key, snap))
+      snap
+    }
+  }
+
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GraftTableSource.dataSchema(GraftTableSource.snapshotFor(
-      options.get("path"), GraftTableSource.requestedVersion(options)))
+    GraftTableSource.dataSchema(snapshot(options))
 
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    val snap = GraftTableSource.snapshotFor(opts.get("path"),
-      GraftTableSource.requestedVersion(opts))
+    val snap = snapshot(opts)
     // statsCol falls back to the manifest's own STATSCOL declaration —
     // self-describing, so SQL catalog scans (no options) still prune.
     new GraftTable(snap, schema,
@@ -88,8 +106,6 @@ class GraftTableSource extends TableProvider with DataSourceRegister {
 }
 
 object GraftTableSource {
-  import graft.operators.VersionedTable
-
   /** The version the caller's options pin, if any: `version` (a commit
     * id) or `ref` (a named branch/tag — resolved to its head snapshot),
     * mutually exclusive. Absent both, the latest snapshot serves. */
@@ -564,7 +580,7 @@ private[sources] class GraftTable(snap: graft.operators.VersionedTable.Snapshot,
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new GraftWriteBuilder(path, info)
+    new GraftWriteBuilder(snap, info)
 
   /** SQL DELETE → MERGE-ON-READ DV COMMIT: `DELETE FROM graftcat.t
     * WHERE key IN (…)` publishes a deletion-vector commit — cost
@@ -618,8 +634,8 @@ private[sources] class GraftTable(snap: graft.operators.VersionedTable.Snapshot,
         .map(p => table.relativize(p).toString).toSeq.sorted
       finally walk.close()
     }
-    VersionedTable.replaceFilesCommit(spark, table, snap.version, snap.files,
-      staged, "graft-table TRUNCATE", truncate = true)
+    VersionedTable.replaceFilesOn(spark, snap, snap.files, staged,
+      "graft-table TRUNCATE", truncate = true)
     true
   }
 
@@ -631,13 +647,8 @@ private[sources] class GraftTable(snap: graft.operators.VersionedTable.Snapshot,
       throw new UnsupportedOperationException(
         "graft-table: DELETE supports one equality or IN predicate on " +
           s"a single column; got [${filters.mkString(", ")}]"))
-    val table = java.nio.file.Paths.get(path)
-    require(VersionedTable.refs(table).forall(_._2 != "branch"),
-      s"graft-table: $path has branch refs — DELETE through the " +
-        "protocol against an explicit ref instead")
-    val base = VersionedTable.latestSnapshot(table).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-table: no committed version at $path"))
+    // The loaded snapshot, unless a commit landed since the load.
+    val base = VersionedTable.latestFrom(snap)
     val existingKeyCols = base.deletionVectors.map(_._2).distinct
     require(existingKeyCols.forall(_ == keyCol),
       s"graft-table: live deletion vectors key on $existingKeyCols — a " +
@@ -655,7 +666,7 @@ private[sources] class GraftTable(snap: graft.operators.VersionedTable.Snapshot,
     val keys = spark.createDataFrame(
       values.map(v => org.apache.spark.sql.Row(coerce(v))).asJava,
       StructType(Seq(field)))
-    VersionedTable.deleteCommit(spark, table, base.version + 1, keys, keyCol)
+    VersionedTable.deleteCommit(spark, base, keys, keyCol)
     ()
   }
 }

@@ -20,8 +20,8 @@ import graft.operators.VersionedTable
   *  - BATCH APPEND (`df.write.format("graft-table").mode("append")
   *    .save(root)`): executors stage parquet files (no driver data
   *    path), the driver's `commit(messages)` publishes them as one
-  *    O(batch) delta manifest at latest+1 with the optimistic
-  *    conflict-retry of `appendCommit` — a lost race re-publishes the
+  *    O(batch) delta manifest at latest+1 through the commit producer
+  *    (`VersionedTable.commitStaged`) — a lost race re-publishes the
   *    same staged files against the winner, rewriting nothing.
   *  - STREAMING SINK (`df.writeStream.format("graft-table")`):
   *    version = epochId + 1 (the table is BOOTSTRAPPED at v0 with its
@@ -37,7 +37,7 @@ import graft.operators.VersionedTable
   * read path's mirror); an empty task deletes its file and stages
   * nothing, so manifests never carry zero-row files.
   */
-private[sources] class GraftWriteBuilder(path: String,
+private[sources] class GraftWriteBuilder(snap: VersionedTable.Snapshot,
     info: LogicalWriteInfo) extends WriteBuilder
     with org.apache.spark.sql.connector.write.SupportsTruncate {
 
@@ -49,12 +49,16 @@ private[sources] class GraftWriteBuilder(path: String,
     * snapshot while every prior version stays readable. */
   override def truncate(): WriteBuilder = { rewrite = true; this }
 
-  override def build(): Write = new GraftWrite(path, info.schema(), rewrite)
+  override def build(): Write = new GraftWrite(snap, info.schema(), rewrite)
 }
 
-private[sources] class GraftWrite(path: String, schema: StructType,
-    truncate: Boolean = false) extends Write
+/** `snap` is the version the write was planned on: it names the write
+  * layout and is the commit's first base. */
+private[sources] class GraftWrite(snap: VersionedTable.Snapshot,
+    schema: StructType, truncate: Boolean = false) extends Write
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+
+  private val path = snap.table.toString
 
   // One staging namespace per write attempt; files land under data/
   // like every commit's, invisible until a manifest lists them and
@@ -67,9 +71,7 @@ private[sources] class GraftWrite(path: String, schema: StructType,
     * partitioned table lands `c1=v1/c2=v2/…` files like every library
     * writer, so DDL-created partitioned tables get manifest partition
     * pruning from day one. */
-  private val partCols: Seq[String] =
-    VersionedTable.latestSnapshot(java.nio.file.Paths.get(path))
-      .map(_.writePartitionLayout).getOrElse(Nil)
+  private val partCols: Seq[String] = snap.writePartitionLayout
   // Entries may be TRANSFORM specs (r18, hidden partitioning): the
   // RAW column must be writable with the type the derivation demands;
   // identity columns keep the STRING rule (their value IS the path).
@@ -136,7 +138,7 @@ private[sources] class GraftWrite(path: String, schema: StructType,
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
     Array.empty
 
-  override def toBatch: BatchWrite = new GraftBatchWrite(path, stagingRel,
+  override def toBatch: BatchWrite = new GraftBatchWrite(snap, stagingRel,
     schema, truncate, partCols)
   override def toStreaming: StreamingWrite = {
     require(!truncate,
@@ -147,16 +149,18 @@ private[sources] class GraftWrite(path: String, schema: StructType,
     // batch INSERT — the manifest partition pruning a day-partitioned
     // event stream needs from its very first micro-batch. (Before r17
     // this refused toward a flat-sink-then-compact detour.)
-    new GraftStreamingWrite(path, stagingRel, schema, partCols)
+    new GraftStreamingWrite(snap, stagingRel, schema, partCols)
   }
 }
 
 private[sources] case class GraftCommitMessage(files: Seq[String])
     extends WriterCommitMessage
 
-private[sources] class GraftBatchWrite(path: String, stagingRel: String,
-    schema: StructType, truncate: Boolean,
+private[sources] class GraftBatchWrite(snap: VersionedTable.Snapshot,
+    stagingRel: String, schema: StructType, truncate: Boolean,
     partCols: Seq[String] = Nil) extends BatchWrite {
+
+  private val path = snap.table.toString
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
@@ -170,13 +174,6 @@ private[sources] class GraftBatchWrite(path: String, stagingRel: String,
         s"graft-table: unexpected commit message $other")
     }.sorted.toSeq
     if (files.nonEmpty || truncate) {
-      val table = java.nio.file.Paths.get(path)
-      // A V2 write on a branched table would base on (or replace) the
-      // GLOBAL latest snapshot — whichever line of history interleaved
-      // last. Same stance as the library's version-unaware writers.
-      require(VersionedTable.refs(table).forall(_._2 != "branch"),
-        s"graft-table: $path has branch refs — write through " +
-          "VersionedTable.branchCommit(<ref>) instead of the connector")
       // An overwrite that staged NOTHING would publish a manifest with
       // no data lines — unreadable (the first footer is the schema
       // source). Refuse with the legitimate verb.
@@ -184,69 +181,9 @@ private[sources] class GraftBatchWrite(path: String, stagingRel: String,
         s"graft-table: INSERT OVERWRITE of $path staged zero rows — a " +
           "table needs at least one data file (its schema source); " +
           "use TRUNCATE TABLE to empty it")
-      // The appendCommit OCC loop over already-staged files: losing a
-      // race costs one more manifest write, never a data rewrite.
-      // CHECK validation and index-shape derivation run INSIDE the
-      // loop, against each attempt's head: a constraint (or index)
-      // declared concurrently between a lost race and the retry is
-      // honored, never bypassed — the promoteBranch revalidation rule.
-      // The non-retry cost is identical (one pass); retries are rare.
-      val dataDir = java.nio.file.Paths.get(path).resolve(stagingRel)
-      val spark = org.apache.spark.sql.SparkSession.active
-      var attempts = 0
-      var done = false
-      while (!done && attempts < 10) {
-        // One snapshot per attempt: the base every line below derives
-        // from.
-        val base = VersionedTable.latestSnapshot(table)
-        require(truncate || base.isDefined,
-          s"graft-table: batch append needs a committed version at " +
-            s"$path to append to — bootstrap the table via " +
-            "VersionedTable.commit first")
-        val target = base.fold(0L)(_.version + 1)
-        // Both V2 paths honor CHECK constraints like every row-adding
-        // writer: a violating INSERT fails here, Spark aborts, and the
-        // abort path discards the staged orphans. The overwrite is a
-        // full-manifest rewrite, so it additionally CARRIES the live
-        // CHECK lines into its from-scratch manifest (r15 — an INSERT
-        // OVERWRITE must not be the path that silently drops a declared
-        // table contract, the same amnesia rule as compactCommit).
-        val checkLines =
-          if (truncate)
-            VersionedTable.carryChecksOnFiles(spark, table, files,
-              "graft-table overwrite")
-          else {
-            VersionedTable.enforceConstraintsOnFiles(spark, table, files,
-              base.map(_.version), "graft-table append")
-            Nil
-          }
-        // Index continuity (r15): SQL INSERTs join the table's skipping
-        // indexes like every library writer — stats/ROWS/BLOOM/secondary
-        // lines matching the base's shape (and the overwrite restates
-        // the STATSCOL declaration its full manifest would otherwise
-        // drop). Plain lines on unindexed tables, exactly as before.
-        // Restricted to the message-derived `files`: an orphan left in
-        // the staging dir by a task attempt whose abort never ran is
-        // never committed (and never bypasses the CHECK gate above).
-        val lines =
-          if (truncate)
-            VersionedTable.overwriteLines(spark, table, base, dataDir, files)
-          else VersionedTable.ingestLines(spark, table, base, dataDir, files)
-        try {
-          // Overwrite = a rewrite commit: the staged files ARE the
-          // snapshot (full manifest, no BASE) plus the carried CHECK
-          // lines — prior versions stay readable; expire() reclaims
-          // them later.
-          if (truncate)
-            VersionedTable.publish(table, target, lines ++ checkLines)
-          else VersionedTable.publishDelta(table, target, lines)
-          done = true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => attempts += 1
-        }
-      }
-      if (!done) throw new IllegalStateException(
-        s"graft-table: lost 10 straight publish races at $path")
+      VersionedTable.commitStaged(org.apache.spark.sql.SparkSession.active,
+        snap.table, if (truncate) "graft-table overwrite" else "graft-table append",
+        Some(snap), snap.table.resolve(stagingRel), files, truncate)
     }
   }
 
@@ -254,9 +191,11 @@ private[sources] class GraftBatchWrite(path: String, stagingRel: String,
     GraftWriterFactory.discard(path, messages)
 }
 
-private[sources] class GraftStreamingWrite(path: String, stagingRel: String,
-    schema: StructType,
+private[sources] class GraftStreamingWrite(snap: VersionedTable.Snapshot,
+    stagingRel: String, schema: StructType,
     partCols: Seq[String] = Nil) extends StreamingWrite {
+
+  private val path = snap.table.toString
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
@@ -285,14 +224,11 @@ private[sources] class GraftStreamingWrite(path: String, stagingRel: String,
         s"graft-table: version $version of $path was committed outside " +
           "this streaming sink — one writer owns a sink table")
       GraftWriterFactory.discard(path, messages)
-    } else if (files.nonEmpty) {
+    } else if (files.nonEmpty)
       // A poisoned micro-batch fails its epoch BEFORE the commit point
       // — the streaming face of the CHECK gate.
-      VersionedTable.enforceConstraintsOnFiles(
-        org.apache.spark.sql.SparkSession.active, table, files,
-        VersionedTable.latestVersion(table), "graft-table sink")
-      VersionedTable.publishDelta(table, version, files)
-    }
+      VersionedTable.commitEpoch(org.apache.spark.sql.SparkSession.active,
+        snap, version, files)
     // An empty epoch publishes nothing: version numbering stays sparse
     // and the delta chain bases on the latest committed ancestor.
   }

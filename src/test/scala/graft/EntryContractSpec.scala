@@ -144,6 +144,44 @@ class EntryContractSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("manifests are published only through the commit producer") {
+    // One path validates, renders and publishes every commit
+    // (VersionedTable.produce). The exemptions: the pipe_branch_promote
+    // witness hand-builds a branch rewrite with the raw publish, the
+    // streaming replay in EventStreams skips a batch whose version
+    // already published, and a catalog rename reserves its target
+    // directory (no manifest involved).
+    val code = mainCodeLines()
+    def named(f: java.nio.file.Path, n: String) = f.getFileName.toString == n
+    val vt = code.collectFirst { case (f, ls, _) if named(f, "VersionedTable.scala") => ls }
+      .getOrElse(IndexedSeq.empty)
+    val start = vt.indexWhere(_.contains("private def produce("))
+    val end = vt.indexWhere(_ == "  }", start)
+    assert(start >= 0 && end > start, "VersionedTable.produce not found")
+    def outside(f: java.nio.file.Path, i: Int) =
+      !named(f, "VersionedTable.scala") || i < start || i > end
+    val strayPublish = for {
+      (f, ls, i) <- code
+      t = ls(i).trim
+      if t.matches(".*(^|[^A-Za-z])publish\\(.*") && !t.contains("def publish(")
+      if outside(f, i)
+      if !(named(f, "DedupQueries.scala") && t.contains("VersionedTable.publish("))
+    } yield s"$f:${i + 1}: $t"
+    assert(strayPublish.isEmpty, strayPublish.mkString("\n"))
+    val witnesses = code.count { case (f, ls, i) =>
+      !named(f, "VersionedTable.scala") && ls(i).contains("VersionedTable.publish") }
+    assert(witnesses == 1, s"$witnesses raw publishes outside VersionedTable")
+    val catches = code.collect { case (f, ls, i)
+        if ls(i).contains("FileAlreadyExistsException") && outside(f, i) =>
+      (f, ls.slice(i - 5, i).mkString(" "), s"$f:${i + 1}: ${ls(i).trim}") }
+    val stray = catches.filterNot { case (f, before, _) =>
+      (named(f, "EventStreams.scala") && before.contains("commitAppend(")) ||
+        (named(f, "GraftCatalog.scala") && before.contains("Files.createDirectory("))
+    }
+    assert(stray.isEmpty && catches.size == 2,
+      (stray.map(_._3) :+ s"${catches.size} exempt catch sites").mkString("\n"))
+  }
+
   test("the manifest line format stays inside VersionedTable") {
     // A line-kind literal elsewhere re-implements the format; readers
     // take typed entries (VersionedTable.parse, Snapshot fields).

@@ -211,6 +211,47 @@ class VersionedTableSpec extends SparkSpec {
       _.startsWith("data/append-")))
   }
 
+  test("appendCommit validates the CHECK a racing winner declared") {
+    val t = freshTable()
+    VersionedTable.commit(spark, t, 0L, df(1, 2))
+    // The winner of the first attempt's race declares a constraint the
+    // batch violates: the retry, based on the winner, must refuse it.
+    var raced = false
+    val e = intercept[IllegalArgumentException] {
+      VersionedTable.appendCommit(spark, t, df(-5),
+        beforeAttempt = { target =>
+          if (!raced) {
+            raced = true
+            VersionedTable.constraintCommit(spark, t, target, "id >= 0")
+          }
+        })
+    }
+    assert(e.getMessage.contains("CHECK (id >= 0)"), e.getMessage)
+    assert(VersionedTable.versions(t) == Seq(0L, 1L),
+      "the refused append must publish nothing")
+    assert(VersionedTable.read(spark, t).collect().map(_.getLong(0)).sorted
+      .toSeq == Seq(1L, 2L))
+  }
+
+  test("commitAppend of the latest version conflicts, so a replayed batch skips") {
+    val t = freshTable()
+    VersionedTable.commit(spark, t, 0L, df(1))
+    VersionedTable.commitAppend(spark, t, 1L, df(2))
+    // A streaming replay re-commits its batch's version: the publish
+    // conflicts (the caller skips on it), nothing new is published.
+    intercept[java.nio.file.FileAlreadyExistsException] {
+      VersionedTable.commitAppend(spark, t, 1L, df(2))
+    }
+    assert(VersionedTable.versions(t) == Seq(0L, 1L))
+    assert(VersionedTable.read(spark, t).count() == 2L)
+    // A version below the latest still refuses: sparse numbering must
+    // not fill a hole under later history.
+    VersionedTable.commitAppend(spark, t, 3L, df(3))
+    intercept[IllegalArgumentException] {
+      VersionedTable.commitAppend(spark, t, 2L, df(4))
+    }
+  }
+
   test("appendCommit gives up after maxAttempts straight losses") {
     val t = freshTable()
     VersionedTable.commit(spark, t, 0L, df(1))

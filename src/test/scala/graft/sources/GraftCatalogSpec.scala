@@ -164,6 +164,52 @@ class GraftCatalogSpec extends SparkSpec {
     assert(reads("SELECT id FROM g.t") == ((4L, Seq(1L, 3L, 4L, 5L, 6L))))
   }
 
+  test("a DataFrame load resolves its snapshot once") {
+    import spark.implicits._
+    val t = Files.createTempDirectory("graft_cat_load_").resolve("t")
+    VersionedTable.commit(spark, t, 0L, Seq(1L).toDF("id"))
+    VersionedTable.appendCommit(spark, t, Seq(2L).toDF("id"))
+    VersionedTable.appendCommit(spark, t, Seq(3L).toDF("id"))
+    def loadReads(): Long = {
+      val before = VersionedTable.manifestReads.get
+      spark.read.format("graft-table").load(t.toString)
+      VersionedTable.manifestReads.get - before
+    }
+    // inferSchema and getTable share one resolution of v2 = BASE 1 =
+    // BASE 0 …
+    assert(loadReads() == 3L)
+    // … and Spark builds a new provider per load, so the next load sees
+    // the next version (v3 = BASE 2: one manifest more).
+    VersionedTable.appendCommit(spark, t, Seq(4L).toDF("id"))
+    assert(loadReads() == 4L)
+    assert(spark.read.format("graft-table").load(t.toString).count() == 4L)
+  }
+
+  test("a SQL INSERT and DELETE read only their base's chain") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_cat_commit_reads_")
+    val t = root.resolve("t")
+    VersionedTable.commitWithStats(spark, t, 0L,
+      Seq(1L, 2L).toDF("id").coalesce(1), "id")
+    VersionedTable.constraintCommit(spark, t, 1L, "id >= 0")
+    VersionedTable.appendCommit(spark, t, Seq(3L).toDF("id"))
+    val s2 = session(root)
+    def reads(sql: String): Long = {
+      val before = VersionedTable.manifestReads.get
+      s2.sql(sql)
+      VersionedTable.manifestReads.get - before
+    }
+    // The statement resolves its base once, when it loads the table
+    // (v2 = BASE 1 = BASE 0); the commit validates, renders and
+    // publishes on that snapshot without reading a manifest again.
+    assert(reads("INSERT INTO g.t VALUES (4)") == 3L)
+    assert(VersionedTable.chainLength(t, 3L) == 4)
+    assert(reads("DELETE FROM g.t WHERE id = 4") == 4L)
+    assert(VersionedTable.deletionVectors(t, 4L).size == 1)
+    assert(s2.sql("SELECT id FROM g.t").collect().map(_.getLong(0)).sorted
+      .toSeq == Seq(1L, 2L, 3L))
+  }
+
   test("tables resolve by name; versions via VERSION AS OF") {
     val root = staged()
     val s2 = session(root)

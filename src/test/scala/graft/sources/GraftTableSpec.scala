@@ -328,7 +328,7 @@ class GraftTableSpec extends SparkSpec {
           .map(p => t.relativize(p).toString).toSeq.head
       } finally walk.close()
     }
-    VersionedTable.publishDelta(t, 1L, Seq(rel))
+    VersionedTable.publish(t, 1L, Seq("BASE\t0", rel))
     val e = intercept[Exception] {
       spark.read.format("graft-table").load(t.toString).collect()
     }

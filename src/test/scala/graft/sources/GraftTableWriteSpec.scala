@@ -69,8 +69,8 @@ class GraftTableWriteSpec extends SparkSpec {
     // the staging dir whose abort() never ran. The manifest must
     // derive from the commit MESSAGES, not a directory listing —
     // otherwise the orphan's rows get committed (duplicates) and
-    // bypass CHECK validation. ingestLines/overwriteLines take the
-    // message-derived file list and restrict to it.
+    // bypass CHECK validation. The V2 commit takes the message-derived
+    // file list and restricts the published lines to it.
     import scala.jdk.CollectionConverters._
     def plant(table: java.nio.file.Path, dir: java.nio.file.Path,
         name: String, ids: Seq[Long]): String = {
@@ -89,14 +89,18 @@ class GraftTableWriteSpec extends SparkSpec {
     // Two real files sit in the staging dir; only one is in messages.
     val good = plant(t, staging, "part-good.parquet", Seq(3L))
     plant(t, staging, "part-zombie.parquet", Seq(99L))
-    val ingest = VersionedTable.ingestLines(spark, t,
-      VersionedTable.latestSnapshot(t), staging, Seq(good))
+    def commitStaged(table: java.nio.file.Path, dir: java.nio.file.Path,
+        file: String, overwrite: Boolean): Long =
+      VersionedTable.commitStaged(spark, table, "test",
+        VersionedTable.latestSnapshot(table), dir, Seq(file), overwrite)
+    val ingest = VersionedTable.addedLines(t,
+      commitStaged(t, staging, good, overwrite = false))
     // Stats-bearing data lines + ROWS lines for the good file ONLY.
     assert(ingest.nonEmpty)
     assert(ingest.forall(_.contains("part-good.parquet")),
       s"orphan leaked into manifest lines: $ingest")
-    val over = VersionedTable.overwriteLines(spark, t,
-      VersionedTable.latestSnapshot(t), staging, Seq(good))
+    val over = VersionedTable.manifest(t,
+      commitStaged(t, staging, good, overwrite = true))
     assert(over.filterNot(_.startsWith("STATSCOL"))
       .forall(_.contains("part-good.parquet")),
       s"orphan leaked into overwrite lines: $over")
@@ -106,9 +110,8 @@ class GraftTableWriteSpec extends SparkSpec {
     val st2 = t2.resolve("data").resolve("v2w-orphantest")
     val good2 = plant(t2, st2, "part-good.parquet", Seq(2L))
     plant(t2, st2, "part-zombie.parquet", Seq(98L))
-    assert(VersionedTable.ingestLines(spark, t2,
-      VersionedTable.latestSnapshot(t2), st2, Seq(good2)) ==
-      Seq(good2))
+    assert(VersionedTable.addedLines(t2,
+      commitStaged(t2, st2, good2, overwrite = false)) == Seq(good2))
   }
 
   test("mode(overwrite) publishes a rewrite commit; history stays readable") {

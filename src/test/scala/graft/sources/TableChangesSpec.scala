@@ -473,8 +473,8 @@ class TableChangesSpec extends SparkSpec {
     // A spec naming a column this stream's schema lacks (a foreign
     // writer's manifest) means future files carry a path-borne column
     // the fixed mirror schema cannot serve — restart, like RENAME.
-    VersionedTable.publishDelta(t,
-      VersionedTable.latestVersion(t).get + 1, Seq("PARTSPEC\t9\tghost"))
+    val head = VersionedTable.latestVersion(t).get
+    VersionedTable.publish(t, head + 1, Seq(s"BASE\t$head", "PARTSPEC\t9\tghost"))
     val e = intercept[org.apache.spark.sql.streaming
       .StreamingQueryException] { drainAll(t) }
     assert(e.getMessage.contains("restart"))
