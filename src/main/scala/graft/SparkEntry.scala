@@ -16,6 +16,8 @@ object SparkEntry {
     EventsQueries,
     TextQueries,
     DedupQueries,
+    PipelineQueries,
+    TableQueries,
     EmbeddingQueries,
     MultimodalQueries,
     AdvancedQueries,

@@ -165,7 +165,7 @@ class EntryContractSpec extends AnyFunSuite {
       t = ls(i).trim
       if t.matches(".*(^|[^A-Za-z])publish\\(.*") && !t.contains("def publish(")
       if outside(f, i)
-      if !(named(f, "DedupQueries.scala") && t.contains("VersionedTable.publish("))
+      if !(named(f, "TableQueries.scala") && t.contains("VersionedTable.publish("))
     } yield s"$f:${i + 1}: $t"
     assert(strayPublish.isEmpty, strayPublish.mkString("\n"))
     val witnesses = code.count { case (f, ls, i) =>
