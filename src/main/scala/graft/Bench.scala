@@ -57,7 +57,7 @@ object Bench {
     }
     // Stable (sorted) execution order for the same reason.
     val allNames = SparkEntry.queries.toSeq.sortBy(_._1)
-    // Noise attribution (r9): a broad floor_delta elevation has two
+    // Noise attribution: a broad floor_delta elevation has two
     // remaining suspects once scratch/provider are recorded — host
     // contention (other processes in this shared-host window) and
     // in-JVM pressure accumulated over a 130-query sweep (GC, code
@@ -108,7 +108,7 @@ object Bench {
     val p2 = sweep()
     val noise2 = (gcSec, loadAvg)
     // Tie-break pass: when a query's two timings disagree by more than
-    // 3x (r4 observed 25.7 s vs 5.7 s on identical code), one of them
+    // 3x (observed 25.7 s vs 5.7 s on identical code), one of them
     // was a noise window — a third run of JUST those queries keeps the
     // reported minimum from being hostage to which sweep got hit. The
     // names get listed under "tiebreak" so the JSON shows which minima
@@ -119,7 +119,7 @@ object Bench {
     }.toSet
     val p3 = if (divergent.nonEmpty) sweep(divergent).toMap
              else Map.empty[String, Double]
-    // Tie-break boundary too (ADVICE r9): without it an elevated
+    // Tie-break boundary too: without it an elevated
     // third-pass value couldn't be attributed from the JSON — the gap
     // the sweep markers were added to close. gc3/load_final are ~zero
     // deltas when no tie-break ran.
@@ -213,7 +213,7 @@ object Bench {
     // bar is on v only, deliberately: sub-75 ms timings are scheduler
     // jitter either way, but a formerly-fast query (tiny floor)
     // regressing to hundreds of ms must surface — a floor-side gate
-    // would hide exactly that class (ADVICE r8).
+    // would hide exactly that class.
     val floorDelta = results.collect {
       case (name, v)
           if v >= 0.075 && floor.get(name).exists(f => f > 0 && v > 1.5 * f) =>
@@ -221,7 +221,7 @@ object Bench {
     }.sortBy(-_._2)
     val floorDeltaJson = floorDelta
       .map { case (k, r) => "\"" + k + "\":" + fmt(r) }.mkString("{", ",", "}")
-    // ELEVATION INDEX (r20, VERDICT r19 #8): the window's host-noise
+    // ELEVATION INDEX: the window's host-noise
     // normalizer — the MEDIAN of (this round's min / committed floor)
     // over every query that already had a floor and cleared the 75 ms
     // jitter bar. A quiet window reads ~1.0–1.3; a contended one reads
@@ -246,7 +246,7 @@ object Bench {
     val streamingQs = results.filter { case (n, v) => n.startsWith("ev_stream") && v >= 0 }
     val streamingJson =
       s"""{"n":${streamingQs.size},"sum":${fmt(streamingQs.map(_._2).sum)}}"""
-    // Drain placement/provider observability (r8 verdict: the bench
+    // Drain placement/provider observability (the bench
     // JSON recorded neither, so a broad floor_delta elevation could not
     // be attributed between host noise and the scratch lever not
     // engaging). scratch_root is the root EventStreams.tempDir resolves

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * single-pass expression keeps the loop inside generated Java, stays
   * inside WholeStageCodegen spans, and reads both arrays exactly once.
   *
-  * `array<float>` legs are read IN PLACE (r21): the old builder-side
+  * `array<float>` legs are read IN PLACE: the old builder-side
   * `Cast(array<float> → array<double>)` allocated a fresh 64-double
   * array per leg per ROW EVALUATED — on the all-pairs join that is two
   * allocations per PAIR (~3.5 GB of garbage per emb_cosine_pairs run at

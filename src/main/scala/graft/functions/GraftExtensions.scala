@@ -28,8 +28,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         // float/double arrays are read IN PLACE by the expression
         // (float→double widening happens per element, exactly) — a
         // builder-side Cast here would allocate a fresh array per row
-        // evaluated, which on the all-pairs joins is per PAIR (r21:
-        // ~3.5 GB of garbage per emb_cosine_pairs bench run). Anything
+        // evaluated, which on the all-pairs joins is per PAIR
+        // (~3.5 GB of garbage per emb_cosine_pairs bench run). Anything
         // else still casts (instead of ImplicitCastInputTypes, whose
         // types are private[sql]).
         val cast = children.map(c => c.dataType match {

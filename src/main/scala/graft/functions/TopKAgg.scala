@@ -30,7 +30,7 @@ final class TopKOrderedAgg(k: Int)
   // k = 0 would make reduce's full-buffer fast path (buf.length == k)
   // evaluate buf.last on the empty initial buffer and throw mid-task;
   // a zero-row sample is a degenerate ask anyway — reject at
-  // construction (ADVICE r9).
+  // construction.
   require(k > 0, s"TopKOrderedAgg needs k > 0, got $k")
 
   private val ord: Ordering[(String, Long)] =

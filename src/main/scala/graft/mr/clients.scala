@@ -87,7 +87,7 @@ object SequenceDigestClient
       n += 1
       // NULL event_type: counted (count(*) semantics) but skipped in
       // the digest — DuckDB's string_agg drops NULLs, and appending
-      // null would render the literal "null" (ADVICE r10).
+      // null would render the literal "null".
       if (v._3 != null) {
         if (sb.nonEmpty) sb.append(',')
         sb.append(v._3)

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 
-/** PARTITION TRANSFORMS (r18) — Iceberg's HIDDEN-PARTITIONING idea:
+/** PARTITION TRANSFORMS — Iceberg's HIDDEN-PARTITIONING idea:
   * a partition-spec generation may derive its path segments from a
   * raw payload column instead of naming a string column directly —
   * `days(ts)` lays files out by UTC day of a BIGINT epoch-micros
@@ -18,7 +18,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   * Grammar (the PARTSPEC column list, comma-separated, paren-aware):
   *  - `col`            — identity: the STRING column itself rides the
-  *                       path (the r16/r17 layout, unchanged).
+  *                       path (the identity layout, unchanged).
   *  - `days(col)`      — `col` is BIGINT epoch MICROS (the engine's
   *                       TsUs convention); segment `col_day=YYYY-MM-DD`
   *                       (UTC, floorDiv — timezone-free by
@@ -47,7 +47,7 @@ sealed trait PartTransform extends Serializable {
     * all derive from a BIGINT epoch-micros column, all prune range
     * predicates through [[TimePart.microsRange]], all report a
     * storage-partitioned-join key through the catalog's V2 grain
-    * functions (r19 — `graft.sources.GraftTimeGrainFunction`), and
+    * functions (`graft.sources.GraftTimeGrainFunction`), and
     * writes order by the raw column (contiguous time ranges per
     * task). */
   def isTime: Boolean = false
@@ -100,7 +100,7 @@ sealed trait TimePart extends PartTransform {
         "path — delete or backfill the NULL rows, or evolve to a " +
         s"layout that does not derive from $rawCol'), $dayExpr)")
   /** The raw column as an epoch-micros SQL expression, by its type in
-    * `df` (r19): BIGINT columns ARE micros; TIMESTAMP flavors derive
+    * `df`: BIGINT columns ARE micros; TIMESTAMP flavors derive
     * through unix_micros — the same value InternalRow stores, so the
     * SQL route and the V2 row writer can never disagree (NTZ is UTC
     * by the engine's session-timezone contract). */
@@ -174,7 +174,7 @@ final case class YearsPart(rawCol: String) extends TimePart {
   }
 }
 
-/** `truncate(n, col)` (r20) — the width transform completing the
+/** `truncate(n, col)` — the width transform completing the
   * Iceberg family: STRING columns segment by their first `n`
   * characters (the id-prefix clustering common for document corpora);
   * BIGINT/INT columns floor to a multiple of `n` (floorMod — negatives
@@ -189,7 +189,7 @@ final case class TruncatePart(n: Int, rawCol: String)
   override def spec: String = s"truncate($n,$rawCol)"
   override def segmentValue(v: Any): String = v match {
     case s: String =>
-      // Empty-string refusal (r21, VERDICT r20 #1): partitionBy renders
+      // Empty-string refusal: partitionBy renders
       // an empty segment as __HIVE_DEFAULT_PARTITION__ in the path while
       // probe-time pruning compares against "", so WHERE col = '' would
       // silently prune the file holding its rows. Refuse at write
@@ -197,7 +197,7 @@ final case class TruncatePart(n: Int, rawCol: String)
       require(s.nonEmpty, s"$spec: empty-string partition value cannot " +
         "ride a path — delete or backfill the empty rows, or evolve to " +
         s"a layout that does not derive from $rawCol")
-      // Code points, not UTF-16 units (r21, ADVICE r20): the SQL write
+      // Code points, not UTF-16 units: the SQL write
       // path (SUBSTRING) and the Iceberg reference semantics count code
       // points, and a UTF-16 substring can split a surrogate pair into
       // a segment no stored path carries.
@@ -231,9 +231,9 @@ final case class TruncatePart(n: Int, rawCol: String)
     df.schema.fields.find(_.name == rawCol).map(_.dataType) match {
       case Some(org.apache.spark.sql.types.StringType) =>
         // SUBSTRING counts code points — same as segmentValue's
-        // truncatePrefix (r21). Empty strings refuse like NULL: the
+        // truncatePrefix. Empty strings refuse like NULL: the
         // path sentinel they would ride as is unmatchable at probe
-        // time (VERDICT r20 #1).
+        // time.
         nullGuard(s"IF(`$rawCol` = '', raise_error('$spec: " +
           "empty-string partition value cannot ride a path — delete " +
           "or backfill the empty rows, or evolve to a layout that " +
@@ -266,7 +266,7 @@ final case class BucketPart(n: Int, rawCol: String) extends PartTransform {
 
 object PartTransform {
 
-  /** Raw-column types a TIME-GRAIN transform accepts (r19): BIGINT
+  /** Raw-column types a TIME-GRAIN transform accepts: BIGINT
     * epoch micros (the original convention), or a true TIMESTAMP /
     * TIMESTAMP_NTZ column — all three ride InternalRow as the same
     * epoch-micros long, so every derivation is shared. */
@@ -276,7 +276,7 @@ object PartTransform {
     org.apache.spark.sql.types.TimestampNTZType)
 
   /** Raw-column types the VALUE transforms (bucket, truncate) accept
-    * (r20, deduped): one definition for declaration, evolution, and
+    * (deduped): one definition for declaration, evolution, and
     * the V2 write gate — the next admitted type lands everywhere. */
   val hashableTypes: Set[org.apache.spark.sql.types.DataType] = Set(
     org.apache.spark.sql.types.LongType,
@@ -285,7 +285,7 @@ object PartTransform {
 
   val MicrosPerDay: Long = 86400000000L
 
-  /** First `n` CODE POINTS of `s` (r21, ADVICE r20): the SQL write path
+  /** First `n` CODE POINTS of `s`: the SQL write path
     * (SUBSTRING), Spark's UTF8String.substringSQL, and Iceberg's
     * reference truncate all count code points, while String.substring
     * counts UTF-16 units — a supplementary character inside the first
@@ -296,7 +296,7 @@ object PartTransform {
     s.substring(0,
       s.offsetByCodePoints(0, math.min(n, s.codePointCount(0, s.length))))
 
-  /** TZ-INDEPENDENT epoch-micros SQL for a TIMESTAMP_NTZ column (r20).
+  /** TZ-INDEPENDENT epoch-micros SQL for a TIMESTAMP_NTZ column.
     * `unix_micros(CAST(ntz AS TIMESTAMP))` reads the wall clock in the
     * SESSION zone — a catalog attached to a non-UTC session would
     * write skewed segments/zonemaps that read-time pruning (which
@@ -369,7 +369,7 @@ object PartTransform {
     f"$y%04d"
   }
 
-  /** TOTAL year rendering for the V2 SHUFFLE function (r20): inside
+  /** TOTAL year rendering for the V2 SHUFFLE function: inside
     * the segment domain it is byte-identical to [[yearOfMicros]];
     * outside it the raw year renders unpadded (1–2 or 5+ chars, or
     * signed — never colliding with a valid 4-digit segment). A probe

@@ -99,12 +99,12 @@ object SkewJoin {
       // would broadcast and there'd be no partition to split.
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") { c =>
       val df = build(c)
-      val rows = df.collect()
+      val local = graft.sources.GraftSession.materialize(spark, df)
       val n = skewSplitJoinCount(df)
       require(n > 0,
         "AQE skew-join split did not fire: the demo row must witness a " +
           "runtime skew re-plan (SortMergeJoin/ShuffledHashJoin with " +
           "isSkewJoin=true in the executed plan), not a plain join")
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+      local
     }
 }

@@ -91,7 +91,7 @@ object AdvancedQueries extends QueryModule {
         .orderBy("band")
     }),
 
-    // WIDTH-BUCKET BAND PROJECTION (r12) — the 100-TB sibling
+    // WIDTH-BUCKET BAND PROJECTION — the 100-TB sibling
     // rel_range_join's own comment names: the same banding computed as
     // a PROJECTION instead of an inequality join. Fixed band edges are
     // data the planner can fold into a CASE ladder, so the plan is one
@@ -162,7 +162,7 @@ object AdvancedQueries extends QueryModule {
       // degrade with partition count, so a value-relative gate is
       // partitioning-sensitive — a 5% check that held on local[32]
       // tripped on local-cluster's different merge order at the sparse
-      // p99 tail of the tiny smoke fixture, r10). The gate therefore
+      // p99 tail of the tiny smoke fixture). The gate therefore
       // asserts the principled property: each sketch percentile lies
       // within the exact interpolated [p−1%, p+1%] VALUE band of its
       // group — a generous rank margin (the configured accuracy's own
@@ -242,7 +242,7 @@ object AdvancedQueries extends QueryModule {
         .orderBy("zbucket")
     }),
 
-    // TRIANGLE COUNTING (r12) — the third graph primitive beside
+    // TRIANGLE COUNTING — the third graph primitive beside
     // connected components (frontier) and PageRank (dense iteration):
     // clustering/community structure over the co-purchase graph
     // (parts appearing in the same order; the %4 slice keeps the
@@ -273,7 +273,7 @@ object AdvancedQueries extends QueryModule {
       triangleStats(s, pairs)
     }),
 
-    // PAGERANK, fixed-point (r11): 5 synchronous rounds of the random-
+    // PAGERANK, fixed-point: 5 synchronous rounds of the random-
     // surfer update over the part↔supplier bipartite graph derived
     // from lineitem (edges = DISTINCT (l_partkey, l_suppkey) in both
     // directions; nodes encoded part→2k, supplier→2k+1 — symmetric, so
@@ -323,7 +323,7 @@ object AdvancedQueries extends QueryModule {
       var ranks = deg.select($"src".as("node"), lit(1000000000000L).as("pr"))
         .persist()
       // Node count for the broadcast guard, measured on the init rank
-      // table — the count() doubles as the cache-forcing action round 1
+      // table — the count() doubles as the cache-forcing action the first round
       // would otherwise pay inside its broadcast build, so the guard
       // costs one scan of already-cached node rows, not an extra pass.
       // Same bound as connectedComponents' broadcastFrontierMax.
@@ -337,7 +337,7 @@ object AdvancedQueries extends QueryModule {
           .groupBy($"dst")
           .agg(expr("150000000000L + (85 * sum(c)) div 100").as("pr"))
           .select($"dst".as("node"), $"pr")
-        // localCheckpoint (r21): same lineage cut as the old
+        // localCheckpoint: same lineage cut as the old
         // createDataFrame(next.rdd) (plans over a Scan ExistingRDD of
         // materialized rows — analyzer cost stays flat), but the rows
         // stay INTERNAL: the RDD-cut route deserialized every node row
@@ -349,7 +349,7 @@ object AdvancedQueries extends QueryModule {
       ranks.orderBy($"pr".desc, $"node").limit(50)
     }),
 
-    // DYNAMIC PARTITION PRUNING (r11): the partition-elimination
+    // DYNAMIC PARTITION PRUNING: the partition-elimination
     // mechanism that decides SCAN volume at 100 TB — a fact table
     // laid out by day must not be re-scanned in full when the query
     // joins it against a dim whose filter is only known at runtime.
@@ -369,8 +369,7 @@ object AdvancedQueries extends QueryModule {
     // over the unpartitioned fixture.
     "rel_partition_prune" -> ((s, dir) => {
       import s.implicits._
-      val stage = graft.sources.GraftSession.stagingDir("graft_dpp_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_dpp_") { stage =>
         val facts = s"$stage/events_by_day"
         Tables.events(s, dir)
           .withColumn("d", to_date($"ts_utc"))
@@ -393,14 +392,14 @@ object AdvancedQueries extends QueryModule {
             max($"n_signups").as("n_signups"))
           .orderBy("d")
         QueryModule.gatedPlans.put("rel_partition_prune", out)
-        val rows = out.collect()
+        val local = graft.sources.GraftSession.materialize(s, out)
         // In-path witness: the executed fact scan must carry the DPP
         // subquery — without it this query silently reads every day.
         require(out.queryExecution.executedPlan.toString
             .contains("dynamicpruning"),
           "rel_partition_prune: fact scan lost its dynamic pruning filter")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(stage)
+        local
+      }
     })
   )
 

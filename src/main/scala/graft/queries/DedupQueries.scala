@@ -71,7 +71,7 @@ object DedupQueries extends QueryModule {
     *  - verification: one `array_intersect` per surviving pair against
     *    the collected per-doc sets — one row per candidate instead of a
     *    candidates×shingles double join. */
-  /** Connected components by FRONTIER min-label propagation (r10).
+  /** Connected components by FRONTIER min-label propagation.
     *
     * `edges` must have two long columns `d1`, `d2` (one row per
     * undirected edge; self-loops and duplicates are harmless). Returns
@@ -88,7 +88,7 @@ object DedupQueries extends QueryModule {
     * (label ← label(label), the union-find path-compression idea
     * restricted to changed pointees). Converged regions stop shipping
     * rows entirely: on a 100 TB near-dup graph most components converge
-    * in round 1 (cliques), so after it the frontier collapses to the
+    * in the first round (cliques), so after it the frontier collapses to the
     * few deep components. The loop KNOWS each round's exact delta
     * cardinality (the convergence count), so the broadcast-vs-shuffle
     * choice for the delta joins is made explicitly from it rather than
@@ -162,7 +162,7 @@ object DedupQueries extends QueryModule {
       // missing partitions through an unpersisted lineage). The
       // terminal round, which every run pays exactly once, is two
       // joins against a frontier that produces nothing — near-free,
-      // where the pre-r10 full-propagation loop's terminal
+      // where a full-propagation loop's terminal
       // confirmation re-aggregated the full label table.
       val deltaRows = nextFrontier.count()
       if (deltaRows == 0L) {
@@ -182,7 +182,7 @@ object DedupQueries extends QueryModule {
     }
     // The frontier's job ends at convergence — drop its blocks here so
     // a long bench sweep doesn't accumulate one orphaned cache entry
-    // per invocation (ADVICE r10). Safe: `labels` is either the forced
+    // per invocation. Safe: `labels` is either the forced
     // `next` cache or (init-convergence) was fully materialized by the
     // frontier count, so nothing recomputes through the dropped blocks.
     // The RETURNED `labels` (and any edges the caller persisted) stay
@@ -194,7 +194,7 @@ object DedupQueries extends QueryModule {
     labels
   }
 
-  /** `auditDocs = true` is the gate-side entry (r16): under a sampled
+  /** `auditDocs = true` is the gate-side entry: under a sampled
     * audit (QueryModule.auditSample < 1) the document universe is cut
     * to the deterministic audit slice BEFORE shingling, so the exact
     * ground-truth join costs fraction² of the full audit instead of
@@ -467,7 +467,7 @@ object DedupQueries extends QueryModule {
     }),
 
     // Near-dup CLUSTER resolution: connected components over the exact
-    // Jaccard ≥ 0.5 pair graph, via [[connectedComponents]] (r10:
+    // Jaccard ≥ 0.5 pair graph, via [[connectedComponents]] (
     // frontier min-label propagation — see its doc for the delta-join
     // design and the correctness argument). Real pipelines dedup per
     // cluster (keep one canonical doc), not per pair.

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.functions.ElementwiseSum
+import graft.operators.VersionedTable
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -191,7 +192,7 @@ object EmbeddingQueries extends QueryModule {
         res.insert(if (at < 0) res.size else at, (cid, csim))
         if (res.size > ef) res.remove(res.size - 1)
         adj(cid).foreach { nb =>
-          // TOMBSTONE-AWARE (r20): a DV-deleted neighbor has no stored
+          // TOMBSTONE-AWARE: a DV-deleted neighbor has no stored
           // row — its vector is gone, so it can be neither waypoint
           // nor result (the Lucene live-docs serve model). Skip the
           // dangling edge; a merge rebuild reclaims it. During build
@@ -257,7 +258,7 @@ object EmbeddingQueries extends QueryModule {
   private val HnswM = 12
   private val HnswMaxDeg = 24
 
-  /** Hard per-task materialization bound for the segment graphs (r17):
+  /** Hard per-task materialization bound for the segment graphs:
     * both build and serve hold ONE task's segments in memory (the
     * Lucene per-segment contract — segments are sized to executor
     * memory), and before this guard a misconfigured segment count
@@ -308,7 +309,7 @@ object EmbeddingQueries extends QueryModule {
       .write.mode("append").partitionBy("seg").parquet(idx.toString)
 
   /** The ONE per-task graph-build body both persistence routes run
-    * (r19): materialize the task's rows bounded, build one NSW graph
+    *: materialize the task's rows bounded, build one NSW graph
     * per segment present, emit (vec_id, e, nbrs, seg). Shared so the
     * versioned index's graphs can never desynchronize from the plain
     * layout's. */
@@ -325,7 +326,7 @@ object EmbeddingQueries extends QueryModule {
   }
 
   /** The per-segment graph construction hnswBuildSegments persists —
-    * factored out (r19) so the VERSIONED index lifecycle commits the
+    * factored out so the VERSIONED index lifecycle commits the
     * same rows through the table protocol. */
   private def hnswGraphRows(vectors: DataFrame, efC: Int, m: Int,
       maxDeg: Int): DataFrame = {
@@ -342,7 +343,7 @@ object EmbeddingQueries extends QueryModule {
       .toDF("vec_id", "e", "nbrs", "seg")
   }
 
-  /** VERSIONED INDEX LIFECYCLE (r19) — the HNSW segments as a GRAFT
+  /** VERSIONED INDEX LIFECYCLE — the HNSW segments as a GRAFT
     * TABLE, the structural unlock array payloads buy: every build
     * batch is an APPEND COMMIT (O(batch) delta manifest, seg zonemaps
     * riding the data lines so an equality probe on `seg` prunes files
@@ -358,7 +359,6 @@ object EmbeddingQueries extends QueryModule {
     * dropping innocent rows. */
   private[graft] def hnswCommitSegments(vectors: DataFrame,
       idx: java.nio.file.Path, efC: Int, m: Int, maxDeg: Int): Long = {
-    import graft.operators.VersionedTable
     val s = vectors.sparkSession
     import s.implicits._
     // ONE FILE PER SEGMENT BY CONSTRUCTION, one parallel job: an
@@ -407,7 +407,6 @@ object EmbeddingQueries extends QueryModule {
   private[graft] def hnswMergeCommit(s: SparkSession,
       idx: java.nio.file.Path, merge: Seq[Int], target: Int,
       efC: Int = HnswEfC, m: Int = HnswM, maxDeg: Int = HnswMaxDeg): Long = {
-    import graft.operators.VersionedTable
     val base = VersionedTable.latestVersion(idx).getOrElse(
       throw new IllegalArgumentException(
         s"hnswMergeCommit: no committed index at $idx"))
@@ -468,7 +467,7 @@ object EmbeddingQueries extends QueryModule {
     hnswServeFrame(s, g, efServe, segments)
   }
 
-  /** SEGMENT MERGE (r17) — the maintenance verb that keeps the
+  /** SEGMENT MERGE — the maintenance verb that keeps the
     * segment-append model honest (the Lucene merge policy): without
     * one, continuous ingest grows one segment per batch forever and
     * serve cost — each probe greedy-searches EVERY segment — grows
@@ -498,11 +497,13 @@ object EmbeddingQueries extends QueryModule {
       .selectExpr("vec_id", "e", s"CAST($target AS INT) AS seg")
     hnswBuildSegments(vecs, idx, efC, m, maxDeg)
     // Inputs retire only after the replacement is fully written.
+    val fs = new org.apache.hadoop.fs.Path(idx.toUri)
+      .getFileSystem(s.sessionState.newHadoopConf())
     merge.foreach(sg =>
-      graft.streaming.EventStreams.deleteTree(idx.resolve(s"seg=$sg")))
+      fs.delete(new org.apache.hadoop.fs.Path(idx.resolve(s"seg=$sg").toUri), true))
   }
 
-  /** ROUTED serve (r17) — the IVF×HNSW hybrid every large vector
+  /** ROUTED serve — the IVF×HNSW hybrid every large vector
     * store converges on (FAISS IVF-HNSW, SPANN's centroid router):
     * when segments are SPATIAL (each cell = a coarse-codebook
     * centroid's vectors, not an ingest slice), a probe needs only its
@@ -604,7 +605,7 @@ object EmbeddingQueries extends QueryModule {
       efServe: Int, segments: Int): HnswRun =
     hnswServeFrame(s, s.read.parquet(idx.toString), efServe, segments)
 
-  /** [[hnswServe]] over an explicit segment frame (r19) — the
+  /** [[hnswServe]] over an explicit segment frame — the
     * versioned-index read path serves through here too. */
   private[graft] def hnswServeFrame(s: SparkSession, g: DataFrame,
       efServe: Int, segments: Int): HnswRun = {
@@ -1014,7 +1015,7 @@ object EmbeddingQueries extends QueryModule {
         .orderBy("dim")
     }),
 
-    // SCALAR-QUANTIZED (SQ8) SEARCH (r12) — the search path that
+    // SCALAR-QUANTIZED (SQ8) SEARCH — the search path that
     // actually USES emb_int8_quant's parameter table: vectors packed
     // to 8-bit codes per dimension (4× less memory/bandwidth than
     // float32 — at 100 TB the difference between an in-RAM and an
@@ -1062,7 +1063,7 @@ object EmbeddingQueries extends QueryModule {
         .orderBy("qid", "rank")
     }),
 
-    // BINARY QUANTIZATION + HAMMING SHORTLIST + EXACT RERANK (r13) —
+    // BINARY QUANTIZATION + HAMMING SHORTLIST + EXACT RERANK —
     // the 1-bit end of the quantization family (float → int8 sq →
     // PQ → sign bit): each 64-dim vector compresses to ONE 64-bit
     // word (bit i = dim i above the per-dim corpus mean — 256×
@@ -1115,7 +1116,7 @@ object EmbeddingQueries extends QueryModule {
         .orderBy("qid", "rank")
     }),
 
-    // K-MEANS, Lloyd's algorithm (r11): REAL iterative clustering (the
+    // K-MEANS, Lloyd's algorithm: REAL iterative clustering (the
     // other emb queries use the label centroids as a deterministic
     // k-means stand-in — this is the trainer that would produce such a
     // codebook: IVF cells, PQ sub-codebooks, SemDeDup buckets). k=8,
@@ -1255,7 +1256,7 @@ object EmbeddingQueries extends QueryModule {
       }
     }),
 
-    // PERSISTED IVF INDEX (r12) — the amortization that makes ANN
+    // PERSISTED IVF INDEX — the amortization that makes ANN
     // viable at scale: emb_ivf_topk re-derives its codebook and cell
     // assignment inside the query, which is the right DEMO shape but
     // the wrong SERVING shape (a 100-TB index is built once at ingest
@@ -1279,8 +1280,7 @@ object EmbeddingQueries extends QueryModule {
     // oracle at full strength.
     "emb_ivf_persisted" -> ((s, dir) => {
       import s.implicits._
-      val tmp = graft.sources.GraftSession.stagingDir("graft_ivfidx_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_ivfidx_") { tmp =>
         val idx = tmp.resolve("index")
         // BUILD: one corpus pass for the codebook (k-row aggregate),
         // one for the assignment; the inverted file lands partitioned
@@ -1330,7 +1330,8 @@ object EmbeddingQueries extends QueryModule {
         require(!planStr.contains("embeddings.parquet"),
           "emb_ivf_persisted: the serve plan scans the source corpus — " +
             "the index was re-derived at query time")
-        val rows = out.collect()
+        val local = graft.sources.GraftSession.materialize(s, out)
+        val rows = local.collect()
         // Equality gate vs the in-memory route (fixture-bounded
         // collect; a production audit samples probes instead).
         val mem = ivfTop3InMemory(s, dir).collect()
@@ -1338,11 +1339,11 @@ object EmbeddingQueries extends QueryModule {
             rows.zip(mem).forall { case (a, b) => a == b },
           "emb_ivf_persisted: served rows diverge from the in-memory " +
             "IVF route — the parquet round trip perturbed the index")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        local
+      }
     }),
 
-    // GRAPH ANN (r16) — the HNSW-family route that dominates current
+    // GRAPH ANN — the HNSW-family route that dominates current
     // vector-store practice, Spark-shaped: the corpus splits into
     // SEGMENTS (vec_id % S — at 100 TB, S tracks corpus/executor-memory
     // and segments build in parallel, the Lucene-HNSW per-segment
@@ -1358,8 +1359,7 @@ object EmbeddingQueries extends QueryModule {
     // pairs (the emb_ann gate discipline). Rows-only: greedy graph
     // traversal is not SQL-expressible; EmbeddingSpec cross-checks.
     "emb_hnsw_topk" -> ((s, dir) => {
-      val tmp = graft.sources.GraftSession.stagingDir("graft_hnswidx_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_hnswidx_") { tmp =>
         val h = hnswBuildServe(s, dir, tmp.resolve("graph"),
           segments = 4, efServe = HnswEfServe, efC = HnswEfC,
           m = HnswM, maxDeg = HnswMaxDeg)
@@ -1397,10 +1397,10 @@ object EmbeddingQueries extends QueryModule {
             s"emb_hnsw_topk recall gate: $overlap/${exact.size} exact " +
               "pairs recovered — below the 9/10 floor")
         }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+      }
     }),
 
-    // INCREMENTAL GRAPH-ANN MAINTENANCE (r16) — the ingest path of the
+    // INCREMENTAL GRAPH-ANN MAINTENANCE — the ingest path of the
     // served NSW index, the Lucene segment-append model: a new batch
     // builds ITS OWN segment graph (cost O(batch·efC·deg), whatever
     // the base weighs) and lands NEXT to the existing segments — base
@@ -1413,8 +1413,7 @@ object EmbeddingQueries extends QueryModule {
     // (5) the module's 9/10 recall floor over the FULL corpus.
     "emb_hnsw_append" -> ((s, dir) => {
       import s.implicits._
-      val tmp = graft.sources.GraftSession.stagingDir("graft_hnswapp_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_hnswapp_") { tmp =>
         val idx = tmp.resolve("graph")
         val S = 4
         // BASE: everything except the append batch (probes stay in
@@ -1474,14 +1473,14 @@ object EmbeddingQueries extends QueryModule {
             s"emb_hnsw_append recall gate: $overlap/${exact.size} " +
               "exact pairs recovered — below the 9/10 floor")
         }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+      }
     }),
 
-    // GRAPH-ANN SEGMENT MERGE (r17) — the other half of the Lucene
+    // GRAPH-ANN SEGMENT MERGE — the other half of the Lucene
     // segment model emb_hnsw_append ships: append alone grows one
     // segment per ingest batch FOREVER, and serve cost (every probe
     // greedy-searches every segment) grows linearly with ingest
-    // history — the r16 weak-list entry. The merge verb rebuilds k
+    // history. The merge verb rebuilds k
     // small segments into one (reading their STORED vectors, never the
     // source corpus; cost O(merged rows), independent of the base) and
     // retires the inputs only after the replacement is written.
@@ -1497,8 +1496,7 @@ object EmbeddingQueries extends QueryModule {
     // Rows-only: greedy graph traversal is not SQL-expressible.
     "emb_hnsw_merge" -> ((s, dir) => {
       import s.implicits._
-      val tmp = graft.sources.GraftSession.stagingDir("graft_hnswmrg_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_hnswmrg_") { tmp =>
         val idx = tmp.resolve("graph")
         val S = 4
         hnswBuildSegments(Tables.embeddings(s, dir)
@@ -1577,12 +1575,12 @@ object EmbeddingQueries extends QueryModule {
             s"emb_hnsw_merge recall gate: $overlap/${exact.size} " +
               "exact pairs recovered — below the 9/10 floor")
         }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+      }
     }),
 
-    // VERSIONED INDEX LIFECYCLE (r19) — the ANN artifact UNDER the
+    // VERSIONED INDEX LIFECYCLE — the ANN artifact UNDER the
     // commit protocol, the structural unlock ARRAY payload columns
-    // buy (r17 #7 closed: index maintenance previously lived outside
+    // buy (index maintenance previously lived outside
     // versioning because the table format was primitives-only). The
     // HNSW segments are a graft table: the base build is v0 with seg
     // zonemaps on the data lines (an equality probe on `seg` prunes
@@ -1601,9 +1599,7 @@ object EmbeddingQueries extends QueryModule {
     // serves identically while the historical version is gone.
     "emb_hnsw_versioned" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_hnswver_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_hnswver_") { tmp =>
         val idx = tmp.resolve("graphv")
         val S = 4
         hnswCommitSegments(Tables.embeddings(s, dir)
@@ -1702,11 +1698,11 @@ object EmbeddingQueries extends QueryModule {
               rows.map(_.toString).toSeq,
             "emb_hnsw_versioned: expire changed the served index")
         }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+      }
     }),
 
-    // DV DELETES ON THE VERSIONED ANN INDEX (r20) — the lifecycle's
-    // last missing verb (ADVICE/VERDICT r19), and the GDPR shape every
+    // DV DELETES ON THE VERSIONED ANN INDEX — the lifecycle's
+    // last missing verb, and the GDPR shape every
     // real vector store must serve: `deleteCommit` over vec_id
     // publishes ONE O(kill-set) deletion-vector delta (no graph file
     // rewritten, no corpus read), the scan hides the killed rows, and
@@ -1726,9 +1722,7 @@ object EmbeddingQueries extends QueryModule {
     // tombstone-reclaim compaction), and still serves killed-free.
     "emb_hnsw_delete" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_hnswdel_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_hnswdel_") { tmp =>
         val idx = tmp.resolve("graphd")
         val S = 4
         hnswCommitSegments(Tables.embeddings(s, dir)
@@ -1821,10 +1815,10 @@ object EmbeddingQueries extends QueryModule {
           require(vM == vDel + 1,
             "emb_hnsw_delete: the merge must be one atomic commit")
         }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+      }
     }),
 
-    // ROUTED GRAPH ANN — IVF×HNSW (r17), the hybrid every large
+    // ROUTED GRAPH ANN — IVF×HNSW, the hybrid every large
     // vector store converges on and the STRUCTURAL answer to segment
     // proliferation (merging keeps segment COUNT bounded; routing
     // makes serve cost independent of it): segments are SPATIAL —
@@ -1843,8 +1837,7 @@ object EmbeddingQueries extends QueryModule {
     // recall/locality trade nprobe prices in production.
     "emb_hnsw_routed" -> ((s, dir) => {
       import s.implicits._
-      val tmp = graft.sources.GraftSession.stagingDir("graft_hnswrt_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_hnswrt_") { tmp =>
         val idx = tmp.resolve("index")
         // BUILD: stored coarse codebook (exact fixed-point label
         // means), nearest-cell assignment, one NSW graph per cell.
@@ -1891,10 +1884,10 @@ object EmbeddingQueries extends QueryModule {
             s"emb_hnsw_routed recall gate: $overlap/${exact.size} " +
               "exact pairs recovered — below the IVF 1/4 floor")
         }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+      }
     }),
 
-    // INCREMENTAL IVF MAINTENANCE (r12) — the ingest path of a served
+    // INCREMENTAL IVF MAINTENANCE — the ingest path of a served
     // ANN index: emb_ivf_persisted amortizes the BUILD across queries,
     // but a live corpus also APPENDS, and rebuilding the index per
     // batch would make the amortization a lie. The standard answer
@@ -1921,8 +1914,7 @@ object EmbeddingQueries extends QueryModule {
     // pipe_compact_commit, not an append.
     "emb_ivf_append" -> ((s, dir) => {
       import s.implicits._
-      val tmp = graft.sources.GraftSession.stagingDir("graft_ivfapp_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_ivfapp_") { tmp =>
         val idx = tmp.resolve("index")
         val sumAgg = udaf(new ElementwiseSum(64))
         val initial = Tables.embeddings(s, dir).where($"vec_id" % 4 =!= 1)
@@ -1970,7 +1962,8 @@ object EmbeddingQueries extends QueryModule {
         require(!planStr.contains("embeddings.parquet"),
           "emb_ivf_append: the serve plan scans the source corpus — " +
             "the index was re-derived at query time")
-        val rows = out.collect()
+        val local = graft.sources.GraftSession.materialize(s, out)
+        val rows = local.collect()
         // Rebuild-equivalence gate (fixture-bounded collect; a
         // production audit samples probes instead).
         val ref = ivfProbeTop3(
@@ -1988,11 +1981,11 @@ object EmbeddingQueries extends QueryModule {
         require(overlap >= exact.size / 4,
           s"emb_ivf_append recall gate: $overlap/${exact.size} exact " +
             "top-3 pairs recovered, below the 1/4 floor")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        local
+      }
     }),
 
-    // DIMENSION-TRUNCATION CURVE (r11): the Matryoshka/MRL tuning table
+    // DIMENSION-TRUNCATION CURVE: the Matryoshka/MRL tuning table
     // — recall@3 when scoring on only the first d dimensions, the
     // question every embedding deployment asks before shipping
     // truncated vectors (4× less storage and bandwidth per halving).
@@ -2039,7 +2032,7 @@ object EmbeddingQueries extends QueryModule {
         .orderBy("dims")
     }),
 
-    // RECALL CURVE (r11): the tuning table every ANN deployment derives
+    // RECALL CURVE: the tuning table every ANN deployment derives
     // before picking its operating point — recall@3 as a function of
     // IVF nprobe, over the same cells/probes as emb_ivf_topk. One
     // assignment pass (persisted), then one bounded cell-join per swept
@@ -2121,7 +2114,7 @@ object EmbeddingQueries extends QueryModule {
     // reconstructed centroids (asymmetric distance), a shortlist by
     // approximate cosine is reranked exactly, and the final top-3 per
     // probe ships. The shortlist SCALES with the corpus (n/16, floor
-    // 30): the r10 in-path recall gate caught a fixed 30-candidate
+    // 30): the in-path recall gate caught a fixed 30-candidate
     // budget silently degrading recall 8→4/30 at 10× corpus — the
     // rerank budget is a recall knob and must grow with n when the
     // quantizer is this coarse (K=10 labels), exactly the tuning a
@@ -2150,7 +2143,7 @@ object EmbeddingQueries extends QueryModule {
       }
     }),
 
-    // PERSISTED PQ INDEX + EXACT RERANK (r13) — the PQ sibling of
+    // PERSISTED PQ INDEX + EXACT RERANK — the PQ sibling of
     // emb_ivf_persisted, completing the persisted-ANN family:
     // emb_pq_topk derives its codes inside the query (the demo shape);
     // here BUILD writes the three artifacts a served PQ index is made
@@ -2169,8 +2162,7 @@ object EmbeddingQueries extends QueryModule {
     // like emb_pq_topk (ranking rides on derived centroids).
     "emb_pq_persisted" -> ((s, dir) => {
       import s.implicits._
-      val tmp = graft.sources.GraftSession.stagingDir("graft_pqidx_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_pqidx_") { tmp =>
         val idx = tmp.resolve("index")
         // BUILD: one corpus pass for the codebook, one to encode, one
         // to lay down rerank storage. The rerank-storage write (and
@@ -2213,7 +2205,8 @@ object EmbeddingQueries extends QueryModule {
         require(!planStr.contains("embeddings.parquet"),
           "emb_pq_persisted: the serve plan scans the source corpus — " +
             "the index was re-derived at query time")
-        val rows = out.collect()
+        val local = graft.sources.GraftSession.materialize(s, out)
+        val rows = local.collect()
         // Equality gate vs the in-query route under the same stored
         // codebook (fixture-bounded collect; production samples probes).
         val memProbes = emb.where($"vec_id" < 10)
@@ -2230,11 +2223,11 @@ object EmbeddingQueries extends QueryModule {
         require(overlap >= exact.size / 4,
           s"emb_pq_persisted recall gate: $overlap/${exact.size} exact " +
             "top-3 pairs recovered, below the 1/4 floor")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        local
+      }
     }),
 
-    // COMPOSED IVF×PQ PERSISTED INDEX (r15) — the production ANN shape
+    // COMPOSED IVF×PQ PERSISTED INDEX — the production ANN shape
     // (FAISS IVFPQ): emb_ivf_persisted gives sublinear CANDIDATE
     // SELECTION (probe only nprobe cells), emb_pq_persisted gives
     // compressed-domain SCORING (8 code bytes instead of 256 float
@@ -2257,11 +2250,10 @@ object EmbeddingQueries extends QueryModule {
     // (ranking rides on derived centroids, like every ANN row).
     "emb_ivfpq_persisted" -> ((s, dir) => {
       import s.implicits._
-      val tmp = graft.sources.GraftSession.stagingDir("graft_ivfpqidx_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_ivfpqidx_") { tmp =>
         val idx = tmp.resolve("index")
         // BUILD: codebook, cell assignment, PQ codes keyed by cell.
-        // (r21: a 3-way §2.6 overlap of the centroid/codebook/vector
+        // (a 3-way §2.6 overlap of the centroid/codebook/vector
         // passes was measured SLOWER here — three concurrent corpus
         // passes contend for the same cores while the serve+gates
         // dominate this query; kept sequential.)
@@ -2314,7 +2306,8 @@ object EmbeddingQueries extends QueryModule {
           s"emb_ivfpq_persisted: a probe's ADC scan touched $maxScan " +
             s"of $corpusN code rows — the IVF stage added no " +
             "sublinearity over flat PQ")
-        val rows = out.collect()
+        val local = graft.sources.GraftSession.materialize(s, out)
+        val rows = local.collect()
         // Equality gate vs the composed route over in-memory frames
         // (fixture-bounded collect; production samples probes).
         val mem = ivfPqTop3(
@@ -2333,8 +2326,8 @@ object EmbeddingQueries extends QueryModule {
         require(overlap >= exact.size / 4,
           s"emb_ivfpq_persisted recall gate: $overlap/${exact.size} " +
             "exact top-3 pairs recovered, below the 1/4 floor")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        local
+      }
     }),
 
     // ANN via random-hyperplane LSH (sign sketch): 16 planes from a
@@ -2402,7 +2395,7 @@ object EmbeddingQueries extends QueryModule {
       }
     }),
 
-    // CLUSTERING EVALUATION (r11) — purity of the label-centroid
+    // CLUSTERING EVALUATION — purity of the label-centroid
     // assignment, the metric every clustering/codebook pipeline
     // reports: assign each vector to its nearest LABEL centroid, cross
     // the assignment against the true labels, and report each
@@ -2449,7 +2442,7 @@ object EmbeddingQueries extends QueryModule {
         .orderBy("assigned")
     }),
 
-    // MAXSIM LATE INTERACTION (r11) — the ColBERT-style multi-vector
+    // MAXSIM LATE INTERACTION — the ColBERT-style multi-vector
     // retrieval primitive: documents are GROUPS of vectors (gid =
     // vec_id div 8, ≤8 "token" vectors each), and a query document
     // scores a candidate as Σ_q max_d cos(q, d) — every query token
@@ -2484,7 +2477,7 @@ object EmbeddingQueries extends QueryModule {
         .orderBy("qgid", "rk")
     }),
 
-    // PCA TOP COMPONENT via power iteration (r11) — the spectral
+    // PCA TOP COMPONENT via power iteration — the spectral
     // primitive under embedding whitening/compression and drift
     // monitoring, in the engine's exact-replay style: the corpus pass
     // is ONE partial+final aggregate folding each row's 64×64 outer

@@ -41,7 +41,7 @@ object EventsQueries extends QueryModule {
         .orderBy("cohort_d", "day_offset")
     }),
 
-    // INCREMENTAL aggregate refresh (r11): materialized-view
+    // INCREMENTAL aggregate refresh: materialized-view
     // maintenance for ALGEBRAIC aggregates — the nightly-rollup
     // pattern. The base aggregate is STORED (staged to parquet here:
     // the stand-in for yesterday's materialization) and the refresh
@@ -64,8 +64,7 @@ object EventsQueries extends QueryModule {
       def aggOf(df: DataFrame): DataFrame = df.groupBy($"event_type")
         .agg(count(lit(1)).as("n"),
           sum($"value".cast("decimal(18,2)")).as("sv"))
-      val tmp = graft.sources.GraftSession.stagingDir("graft_incr_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_incr_") { tmp =>
         aggOf(ev.where($"ts_us" < cutoff)).write.parquet(s"$tmp/base_agg")
         val stored = s.read.parquet(s"$tmp/base_agg")
           .select($"event_type", $"n".as("n_b"), $"sv".as("sv_b"))
@@ -79,11 +78,8 @@ object EventsQueries extends QueryModule {
             (coalesce($"sv_b", zero) + coalesce($"sv_d", zero))
               .cast("double").as("total_value"))
           .orderBy("event_type")
-        // Materialize before the staged base vanishes (mm_ingest
-        // pattern): the returned plan must own no on-disk state.
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
     // Tumbling 1-hour windows per event type. window() keeps the whole
@@ -131,7 +127,7 @@ object EventsQueries extends QueryModule {
       }
     }),
 
-    // LATE-DATA DROP semantics (r11): the one watermark behavior no
+    // LATE-DATA DROP semantics: the one watermark behavior no
     // in-order drain can exercise — rows arriving AFTER their window
     // closed. Four slices delivered 0, 3 (global max: the watermark
     // jumps to its final value), 2, 1: Spark's stateful operators
@@ -184,7 +180,7 @@ object EventsQueries extends QueryModule {
       }
     }),
 
-    // STREAMING OBSERVABILITY (r11): ev_stream_hourly's topology with
+    // STREAMING OBSERVABILITY: ev_stream_hourly's topology with
     // a `Dataset.observe()` SOURCE AUDIT riding the plan — rows
     // ingested and null-value count collected per micro-batch as
     // CollectMetrics (a zero-shuffle accumulator on the existing
@@ -216,7 +212,7 @@ object EventsQueries extends QueryModule {
     }),
 
     // ev_stream_hourly's topology under a Trigger.ProcessingTime clock
-    // (r10 — the one trigger path no AvailableNow drain can exercise):
+    // (the one trigger path no AvailableNow drain can exercise):
     // a STANDING query whose micro-batches fire on wall-clock ticks,
     // with no-data batches advancing the watermark between ticks, and
     // the harness deciding quiescence + stopping the query — the
@@ -416,7 +412,7 @@ object EventsQueries extends QueryModule {
         .orderBy("event_type")
     }),
 
-    // VARIANT SEMI-STRUCTURED EXTRACTION (r12) — the open-schema
+    // VARIANT SEMI-STRUCTURED EXTRACTION — the open-schema
     // ingestion shape ev_json's fixed-path get_json_object can't
     // cover: payloads whose SHAPE varies by row (fields present or
     // absent, nested arrays) parsed ONCE into Spark 4's binary
@@ -625,7 +621,7 @@ object EventsQueries extends QueryModule {
       }
     }),
 
-    // Streaming MERGE-INTO-TARGET upsert, driver-checked (r11): the
+    // Streaming MERGE-INTO-TARGET upsert, driver-checked: the
     // SINK-side sibling of ev_stream_compact. Compact keeps latest-
     // per-key in ENGINE STATE and appends a changelog the reader must
     // compact; here the streaming query is STATELESS and foreachBatch
@@ -641,7 +637,7 @@ object EventsQueries extends QueryModule {
     // carries only latest-wins fields.
     "ev_stream_upsert" -> ((s, dir) => {
       import s.implicits._
-      // filesPerTrigger=2 (r21): same staggered-redeliver pairing as
+      // filesPerTrigger=2: same staggered-redeliver pairing as
       // ev_stream_dedup — copies still land in later batches, so the
       // merge still absorbs CROSS-BATCH duplicate delivery, in 3
       // batches (3 MERGE rounds) instead of 6.
@@ -658,7 +654,7 @@ object EventsQueries extends QueryModule {
       }
     }),
 
-    // STREAMING VERSIONED-TABLE COMMITS (r12): each micro-batch is an
+    // STREAMING VERSIONED-TABLE COMMITS: each micro-batch is an
     // APPEND COMMIT through the operators.VersionedTable protocol —
     // version = batchId, the batch's files plus the carried-forward
     // prior manifest, published by one atomic conditional create. The
@@ -683,7 +679,7 @@ object EventsQueries extends QueryModule {
       }
     }),
 
-    // STREAMING CHANGE FEED over the versioned table (r13) — the
+    // STREAMING CHANGE FEED over the versioned table — the
     // CONSUMER half ev_stream_commit's producer leaves open, served by
     // the engine's own DSv2 MicroBatchStream (`graft-changes`):
     // offsets are COMMIT VERSIONS, admission control serves one
@@ -703,7 +699,7 @@ object EventsQueries extends QueryModule {
         .orderBy("_commit_version", "doc_id")
     }),
 
-    // FULL CHANGE FEED over the versioned table (r13) — ev_stream_cdf's
+    // FULL CHANGE FEED over the versioned table — ev_stream_cdf's
     // append feed upgraded to serve DELETE commits too
     // (readChangeFeed=true, the Delta option of the same name): a
     // history with a merge-on-read DV delete drains as typed rows —
@@ -723,7 +719,7 @@ object EventsQueries extends QueryModule {
         .orderBy("_commit_version", "_change_type", "doc_id")
     }),
 
-    // UPDATE/COMPACT CHANGE FEED (r15) — the rewrite commits the feed
+    // UPDATE/COMPACT CHANGE FEED — the rewrite commits the feed
     // used to hard-fail on, served via their KIND annotations: a
     // KIND=update commit (stats-pruned copy-on-write UPDATE) replays
     // its rewritten file as update_preimage (old rows) +
@@ -774,16 +770,16 @@ object EventsQueries extends QueryModule {
       // CHANGELOG CHECKPOINTING (EventStreams.stateConf sets it): each
       // batch commits its O(batch) changelog instead of a full
       // O(state) snapshot — the dominant per-batch term for this
-      // drain. DrainProfile r20 (sf0.1, 3 reps interleaved):
+      // drain. DrainProfile (sf0.1, 3 reps interleaved):
       // dedup rocksdb 3.55/3.57/4.45 s vs heap 3.17/3.24/3.76 s —
       // the provider gap is down to the per-row JNI write cost, with
       // the snapshot upload off the commit path.
-      // filesPerTrigger=2 (r21, VERDICT r20 #4): the staggered staging
+      // filesPerTrigger=2: the staggered staging
       // keeps every re-delivery in a LATER batch than its original at
       // two files per trigger, so the cross-batch dedup property is
       // exercised in 3 data batches instead of 6 — halving the
       // per-batch RocksDB commit constant that dominated this drain
-      // (DrainProfile r21: ~0.4-0.6 s/batch at this state size). Both
+      // (DrainProfile: ~0.4-0.6 s/batch at this state size). Both
       // drop paths still run: copies of the last slice's final hour
       // are still inside the watermark horizon (dedup STATE drops
       // them), everything older is late-filtered.
@@ -837,7 +833,7 @@ object EventsQueries extends QueryModule {
         .orderBy("event_id")
     }),
 
-    // STREAMING SINK INTO THE VERSIONED TABLE (r13) — writeStream
+    // STREAMING SINK INTO THE VERSIONED TABLE — writeStream
     // .format("graft-table"): the exactly-once producer as a native V2
     // StreamingWrite (version = epoch + 1, replay skips at the
     // putIfAbsent commit point), two-drain checkpoint-resume, each
@@ -847,7 +843,7 @@ object EventsQueries extends QueryModule {
     "ev_stream_sink" -> ((s, dir) =>
       graft.streaming.EventStreams.sinkDrain(s, dir)),
 
-    // END-TO-END PIPELINE (r13) — both V2 connectors CHAINED through a
+    // END-TO-END PIPELINE — both V2 connectors CHAINED through a
     // stateful operator in ONE streaming query: versioned source table
     // (3 time-sliced commits) → graft-changes feed (one micro-batch
     // per commit, hard-asserted — the watermark advances between
@@ -863,7 +859,7 @@ object EventsQueries extends QueryModule {
     "ev_stream_pipeline" -> ((s, dir) =>
       graft.streaming.EventStreams.pipelineDrain(s, dir)),
 
-    // Streaming sink into a PARTITIONED graft table (r17): each
+    // Streaming sink into a PARTITIONED graft table: each
     // micro-batch routes rows to event_type=… files, the sink gets
     // manifest partition pruning from its first epoch (witnessed:
     // segment paths, several values, a value predicate scans exactly
@@ -907,7 +903,7 @@ object EventsQueries extends QueryModule {
       }
     }),
 
-    // FULL-OUTER stream-stream join (r12) — the last cell of the
+    // FULL-OUTER stream-stream join — the last cell of the
     // streaming join matrix (inner: ev_stream_attrib; left-outer:
     // ev_stream_funnel): BOTH unmatched sides emit null-padded rows
     // once the watermark proves their match window closed. The two
@@ -1001,7 +997,7 @@ object EventsQueries extends QueryModule {
       }
     }),
 
-    // STREAM-to-SCD2 TEMPORAL JOIN (r11): point-in-time enrichment —
+    // STREAM-to-SCD2 TEMPORAL JOIN: point-in-time enrichment —
     // each streamed view event joins the dimension VERSION that was
     // valid at its event time (feature-store PIT correctness: the
     // enrichment must never read a future version). The dimension is
@@ -1037,7 +1033,7 @@ object EventsQueries extends QueryModule {
       }
     }),
 
-    // transformWithState (r11): Spark 4's NEW arbitrary-state API —
+    // transformWithState: Spark 4's NEW arbitrary-state API —
     // the successor to mapGroupsWithState — driven end-to-end: per-user
     // MapState[type → count] composite state (entry-wise updates,
     // where the old API rewrites one whole value blob per key per
@@ -1064,7 +1060,7 @@ object EventsQueries extends QueryModule {
       }
     }),
 
-    // SCD TYPE-2 history build (r11): intervalize a keyed changelog
+    // SCD TYPE-2 history build: intervalize a keyed changelog
     // into [valid_from, valid_to) versions — the warehouse-history
     // sibling of ev_compact_latest (which keeps only the newest row;
     // SCD2 keeps every version with its validity interval). ONE window
@@ -1091,7 +1087,7 @@ object EventsQueries extends QueryModule {
         .orderBy("user_id", "event_type", "version")
     }),
 
-    // BEHAVIOR-FLOW TRANSITION MATRIX (r11): per-user adjacent
+    // BEHAVIOR-FLOW TRANSITION MATRIX: per-user adjacent
     // event-type transitions (the Markov chain behind every Sankey /
     // user-flow dashboard) plus each transition's share of its source
     // state's outgoing edges in exact ppm. One keyed window (lead over
@@ -1113,7 +1109,7 @@ object EventsQueries extends QueryModule {
         .orderBy("from_type", "to_type")
     }),
 
-    // A/B EXPERIMENT READOUT (r11): Welch's t statistic per event type
+    // A/B EXPERIMENT READOUT: Welch's t statistic per event type
     // between two deterministic variants (user_id parity — the hash-
     // split every experimentation system uses). The rel_corr_matrix
     // determinism policy applied to hypothesis testing: ONE scan, one
@@ -1122,7 +1118,7 @@ object EventsQueries extends QueryModule {
     // variants into one row — no join, no second pass), then mean/
     // variance/t as a scalar double expression over identical inputs,
     // round(6) for rendering (the rel_corr_matrix policy: DuckDB's
-    // int128-decimal→double cast can double-round 1 ulp apart from
+    // int128-decimal→double cast can land 1 ulp apart, double-rounded, from
     // Java's single-step BigDecimal conversion once Σx²'s integer
     // representation exceeds 2^53 — observed at sf0.01 — and the
     // 6-decimal rendering absorbs exactly that class of divergence).
@@ -1150,7 +1146,7 @@ object EventsQueries extends QueryModule {
         .orderBy("event_type")
     }),
 
-    // STREAMING SKETCH MAINTENANCE (r11) — the HLL family's streaming
+    // STREAMING SKETCH MAINTENANCE — the HLL family's streaming
     // face: per-event-type user sketches maintained INCREMENTALLY by a
     // running (unwindowed, update-mode) streaming aggregate across
     // micro-batches, drained as a changelog and compacted to each
@@ -1211,7 +1207,7 @@ object EventsQueries extends QueryModule {
       }
     }),
 
-    // SKETCH SET ALGEBRA (r11) — audience overlap without a distinct
+    // SKETCH SET ALGEBRA — audience overlap without a distinct
     // self-join: per-event-type HLL sketches of the user set, then for
     // every type PAIR the union estimate comes from one sketch merge
     // and the intersection via inclusion–exclusion (|A∩B| ≈ |A|+|B|−
@@ -1273,7 +1269,7 @@ object EventsQueries extends QueryModule {
       }
     }),
 
-    // CUPED VARIANCE REDUCTION (r11) — the readout every mature
+    // CUPED VARIANCE REDUCTION — the readout every mature
     // experimentation platform layers over ev_abtest's plain Welch t:
     // each user's PRE-period metric is used as a control covariate for
     // their POST-period metric, removing the between-user variance the
@@ -1282,7 +1278,7 @@ object EventsQueries extends QueryModule {
     // (min+max) div 2, one 1-row broadcast aggregate) keyed on
     // to_date(ts_utc) — NOT day-of-month, which would fold same-day-of-
     // month rows from different months together if the fixture ever
-    // spans more than one month (ADVICE r11). Same
+    // spans more than one month. Same
     // determinism policy as ev_abtest: per-user X/Y are EXACT decimal
     // sums (one shuffle on user_id), the pooled sufficient statistics
     // (n, ΣX, ΣY, ΣXY, ΣX²) and per-variant (n_v, ΣX_v, ΣY_v) are one
@@ -1326,12 +1322,12 @@ object EventsQueries extends QueryModule {
         .orderBy("variant")
     }),
 
-    // EXPONENTIAL SMOOTHING (r11) — the EWMA baseline behind burn-rate
+    // EXPONENTIAL SMOOTHING — the EWMA baseline behind burn-rate
     // alerts and simple demand forecasts: per-day revenue smoothed
     // with α=0.2. The time axis is the EPOCH DAY
     // (datediff(to_date(ts_utc), 1970-01-01)) — a total order across
-    // months, unlike the r11 day-of-month key that would interleave
-    // rows from different months into one series (ADVICE r11) —
+    // months, unlike a day-of-month key that would interleave
+    // rows from different months into one series —
     // entirely in exact integer micro-units so the
     // sequential recurrence l_d = (2·x_d + 8·l_{d-1}) div 10 replays
     // identically anywhere (truncating division on non-negative
@@ -1364,7 +1360,7 @@ object EventsQueries extends QueryModule {
       out.toSeq.toDF("day", "rev_e6", "ewma_e6").orderBy("day")
     }),
 
-    // MAX-CONCURRENT-SESSIONS via a day-partitioned SWEEP LINE (r11):
+    // MAX-CONCURRENT-SESSIONS via a day-partitioned SWEEP LINE:
     // interval-overlap counting without the O(n²) interval self-join.
     // Sessions (the 30-min-gap rule shared with ev_sessions) become
     // ±1 deltas at [start, end+1µs); a running sum over the deltas IS
@@ -1410,7 +1406,7 @@ object EventsQueries extends QueryModule {
         .orderBy("epoch_day")
     }),
 
-    // MERGEABLE-SKETCH ROLLUP (r11): per-day DataSketches HLL sketches
+    // MERGEABLE-SKETCH ROLLUP: per-day DataSketches HLL sketches
     // of the user set, window-UNIONED into a cumulative distinct-user
     // curve — the incremental distinct pattern a 100-TB pipeline runs
     // instead of rescanning the fact: build one small sketch row per

@@ -36,7 +36,7 @@ object KernelQueries extends QueryModule {
         .orderBy("ch")
     }),
 
-    // COMBINER wordcount (r11): the same client through
+    // COMBINER wordcount: the same client through
     // MapReduce.runCombined — the Hadoop combiner contract the
     // reference kernel lacks. Where mr_wordcount ships EVERY (word, 1)
     // pair through the exchange and reduces whole groups,
@@ -82,7 +82,7 @@ object KernelQueries extends QueryModule {
         .orderBy("cnt")
     }),
 
-    // SECONDARY SORT (r10; lifted into the kernel API in r11) — the
+    // SECONDARY SORT (lifted into the kernel API) — the
     // classic MapReduce pattern the reference's kernel cannot express:
     // its R3 sort orders by K2 ONLY, so reduce sees values in arbitrary
     // order and every order-sensitive reduce (sequence reconstruction,
@@ -112,7 +112,7 @@ object KernelQueries extends QueryModule {
         .orderBy("user_id")
     }),
 
-    // SEQUENCE-PATTERN MATCH through the kernel (r11): the
+    // SEQUENCE-PATTERN MATCH through the kernel: the
     // MATCH_RECOGNIZE workload — users completing signup → view →
     // purchase with each step strictly later — as an O(1)-memory state
     // machine over runSorted's (ts_us, event_id) group order. SQL needs

@@ -80,7 +80,7 @@ object MultimodalQueries extends QueryModule {
         .orderBy("doc_id")
     }),
 
-    // AUDIO ENERGY FEATURES (r12) — the per-clip loudness profile an
+    // AUDIO ENERGY FEATURES — the per-clip loudness profile an
     // audio-corpus quality filter thresholds on (silence/clipping
     // screens, VAD pre-filtering): sample count, Σ|x|, Σx² (the RMS
     // numerator) and peak amplitude per audio doc, computed from PCM16
@@ -120,7 +120,7 @@ object MultimodalQueries extends QueryModule {
         .orderBy("doc_id", "frame_idx")
     }),
 
-    // TEMPORAL FRAME DELTA (r11) — the scene-cut/keyframe signal: the
+    // TEMPORAL FRAME DELTA — the scene-cut/keyframe signal: the
     // L1 pixel difference between consecutive decoded frames (row 0,
     // the row every frame populates), per video doc. Real decode path
     // (javax.imageio GIF rasters, consecutive reads of the same
@@ -153,7 +153,7 @@ object MultimodalQueries extends QueryModule {
         .orderBy("doc_id")
     }),
 
-    // PERCEPTUAL HASH (r11): 64-bit average-hash per image computed
+    // PERCEPTUAL HASH: 64-bit average-hash per image computed
     // from the REAL decoded raster — 8×8 block pixel sums (truncating
     // grid boundaries), bit set where block mean exceeds the global
     // mean, compared in cross-multiplied exact BIGINTs (block_sum·w·h
@@ -212,8 +212,7 @@ object MultimodalQueries extends QueryModule {
     // the generators.
     "mm_ingest" -> ((s, dir) => {
       import s.implicits._
-      val tmp = graft.sources.GraftSession.stagingDir("graft_mm_ingest_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_mm_ingest_") { tmp =>
         Tables.documents(s, dir).select($"doc_id", $"text")
           .where($"doc_id" < 60).collect().foreach { r =>
             val id = r.getLong(0)
@@ -247,11 +246,8 @@ object MultimodalQueries extends QueryModule {
           .toDF("doc_id", "media_type", "container", "width", "height",
             "channels", "n_frames", "duration_ms")
           .orderBy("doc_id")
-        // Materialize before the temp files vanish: the returned plan
-        // must own no on-disk state (Verify/Bench re-run it freely).
-        val rows = parsed.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), parsed.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        parsed
+      }
     }),
 
     // Batched processing shape: KeyValueGroupedDataset.mapGroups over an

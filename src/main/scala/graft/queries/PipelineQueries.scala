@@ -50,7 +50,7 @@ object PipelineQueries extends QueryModule {
     "o_orderstatus", "o_totalprice", "o_orderdate", "o_orderpriority",
     "o_status_sparse")
 
-  /** `onlyCols` (r16) restricts the profile to a subset of the
+  /** `onlyCols` restricts the profile to a subset of the
     * profiled columns — the sampled-audit entry: recomputing the
     * EXACT (Expand-based) profile for a fraction of the columns costs
     * that fraction of the Expand replication. Query-surface callers
@@ -100,7 +100,7 @@ object PipelineQueries extends QueryModule {
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
-    // INCREMENTAL DEDUP (r11) — the shape ingestion actually runs: a
+    // INCREMENTAL DEDUP — the shape ingestion actually runs: a
     // NEW batch (the doc_id % 4 == 3 shard, the "today's crawl"
     // stand-in) deduped against the EXISTING corpus and against
     // earlier rows of itself, while the existing corpus is NEVER
@@ -195,7 +195,7 @@ object PipelineQueries extends QueryModule {
     // screens — emails, phone-shaped tokens, credit cards (with a LUHN
     // checksum column proving the card class is checkable, not just
     // shape-matched), SSNs, IPv4 addresses, and AKIA-style access keys
-    // (r12 widened the r10 email/phone pair per the r11 verdict). The
+    // (widened from an email/phone pair). The
     // fixture text is synthetic word salad, so the PII is injected
     // deterministically from doc_id first (same expression on both
     // engines) — the query under test is the scrub itself:
@@ -352,7 +352,7 @@ object PipelineQueries extends QueryModule {
         .orderBy("lang", "rk")
     }),
 
-    // Weighted sampling WITHOUT replacement (r11): Efraimidis–Spirakis
+    // Weighted sampling WITHOUT replacement: Efraimidis–Spirakis
     // A-ES — every row draws key = u^(1/w) with u uniform in (0,1] and
     // w its weight (n_chars here: longer docs proportionally likelier,
     // a standard pretraining mixing policy); the global top-k by key
@@ -378,7 +378,7 @@ object PipelineQueries extends QueryModule {
         .orderBy("doc_id")
     }),
 
-    // END-TO-END CORPUS PIPELINE (r11) — the composition proof: the
+    // END-TO-END CORPUS PIPELINE — the composition proof: the
     // four pipeline stages a pretraining-data run actually chains —
     // quality filter (pipe_clean_corpus's rules) → fingerprint dedup
     // keep-lowest (pipe_incr_dedup's word-set key) → benchmark
@@ -445,7 +445,7 @@ object PipelineQueries extends QueryModule {
         .orderBy("lang")
     }),
 
-    // IDEMPOTENT PARTITION BACKFILL (r11) — dynamic partition
+    // IDEMPOTENT PARTITION BACKFILL — dynamic partition
     // overwrite as the driver-checked repair primitive: a day-
     // partitioned table gets one day CORRUPTED (that day's rows
     // doubled, written with partitionOverwriteMode=dynamic — an
@@ -461,8 +461,7 @@ object PipelineQueries extends QueryModule {
     // hash-match the profile DuckDB computes from the original events.
     "pipe_backfill" -> ((s, dir) => {
       import s.implicits._
-      val stage = graft.sources.GraftSession.stagingDir("graft_bf_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_bf_") { stage =>
         val path = stage.resolve("events_by_day").toString
         val ev = Tables.events(s, dir)
           .select($"event_id", $"user_id", $"event_type", $"value",
@@ -492,12 +491,11 @@ object PipelineQueries extends QueryModule {
           .selectExpr("d", "n_events", "n_users",
             "CAST(sum_value * 1000000 AS BIGINT) AS sum_value_e6")
           .orderBy("d")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(stage)
+        out
+      }
     }),
 
-    // Small-file COMPACTION (r11): the table-maintenance op every
+    // Small-file COMPACTION: the table-maintenance op every
     // long-lived 100 TB corpus needs — streaming ingest and per-task
     // writers leave thousands of KB-sized parquet files per partition,
     // and scan/planning cost degrades with file count, not byte count.
@@ -519,8 +517,7 @@ object PipelineQueries extends QueryModule {
     // cluster (same deployment note as mm_ingest).
     "pipe_compact_files" -> ((s, dir) => {
       import s.implicits._
-      val tmp = graft.sources.GraftSession.stagingDir("graft_compact_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_compact_") { tmp =>
         val frag = tmp.resolve("fragmented").toString
         val comp = tmp.resolve("compacted").toString
         Tables.documents(s, dir).repartition(64).write.parquet(frag)
@@ -543,14 +540,11 @@ object PipelineQueries extends QueryModule {
             sum($"n_chars").as("sum_chars"),
             expr("bit_xor(h)").as("content_sig"))
           .orderBy("lang")
-        // Materialize before the staging tree vanishes (mm_ingest
-        // pattern): the returned plan must own no on-disk state.
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // CDC ROUND-TRIP with BEFORE/AFTER images (r11): the Debezium-
+    // CDC ROUND-TRIP with BEFORE/AFTER images: the Debezium-
     // envelope changelog shape — each change carries its pre-image, so
     // the batch is INVERTIBLE: undo(apply(base, batch), batch) ≡ base.
     // apply is the pipe_cdc_apply single full-outer MERGE; undo is the
@@ -600,7 +594,7 @@ object PipelineQueries extends QueryModule {
         .orderBy("lang")
     }),
 
-    // SCHEMA EVOLUTION read (r11): a long-lived corpus directory holds
+    // SCHEMA EVOLUTION read: a long-lived corpus directory holds
     // files written under SUCCESSIVE schemas — here v1 (doc_id, lang,
     // n_chars) and v2 adding a `quality` column. `mergeSchema`
     // reconciles the per-file footers into the union schema at PLAN
@@ -613,8 +607,7 @@ object PipelineQueries extends QueryModule {
     // discipline as pipe_compact_files.
     "pipe_schema_evolve" -> ((s, dir) => {
       import s.implicits._
-      val tmp = graft.sources.GraftSession.stagingDir("graft_evolve_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_evolve_") { tmp =>
         val root = tmp.resolve("table").toString
         val docs = Tables.documents(s, dir)
         docs.where($"doc_id" % 2 === 0)
@@ -633,9 +626,8 @@ object PipelineQueries extends QueryModule {
             sum($"quality".cast("decimal(18,2)")).cast("double")
               .as("sum_quality"))
           .orderBy("lang")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
     // Sequence packing (concat-and-chunk): lay every doc's tokens out
@@ -658,7 +650,7 @@ object PipelineQueries extends QueryModule {
       // is the whole two-level trick), so a single partition is
       // intended. WindowExec's "No Partition Defined" warning fires for
       // it; a constant partitionBy(lit(0)) does not survive constant
-      // folding (verified r10), so the harness mains silence that
+      // folding (verified), so the harness mains silence that
       // logger instead (GraftSession.quietWindowExecWarning) and
       // PlanShapeSpec pins the corpus-side window's partition keys.
       val bucketBase = d.groupBy($"pid").agg(sum($"n_tok").as("bsum"))
@@ -803,7 +795,7 @@ object PipelineQueries extends QueryModule {
         .orderBy("lang", "source")
     }),
 
-    // DATA-CONTRACT EXPECTATION SUITE (r11): the Deequ/Great-
+    // DATA-CONTRACT EXPECTATION SUITE: the Deequ/Great-
     // Expectations gate an ingest runs before training — declared
     // constraints evaluated in MINIMAL passes. All single-table
     // constraints for one table ride ONE partial+final aggregate scan
@@ -858,7 +850,7 @@ object PipelineQueries extends QueryModule {
         .orderBy("constraint_name")
     }),
 
-    // CDC APPLY / MERGE (r10): apply a keyed change batch (insert /
+    // CDC APPLY / MERGE: apply a keyed change batch (insert /
     // update / delete op codes) to a base snapshot — MERGE INTO
     // semantics as one FULL-OUTER join on the primary key, the shape
     // every open-table-format merge lowers to. Complements
@@ -896,7 +888,7 @@ object PipelineQueries extends QueryModule {
         .orderBy("doc_id")
     }),
 
-    // CDC APPLY with a CONFLICT-BEARING batch (r11): pipe_cdc_apply
+    // CDC APPLY with a CONFLICT-BEARING batch: pipe_cdc_apply
     // assumes at most one change per key — a real MERGE batch carries
     // several (a row updated then deleted, inserted then updated
     // within one commit window) and must resolve LATEST-WINS first.
@@ -947,7 +939,7 @@ object PipelineQueries extends QueryModule {
         .orderBy("doc_id")
     }),
 
-    // Dataset PROFILE (r10): the schema-validation report every ingest
+    // Dataset PROFILE: the schema-validation report every ingest
     // runs before training — per column: row count, null count + ppm,
     // exact distinct count, and canonical min/max renderings. ONE scan,
     // one aggregate row, stacked to long format AFTER aggregation (the
@@ -963,7 +955,7 @@ object PipelineQueries extends QueryModule {
     // sketches in place of the exact distincts.
     "pipe_profile" -> ((s, dir) => profilePlan(s, dir, exact = true)),
 
-    // Sketch PROFILE (r11): the variant you actually run at 100 TB.
+    // Sketch PROFILE: the variant you actually run at 100 TB.
     // Same one-scan stacked shape as pipe_profile, but the per-column
     // distinct counts are HLL++ sketches (`approx_count_distinct`,
     // rsd=0.01) — single-pass partial+final aggregation, NO Expand, so
@@ -1019,7 +1011,7 @@ object PipelineQueries extends QueryModule {
       }
     }),
 
-    // QUALITY FILTER FUNNEL (r12) — the ablation table every corpus
+    // QUALITY FILTER FUNNEL — the ablation table every corpus
     // release publishes (the Dolma/FineWeb-style report): the cleaning
     // rules applied in a FIXED order, with per-stage input/drop/
     // survivor counts, so a reviewer can see which rule costs what.

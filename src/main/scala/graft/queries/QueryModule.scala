@@ -78,12 +78,12 @@ object QueryModule {
     * through intervals/doubles). The ntz→timestamp cast is wall-clock-
     * preserving under the UTC session GraftSession pins; the DuckDB
     * rendering is `epoch_us(ts)` (identical values — both engines read
-    * the same TIMESTAMP(MICROS) parquet since the r10 fixture refresh).
+    * the same TIMESTAMP(MICROS) parquet since the fixture refresh).
     * Same byte-identity policy as [[Tokens]]. */
   val TsUs = "unix_micros(CAST(ts AS TIMESTAMP))"
 
   /** Session-scoped temp view over a fixture table, (re-)registered at
-    * plan-build time (r21): SQL-text statements read `g_src_<name>`
+    * plan-build time: SQL-text statements read `g_src_<name>`
     * instead of `parquet.`<path>`` — a bare-path table reference runs
     * parquet schema inference on EVERY statement execution (~70-150 ms
     * of driver work + a footer job), while the view resolves through
@@ -115,16 +115,16 @@ object QueryModule {
     * the plan that actually executed, not on a LocalTableScan. */
   def gated(name: String, df: DataFrame)(check: Array[Row] => Unit): DataFrame = {
     gatedPlans.put(name, df)
-    val rows = df.collect()
-    check(rows)
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    val local = graft.sources.GraftSession.materialize(df.sparkSession, df)
+    check(local.collect())
+    local
   }
 
   /** Last inner plan per gated query name (test/diagnostic hook). */
   val gatedPlans =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  /** AUDIT FRACTION (r16) for the in-path gates whose ground-truth
+  /** AUDIT FRACTION for the in-path gates whose ground-truth
     * recomputation is EXHAUSTIVE — the full exact pair join
     * (dedup_minhash_lsh), a whole-table collect (emb_kmeans), the
     * Expand-based exact profile (pipe_profile_approx). At fixture
@@ -176,7 +176,7 @@ trait QueryModule {
   /** name -> equivalent DuckDB SQL over views named like the parquet
     * tables, same ORDER BY, same column aliases.
     *
-    * Type-parity rule (learned the hard way in round 2): every DuckDB
+    * Type-parity rule (learned the hard way): every DuckDB
     * `sum()` over integer columns returns HUGEINT (int128) — the driver
     * hashes serialized values, so rows can match while the hash fails.
     * Wrap EVERY integer aggregate (and any arithmetic derived from

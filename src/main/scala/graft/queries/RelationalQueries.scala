@@ -83,7 +83,7 @@ object RelationalQueries extends QueryModule {
         .orderBy("r_name", "n_name")
     }),
 
-    // INCREMENTAL JOIN-VIEW MAINTENANCE (r12) — the delta algebra
+    // INCREMENTAL JOIN-VIEW MAINTENANCE — the delta algebra
     // ev_incr_refresh's aggregate merge cannot express: a materialized
     // JOIN view V = A ⋈ B refreshed under inserts on BOTH sides via
     //   ΔV = ΔA⋈B_old ∪ A_old⋈ΔB ∪ ΔA⋈ΔB
@@ -115,8 +115,7 @@ object RelationalQueries extends QueryModule {
       def view(a: DataFrame, b: DataFrame): DataFrame =
         a.join(b, $"l_orderkey" === $"o_orderkey")
           .select($"o_orderpriority", $"l_extendedprice", $"l_discount")
-      val tmp = graft.sources.GraftSession.stagingDir("graft_ivmj_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_ivmj_") { tmp =>
         view(aOld, bOld).write.parquet(s"$tmp/view")
         val stored = s.read.parquet(s"$tmp/view")
         val bOldScoped = bOld.join(
@@ -138,9 +137,8 @@ object RelationalQueries extends QueryModule {
         // (the staged view dies with the query), so PlanShapeSpec
         // reads the real refresh plan from here.
         QueryModule.gatedPlans.put("rel_incr_join", out)
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
     // Skew-mitigated (salted) equi-join: at 100 TB a hot join key (one
@@ -400,7 +398,7 @@ object RelationalQueries extends QueryModule {
     }),
 
     // Exact distinct aggregation (expand + two-phase agg under the hood).
-    // Correlation MATRIX (r11) — the numeric-feature screening pass a
+    // Correlation MATRIX — the numeric-feature screening pass a
     // dataset audit runs before training: pairwise Pearson r over the
     // measure columns, in ONE scan. Never `corr()` directly at oracle
     // parity: its double accumulation is order-dependent (partial
@@ -514,7 +512,7 @@ object RelationalQueries extends QueryModule {
       // cheap pushed-predicate count — instead of a fixture-scale
       // constant: a hardcoded estimate saturates toward fpp≈1 once the
       // build side outgrows it at larger SFs, silently degrading the
-      // prefilter to pure overhead (ADVICE r4). ~8 bits/key ≈ 2% fpp
+      // prefilter to pure overhead. ~8 bits/key ≈ 2% fpp
       // at the optimal hash count, so the filter stays selective at
       // any scale for the price of a metadata-cheap pre-scan — the
       // same cardinality-then-build sequence AQE's InjectRuntimeFilter
@@ -523,7 +521,7 @@ object RelationalQueries extends QueryModule {
         s.table("orders").where($"o_orderpriority" === "1-URGENT").count(), 1L)
       val numBits = math.max(nUrgent * 8L, 64L)
       s.sql(
-        // NTZ cast: date_trunc yields an INSTANT, and since the r19
+        // NTZ cast: date_trunc yields an INSTANT, and since the
         // TIMESTAMP_MICROS output pin an instant writes
         // isAdjustedToUTC=true — which DuckDB reads as TIMESTAMPTZ and
         // the driver's type compare flags. The UTC session makes the
@@ -545,7 +543,7 @@ object RelationalQueries extends QueryModule {
     "rel_month_agg" -> ((s, dir) => {
       import s.implicits._
       Tables.orders(s, dir)
-        // NTZ cast — same reason as rel_bloom_prefilter's (the r19
+        // NTZ cast — same reason as rel_bloom_prefilter's (the
         // TIMESTAMP_MICROS pin makes the instant annotation explicit).
         .groupBy(date_trunc("month", $"o_orderdate")
           .cast(org.apache.spark.sql.types.TimestampNTZType).as("month"))
@@ -575,19 +573,16 @@ object RelationalQueries extends QueryModule {
     // local relation before the temp tables are dropped, so the
     // returned plan owns no external state. See operators.BucketedJoin.
     "rel_bucketed_join" -> ((s, dir) => {
-      val wh = graft.sources.GraftSession.stagingDir("graft_bkt_")
-      try {
-        graft.operators.BucketedJoin.writeBucketed(s, dir, wh.toString)
-        val agg = graft.operators.BucketedJoin.plan(s)
-        val rows = agg.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema)
-      } finally {
-        graft.operators.BucketedJoin.dropTables(s)
-        graft.streaming.EventStreams.deleteTree(wh)
+      graft.sources.GraftSession.staged(s, "graft_bkt_") { wh =>
+        try {
+          graft.operators.BucketedJoin.writeBucketed(s, dir, wh.toString)
+          graft.sources.GraftSession.materialize(s,
+            graft.operators.BucketedJoin.plan(s))
+        } finally graft.operators.BucketedJoin.dropTables(s)
       }
     }),
 
-    // PARQUET AGGREGATE PUSHDOWN (r11) — the third scan-elimination
+    // PARQUET AGGREGATE PUSHDOWN — the third scan-elimination
     // mechanism next to DPP (partition dirs) and bucket pruning (hash
     // files): an unfiltered COUNT/MIN/MAX is answered from parquet
     // FOOTER STATISTICS — row-group counts and column min/max — without
@@ -626,15 +621,15 @@ object RelationalQueries extends QueryModule {
             min(col("l_quantity")).as("min_qty"),
             max(col("l_quantity")).as("max_qty"))
         QueryModule.gatedPlans.put("rel_agg_pushdown", out)
-        val rows = out.collect()
+        val local = graft.sources.GraftSession.materialize(s, out)
         require(out.queryExecution.executedPlan.toString
             .contains("PushedAggregation: [COUNT(*)"),
           "rel_agg_pushdown: aggregate did not reach the parquet footer")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        local
       }
     }),
 
-    // COST-BASED BROADCAST (r12) — ANALYZE-computed statistics driving
+    // COST-BASED BROADCAST — ANALYZE-computed statistics driving
     // a physical join choice, the planner integration every warehouse
     // engine builds stats collection FOR: file-size estimation cannot
     // see through a filter (a Filter's size estimate without column
@@ -717,14 +712,13 @@ object RelationalQueries extends QueryModule {
               "rel_cbo_broadcast: the control (CBO off, same threshold) " +
                 "must fall back to a shuffle join — otherwise the stats " +
                 "were not the deciding input")
-            val rows = out.collect()
-            s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+            graft.sources.GraftSession.materialize(s, out)
           }
         } finally s2.sql(s"DROP TABLE IF EXISTS $tname")
       }
     }),
 
-    // AUTO-INJECTED RUNTIME BLOOM FILTER (r12) — the optimizer-side
+    // AUTO-INJECTED RUNTIME BLOOM FILTER — the optimizer-side
     // sibling of the hand-built rel_bloom_prefilter: with runtime
     // filter injection enabled, Catalyst notices the selective filter
     // on the orders side of the shuffle join and REWRITES the lineitem
@@ -761,12 +755,11 @@ object RelationalQueries extends QueryModule {
         require(plan.contains("might_contain"),
           "rel_runtime_filter: the optimizer did not inject the runtime " +
             "bloom filter onto the fact-side scan")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.materialize(s, out)
       }
     }),
 
-    // ANSI-SAFE ARITHMETIC (r12) — the try_* error-handling surface
+    // ANSI-SAFE ARITHMETIC — the try_* error-handling surface
     // (Spark 4 runs ANSI mode by default, so overflow/bad-cast/÷0 are
     // RUNTIME ERRORS — one malformed row kills a 100-TB job at hour
     // three): try_cast / try_divide / try_add turn the error lanes
@@ -803,7 +796,7 @@ object RelationalQueries extends QueryModule {
           sum($"a" % 1000).as("sum_add_mod"))
     }),
 
-    // COLUMNAR CACHE REUSE (r12) — the materialize-once surface:
+    // COLUMNAR CACHE REUSE — the materialize-once surface:
     // a filtered projection is persisted in Spark's compressed
     // columnar cache and TWO different aggregates run over it; the
     // in-path witness requires both plans to scan InMemoryTableScan
@@ -844,12 +837,11 @@ object RelationalQueries extends QueryModule {
         }
         val out = a.crossJoin(b) // two 1-row aggregates composed
         QueryModule.gatedPlans.put("rel_cache_reuse", out)
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.materialize(s, out)
       } finally cached.unpersist()
     }),
 
-    // NULL-SAFE EQUALITY JOIN (r12) — `<=>` / IS NOT DISTINCT FROM:
+    // NULL-SAFE EQUALITY JOIN — `<=>` / IS NOT DISTINCT FROM:
     // ordinary equi-joins DROP null keys (NULL = NULL is UNKNOWN),
     // but entity-resolution joins on partially-populated keys need
     // NULL to match NULL. The semantic point pairs with rel_null_anti
@@ -888,7 +880,7 @@ object RelationalQueries extends QueryModule {
       out
     }),
 
-    // SQL SCRIPTING (r12) — Spark 4's procedural surface (compound
+    // SQL SCRIPTING — Spark 4's procedural surface (compound
     // BEGIN..END, DECLARE VARIABLE, scalar-subquery assignment): the
     // two-phase "compute a data-driven parameter, then use it" shape
     // that otherwise needs a driver round trip (collect the p90, bake
@@ -915,7 +907,7 @@ object RelationalQueries extends QueryModule {
              |END""".stripMargin)
       }),
 
-    // LATERAL CORRELATED SUBQUERY (r12) — the per-row-subquery surface
+    // LATERAL CORRELATED SUBQUERY — the per-row-subquery surface
     // (SQL:1999 LATERAL): for each qualifying order, the top-2
     // lineitems by price from a correlated, ordered, LIMITed
     // derived table. The naive reading is a nested loop (one subquery
@@ -939,7 +931,7 @@ object RelationalQueries extends QueryModule {
            |WHERE o_totalprice > 400000
            |ORDER BY o_orderkey, l.l_linenumber""".stripMargin)
       QueryModule.gatedPlans.put("rel_lateral", out)
-      // Node-CLASS checks, not plan-string substrings (r13, per
+      // Node-CLASS checks, not plan-string substrings (per
       // verdict): operator display names drift across Spark versions,
       // the physical node classes are the stable contract.
       import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -962,7 +954,7 @@ object RelationalQueries extends QueryModule {
       out
     }),
 
-    // RECURSIVE CTE (r12) — iteration INSIDE one declarative query
+    // RECURSIVE CTE — iteration INSIDE one declarative query
     // (SQL:1999 WITH RECURSIVE, new in Spark 4.x): every other
     // iterative shape here (PageRank, CC, k-means) hand-rolls a
     // driver loop; the recursive CTE pushes the loop into the engine,
@@ -989,7 +981,7 @@ object RelationalQueries extends QueryModule {
            |FROM d GROUP BY depth ORDER BY depth""".stripMargin)
     }),
 
-    // NULL-AWARE ANTI JOIN (r12) — the NOT IN correctness trap: one
+    // NULL-AWARE ANTI JOIN — the NOT IN correctness trap: one
     // NULL in the subquery makes x NOT IN (...) UNKNOWN for EVERY x,
     // so the branch over the NULL-bearing subquery must return ZERO
     // rows, while the NULL-free branch anti-joins normally. A naive
@@ -1030,7 +1022,7 @@ object RelationalQueries extends QueryModule {
       out
     }),
 
-    // ORDERED STRING AGGREGATION (r11) — the LISTAGG/GROUP_CONCAT
+    // ORDERED STRING AGGREGATION — the LISTAGG/GROUP_CONCAT
     // surface: per priority, the top-5 orders by price rendered as one
     // ordered comma-joined string. Determinism is the whole operator
     // here: an unordered collect_list depends on partitioning, so the
@@ -1056,7 +1048,7 @@ object RelationalQueries extends QueryModule {
         .orderBy("o_orderpriority")
     }),
 
-    // MULTI-FORMAT SOURCE/SINK ROUNDTRIP (r11): the same orders slice
+    // MULTI-FORMAT SOURCE/SINK ROUNDTRIP: the same orders slice
     // written to csv, json, orc and xml, read back with the explicit
     // schema (no inference — the production contract), and aggregated
     // per format. All four rows must carry IDENTICAL numbers — and
@@ -1071,8 +1063,7 @@ object RelationalQueries extends QueryModule {
     // SPARK_GRAFT_STAGING relocates on a real cluster.
     "rel_source_roundtrip" -> ((s, dir) => {
       import s.implicits._
-      val stage = graft.sources.GraftSession.stagingDir("graft_fmt_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_fmt_") { stage =>
         val slice = Tables.orders(s, dir)
           .select($"o_orderkey", $"o_custkey", $"o_orderstatus",
             $"o_orderpriority", $"o_totalprice")
@@ -1102,12 +1093,11 @@ object RelationalQueries extends QueryModule {
                 .cast("double").as("revenue"))
             .select(lit(f).as("format"), $"n", $"n_cust", $"revenue")
         }.reduce(_.unionAll(_))
-        val rows = perFormat.orderBy("format").collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), perFormat.schema)
-      } finally graft.streaming.EventStreams.deleteTree(stage)
+        perFormat.orderBy("format")
+      }
     }),
 
-    // Avro interchange (r17) — the commonest streaming-interchange
+    // Avro interchange — the commonest streaming-interchange
     // format a pipeline ingests, WITHOUT the optional spark-avro
     // module (absent here; Avro core only): graft.sources.AvroIO
     // writes one container file per partition executor-side (Hadoop
@@ -1119,8 +1109,7 @@ object RelationalQueries extends QueryModule {
     // the READ-BACK frame, so the whole loop is on the hook.
     "rel_source_avro" -> ((s, dir) => {
       import s.implicits._
-      val stage = graft.sources.GraftSession.stagingDir("graft_avro_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_avro_") { stage =>
         val slice = Tables.orders(s, dir)
           .select($"o_orderkey", $"o_custkey", $"o_totalprice",
             when($"o_custkey" % 7 === 0, lit(null))
@@ -1139,9 +1128,8 @@ object RelationalQueries extends QueryModule {
               .cast("double").as("revenue"))
           .select(lit("avro").as("format"), $"n", $"n_cust", $"n_prio",
             $"revenue")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(stage)
+        out
+      }
     }),
 
     // Cartesian product (tiny dims only — the one shape that must never

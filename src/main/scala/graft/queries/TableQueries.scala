@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.operators.VersionedTable
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,11 +12,6 @@ import org.apache.spark.sql.functions._
   * `graftcat` catalog.
   */
 object TableQueries extends QueryModule {
-
-  /** Session settings that name the `graftcat` catalog over `root`. */
-  private def graftcat(root: java.nio.file.Path): Seq[(String, String)] = Seq(
-    "spark.sql.catalog.graftcat" -> "graft.sources.GraftCatalog",
-    "spark.sql.catalog.graftcat.root" -> root.toString)
 
   /** Session settings of the storage-partitioned joins: broadcast and
     * AQE pinned off, V2 bucketing with partition-value padding on, and
@@ -39,7 +35,6 @@ object TableQueries extends QueryModule {
   private def stageVersionHistory(
       s: SparkSession, dir: String, table: java.nio.file.Path): Unit = {
     import s.implicits._
-    import graft.operators.VersionedTable
     val base = Tables.documents(s, dir)
       .select($"doc_id", $"lang", $"n_chars")
     VersionedTable.commit(s, table, 0L, base)
@@ -69,7 +64,7 @@ object TableQueries extends QueryModule {
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
-    // VERSIONED-TABLE COMMIT PROTOCOL (r12) — the manifest/commit-log
+    // VERSIONED-TABLE COMMIT PROTOCOL — the manifest/commit-log
     // layer (operators.VersionedTable) the whole CDC/compaction/
     // backfill family writes through in production: data files mean
     // nothing until a numbered manifest names them, the commit point
@@ -96,9 +91,7 @@ object TableQueries extends QueryModule {
     // the driver hash-proves every snapshot, not just the latest.
     "pipe_table_commit" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vtbl_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vtbl_") { tmp =>
         val table = tmp.resolve("table")
         stageVersionHistory(s, dir, table)
         VersionedTable.failedCommit(s, table, 3L,
@@ -122,14 +115,11 @@ object TableQueries extends QueryModule {
             .select(lit(v).as("version"), $"n_rows", $"sum_chars",
               $"n_langs", $"content_sig")
         }.reduce(_ unionAll _).orderBy("version")
-        // Materialize before the staging tree vanishes (the
-        // pipe_compact_files discipline).
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // TIME-TRAVEL READ (r12) — the consumer half of the commit
+    // TIME-TRAVEL READ — the consumer half of the commit
     // protocol above, proven at FULL ROW fidelity: after v2 is
     // committed (append visible at latest), a read AT VERSION 1 must
     // return exactly the v1 snapshot — every doc_id/lang/n_chars hash-
@@ -143,14 +133,13 @@ object TableQueries extends QueryModule {
     // and resolving a never-committed version must fail loudly.
     "pipe_time_travel" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vttt_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vttt_") { tmp =>
         val table = tmp.resolve("table")
         stageVersionHistory(s, dir, table)
         val nLatest = VersionedTable.read(s, table).count()
         val v1 = VersionedTable.read(s, table, Some(1L))
-        val rows = v1.orderBy("doc_id").collect()
+        val local = graft.sources.GraftSession.materialize(s, v1.orderBy("doc_id"))
+        val rows = local.collect()
         require(nLatest > rows.length,
           s"pipe_time_travel: latest ($nLatest rows) must see the v2 " +
             s"append beyond v1 (${rows.length} rows)")
@@ -158,11 +147,11 @@ object TableQueries extends QueryModule {
           VersionedTable.read(s, table, Some(5L))).isFailure
         require(missing,
           "pipe_time_travel: reading a never-committed version must fail")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), v1.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        local
+      }
     }),
 
-    // MANIFEST FILE SKIPPING (r12) — the data-skipping half of the
+    // MANIFEST FILE SKIPPING — the data-skipping half of the
     // commit protocol, and the fourth scan-elimination mechanism next
     // to DPP (partition dirs), bucket pruning (hash files) and footer
     // aggregate pushdown (row-group stats): the COMMIT aggregates
@@ -180,9 +169,7 @@ object TableQueries extends QueryModule {
     // filtered table.
     "pipe_manifest_skip" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vskip_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vskip_") { tmp =>
         val table = tmp.resolve("table")
         val base = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -194,12 +181,11 @@ object TableQueries extends QueryModule {
           s"pipe_manifest_skip: no files skipped ($nRead of $nTotal " +
             "opened) — stats pruning is not load-bearing")
         val out = df.orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // COMPACTION AS A COMMIT + VACUUM (r12) — pipe_compact_files'
+    // COMPACTION AS A COMMIT + VACUUM — pipe_compact_files'
     // OPTIMIZE rewrite, upgraded from raw directories to the protocol:
     // v0 lands fragmented (64 tiny files — ingest litter), v1 is the
     // compaction commit (same rows, few right-sized files; the
@@ -217,9 +203,7 @@ object TableQueries extends QueryModule {
     // original table.
     "pipe_compact_commit" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vcompact_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vcompact_") { tmp =>
         val table = tmp.resolve("table")
         val base = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"text", $"n_chars")
@@ -250,12 +234,11 @@ object TableQueries extends QueryModule {
             sum($"n_chars").as("sum_chars"),
             expr("bit_xor(h)").as("content_sig"))
           .orderBy("lang")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // SCHEMA EVOLUTION THROUGH THE COMMIT PROTOCOL (r12) —
+    // SCHEMA EVOLUTION THROUGH THE COMMIT PROTOCOL —
     // pipe_schema_evolve proves mergeSchema over raw directories; this
     // composes it with versioning, the form a long-lived table
     // actually takes: v0 commits under schema A (doc_id, lang,
@@ -271,9 +254,7 @@ object TableQueries extends QueryModule {
     // rows, exact decimal quality sums for the v1 rows.
     "pipe_schema_commit" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vschem_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vschem_") { tmp =>
         val table = tmp.resolve("table")
         val docs = Tables.documents(s, dir)
         VersionedTable.commit(s, table, 0L,
@@ -294,12 +275,11 @@ object TableQueries extends QueryModule {
             sum($"quality".cast("decimal(18,2)")).cast("double")
               .as("sum_quality"))
           .orderBy("lang")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // CHANGE DATA FEED between versions (r12) — "what changed from
+    // CHANGE DATA FEED between versions — "what changed from
     // v0 to v1" at ROW level, priced at FILE level: because data files
     // are immutable, any file listed in BOTH manifests cannot contain
     // a change — the row diff runs only over v0-only ∪ v1-only files,
@@ -319,15 +299,13 @@ object TableQueries extends QueryModule {
     // explicitly from the fixture.
     "pipe_cdf" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vcdf_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vcdf_") { tmp =>
         val table = tmp.resolve("table")
         val base = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
           .repartitionByRange(8, $"doc_id")
         VersionedTable.commitWithStats(s, table, 0L, base, "doc_id")
-        // Data lines only: since r13 a stats commit also declares its
+        // Data lines only: a stats commit also declares its
         // STATSCOL as a metadata line, which carries no range to price.
         def file(line: String): VersionedTable.DataFile =
           VersionedTable.parse(line).asInstanceOf[VersionedTable.DataFile]
@@ -370,12 +348,11 @@ object TableQueries extends QueryModule {
           .where($"old_n_chars".isNull || $"new_n_chars".isNull ||
             $"old_n_chars" =!= $"new_n_chars")
           .orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // QUARANTINE ROUTING (r12) — the row-level complement of
+    // QUARANTINE ROUTING — the row-level complement of
     // pipe_expectations' violation COUNTS: every ingested row is
     // routed to its sink with a REASON (first failing rule in a fixed
     // order — bad_quantity → bad_discount → bad_flag → ok), in ONE
@@ -392,8 +369,7 @@ object TableQueries extends QueryModule {
     // all four reason directories must exist on disk.
     "pipe_quarantine" -> ((s, dir) => {
       import s.implicits._
-      val tmp = graft.sources.GraftSession.stagingDir("graft_quar_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_quar_") { tmp =>
         val li = Tables.lineitem(s, dir).select(
           $"l_orderkey", $"l_linenumber", $"l_quantity",
           $"l_discount", $"l_returnflag")
@@ -432,12 +408,11 @@ object TableQueries extends QueryModule {
             sum($"l_quantity".cast("decimal(18,2)")).cast("double")
               .as("sum_qty"))
           .orderBy("reason")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // MERGE-ON-READ DELETE via deletion vectors (r12) — the
+    // MERGE-ON-READ DELETE via deletion vectors — the
     // cheap-delete half the copy-on-write family (transact /
     // pipe_cdc_apply) deliberately doesn't cover: a DELETE commit
     // writes ONLY a key-list sidecar and carries every data line
@@ -455,9 +430,7 @@ object TableQueries extends QueryModule {
     // losslessness are each oracle-proven.
     "pipe_delete_dv" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vdv_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vdv_") { tmp =>
         val table = tmp.resolve("table")
         val docs = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -491,12 +464,11 @@ object TableQueries extends QueryModule {
             .select(lit(v).as("version"), $"n_rows", $"sum_chars",
               $"content_sig")
         }.reduce(_ unionAll _).orderBy("version")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // DELETION VECTORS × STATS PRUNING (r13) — the composition r12
+    // DELETION VECTORS × STATS PRUNING — the composition
     // refused: a range read over a DV-bearing version applies the
     // origin-scoped key filter INSIDE the pruned file set, so a
     // GDPR-erased 100-TB table keeps its cheap range reads without
@@ -511,9 +483,7 @@ object TableQueries extends QueryModule {
     // one plan, each half oracle-proven at full row fidelity.
     "pipe_dv_skip" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vdvskip_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vdvskip_") { tmp =>
         val table = tmp.resolve("table")
         val base = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -532,12 +502,11 @@ object TableQueries extends QueryModule {
           s"pipe_dv_skip: no files skipped ($nRead of $nTotal opened) — " +
             "stats pruning must survive live deletion vectors")
         val out = df.orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // ROW-LEVEL MERGE / UPSERT COMMIT (r13) — the `MERGE INTO … WHEN
+    // ROW-LEVEL MERGE / UPSERT COMMIT — the `MERGE INTO … WHEN
     // MATCHED UPDATE / WHEN NOT MATCHED INSERT` shape as ONE atomic
     // merge-on-read commit: a deletion vector over the update keys
     // (origin-scoped to the BASE version, so the update rows the same
@@ -553,9 +522,7 @@ object TableQueries extends QueryModule {
     // oracle replays the two merges relationally at full row fidelity.
     "pipe_merge_commit" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vmerge_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vmerge_") { tmp =>
         val table = tmp.resolve("table")
         val docs = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -580,12 +547,11 @@ object TableQueries extends QueryModule {
             s"the latest manifest (v1=$v1, v2=$v2)")
         val out = VersionedTable.read(s, table)
           .select($"doc_id", $"lang", $"n_chars").orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // THE VERSIONED TABLE AS A SPARK TABLE (r13) — the engine's THIRD
+    // THE VERSIONED TABLE AS A SPARK TABLE — the engine's THIRD
     // DataSource V2 connector (`graft-table`): the commit protocol
     // served through `spark.read.format(...)`, where a VANILLA
     // DataFrame predicate — `.where("doc_id BETWEEN 10 AND 40")`, no
@@ -603,9 +569,7 @@ object TableQueries extends QueryModule {
     // really are applied inside the scan).
     "pipe_table_scan" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vscan_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vscan_") { tmp =>
         val table = tmp.resolve("table")
         val base = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -645,12 +609,11 @@ object TableQueries extends QueryModule {
           "pipe_table_scan: version=0 must serve the pre-delete snapshot")
         val out = filtered.select($"doc_id", $"lang", $"n_chars")
           .orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // MANIFEST-STATISTICS-DRIVEN JOIN PLANNING (r17) — the connector
+    // MANIFEST-STATISTICS-DRIVEN JOIN PLANNING — the connector
     // reports `SupportsReportStatistics` (sum of surviving files'
     // on-disk bytes + ROWS counts, post-pruning), so a join over two
     // graft tables BROADCAST-decides from metadata: without reported
@@ -669,9 +632,7 @@ object TableQueries extends QueryModule {
     // decorative. The oracle replays the join at full row fidelity.
     "pipe_table_join" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vjoin_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vjoin_") { tmp =>
         val factT = tmp.resolve("fact")
         val dimT = tmp.resolve("dim")
         val fact0 = Tables.documents(s, dir)
@@ -715,13 +676,12 @@ object TableQueries extends QueryModule {
             "pipe_table_join: with reportStats=false the broadcast " +
               "must be LOST (defaultSizeInBytes) — the stats are not " +
               "load-bearing")
-          val rows = out.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+          graft.sources.GraftSession.materialize(s, out)
         }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+      }
     }),
 
-    // STORAGE-PARTITIONED JOIN (r18) — the V2 sibling of
+    // STORAGE-PARTITIONED JOIN — the V2 sibling of
     // rel_bucketed_join, from manifest metadata alone: both tables are
     // committed PARTITIONED BY (lang), the connector reports
     // KeyGroupedPartitioning over the layout (every input partition
@@ -744,9 +704,7 @@ object TableQueries extends QueryModule {
     // row fidelity.
     "pipe_table_spj" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vspj_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vspj_") { tmp =>
         val factT = tmp.resolve("fact")
         val dimT = tmp.resolve("dim")
         val fact0 = Tables.documents(s, dir)
@@ -795,14 +753,12 @@ object TableQueries extends QueryModule {
               "zero-exchange plan is the connector's report, not fixture " +
               "luck")
           val sorted = out.orderBy($"doc_id")
-          val rows = sorted.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*),
-            sorted.schema)
+          graft.sources.GraftSession.materialize(s, sorted)
         }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+      }
     }),
 
-    // STORAGE-PARTITIONED JOIN OVER A TIME TRANSFORM (r19) — the
+    // STORAGE-PARTITIONED JOIN OVER A TIME TRANSFORM — the
     // single most common co-location in an event pipeline: two tables
     // day-partitioned by days(ts_us) (hidden partitioning — no layout
     // column in any query) joined on the RAW timestamp column. Equal
@@ -810,8 +766,8 @@ object TableQueries extends QueryModule {
     // KeyGroupedPartitioning(days(ts_us)) — resolved through the
     // catalog's V2 `days` grain function, the same JVM rendering the
     // writer laid files out by — lets Spark plan the join with ZERO
-    // Exchange. r18 deliberately bailed here ("no exposed V2 date
-    // function"); r19 exposes the function and retires the bail. Same
+    // Exchange. The planner bails here without an exposed V2 date
+    // function; the catalog exposes one, so it does not bail. Same
     // three witnesses as pipe_table_spj: (1) zero-Exchange
     // SortMergeJoin; (2) task grouping is per DAY, not per file (the
     // fact side holds several files per day); (3) the negative
@@ -819,9 +775,7 @@ object TableQueries extends QueryModule {
     // join at full row fidelity.
     "pipe_table_spj_days" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vspjd_")
-      try {
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vspjd_", Spj: _*) { (tmp, s2) =>
         val ev = Tables.events(s, dir)
           .selectExpr("event_id", s"${QueryModule.TsUs} AS ts_us")
         def mk(name: String, rows: org.apache.spark.sql.DataFrame,
@@ -839,47 +793,43 @@ object TableQueries extends QueryModule {
           () => mk("fact", ev.where($"event_id" % 3 === 0), 2),
           () => mk("dim",
             ev.groupBy($"ts_us").agg(count(lit(1)).as("n_at_ts")), 1))
-        graft.sources.GraftSession.scoped(s, graftcat(tmp) ++ Spj: _*) { s2 =>
-          def joined(c: SparkSession) = c.sql(
-            "SELECT f.event_id, f.ts_us, d.n_at_ts " +
-              "FROM graftcat.fact f JOIN graftcat.dim d " +
-              "ON f.ts_us = d.ts_us")
-          import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-          import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-          def shuffles(df: org.apache.spark.sql.DataFrame) =
-            df.queryExecution.executedPlan.collect {
-              case e: ShuffleExchangeExec => e }.size
-          val out = joined(s2)
-          require(shuffles(out) == 0 &&
-              out.queryExecution.executedPlan.collect {
-                case j: SortMergeJoinExec => j }.nonEmpty,
-            "pipe_table_spj_days: the day-partitioned raw-column join " +
-              "must plan a SortMergeJoin with ZERO exchanges from the " +
-              "reported KeyGroupedPartitioning(days(ts_us))")
-          // Grouping witness: one task per DAY, not per file.
-          val factFiles = VersionedTable.statsManifest(factT, 2L).map(_._1)
-          val nDays = factFiles.flatMap(_.split('/').collectFirst {
-            case seg if seg.startsWith("ts_us_day=") => seg }).distinct.size
-          require(out.rdd.getNumPartitions == nDays &&
-              factFiles.size > nDays,
-            s"pipe_table_spj_days: expected $nDays day-grouped tasks " +
-              s"over ${factFiles.size} fact files, got " +
-              s"${out.rdd.getNumPartitions}")
-          // Negative witness: without the opt-in both sides shuffle.
-          require(graft.sources.GraftSession.scoped(s2,
-              "spark.graft.planning.preserveDataGrouping" -> "false")(
-              c => shuffles(joined(c))) == 2,
-            "pipe_table_spj_days: without the preserve-data-grouping " +
-              "opt-in the join must fall back to shuffling both sides")
-          val sorted = out.orderBy($"event_id")
-          val rows = sorted.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*),
-            sorted.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        def joined(c: SparkSession) = c.sql(
+          "SELECT f.event_id, f.ts_us, d.n_at_ts " +
+            "FROM graftcat.fact f JOIN graftcat.dim d " +
+            "ON f.ts_us = d.ts_us")
+        import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+        import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+        def shuffles(df: org.apache.spark.sql.DataFrame) =
+          df.queryExecution.executedPlan.collect {
+            case e: ShuffleExchangeExec => e }.size
+        val out = joined(s2)
+        require(shuffles(out) == 0 &&
+            out.queryExecution.executedPlan.collect {
+              case j: SortMergeJoinExec => j }.nonEmpty,
+          "pipe_table_spj_days: the day-partitioned raw-column join " +
+            "must plan a SortMergeJoin with ZERO exchanges from the " +
+            "reported KeyGroupedPartitioning(days(ts_us))")
+        // Grouping witness: one task per DAY, not per file.
+        val factFiles = VersionedTable.statsManifest(factT, 2L).map(_._1)
+        val nDays = factFiles.flatMap(_.split('/').collectFirst {
+          case seg if seg.startsWith("ts_us_day=") => seg }).distinct.size
+        require(out.rdd.getNumPartitions == nDays &&
+            factFiles.size > nDays,
+          s"pipe_table_spj_days: expected $nDays day-grouped tasks " +
+            s"over ${factFiles.size} fact files, got " +
+            s"${out.rdd.getNumPartitions}")
+        // Negative witness: without the opt-in both sides shuffle.
+        require(graft.sources.GraftSession.scoped(s2,
+            "spark.graft.planning.preserveDataGrouping" -> "false")(
+            c => shuffles(joined(c))) == 2,
+          "pipe_table_spj_days: without the preserve-data-grouping " +
+            "opt-in the join must fall back to shuffling both sides")
+        val sorted = out.orderBy($"event_id")
+        sorted
+      }
     }),
 
-    // TIMESTAMP PAYLOAD COLUMNS (r19) — the table format stores true
+    // TIMESTAMP PAYLOAD COLUMNS — the table format stores true
     // TIMESTAMP(MICROS) parquet columns (instant and NTZ flavors) and
     // DATE, so `days(ts)` declares on the actual timestamp and the
     // BIGINT `ts_us` contortion retires. Witnessed in-path: (1) the
@@ -896,71 +846,65 @@ object TableQueries extends QueryModule {
     // serve as epoch micros so the compare is integer-exact.
     "pipe_table_timestamp" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vts_")
-      try {
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          s2.sql("""CREATE TABLE graftcat.ev
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vts_") { (tmp, s2) =>
+        s2.sql("""CREATE TABLE graftcat.ev
                     (event_id BIGINT, ts TIMESTAMP_NTZ, event_type STRING)
                     PARTITIONED BY (days(ts))""")
-          s2.sql(s"""INSERT INTO graftcat.ev
+        s2.sql(s"""INSERT INTO graftcat.ev
                      SELECT event_id, ts, event_type
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "events")}""")
-          val table = tmp.resolve("ev")
-          // The DDL bootstrap's zero-row schema file is flat; every
-          // INSERTED file must carry a day segment derived from the
-          // timestamp.
-          val files = VersionedTable.statsManifest(table, 1L).map(_._1)
-          val inserted = files.filterNot(
-            VersionedTable.statsManifest(table, 0L).map(_._1).toSet)
-          require(inserted.nonEmpty &&
-              inserted.forall(_.contains("ts_day=")),
-            s"pipe_table_timestamp: INSERT must land day segments " +
-              s"derived from the TIMESTAMP column: $inserted")
-          val scan = s2.table("graftcat.ev")
-          require(scan.schema("ts").dataType ==
-              org.apache.spark.sql.types.TimestampNTZType &&
-              !scan.columns.contains("ts_day"),
-            "pipe_table_timestamp: the schema must serve the true NTZ " +
-              "type and hide the derived segment")
-          // One-day slice on the RAW timestamp: planned files == that
-          // day's segment count (hidden partitioning's whole point).
-          val out = scan.where(
-            $"ts" >= org.apache.spark.sql.functions.expr(
-              "TIMESTAMP_NTZ'2024-01-10 00:00:00'") &&
-            $"ts" < org.apache.spark.sql.functions.expr(
-              "TIMESTAMP_NTZ'2024-01-11 00:00:00'"))
-          // Segment-less files (the flat bootstrap) always admit — only
-          // the path is evidence.
-          val dayFiles = files.count(_.contains("ts_day=2024-01-10")) +
-            files.count(!_.contains("ts_day="))
-          require(out.rdd.getNumPartitions == dayFiles &&
-              dayFiles < files.size,
-            s"pipe_table_timestamp: expected $dayFiles planned files " +
-              s"of ${files.size}, got ${out.rdd.getNumPartitions}")
-          // Micros-unit zonemaps after a stats compaction.
-          s2.sql("CALL graftcat.compact('ev', 'ts', 2)").collect()
-          val v2 = VersionedTable.latestVersion(table).get
-          val stats = VersionedTable.statsManifest(table, v2)
-          require(stats.forall { case (_, mn, mx) =>
-              mn > 1600000000000000L && mx < 1900000000000000L },
-            "pipe_table_timestamp: ts zonemaps must store epoch MICROS")
-          val sliced = s2.table("graftcat.ev").where(
-            $"ts" >= org.apache.spark.sql.functions.expr(
-              "TIMESTAMP_NTZ'2024-01-10 00:00:00'") &&
-            $"ts" < org.apache.spark.sql.functions.expr(
-              "TIMESTAMP_NTZ'2024-01-11 00:00:00'"))
-            .selectExpr("event_id",
-              "unix_micros(CAST(ts AS TIMESTAMP)) AS ts_us", "event_type")
-            .orderBy($"event_id")
-          val rows = sliced.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*),
-            sliced.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        val table = tmp.resolve("ev")
+        // The DDL bootstrap's zero-row schema file is flat; every
+        // INSERTED file must carry a day segment derived from the
+        // timestamp.
+        val files = VersionedTable.statsManifest(table, 1L).map(_._1)
+        val inserted = files.filterNot(
+          VersionedTable.statsManifest(table, 0L).map(_._1).toSet)
+        require(inserted.nonEmpty &&
+            inserted.forall(_.contains("ts_day=")),
+          s"pipe_table_timestamp: INSERT must land day segments " +
+            s"derived from the TIMESTAMP column: $inserted")
+        val scan = s2.table("graftcat.ev")
+        require(scan.schema("ts").dataType ==
+            org.apache.spark.sql.types.TimestampNTZType &&
+            !scan.columns.contains("ts_day"),
+          "pipe_table_timestamp: the schema must serve the true NTZ " +
+            "type and hide the derived segment")
+        // One-day slice on the RAW timestamp: planned files == that
+        // day's segment count (hidden partitioning's whole point).
+        val out = scan.where(
+          $"ts" >= org.apache.spark.sql.functions.expr(
+            "TIMESTAMP_NTZ'2024-01-10 00:00:00'") &&
+          $"ts" < org.apache.spark.sql.functions.expr(
+            "TIMESTAMP_NTZ'2024-01-11 00:00:00'"))
+        // Segment-less files (the flat bootstrap) always admit — only
+        // the path is evidence.
+        val dayFiles = files.count(_.contains("ts_day=2024-01-10")) +
+          files.count(!_.contains("ts_day="))
+        require(out.rdd.getNumPartitions == dayFiles &&
+            dayFiles < files.size,
+          s"pipe_table_timestamp: expected $dayFiles planned files " +
+            s"of ${files.size}, got ${out.rdd.getNumPartitions}")
+        // Micros-unit zonemaps after a stats compaction.
+        s2.sql("CALL graftcat.compact('ev', 'ts', 2)").collect()
+        val v2 = VersionedTable.latestVersion(table).get
+        val stats = VersionedTable.statsManifest(table, v2)
+        require(stats.forall { case (_, mn, mx) =>
+            mn > 1600000000000000L && mx < 1900000000000000L },
+          "pipe_table_timestamp: ts zonemaps must store epoch MICROS")
+        val sliced = s2.table("graftcat.ev").where(
+          $"ts" >= org.apache.spark.sql.functions.expr(
+            "TIMESTAMP_NTZ'2024-01-10 00:00:00'") &&
+          $"ts" < org.apache.spark.sql.functions.expr(
+            "TIMESTAMP_NTZ'2024-01-11 00:00:00'"))
+          .selectExpr("event_id",
+            "unix_micros(CAST(ts AS TIMESTAMP)) AS ts_us", "event_type")
+          .orderBy($"event_id")
+        sliced
+      }
     }),
 
-    // PER-FILE BLOOM FILTERS IN THE MANIFEST (r13) — the point-lookup
+    // PER-FILE BLOOM FILTERS IN THE MANIFEST — the point-lookup
     // skipping index zonemaps cannot be: the table is laid out by
     // doc_id RESIDUE CLASS (mod 8 — a round-robin-like layout with
     // nothing clustered), so every file's doc_id [min,max] spans the
@@ -975,9 +919,7 @@ object TableQueries extends QueryModule {
     // them. The oracle proves the three probed rows at full fidelity.
     "pipe_point_skip" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vbloom_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vbloom_") { tmp =>
         val table = tmp.resolve("table")
         val docs = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -1008,12 +950,11 @@ object TableQueries extends QueryModule {
         }
         require(one.count() == 1, "pipe_point_skip: probe row must exist")
         val out = frames.reduce(_ unionAll _).orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // Z-ORDER + MULTI-COLUMN ZONEMAPS (r13) — pipe_zorder_layout's
+    // Z-ORDER + MULTI-COLUMN ZONEMAPS — pipe_zorder_layout's
     // write trick finally paired with the manifest machinery that
     // cashes it in: the table is written in MORTON ORDER over
     // (doc_id, n_chars) and committed with zonemaps on BOTH columns
@@ -1028,9 +969,7 @@ object TableQueries extends QueryModule {
     // scale-invariant; the oracle replays it relationally.
     "pipe_zorder_skip" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vzskip_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vzskip_") { tmp =>
         val table = tmp.resolve("table")
         val docs = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -1038,7 +977,7 @@ object TableQueries extends QueryModule {
         // — raw interleave lets the wider dimension's high bits own the
         // top of every z value (doc_id spans 13 bits at sf0.1, n_chars
         // 10), collapsing the layout to a one-column sort. ONE
-        // definition (r17: VersionedTable.mortonColumn — the same key
+        // definition (VersionedTable.mortonColumn — the same key
         // CALL <cat>.cluster publishes, so this witness covers the
         // maintenance verb's layout too).
         val stats = docs.agg(min($"doc_id"), max($"doc_id"),
@@ -1072,12 +1011,11 @@ object TableQueries extends QueryModule {
             s"route $nRead — pushed 2-D pruning must match")
         val out = filtered.select($"doc_id", $"lang", $"n_chars")
           .orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // V2 BATCH WRITE THROUGH THE PROTOCOL (r13) — `df.write.format(
+    // V2 BATCH WRITE THROUGH THE PROTOCOL — `df.write.format(
     // "graft-table").mode("append")` IS a commit: executors stage
     // parquet (nothing data-sized crosses the driver), the driver's
     // V2 commit publishes ONE O(batch) delta manifest at latest+1
@@ -1089,9 +1027,7 @@ object TableQueries extends QueryModule {
     // The oracle proves the final table at full row fidelity.
     "pipe_v2_write" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_v2w_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_v2w_") { tmp =>
         val table = tmp.resolve("table")
         val docs = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -1115,27 +1051,24 @@ object TableQueries extends QueryModule {
             "not restate the table")
         val out = s.read.format("graft-table").load(table.toString)
           .select($"doc_id", $"lang", $"n_chars").orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // THE PROTOCOL IN PLAIN SQL — CATALOG + TIME TRAVEL (r13): a V2
+    // THE PROTOCOL IN PLAIN SQL — CATALOG + TIME TRAVEL: a V2
     // TableCatalog (`graft.sources.GraftCatalog`) serves versioned
     // tables BY NAME, so `SELECT … FROM graftcat.docs VERSION AS OF 0`
     // is the whole API — the Delta/Iceberg SQL surface over this
     // engine's own commit protocol. The catalog scan takes NO options:
     // the stats column comes from the manifest's STATSCOL declaration
-    // (self-describing since r13), so a vanilla SQL BETWEEN prunes
+    // (self-describing), so a vanilla SQL BETWEEN prunes
     // files at manifest level (in-path require), and the deletion
     // vectors of the latest version apply inside the scan. TIMESTAMP
     // AS OF resolves publish mtimes (far-future == latest, required
     // in-path). The oracle replays both versions relationally.
     "pipe_sql_time_travel" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vsql_")
-      try {
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vsql_") { (tmp, s2) =>
         val table = tmp.resolve("docs")
         VersionedTable.commitIndexed(s, table, 0L,
           Tables.documents(s, dir).select($"doc_id", $"lang", $"n_chars")
@@ -1144,41 +1077,38 @@ object TableQueries extends QueryModule {
         VersionedTable.deleteCommit(s, table, 1L,
           Tables.documents(s, dir).where($"doc_id" % 9 === 4)
             .select($"doc_id"), "doc_id")
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          val v0 = s2.sql(
-            """SELECT doc_id, lang, n_chars FROM graftcat.docs VERSION AS OF 0
-              |WHERE doc_id BETWEEN 10 AND 40""".stripMargin)
-          val latest = s2.sql(
-            """SELECT doc_id, lang, n_chars FROM graftcat.docs
-              |WHERE doc_id BETWEEN 10 AND 40""".stripMargin)
-          // No options anywhere: the BETWEEN must still prune via the
-          // manifest's own STATSCOL declaration.
-          val filesTotal = VersionedTable.statsManifest(table, 1L).size
-          val planned = latest.rdd.getNumPartitions
-          require(planned < filesTotal,
-            s"pipe_sql_time_travel: planned $planned of $filesTotal files " +
-              "— a catalog SQL read must prune from the self-describing " +
-              "manifest")
-          require(s2.sql(
-              """SELECT count(*) AS n FROM graftcat.docs
-                |TIMESTAMP AS OF '2999-01-01'""".stripMargin)
-              .head().getLong(0) == latest
-              .sparkSession.read.format("graft-table")
-              .load(table.toString).count(),
-            "pipe_sql_time_travel: a far-future TIMESTAMP AS OF must " +
-              "serve the latest snapshot")
-          val out = v0.select(lit(0L).as("version"), $"doc_id", $"lang",
-              $"n_chars")
-            .unionAll(latest.select(lit(1L).as("version"), $"doc_id",
-              $"lang", $"n_chars"))
-            .orderBy("version", "doc_id")
-          val rows = out.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        val v0 = s2.sql(
+          """SELECT doc_id, lang, n_chars FROM graftcat.docs VERSION AS OF 0
+            |WHERE doc_id BETWEEN 10 AND 40""".stripMargin)
+        val latest = s2.sql(
+          """SELECT doc_id, lang, n_chars FROM graftcat.docs
+            |WHERE doc_id BETWEEN 10 AND 40""".stripMargin)
+        // No options anywhere: the BETWEEN must still prune via the
+        // manifest's own STATSCOL declaration.
+        val filesTotal = VersionedTable.statsManifest(table, 1L).size
+        val planned = latest.rdd.getNumPartitions
+        require(planned < filesTotal,
+          s"pipe_sql_time_travel: planned $planned of $filesTotal files " +
+            "— a catalog SQL read must prune from the self-describing " +
+            "manifest")
+        require(s2.sql(
+            """SELECT count(*) AS n FROM graftcat.docs
+              |TIMESTAMP AS OF '2999-01-01'""".stripMargin)
+            .head().getLong(0) == latest
+            .sparkSession.read.format("graft-table")
+            .load(table.toString).count(),
+          "pipe_sql_time_travel: a far-future TIMESTAMP AS OF must " +
+            "serve the latest snapshot")
+        val out = v0.select(lit(0L).as("version"), $"doc_id", $"lang",
+            $"n_chars")
+          .unionAll(latest.select(lit(1L).as("version"), $"doc_id",
+            $"lang", $"n_chars"))
+          .orderBy("version", "doc_id")
+        out
+      }
     }),
 
-    // PARTITION VALUES IN THE MANIFEST (r13) — the protocol sibling of
+    // PARTITION VALUES IN THE MANIFEST — the protocol sibling of
     // rel_partition_prune: a partitioned commit records each file's
     // partition value in its manifest path (the Hive `col=value`
     // convention IS the per-file partition record), and a partition
@@ -1193,9 +1123,7 @@ object TableQueries extends QueryModule {
     // column.
     "pipe_partition_commit" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vpart_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vpart_") { tmp =>
         val table = tmp.resolve("table")
         VersionedTable.commitPartitioned(s, table, 0L,
           Tables.documents(s, dir).select($"doc_id", $"n_chars", $"lang"),
@@ -1212,12 +1140,11 @@ object TableQueries extends QueryModule {
           s"pipe_partition_commit: no files pruned ($nRead of $nTotal) — " +
             "manifest-level partition pruning is not load-bearing")
         val out = df.select($"doc_id", $"lang", $"n_chars").orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // PARTITION PRUNING THROUGH THE CONNECTOR (r13) — the same staging
+    // PARTITION PRUNING THROUGH THE CONNECTOR — the same staging
     // as pipe_partition_commit, but the read is a VANILLA DataFrame
     // predicate on the graft-table source: `.where(lang IN ('en',
     // 'fr'))` flows through V2 pushdown into path-segment pruning (the
@@ -1230,9 +1157,7 @@ object TableQueries extends QueryModule {
     // route.
     "pipe_table_part_scan" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vpscan_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vpscan_") { tmp =>
         val table = tmp.resolve("table")
         VersionedTable.commitPartitioned(s, table, 0L,
           Tables.documents(s, dir).select($"doc_id", $"n_chars", $"lang"),
@@ -1251,12 +1176,11 @@ object TableQueries extends QueryModule {
           s"pipe_table_part_scan: planned $planned of $filesTotal files " +
             "— pushed partition predicates must prune by path segment")
         val out = df.select($"doc_id", $"lang", $"n_chars").orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // PARTITION PRUNING × STATS SKIPPING (r13) — the two orthogonal
+    // PARTITION PRUNING × STATS SKIPPING — the two orthogonal
     // manifest mechanisms COMPOSED, the way production formats pair
     // partition predicates with file-level zonemaps: one
     // commitPartitioned(statsCol=doc_id) records the partition value
@@ -1268,7 +1192,7 @@ object TableQueries extends QueryModule {
     // teeth. In-path requires witness EACH stage independently
     // (partition-matched < total, opened < partition-matched); the
     // oracle proves full-row equality with the plain double filter.
-    // MULTI-COLUMN partition layout (r16) — the (date, region)-shaped
+    // MULTI-COLUMN partition layout — the (date, region)-shaped
     // day-one real layout as (lang, shard): values nest as
     // lang=…/shard=… path segments, per-file doc_id zonemaps and ROWS
     // compose on the same manifest lines, a predicate on BOTH columns
@@ -1279,9 +1203,7 @@ object TableQueries extends QueryModule {
     // re-attached partition columns.
     "pipe_partition_multi" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vpmulti_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vpmulti_") { tmp =>
         val table = tmp.resolve("table")
         VersionedTable.commitPartitionedMulti(s, table, 0L,
           Tables.documents(s, dir)
@@ -1313,16 +1235,13 @@ object TableQueries extends QueryModule {
         val out = s.read.format("graft-table").load(table.toString)
           .select($"doc_id", $"lang", $"shard", $"n_chars")
           .orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
     "pipe_partition_stats" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vpstats_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vpstats_") { tmp =>
         val table = tmp.resolve("table")
         VersionedTable.commitPartitioned(s, table, 0L,
           Tables.documents(s, dir)
@@ -1337,12 +1256,11 @@ object TableQueries extends QueryModule {
           s"pipe_partition_stats: stats pruning idle ($nRead of $nPart " +
             "partition-matched files opened)")
         val out = df.select($"doc_id", $"lang", $"n_chars").orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // SCHEMA EVOLUTION: RENAME + TYPE WIDENING (r13) — the half
+    // SCHEMA EVOLUTION: RENAME + TYPE WIDENING — the half
     // pipe_schema_commit (add-column) leaves open: long-lived tables
     // eventually rename columns and widen types, and at 100 TB neither
     // may cost a rewrite. Both are METADATA-ONLY commits (one manifest
@@ -1358,9 +1276,7 @@ object TableQueries extends QueryModule {
     // equality across both schema generations.
     "pipe_schema_rename" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vrename_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vrename_") { tmp =>
         val table = tmp.resolve("table")
         val docs = Tables.documents(s, dir)
         VersionedTable.commit(s, table, 0L,
@@ -1387,13 +1303,12 @@ object TableQueries extends QueryModule {
             "read schema")
         val out = latest.select($"doc_id", $"lang", $"n_chars")
           .orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
     // COMMIT HISTORY AS A TABLE via the engine's own DataSource V2
-    // connector (r12) — `spark.read.format("graft-history")` serves
+    // connector — `spark.read.format("graft-history")` serves
     // the versioned table's commit log as ordinary rows (version,
     // file, mn, mx): the metadata-table idea every production format
     // ships (DESCRIBE HISTORY), here exercising the full V2 read
@@ -1412,9 +1327,7 @@ object TableQueries extends QueryModule {
     // pruned away.
     "pipe_table_history" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vhist_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vhist_") { tmp =>
         val table = tmp.resolve("table")
         val base = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -1441,12 +1354,11 @@ object TableQueries extends QueryModule {
         require(!plan.contains("file#"),
           "pipe_table_history: column pruning did not reach the " +
             "reader — the unused file column survived into the scan")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // MULTI-WRITER OPTIMISTIC CONCURRENCY (r12) — the retry/rebase
+    // MULTI-WRITER OPTIMISTIC CONCURRENCY — the retry/rebase
     // layer over the commit point's putIfAbsent primitive, exercised
     // through REAL lost races (not argued): the manifest hard-link of
     // a taken version throws FileAlreadyExistsException, and the two
@@ -1475,7 +1387,7 @@ object TableQueries extends QueryModule {
     // files) for merges (pipe_cdf prices the narrowing); neither ever
     // blocks readers, who keep planning over the last published
     // manifest throughout.
-    // METADATA-ONLY AGGREGATES (r13) — the Iceberg-manifest `count(*)`
+    // METADATA-ONLY AGGREGATES — the Iceberg-manifest `count(*)`
     // answer, served through the graft-table connector's V2 aggregate
     // pushdown: the commit records per-file ROW COUNTS (`ROWS` lines,
     // riding the same single commit-time stats pass) next to the
@@ -1494,9 +1406,7 @@ object TableQueries extends QueryModule {
     // yet still return the correct count through the ordinary path.
     "pipe_meta_agg" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vmagg_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vmagg_") { tmp =>
         val table = tmp.resolve("table")
         val docs = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -1536,12 +1446,11 @@ object TableQueries extends QueryModule {
         val out = grouped.crossJoin(global)
           .select($"lang", $"n_rows", $"total_rows", $"min_id", $"max_id")
           .orderBy("lang")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // BRANCHES AND TAGS OVER THE SNAPSHOT LOG (r13) — the Iceberg refs
+    // BRANCHES AND TAGS OVER THE SNAPSHOT LOG — the Iceberg refs
     // idea on this layer's primitives: every commit is a snapshot in
     // ONE global log; a ref is a named pointer (`_refs/<name>/`, an
     // append-only seq of createLink putIfAbsent records — the same
@@ -1558,9 +1467,7 @@ object TableQueries extends QueryModule {
     // no interference (isolation witnessed both directions in-path).
     "pipe_table_branch" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vref_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vref_") { tmp =>
         val table = tmp.resolve("table")
         val docs = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -1613,12 +1520,11 @@ object TableQueries extends QueryModule {
             .select(lit(r).as("ref"), $"n_rows", $"sum_chars",
               $"content_sig")
         }.reduce(_ unionAll _).orderBy("ref")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // STATS-PRUNED COPY-ON-WRITE UPDATE (r13) — `UPDATE … WHERE doc_id
+    // STATS-PRUNED COPY-ON-WRITE UPDATE — `UPDATE … WHERE doc_id
     // BETWEEN 10 AND 40 SET n_chars = n_chars + 100000`: the manifest
     // zonemaps locate the files the predicate can touch (the same
     // pruning readRange reads with), ONLY those are rewritten (witness:
@@ -1633,9 +1539,7 @@ object TableQueries extends QueryModule {
     // expression applied relationally.
     "pipe_update_commit" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vupd_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vupd_") { tmp =>
         val table = tmp.resolve("table")
         val base = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -1671,12 +1575,11 @@ object TableQueries extends QueryModule {
             s"not a commit (landed v$v2 rewriting $r2 files)")
         val out = VersionedTable.read(s, table)
           .select($"doc_id", $"lang", $"n_chars").orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // COMMIT-TIME CHECK CONSTRAINTS (r13) — the Delta ADD CONSTRAINT
+    // COMMIT-TIME CHECK CONSTRAINTS — the Delta ADD CONSTRAINT
     // idea on the manifest: `constraintCommit` declares a CHECK as a
     // metadata-only commit AFTER validating the current snapshot (a
     // constraint the existing data violates is refused — witnessed),
@@ -1690,9 +1593,7 @@ object TableQueries extends QueryModule {
     // SQL CHECK rule — a CHECK is not a NOT NULL unless written so).
     "pipe_commit_constraint" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vchk_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vchk_") { tmp =>
         val table = tmp.resolve("table")
         val docs = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -1733,12 +1634,11 @@ object TableQueries extends QueryModule {
           "pipe_commit_constraint: the gate must survive compaction")
         val out = VersionedTable.read(s, table)
           .select($"doc_id", $"lang", $"n_chars").orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // BRANCH-AWARE SQL — VERSION AS OF '<ref>' (r13) — the refs layer
+    // BRANCH-AWARE SQL — VERSION AS OF '<ref>' — the refs layer
     // surfaced in plain SQL through the catalog, the Iceberg
     // convention: a NUMBER is a commit id, a STRING is a named ref —
     // `VERSION AS OF 'exp'` reads the exp branch's head, `VERSION AS
@@ -1750,9 +1650,7 @@ object TableQueries extends QueryModule {
     // queries, no version numbers in sight.
     "pipe_sql_branch" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vsqlb_")
-      try {
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vsqlb_") { (tmp, s2) =>
         val table = tmp.resolve("docs")
         val docs = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -1768,37 +1666,34 @@ object TableQueries extends QueryModule {
           docs.where($"doc_id" % 7 === 2)
             .selectExpr("doc_id + 2199023255552L AS doc_id", "lang",
               "n_chars"))
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          def digest(ref: String) = s2.sql(
-            s"""SELECT '$ref' AS ref, CAST(count(*) AS BIGINT) AS n_rows,
-               |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-               |  bit_xor(CAST(conv(substr(md5(concat(
-               |    CAST(doc_id AS STRING), ':',
-               |    CAST(n_chars AS STRING))), 1, 15), 16, 10) AS BIGINT))
-               |    AS content_sig
-               |FROM graftcat.docs VERSION AS OF '$ref'""".stripMargin)
-          require(scala.util.Try(s2.sql(
-              "SELECT * FROM graftcat.docs VERSION AS OF 'nosuchref'")
-              .collect()).isFailure,
-            "pipe_sql_branch: an unknown ref must be an unknown version")
-          // The connector's option('ref') addresses the same head.
-          require(s.read.format("graft-table").option("ref", "exp")
-              .load(table.toString).count() ==
-            docs.count() + docs.where($"doc_id" % 7 === 1).count(),
-            "pipe_sql_branch: option(ref=exp) must read the branch head")
-          require(scala.util.Try(s.read.format("graft-table")
-              .option("ref", "exp").option("version", "0")
-              .load(table.toString).count()).isFailure,
-            "pipe_sql_branch: version and ref together must be refused")
-          val out = digest("exp").unionAll(digest("main"))
-            .unionAll(digest("v0")).orderBy("ref")
-          val rows = out.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        def digest(ref: String) = s2.sql(
+          s"""SELECT '$ref' AS ref, CAST(count(*) AS BIGINT) AS n_rows,
+             |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+             |  bit_xor(CAST(conv(substr(md5(concat(
+             |    CAST(doc_id AS STRING), ':',
+             |    CAST(n_chars AS STRING))), 1, 15), 16, 10) AS BIGINT))
+             |    AS content_sig
+             |FROM graftcat.docs VERSION AS OF '$ref'""".stripMargin)
+        require(scala.util.Try(s2.sql(
+            "SELECT * FROM graftcat.docs VERSION AS OF 'nosuchref'")
+            .collect()).isFailure,
+          "pipe_sql_branch: an unknown ref must be an unknown version")
+        // The connector's option('ref') addresses the same head.
+        require(s.read.format("graft-table").option("ref", "exp")
+            .load(table.toString).count() ==
+          docs.count() + docs.where($"doc_id" % 7 === 1).count(),
+          "pipe_sql_branch: option(ref=exp) must read the branch head")
+        require(scala.util.Try(s.read.format("graft-table")
+            .option("ref", "exp").option("version", "0")
+            .load(table.toString).count()).isFailure,
+          "pipe_sql_branch: version and ref together must be refused")
+        val out = digest("exp").unionAll(digest("main"))
+          .unionAll(digest("v0")).orderBy("ref")
+        out
+      }
     }),
 
-    // BRANCH PROMOTE — fast-forward merge (r13) — the missing verb of
+    // BRANCH PROMOTE — fast-forward merge — the missing verb of
     // the refs workflow: a validated experiment branch lands in
     // production as ONE metadata commit, zero data copied whatever the
     // branch weighs. `promoteBranch` replays the lines `exp` ADDED
@@ -1813,9 +1708,7 @@ object TableQueries extends QueryModule {
     // promote while exp still reads its own line of history.
     "pipe_branch_promote" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vprom_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vprom_") { tmp =>
         val table = tmp.resolve("table")
         val docs = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -1844,7 +1737,7 @@ object TableQueries extends QueryModule {
         require(VersionedTable.refHead(table, "exp").get._2 == expHead,
           "pipe_branch_promote: promoting must not advance the source " +
             "branch")
-        // REBASE-PROMOTE (r15): a branch whose history REWROTE files
+        // REBASE-PROMOTE: a branch whose history REWROTE files
         // (here: a whole-snapshot fix bumping n_chars by 500 where
         // doc_id % 9 = 0, staged as the raw-publish escape hatch — the
         // branch verbs are append-only) now promotes too: its net
@@ -1892,12 +1785,11 @@ object TableQueries extends QueryModule {
             .select(lit(r).as("ref"), $"n_rows", $"sum_chars",
               $"content_sig")
         }.reduce(_ unionAll _).orderBy("ref")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // SQL DML THROUGH THE CATALOG (r13) — DELETE and INSERT as plain
+    // SQL DML THROUGH THE CATALOG — DELETE and INSERT as plain
     // SQL, both routed through the commit protocol: `DELETE FROM
     // graftcat.docs WHERE doc_id IN (…)` publishes a MERGE-ON-READ
     // deletion-vector commit (O(deleted keys), base data lines carried
@@ -1913,56 +1805,51 @@ object TableQueries extends QueryModule {
     // loudly instead of partially deleting.
     "pipe_sql_dml" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vdml_")
-      try {
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vdml_") { (tmp, s2) =>
         val table = tmp.resolve("docs")
         VersionedTable.commit(s, table, 0L,
           Tables.documents(s, dir).select($"doc_id", $"lang", $"n_chars"))
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          s2.sql("DELETE FROM graftcat.docs WHERE doc_id IN (3, 17, 41)")
-          require(VersionedTable.deletionVectors(table, 1L).nonEmpty,
-            "pipe_sql_dml: the SQL DELETE must publish a deletion-vector " +
-              "commit")
-          require(VersionedTable.statsManifest(table, 0L).map(_._1).toSet
-              .subsetOf(VersionedTable.statsManifest(table, 1L).map(_._1)
-                .toSet),
-            "pipe_sql_dml: the SQL DELETE rewrote data files — a delete " +
-              "must cost O(deleted keys)")
-          s2.sql(
-            """INSERT INTO graftcat.docs
-              |SELECT doc_id + 2199023255552, lang, n_chars
-              |FROM graftcat.docs VERSION AS OF 0
-              |WHERE doc_id IN (1, 2)""".stripMargin)
-          require(VersionedTable.versions(table) == Seq(0L, 1L, 2L),
-            "pipe_sql_dml: DELETE then INSERT must land as versions 1 " +
-              s"and 2 — history reads ${VersionedTable.versions(table)}")
-          // A non-key DELETE can't be a key-list DV — it falls
-          // through to the GROUP-BASED REWRITE path
-          // (SupportsRowLevelOperations) instead of refusing: runtime
-          // group filtering rewrites only the files holding matching
-          // rows (witnessed: something was removed, and any surviving
-          // deletion vector stays correctly scoped to the untouched
-          // files — the oracle proves the deleted keys stay dead either
-          // way), stamped KIND=update for the change feed.
-          s2.sql("DELETE FROM graftcat.docs " +
-            "WHERE n_chars % 2 = 1 AND doc_id < 50")
-          require(VersionedTable.latestVersion(table).contains(3L) &&
-              VersionedTable.commitKind(table, 3L).contains("update"),
-            "pipe_sql_dml: the rewrite DELETE must land as v3, " +
-              "KIND=update")
-          require(VersionedTable.removedDataFiles(table, 3L).nonEmpty,
-            "pipe_sql_dml: the rewrite DELETE must replace the files " +
-              "holding matching rows")
-          val out = s2.sql(
-            "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
-          val rows = out.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        s2.sql("DELETE FROM graftcat.docs WHERE doc_id IN (3, 17, 41)")
+        require(VersionedTable.deletionVectors(table, 1L).nonEmpty,
+          "pipe_sql_dml: the SQL DELETE must publish a deletion-vector " +
+            "commit")
+        require(VersionedTable.statsManifest(table, 0L).map(_._1).toSet
+            .subsetOf(VersionedTable.statsManifest(table, 1L).map(_._1)
+              .toSet),
+          "pipe_sql_dml: the SQL DELETE rewrote data files — a delete " +
+            "must cost O(deleted keys)")
+        s2.sql(
+          """INSERT INTO graftcat.docs
+            |SELECT doc_id + 2199023255552, lang, n_chars
+            |FROM graftcat.docs VERSION AS OF 0
+            |WHERE doc_id IN (1, 2)""".stripMargin)
+        require(VersionedTable.versions(table) == Seq(0L, 1L, 2L),
+          "pipe_sql_dml: DELETE then INSERT must land as versions 1 " +
+            s"and 2 — history reads ${VersionedTable.versions(table)}")
+        // A non-key DELETE can't be a key-list DV — it falls
+        // through to the GROUP-BASED REWRITE path
+        // (SupportsRowLevelOperations) instead of refusing: runtime
+        // group filtering rewrites only the files holding matching
+        // rows (witnessed: something was removed, and any surviving
+        // deletion vector stays correctly scoped to the untouched
+        // files — the oracle proves the deleted keys stay dead either
+        // way), stamped KIND=update for the change feed.
+        s2.sql("DELETE FROM graftcat.docs " +
+          "WHERE n_chars % 2 = 1 AND doc_id < 50")
+        require(VersionedTable.latestVersion(table).contains(3L) &&
+            VersionedTable.commitKind(table, 3L).contains("update"),
+          "pipe_sql_dml: the rewrite DELETE must land as v3, " +
+            "KIND=update")
+        require(VersionedTable.removedDataFiles(table, 3L).nonEmpty,
+          "pipe_sql_dml: the rewrite DELETE must replace the files " +
+            "holding matching rows")
+        val out = s2.sql(
+          "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
+        out
+      }
     }),
 
-    // SQL UPDATE — the literal statement (r15): `UPDATE graftcat.docs
+    // SQL UPDATE — the literal statement: `UPDATE graftcat.docs
     // SET … WHERE doc_id BETWEEN …` through SupportsRowLevelOperations'
     // group-based copy-on-write path. The statement's condition is
     // pushed into the OPERATION SCAN (Spark's
@@ -1976,50 +1863,45 @@ object TableQueries extends QueryModule {
     // the same commit, reached two ways.
     "pipe_sql_update" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vsqlupd_")
-      try {
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vsqlupd_") { (tmp, s2) =>
         val table = tmp.resolve("docs")
         VersionedTable.commitWithStats(s, table, 0L,
           Tables.documents(s, dir).select($"doc_id", $"lang", $"n_chars")
             .repartitionByRange(8, $"doc_id"), "doc_id",
           rowCounts = true)
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          s2.sql("UPDATE graftcat.docs SET n_chars = n_chars + 100000 " +
-            "WHERE doc_id BETWEEN 10 AND 40")
-          require(VersionedTable.latestVersion(table).contains(1L) &&
-              VersionedTable.commitKind(table, 1L).contains("update"),
-            "pipe_sql_update: the statement must land as v1, KIND=update")
-          // The condition reached the operation scan: files whose
-          // zonemap misses [10, 40] were never rewritten.
-          val untouched = VersionedTable.statsManifest(table, 0L).collect {
-            case (f, mn, mx) if !(mx >= 10L && mn <= 40L) => f
-          }.toSet
-          require(untouched.nonEmpty && untouched.subsetOf(
-              VersionedTable.statsManifest(table, 1L).map(_._1).toSet),
-            "pipe_sql_update: an untouched file's manifest line vanished " +
-              "— the SQL UPDATE must rewrite only zonemap-overlapping " +
-              "files")
-          val rc = VersionedTable.snapshot(table, 1L).rowCounts
-          require(rc.map(_._1).toSet ==
-              VersionedTable.statsManifest(table, 1L).map(_._1).toSet &&
-              rc.map(_._2).sum == VersionedTable.read(s, table).count(),
-            "pipe_sql_update: ROWS lines must cover v1 exactly and sum " +
-              "to the true row count")
-          // A no-match UPDATE is a no-op: nothing published.
-          s2.sql("UPDATE graftcat.docs SET n_chars = 0 " +
-            "WHERE doc_id BETWEEN -100 AND -50")
-          require(VersionedTable.latestVersion(table).contains(1L),
-            "pipe_sql_update: a no-match UPDATE must publish nothing")
-          val out = s2.sql(
-            "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
-          val rows = out.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        s2.sql("UPDATE graftcat.docs SET n_chars = n_chars + 100000 " +
+          "WHERE doc_id BETWEEN 10 AND 40")
+        require(VersionedTable.latestVersion(table).contains(1L) &&
+            VersionedTable.commitKind(table, 1L).contains("update"),
+          "pipe_sql_update: the statement must land as v1, KIND=update")
+        // The condition reached the operation scan: files whose
+        // zonemap misses [10, 40] were never rewritten.
+        val untouched = VersionedTable.statsManifest(table, 0L).collect {
+          case (f, mn, mx) if !(mx >= 10L && mn <= 40L) => f
+        }.toSet
+        require(untouched.nonEmpty && untouched.subsetOf(
+            VersionedTable.statsManifest(table, 1L).map(_._1).toSet),
+          "pipe_sql_update: an untouched file's manifest line vanished " +
+            "— the SQL UPDATE must rewrite only zonemap-overlapping " +
+            "files")
+        val rc = VersionedTable.snapshot(table, 1L).rowCounts
+        require(rc.map(_._1).toSet ==
+            VersionedTable.statsManifest(table, 1L).map(_._1).toSet &&
+            rc.map(_._2).sum == VersionedTable.read(s, table).count(),
+          "pipe_sql_update: ROWS lines must cover v1 exactly and sum " +
+            "to the true row count")
+        // A no-match UPDATE is a no-op: nothing published.
+        s2.sql("UPDATE graftcat.docs SET n_chars = 0 " +
+          "WHERE doc_id BETWEEN -100 AND -50")
+        require(VersionedTable.latestVersion(table).contains(1L),
+          "pipe_sql_update: a no-match UPDATE must publish nothing")
+        val out = s2.sql(
+          "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
+        out
+      }
     }),
 
-    // SQL MERGE INTO — the literal statement (r15): matched rows
+    // SQL MERGE INTO — the literal statement: matched rows
     // update, unmatched source rows insert, one atomic KIND=update
     // commit through the group-replacement write. RUNTIME GROUP
     // FILTERING prunes the rewrite to files that actually hold matched
@@ -2032,48 +1914,43 @@ object TableQueries extends QueryModule {
     // updates applied plus the unmatched inserts.
     "pipe_sql_merge" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vsqlmrg_")
-      try {
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vsqlmrg_") { (tmp, s2) =>
         val table = tmp.resolve("docs")
         val docs = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
         VersionedTable.commit(s, table, 0L, docs)
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          // The upsert source: +7000 chars for doc_id%6==2 (matched),
-          // clones shifted past the id space for doc_id%11==5
-          // (unmatched) — pipe_merge_commit's u1, as a temp view on the
-          // catalog session.
-          graft.sources.Tables.table(s2, dir, "documents")
-            .select($"doc_id", $"lang", $"n_chars")
-            .where($"doc_id" % 6 === 2)
-            .selectExpr("doc_id", "lang", "n_chars + 7000L AS n_chars")
-            .unionAll(graft.sources.Tables.table(s2, dir, "documents")
-              .where($"doc_id" % 11 === 5)
-              .selectExpr("doc_id + 2199023255552L AS doc_id", "lang",
-                "n_chars"))
-            .createOrReplaceTempView("upserts")
-          s2.sql(
-            """MERGE INTO graftcat.docs t USING upserts u
-              |ON t.doc_id = u.doc_id
-              |WHEN MATCHED THEN UPDATE SET n_chars = u.n_chars
-              |WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
-              |  VALUES (u.doc_id, u.lang, u.n_chars)""".stripMargin)
-          require(VersionedTable.latestVersion(table).contains(1L) &&
-              VersionedTable.commitKind(table, 1L).contains("update"),
-            "pipe_sql_merge: the MERGE must land as one v1 KIND=update " +
-              "commit")
-          val out = s2.sql(
-            "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
-          val rows = out.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        // The upsert source: +7000 chars for doc_id%6==2 (matched),
+        // clones shifted past the id space for doc_id%11==5
+        // (unmatched) — pipe_merge_commit's u1, as a temp view on the
+        // catalog session.
+        graft.sources.Tables.table(s2, dir, "documents")
+          .select($"doc_id", $"lang", $"n_chars")
+          .where($"doc_id" % 6 === 2)
+          .selectExpr("doc_id", "lang", "n_chars + 7000L AS n_chars")
+          .unionAll(graft.sources.Tables.table(s2, dir, "documents")
+            .where($"doc_id" % 11 === 5)
+            .selectExpr("doc_id + 2199023255552L AS doc_id", "lang",
+              "n_chars"))
+          .createOrReplaceTempView("upserts")
+        s2.sql(
+          """MERGE INTO graftcat.docs t USING upserts u
+            |ON t.doc_id = u.doc_id
+            |WHEN MATCHED THEN UPDATE SET n_chars = u.n_chars
+            |WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
+            |  VALUES (u.doc_id, u.lang, u.n_chars)""".stripMargin)
+        require(VersionedTable.latestVersion(table).contains(1L) &&
+            VersionedTable.commitKind(table, 1L).contains("update"),
+          "pipe_sql_merge: the MERGE must land as one v1 KIND=update " +
+            "commit")
+        val out = s2.sql(
+          "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
+        out
+      }
     }),
 
-    // SQL MERGE … WHEN NOT MATCHED BY SOURCE (r20) — the
+    // SQL MERGE … WHEN NOT MATCHED BY SOURCE — the
     // SNAPSHOT-SYNC statement (the clause matrix's last member,
-    // VERDICT r19 #3): rows absent from the source DELETE, so one
+    // rows absent from the source DELETE, so one
     // MERGE makes the target an exact mirror of an upstream snapshot —
     // the shape every replication/sync pipeline runs. Correctness trap
     // at scale, witnessed in-path: runtime group filtering must NOT
@@ -2085,50 +1962,47 @@ object TableQueries extends QueryModule {
     // atomic KIND=update commit like every rewrite.
     "pipe_sql_merge_sync" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vsqlsync_")
-      try {
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vsqlsync_") { (tmp, s2) =>
         val table = tmp.resolve("docs")
         val docs = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
         VersionedTable.commit(s, table, 0L, docs)
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          // The source snapshot: every doc_id%3==0 row with bumped
-          // n_chars (matched → update), plus shifted clones (absent from
-          // the target → insert); everything else is ABSENT from the
-          // source (→ delete). Post-merge, the table IS this snapshot.
-          graft.sources.Tables.table(s2, dir, "documents")
-            .where($"doc_id" % 3 === 0)
-            .selectExpr("doc_id", "lang", "n_chars + 1000L AS n_chars")
-            .unionAll(graft.sources.Tables.table(s2, dir, "documents")
-              .where($"doc_id" % 11 === 5)
-              .selectExpr("doc_id + 2199023255552L AS doc_id", "lang",
-                "n_chars"))
-            .createOrReplaceTempView("snapshot")
-          s2.sql(
-            """MERGE INTO graftcat.docs t USING snapshot u
-              |ON t.doc_id = u.doc_id
-              |WHEN MATCHED THEN UPDATE SET n_chars = u.n_chars
-              |WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
-              |  VALUES (u.doc_id, u.lang, u.n_chars)
-              |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
-          require(VersionedTable.latestVersion(table).contains(1L) &&
-              VersionedTable.commitKind(table, 1L).contains("update"),
-            "pipe_sql_merge_sync: the sync must land as one v1 " +
-              "KIND=update commit")
-          val srcN = s2.table("snapshot").count()
-          val out = s2.sql(
-            "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
-          val rows = out.collect()
-          require(rows.length.toLong == srcN,
-            s"pipe_sql_merge_sync: post-sync row count ${rows.length} " +
-              s"!= source snapshot $srcN — source-absent rows survived")
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        // The source snapshot: every doc_id%3==0 row with bumped
+        // n_chars (matched → update), plus shifted clones (absent from
+        // the target → insert); everything else is ABSENT from the
+        // source (→ delete). Post-merge, the table IS this snapshot.
+        graft.sources.Tables.table(s2, dir, "documents")
+          .where($"doc_id" % 3 === 0)
+          .selectExpr("doc_id", "lang", "n_chars + 1000L AS n_chars")
+          .unionAll(graft.sources.Tables.table(s2, dir, "documents")
+            .where($"doc_id" % 11 === 5)
+            .selectExpr("doc_id + 2199023255552L AS doc_id", "lang",
+              "n_chars"))
+          .createOrReplaceTempView("snapshot")
+        s2.sql(
+          """MERGE INTO graftcat.docs t USING snapshot u
+            |ON t.doc_id = u.doc_id
+            |WHEN MATCHED THEN UPDATE SET n_chars = u.n_chars
+            |WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
+            |  VALUES (u.doc_id, u.lang, u.n_chars)
+            |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
+        require(VersionedTable.latestVersion(table).contains(1L) &&
+            VersionedTable.commitKind(table, 1L).contains("update"),
+          "pipe_sql_merge_sync: the sync must land as one v1 " +
+            "KIND=update commit")
+        val srcN = s2.table("snapshot").count()
+        val out = s2.sql(
+          "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
+        val local = graft.sources.GraftSession.materialize(s, out)
+        val rows = local.collect()
+        require(rows.length.toLong == srcN,
+          s"pipe_sql_merge_sync: post-sync row count ${rows.length} " +
+            s"!= source snapshot $srcN — source-absent rows survived")
+        local
+      }
     }),
 
-    // SQL DDL THROUGH THE CATALOG (r15) — the table LIFECYCLE as plain
+    // SQL DDL THROUGH THE CATALOG — the table LIFECYCLE as plain
     // statements, every one a protocol commit: `CREATE TABLE … AS
     // SELECT` bootstraps v0 as a schema-pinning zero-row commit and
     // lands the rows as v1 through the V2 write (witnessed: history
@@ -2142,65 +2016,60 @@ object TableQueries extends QueryModule {
     // creates, evolves, queries, and retires versioned tables without
     // ever importing the library.
     "pipe_sql_ddl" -> ((s, dir) => {
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vddl_")
-      try {
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          s2.sql(s"""CREATE TABLE graftcat.docs AS
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vddl_") { (tmp, s2) =>
+        s2.sql(s"""CREATE TABLE graftcat.docs AS
                      SELECT doc_id, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-          val table = tmp.resolve("docs")
-          require(VersionedTable.versions(table) == Seq(0L, 1L),
-            "pipe_sql_ddl: CTAS must land as bootstrap v0 + data v1, " +
-              s"got ${VersionedTable.versions(table)}")
-          require(s2.sql(
-              "SELECT count(*) AS n FROM graftcat.docs VERSION AS OF 0")
-              .head().getLong(0) == 0L,
-            "pipe_sql_ddl: VERSION AS OF 0 must serve the empty " +
-              "schema-pinning declaration")
-          s2.sql("ALTER TABLE graftcat.docs RENAME COLUMN n_chars TO chars")
-          // The rename is metadata-only debt; the compaction
-          // materializes it into the files (and re-clusters).
-          s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
-          require(VersionedTable.snapshot(table, 3L).columnMappings.isEmpty,
-            "pipe_sql_ddl: compaction must materialize the rename")
-          // DROP is ref-guarded: a pinned release refuses to vanish.
-          s2.sql("CALL graftcat.tag('docs', 'release', 3)")
-          require(scala.util.Try(
-              s2.sql("DROP TABLE graftcat.docs")).isFailure,
-            "pipe_sql_ddl: DROP TABLE must refuse while a tag pins " +
-              "history")
-          // RENAME TABLE is one atomic directory move — history
-          // rides along; CREATE OR REPLACE re-declares in place (drop +
-          // create, both ref-guarded); an unpinned scratch table then
-          // drops cleanly and is gone.
-          s2.sql("CREATE TABLE graftcat.scratch (id BIGINT)")
-          s2.sql("ALTER TABLE graftcat.scratch RENAME TO graftcat.scratch2")
-          require(VersionedTable.latestVersion(
-              tmp.resolve("scratch")).isEmpty &&
-              VersionedTable.latestVersion(tmp.resolve("scratch2"))
-                .contains(0L),
-            "pipe_sql_ddl: RENAME TO must move the table directory")
-          s2.sql("CREATE OR REPLACE TABLE graftcat.scratch2 " +
-            "AS SELECT 5L AS id")
-          require(s2.sql("SELECT id FROM graftcat.scratch2").head()
-              .getLong(0) == 5L &&
-              VersionedTable.versions(tmp.resolve("scratch2")) ==
-                Seq(0L, 1L),
-            "pipe_sql_ddl: CREATE OR REPLACE must re-declare from v0")
-          s2.sql("DROP TABLE graftcat.scratch2")
-          require(VersionedTable.latestVersion(
-              tmp.resolve("scratch2")).isEmpty,
-            "pipe_sql_ddl: DROP TABLE must remove the unpinned table")
-          val out = s2.sql(
-            "SELECT doc_id, lang, chars FROM graftcat.docs ORDER BY doc_id")
-          val rows = out.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        val table = tmp.resolve("docs")
+        require(VersionedTable.versions(table) == Seq(0L, 1L),
+          "pipe_sql_ddl: CTAS must land as bootstrap v0 + data v1, " +
+            s"got ${VersionedTable.versions(table)}")
+        require(s2.sql(
+            "SELECT count(*) AS n FROM graftcat.docs VERSION AS OF 0")
+            .head().getLong(0) == 0L,
+          "pipe_sql_ddl: VERSION AS OF 0 must serve the empty " +
+            "schema-pinning declaration")
+        s2.sql("ALTER TABLE graftcat.docs RENAME COLUMN n_chars TO chars")
+        // The rename is metadata-only debt; the compaction
+        // materializes it into the files (and re-clusters).
+        s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
+        require(VersionedTable.snapshot(table, 3L).columnMappings.isEmpty,
+          "pipe_sql_ddl: compaction must materialize the rename")
+        // DROP is ref-guarded: a pinned release refuses to vanish.
+        s2.sql("CALL graftcat.tag('docs', 'release', 3)")
+        require(scala.util.Try(
+            s2.sql("DROP TABLE graftcat.docs")).isFailure,
+          "pipe_sql_ddl: DROP TABLE must refuse while a tag pins " +
+            "history")
+        // RENAME TABLE is one atomic directory move — history
+        // rides along; CREATE OR REPLACE re-declares in place (drop +
+        // create, both ref-guarded); an unpinned scratch table then
+        // drops cleanly and is gone.
+        s2.sql("CREATE TABLE graftcat.scratch (id BIGINT)")
+        s2.sql("ALTER TABLE graftcat.scratch RENAME TO graftcat.scratch2")
+        require(VersionedTable.latestVersion(
+            tmp.resolve("scratch")).isEmpty &&
+            VersionedTable.latestVersion(tmp.resolve("scratch2"))
+              .contains(0L),
+          "pipe_sql_ddl: RENAME TO must move the table directory")
+        s2.sql("CREATE OR REPLACE TABLE graftcat.scratch2 " +
+          "AS SELECT 5L AS id")
+        require(s2.sql("SELECT id FROM graftcat.scratch2").head()
+            .getLong(0) == 5L &&
+            VersionedTable.versions(tmp.resolve("scratch2")) ==
+              Seq(0L, 1L),
+          "pipe_sql_ddl: CREATE OR REPLACE must re-declare from v0")
+        s2.sql("DROP TABLE graftcat.scratch2")
+        require(VersionedTable.latestVersion(
+            tmp.resolve("scratch2")).isEmpty,
+          "pipe_sql_ddl: DROP TABLE must remove the unpinned table")
+        val out = s2.sql(
+          "SELECT doc_id, lang, chars FROM graftcat.docs ORDER BY doc_id")
+        out
+      }
     }),
 
-    // SQL CREATE TABLE … PARTITIONED BY (r16) — a DDL-created table
+    // SQL CREATE TABLE … PARTITIONED BY — a DDL-created table
     // finally gets the manifest partition pruning the engine is
     // proudest of: the declaration lands as a PARTCOL line on the
     // zero-row bootstrap (the layout is known before any data path
@@ -2212,67 +2081,62 @@ object TableQueries extends QueryModule {
     // per surviving file, strictly fewer than the table's files.
     // CTAS PARTITIONED BY lands partitioned the same way (witnessed).
     "pipe_sql_partitioned" -> ((s, dir) => {
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vpart_")
-      try {
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          s2.sql("""CREATE TABLE graftcat.docs
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vpart_") { (tmp, s2) =>
+        s2.sql("""CREATE TABLE graftcat.docs
                     (doc_id BIGINT, lang STRING, n_chars BIGINT)
                     PARTITIONED BY (lang)""")
-          val table = tmp.resolve("docs")
-          require(VersionedTable.snapshot(table, 0L).declaredPartitionCols ==
-              Seq("lang"),
-            "pipe_sql_partitioned: the DDL must declare the layout on " +
-              "the bootstrap")
-          s2.sql(s"""INSERT INTO graftcat.docs
+        val table = tmp.resolve("docs")
+        require(VersionedTable.snapshot(table, 0L).declaredPartitionCols ==
+            Seq("lang"),
+          "pipe_sql_partitioned: the DDL must declare the layout on " +
+            "the bootstrap")
+        s2.sql(s"""INSERT INTO graftcat.docs
                      SELECT doc_id, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-          // Every ingested file landed under its partition segment.
-          val added = VersionedTable.addedFiles(table, 1L)
-          require(added.nonEmpty && added.forall(_.contains("lang=")),
-            s"pipe_sql_partitioned: INSERT must land col=value files, " +
-              s"got $added")
-          val langs = added.flatMap(f => f.split('/').collectFirst {
-            case seg if seg.startsWith("lang=") => seg }).distinct
-          require(langs.size > 1,
-            "pipe_sql_partitioned: fixture must span several partitions")
-          // MANIFEST PARTITION PRUNING from plain SQL: the scan plans
-          // one input partition per surviving file, so a single-value
-          // predicate must read strictly fewer files than the table
-          // holds (the pipe_partition_commit witness, on a DDL table).
-          val one = s2.sql(
-            "SELECT * FROM graftcat.docs WHERE lang = 'en'")
-          val scanned = one.rdd.getNumPartitions
-          val enFiles = added.count(_.contains("lang=en"))
-          // +1: the flat zero-row bootstrap carries no partition segment
-          // so no value predicate can ever prune it — a constant, not a
-          // scale cost.
-          require(scanned == enFiles + 1 && scanned < added.size + 1,
-            s"pipe_sql_partitioned: predicate scanned $scanned files, " +
-              s"expected the $enFiles lang=en files (+ bootstrap) of " +
-              s"${added.size + 1}")
-          // CTAS PARTITIONED BY lands partitioned the same way.
-          s2.sql(s"""CREATE TABLE graftcat.by_lang PARTITIONED BY (lang)
+        // Every ingested file landed under its partition segment.
+        val added = VersionedTable.addedFiles(table, 1L)
+        require(added.nonEmpty && added.forall(_.contains("lang=")),
+          s"pipe_sql_partitioned: INSERT must land col=value files, " +
+            s"got $added")
+        val langs = added.flatMap(f => f.split('/').collectFirst {
+          case seg if seg.startsWith("lang=") => seg }).distinct
+        require(langs.size > 1,
+          "pipe_sql_partitioned: fixture must span several partitions")
+        // MANIFEST PARTITION PRUNING from plain SQL: the scan plans
+        // one input partition per surviving file, so a single-value
+        // predicate must read strictly fewer files than the table
+        // holds (the pipe_partition_commit witness, on a DDL table).
+        val one = s2.sql(
+          "SELECT * FROM graftcat.docs WHERE lang = 'en'")
+        val scanned = one.rdd.getNumPartitions
+        val enFiles = added.count(_.contains("lang=en"))
+        // +1: the flat zero-row bootstrap carries no partition segment
+        // so no value predicate can ever prune it — a constant, not a
+        // scale cost.
+        require(scanned == enFiles + 1 && scanned < added.size + 1,
+          s"pipe_sql_partitioned: predicate scanned $scanned files, " +
+            s"expected the $enFiles lang=en files (+ bootstrap) of " +
+            s"${added.size + 1}")
+        // CTAS PARTITIONED BY lands partitioned the same way.
+        s2.sql(s"""CREATE TABLE graftcat.by_lang PARTITIONED BY (lang)
                      AS SELECT doc_id, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 5 = 0""")
-          val t2 = tmp.resolve("by_lang")
-          val ctasFiles = VersionedTable.addedFiles(t2, 1L)
-          require(ctasFiles.nonEmpty && ctasFiles.forall(_.contains("lang=")),
-            "pipe_sql_partitioned: CTAS writes must land partitioned")
-          val out = s2.sql(
-            """SELECT d.doc_id, d.lang, d.n_chars,
-               |  CASE WHEN b.doc_id IS NULL THEN 0L ELSE 1L END AS in_ctas
-               |FROM graftcat.docs d LEFT JOIN graftcat.by_lang b
-               |  ON d.doc_id = b.doc_id
-               |ORDER BY d.doc_id""".stripMargin)
-          val rows = out.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        val t2 = tmp.resolve("by_lang")
+        val ctasFiles = VersionedTable.addedFiles(t2, 1L)
+        require(ctasFiles.nonEmpty && ctasFiles.forall(_.contains("lang=")),
+          "pipe_sql_partitioned: CTAS writes must land partitioned")
+        val out = s2.sql(
+          """SELECT d.doc_id, d.lang, d.n_chars,
+             |  CASE WHEN b.doc_id IS NULL THEN 0L ELSE 1L END AS in_ctas
+             |FROM graftcat.docs d LEFT JOIN graftcat.by_lang b
+             |  ON d.doc_id = b.doc_id
+             |ORDER BY d.doc_id""".stripMargin)
+        out
+      }
     }),
 
-    // METADATA TABLES (r17) — the Iceberg `t$files` surface: a graft
+    // METADATA TABLES — the Iceberg `t$files` surface: a graft
     // table's protocol state as SELECT-able relations, answered from
     // MANIFESTS ALONE (at 100 TB, "how many rows per partition" /
     // "which files hold last week" are dashboard queries that must
@@ -2286,9 +2150,7 @@ object TableQueries extends QueryModule {
     // counts served from ROWS manifest lines must equal the exact
     // GROUP BY over the fixture — the metadata IS the data's truth.
     "pipe_table_meta" -> ((s, dir) => {
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vmeta_")
-      try {
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vmeta_") { (tmp, s2) =>
         val table = tmp.resolve("docs")
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -2300,69 +2162,66 @@ object TableQueries extends QueryModule {
           carried = VersionedTable.manifest(table, 0L),
           statsCol = Some("doc_id"), rowCounts = true)
         VersionedTable.tagCreate(table, "release", 1L)
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          // $files: one row per live data file, bytes/ROWS/zonemaps from
-          // the manifest (+ a stat call for bytes), partition segments.
-          // Served DISTRIBUTED: the plan must show a real V2
-          // BatchScan — executors parse the manifest and make the stat
-          // calls; a LocalTableScan here would mean a driver-side
-          // per-file materialization at PLAN time, the thing that OOMs
-          // the driver at a 10⁷-file table. $partitions likewise.
-          val filesDf = s2.sql("SELECT * FROM graftcat.`docs$files`")
-          Seq(filesDf,
-              s2.sql("SELECT * FROM graftcat.`docs$partitions`")).foreach {
-            df =>
-              val plan = df.queryExecution.executedPlan
-              require(plan.collect {
-                  case b: org.apache.spark.sql.execution.datasources.v2
-                    .BatchScanExec => b }.nonEmpty &&
-                plan.collect {
-                  case l: org.apache.spark.sql.execution
-                    .LocalTableScanExec => l }.isEmpty,
-                "pipe_table_meta: file-sized metadata tables must be " +
-                  "served by a distributed V2 scan, not a driver-side " +
-                  "LocalTableScan")
-          }
-          val files = filesDf.collect()
-          require(files.length ==
-              VersionedTable.statsManifest(table, 1L).size,
-            "pipe_table_meta: $files must inventory the live snapshot")
-          require(files.forall(r => r.getLong(r.fieldIndex("bytes")) > 0 &&
-              !r.isNullAt(r.fieldIndex("row_count")) &&
-              r.getLong(r.fieldIndex("stats_min")) <=
-                r.getLong(r.fieldIndex("stats_max")) &&
-              r.getString(r.fieldIndex("partition")).startsWith("lang=")),
-            "pipe_table_meta: $files rows must carry bytes, ROWS count, " +
-              "zonemap bounds and partition segments")
-          // Time travel composes: v0's inventory is strictly smaller.
-          val v0Files = s2.sql(
-            "SELECT * FROM graftcat.`docs$files` VERSION AS OF 0").count()
-          require(v0Files < files.length && v0Files > 0,
-            s"pipe_table_meta: VERSION AS OF 0 must serve v0's " +
-              s"$v0Files-file inventory")
-          // $history: one row per commit, kind and add/remove counts.
-          val hist = s2.sql("SELECT version, files_added, files_removed " +
-            "FROM graftcat.`docs$history` ORDER BY version").collect()
-          require(hist.map(_.getLong(0)).toSeq == Seq(0L, 1L) &&
-              hist.forall(r => r.getLong(1) > 0 && r.getLong(2) == 0),
-            "pipe_table_meta: $history must report both append commits")
-          // $refs: the tag with its pinned version.
-          val refs = s2.sql("SELECT name, type, version " +
-            "FROM graftcat.`docs$refs`").collect()
-          require(refs.map(r => (r.getString(0), r.getString(1),
-              r.getLong(2))).toSeq == Seq(("release", "tag", 1L)),
-            s"pipe_table_meta: $$refs must list the tag, got " +
-              refs.mkString(", "))
-          // $partitions: the per-lang rollup — the ORACLE-CHECKED half.
-          val out = s2.sql("SELECT lang, row_count " +
-            "FROM graftcat.`docs$partitions` ORDER BY lang")
-          val rows = out.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        // $files: one row per live data file, bytes/ROWS/zonemaps from
+        // the manifest (+ a stat call for bytes), partition segments.
+        // Served DISTRIBUTED: the plan must show a real V2
+        // BatchScan — executors parse the manifest and make the stat
+        // calls; a LocalTableScan here would mean a driver-side
+        // per-file materialization at PLAN time, the thing that OOMs
+        // the driver at a 10⁷-file table. $partitions likewise.
+        val filesDf = s2.sql("SELECT * FROM graftcat.`docs$files`")
+        Seq(filesDf,
+            s2.sql("SELECT * FROM graftcat.`docs$partitions`")).foreach {
+          df =>
+            val plan = df.queryExecution.executedPlan
+            require(plan.collect {
+                case b: org.apache.spark.sql.execution.datasources.v2
+                  .BatchScanExec => b }.nonEmpty &&
+              plan.collect {
+                case l: org.apache.spark.sql.execution
+                  .LocalTableScanExec => l }.isEmpty,
+              "pipe_table_meta: file-sized metadata tables must be " +
+                "served by a distributed V2 scan, not a driver-side " +
+                "LocalTableScan")
         }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        val files = filesDf.collect()
+        require(files.length ==
+            VersionedTable.statsManifest(table, 1L).size,
+          "pipe_table_meta: $files must inventory the live snapshot")
+        require(files.forall(r => r.getLong(r.fieldIndex("bytes")) > 0 &&
+            !r.isNullAt(r.fieldIndex("row_count")) &&
+            r.getLong(r.fieldIndex("stats_min")) <=
+              r.getLong(r.fieldIndex("stats_max")) &&
+            r.getString(r.fieldIndex("partition")).startsWith("lang=")),
+          "pipe_table_meta: $files rows must carry bytes, ROWS count, " +
+            "zonemap bounds and partition segments")
+        // Time travel composes: v0's inventory is strictly smaller.
+        val v0Files = s2.sql(
+          "SELECT * FROM graftcat.`docs$files` VERSION AS OF 0").count()
+        require(v0Files < files.length && v0Files > 0,
+          s"pipe_table_meta: VERSION AS OF 0 must serve v0's " +
+            s"$v0Files-file inventory")
+        // $history: one row per commit, kind and add/remove counts.
+        val hist = s2.sql("SELECT version, files_added, files_removed " +
+          "FROM graftcat.`docs$history` ORDER BY version").collect()
+        require(hist.map(_.getLong(0)).toSeq == Seq(0L, 1L) &&
+            hist.forall(r => r.getLong(1) > 0 && r.getLong(2) == 0),
+          "pipe_table_meta: $history must report both append commits")
+        // $refs: the tag with its pinned version.
+        val refs = s2.sql("SELECT name, type, version " +
+          "FROM graftcat.`docs$refs`").collect()
+        require(refs.map(r => (r.getString(0), r.getString(1),
+            r.getLong(2))).toSeq == Seq(("release", "tag", 1L)),
+          s"pipe_table_meta: $$refs must list the tag, got " +
+            refs.mkString(", "))
+        // $partitions: the per-lang rollup — the ORACLE-CHECKED half.
+        val out = s2.sql("SELECT lang, row_count " +
+          "FROM graftcat.`docs$partitions` ORDER BY lang")
+        out
+      }
     }),
 
-    // PARTITION-SPEC EVOLUTION (r17) — Iceberg's "we picked the wrong
+    // PARTITION-SPEC EVOLUTION — Iceberg's "we picked the wrong
     // partition key" verb, end-to-end through the catalog: a table
     // created PARTITIONED BY (lang) ingests a batch, CALL
     // evolve_layout('docs', 'source') changes the WRITE layout in one
@@ -2380,109 +2239,106 @@ object TableQueries extends QueryModule {
     // byte-identical (witnessed), and the same predicate now prunes
     // the whole table. Oracle replays the two inserts relationally.
     "pipe_partition_evolve" -> ((s, dir) => {
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vevolve_")
-      try {
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          s2.sql("""CREATE TABLE graftcat.docs
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vevolve_") { (tmp, s2) =>
+        s2.sql("""CREATE TABLE graftcat.docs
                     (doc_id BIGINT, lang STRING, source STRING,
                      n_chars BIGINT)
                     PARTITIONED BY (lang)""")
-          val table = tmp.resolve("docs")
-          s2.sql(s"""INSERT INTO graftcat.docs
+        val table = tmp.resolve("docs")
+        s2.sql(s"""INSERT INTO graftcat.docs
                      SELECT doc_id, lang, source, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 3 = 0""")
-          val oldFiles = VersionedTable.addedFiles(table, 1L)
-          require(oldFiles.nonEmpty && oldFiles.forall(_.contains("lang=")),
-            s"pipe_partition_evolve: batch 1 must land lang=… files")
-          // The evolution itself: ONE metadata commit, zero data files.
-          s2.sql("CALL graftcat.evolve_layout('docs', 'source')")
-          require(VersionedTable.latestVersion(table).contains(2L),
-            "pipe_partition_evolve: evolve_layout must publish one commit")
-          val evolveAdds = VersionedTable.addedLines(table, 2L)
-            .map(VersionedTable.parse)
-          require(evolveAdds.size == 1 &&
-              evolveAdds.head.isInstanceOf[VersionedTable.PartSpec],
-            s"pipe_partition_evolve: the evolve commit must add exactly " +
-              s"one PARTSPEC line, got $evolveAdds")
-          require(VersionedTable.snapshot(table, 2L).writePartitionLayout ==
-              Seq("source"),
-            "pipe_partition_evolve: the live write layout must be the " +
-              "new spec")
-          // New data lands under the NEW spec; old files keep their
-          // paths (nothing was rewritten).
-          s2.sql(s"""INSERT INTO graftcat.docs
+        val oldFiles = VersionedTable.addedFiles(table, 1L)
+        require(oldFiles.nonEmpty && oldFiles.forall(_.contains("lang=")),
+          s"pipe_partition_evolve: batch 1 must land lang=… files")
+        // The evolution itself: ONE metadata commit, zero data files.
+        s2.sql("CALL graftcat.evolve_layout('docs', 'source')")
+        require(VersionedTable.latestVersion(table).contains(2L),
+          "pipe_partition_evolve: evolve_layout must publish one commit")
+        val evolveAdds = VersionedTable.addedLines(table, 2L)
+          .map(VersionedTable.parse)
+        require(evolveAdds.size == 1 &&
+            evolveAdds.head.isInstanceOf[VersionedTable.PartSpec],
+          s"pipe_partition_evolve: the evolve commit must add exactly " +
+            s"one PARTSPEC line, got $evolveAdds")
+        require(VersionedTable.snapshot(table, 2L).writePartitionLayout ==
+            Seq("source"),
+          "pipe_partition_evolve: the live write layout must be the " +
+            "new spec")
+        // New data lands under the NEW spec; old files keep their
+        // paths (nothing was rewritten).
+        s2.sql(s"""INSERT INTO graftcat.docs
                      SELECT doc_id, lang, source, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 3 = 1""")
-          val newFiles = VersionedTable.addedFiles(table, 3L)
-          require(newFiles.nonEmpty &&
-              newFiles.forall(f => f.contains("source=") &&
-                !f.contains("lang=")),
-            s"pipe_partition_evolve: batch 2 must land source=… files, " +
-              s"got $newFiles")
-          val srcVals = newFiles.flatMap(_.split('/').collectFirst {
-            case seg if seg.startsWith("source=") => seg }).distinct
-          require(srcVals.size > 1,
-            "pipe_partition_evolve: fixture must span several sources")
-          val oneSrc = srcVals.head.substring("source=".length)
-          // PER-FILE-SPEC PRUNING, pre-compaction: a source predicate
-          // must skip every non-matching NEW-spec file and
-          // conservatively admit every OLD-spec file (+ the flat
-          // bootstrap) — Iceberg's mixed-spec contract.
-          val matching = newFiles.count(_.contains(s"source=$oneSrc"))
-          val scanned = s2.sql("SELECT * FROM graftcat.docs " +
-            s"WHERE source = '$oneSrc'").rdd.getNumPartitions
-          require(scanned == matching + oldFiles.size + 1 &&
-              scanned < oldFiles.size + newFiles.size + 1,
-            s"pipe_partition_evolve: source predicate scanned $scanned " +
-              s"files, expected $matching matching new-spec + " +
-              s"${oldFiles.size} conservatively-admitted old-spec + " +
-              "bootstrap")
-          // …and the OLD spec still prunes its own generation: a lang
-          // predicate skips non-matching old-spec files while admitting
-          // every new-spec file.
-          val oneLang = oldFiles.flatMap(_.split('/').collectFirst {
-            case seg if seg.startsWith("lang=") => seg }).distinct
-            .head.substring("lang=".length)
-          val matchingOld = oldFiles.count(_.contains(s"lang=$oneLang"))
-          val scannedLang = s2.sql("SELECT * FROM graftcat.docs " +
-            s"WHERE lang = '$oneLang'").rdd.getNumPartitions
-          require(scannedLang == matchingOld + newFiles.size + 1,
-            s"pipe_partition_evolve: lang predicate scanned " +
-              s"$scannedLang files, expected $matchingOld old-spec + " +
-              s"${newFiles.size} admitted new-spec + bootstrap")
-          val out = s2.sql("SELECT doc_id, lang, source, n_chars " +
-            "FROM graftcat.docs ORDER BY doc_id")
-          val rows = out.collect()
-          // Compaction un-rags the evolved table: everything rewritten
-          // under the live spec, content identical, and the predicate
-          // now prunes the WHOLE table.
-          s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
-          val v = VersionedTable.latestVersion(table).get
-          val files = VersionedTable.statsManifest(table, v).map(_._1)
-          require(files.forall(f => f.contains("source=") &&
+        val newFiles = VersionedTable.addedFiles(table, 3L)
+        require(newFiles.nonEmpty &&
+            newFiles.forall(f => f.contains("source=") &&
               !f.contains("lang=")),
-            s"pipe_partition_evolve: compaction must rewrite every file " +
-              s"under the live spec, got $files")
-          val after = s2.sql("SELECT doc_id, lang, source, n_chars " +
-            "FROM graftcat.docs ORDER BY doc_id").collect()
-          require(after.toSeq == rows.toSeq,
-            "pipe_partition_evolve: compaction changed the contents")
-          val matchAfter = files.count(_.contains(s"source=$oneSrc"))
-          val scanAfter = s2.sql("SELECT * FROM graftcat.docs " +
-            s"WHERE source = '$oneSrc'").rdd.getNumPartitions
-          require(scanAfter == matchAfter && scanAfter < files.size,
-            s"pipe_partition_evolve: post-compact predicate scanned " +
-              s"$scanAfter of ${files.size}, expected $matchAfter")
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+          s"pipe_partition_evolve: batch 2 must land source=… files, " +
+            s"got $newFiles")
+        val srcVals = newFiles.flatMap(_.split('/').collectFirst {
+          case seg if seg.startsWith("source=") => seg }).distinct
+        require(srcVals.size > 1,
+          "pipe_partition_evolve: fixture must span several sources")
+        val oneSrc = srcVals.head.substring("source=".length)
+        // PER-FILE-SPEC PRUNING, pre-compaction: a source predicate
+        // must skip every non-matching NEW-spec file and
+        // conservatively admit every OLD-spec file (+ the flat
+        // bootstrap) — Iceberg's mixed-spec contract.
+        val matching = newFiles.count(_.contains(s"source=$oneSrc"))
+        val scanned = s2.sql("SELECT * FROM graftcat.docs " +
+          s"WHERE source = '$oneSrc'").rdd.getNumPartitions
+        require(scanned == matching + oldFiles.size + 1 &&
+            scanned < oldFiles.size + newFiles.size + 1,
+          s"pipe_partition_evolve: source predicate scanned $scanned " +
+            s"files, expected $matching matching new-spec + " +
+            s"${oldFiles.size} conservatively-admitted old-spec + " +
+            "bootstrap")
+        // …and the OLD spec still prunes its own generation: a lang
+        // predicate skips non-matching old-spec files while admitting
+        // every new-spec file.
+        val oneLang = oldFiles.flatMap(_.split('/').collectFirst {
+          case seg if seg.startsWith("lang=") => seg }).distinct
+          .head.substring("lang=".length)
+        val matchingOld = oldFiles.count(_.contains(s"lang=$oneLang"))
+        val scannedLang = s2.sql("SELECT * FROM graftcat.docs " +
+          s"WHERE lang = '$oneLang'").rdd.getNumPartitions
+        require(scannedLang == matchingOld + newFiles.size + 1,
+          s"pipe_partition_evolve: lang predicate scanned " +
+            s"$scannedLang files, expected $matchingOld old-spec + " +
+            s"${newFiles.size} admitted new-spec + bootstrap")
+        val out = s2.sql("SELECT doc_id, lang, source, n_chars " +
+          "FROM graftcat.docs ORDER BY doc_id")
+        val local = graft.sources.GraftSession.materialize(s, out)
+        val rows = local.collect()
+        // Compaction un-rags the evolved table: everything rewritten
+        // under the live spec, content identical, and the predicate
+        // now prunes the WHOLE table.
+        s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
+        val v = VersionedTable.latestVersion(table).get
+        val files = VersionedTable.statsManifest(table, v).map(_._1)
+        require(files.forall(f => f.contains("source=") &&
+            !f.contains("lang=")),
+          s"pipe_partition_evolve: compaction must rewrite every file " +
+            s"under the live spec, got $files")
+        val after = s2.sql("SELECT doc_id, lang, source, n_chars " +
+          "FROM graftcat.docs ORDER BY doc_id").collect()
+        require(after.toSeq == rows.toSeq,
+          "pipe_partition_evolve: compaction changed the contents")
+        val matchAfter = files.count(_.contains(s"source=$oneSrc"))
+        val scanAfter = s2.sql("SELECT * FROM graftcat.docs " +
+          s"WHERE source = '$oneSrc'").rdd.getNumPartitions
+        require(scanAfter == matchAfter && scanAfter < files.size,
+          s"pipe_partition_evolve: post-compact predicate scanned " +
+            s"$scanAfter of ${files.size}, expected $matchAfter")
+        local
+      }
     }),
 
-    // HIDDEN PARTITIONING (r18) — Iceberg's transform specs, the gap
-    // the r17 identity-only evolution left: a `days(ts_us)` generation
+    // HIDDEN PARTITIONING — Iceberg's transform specs, the gap
+    // identity-only evolution leaves: a `days(ts_us)` generation
     // lays new files out by UTC day of a BIGINT epoch-micros column,
     // the derived `ts_us_day=…` segment NEVER appears in the served
     // schema (analysts never learn the layout column), and a vanilla
@@ -2501,102 +2357,99 @@ object TableQueries extends QueryModule {
     // the day spec (contents witnessed identical) and the same raw
     // predicate prunes the entire table. Oracle replays the day slice.
     "pipe_partition_hidden" -> ((s, dir) => {
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vhidden_")
-      try {
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vhidden_") { (tmp, s2) =>
         val table = tmp.resolve("ev")
         val ev = Tables.events(s, dir).selectExpr("event_id",
           s"${QueryModule.TsUs} AS ts_us", "event_type")
         VersionedTable.commitPartitioned(s, table, 0L,
           ev.where("event_id % 3 = 0"), "event_type")
         val oldFiles = VersionedTable.statsManifest(table, 0L).map(_._1)
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          // Unsupported transforms refuse at declaration — never stored
-          // (truncate is a supported transform; the
-          // refusal witness keeps a genuinely-unknown shape).
-          val refused = try {
-            s2.sql("CALL graftcat.evolve_layout('ev', 'void(ts_us)')")
-              .collect(); false
-          } catch { case _: Exception => true }
-          require(refused,
-            "pipe_partition_hidden: void(…) must refuse at declaration")
-          // The evolution: ONE metadata commit, zero data files.
-          s2.sql("CALL graftcat.evolve_layout('ev', 'days(ts_us)')")
-          val evolveAdds = VersionedTable.addedLines(table, 1L)
-            .map(VersionedTable.parse)
-          require(evolveAdds.size == 1 && (evolveAdds.head match {
-              case VersionedTable.PartSpec(_, specs) =>
-                specs.lastOption.contains("days(ts_us)")
-              case _ => false
-            }),
-            s"pipe_partition_hidden: expected one PARTSPEC transform " +
-              s"line, got $evolveAdds")
-          s2.sql(s"""INSERT INTO graftcat.ev
+        // Unsupported transforms refuse at declaration — never stored
+        // (truncate is a supported transform; the
+        // refusal witness keeps a genuinely-unknown shape).
+        val refused = try {
+          s2.sql("CALL graftcat.evolve_layout('ev', 'void(ts_us)')")
+            .collect(); false
+        } catch { case _: Exception => true }
+        require(refused,
+          "pipe_partition_hidden: void(…) must refuse at declaration")
+        // The evolution: ONE metadata commit, zero data files.
+        s2.sql("CALL graftcat.evolve_layout('ev', 'days(ts_us)')")
+        val evolveAdds = VersionedTable.addedLines(table, 1L)
+          .map(VersionedTable.parse)
+        require(evolveAdds.size == 1 && (evolveAdds.head match {
+            case VersionedTable.PartSpec(_, specs) =>
+              specs.lastOption.contains("days(ts_us)")
+            case _ => false
+          }),
+          s"pipe_partition_hidden: expected one PARTSPEC transform " +
+            s"line, got $evolveAdds")
+        s2.sql(s"""INSERT INTO graftcat.ev
                      SELECT event_id, unix_micros(CAST(ts AS TIMESTAMP))
                               AS ts_us, event_type
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "events")}
                      WHERE event_id % 3 <> 0""")
-          val newFiles = VersionedTable.addedFiles(table, 2L)
-          require(newFiles.nonEmpty && newFiles.forall(f =>
-              f.contains("ts_us_day=") && !f.contains("event_type=")),
-            s"pipe_partition_hidden: batch 2 must land hidden day files, " +
-              s"got $newFiles")
-          // HIDDEN: the derived segment is never a schema column.
-          val cols = s2.table("graftcat.ev").columns.toSeq
-          require(cols.sorted == Seq("event_id", "event_type", "ts_us"),
-            s"pipe_partition_hidden: ts_us_day leaked into the schema: " +
-              s"$cols")
-          // A RAW ts_us predicate prunes by the derived segments: the
-          // day's files + conservatively-admitted old-spec files.
-          val day = "2024-01-10"
-          val (lo, hi) = graft.operators.PartTransform.microsRangeOfDay(day)
-          val matching = newFiles.count(_.contains(s"ts_us_day=$day"))
-          def dayQuery = s2.sql("SELECT event_id, ts_us, event_type " +
-            s"FROM graftcat.ev WHERE ts_us BETWEEN $lo AND $hi")
-          require(matching > 0 &&
-              dayQuery.rdd.getNumPartitions == matching + oldFiles.size &&
-              matching + oldFiles.size < oldFiles.size + newFiles.size,
-            s"pipe_partition_hidden: raw-predicate scan planned " +
-              s"${dayQuery.rdd.getNumPartitions} files, expected " +
-              s"$matching day files + ${oldFiles.size} old-spec admits")
-          // …and the OLD identity generation still prunes its own files.
-          val oneType = oldFiles.flatMap(_.split('/').collectFirst {
-            case seg if seg.startsWith("event_type=") => seg }).distinct
-            .head.substring("event_type=".length)
-          val matchingOld = oldFiles.count(
-            _.contains(s"event_type=$oneType"))
-          val scannedType = s2.sql("SELECT * FROM graftcat.ev " +
-            s"WHERE event_type = '$oneType'").rdd.getNumPartitions
-          require(scannedType == matchingOld + newFiles.size,
-            s"pipe_partition_hidden: event_type probe scanned " +
-              s"$scannedType, expected $matchingOld old + " +
-              s"${newFiles.size} new-spec admits")
-          val out = dayQuery.orderBy("event_id")
-          val rows = out.collect()
-          // Compaction un-rags everything under the day spec; contents
-          // identical; the raw predicate now prunes the WHOLE table.
-          s2.sql("CALL graftcat.compact('ev', 'event_id', 4)")
-          val v = VersionedTable.latestVersion(table).get
-          val files = VersionedTable.statsManifest(table, v).map(_._1)
-          require(files.forall(f => f.contains("ts_us_day=") &&
-              !f.contains("event_type=")),
-            s"pipe_partition_hidden: compaction must rewrite under the " +
-              s"day spec, got $files")
-          val after = dayQuery.orderBy("event_id").collect()
-          require(after.toSeq == rows.toSeq,
-            "pipe_partition_hidden: compaction changed the contents")
-          val matchAfter = files.count(_.contains(s"ts_us_day=$day"))
-          require(dayQuery.rdd.getNumPartitions == matchAfter &&
-              matchAfter < files.size,
-            "pipe_partition_hidden: post-compact raw predicate must " +
-              "prune the whole table")
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        val newFiles = VersionedTable.addedFiles(table, 2L)
+        require(newFiles.nonEmpty && newFiles.forall(f =>
+            f.contains("ts_us_day=") && !f.contains("event_type=")),
+          s"pipe_partition_hidden: batch 2 must land hidden day files, " +
+            s"got $newFiles")
+        // HIDDEN: the derived segment is never a schema column.
+        val cols = s2.table("graftcat.ev").columns.toSeq
+        require(cols.sorted == Seq("event_id", "event_type", "ts_us"),
+          s"pipe_partition_hidden: ts_us_day leaked into the schema: " +
+            s"$cols")
+        // A RAW ts_us predicate prunes by the derived segments: the
+        // day's files + conservatively-admitted old-spec files.
+        val day = "2024-01-10"
+        val (lo, hi) = graft.operators.PartTransform.microsRangeOfDay(day)
+        val matching = newFiles.count(_.contains(s"ts_us_day=$day"))
+        def dayQuery = s2.sql("SELECT event_id, ts_us, event_type " +
+          s"FROM graftcat.ev WHERE ts_us BETWEEN $lo AND $hi")
+        require(matching > 0 &&
+            dayQuery.rdd.getNumPartitions == matching + oldFiles.size &&
+            matching + oldFiles.size < oldFiles.size + newFiles.size,
+          s"pipe_partition_hidden: raw-predicate scan planned " +
+            s"${dayQuery.rdd.getNumPartitions} files, expected " +
+            s"$matching day files + ${oldFiles.size} old-spec admits")
+        // …and the OLD identity generation still prunes its own files.
+        val oneType = oldFiles.flatMap(_.split('/').collectFirst {
+          case seg if seg.startsWith("event_type=") => seg }).distinct
+          .head.substring("event_type=".length)
+        val matchingOld = oldFiles.count(
+          _.contains(s"event_type=$oneType"))
+        val scannedType = s2.sql("SELECT * FROM graftcat.ev " +
+          s"WHERE event_type = '$oneType'").rdd.getNumPartitions
+        require(scannedType == matchingOld + newFiles.size,
+          s"pipe_partition_hidden: event_type probe scanned " +
+            s"$scannedType, expected $matchingOld old + " +
+            s"${newFiles.size} new-spec admits")
+        val out = dayQuery.orderBy("event_id")
+        val local = graft.sources.GraftSession.materialize(s, out)
+        val rows = local.collect()
+        // Compaction un-rags everything under the day spec; contents
+        // identical; the raw predicate now prunes the WHOLE table.
+        s2.sql("CALL graftcat.compact('ev', 'event_id', 4)")
+        val v = VersionedTable.latestVersion(table).get
+        val files = VersionedTable.statsManifest(table, v).map(_._1)
+        require(files.forall(f => f.contains("ts_us_day=") &&
+            !f.contains("event_type=")),
+          s"pipe_partition_hidden: compaction must rewrite under the " +
+            s"day spec, got $files")
+        val after = dayQuery.orderBy("event_id").collect()
+        require(after.toSeq == rows.toSeq,
+          "pipe_partition_hidden: compaction changed the contents")
+        val matchAfter = files.count(_.contains(s"ts_us_day=$day"))
+        require(dayQuery.rdd.getNumPartitions == matchAfter &&
+            matchAfter < files.size,
+          "pipe_partition_hidden: post-compact raw predicate must " +
+            "prune the whole table")
+        local
+      }
     }),
 
-    // TRUNCATE(n, col) HIDDEN PARTITIONING (r20) — the width
-    // transform completing the Iceberg family (VERDICT r19 #4):
+    // TRUNCATE(n, col) HIDDEN PARTITIONING — the width
+    // transform completing the Iceberg family:
     // STRING columns segment by their first n characters (the
     // id-prefix clustering common for document corpora), BIGINT/INT
     // columns floor to a multiple of n — and an INTEGRAL segment
@@ -2613,91 +2466,86 @@ object TableQueries extends QueryModule {
     // (zero-Exchange co-located join via the V2 `truncate` function)
     // is witnessed in GraftTableSpec. Oracle replays the range slice.
     "pipe_partition_truncate" -> ((s, dir) => {
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vtrunc_")
-      try {
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vtrunc_") { (tmp, s2) =>
         val table = tmp.resolve("docs")
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          s2.sql("""CREATE TABLE graftcat.docs
+        s2.sql("""CREATE TABLE graftcat.docs
                     (doc_id BIGINT, lang STRING, n_chars BIGINT)
                     PARTITIONED BY (truncate(100, doc_id))""")
-          s2.sql(s"""INSERT INTO graftcat.docs
+        s2.sql(s"""INSERT INTO graftcat.docs
                      SELECT doc_id, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 2 = 0""")
-          // The DDL bootstrap's zero-row file carries no segment and is
-          // admitted conservatively by every probe — count it.
-          val boot = VersionedTable.statsManifest(table, 0L).size
-          val gen1 = VersionedTable.addedFiles(table, 1L)
-          require(gen1.nonEmpty && gen1.forall(_.contains("doc_id_trunc=")),
-            s"pipe_partition_truncate: batch 1 must land hidden width " +
-              s"segments, got $gen1")
-          // HIDDEN: the derived segment is never a schema column.
-          val cols = s2.table("graftcat.docs").columns.toSeq
-          require(cols.sorted == Seq("doc_id", "lang", "n_chars"),
-            s"pipe_partition_truncate: doc_id_trunc leaked: $cols")
-          // An integral segment IS a zonemap: the raw BETWEEN probe
-          // plans exactly the matching segment's files.
-          val matching1 = gen1.count(_.contains("doc_id_trunc=100/"))
-          def slice = s2.sql("SELECT doc_id, lang, n_chars " +
-            "FROM graftcat.docs WHERE doc_id BETWEEN 100 AND 199")
-          require(matching1 > 0 &&
-              slice.rdd.getNumPartitions == matching1 + boot &&
-              matching1 < gen1.size,
-            s"pipe_partition_truncate: range probe planned " +
-              s"${slice.rdd.getNumPartitions} files, expected $matching1 " +
-              s"of ${gen1.size}")
-          // …and an equality probe pins one segment the same way.
-          require(s2.sql("SELECT * FROM graftcat.docs WHERE doc_id = 250")
-              .rdd.getNumPartitions ==
-            gen1.count(_.contains("doc_id_trunc=200/")) + boot,
-            "pipe_partition_truncate: equality probe must pin the one " +
-              "covering segment")
-          // EVOLVE to the string-prefix layout: one metadata commit.
-          s2.sql("CALL graftcat.evolve_layout('docs', 'truncate(1,lang)')")
-          val evolveAdds = VersionedTable.addedLines(table, 2L)
-            .map(VersionedTable.parse)
-          require(evolveAdds.size == 1 && (evolveAdds.head match {
-              case VersionedTable.PartSpec(_, specs) =>
-                specs.lastOption.contains("truncate(1,lang)")
-              case _ => false
-            }),
-            s"pipe_partition_truncate: expected one PARTSPEC line, got " +
-              s"$evolveAdds")
-          s2.sql(s"""INSERT INTO graftcat.docs
+        // The DDL bootstrap's zero-row file carries no segment and is
+        // admitted conservatively by every probe — count it.
+        val boot = VersionedTable.statsManifest(table, 0L).size
+        val gen1 = VersionedTable.addedFiles(table, 1L)
+        require(gen1.nonEmpty && gen1.forall(_.contains("doc_id_trunc=")),
+          s"pipe_partition_truncate: batch 1 must land hidden width " +
+            s"segments, got $gen1")
+        // HIDDEN: the derived segment is never a schema column.
+        val cols = s2.table("graftcat.docs").columns.toSeq
+        require(cols.sorted == Seq("doc_id", "lang", "n_chars"),
+          s"pipe_partition_truncate: doc_id_trunc leaked: $cols")
+        // An integral segment IS a zonemap: the raw BETWEEN probe
+        // plans exactly the matching segment's files.
+        val matching1 = gen1.count(_.contains("doc_id_trunc=100/"))
+        def slice = s2.sql("SELECT doc_id, lang, n_chars " +
+          "FROM graftcat.docs WHERE doc_id BETWEEN 100 AND 199")
+        require(matching1 > 0 &&
+            slice.rdd.getNumPartitions == matching1 + boot &&
+            matching1 < gen1.size,
+          s"pipe_partition_truncate: range probe planned " +
+            s"${slice.rdd.getNumPartitions} files, expected $matching1 " +
+            s"of ${gen1.size}")
+        // …and an equality probe pins one segment the same way.
+        require(s2.sql("SELECT * FROM graftcat.docs WHERE doc_id = 250")
+            .rdd.getNumPartitions ==
+          gen1.count(_.contains("doc_id_trunc=200/")) + boot,
+          "pipe_partition_truncate: equality probe must pin the one " +
+            "covering segment")
+        // EVOLVE to the string-prefix layout: one metadata commit.
+        s2.sql("CALL graftcat.evolve_layout('docs', 'truncate(1,lang)')")
+        val evolveAdds = VersionedTable.addedLines(table, 2L)
+          .map(VersionedTable.parse)
+        require(evolveAdds.size == 1 && (evolveAdds.head match {
+            case VersionedTable.PartSpec(_, specs) =>
+              specs.lastOption.contains("truncate(1,lang)")
+            case _ => false
+          }),
+          s"pipe_partition_truncate: expected one PARTSPEC line, got " +
+            s"$evolveAdds")
+        s2.sql(s"""INSERT INTO graftcat.docs
                      SELECT doc_id, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 2 = 1""")
-          val gen2 = VersionedTable.addedFiles(table, 3L)
-          require(gen2.nonEmpty && gen2.forall(f =>
-              f.contains("lang_trunc=") && !f.contains("doc_id_trunc=")),
-            s"pipe_partition_truncate: batch 2 must land letter " +
-              s"segments, got $gen2")
-          // Equality and LIKE-prefix probes prune the NEW generation;
-          // old-generation files admit conservatively (no lang segment).
-          val oneLang = s2.sql(
-            "SELECT lang FROM graftcat.docs ORDER BY lang").head().getString(0)
-          val letter = oneLang.substring(0, 1)
-          val matching2 = gen2.count(_.contains(s"lang_trunc=$letter/"))
-          val eqScan = s2.sql("SELECT * FROM graftcat.docs " +
-            s"WHERE lang = '$oneLang'").rdd.getNumPartitions
-          require(matching2 > 0 && matching2 < gen2.size &&
-              eqScan == matching2 + gen1.size + boot,
-            s"pipe_partition_truncate: lang probe scanned $eqScan, " +
-              s"expected $matching2 new + ${gen1.size}+$boot admits")
-          val likeScan = s2.sql("SELECT * FROM graftcat.docs " +
-            s"WHERE lang LIKE '$letter%'").rdd.getNumPartitions
-          require(likeScan == matching2 + gen1.size + boot,
-            s"pipe_partition_truncate: prefix probe scanned $likeScan, " +
-              s"expected $matching2 new + ${gen1.size} old-spec admits")
-          val out = slice.orderBy("doc_id")
-          val rows = out.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        val gen2 = VersionedTable.addedFiles(table, 3L)
+        require(gen2.nonEmpty && gen2.forall(f =>
+            f.contains("lang_trunc=") && !f.contains("doc_id_trunc=")),
+          s"pipe_partition_truncate: batch 2 must land letter " +
+            s"segments, got $gen2")
+        // Equality and LIKE-prefix probes prune the NEW generation;
+        // old-generation files admit conservatively (no lang segment).
+        val oneLang = s2.sql(
+          "SELECT lang FROM graftcat.docs ORDER BY lang").head().getString(0)
+        val letter = oneLang.substring(0, 1)
+        val matching2 = gen2.count(_.contains(s"lang_trunc=$letter/"))
+        val eqScan = s2.sql("SELECT * FROM graftcat.docs " +
+          s"WHERE lang = '$oneLang'").rdd.getNumPartitions
+        require(matching2 > 0 && matching2 < gen2.size &&
+            eqScan == matching2 + gen1.size + boot,
+          s"pipe_partition_truncate: lang probe scanned $eqScan, " +
+            s"expected $matching2 new + ${gen1.size}+$boot admits")
+        val likeScan = s2.sql("SELECT * FROM graftcat.docs " +
+          s"WHERE lang LIKE '$letter%'").rdd.getNumPartitions
+        require(likeScan == matching2 + gen1.size + boot,
+          s"pipe_partition_truncate: prefix probe scanned $likeScan, " +
+            s"expected $matching2 new + ${gen1.size} old-spec admits")
+        val out = slice.orderBy("doc_id")
+        out
+      }
     }),
 
-    // ANALYZE → COLUMN STATISTICS (r17) — the CBO input sizeInBytes
+    // ANALYZE → COLUMN STATISTICS — the CBO input sizeInBytes
     // can't provide: CALL analyze(table, cols) runs ONE aggregate
     // pass (approx_count_distinct HLL + null count per column — the
     // only affordable distinct count at 100 TB) and publishes NDV
@@ -2710,58 +2558,53 @@ object TableQueries extends QueryModule {
     // exactly the analyzed columns. Oracle: the exact per-column
     // distinct/null profile the statistics approximate.
     "pipe_table_analyze" -> ((s, dir) => {
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vndv_")
-      try {
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          s2.sql(s"""CREATE TABLE graftcat.docs AS
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vndv_") { (tmp, s2) =>
+        s2.sql(s"""CREATE TABLE graftcat.docs AS
                      SELECT doc_id, lang, source, n_chars,
                        CASE WHEN doc_id % 7 = 0 THEN NULL
                             ELSE lang END AS maybe_lang
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-          val table = tmp.resolve("docs")
-          val before = VersionedTable.latestVersion(table).get
-          s2.sql("CALL graftcat.analyze('docs', " +
-            "'lang,source,doc_id,maybe_lang')")
-          val v = VersionedTable.latestVersion(table).get
-          require(v == before + 1 &&
-              VersionedTable.addedLines(table, v).map(VersionedTable.parse)
-                .forall(_.isInstanceOf[VersionedTable.Ndv]),
-            "pipe_table_analyze: ANALYZE must publish one pure-meta " +
-              "delta of NDV lines")
-          val ndv = VersionedTable.snapshot(table, v).ndvStats
-          // Exact truth for the envelope check and the oracle.
-          val exact = s2.sql("""SELECT count(DISTINCT lang) AS d_lang,
+        val table = tmp.resolve("docs")
+        val before = VersionedTable.latestVersion(table).get
+        s2.sql("CALL graftcat.analyze('docs', " +
+          "'lang,source,doc_id,maybe_lang')")
+        val v = VersionedTable.latestVersion(table).get
+        require(v == before + 1 &&
+            VersionedTable.addedLines(table, v).map(VersionedTable.parse)
+              .forall(_.isInstanceOf[VersionedTable.Ndv]),
+          "pipe_table_analyze: ANALYZE must publish one pure-meta " +
+            "delta of NDV lines")
+        val ndv = VersionedTable.snapshot(table, v).ndvStats
+        // Exact truth for the envelope check and the oracle.
+        val exact = s2.sql("""SELECT count(DISTINCT lang) AS d_lang,
                count(DISTINCT source) AS d_source,
                count(DISTINCT doc_id) AS d_doc,
                count(DISTINCT maybe_lang) AS d_maybe,
                count(CASE WHEN maybe_lang IS NULL THEN 1 END) AS z_maybe
                FROM graftcat.docs""").head()
-          def within(est: Long, ex: Long): Boolean =
-            math.abs(est - ex) <= math.max(1L, (ex * 0.10).toLong)
-          require(within(ndv("lang")._1, exact.getLong(0)) &&
-              within(ndv("source")._1, exact.getLong(1)) &&
-              within(ndv("doc_id")._1, exact.getLong(2)) &&
-              within(ndv("maybe_lang")._1, exact.getLong(3)) &&
-              ndv("maybe_lang")._2 == exact.getLong(4) &&
-              ndv("lang")._2 == 0L,
-            s"pipe_table_analyze: served stats $ndv outside the HLL " +
-              s"envelope of $exact")
-          val out = s2.sql(
-            """SELECT CAST(count(DISTINCT lang) AS BIGINT) AS d_lang,
-              |  CAST(count(DISTINCT source) AS BIGINT) AS d_source,
-              |  CAST(count(DISTINCT doc_id) AS BIGINT) AS d_doc,
-              |  CAST(count(DISTINCT maybe_lang) AS BIGINT) AS d_maybe,
-              |  CAST(count(CASE WHEN maybe_lang IS NULL THEN 1 END)
-              |    AS BIGINT) AS n_null
-              |FROM graftcat.docs""".stripMargin)
-          val rows = out.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        def within(est: Long, ex: Long): Boolean =
+          math.abs(est - ex) <= math.max(1L, (ex * 0.10).toLong)
+        require(within(ndv("lang")._1, exact.getLong(0)) &&
+            within(ndv("source")._1, exact.getLong(1)) &&
+            within(ndv("doc_id")._1, exact.getLong(2)) &&
+            within(ndv("maybe_lang")._1, exact.getLong(3)) &&
+            ndv("maybe_lang")._2 == exact.getLong(4) &&
+            ndv("lang")._2 == 0L,
+          s"pipe_table_analyze: served stats $ndv outside the HLL " +
+            s"envelope of $exact")
+        val out = s2.sql(
+          """SELECT CAST(count(DISTINCT lang) AS BIGINT) AS d_lang,
+            |  CAST(count(DISTINCT source) AS BIGINT) AS d_source,
+            |  CAST(count(DISTINCT doc_id) AS BIGINT) AS d_doc,
+            |  CAST(count(DISTINCT maybe_lang) AS BIGINT) AS d_maybe,
+            |  CAST(count(CASE WHEN maybe_lang IS NULL THEN 1 END)
+            |    AS BIGINT) AS n_null
+            |FROM graftcat.docs""".stripMargin)
+        out
+      }
     }),
 
-    // MATERIALIZED VIEWS FROM SQL (r17) — the full MV lifecycle with
+    // MATERIALIZED VIEWS FROM SQL — the full MV lifecycle with
     // zero library imports: CALL create_mv stores the aggregate
     // statement (base as __BASE__) and its group columns IN THE MV'S
     // MANIFEST (MVSQL line, carried like a CHECK) next to the MVOF
@@ -2774,57 +2617,52 @@ object TableQueries extends QueryModule {
     // reflects batch 1 alone). Oracle: the refreshed MV equals the
     // exact GROUP BY over everything the base ever ingested.
     "pipe_sql_mv" -> ((s, dir) => {
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vsqlmv_")
-      try {
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          s2.sql(s"""CREATE TABLE graftcat.docs AS
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vsqlmv_") { (tmp, s2) =>
+        s2.sql(s"""CREATE TABLE graftcat.docs AS
                      SELECT doc_id, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 3 = 0""")
-          val created = s2.sql("CALL graftcat.create_mv('docs_by_lang', " +
-            "'docs', 'lang', 'SELECT lang, count(*) AS n, " +
-            "sum(n_chars) AS chars FROM __BASE__ GROUP BY lang')")
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          require(created("cursor") == 1L,
-            s"pipe_sql_mv: CREATE must pin the cursor at the base head, " +
-              s"got $created")
-          s2.sql(s"""INSERT INTO graftcat.docs
+        val created = s2.sql("CALL graftcat.create_mv('docs_by_lang', " +
+          "'docs', 'lang', 'SELECT lang, count(*) AS n, " +
+          "sum(n_chars) AS chars FROM __BASE__ GROUP BY lang')")
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        require(created("cursor") == 1L,
+          s"pipe_sql_mv: CREATE must pin the cursor at the base head, " +
+            s"got $created")
+        s2.sql(s"""INSERT INTO graftcat.docs
                      SELECT doc_id, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 3 = 1""")
-          s2.sql(s"""INSERT INTO graftcat.docs
+        s2.sql(s"""INSERT INTO graftcat.docs
                      SELECT doc_id, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 3 = 2""")
-          val base = tmp.resolve("docs")
-          val appended = (2L to 3L).map(v =>
-            VersionedTable.addedFiles(base, v).size).sum
-          val res = s2.sql(
-            "CALL graftcat.refresh_mv('docs_by_lang', 'docs')")
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          require(res("delta_files_read") == appended &&
-              res("delta_files_read") < res("base_files_total"),
-            s"pipe_sql_mv: refresh witness $res, expected exactly the " +
-              s"$appended appended files")
-          // The MV is an ordinary catalog table: time travel below the
-          // refresh reflects batch 1 alone.
-          val v0n = s2.sql("SELECT sum(n) AS t FROM " +
-            "graftcat.docs_by_lang VERSION AS OF 0").head().getLong(0)
-          val batch1 = s2.sql(
-            "SELECT count(*) AS n FROM graftcat.docs VERSION AS OF 1")
-            .head().getLong(0)
-          require(v0n == batch1,
-            s"pipe_sql_mv: MV v0 must reflect batch 1 ($batch1), got $v0n")
-          val out = s2.sql("SELECT lang, n, chars " +
-            "FROM graftcat.docs_by_lang ORDER BY lang")
-          val rows = out.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        val base = tmp.resolve("docs")
+        val appended = (2L to 3L).map(v =>
+          VersionedTable.addedFiles(base, v).size).sum
+        val res = s2.sql(
+          "CALL graftcat.refresh_mv('docs_by_lang', 'docs')")
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        require(res("delta_files_read") == appended &&
+            res("delta_files_read") < res("base_files_total"),
+          s"pipe_sql_mv: refresh witness $res, expected exactly the " +
+            s"$appended appended files")
+        // The MV is an ordinary catalog table: time travel below the
+        // refresh reflects batch 1 alone.
+        val v0n = s2.sql("SELECT sum(n) AS t FROM " +
+          "graftcat.docs_by_lang VERSION AS OF 0").head().getLong(0)
+        val batch1 = s2.sql(
+          "SELECT count(*) AS n FROM graftcat.docs VERSION AS OF 1")
+          .head().getLong(0)
+        require(v0n == batch1,
+          s"pipe_sql_mv: MV v0 must reflect batch 1 ($batch1), got $v0n")
+        val out = s2.sql("SELECT lang, n, chars " +
+          "FROM graftcat.docs_by_lang ORDER BY lang")
+        out
+      }
     }),
 
-    // INCREMENTAL MATERIALIZED-VIEW REFRESH (r17) — the maintenance
+    // INCREMENTAL MATERIALIZED-VIEW REFRESH — the maintenance
     // loop that makes a 100-TB dashboard aggregate affordable: the MV
     // is an ordinary graft table carrying an MVOF cursor (the base
     // version its rows reflect); a refresh reads ONLY the files the
@@ -2839,9 +2677,7 @@ object TableQueries extends QueryModule {
     // appended — the incremental path must be indistinguishable from
     // the full recompute.
     "pipe_mv_refresh" -> ((s, dir) => {
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vmv_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vmv_") { tmp =>
         val base = tmp.resolve("docs")
         val mv = tmp.resolve("docs_by_lang")
         val docs = Tables.documents(s, dir)
@@ -2892,12 +2728,11 @@ object TableQueries extends QueryModule {
         require(incr == full,
           "pipe_mv_refresh: incremental MV diverges from recompute")
         val out = VersionedTable.read(s, mv).orderBy("lang")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     }),
 
-    // MV REFRESH OVER DV DELETES (r18) — the r17 refusal closed for
+    // MV REFRESH OVER DV DELETES — no refusal for
     // the common production case: a dashboard MV over a fact table
     // with GDPR deletes. For the sum-mergeable surface create_mv
     // enforces, a deletion is SUBTRACTABLE: the refresh reads the
@@ -2912,64 +2747,61 @@ object TableQueries extends QueryModule {
     // exact GROUP BY over (everything ingested) minus (everything
     // deleted), replayed relationally.
     "pipe_mv_delete" -> ((s, dir) => {
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vmvdel_")
-      try {
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          s2.sql(s"""CREATE TABLE graftcat.docs AS
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vmvdel_") { (tmp, s2) =>
+        s2.sql(s"""CREATE TABLE graftcat.docs AS
                      SELECT doc_id, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-          s2.sql("CALL graftcat.create_mv('mv_del', 'docs', 'lang', " +
-            "'SELECT lang, count(*) AS n_docs, sum(n_chars) AS chars " +
-            "FROM __BASE__ GROUP BY lang')").collect()
-          // Appends and deletes INTERLEAVE below the cursor walk: clones
-          // append, then a partial delete, then one lang dies entirely.
-          s2.sql(s"""INSERT INTO graftcat.docs
+        s2.sql("CALL graftcat.create_mv('mv_del', 'docs', 'lang', " +
+          "'SELECT lang, count(*) AS n_docs, sum(n_chars) AS chars " +
+          "FROM __BASE__ GROUP BY lang')").collect()
+        // Appends and deletes INTERLEAVE below the cursor walk: clones
+        // append, then a partial delete, then one lang dies entirely.
+        s2.sql(s"""INSERT INTO graftcat.docs
                      SELECT doc_id + 1000000, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 10 = 0""")
-          // Distributed-key DV deletes: zero data-sized driver
-          // round-trips — the key frames stay distributed end to end
-          // (collecting them puts ~700 ids into a SQL IN-list, a
-          // parse bomb at 100×). The library face is the route because
-          // a DV delete is what an MV can refresh over: a SQL predicate
-          // DELETE (`WHERE doc_id % 7 = 3`) plans as a copy-on-write
-          // REWRITE, which the refresh rightly refuses toward re-create.
-          import graft.operators.{VersionedTable => VT}
-          val docsT = tmp.resolve("docs")
-          require(s2.sql("SELECT count(*) AS n FROM graftcat.docs " +
-              "WHERE doc_id % 7 = 3").head().getLong(0) > 0,
-            "pipe_mv_delete: empty partial set")
-          VT.deleteCommit(s2, docsT, VT.latestVersion(docsT).get + 1,
-            s2.sql("SELECT doc_id FROM graftcat.docs WHERE doc_id % 7 = 3"),
-            "doc_id")
-          val deadLang = s2.sql("SELECT min(lang) FROM graftcat.docs")
-            .head().getString(0)
-          VT.deleteCommit(s2, docsT, VT.latestVersion(docsT).get + 1,
-            s2.sql("SELECT doc_id FROM graftcat.docs " +
-              s"WHERE lang = '$deadLang'"), "doc_id")
-          // The refresh must SUCCEED, not refuse, with the
-          // positive delta still O(appended files).
-          val res = s2.sql("CALL graftcat.refresh_mv('mv_del', 'docs')")
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          require(res("delta_files_read") < res("base_files_total"),
-            s"pipe_mv_delete: refresh was not incremental: $res")
-          // The dead lang's group must VANISH rather than linger at 0
-          // (refresh ≡ recompute is the ORACLE's job — the relational
-          // replay over ingested-minus-deleted IS the recompute, so an
-          // in-path recompute here would just pay the aggregation twice).
-          val out = s2.sql(
-            "SELECT lang, n_docs, chars FROM graftcat.mv_del")
-            .orderBy("lang")
-          val rows = out.collect()
-          require(!rows.exists(_.getString(0) == deadLang),
-            s"pipe_mv_delete: emptied group '$deadLang' must vanish")
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        // Distributed-key DV deletes: zero data-sized driver
+        // round-trips — the key frames stay distributed end to end
+        // (collecting them puts ~700 ids into a SQL IN-list, a
+        // parse bomb at 100×). The library face is the route because
+        // a DV delete is what an MV can refresh over: a SQL predicate
+        // DELETE (`WHERE doc_id % 7 = 3`) plans as a copy-on-write
+        // REWRITE, which the refresh rightly refuses toward re-create.
+        import graft.operators.{VersionedTable => VT}
+        val docsT = tmp.resolve("docs")
+        require(s2.sql("SELECT count(*) AS n FROM graftcat.docs " +
+            "WHERE doc_id % 7 = 3").head().getLong(0) > 0,
+          "pipe_mv_delete: empty partial set")
+        VT.deleteCommit(s2, docsT, VT.latestVersion(docsT).get + 1,
+          s2.sql("SELECT doc_id FROM graftcat.docs WHERE doc_id % 7 = 3"),
+          "doc_id")
+        val deadLang = s2.sql("SELECT min(lang) FROM graftcat.docs")
+          .head().getString(0)
+        VT.deleteCommit(s2, docsT, VT.latestVersion(docsT).get + 1,
+          s2.sql("SELECT doc_id FROM graftcat.docs " +
+            s"WHERE lang = '$deadLang'"), "doc_id")
+        // The refresh must SUCCEED, not refuse, with the
+        // positive delta still O(appended files).
+        val res = s2.sql("CALL graftcat.refresh_mv('mv_del', 'docs')")
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        require(res("delta_files_read") < res("base_files_total"),
+          s"pipe_mv_delete: refresh was not incremental: $res")
+        // The dead lang's group must VANISH rather than linger at 0
+        // (refresh ≡ recompute is the ORACLE's job — the relational
+        // replay over ingested-minus-deleted IS the recompute, so an
+        // in-path recompute here would just pay the aggregation twice).
+        val out = s2.sql(
+          "SELECT lang, n_docs, chars FROM graftcat.mv_del")
+          .orderBy("lang")
+        val local = graft.sources.GraftSession.materialize(s, out)
+        val rows = local.collect()
+        require(!rows.exists(_.getString(0) == deadLang),
+          s"pipe_mv_delete: emptied group '$deadLang' must vanish")
+        local
+      }
     }),
 
-    // MV WITH AVG (r19, served shape r20) — a production dashboard's
+    // MV WITH AVG (served shape) — a production dashboard's
     // first MV has an avg in it, and avg does NOT fold across deltas
     // (old_avg + delta_avg is not the ratio). The DECLARATION rewrites
     // each bare `avg(expr) AS name` into maintained sum+count PARTIAL
@@ -2979,7 +2811,7 @@ object TableQueries extends QueryModule {
     // records the fold as an MVAVG manifest line, and the connector
     // HIDES the partials — so `SELECT * FROM cat.mv`, the very surface
     // CALL create_mv declared the MV on, serves exactly the declared
-    // shape (ADVICE r19: the declared and served schemas must never
+    // shape (the declared and served schemas must never
     // disagree). Witnessed in-path: the physical schema holds ratio +
     // partials, the catalog SQL read serves the declared three-column
     // shape with the correct post-refresh avg, the refresh stays
@@ -2987,64 +2819,61 @@ object TableQueries extends QueryModule {
     // minus-deleted with the SAME sum/count formula on both sides so
     // the comparison is bit-exact.
     "pipe_mv_avg" -> ((s, dir) => {
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vmvavg_")
-      try {
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          s2.sql(s"""CREATE TABLE graftcat.docs AS
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vmvavg_") { (tmp, s2) =>
+        s2.sql(s"""CREATE TABLE graftcat.docs AS
                      SELECT doc_id, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-          s2.sql("CALL graftcat.create_mv('mv_avg', 'docs', 'lang', " +
-            "'SELECT lang, count(*) AS n_docs, avg(n_chars) AS avg_chars " +
-            "FROM __BASE__ GROUP BY lang')").collect()
-          val mvT = tmp.resolve("mv_avg")
-          // The rewrite witness: stored ratio + maintained partials.
-          val phys = VersionedTable.read(s2, mvT).columns.toSeq
-          require(phys == Seq("lang", "n_docs", "avg_chars",
-              "avg_chars__asum", "avg_chars__acnt"),
-            s"pipe_mv_avg: expected ratio + partial columns, got $phys")
-          // Appends and a distributed-key DV delete interleave below the
-          // refresh (the key frame never touches the driver — see
-          // pipe_mv_delete for why the DV route, not a predicate
-          // rewrite, is what an MV refreshes over).
-          s2.sql(s"""INSERT INTO graftcat.docs
+        s2.sql("CALL graftcat.create_mv('mv_avg', 'docs', 'lang', " +
+          "'SELECT lang, count(*) AS n_docs, avg(n_chars) AS avg_chars " +
+          "FROM __BASE__ GROUP BY lang')").collect()
+        val mvT = tmp.resolve("mv_avg")
+        // The rewrite witness: stored ratio + maintained partials.
+        val phys = VersionedTable.read(s2, mvT).columns.toSeq
+        require(phys == Seq("lang", "n_docs", "avg_chars",
+            "avg_chars__asum", "avg_chars__acnt"),
+          s"pipe_mv_avg: expected ratio + partial columns, got $phys")
+        // Appends and a distributed-key DV delete interleave below the
+        // refresh (the key frame never touches the driver — see
+        // pipe_mv_delete for why the DV route, not a predicate
+        // rewrite, is what an MV refreshes over).
+        s2.sql(s"""INSERT INTO graftcat.docs
                      SELECT doc_id + 1000000, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 10 = 0""")
-          val docsT = tmp.resolve("docs")
-          graft.operators.VersionedTable.deleteCommit(s2, docsT,
-            graft.operators.VersionedTable.latestVersion(docsT).get + 1,
-            s2.sql("SELECT doc_id FROM graftcat.docs WHERE doc_id % 7 = 3"),
-            "doc_id")
-          val res = s2.sql("CALL graftcat.refresh_mv('mv_avg', 'docs')")
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          require(res("delta_files_read") < res("base_files_total"),
-            s"pipe_mv_avg: refresh was not incremental: $res")
-          // THE SQL SURFACE WITNESS: the same catalog
-          // identifier create_mv declared the MV on serves the DECLARED
-          // schema — partials hidden, ratio present and post-refresh.
-          val sqlFace = s2.sql("SELECT * FROM graftcat.mv_avg")
-          require(sqlFace.columns.toSeq ==
-              Seq("lang", "n_docs", "avg_chars"),
-            "pipe_mv_avg: SELECT * through the catalog must serve the " +
-              s"declared shape, got ${sqlFace.columns.toSeq}")
-          val out = VersionedTable.readMaterializedSql(s2, mvT)
-            .orderBy("lang")
-          require(out.columns.toSeq == Seq("lang", "n_docs", "avg_chars"),
-            s"pipe_mv_avg: the serve face must fold partials back into " +
-              s"the declared shape, got ${out.columns.toSeq}")
-          val rows = out.collect()
-          // Library face and SQL face agree row-for-row.
-          val sqlRows = sqlFace.orderBy("lang").collect()
-          require(sqlRows.sameElements(rows),
-            "pipe_mv_avg: catalog SQL rows disagree with the library " +
-              "serve face")
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        val docsT = tmp.resolve("docs")
+        graft.operators.VersionedTable.deleteCommit(s2, docsT,
+          graft.operators.VersionedTable.latestVersion(docsT).get + 1,
+          s2.sql("SELECT doc_id FROM graftcat.docs WHERE doc_id % 7 = 3"),
+          "doc_id")
+        val res = s2.sql("CALL graftcat.refresh_mv('mv_avg', 'docs')")
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        require(res("delta_files_read") < res("base_files_total"),
+          s"pipe_mv_avg: refresh was not incremental: $res")
+        // THE SQL SURFACE WITNESS: the same catalog
+        // identifier create_mv declared the MV on serves the DECLARED
+        // schema — partials hidden, ratio present and post-refresh.
+        val sqlFace = s2.sql("SELECT * FROM graftcat.mv_avg")
+        require(sqlFace.columns.toSeq ==
+            Seq("lang", "n_docs", "avg_chars"),
+          "pipe_mv_avg: SELECT * through the catalog must serve the " +
+            s"declared shape, got ${sqlFace.columns.toSeq}")
+        val out = VersionedTable.readMaterializedSql(s2, mvT)
+          .orderBy("lang")
+        require(out.columns.toSeq == Seq("lang", "n_docs", "avg_chars"),
+          s"pipe_mv_avg: the serve face must fold partials back into " +
+            s"the declared shape, got ${out.columns.toSeq}")
+        val local = graft.sources.GraftSession.materialize(s, out)
+        val rows = local.collect()
+        // Library face and SQL face agree row-for-row.
+        val sqlRows = sqlFace.orderBy("lang").collect()
+        require(sqlRows.sameElements(rows),
+          "pipe_mv_avg: catalog SQL rows disagree with the library " +
+            "serve face")
+        local
+      }
     }),
 
-    // MV WITH MIN/MAX (r19) — the extremum dashboard columns: bare
+    // MV WITH MIN/MAX — the extremum dashboard columns: bare
     // min/max fold for APPEND-ONLY deltas (new_min = min(old_min,
     // delta_min) — the declaration records an MVFOLD merge operator
     // per column, the refresh merge applies it instead of SUM), and a
@@ -3052,61 +2881,56 @@ object TableQueries extends QueryModule {
     // the extremum; min is not subtractable) — refusal witnessed
     // in-path. Oracle replays the post-append extrema exactly.
     "pipe_mv_minmax" -> ((s, dir) => {
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vmvmm_")
-      try {
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          s2.sql(s"""CREATE TABLE graftcat.docs AS
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vmvmm_") { (tmp, s2) =>
+        s2.sql(s"""CREATE TABLE graftcat.docs AS
                      SELECT doc_id, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-          s2.sql("CALL graftcat.create_mv('mv_mm', 'docs', 'lang', " +
-            "'SELECT lang, count(*) AS n_docs, min(n_chars) AS min_chars, " +
-            "max(n_chars) AS max_chars FROM __BASE__ GROUP BY lang')")
-            .collect()
-          val mvT = tmp.resolve("mv_mm")
-          require(VersionedTable.snapshot(mvT, 0L).mvFoldOps ==
-              Map("min_chars" -> "min", "max_chars" -> "max"),
-            "pipe_mv_minmax: the declaration must record the MVFOLD " +
-              "merge operators")
-          // The append DOUBLES one clone's n_chars (moves maxima) and
-          // floors another at 1 (moves minima) — the fold must track
-          // real extremum movement, not ride unchanged groups.
-          s2.sql(s"""INSERT INTO graftcat.docs
+        s2.sql("CALL graftcat.create_mv('mv_mm', 'docs', 'lang', " +
+          "'SELECT lang, count(*) AS n_docs, min(n_chars) AS min_chars, " +
+          "max(n_chars) AS max_chars FROM __BASE__ GROUP BY lang')")
+          .collect()
+        val mvT = tmp.resolve("mv_mm")
+        require(VersionedTable.snapshot(mvT, 0L).mvFoldOps ==
+            Map("min_chars" -> "min", "max_chars" -> "max"),
+          "pipe_mv_minmax: the declaration must record the MVFOLD " +
+            "merge operators")
+        // The append DOUBLES one clone's n_chars (moves maxima) and
+        // floors another at 1 (moves minima) — the fold must track
+        // real extremum movement, not ride unchanged groups.
+        s2.sql(s"""INSERT INTO graftcat.docs
                      SELECT doc_id + 1000000, lang,
                        CASE WHEN doc_id % 20 = 0 THEN n_chars * 2
                             ELSE 1 END AS n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 10 = 0""")
-          val res = s2.sql("CALL graftcat.refresh_mv('mv_mm', 'docs')")
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          require(res("delta_files_read") < res("base_files_total"),
-            s"pipe_mv_minmax: refresh was not incremental: $res")
-          // DV DELETES: min/max are not
-          // subtractable, but whether a deletion REMOVED an extremum is
-          // decidable per group — the refresh folds sum columns by
-          // negation, and recomputes ONLY groups whose killed extremum
-          // TIED the standing one (VersionedTableSpec witnesses the
-          // incremental/repair split deterministically). The deleted
-          // set below includes the doubled clones (every lang's standing
-          // max where present) AND plain interior rows, so both paths
-          // run; the oracle replays min/max over ingested-minus-deleted.
-          val docsT = tmp.resolve("docs")
-          VersionedTable.deleteCommit(s2, docsT,
-            VersionedTable.latestVersion(docsT).get + 1,
-            s2.sql("SELECT doc_id FROM graftcat.docs " +
-              "WHERE doc_id % 20 = 0 OR doc_id % 13 = 4"),
-            "doc_id")
-          s2.sql("CALL graftcat.refresh_mv('mv_mm', 'docs')").collect()
-          val out = s2.sql(
-            "SELECT lang, n_docs, min_chars, max_chars FROM graftcat.mv_mm")
-            .orderBy("lang")
-          val rows = out.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        val res = s2.sql("CALL graftcat.refresh_mv('mv_mm', 'docs')")
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        require(res("delta_files_read") < res("base_files_total"),
+          s"pipe_mv_minmax: refresh was not incremental: $res")
+        // DV DELETES: min/max are not
+        // subtractable, but whether a deletion REMOVED an extremum is
+        // decidable per group — the refresh folds sum columns by
+        // negation, and recomputes ONLY groups whose killed extremum
+        // TIED the standing one (VersionedTableSpec witnesses the
+        // incremental/repair split deterministically). The deleted
+        // set below includes the doubled clones (every lang's standing
+        // max where present) AND plain interior rows, so both paths
+        // run; the oracle replays min/max over ingested-minus-deleted.
+        val docsT = tmp.resolve("docs")
+        VersionedTable.deleteCommit(s2, docsT,
+          VersionedTable.latestVersion(docsT).get + 1,
+          s2.sql("SELECT doc_id FROM graftcat.docs " +
+            "WHERE doc_id % 20 = 0 OR doc_id % 13 = 4"),
+          "doc_id")
+        s2.sql("CALL graftcat.refresh_mv('mv_mm', 'docs')").collect()
+        val out = s2.sql(
+          "SELECT lang, n_docs, min_chars, max_chars FROM graftcat.mv_mm")
+          .orderBy("lang")
+        out
+      }
     }),
 
-    // PARTITION-SCOPED COMPACTION (r17) — the maintenance shape a
+    // PARTITION-SCOPED COMPACTION — the maintenance shape a
     // 100-TB table actually runs: an hourly stream fragments TODAY's
     // partition; nobody rewrites three years of history to fix it.
     // CALL compact_partitions(table, col, vals) rewrites ONLY the
@@ -3117,9 +2941,7 @@ object TableQueries extends QueryModule {
     // content identical (the oracle proves it: the post-maintenance
     // per-lang rollup equals the exact GROUP BY over the fixture).
     "pipe_partition_compact" -> ((s, dir) => {
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vpcomp_")
-      try {
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vpcomp_") { (tmp, s2) =>
         val table = tmp.resolve("docs")
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -3137,47 +2959,44 @@ object TableQueries extends QueryModule {
           s"pipe_partition_compact: need a fragmented scope, " +
             s"got $enBefore lang=en files")
         val chainBefore = VersionedTable.chainLength(table, 1L)
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          val res = s2.sql("CALL graftcat.compact_partitions(" +
-            "'docs', 'lang', 'en', files => 2)").collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
-          require(res("files_rewritten") == enBefore &&
-              res("version") == 2L,
-            s"pipe_partition_compact: CALL witness $res, expected " +
-              s"$enBefore files rewritten at version 2")
-          val after = VersionedTable.statsManifest(table, 2L).map(_._1)
-          val enAfter = after.count(_.contains("lang=en"))
-          require(enAfter <= 2 && enAfter < enBefore,
-            s"pipe_partition_compact: scope still holds $enAfter files")
-          // Untouched partitions carry byte-verbatim; the commit is an
-          // RM delta (chain +1), KIND=compact.
-          val beforeLines = VersionedTable.manifest(table, 1L).toSet
-          val carried = VersionedTable.manifest(table, 2L)
-            .filterNot(l => l.contains("lang=en") ||
-              (VersionedTable.parse(l) match {
-                case _: VersionedTable.PartCol | _: VersionedTable.PartSpec =>
-                  true
-                case _ => false
-              }))
-          require(carried.nonEmpty && carried.forall(beforeLines),
-            "pipe_partition_compact: untouched partitions' lines must " +
-              "carry byte-verbatim")
-          require(VersionedTable.chainLength(table, 2L) == chainBefore + 1,
-            "pipe_partition_compact: the scoped rewrite must publish an " +
-              "RM delta, not a full manifest")
-          require(VersionedTable.commitKind(table, 2L).contains("compact"),
-            "pipe_partition_compact: the commit must stamp KIND=compact")
-          val out = s2.sql("""SELECT lang, count(*) AS n,
-                             |  sum(n_chars) AS chars
-                             |FROM graftcat.docs
-                             |GROUP BY lang ORDER BY lang""".stripMargin)
-          val rows = out.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        val res = s2.sql("CALL graftcat.compact_partitions(" +
+          "'docs', 'lang', 'en', files => 2)").collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        require(res("files_rewritten") == enBefore &&
+            res("version") == 2L,
+          s"pipe_partition_compact: CALL witness $res, expected " +
+            s"$enBefore files rewritten at version 2")
+        val after = VersionedTable.statsManifest(table, 2L).map(_._1)
+        val enAfter = after.count(_.contains("lang=en"))
+        require(enAfter <= 2 && enAfter < enBefore,
+          s"pipe_partition_compact: scope still holds $enAfter files")
+        // Untouched partitions carry byte-verbatim; the commit is an
+        // RM delta (chain +1), KIND=compact.
+        val beforeLines = VersionedTable.manifest(table, 1L).toSet
+        val carried = VersionedTable.manifest(table, 2L)
+          .filterNot(l => l.contains("lang=en") ||
+            (VersionedTable.parse(l) match {
+              case _: VersionedTable.PartCol | _: VersionedTable.PartSpec =>
+                true
+              case _ => false
+            }))
+        require(carried.nonEmpty && carried.forall(beforeLines),
+          "pipe_partition_compact: untouched partitions' lines must " +
+            "carry byte-verbatim")
+        require(VersionedTable.chainLength(table, 2L) == chainBefore + 1,
+          "pipe_partition_compact: the scoped rewrite must publish an " +
+            "RM delta, not a full manifest")
+        require(VersionedTable.commitKind(table, 2L).contains("compact"),
+          "pipe_partition_compact: the commit must stamp KIND=compact")
+        val out = s2.sql("""SELECT lang, count(*) AS n,
+                           |  sum(n_chars) AS chars
+                           |FROM graftcat.docs
+                           |GROUP BY lang ORDER BY lang""".stripMargin)
+        out
+      }
     }),
 
-    // SQL ALTER TABLE ADD COLUMN (r16) — the most common schema
+    // SQL ALTER TABLE ADD COLUMN — the most common schema
     // evolution, end-to-end in plain SQL: the ALTER publishes a
     // metadata-only ADDCOL commit (O(1) at any table size — no file is
     // rewritten), the very next SELECT serves legacy rows with typed
@@ -3190,58 +3009,55 @@ object TableQueries extends QueryModule {
     // relationally: the base projection with a NULL quality column
     // plus the inserted rows with theirs.
     "pipe_sql_add_column" -> ((s, dir) => {
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vaddc_")
-      try {
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          s2.sql(s"""CREATE TABLE graftcat.docs AS
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vaddc_") { (tmp, s2) =>
+        s2.sql(s"""CREATE TABLE graftcat.docs AS
                      SELECT doc_id, lang, n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-          val table = tmp.resolve("docs")
-          s2.sql("ALTER TABLE graftcat.docs ADD COLUMN quality BIGINT")
-          require(VersionedTable.snapshot(table, 2L).columnMappings ==
-              Seq(("addcol", "quality", "bigint")),
-            "pipe_sql_add_column: the ALTER must land as one metadata-" +
-              "only ADDCOL commit")
-          // Visible to the very next statement: every legacy row serves
-          // a typed NULL, no compaction in between.
-          val n = s2.sql("SELECT count(*) AS n FROM graftcat.docs")
-            .head().getLong(0)
-          require(s2.sql("SELECT count(*) AS n FROM graftcat.docs " +
-              "WHERE quality IS NULL").head().getLong(0) == n && n > 0,
-            "pipe_sql_add_column: legacy rows must read as typed NULLs " +
-              "immediately after the ALTER")
-          // Time travel below the ALTER sees the old schema.
-          require(!s2.sql("SELECT * FROM graftcat.docs VERSION AS OF 1")
-              .schema.fieldNames.contains("quality"),
-            "pipe_sql_add_column: VERSION AS OF below the ALTER must " +
-              "not show the added column")
-          // New rows land real values next to the NULL-serving history.
-          s2.sql(s"""INSERT INTO graftcat.docs
+        val table = tmp.resolve("docs")
+        s2.sql("ALTER TABLE graftcat.docs ADD COLUMN quality BIGINT")
+        require(VersionedTable.snapshot(table, 2L).columnMappings ==
+            Seq(("addcol", "quality", "bigint")),
+          "pipe_sql_add_column: the ALTER must land as one metadata-" +
+            "only ADDCOL commit")
+        // Visible to the very next statement: every legacy row serves
+        // a typed NULL, no compaction in between.
+        val n = s2.sql("SELECT count(*) AS n FROM graftcat.docs")
+          .head().getLong(0)
+        require(s2.sql("SELECT count(*) AS n FROM graftcat.docs " +
+            "WHERE quality IS NULL").head().getLong(0) == n && n > 0,
+          "pipe_sql_add_column: legacy rows must read as typed NULLs " +
+            "immediately after the ALTER")
+        // Time travel below the ALTER sees the old schema.
+        require(!s2.sql("SELECT * FROM graftcat.docs VERSION AS OF 1")
+            .schema.fieldNames.contains("quality"),
+          "pipe_sql_add_column: VERSION AS OF below the ALTER must " +
+            "not show the added column")
+        // New rows land real values next to the NULL-serving history.
+        s2.sql(s"""INSERT INTO graftcat.docs
                      SELECT doc_id + 4398046511104L AS doc_id, lang,
                             n_chars, n_chars * 2L AS quality
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 9 = 4""")
-          val out = s2.sql("SELECT doc_id, lang, n_chars, quality " +
-            "FROM graftcat.docs ORDER BY doc_id")
-          val rows = out.collect()
-          // The compaction MATERIALIZES the union (mapping retired,
-          // content byte-identical) — the debt-repayment half.
-          s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
-          require(VersionedTable.snapshot(table,
-              VersionedTable.latestVersion(table).get).columnMappings.isEmpty,
-            "pipe_sql_add_column: compaction must retire the ADDCOL " +
-              "mapping")
-          val after = s2.sql("SELECT doc_id, lang, n_chars, quality " +
-            "FROM graftcat.docs ORDER BY doc_id").collect()
-          require(after.toSeq == rows.toSeq,
-            "pipe_sql_add_column: compaction changed the table contents")
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        val out = s2.sql("SELECT doc_id, lang, n_chars, quality " +
+          "FROM graftcat.docs ORDER BY doc_id")
+        val local = graft.sources.GraftSession.materialize(s, out)
+        val rows = local.collect()
+        // The compaction MATERIALIZES the union (mapping retired,
+        // content byte-identical) — the debt-repayment half.
+        s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
+        require(VersionedTable.snapshot(table,
+            VersionedTable.latestVersion(table).get).columnMappings.isEmpty,
+          "pipe_sql_add_column: compaction must retire the ADDCOL " +
+            "mapping")
+        val after = s2.sql("SELECT doc_id, lang, n_chars, quality " +
+          "FROM graftcat.docs ORDER BY doc_id").collect()
+        require(after.toSeq == rows.toSeq,
+          "pipe_sql_add_column: compaction changed the table contents")
+        local
+      }
     }),
 
-    // SQL ALTER TABLE DROP COLUMN (r16) — the inverse evolution, same
+    // SQL ALTER TABLE DROP COLUMN — the inverse evolution, same
     // O(1) metadata cost: the DROPCOL commit makes readers stop
     // serving the column immediately (bytes wait for the next
     // compaction), time travel below the ALTER still sees it, INSERTs
@@ -3252,57 +3068,54 @@ object TableQueries extends QueryModule {
     // projection without the dropped column plus the post-drop
     // inserts.
     "pipe_sql_drop_column" -> ((s, dir) => {
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vdropc_")
-      try {
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          s2.sql(s"""CREATE TABLE graftcat.docs AS
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vdropc_") { (tmp, s2) =>
+        s2.sql(s"""CREATE TABLE graftcat.docs AS
                      SELECT doc_id, lang, n_chars,
                             n_chars * 3L AS scratch
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}""")
-          val table = tmp.resolve("docs")
-          s2.sql("ALTER TABLE graftcat.docs DROP COLUMN scratch")
-          require(VersionedTable.snapshot(table, 2L).columnMappings ==
-              Seq(("dropcol", "scratch", "")),
-            "pipe_sql_drop_column: the ALTER must land as one metadata-" +
-              "only DROPCOL commit")
-          require(!s2.sql("SELECT * FROM graftcat.docs")
-              .schema.fieldNames.contains("scratch"),
-            "pipe_sql_drop_column: the column must vanish immediately")
-          require(s2.sql("SELECT * FROM graftcat.docs VERSION AS OF 1")
-              .schema.fieldNames.contains("scratch"),
-            "pipe_sql_drop_column: time travel below the ALTER must " +
-              "still see the column")
-          s2.sql(s"""INSERT INTO graftcat.docs
+        val table = tmp.resolve("docs")
+        s2.sql("ALTER TABLE graftcat.docs DROP COLUMN scratch")
+        require(VersionedTable.snapshot(table, 2L).columnMappings ==
+            Seq(("dropcol", "scratch", "")),
+          "pipe_sql_drop_column: the ALTER must land as one metadata-" +
+            "only DROPCOL commit")
+        require(!s2.sql("SELECT * FROM graftcat.docs")
+            .schema.fieldNames.contains("scratch"),
+          "pipe_sql_drop_column: the column must vanish immediately")
+        require(s2.sql("SELECT * FROM graftcat.docs VERSION AS OF 1")
+            .schema.fieldNames.contains("scratch"),
+          "pipe_sql_drop_column: time travel below the ALTER must " +
+            "still see the column")
+        s2.sql(s"""INSERT INTO graftcat.docs
                      SELECT doc_id + 8796093022208L AS doc_id, lang,
                             n_chars
                      FROM ${graft.queries.QueryModule.srcView(s2, dir, "documents")}
                      WHERE doc_id % 8 = 1""")
-          // Re-adding the dropped name refuses while old bytes live…
-          require(scala.util.Try(s2.sql(
-              "ALTER TABLE graftcat.docs ADD COLUMN scratch BIGINT"))
-              .isFailure,
-            "pipe_sql_drop_column: re-adding a dropped name must refuse " +
-              "before compaction (stale-byte resurrection)")
-          val out = s2.sql("SELECT doc_id, lang, n_chars " +
-            "FROM graftcat.docs ORDER BY doc_id")
-          val rows = out.collect()
-          // …and succeeds once compaction physically drops them.
-          s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
-          require(VersionedTable.snapshot(table,
-              VersionedTable.latestVersion(table).get).columnMappings.isEmpty,
-            "pipe_sql_drop_column: compaction must retire the mapping")
-          s2.sql("ALTER TABLE graftcat.docs ADD COLUMN scratch BIGINT")
-          require(s2.sql("SELECT count(*) AS n FROM graftcat.docs " +
-              "WHERE scratch IS NULL").head().getLong(0) == rows.length,
-            "pipe_sql_drop_column: the re-added column must be all-NULL " +
-              "(no stale bytes resurrected)")
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        // Re-adding the dropped name refuses while old bytes live…
+        require(scala.util.Try(s2.sql(
+            "ALTER TABLE graftcat.docs ADD COLUMN scratch BIGINT"))
+            .isFailure,
+          "pipe_sql_drop_column: re-adding a dropped name must refuse " +
+            "before compaction (stale-byte resurrection)")
+        val out = s2.sql("SELECT doc_id, lang, n_chars " +
+          "FROM graftcat.docs ORDER BY doc_id")
+        val local = graft.sources.GraftSession.materialize(s, out)
+        val rows = local.collect()
+        // …and succeeds once compaction physically drops them.
+        s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
+        require(VersionedTable.snapshot(table,
+            VersionedTable.latestVersion(table).get).columnMappings.isEmpty,
+          "pipe_sql_drop_column: compaction must retire the mapping")
+        s2.sql("ALTER TABLE graftcat.docs ADD COLUMN scratch BIGINT")
+        require(s2.sql("SELECT count(*) AS n FROM graftcat.docs " +
+            "WHERE scratch IS NULL").head().getLong(0) == rows.length,
+          "pipe_sql_drop_column: the re-added column must be all-NULL " +
+            "(no stale bytes resurrected)")
+        local
+      }
     }),
 
-    // SQL STORED PROCEDURES — table maintenance from CALL (r13) — the
+    // SQL STORED PROCEDURES — table maintenance from CALL — the
     // protocol's lifecycle verbs as plain SQL (Spark 4 ProcedureCatalog,
     // the Iceberg-procedures shape): stage a table carrying real debt
     // (a deletion vector from a SQL DELETE, a CHECK constraint, 32
@@ -3318,54 +3131,47 @@ object TableQueries extends QueryModule {
     // is exactly base minus the deleted keys.
     "pipe_sql_maintain" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vmaint_")
-      try {
+      graft.sources.GraftSession.stagedCatalog(s, "graft_vmaint_") { (tmp, s2) =>
         val table = tmp.resolve("docs")
         VersionedTable.commit(s, table, 0L,
           Tables.documents(s, dir).select($"doc_id", $"lang", $"n_chars")
             .repartition(32))
         VersionedTable.constraintCommit(s, table, 1L, "n_chars >= 0")
-        graft.sources.GraftSession.scoped(s, graftcat(tmp): _*) { s2 =>
-          s2.sql("DELETE FROM graftcat.docs WHERE doc_id IN (3, 17)")
-          val res = s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          require(res("version") == 3L && res("files") <= 4L,
-            s"pipe_sql_maintain: CALL compact must report v3 with <= 4 " +
-              s"files, got $res")
-          require(VersionedTable.deletionVectors(table, 3L).isEmpty &&
-              VersionedTable.checkConstraints(table, 3L)
-                == Seq("n_chars >= 0"),
-            "pipe_sql_maintain: compaction must fold the DV and carry " +
-              "the CHECK")
-          s2.sql("CALL graftcat.tag('docs', 'release', 3)")
-          val exp = s2.sql("CALL graftcat.expire('docs', 3)")
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          require(exp("files_deleted") > 0L && exp("versions_expired") >= 3L,
-            s"pipe_sql_maintain: the vacuum must reclaim the fragmented " +
-              s"pre-compaction files and manifests, got $exp")
-          val nDocs = Tables.documents(s, dir).count()
-          require(VersionedTable.readRef(s, table, "release").count()
-              == nDocs - 2L,
-            "pipe_sql_maintain: the release tag must read the compacted " +
-              s"snapshot ($nDocs - 2 deleted) after the vacuum")
-          require(scala.util.Try(
-              VersionedTable.read(s, table, Some(0L))).isFailure,
-            "pipe_sql_maintain: the expired fragmented version must be " +
-              "unreadable after the vacuum")
-          val out = s2.sql(
-            "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
-          val rows = out.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        }
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        s2.sql("DELETE FROM graftcat.docs WHERE doc_id IN (3, 17)")
+        val res = s2.sql("CALL graftcat.compact('docs', 'doc_id', 4)")
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        require(res("version") == 3L && res("files") <= 4L,
+          s"pipe_sql_maintain: CALL compact must report v3 with <= 4 " +
+            s"files, got $res")
+        require(VersionedTable.deletionVectors(table, 3L).isEmpty &&
+            VersionedTable.checkConstraints(table, 3L)
+              == Seq("n_chars >= 0"),
+          "pipe_sql_maintain: compaction must fold the DV and carry " +
+            "the CHECK")
+        s2.sql("CALL graftcat.tag('docs', 'release', 3)")
+        val exp = s2.sql("CALL graftcat.expire('docs', 3)")
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        require(exp("files_deleted") > 0L && exp("versions_expired") >= 3L,
+          s"pipe_sql_maintain: the vacuum must reclaim the fragmented " +
+            s"pre-compaction files and manifests, got $exp")
+        val nDocs = Tables.documents(s, dir).count()
+        require(VersionedTable.readRef(s, table, "release").count()
+            == nDocs - 2L,
+          "pipe_sql_maintain: the release tag must read the compacted " +
+            s"snapshot ($nDocs - 2 deleted) after the vacuum")
+        require(scala.util.Try(
+            VersionedTable.read(s, table, Some(0L))).isFailure,
+          "pipe_sql_maintain: the expired fragmented version must be " +
+            "unreadable after the vacuum")
+        val out = s2.sql(
+          "SELECT doc_id, lang, n_chars FROM graftcat.docs ORDER BY doc_id")
+        out
+      }
     }),
 
     "pipe_commit_conflict" -> ((s, dir) => {
       import s.implicits._
-      import graft.operators.VersionedTable
-      val tmp = graft.sources.GraftSession.stagingDir("graft_vocc_")
-      try {
+      graft.sources.GraftSession.staged(s, "graft_vocc_") { tmp =>
         val table = tmp.resolve("table")
         val docs = Tables.documents(s, dir)
           .select($"doc_id", $"lang", $"n_chars")
@@ -3429,9 +3235,8 @@ object TableQueries extends QueryModule {
             .select(lit(v).as("version"), $"n_rows", $"sum_chars",
               $"n_langs", $"content_sig")
         }.reduce(_ unionAll _).orderBy("version")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.EventStreams.deleteTree(tmp)
+        out
+      }
     })
   )
 
@@ -4089,7 +3894,7 @@ object TableQueries extends QueryModule {
         |GROUP BY lang ORDER BY lang""".stripMargin,
 
     // The min/max MV replayed relationally over base + clones.
-    // Ingested-minus-deleted (r20): the DV delete below the min/max MV
+    // Ingested-minus-deleted: the DV delete below the min/max MV
     // folds/repairs instead of refusing, so the oracle replays the
     // extrema over the surviving rows.
     "pipe_mv_minmax" ->

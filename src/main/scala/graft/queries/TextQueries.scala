@@ -118,7 +118,7 @@ object TextQueries extends QueryModule {
         .orderBy("doc_id")
     }),
 
-    // BPE VOCAB TRAINING (r11): the merge-induction loop behind every
+    // BPE VOCAB TRAINING: the merge-induction loop behind every
     // modern tokenizer (txt_bpe_tokens applies a regex stand-in; this
     // TRAINS the merges). The 100-TB shape real trainers use: ONE
     // corpus scan reduces to the distinct WORD-FREQUENCY table, and
@@ -186,7 +186,7 @@ object TextQueries extends QueryModule {
         .orderBy("merge_rank")
     }),
 
-    // BPE ENCODE (r11) — the other half of the tokenizer loop: apply
+    // BPE ENCODE — the other half of the tokenizer loop: apply
     // the 10 trained merges to the whole corpus and report per-doc
     // token counts + compression. Merge derivation: the exact local
     // trainer (BpeCore — the same code txt_bpe_train's gate proves
@@ -256,7 +256,7 @@ object TextQueries extends QueryModule {
     // orders below the 1e-6 quantum, so the round is engine-stable —
     // and degenerate docs (all-equal or all-distinct tokens) hit exact
     // integers on both engines by construction. Known tolerance
-    // (ADVICE r4): clog is an order-dependent double sum and JVM vs
+    //: clog is an order-dependent double sum and JVM vs
     // DuckDB log2 can differ by ulps, so a value landing within ~1e-9
     // of a .5-ppm rounding boundary could round apart — a risk that
     // grows with corpus size but stays astronomically small per doc.
@@ -370,7 +370,7 @@ object TextQueries extends QueryModule {
 
     // String similarity: vocabulary word pairs within edit distance 2,
     // via DELETION-NEIGHBORHOOD BLOCKING at depth 2 (the txt_typo_pairs
-    // SymSpell idea, generalized — r16, replacing an O(vocab²)
+    // SymSpell idea, generalized — replacing an O(vocab²)
     // broadcast nested-loop join that could never survive a real
     // vocabulary). Completeness is a theorem: an optimal edit script of
     // ≤ 2 ops deletes ≤ 2 characters from EACH side to reach a common
@@ -406,7 +406,7 @@ object TextQueries extends QueryModule {
         .join(variants.as("b"), $"a.k" === $"b.k" && $"a.w" < $"b.w")
         .select($"a.w".as("w1"), $"b.w".as("w2"))
         .distinct()
-      // Both witness counts from ONE action (r17 — the old shape ran
+      // Both witness counts from ONE action (the old shape ran
       // vocab.count() and candidates.count() as separate jobs, paying
       // the variant join twice just to feed the require): the candidate
       // count and the vocabulary count ride one job as a cross of two
@@ -463,7 +463,7 @@ object TextQueries extends QueryModule {
         .limit(20)
     }),
 
-    // BIGRAM-LM QUALITY SCORING (r11) — the CCNet/KenLM-shape filter:
+    // BIGRAM-LM QUALITY SCORING — the CCNet/KenLM-shape filter:
     // train an add-1-smoothed bigram model ON the corpus (one pass to
     // the vocab-sized count tables) and score every doc's mean
     // negative log-likelihood against it; low-probability word
@@ -579,7 +579,7 @@ object TextQueries extends QueryModule {
       }
     }),
 
-    // FUZZY PAIR MINING via deletion-neighborhood blocking (r13) — the
+    // FUZZY PAIR MINING via deletion-neighborhood blocking — the
     // SymSpell idea, the scalable answer to "find all token pairs
     // within edit distance 1" (typo mining / fuzzy dedup keys): two
     // strings at distance ≤ 1 ALWAYS share a member of
@@ -624,7 +624,7 @@ object TextQueries extends QueryModule {
           $"a.k" === $"b.k" && $"a.w" < $"b.w")
         .select($"a.w".as("tok_a"), $"b.w".as("tok_b"))
         .distinct()
-      // Both witness counts from ONE action (r18 — the old shape ran
+      // Both witness counts from ONE action (the old shape ran
       // vocab.count() and candidates.count() as separate jobs, paying
       // the variant self-join twice just to feed the require; the
       // txt_levenshtein cross-of-two-aggregates shape, applied here).
@@ -658,7 +658,7 @@ object TextQueries extends QueryModule {
       // from two places plus three scalar subqueries on m_k), and
       // DuckDB's default CTE inlining would re-expand the whole prefix
       // at every reference — exponential plan growth that exhausts
-      // file handles before round 10. Materialization makes the replay
+      // file handles within ten rounds. Materialization makes the replay
       // linear, one pass per round, like the engine's own loop.
       val round = (k: Int) =>
         s"""p$k AS MATERIALIZED (SELECT unnest([y[i] || ' ' || y[i+1] FOR i IN range(1, len(y))]) AS pr, cnt

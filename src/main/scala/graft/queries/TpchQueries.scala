@@ -33,7 +33,7 @@ object TpchQueries extends QueryModule {
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Q1 proper: the canonical pricing-summary aggregate has lived in
-    // this engine as rel_q1_agg since round 1 (SURVEY §2.3, plan-shape
+    // this engine as rel_q1_agg (SURVEY §2.3, plan-shape
     // asserted there); this alias makes the 22/22 TPC-H inventory
     // self-evident under its own name. Same plan, same oracle.
     "tpch_q1" -> ((s, dir) => RelationalQueries.queries("rel_q1_agg")(s, dir)),

@@ -22,11 +22,11 @@ import scala.jdk.CollectionConverters._
   *    the Hadoop FileSystem API (the same executor-side create every
   *    Spark sink uses — file://, hdfs://, s3a:// alike; the SESSION's
   *    Hadoop configuration rides a broadcast, so configured
-  *    filesystems/credentials actually apply, ADVICE r17). Each task
+  *    filesystems/credentials actually apply). Each task
   *    streams its rows through a [[DataFileWriter]]; nothing funnels
   *    through the driver. Files roll with the upstream partitioning,
   *    so sizing them is the usual `repartition(n)` decision.
-  *  - READ (BLOCK-SPLITTABLE, r18): Avro containers are splittable on
+  *  - READ (BLOCK-SPLITTABLE): Avro containers are splittable on
   *    their 16-byte SYNC MARKERS — the Hadoop AvroInputFormat
   *    contract. The driver lists files and cuts BYTE RANGES (one
   *    split per `splitBytes`, default `spark.sql.files
@@ -35,8 +35,8 @@ import scala.jdk.CollectionConverters._
   *    or after its range start, and decodes blocks until
   *    `pastSync(end)` — every record lands in exactly one split, so a
   *    single pathological 100-GB container drop decodes on the whole
-  *    cluster instead of serializing through one task (before r18:
-  *    one task per FILE via binaryFile, which also buffered the whole
+  *    cluster instead of serializing through one task (a
+  *    binaryFile read is one task per FILE and also buffers the whole
   *    container in memory).
   *
   * Type surface: BIGINT/INT/DOUBLE/FLOAT/BOOLEAN/STRING/BINARY, each

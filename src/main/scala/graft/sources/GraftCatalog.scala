@@ -39,7 +39,7 @@ import graft.operators.VersionedTable
   * commit published at-or-before the timestamp (manifest link mtime —
   * the snapshot-at-time semantics of Delta/Iceberg).
   *
-  * DDL (r15) goes THROUGH the protocol, never around it: CREATE TABLE
+  * DDL goes THROUGH the protocol, never around it: CREATE TABLE
   * [AS SELECT] bootstraps v0 as a schema-pinning zero-row commit (a
   * CTAS's rows append as v1), ALTER TABLE RENAME/ALTER COLUMN TYPE
   * publish the metadata-only rename/widen commits, and DROP TABLE is
@@ -50,7 +50,7 @@ import graft.operators.VersionedTable
 class GraftCatalog extends TableCatalog with ProcedureCatalog
     with org.apache.spark.sql.connector.catalog.FunctionCatalog {
 
-  /** V2 FUNCTIONS (r18; time grains r19; truncate r20): `bucket`,
+  /** V2 FUNCTIONS: `bucket`,
     * `truncate` and `years`/`months`/`days`/`hours` — resolved by
     * Spark's SPJ machinery when a scan reports a transform
     * KeyGroupedPartitioning (see [[GraftBucketFunction]] /
@@ -82,7 +82,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
   private var catalogName: String = _
   private var root: java.nio.file.Path = _
 
-  /** SQL STORED PROCEDURES (r13) — the table-maintenance verbs as
+  /** SQL STORED PROCEDURES — the table-maintenance verbs as
     * plain `CALL` statements (Spark 4's ProcedureCatalog, the
     * Iceberg-procedures shape), so an operator runs the protocol's
     * lifecycle without touching the library API:
@@ -203,10 +203,10 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
           "refresh cursor and the MVSQL definition. Aggregate columns " +
           "must fold across deltas (BIGINT/DOUBLE): sum/count fold by " +
           "SUM, bare avg is rewritten into sum+count partials plus " +
-          "the stored served ratio (r20 — SELECT * serves the " +
+          "the stored served ratio (SELECT * serves the " +
           "declared shape; the connector hides the partials), " +
           "min/max fold for " +
-          "append-only deltas, and DV deletes repair per group (r20: " +
+          "append-only deltas, and DV deletes repair per group (" +
           "only groups whose killed extremum ties the standing one " +
           "recompute). create_mv(mv, base, group_cols, sql)",
         Seq(ProcedureParameter.in("mv", DataTypes.StringType).build(),
@@ -271,7 +271,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
           "land under the new spec; existing files keep their paths " +
           "and prune under the spec each path exhibits; CALL compact " +
           "later to un-rag the whole table under the live spec. " +
-          "Transforms (r18, grains completed r19): years/months/days/" +
+          "Transforms: years/months/days/" +
           "hours(col) over BIGINT micros or TIMESTAMP columns, and " +
           "bucket(n, col) — hidden partitioning; predicates on the " +
           "RAW column prune. " +
@@ -291,12 +291,12 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
               .last._1)
         })
       case "hnsw_merge" => proc("hnsw_merge",
-        "Graph-ANN SEGMENT MERGE as schedulable maintenance (r18, the " +
+        "Graph-ANN SEGMENT MERGE as schedulable maintenance (the " +
           "compact_partitions of the vector index): rebuild the named " +
           "small segments of an HNSW index under the catalog root into " +
           "ONE new segment — reading their stored vectors, never the " +
-          "source corpus; untouched segments are never reopened. Since " +
-          "r19 (array payload columns) an index can BE a graft table: " +
+          "source corpus; untouched segments are never reopened. With " +
+          "array payload columns an index can BE a graft table: " +
           "there the merge is ONE atomic rewrite commit (pre-merge " +
           "index stays time-travelable until expire). Legacy " +
           "plain-parquet seg= layouts keep the write-then-retire " +
@@ -314,7 +314,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
             .map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
           VersionedTable.latestVersion(idx) match {
             case Some(v) =>
-              // EXACT segment count (r20): single-seg files (mn==mx,
+              // EXACT segment count: single-seg files (mn==mx,
               // the normal per-segment commit shape) count from the
               // manifest alone; the rare span file (a multi-seg
               // commit, or a stats-less line) gets its seg column
@@ -524,7 +524,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     // '$' is the metadata-table namespace (`docs$files`): a CREATE-able
     // name carrying it would be permanently unloadable (load() routes
     // every '$'-bearing identifier to the metadata surface) and could
-    // shadow a real table's metadata views (ADVICE r17).
+    // shadow a real table's metadata views.
     require(!name.contains('$'),
       s"graft catalog '$catalogName': invalid table name '$name' — " +
         "'$' is reserved for metadata tables (t$files, t$history, …)")
@@ -561,7 +561,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
   }
 
   private def load(ident: Identifier, version: Option[Long]): Table = {
-    // METADATA TABLES (r17): `t$history` / `t$files` / `t$partitions` /
+    // METADATA TABLES: `t$history` / `t$files` / `t$partitions` /
     // `t$refs` — the Iceberg metadata-table surface, answered from
     // manifests alone. `VERSION AS OF` composes (the version resolves
     // here, before the metadata table is built).
@@ -640,7 +640,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
         "through the commit protocol (VersionedTable.commit/" +
         "appendCommit/mergeCommit/transact)")
 
-  /** SQL DDL (r15) — `CREATE TABLE [AS SELECT]`: version 0 is a
+  /** SQL DDL — `CREATE TABLE [AS SELECT]`: version 0 is a
     * BOOTSTRAP commit pinning the declared schema as one zero-row
     * parquet file (the streaming sink's bootstrap shape — the
     * manifest's first footer IS the connector's schema source, so an
@@ -655,13 +655,13 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
       properties: java.util.Map[String, String]): Table = {
     if (ident.namespace.nonEmpty)
       throw new NoSuchNamespaceException(ident.namespace)
-    // PARTITIONED BY (r16; transforms r18): IDENTITY columns are
+    // PARTITIONED BY (transforms): IDENTITY columns are
     // STRING-typed (partition values ride Hive-style path segments and
     // read back as strings; several columns nest as c1=v1/c2=v2 in
     // declaration order). TRANSFORMS — PARTITIONED BY (days(ts),
     // bucket(n, id)) — are the hidden-partitioning specs: the derived
     // segment never enters the schema, predicates on the RAW column
-    // prune. Identity-only declarations land as PARTCOL lines (the r16
+    // prune. Identity-only declarations land as PARTCOL lines (the
     // shape, unchanged); a declaration with ANY transform lands as ONE
     // PARTSPEC generation instead — either way the very first
     // INSERT/CTAS/streaming epoch lands partitioned files and gets
@@ -738,7 +738,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
       s"graft catalog '$catalogName': duplicate partition columns " +
         s"$partSpecSeq")
     // DERIVED-name discipline, the same evolvePartitionLayout enforces
-    // (ADVICE self-review r18): two transforms must not derive the
+    //: two transforms must not derive the
     // same segment (bucket(4,x) + bucket(8,x) both derive x_bucket),
     // and a derived name must not shadow a REAL schema column — a
     // payload column named ts_day next to days(ts) would be silently
@@ -808,7 +808,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
         VersionedTable.widenCommit(p,
           VersionedTable.latestVersion(p).get + 1,
           u.fieldNames()(0), u.newDataType.sql.toLowerCase)
-      // ALTER TABLE ADD COLUMN (r16): a metadata-only ADDCOL commit —
+      // ALTER TABLE ADD COLUMN: a metadata-only ADDCOL commit —
       // legacy rows read as typed NULLs immediately (no compaction
       // needed: the connector serves missing footer fields as NULL),
       // later INSERTs write real values. NULLABLE appends only: a NOT
@@ -829,7 +829,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
           org.apache.spark.sql.SparkSession.active, p,
           VersionedTable.latestVersion(p).get + 1,
           a.fieldNames()(0), a.dataType.sql.toLowerCase)
-      // ALTER TABLE DROP COLUMN (r16): a metadata-only DROPCOL commit
+      // ALTER TABLE DROP COLUMN: a metadata-only DROPCOL commit
       // — readers stop serving the column immediately, its bytes wait
       // for compaction, time travel below sees it. Load-bearing
       // columns (stats/index/DV-key/partition/CHECK) refuse inside
@@ -872,7 +872,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     true
   }
 
-  /** `ALTER TABLE … RENAME TO` (r16) — one atomic directory move: a
+  /** `ALTER TABLE … RENAME TO` — one atomic directory move: a
     * table is self-contained under its root (manifests reference data
     * files RELATIVELY, refs live in `_refs/` inside), so the rename
     * carries the entire history, every tag/branch, and every data
@@ -901,7 +901,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     // RESERVE the target name atomically before moving: POSIX rename()
     // silently replaces an existing EMPTY target directory, so a bare
     // exists-then-move could clobber a concurrent CREATE TABLE's
-    // just-created directory in the check-to-move window (ADVICE r16).
+    // just-created directory in the check-to-move window.
     // createDirectory fails atomically if anyone else took the name;
     // the subsequent ATOMIC_MOVE then replaces exactly the empty
     // placeholder WE own (rename-over-empty-dir is now the mechanism,

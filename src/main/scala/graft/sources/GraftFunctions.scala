@@ -5,7 +5,7 @@ import org.apache.spark.sql.connector.catalog.functions.{BoundFunction,
   ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.types._
 
-/** The catalog's V2 FUNCTION surface (r18) — one function, `bucket`,
+/** The catalog's V2 FUNCTION surface — one function, `bucket`,
   * and it exists for STORAGE-PARTITIONED JOINS over bucket-transform
   * layouts: when a scan reports `KeyGroupedPartitioning(bucket(n,
   * col))`, Spark resolves the named function THROUGH THE RELATION'S
@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
   * and bucketing its STRING rendering hash identically here, but two
   * differently-typed layouts must still never claim compatibility.
   */
-/** The TIME-GRAIN V2 functions (r19) — `years`/`months`/`days`/`hours`
+/** The TIME-GRAIN V2 functions — `years`/`months`/`days`/`hours`
   * over a BIGINT epoch-micros column, each returning the STRING
   * segment rendering the writer lays files out by
   * ([[graft.operators.PartTransform.dayOfMicros]] and siblings — one
@@ -33,7 +33,7 @@ import org.apache.spark.sql.types._
   * Exchange (equal raw values share a day by construction), and with
   * `v2.bucketing.shuffle.enabled` Spark can evaluate the grain to
   * shuffle ONE non-partitioned side to match. This is the single most
-  * common co-location in an event pipeline — the r18 conservative
+  * common co-location in an event pipeline — the conservative
   * bail ("no exposed V2 date function") is retired by exposing one. */
 final class GraftTimeGrainFunction(grain: String,
     render: Long => String) extends UnboundFunction {
@@ -62,7 +62,7 @@ final class GraftTimeGrainFunction(grain: String,
       override def resultType(): DataType = StringType
       override def name(): String = grain
       override def canonicalName(): String = s"graft.$grain"
-      // NULLABLE + TOTAL (r20): when v2.bucketing.shuffle evaluates
+      // NULLABLE + TOTAL: when v2.bucketing.shuffle evaluates
       // the grain to move a NON-partitioned join side, that side may
       // carry NULLs (a stored side never can — the writer refuses
       // them). getLong(0) on a null slot reads 0 and would silently
@@ -92,7 +92,7 @@ object GraftTimeGrainFunction {
     "hours" -> new GraftTimeGrainFunction("hours", PartTransform.hourOfMicros))
 }
 
-/** The V2 truncate function family (r20) — resolved by Spark's SPJ
+/** The V2 truncate function family — resolved by Spark's SPJ
   * machinery when a scan reports
   * `KeyGroupedPartitioning(truncate_<n>(col))`: two
   * truncate-partitioned tables joined on the raw column plan with
@@ -148,7 +148,7 @@ final class GraftTruncateFunction(n: Int) extends UnboundFunction {
             val l = input.getInt(0).toLong
             (l - Math.floorMod(l, n.toLong)).toString
           case _ =>
-            // substringSQL counts CODE POINTS (r21, ADVICE r20) — the
+            // substringSQL counts CODE POINTS — the
             // same derivation as TruncatePart.segmentValue/SUBSTRING;
             // the old String.substring counted UTF-16 units and could
             // split a surrogate pair into a segment no stored path
@@ -193,7 +193,7 @@ object GraftBucketFunction extends UnboundFunction {
       override def canonicalName(): String =
         s"graft.bucket(${valueType.catalogString})"
       // Nullable for the same shuffled-probe-side reason as the time
-      // grains (r20): a stored side never carries NULL bucket values,
+      // grains: a stored side never carries NULL bucket values,
       // a shuffled side may.
       override def isResultNullable: Boolean = true
       override def produceResult(input: InternalRow): Integer = {

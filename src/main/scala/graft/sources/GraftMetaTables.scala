@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.file.{Files, Path, Paths}
 
-/** METADATA TABLES (r17) — the Iceberg `table$files` idea: every graft
+/** METADATA TABLES — the Iceberg `table$files` idea: every graft
   * table exposes its own protocol state as SELECT-able relations,
   * answered from MANIFESTS ALONE (no data file is ever opened — at
   * 100 TB these queries cost a metadata read, which is the whole
@@ -30,7 +30,7 @@ import java.nio.file.{Files, Path, Paths}
   *                     lacks it — evolution-aware), files,
   *                     row_count (NULL without ROWS lines).
   *  - `t$refs`       — name, type (tag/branch), version.
-  *  - `t$specs`      — partition-spec generations (r18): generation,
+  *  - `t$specs`      — partition-spec generations: generation,
   *                     spec text (identity/transforms as written, NULL
   *                     for flat), is_live (the write layout).
   *
@@ -38,14 +38,14 @@ import java.nio.file.{Files, Path, Paths}
   * inventories version 3's snapshot — the catalog resolves the version
   * before the metadata table is built. All four are read-only.
   *
-  * SCALE DISPOSITION (r18): the FILE-SIZED tables (`$files`,
+  * SCALE DISPOSITION: the FILE-SIZED tables (`$files`,
   * `$partitions`) are served by a DISTRIBUTED V2 scan — the driver
   * ships O(parallelism) partition stubs and each EXECUTOR resolves the
   * manifest itself and takes a deterministic slice ($files: file-index
   * stride, so the per-file `Files.size` stat calls distribute too;
   * $partitions: partition-tuple hash, so each value tuple is rolled up
-  * by exactly one task from its own full-manifest parse). Before r18
-  * these materialized one driver-side InternalRow PER FILE at PLAN
+  * by exactly one task from its own full-manifest parse). Built on the
+  * driver they would materialize one InternalRow PER FILE at PLAN
   * time — fine at fixture scale, a driver-resident OOM during planning
   * at the 10⁶–10⁷-file tables 100 TB produces (the HistorySource
   * lesson, applied). The genuinely COMMIT-SIZED tables (`$history`,
@@ -78,7 +78,7 @@ object GraftMetaTables {
       StructField("stats_max", LongType, nullable = true),
       StructField("partition", StringType, nullable = true)))
     case "partitions" => StructType(
-      // The PHYSICAL layout (r18): hidden transform segments are the
+      // The PHYSICAL layout: hidden transform segments are the
       // DBA's business here — `ts_day` appears as a rollup column in
       // $partitions even though the data schema hides it.
       snap.physicalPartitionLayout.map(c =>
@@ -142,7 +142,7 @@ object GraftMetaTables {
             bloomBy.getOrElse(c, 0L), zoneBy.getOrElse(c, 0L))
         }.toArray
     case "specs" =>
-      // The partition-spec GENERATIONS (r18): identity columns and
+      // The partition-spec GENERATIONS: identity columns and
       // transforms as written, highest generation = the live write
       // layout. Generation 0 = the implicit pre-evolution layout when
       // the table never evolved. Spec text NULL for a flat generation.
@@ -283,7 +283,7 @@ private[sources] class GraftMetaTable(snap: VersionedTable.Snapshot,
       options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
       override def build(): Scan = kind match {
-        // FILE-SIZED tables go distributed (r18): manifests parse on
+        // FILE-SIZED tables go distributed: manifests parse on
         // executors, never materializing per-file rows on the driver.
         case "files" | "partitions" =>
           new GraftMetaBatchScan(snap.table.toString, kind, snap.version,

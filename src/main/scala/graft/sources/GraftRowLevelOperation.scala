@@ -48,7 +48,7 @@ import graft.operators.VersionedTable
   *    statement with a re-run instruction instead of silently losing
   *    either write.
   *
-  *  - RUNTIME GROUP FILTERING (r15): the operation requests the
+  *  - RUNTIME GROUP FILTERING: the operation requests the
   *    `_file` metadata column, so Spark's
   *    `RowLevelOperationRuntimeGroupFiltering` runs a matching-rows
   *    subquery (target rows the statement touches, DISTINCT `_file` —

@@ -1,17 +1,18 @@
 package graft.sources
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.util.SerializableConfiguration
 
 /** Session config shared by every entry point (Verify, Bench, tests).
   *
   * Central so that fixture-driven settings are visible at construction
-  * time instead of mutated mid-session by readers (ADVICE r01):
+  * time instead of mutated mid-session by readers:
   *
   *  - UTC session timezone: oracle parity (DuckDB runs in UTC), and it
   *    makes TIMESTAMP_NTZ↔TIMESTAMP casts wall-clock-preserving
-  *    (`events.ts` is TIMESTAMP(MICROS) ntz parquet since the r10
+  *    (`events.ts` is TIMESTAMP(MICROS) ntz parquet since the
   *    fixture refresh — FIXTURES.md).
   *  - [[graft.functions.GraftExtensions]]: registers the engine's native
   *    Catalyst functions (e.g. `cosine_sim`).
@@ -40,9 +41,9 @@ object GraftSession {
     *    entry per event id in the horizon) and `ev_stream_sessionize`
     *    (per-key-growing custom state: one mapGroupsWithState snapshot
     *    per user, never evicted). Measured A/B on the dedup drain
-    *    shape (DrainProfile r9, sf0.1, ~10^5 state rows, tmpfs
+    *    shape (DrainProfile, sf0.1, ~10^5 state rows, tmpfs
     *    scratch, min of 3 interleaved reps): heap 3.40 s vs
-    *    RocksDB 3.79 s — and on the sessionize shape (r11): heap
+    *    RocksDB 3.79 s — and on the sessionize shape: heap
     *    1.57 s vs RocksDB 1.74 s — the provider costs ~12% at fixture scale
     *    (native-store commit machinery), the price of state that no
     *    longer lives on the JVM heap. At 100 TB that trade inverts:
@@ -54,7 +55,7 @@ object GraftSession {
     *    shuffle. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.session.timeZone", "UTC")
-    // TIMESTAMP payload columns in graft-table (r19) are INT64
+    // TIMESTAMP payload columns in graft-table are INT64
     // micros by contract: the footer-driven schema inference and the
     // Group-API readers refuse INT96, so library commits (which write
     // through spark.write.parquet) must never emit the legacy type.
@@ -152,8 +153,8 @@ object GraftSession {
     * pass over tiny per-bucket/per-size aggregate tables — bounded
     * cardinality by design, a single partition is the point — and the
     * warning fires once per run of each, alarming every future reader
-    * of the bench tail (r9 verdict). A constant partitionBy(lit(0))
-    * does not survive Catalyst constant folding (verified r10), so the
+    * of the bench tail. A constant partitionBy(lit(0))
+    * does not survive Catalyst constant folding (verified), so the
     * honest fix is at the logger. The real regression guard is
     * PlanShapeSpec, which pins the corpus-side windows' partition keys
     * — losing one fails CI regardless of log level. */
@@ -174,8 +175,8 @@ object GraftSession {
     * URI — staging through s3://... would need the writers below to go
     * through Hadoop FS APIs instead of java.nio (deployment note, not
     * fixture machinery). Each call returns a fresh unique subdirectory
-    * so concurrent queries never collide; callers delete their tree
-    * when done (same hygiene as EventStreams.tempDir). */
+    * so concurrent queries never collide. Queries stage through
+    * [[staged]], which deletes the tree when the query is done. */
   def stagingDir(tag: String): java.nio.file.Path =
     sys.env.get("SPARK_GRAFT_STAGING") match {
       case Some(root) =>
@@ -188,6 +189,50 @@ object GraftSession {
         java.nio.file.Files.createTempDirectory(p, tag)
       case None => java.nio.file.Files.createTempDirectory(tag)
     }
+
+  /** Run `body` over a fresh [[stagingDir]] tree and return its result
+    * materialized on `s`: the rows are collected while the tree still
+    * exists, so the returned frame owns no on-disk state, and the tree
+    * is deleted afterwards, also when `body` throws. */
+  def staged(s: SparkSession, tag: String)(
+      body: java.nio.file.Path => DataFrame): DataFrame = {
+    val tree = stagingDir(tag)
+    try materialize(s, body(tree))
+    finally deleteTree(tree)
+  }
+
+  /** [[staged]], with `body` run on a [[scoped]] child of `s` on which
+    * the `graftcat` catalog ([[GraftCatalog]]) is rooted at the tree,
+    * plus `settings`. The result is collected while the child is still
+    * the active session. */
+  def stagedCatalog(s: SparkSession, tag: String, settings: (String, String)*)(
+      body: (java.nio.file.Path, SparkSession) => DataFrame): DataFrame =
+    staged(s, tag) { tree =>
+      val catalog = Seq(
+        "spark.sql.catalog.graftcat" -> classOf[GraftCatalog].getName,
+        "spark.sql.catalog.graftcat.root" -> tree.toString)
+      scoped(s, catalog ++ settings: _*)(c => materialize(s, body(tree, c)))
+    }
+
+  /** `df`'s rows as a local relation on `s`: one collect, after which
+    * reading the frame launches no Spark job and depends on nothing
+    * `df` read. A frame that already is a local relation on `s` is
+    * returned as it is. */
+  def materialize(s: SparkSession, df: DataFrame): DataFrame =
+    if ((df.sparkSession eq s) &&
+        df.queryExecution.logical.isInstanceOf[LocalRelation]) df
+    else s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** Recursive delete, deepest-first; missing paths are a no-op. */
+  private[graft] def deleteTree(p: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, Path}
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(f => Files.deleteIfExists(f))
+      finally walk.close()
+    }
+  }
 
   /** Where this build's graft classes live (sbt runs from a classes
     * directory, not a jar, so local-cluster dev smoke runs must ship it

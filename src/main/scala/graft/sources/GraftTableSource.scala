@@ -191,7 +191,7 @@ object GraftTableSource {
       f: Filter, t: graft.operators.PartTransform): Boolean = t match {
     case _: graft.operators.TimePart => prunable(f, t.rawCol)
     case _: graft.operators.BucketPart => partPrunable(f, Set(t.rawCol))
-    // truncate (r20): equality shapes always; an INTEGRAL layout's
+    // truncate: equality shapes always; an INTEGRAL layout's
     // segment is a value range, so zonemap range shapes prune too
     // (admits parses the segment — string segments stay conservative);
     // a LIKE 'prefix%' probe whose prefix covers the width pins a
@@ -200,7 +200,7 @@ object GraftTableSource {
       partPrunable(f, Set(t.rawCol)) || prunable(f, t.rawCol) ||
         (f match {
           case org.apache.spark.sql.sources.StringStartsWith(c, p) =>
-            // Width in CODE POINTS (r21, ADVICE r20) — matching the
+            // Width in CODE POINTS — matching the
             // segment derivation; UTF-16 length could overcount a
             // prefix containing supplementary characters.
             c == t.rawCol && p.codePointCount(0, p.length) >= tp.n
@@ -248,7 +248,7 @@ object GraftTableSource {
           case org.apache.spark.sql.sources.StringStartsWith(`c`, p)
               if p.codePointCount(0, p.length) >= tp.n =>
             // A probe prefix at least as long as the width (in CODE
-            // POINTS, matching the segment derivation — r21) pins the
+            // POINTS, matching the segment derivation) pins the
             // segment exactly.
             graft.operators.PartTransform.truncatePrefix(p, tp.n) == segVal
           case org.apache.spark.sql.sources.And(l, r) =>
@@ -260,7 +260,7 @@ object GraftTableSource {
       case _ => true
     } catch { case scala.util.control.NonFatal(_) => true }
 
-  /** The Spark type a footer field serves (r19): scalar primitives
+  /** The Spark type a footer field serves: scalar primitives
     * (with TIMESTAMP(MICROS)/DATE logical annotations deciding the
     * datetime flavors — MILLIS/NANOS and INT96 refuse loudly), plus
     * the ONE nested shape the format stores — the writer's standard
@@ -327,7 +327,7 @@ object GraftTableSource {
         val names = dataFields.map(_.name).toSet
         val withParts = dataFields ++ snap.partitionCols
           .filterNot(names).map(StructField(_, StringType, nullable = true))
-        // ADDCOL/DROPCOL mappings (r16), folded IN COMMIT ORDER:
+        // ADDCOL/DROPCOL mappings, folded IN COMMIT ORDER:
         // a column added by a metadata-only commit appears in the
         // served schema even though the footer predates it (files
         // lacking it read as typed NULLs; guarded by name — a
@@ -346,12 +346,12 @@ object GraftTableSource {
           case (fields, _) => fields
         } match {
           case mapped =>
-            // MV avg partials (r20): an MV declared with `avg(x) AS n`
+            // MV avg partials: an MV declared with `avg(x) AS n`
             // physically stores the served ratio `n` PLUS maintained
             // `n__asum`/`n__acnt` partials (what the refresh folds).
             // The partials are maintenance state, not declared shape —
             // hide them, so SELECT * through the catalog serves
-            // exactly what CALL create_mv declared (ADVICE r19).
+            // exactly what CALL create_mv declared.
             val partials = snap.mvAvgFolds
               .filter(f => mapped.exists(_.name == f._1)) // ratio stored
               .flatMap(f => Seq(f._2, f._3)).toSet
@@ -364,7 +364,7 @@ object GraftTableSource {
   /** Does a file whose stats-column range is [mn, mx] possibly hold a
     * row admitted by `f`? Conservative: unrecognized shapes admit.
     * Datetime probe values coerce to the units the zonemaps store
-    * (r19): epoch MICROS for timestamp columns (NTZ interpreted as
+    *: epoch MICROS for timestamp columns (NTZ interpreted as
     * UTC — the engine's session-timezone contract), epoch DAYS for
     * dates. Anything unrecognized admits. */
   private[sources] def admits(f: Filter, statsCol: String,
@@ -605,7 +605,7 @@ private[sources] class GraftTable(snap: graft.operators.VersionedTable.Snapshot,
     * row): publishes ONE commit replacing the snapshot with a single
     * zero-row file, so the SCHEMA stays self-describing (the DDL
     * bootstrap shape), CHECK constraints, STATSCOL and the DECLARED
-    * partition layout carry (r16 — a truncated PARTITIONED BY table
+    * partition layout carry (a truncated PARTITIONED BY table
     * keeps landing partitioned inserts; a layout grown only from
     * commitPartitioned paths has no declaration to carry and resets
     * to flat, its columns surviving as payload fields), history
@@ -622,7 +622,7 @@ private[sources] class GraftTable(snap: graft.operators.VersionedTable.Snapshot,
       schema0)
     // Zero rows still write a FOOTER: an INT96-defaulting session
     // would stage a schema every subsequent read refuses — the same
-    // commit-time gate as every library write (r20 review).
+    // commit-time gate as every library write.
     VersionedTable.ensureMicrosTimestamps(empty)
     empty.coalesce(1).write.parquet(dd.toString)
     val staged = {
@@ -822,7 +822,7 @@ private[sources] class GraftScan(
   private val path = snap.table.toString
   private val version = snap.version
 
-  /** RUNTIME GROUP FILTERING (r15) — the scan accepts a runtime
+  /** RUNTIME GROUP FILTERING — the scan accepts a runtime
     * IN-predicate on `_file` and narrows its planned files to exactly
     * that set. Spark's `RowLevelOperationRuntimeGroupFiltering` is the
     * producer: for UPDATE/DELETE/MERGE it runs a matching-rows
@@ -845,7 +845,7 @@ private[sources] class GraftScan(
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
     val names = required.fieldNames.toSet
     val parts = snap.partitionLayout.filter(names.contains)
-    // Hidden partitioning (r18): the RAW column of a transform spec is
+    // Hidden partitioning: the RAW column of a transform spec is
     // runtime-filterable too — join-driven DPP hands a value set on
     // `ts_us` and the scan prunes files by the DERIVED day/bucket
     // segments each value maps to (a date-dim join prunes the fact
@@ -874,7 +874,7 @@ private[sources] class GraftScan(
           Some(allFiles
             .filter(f => GraftTableSource.partitionValues(f).toMap
               .get(c).forall(vs.contains)).toSet)
-        // Runtime value set on a transform's RAW column (r18): map
+        // Runtime value set on a transform's RAW column: map
         // each value through the transform and admit files whose
         // DERIVED segment is among the mapped values; unparseable
         // values admit everything (an unpruned scan is still correct).
@@ -900,7 +900,7 @@ private[sources] class GraftScan(
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  /** STORAGE-PARTITIONED JOIN (r18) — `SupportsReportPartitioning`:
+  /** STORAGE-PARTITIONED JOIN — `SupportsReportPartitioning`:
     * when every surviving file carries EVERY layout column on its path
     * (one consistent identity spec — no flat bootstrap, no mid-
     * evolution rags), the scan reports [[KeyGroupedPartitioning]] over
@@ -939,7 +939,7 @@ private[sources] class GraftScan(
     if (!optIn) return None
     // The key set is the physical clustering every live file exhibits:
     // the live WRITE spec on an evolved table (identity, bucket and —
-    // r19 — time-grain transforms; transform keys resolve through the
+    // Time-grain transforms; transform keys resolve through the
     // catalog's V2 functions), the identity layout otherwise. Time
     // grains report `days(ts_us)` etc. exactly like Iceberg's
     // day-partitioned layouts: rows equal on the raw column share a
@@ -1047,7 +1047,7 @@ private[sources] class GraftScan(
     }
   }
 
-  /** MANIFEST-DRIVEN STATISTICS (r17) — `SupportsReportStatistics`:
+  /** MANIFEST-DRIVEN STATISTICS — `SupportsReportStatistics`:
     * the scan reports sizeInBytes (sum of surviving files' on-disk
     * bytes × `spark.sql.sources.fileCompressionFactor`, the FileScan
     * convention) and numRows (sum of surviving files' ROWS lines, when
@@ -1098,10 +1098,10 @@ private[sources] class GraftScan(
         if (live.forall(f => rows.contains(f._1)))
           OptionalLong.of(live.map(f => rows(f._1)).sum)
         else OptionalLong.empty()
-      // COLUMN statistics (r17): ANALYZE-published NDV/null counts for
+      // COLUMN statistics: ANALYZE-published NDV/null counts for
       // the columns this scan outputs — what a cost-based optimizer
       // sizes join OUTPUTS with. Advisory (appends drift them), which
-      // is the contract every engine's ANALYZE has. Since r18 the
+      // is the contract every engine's ANALYZE has. The
       // GLOBAL min/max of every zonemapped BIGINT column folds in from
       // the surviving files' per-file ranges at ZERO extra cost (the
       // manifest is already resolved) — CBO join-selectivity and range-
@@ -1193,7 +1193,7 @@ private[sources] class GraftScan(
     }
     // Schema-evolved versions carry a per-directory mapping the scan
     // must not guess at — refuse with the working alternative. ADDCOL
-    // mappings (r16) are the exception the reader CAN serve exactly:
+    // mappings are the exception the reader CAN serve exactly:
     // a requested column missing from a file's footer reads as a
     // typed NULL, which is precisely the add-column contract — so SQL
     // keeps working the moment the ALTER commits. Rename/widen still
@@ -1256,7 +1256,7 @@ private[sources] class GraftScan(
           s"funcs=${p.funcs.mkString(",")}]")
 }
 
-/** `keyVals` (r18): this file's partition-value tuple in key order —
+/** `keyVals`: this file's partition-value tuple in key order —
   * non-null exactly when the scan reports KeyGroupedPartitioning, so
   * Spark's v2-bucketing machinery can group same-key files into one
   * task and co-locate joins. `keyIsBucket` marks INT bucket keys (a

@@ -72,7 +72,7 @@ private[sources] class GraftWrite(snap: VersionedTable.Snapshot,
     * writer, so DDL-created partitioned tables get manifest partition
     * pruning from day one. */
   private val partCols: Seq[String] = snap.writePartitionLayout
-  // Entries may be TRANSFORM specs (r18, hidden partitioning): the
+  // Entries may be TRANSFORM specs (hidden partitioning): the
   // RAW column must be writable with the type the derivation demands;
   // identity columns keep the STRING rule (their value IS the path).
   private val partSpecs: Seq[graft.operators.PartTransform] =
@@ -114,7 +114,7 @@ private[sources] class GraftWrite(snap: VersionedTable.Snapshot,
       // would be backwards: micros are near-unique, every task would
       // see every day, and the batch would mint tasks × days files —
       // the small-files explosion the distribution exists to prevent
-      // (self-review r18).
+      // (self-review).
       Distributions.ordered(partSpecs.map(t =>
         Expressions.sort(Expressions.column(t.rawCol),
           org.apache.spark.sql.connector.expressions.SortDirection
@@ -144,11 +144,11 @@ private[sources] class GraftWrite(snap: VersionedTable.Snapshot,
     require(!truncate,
       "graft-table: the streaming sink is append-only (complete-mode " +
         "rewrites belong to batch overwrite or compaction commits)")
-    // Partitioned sink tables (r17): each epoch's rows route to
+    // Partitioned sink tables: each epoch's rows route to
     // `c=v/…` files under the table's WRITE layout, exactly like a
     // batch INSERT — the manifest partition pruning a day-partitioned
-    // event stream needs from its very first micro-batch. (Before r17
-    // this refused toward a flat-sink-then-compact detour.)
+    // event stream needs from its very first micro-batch. (Without it a
+    // partitioned sink would need a flat-sink-then-compact detour.)
     new GraftStreamingWrite(snap, stagingRel, schema, partCols)
   }
 }
@@ -266,7 +266,7 @@ private[sources] object GraftWriterFactory {
       case BooleanType => Some(Types.optional(BOOLEAN))
       case StringType =>
         Some(Types.optional(BINARY).as(LogicalTypeAnnotation.stringType()))
-      // TIMESTAMP/DATE payload (r19): parquet TIMESTAMP(MICROS) —
+      // TIMESTAMP/DATE payload: parquet TIMESTAMP(MICROS) —
       // adjusted-to-UTC mirrors Spark's instant/NTZ split — and
       // DATE(INT32). Spark's internal representation for all three
       // is already the long/int the physical type stores, so the
@@ -316,7 +316,7 @@ private[sources] object GraftWriterFactory {
     val b = Types.buildMessage()
     schema.fields.foreach { f =>
       val p: org.apache.parquet.schema.Type = f.dataType match {
-        // ARRAY payload (r19): the standard parquet 3-level list
+        // ARRAY payload: the standard parquet 3-level list
         // (optional group (LIST) { repeated group list { optional
         // element } }) over primitive elements — what embedding
         // vectors and ANN adjacency lists need to ride the commit
@@ -371,7 +371,7 @@ private[sources] class GraftWriterFactory(path: String, stagingRel: String,
     if (partCols.nonEmpty) partitionedWriter(partCols, partitionId, taskId)
     else flatWriter(partitionId, taskId)
 
-  /** Partitioned INSERT (r16): rows route to one open file per
+  /** Partitioned INSERT: rows route to one open file per
     * partition VALUE TUPLE, under nested Hive-style `c1=v1/c2=v2/…`
     * segments in layout order (URL-encoded —
     * [[GraftTableSource.partitionValues]] decodes). The partition
@@ -384,7 +384,7 @@ private[sources] class GraftWriterFactory(path: String, stagingRel: String,
   private def partitionedWriter(pcs: Seq[String], partitionId: Int,
                                 taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      // Specs may be transforms (r18): identity columns are STRIPPED
+      // Specs may be transforms: identity columns are STRIPPED
       // from the payload (they ride the path, the commitPartitioned
       // layout); a transform's RAW column STAYS (the derived segment
       // is a lossy function — files must remain information-complete).

@@ -40,7 +40,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Executors parse manifests themselves (the partition carries only
   * (root, version)), so nothing data-sized crosses the driver: the
   * driver ships O(versions) partition stubs, each executor resolves
-  * one version's manifest — since r13 that may walk a DELTA chain
+  * one version's manifest — that may walk a DELTA chain
   * (`BASE` pointers), bounded by the writers' checkpoint cadence, so
   * per-partition work stays O(live files + checkpointEvery reads).
   */

@@ -54,7 +54,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * populated, everything else NULL) — enough for a downstream
   * consumer to maintain a row-level mirror: apply inserts, anti-join
   * deletes, in commit order. REWRITE commits are served by their
-  * `KIND` annotation (r15): a KIND=compact commit is content-
+  * `KIND` annotation: a KIND=compact commit is content-
   * preserving (`dataChange=false`) and serves NOTHING in every mode —
   * the offset advances through an empty batch instead of the
   * full-restart a raw rewrite forces; a KIND=update commit serves,
@@ -169,7 +169,7 @@ object TableChangesSource {
       case (fields, ("dropcol", c, _)) => fields.filterNot(_.name == c)
       case (fields, _) => fields
     }
-    // PARTITION COLUMNS (r17): path-borne values never reach a footer,
+    // PARTITION COLUMNS: path-borne values never reach a footer,
     // but a mirror of a partitioned table must not LOSE the column —
     // serve them re-attached per file (string-typed, the batch
     // connector's contract). Union across the manifest: every
@@ -235,7 +235,7 @@ private[sources] class ChangesStream(path: String, schema: StructType,
 
   private val table = java.nio.file.Paths.get(path)
 
-  /** BRANCH-PINNED FEED (r13): with `option("ref", name)` the feed
+  /** BRANCH-PINNED FEED: with `option("ref", name)` the feed
     * serves ONLY the named branch's own line of history — its ref log
     * (fork + every CAS'd advance) IS that history, so admission
     * filters to those versions and other branches' interleaved commits
@@ -262,7 +262,7 @@ private[sources] class ChangesStream(path: String, schema: StructType,
     (vs.head, vs.tail.distinct)
   }
 
-  /** Per-trigger admission filter (r15 — ADVICE r13/r14: the old
+  /** Per-trigger admission filter (the old
     * per-version `admissible(v)` re-ran [[refAdvances]] — a ref
     * directory listing plus a read of EVERY ref record — once per
     * CANDIDATE VERSION, O(N_versions × refEntries) filesystem reads
@@ -364,7 +364,7 @@ private[sources] class ChangesStream(path: String, schema: StructType,
               changeType = "insert"): InputPartition)
         }
         else VersionedTable.commitKind(table, v) match {
-          // KIND=compact (r15, consuming r14's annotation): a
+          // KIND=compact (consuming the writers' annotation): a
           // compaction reorganizes bytes but the CONTENT is identical
           // — the Delta `dataChange=false` skip. Serve NOTHING: the
           // offset still advances through the version, the batch
@@ -372,7 +372,7 @@ private[sources] class ChangesStream(path: String, schema: StructType,
           // and downstream mirrors keep streaming instead of
           // full-restarting on what used to be a hard failure.
           case Some("compact") => Nil
-          // KIND=update (r15): a stats-pruned copy-on-write UPDATE
+          // KIND=update: a stats-pruned copy-on-write UPDATE
           // rewrote whole files in place — representable only in
           // change-feed mode, as the Delta CDF pair: every RM'd
           // file's rows replay as `update_preimage`, every new
@@ -471,7 +471,7 @@ private[sources] class ChangesStream(path: String, schema: StructType,
       // a compaction retires the mapping (head footers carry the
       // column) while a feed replaying from startingVersion=0 still
       // crosses the pre-add files — those footers legitimately lack
-      // the column and must serve the typed NULL (ADVICE r16).
+      // the column and must serve the typed NULL.
       VersionedTable.historicalAddColNames(table))
 
   override def commit(end: Offset): Unit = ()

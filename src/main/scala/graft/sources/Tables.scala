@@ -17,7 +17,7 @@ object Tables {
   val all: Seq[String] = tpch ++ Seq("events", "documents", "embeddings")
 
   /** Fixture schemas, inferred ONCE per (dir, table) per process and
-    * passed explicitly thereafter (r21): `read.parquet` with no schema
+    * passed explicitly thereafter: `read.parquet` with no schema
     * runs a footer-inference pass on every call — ~70 ms of driver+job
     * work that every one of the suite's ~400 table reads per sweep was
     * paying (measured: an explicit schema turns a one-table
@@ -48,8 +48,8 @@ object Tables {
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 
   /** `events.ts` is TIMESTAMP(MICROS) parquet, not adjusted to UTC, so
-    * Spark reads it natively as TIMESTAMP_NTZ (r10 fixture refresh; the
-    * pre-r10 fixtures stored INT64 epoch-nanos, which needed the
+    * Spark reads it natively as TIMESTAMP_NTZ (since the fixture refresh; the
+    * older fixtures stored INT64 epoch-nanos, which needed the
     * `nanosAsLong` legacy read plus explicit conversion — both retired).
     *
     * Adds `ts_utc` next to the raw columns: the same wall clock kept as

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.sources.GraftSession.deleteTree
 
 /** One event row in the typed streaming API. */
 final case class Ev(userId: Long, tsUs: Long, eventType: String)
@@ -139,7 +140,7 @@ object EventStreams {
   /** The staging half of [[splitEventsSource]]: write the slice files
     * under `tmp/src`, return the staged file count.
     *
-    * Redeliver layout (r21): copies are STAGGERED, not adjacent —
+    * Redeliver layout: copies are STAGGERED, not adjacent —
     * `O0 O1 C0 O2 C1 … O_{m-1} C_{m-2} C_{m-1}` instead of
     * `O0 C0 O1 C1 …` — so every copy sits at least TWO positions after
     * its original. A drain reading this tree with `maxFilesPerTrigger`
@@ -623,7 +624,7 @@ object EventStreams {
     } catch { case e: Throwable => deleteTree(tmp); throw e }
   }
 
-  /** STREAMING CHANGE-FEED consumer drain (r13) — the consumer half of
+  /** STREAMING CHANGE-FEED consumer drain — the consumer half of
     * the commit protocol, mirror of drainVersionedCommits' producer
     * half: a versioned table is staged (v0 full, v1 append), then
     * `readStream.format("graft-changes")` drains it through a
@@ -665,7 +666,7 @@ object EventStreams {
     } catch { case e: Throwable => deleteTree(tmp); throw e }
   }
 
-  /** FULL change-feed drain (r13) — [[commitFeedDrain]]'s append feed
+  /** FULL change-feed drain — [[commitFeedDrain]]'s append feed
     * upgraded to `readChangeFeed=true`: a history with a DELETE commit
     * (v0 base → v1 DV delete of doc_id%9==4 → v2 append re-inserting
     * doc 13) drains as typed rows — inserts carry data, deletes carry
@@ -714,9 +715,9 @@ object EventStreams {
     } catch { case e: Throwable => deleteTree(tmp); throw e }
   }
 
-  /** UPDATE/COMPACT change-feed drain (r15) — [[changeFeedDrain]]
+  /** UPDATE/COMPACT change-feed drain — [[changeFeedDrain]]
     * extended to the REWRITE commits the feed used to hard-fail on,
-    * consuming the `KIND` annotations r14's writers stamp: a history
+    * consuming the `KIND` annotations the writers stamp: a history
     * of v0 base → v1 `updateWhere` (KIND=update) → v2 `compactCommit`
     * (KIND=compact) → v3 append drains as v0 inserts, v1's rewritten
     * file replayed as `update_preimage` (old rows) + `update_postimage`
@@ -798,7 +799,7 @@ object EventStreams {
     } catch { case e: Throwable => deleteTree(tmp); throw e }
   }
 
-  /** STREAMING SINK drain (r13) — the PRODUCER half as a native V2
+  /** STREAMING SINK drain — the PRODUCER half as a native V2
     * `StreamingWrite`: events stream `writeStream.format("graft-table")`
     * straight INTO a versioned table, no foreachBatch glue — version =
     * epoch + 1 over a schema-pinning v0 bootstrap, so exactly-once is
@@ -845,12 +846,11 @@ object EventStreams {
         "sinkDrain: each data epoch must land as its own commit")
       val out = spark.read.format("graft-table").load(table.toString)
         .orderBy("event_id")
-      val rows = out.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      graft.sources.GraftSession.materialize(spark, out)
     } finally deleteTree(tmp)
   }
 
-  /** END-TO-END PIPELINE drain (r13) — the versioned table as a
+  /** END-TO-END PIPELINE drain — the versioned table as a
     * pipeline BACKBONE, both V2 connectors CHAINED through a stateful
     * operator in ONE streaming query:
     *
@@ -944,12 +944,11 @@ object EventStreams {
           "CAST(timestamp_micros(hour_us) AS timestamp_ntz) AS hour_start",
           "event_type", "n", "total_value")
         .orderBy("hour_start", "event_type")
-      val rows = out.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      graft.sources.GraftSession.materialize(spark, out)
     } finally deleteTree(tmp)
   }
 
-  /** STREAMING SINK INTO A PARTITIONED TABLE (r17, driver-checked):
+  /** STREAMING SINK INTO A PARTITIONED TABLE (driver-checked):
     * the events stream drains into a graft table PARTITIONED BY
     * event_type — each micro-batch's rows route to `event_type=…`
     * files (the same partitioned writer batch INSERT uses), so the
@@ -1015,8 +1014,7 @@ object EventStreams {
             sum(col("value").cast("decimal(18,2)")).cast("double")
               .as("total_value"))
           .orderBy("event_type")
-        val rows = out.collect()
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        graft.sources.GraftSession.materialize(spark, out)
       }
     } finally deleteTree(tmp)
   }
@@ -1229,7 +1227,7 @@ object EventStreams {
         // micro-batch never fired (a wedged trigger clock) — fail HERE,
         // attributably, instead of stopping anyway and surfacing later
         // as a confusing oracle diff on the missing last windows
-        // (ADVICE r10).
+        //.
         if (empties < 1)
           throw new IllegalStateException(
             "awaitQuiescent: no no-data micro-batch committed within the " +
@@ -1423,7 +1421,7 @@ object EventStreams {
             .start())._2
     }
 
-  /** MERGE-INTO-TARGET counterpart of [[drainUpdate]] (r11): where
+  /** MERGE-INTO-TARGET counterpart of [[drainUpdate]]: where
     * drainUpdate lands a CHANGELOG (per-batch refreshed rows appended,
     * compaction deferred to the reader), this drain maintains the
     * compacted TARGET TABLE itself — each micro-batch foreachBatch
@@ -1487,9 +1485,8 @@ object EventStreams {
         case Some(p) =>
           // Same driver-side read-back contract as loadAndClean: the
           // final target is keys-sized by construction.
-          val raw = spark.read.parquet(p)
-          spark.createDataFrame(
-            java.util.Arrays.asList(raw.collect(): _*), raw.schema)
+          graft.sources.GraftSession.materialize(spark,
+            spark.read.parquet(p))
         case None => spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
       }
@@ -1538,7 +1535,7 @@ object EventStreams {
               // DELTA manifest on the latest committed version, not
               // bid-1, so the chain survives any skipped batch id —
               // and per-batch commit metadata is O(the batch), not
-              // O(files in table) (r13 manifest-delta publishing).
+              // O(files in table) (manifest-delta publishing).
               if (!batch.isEmpty) {
                 try VersionedTable.commitAppend(spark, table, bid, batch.toDF())
                 catch {
@@ -1561,9 +1558,8 @@ object EventStreams {
       require(counts.zip(counts.tail).forall { case (a, b) => a < b },
         s"drainVersionedCommits: version row counts $counts must " +
           "strictly grow — some batch appended nothing")
-      val raw = VersionedTable.read(spark, table)
-      spark.createDataFrame(
-        java.util.Arrays.asList(raw.collect(): _*), raw.schema)
+      graft.sources.GraftSession.materialize(spark,
+        VersionedTable.read(spark, table))
     } finally deleteTree(tmp)
   }
 
@@ -1604,9 +1600,8 @@ object EventStreams {
               "for the harness's driver-side read-back — a production " +
               "consumer reads the sink files in place instead")
         }
-        val raw = spark.read.parquet(outDir.toString)
-        spark.createDataFrame(
-          java.util.Arrays.asList(raw.collect(): _*), raw.schema)
+        graft.sources.GraftSession.materialize(spark,
+          spark.read.parquet(outDir.toString))
       }
     deleteTree(tmp)
     out
@@ -1621,7 +1616,7 @@ object EventStreams {
     * HDFS-backed state store fsyncs a delta file per partition per
     * micro-batch and the files sink commits a manifest per batch — on
     * a disk-backed `/tmp` that per-batch IO constant dominates a
-    * multi-batch drain's cost (DrainProfile r6/r8). The placement is a
+    * multi-batch drain's cost (DrainProfile). The placement is a
     * HARNESS-LOCAL lever only: these trees are ephemeral by contract
     * (deleted in the same call, results materialized to local
     * relations first), so durability buys nothing here — a real
@@ -1631,7 +1626,7 @@ object EventStreams {
     * `SPARK_GRAFT_SCRATCH=<dir>` is the deliberate A/B lever and is
     * honored unconditionally: created if missing, and FAILING LOUDLY
     * if unusable — a typo'd override silently falling back to tmpfs
-    * would invert the disk-vs-tmpfs A/B it exists for (ADVICE r9). No
+    * would invert the disk-vs-tmpfs A/B it exists for. No
     * capacity second-guessing on the explicit override. */
   private val MinScratchBytes = 512L * 1024 * 1024
   private[graft] def scratchRoot: java.nio.file.Path = {
@@ -1664,7 +1659,7 @@ object EventStreams {
     * per tag, not last-write-wins: a tag that drains under both
     * providers in one process (DrainProfile's heap/rocksdb A/B) must
     * report both, or the bench JSON misattributes the rep that
-    * actually ran (ADVICE r9). Bench observability: the r8 driver
+    * actually ran. Bench observability: the driver
     * bench couldn't attribute floor_delta between host noise and
     * scratch/provider placement because neither was in the JSON. */
   private[graft] val drainProviders =
@@ -1675,15 +1670,4 @@ object EventStreams {
       .computeIfAbsent(tag.stripSuffix("_"),
         _ => java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
       .add(if (rocksdb) "rocksdb" else "hdfs")
-
-  /** Recursive delete, deepest-first; missing paths are a no-op. */
-  private[graft] def deleteTree(p: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, Path}
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    }
-  }
 }

@@ -189,11 +189,11 @@ object ClusterSmoke {
     spark.sparkContext.addSparkListener(listener)
     val heavy = Seq("rel_pagerank", "dedup_clusters", "pipe_profile",
       "dedup_minhash_lsh", "tpch_q9", "tpch_q18", "tpch_q21",
-      // r12 additions with real volume: the wedge-join triangle count
+      // Additions with real volume: the wedge-join triangle count
       // and the full versioned-table protocol cycle (writes + merges
       // + time-travel reads under starved executors).
       "rel_triangles", "pipe_table_commit",
-      // r12 third session: the multi-writer conflict cycle (two extra
+      // Third session: the multi-writer conflict cycle (two extra
       // writers' full rewrites + rebases) and the segment ingest +
       // dual-route serve of the IVF index — both write-heavy shapes
       // whose broadcast/codebook maths must survive starved executors.

@@ -46,7 +46,7 @@ object DrainProfile {
         println(s"[prof]   batch=${p.batchId} rows=${p.numInputRows} trigger=${d.get("triggerExecution")} addBatch=${d.get("addBatch")} getBatch=${d.get("getBatch")} latestOffset=${d.get("latestOffset")} walCommit=${d.get("walCommit")} commitBatch=${d.get("commitBatch")} planning=${d.get("queryPlanning")}" +
           p.stateOperators.map(so => s" state[${so.operatorName}: commit=${so.allUpdatesTimeMs}u/${so.commitTimeMs}c rows=${so.numRowsTotal}]").mkString)
       }
-      graft.streaming.EventStreams.deleteTree(tmp)
+      graft.sources.GraftSession.deleteTree(tmp)
     }
     def funnel(ev: org.apache.spark.sql.DataFrame) =
       graft.streaming.EventStreams.attributePurchases(

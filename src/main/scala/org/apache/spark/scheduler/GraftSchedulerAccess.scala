@@ -4,7 +4,7 @@ package org.apache.spark.scheduler
   * `private[spark]` at the Scala level (public in bytecode). A stage
   * with a shuffle dependency id is a shuffle-map stage — the signal
   * [[graft.mr.JobProgress]] uses to classify MAP vs REDUCE phases
-  * robustly under AQE (ADVICE r01). Kept to this one field; no other
+  * robustly under AQE. Kept to this one field; no other
   * Spark internals are touched.
   */
 object GraftSchedulerAccess {

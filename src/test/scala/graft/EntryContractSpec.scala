@@ -94,7 +94,13 @@ class EntryContractSpec extends AnyFunSuite {
 
   /** Every code line of `src/main/scala` (comment lines skipped) as
     * (file, all of its lines, index): what the source guards scan. */
-  private def mainCodeLines(): Seq[(java.nio.file.Path, IndexedSeq[String], Int)] = {
+  private def mainCodeLines(): Seq[(java.nio.file.Path, IndexedSeq[String], Int)] =
+    mainLines(comments = false)
+
+  /** The code lines of `src/main/scala`, or with `comments` its comment
+    * lines, as (file, all of its lines, index). */
+  private def mainLines(comments: Boolean)
+      : Seq[(java.nio.file.Path, IndexedSeq[String], Int)] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root),
@@ -107,8 +113,38 @@ class EntryContractSpec extends AnyFunSuite {
       f <- files
       lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
       i <- lines.indices
-      if !Seq("//", "*", "/*").exists(lines(i).trim.startsWith)
+      if Seq("//", "*", "/*").exists(lines(i).trim.startsWith) == comments
     } yield (f, lines, i)
+  }
+
+  test("query code stages and materializes only through GraftSession") {
+    // GraftSession.staged owns a staging tree's lifetime: it
+    // materializes the result while the tree exists and deletes the
+    // tree even when the query fails. A hand-written copy of that
+    // lifecycle, or of the collect-and-rebuild idiom, is where a leaked
+    // tree or a frame over deleted files comes from.
+    val queries = java.nio.file.Paths.get("src/main/scala/graft/queries")
+    val hits = for {
+      (f, lines, i) <- mainCodeLines()
+      t = lines(i)
+      if (f.getFileName.toString != "GraftSession.scala" &&
+          Seq("stagingDir(", "Arrays.asList(").exists(t.contains)) ||
+        (f.startsWith(queries) && t.contains("deleteTree("))
+    } yield s"$f:${i + 1}: ${t.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("comments give reasons, not the round that wrote them") {
+    // A tag like (r12), ADVICE or VERDICT points at a review history
+    // that is not part of the code; the reason it stood for belongs in
+    // the comment itself. Code lines are exempt: SQL aliases such as
+    // r1 and r2 are legitimate there.
+    val tag = """\br[0-9]{1,2}\b|ADVICE|VERDICT|round[- ]?[0-9]+|guide §""".r
+    val hits = for {
+      (f, lines, i) <- mainLines(comments = true)
+      if tag.findFirstIn(lines(i)).nonEmpty
+    } yield s"$f:${i + 1}: ${lines(i).trim}"
+    assert(hits.isEmpty, s"${hits.size} tagged comment lines:\n" + hits.mkString("\n"))
   }
 
   test("library code scopes session config and overlaps jobs only through GraftSession") {

@@ -95,7 +95,7 @@ class OccSpec extends SparkSpec {
         assert(got == st.sorted,
           s"sequence $si ($ops): version $ver diverged from the model")
       }
-      graft.streaming.EventStreams.deleteTree(t.getParent)
+      graft.sources.GraftSession.deleteTree(t.getParent)
     }
   }
 
@@ -125,7 +125,7 @@ class OccSpec extends SparkSpec {
       assert(got == expected, "a concurrent append was lost or duplicated")
     } finally {
       pool.shutdownNow()
-      graft.streaming.EventStreams.deleteTree(t.getParent)
+      graft.sources.GraftSession.deleteTree(t.getParent)
     }
   }
 
@@ -177,7 +177,7 @@ class OccSpec extends SparkSpec {
         .collect().map(_.getLong(0)).sorted.toSeq
       assert(got == expected,
         s"schedule $si ($schedule): table diverged from the serial fold")
-      graft.streaming.EventStreams.deleteTree(t.getParent)
+      graft.sources.GraftSession.deleteTree(t.getParent)
     }
   }
 
@@ -223,7 +223,7 @@ class OccSpec extends SparkSpec {
         s"schedule $si: promote must fold exactly a's additions into b")
       assert(refIds("a") == (base ++ aIds).sorted,
         s"schedule $si: promote must not advance the source branch")
-      graft.streaming.EventStreams.deleteTree(t.getParent)
+      graft.sources.GraftSession.deleteTree(t.getParent)
     }
   }
 }

@@ -150,7 +150,7 @@ class EmbeddingSpec extends SparkSpec {
         efServe = 16, segments = 3, asOf = Some(0L)).out.collect()
       assert(tt.map(_.toString).toSeq == preRows.map(_.toString).toSeq)
       assert(tt.exists(r => killed(r.getLong(2))))
-    } finally graft.streaming.EventStreams.deleteTree(tmp)
+    } finally graft.sources.GraftSession.deleteTree(tmp)
   }
 
   test("emb_cosine_pairs refuses to build above the O(n²) yardstick ceiling") {

@@ -191,7 +191,7 @@ class PlanShapeSpec extends SparkSpec {
         graft.sources.Tables.orders(spark, sf001).count())
     } finally {
       graft.operators.BucketedJoin.dropTables(spark)
-      graft.streaming.EventStreams.deleteTree(wh)
+      graft.sources.GraftSession.deleteTree(wh)
     }
   }
 
@@ -766,7 +766,7 @@ class PlanShapeSpec extends SparkSpec {
     } finally {
       spark.conf.set(autoKey, autoPrev)
       graft.operators.BucketedJoin.dropTables(spark)
-      graft.streaming.EventStreams.deleteTree(wh)
+      graft.sources.GraftSession.deleteTree(wh)
     }
   }
 

@@ -84,4 +84,60 @@ class GraftSessionSpec extends SparkSpec {
       spark.conf.unset(marker)
     }
   }
+
+  test("staged deletes its tree after the body returns") {
+    var tree: java.nio.file.Path = null
+    val out = GraftSession.staged(spark, "graft_spec_") { t =>
+      tree = t
+      java.nio.file.Files.writeString(t.resolve("f.txt"), "x")
+      spark.range(3).toDF("id")
+    }
+    assert(tree != null && !java.nio.file.Files.exists(tree))
+    assert(out.collect().map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L))
+  }
+
+  test("staged deletes its tree when the body throws and rethrows the body's error") {
+    var tree: java.nio.file.Path = null
+    val failure = new IllegalStateException("body failed")
+    val e = intercept[IllegalStateException] {
+      GraftSession.staged(spark, "graft_spec_") { t =>
+        tree = t
+        java.nio.file.Files.createDirectories(t.resolve("sub"))
+        throw failure
+      }
+    }
+    assert(e eq failure)
+    assert(tree != null && !java.nio.file.Files.exists(tree))
+  }
+
+  test("staged returns a local frame on the caller's session that outlives its tree") {
+    var tree: java.nio.file.Path = null
+    val out = GraftSession.staged(spark, "graft_spec_") { t =>
+      tree = t
+      val p = t.resolve("p").toString
+      spark.range(5).write.parquet(p)
+      spark.read.parquet(p)
+    }
+    assert(!java.nio.file.Files.exists(tree))
+    assert(out.sparkSession eq spark)
+    var ids = Seq.empty[Long]
+    assert(jobsLaunchedBy { ids = out.collect().map(_.getLong(0)).toSeq } == 0)
+    assert(ids.sorted == (0L until 5L))
+  }
+
+  test("stagedCatalog resolves graftcat over the tree, never on the caller's session") {
+    var tree: java.nio.file.Path = null
+    val out = GraftSession.stagedCatalog(spark, "graft_spec_") { (t, c) =>
+      tree = t
+      assert(c ne spark)
+      c.sql("CREATE TABLE graftcat.docs (id BIGINT)")
+      c.sql("INSERT INTO graftcat.docs VALUES (2), (1)")
+      assert(java.nio.file.Files.isDirectory(t.resolve("docs")))
+      c.sql("SELECT id FROM graftcat.docs ORDER BY id")
+    }
+    assert(!java.nio.file.Files.exists(tree))
+    assert(out.sparkSession eq spark)
+    assert(out.collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
+    assert(spark.conf.getOption("spark.sql.catalog.graftcat").isEmpty)
+  }
 }

@@ -119,7 +119,7 @@ class HistorySourceSpec extends SparkSpec {
         }
       }.toSet
       assert(got == expected, s"history $hi ($hist): connector diverged")
-      graft.streaming.EventStreams.deleteTree(t.getParent)
+      graft.sources.GraftSession.deleteTree(t.getParent)
     }
   }
 
