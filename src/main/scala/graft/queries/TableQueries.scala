@@ -25,6 +25,11 @@ object TableQueries extends QueryModule {
     "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
     "spark.graft.planning.preserveDataGrouping" -> "true")
 
+  /** The documents fixture's (doc_id, lang, n_chars): the base table
+    * most lifecycle queries commit. */
+  private def docCols(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
+
   /** Stage the shared v0→v2 version history used by BOTH
     * `pipe_table_commit` and `pipe_time_travel` (one definition — a
     * drifted copy would silently fork what "version 1" means between
@@ -35,8 +40,7 @@ object TableQueries extends QueryModule {
   private def stageVersionHistory(
       s: SparkSession, dir: String, table: java.nio.file.Path): Unit = {
     import s.implicits._
-    val base = Tables.documents(s, dir)
-      .select($"doc_id", $"lang", $"n_chars")
+    val base = docCols(s, dir)
     VersionedTable.commit(s, table, 0L, base)
     val changes = Tables.documents(s, dir)
       .where($"doc_id" % 7 < 3)
@@ -95,8 +99,7 @@ object TableQueries extends QueryModule {
         val table = tmp.resolve("table")
         stageVersionHistory(s, dir, table)
         VersionedTable.failedCommit(s, table, 3L,
-          Tables.documents(s, dir)
-            .select($"doc_id", $"lang", $"n_chars").limit(10))
+          docCols(s, dir).limit(10))
         require(VersionedTable.versions(table) == Seq(0L, 1L, 2L),
           s"pipe_table_commit: readable history is " +
             s"${VersionedTable.versions(table)} — the failed v3 leaked " +
@@ -171,8 +174,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_vskip_") { tmp =>
         val table = tmp.resolve("table")
-        val base = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val base = docCols(s, dir)
           .repartitionByRange(8, $"doc_id")
         VersionedTable.commitWithStats(s, table, 0L, base, "doc_id")
         val (df, nRead, nTotal) =
@@ -301,8 +303,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_vcdf_") { tmp =>
         val table = tmp.resolve("table")
-        val base = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val base = docCols(s, dir)
           .repartitionByRange(8, $"doc_id")
         VersionedTable.commitWithStats(s, table, 0L, base, "doc_id")
         // Data lines only: a stats commit also declares its
@@ -432,8 +433,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_vdv_") { tmp =>
         val table = tmp.resolve("table")
-        val docs = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val docs = docCols(s, dir)
         VersionedTable.commit(s, table, 0L, docs)
         VersionedTable.deleteCommit(s, table, 1L,
           docs.where($"doc_id" % 9 === 4).select($"doc_id"), "doc_id")
@@ -485,8 +485,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_vdvskip_") { tmp =>
         val table = tmp.resolve("table")
-        val base = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val base = docCols(s, dir)
           .repartitionByRange(8, $"doc_id")
         VersionedTable.commitWithStats(s, table, 0L, base, "doc_id")
         VersionedTable.deleteCommit(s, table, 1L,
@@ -524,8 +523,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_vmerge_") { tmp =>
         val table = tmp.resolve("table")
-        val docs = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val docs = docCols(s, dir)
         VersionedTable.commit(s, table, 0L, docs)
         val u1 = docs.where($"doc_id" % 6 === 2)
           .selectExpr("doc_id", "lang", "n_chars + 7000L AS n_chars")
@@ -571,8 +569,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_vscan_") { tmp =>
         val table = tmp.resolve("table")
-        val base = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val base = docCols(s, dir)
           .repartitionByRange(8, $"doc_id")
         VersionedTable.commitWithStats(s, table, 0L, base, "doc_id")
         VersionedTable.deleteCommit(s, table, 1L,
@@ -635,8 +632,7 @@ object TableQueries extends QueryModule {
       graft.sources.GraftSession.staged(s, "graft_vjoin_") { tmp =>
         val factT = tmp.resolve("fact")
         val dimT = tmp.resolve("dim")
-        val fact0 = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val fact0 = docCols(s, dir)
         VersionedTable.commitWithStats(s, factT, 0L,
           fact0.repartitionByRange(8, $"doc_id"), "doc_id",
           rowCounts = true)
@@ -707,8 +703,7 @@ object TableQueries extends QueryModule {
       graft.sources.GraftSession.staged(s, "graft_vspj_") { tmp =>
         val factT = tmp.resolve("fact")
         val dimT = tmp.resolve("dim")
-        val fact0 = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val fact0 = docCols(s, dir)
         VersionedTable.commitPartitioned(s, factT, 0L,
           fact0.repartitionByRange(8, $"doc_id"), "lang",
           statsCol = Some("doc_id"), rowCounts = true)
@@ -921,8 +916,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_vbloom_") { tmp =>
         val table = tmp.resolve("table")
-        val docs = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val docs = docCols(s, dir)
           .repartitionByRange(8, $"doc_id" % 8)
         VersionedTable.commitIndexed(s, table, 0L, docs,
           statsCol = "doc_id", bloomCol = "doc_id")
@@ -971,8 +965,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_vzskip_") { tmp =>
         val table = tmp.resolve("table")
-        val docs = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val docs = docCols(s, dir)
         // Dims NORMALIZED to a common 10-bit scale before interleaving
         // — raw interleave lets the wider dimension's high bits own the
         // top of every z value (doc_id spans 13 bits at sf0.1, n_chars
@@ -1029,8 +1022,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_v2w_") { tmp =>
         val table = tmp.resolve("table")
-        val docs = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val docs = docCols(s, dir)
         VersionedTable.commit(s, table, 0L, docs.where($"doc_id" % 3 === 0))
         docs.where($"doc_id" % 3 === 1).write.format("graft-table")
           .mode("append").save(table.toString)
@@ -1329,8 +1321,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_vhist_") { tmp =>
         val table = tmp.resolve("table")
-        val base = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val base = docCols(s, dir)
           .repartitionByRange(8, $"doc_id")
         VersionedTable.commitWithStats(s, table, 0L, base, "doc_id")
         val appended = Tables.documents(s, dir)
@@ -1340,8 +1331,7 @@ object TableQueries extends QueryModule {
         VersionedTable.commitWithStats(s, table, 1L, appended, "doc_id",
           carried = VersionedTable.manifest(table, 0L))
         VersionedTable.failedCommit(s, table, 2L,
-          Tables.documents(s, dir)
-            .select($"doc_id", $"lang", $"n_chars").limit(5))
+          docCols(s, dir).limit(5))
         val out = s.read.format("graft-history").load(table.toString)
           .groupBy($"version")
           .agg(count(lit(1)).as("n_files"),
@@ -1408,8 +1398,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_vmagg_") { tmp =>
         val table = tmp.resolve("table")
-        val docs = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val docs = docCols(s, dir)
         VersionedTable.commitPartitioned(s, table, 0L, docs, "lang",
           statsCol = Some("doc_id"), rowCounts = true)
         val t = s.read.format("graft-table").load(table.toString)
@@ -1469,8 +1458,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_vref_") { tmp =>
         val table = tmp.resolve("table")
-        val docs = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val docs = docCols(s, dir)
         val base = docs.where($"doc_id" % 5 < 3)
         VersionedTable.commit(s, table, 0L, base)
         VersionedTable.branchCreate(table, "main", 0L)
@@ -1541,8 +1529,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_vupd_") { tmp =>
         val table = tmp.resolve("table")
-        val base = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val base = docCols(s, dir)
           .repartitionByRange(8, $"doc_id")
         VersionedTable.commitWithStats(s, table, 0L, base, "doc_id",
           rowCounts = true)
@@ -1595,8 +1582,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_vchk_") { tmp =>
         val table = tmp.resolve("table")
-        val docs = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val docs = docCols(s, dir)
         VersionedTable.commit(s, table, 0L, docs)
         VersionedTable.constraintCommit(s, table, 1L,
           "n_chars >= 0 AND lang IS NOT NULL")
@@ -1652,8 +1638,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.stagedCatalog(s, "graft_vsqlb_") { (tmp, s2) =>
         val table = tmp.resolve("docs")
-        val docs = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val docs = docCols(s, dir)
         VersionedTable.commit(s, table, 0L, docs)
         VersionedTable.branchCreate(table, "exp", 0L)
         VersionedTable.branchCreate(table, "main", 0L)
@@ -1710,8 +1695,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_vprom_") { tmp =>
         val table = tmp.resolve("table")
-        val docs = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val docs = docCols(s, dir)
         VersionedTable.commit(s, table, 0L, docs)
         VersionedTable.branchCreate(table, "main", 0L)
         VersionedTable.branchCreate(table, "exp", 0L)
@@ -1916,8 +1900,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.stagedCatalog(s, "graft_vsqlmrg_") { (tmp, s2) =>
         val table = tmp.resolve("docs")
-        val docs = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val docs = docCols(s, dir)
         VersionedTable.commit(s, table, 0L, docs)
         // The upsert source: +7000 chars for doc_id%6==2 (matched),
         // clones shifted past the id space for doc_id%11==5
@@ -1964,8 +1947,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.stagedCatalog(s, "graft_vsqlsync_") { (tmp, s2) =>
         val table = tmp.resolve("docs")
-        val docs = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val docs = docCols(s, dir)
         VersionedTable.commit(s, table, 0L, docs)
         // The source snapshot: every doc_id%3==0 row with bumped
         // n_chars (matched → update), plus shifted clones (absent from
@@ -3173,8 +3155,7 @@ object TableQueries extends QueryModule {
       import s.implicits._
       graft.sources.GraftSession.staged(s, "graft_vocc_") { tmp =>
         val table = tmp.resolve("table")
-        val docs = Tables.documents(s, dir)
-          .select($"doc_id", $"lang", $"n_chars")
+        val docs = docCols(s, dir)
         VersionedTable.commit(s, table, 0L, docs)
         def clones(m: Long, shift: Long, bump: Long) =
           Tables.documents(s, dir).where($"doc_id" % 11 === m)
