@@ -10,7 +10,7 @@ import scala.collection.mutable.ArrayBuffer
   *
   * [[EmitClient.adapt]] bridges to the iterator-style
   * [[MapReduceClient]] the kernel executes, so emit-style clients run
-  * through exactly the same `flatMap → groupByKey → flatMapGroups`
+  * through exactly the same `flatMap → group by key → flatMapGroups`
   * plan.
   */
 trait EmitClient[K1, V1, K2, V2, K3, V3] extends Serializable {

@@ -1,9 +1,9 @@
 package graft.mr
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
-
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
+import graft.sources.GraftSession
+import org.apache.spark.sql.{Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** Spark-native re-expression of the reference's only executor,
   * `startMapReduceJob(client, inputVec, outputVec, multiThreadLevel)`
@@ -24,7 +24,7 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   *
   * Grouping semantics: the reference groups K2 by *ordering equivalence*
   * (`!(a<b) && !(b<a)`, SURVEY.md §1.2). We require an `Ordering[K2]` and
-  * group by encoder equality; for any lawful Ordering (consistent with
+  * group by the encoded key; for any lawful Ordering (consistent with
   * equals) these coincide, and requiring the Ordering keeps the contract
   * explicit in the signature, like the reference's `operator<` mandate.
   *
@@ -43,6 +43,10 @@ object MapReduce {
     *   cluster. A positive value pins the map-side width only (like
     *   `multiThreadLevel` pins worker count); reduce-side width still
     *   comes from `spark.sql.shuffle.partitions` / AQE.
+    *
+    * Grouping is on the encoded key column `_1` of the mapped pairs, so
+    * the key crosses the shuffle once and is decoded by `ek2` for the
+    * client's reduce.
     */
   def run[K1, V1, K2, V2, K3, V3](
       input: Dataset[(K1, V1)],
@@ -58,9 +62,7 @@ object MapReduce {
     // at low SF and re-plans skew at high SF) — the harness pins it to
     // the CPU count, and at 100 TB AQE's choice beats any hardcoded one.
     val sized = if (parallelism > 0) input.repartition(parallelism) else input
-    sized
-      .flatMap { case (k1, v1) => client.map(k1, v1) }
-      .groupByKey(_._1)
+    grouped(sized.flatMap { case (k1, v1) => client.map(k1, v1) })
       .flatMapGroups { (k2, pairs) =>
         client.reduce(k2, pairs.map(_._2)).iterator
       }
@@ -70,18 +72,33 @@ object MapReduce {
     * pre-aggregation contract, which the reference kernel cannot
     * express (its reduce only ever sees the full shuffled group): the
     * caller supplies an associative+commutative `combine` over V2, and
-    * the kernel lowers the reduce to Spark's `reduceGroups`
-    * (ReduceAggregator), whose PARTIAL aggregate runs before the
-    * exchange — each map partition ships one combined value per key
-    * instead of every intermediate pair, the map-side-combine shape
-    * that makes high-cardinality-key aggregation survive 100 TB.
+    * each map task folds its own pairs before the exchange (in-mapper
+    * combining), so a task ships one combined value per key instead
+    * of every intermediate pair — the map-side-combine shape that makes
+    * high-cardinality-key aggregation survive 100 TB.
+    *
+    * The fold lives in the same `mapPartitions` as `client.map`: a hash
+    * map from K2 to the running V2. It holds at most a fixed number of
+    * keys; when full it is drained into the shuffle and starts again,
+    * and it is drained once more at the end of the task. A task's
+    * memory is therefore bounded by that cap, not by its partition, and
+    * a key that spans several drains simply ships several partial
+    * values. The reduce side folds each group's partial values with
+    * `combine` and hands the client's reduce that single value.
     *
     * Contract (the Hadoop combiner law): for every key,
     * `client.reduce(k, vs)` must equal
     * `client.reduce(k, Iterator(vs.reduce(combine)))` — i.e. the
     * reduce must be algebraic in `combine`. The client's reduce runs
     * once per key on the single combined value, so emission shape
-    * (0..N outputs, K3/V3 mapping) stays fully client-controlled. */
+    * (0..N outputs, K3/V3 mapping) stays fully client-controlled.
+    *
+    * Key contract: the map-side fold keys on K2's `equals`/`hashCode`,
+    * while the shuffle groups on K2's encoding, and the encoding decides
+    * what is one key. `equals` must therefore never merge two keys whose
+    * encodings differ (the same lawfulness [[run]] asks of
+    * `Ordering[K2]`). An `equals` finer than the encoding, such as an
+    * array's identity, only combines less; the result is unchanged. */
   def runCombined[K1, V1, K2, V2, K3, V3](
       input: Dataset[(K1, V1)],
       client: MapReduceClient[K1, V1, K2, V2, K3, V3],
@@ -92,14 +109,13 @@ object MapReduce {
       ev2: Encoder[V2],
       e3: Encoder[(K3, V3)]): Dataset[(K3, V3)] = {
     val sized = if (parallelism > 0) input.repartition(parallelism) else input
-    sized
-      .flatMap { case (k1, v1) => client.map(k1, v1) }
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .reduceGroups(combine)
-      .flatMap { case (k2, v2) =>
-        client.reduce(k2, Iterator.single(v2)).iterator
-      }
+    val combined = sized.mapPartitions { in =>
+      new MapSideCombiner[K2, V2](
+        in.flatMap { case (k1, v1) => client.map(k1, v1) }, combine)
+    }
+    grouped(combined).flatMapGroups { (k2, pairs) =>
+      client.reduce(k2, Iterator.single(pairs.map(_._2).reduce(combine))).iterator
+    }
   }
 
   /** [[run]] with SECONDARY SORT: reduce sees each group's values in
@@ -141,19 +157,16 @@ object MapReduce {
     // wider rows/deeper structs, where the struct comparator's
     // per-comparison allocation shows). Scalar V2 sorts on the column
     // itself. NULL handling is identical for the non-null V2 values a
-    // typed client emits.
-    val valueField = mapped.schema("_2")
-    val sortCols = valueField.dataType match {
-      case s: org.apache.spark.sql.types.StructType =>
-        s.fieldNames.toSeq.map(f =>
-          org.apache.spark.sql.functions.col(s"_2.$f"))
-      case _ => Seq(org.apache.spark.sql.functions.col("_2"))
+    // typed client emits. The column is taken from `mapped` itself, not
+    // by name: a tuple K2 groups on fields that are also named _1, _2.
+    val value = mapped.col("_2")
+    val sortCols = mapped.schema("_2").dataType match {
+      case s: StructType => s.fieldNames.toSeq.map(value.getField)
+      case _ => Seq(value)
     }
-    mapped
-      .groupByKey(_._1)
-      .flatMapSortedGroups(sortCols: _*) {
-        (k2, pairs) => client.reduce(k2, pairs.map(_._2)).iterator
-      }
+    grouped(mapped).flatMapSortedGroups(sortCols: _*) {
+      (k2, pairs) => client.reduce(k2, pairs.map(_._2)).iterator
+    }
   }
 
   /** Async launch — parity with `startMapReduceJob` returning an opaque
@@ -176,14 +189,67 @@ object MapReduce {
     val progress = new JobProgress(groupId)
     spark.sparkContext.addSparkListener(progress)
     val ds = run(input, client, parallelism)
-    val fut = Future {
+    // A fresh thread, not a shared pool: a pool whose threads are all
+    // blocked elsewhere would hold the job back from the scheduler, and
+    // getJobState would read UNDEFINED until a thread freed.
+    val running = GraftSession.async {
       // Job groups are thread-local; set it on the thread that runs the
       // action so every physical job (incl. AQE sub-jobs) carries it.
       spark.sparkContext.setJobGroup(groupId, "graft MapReduce job")
       try ds.collect().toSeq
       finally spark.sparkContext.clearJobGroup()
-    }(ExecutionContext.global)
-    new JobHandle(spark, progress, fut)
+    }
+    new JobHandle(spark, progress, running)
+  }
+
+  /** The shuffle every entry point shares: group the mapped pairs on
+    * their encoded key column `_1`, which the exchange carries anyway.
+    * A key lambda (`groupByKey(_._1)`) would decode every pair to call
+    * it and append a second copy of the key for the exchange to ship. A
+    * struct-encoded K2 (case class, tuple) groups on its fields, which
+    * `ek2` decodes by name. */
+  private def grouped[K2, V2](mapped: Dataset[(K2, V2)])(implicit
+      e2: Encoder[(K2, V2)],
+      ek2: Encoder[K2]): KeyValueGroupedDataset[K2, (K2, V2)] = {
+    val keyCols = mapped.schema("_1").dataType match {
+      case s: StructType => s.fieldNames.toSeq.map(f => col(s"_1.$f"))
+      case _ => Seq(col("_1"))
+    }
+    mapped.groupBy(keyCols: _*).as[K2, (K2, V2)]
+  }
+
+  /** Keys a [[MapSideCombiner]] holds before it drains. */
+  private val CombineCap = 65536
+
+  /** `runCombined`'s in-mapper fold over one task's pairs: values fold
+    * per key into a hash map, which is drained whenever it holds
+    * [[CombineCap]] keys and once more when the pairs run out. Lazy, so
+    * a task holds at most the map, never its whole partition. */
+  private final class MapSideCombiner[K, V](
+      pairs: Iterator[(K, V)],
+      combine: (V, V) => V) extends Iterator[(K, V)] {
+    private val table = new java.util.HashMap[K, V]()
+    private var drain = table.entrySet.iterator
+
+    def hasNext: Boolean = drain.hasNext || { refill(); drain.hasNext }
+
+    def next(): (K, V) = {
+      if (!hasNext) throw new NoSuchElementException("no combined pairs left")
+      val e = drain.next()
+      (e.getKey, e.getValue)
+    }
+
+    private def refill(): Unit = {
+      table.clear()
+      while (table.size < CombineCap && pairs.hasNext) {
+        val (k, v) = pairs.next()
+        val prev = table.get(k)
+        // A null V2 is a value, not a missing key.
+        table.put(k,
+          if (prev == null && !table.containsKey(k)) v else combine(prev, v))
+      }
+      drain = table.entrySet.iterator
+    }
   }
 }
 
@@ -192,7 +258,7 @@ object MapReduce {
 final class JobHandle[OUT] private[mr] (
     spark: SparkSession,
     progress: JobProgress,
-    result: Future[Seq[OUT]]) {
+    result: GraftSession.Running[Seq[OUT]]) {
 
   /** `getJobState` — stage + percentage from the listener. */
   def getJobState: JobState = progress.state
@@ -202,7 +268,7 @@ final class JobHandle[OUT] private[mr] (
     * is async, so without this a `getJobState` immediately after could
     * still see a mid-run snapshot. */
   def waitForJob(): Seq[OUT] = {
-    val out = Await.result(result, Duration.Inf)
+    val out = result.get()
     progress.finish()
     out
   }

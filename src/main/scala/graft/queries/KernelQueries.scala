@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Queries that exercise the faithful MapReduce kernel end-to-end
-  * (typed flatMap → groupByKey shuffle → flatMapGroups), i.e. the
+  * (typed flatMap → group-by-key shuffle → flatMapGroups), i.e. the
   * reference's actual capability surface (SURVEY.md §2.1).
   */
 object KernelQueries extends QueryModule {
@@ -39,11 +39,12 @@ object KernelQueries extends QueryModule {
     // COMBINER wordcount: the same client through
     // MapReduce.runCombined — the Hadoop combiner contract the
     // reference kernel lacks. Where mr_wordcount ships EVERY (word, 1)
-    // pair through the exchange and reduces whole groups,
-    // this plan partial-aggregates per map partition first (one
-    // combined count per word per partition crosses the shuffle) —
-    // plan-guarded partial+final. Same oracle as mr_wordcount: the
-    // combiner must be output-invisible.
+    // pair through the exchange and reduces whole groups, each map
+    // task here folds its counts in a bounded hash map first (one
+    // combined count per word per task crosses the shuffle while the
+    // task's words fit the map; PlanShapeSpec checks the exchange's
+    // record count). Same oracle as mr_wordcount: the combiner must be
+    // output-invisible.
     "mr_combined_wordcount" -> ((s, dir) => {
       import s.implicits._
       MapReduce.runCombined(docs(s, dir), WordCountClient, (a: Long, b: Long) => a + b, mtl(s))

@@ -150,10 +150,12 @@ class EntryContractSpec extends AnyFunSuite {
   test("library code scopes session config and overlaps jobs only through GraftSession") {
     // A conf.set on a shared session is visible to every concurrent
     // query on it; an ad-hoc pool loses track of its threads. Library
-    // code goes through GraftSession.scoped / overlap instead. The one
-    // exemption is VersionedTable's footer pool: footer IO, no Spark
-    // jobs.
-    val banned = Seq("conf.set(", "conf.unset(", "newFixedThreadPool(")
+    // code goes through GraftSession.scoped / overlap / async instead;
+    // the JVM-wide global pool can be filled by blocked work elsewhere,
+    // which would keep a job from starting. The one exemption is
+    // VersionedTable's footer pool: footer IO, no Spark jobs.
+    val banned = Seq("conf.set(", "conf.unset(", "newFixedThreadPool(",
+      "ExecutionContext.global")
     val hits = for {
       (f, lines, i) <- mainCodeLines()
       if f.getFileName.toString != "GraftSession.scala"

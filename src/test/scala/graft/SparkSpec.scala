@@ -41,6 +41,21 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
   def sf001 = "/root/testdata/sf0.01"
+
+  /** Run `ds` and return, for each hash-partitioned exchange it ran,
+    * the number of map tasks that wrote to it and the records they
+    * wrote, read from the executed plan's shuffle metrics. */
+  def keyedShuffleWrites(ds: org.apache.spark.sql.Dataset[_]): Seq[(Int, Long)] = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    ds.collect()
+    new AdaptiveSparkPlanHelper {}.collect(ds.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] =>
+        (e.shuffleDependency.rdd.getNumPartitions,
+          e.metrics("shuffleRecordsWritten").value)
+    }
+  }
 }
 
 object SparkSpec {

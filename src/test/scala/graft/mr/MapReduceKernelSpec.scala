@@ -4,6 +4,9 @@ import graft.SparkSpec
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
+/** A struct-encoded intermediate key: the kernel groups on its fields. */
+final case class SpecKey(word: String, bucket: Long)
+
 /** Kernel ≡ collections model, as multisets (SURVEY.md §5.2): for any
   * input and client, MapReduce.run == input.flatMap(map).groupBy(key)
   * .flatMap(reduce), ignoring order (the reference's output order is
@@ -116,6 +119,112 @@ class MapReduceKernelSpec extends SparkSpec {
         .runCombined(ds, WordCountClient, (a: Long, b: Long) => a + b)
         .collect().toSeq
       assert(asMultiset(plain) == asMultiset(combined))
+    }
+  }
+
+  test("runCombined equals run when one map task drains its combine map several times") {
+    import spark.implicits._
+    // One map task, 100k distinct keys (more than the map-side cap),
+    // each key on two neighbouring pairs and again 200k pairs later: the
+    // map combines within a fill, drains when full, and ships some keys
+    // from more than one drain. A sum and a max both must come out as
+    // run's whole-group reduce.
+    val n = 300000L
+    val keys = 100000L
+    // Two range slices, the second filtered empty: one map task holds
+    // every pair, yet the keyed exchange stays (a one-partition input
+    // would already satisfy the grouping and skip it). Shipping more
+    // records than keys then means that task drained more than once.
+    val input = spark.range(0L, 2 * n, 1L, 2).as[Long].filter(_ < n)
+      .map(i => (i, i * 7919L % 1000003L))
+    def client(fold: Iterator[Long] => Long) =
+      new MapReduceClient[Long, Long, Long, Long, Long, Long] {
+        def map(i: Long, v: Long) = Seq(((i / 2) % keys, v))
+        def reduce(k: Long, vs: Iterator[Long]) = Seq((k, fold(vs)))
+      }
+    Seq[(Iterator[Long] => Long, (Long, Long) => Long)](
+      (_.sum, _ + _), (_.max, math.max)).foreach { case (fold, combine) =>
+      val plain = MapReduce.run(input, client(fold)).collect().toMap
+      val combined = MapReduce.runCombined(input, client(fold), combine)
+      val Seq((_, shipped)) = keyedShuffleWrites(combined)
+      assert(shipped > keys && shipped < n,
+        s"$shipped pairs shipped: expected partial combining over several drains")
+      assert(combined.collect().toMap == plain)
+      assert(plain.size == keys)
+    }
+  }
+
+  test("runCombined hands the client's reduce exactly one value per key") {
+    import spark.implicits._
+    // Each reduce call reports how many values it was given; every key
+    // appears in all four map tasks, so the reduce side must fold their
+    // partial values before calling the client.
+    val client = new MapReduceClient[Long, Long, Long, Long, Long, Int] {
+      def map(k: Long, v: Long) = Seq((v % 10, v))
+      def reduce(k: Long, vs: Iterator[Long]) = Seq((k, vs.size))
+    }
+    val input = (1L to 400L).map(i => (i, i)).toDS().repartition(4)
+    val got = MapReduce.runCombined(input, client, (a: Long, b: Long) => a + b)
+      .collect().toSeq
+    assert(got.map(_._1).sorted == (0L until 10L))
+    assert(got.forall(_._2 == 1), s"reduce calls saw ${got.map(_._2)} values")
+  }
+
+  test("struct and null keys group like the collections model in every entry point") {
+    import spark.implicits._
+    // The kernel groups on the encoded key column: a case-class or tuple
+    // K2 groups on its fields, and a null key is one group.
+    val docs = (1L to 60L).map(i => (i, Seq("a", "b", "ab", "")(i.toInt % 4)))
+    def check[K2](client: MapReduceClient[Long, String, K2, Long, String, Long])(
+        implicit e2: org.apache.spark.sql.Encoder[(K2, Long)],
+        ek2: org.apache.spark.sql.Encoder[K2], ord: Ordering[K2]): Unit = {
+      val ds = docs.toDS().repartition(3)
+      val want = asMultiset(model(docs, client))
+      assert(asMultiset(MapReduce.run(ds, client).collect().toSeq) == want)
+      assert(asMultiset(MapReduce.runSorted(ds, client).collect().toSeq) == want)
+      assert(asMultiset(MapReduce.runCombined(ds, client,
+        (a: Long, b: Long) => a + b).collect().toSeq) == want)
+    }
+    implicit val bySpecKey: Ordering[SpecKey] = Ordering.by(k => (k.word, k.bucket))
+    check(new MapReduceClient[Long, String, SpecKey, Long, String, Long] {
+      def map(k: Long, v: String) = Seq((SpecKey(v, k % 3), k))
+      def reduce(k: SpecKey, vs: Iterator[Long]) = Seq((s"${k.word}/${k.bucket}", vs.sum))
+    })
+    check(new MapReduceClient[Long, String, (String, Long), Long, String, Long] {
+      def map(k: Long, v: String) = Seq(((v, k % 2), k))
+      def reduce(k: (String, Long), vs: Iterator[Long]) = Seq((s"${k._1}/${k._2}", vs.sum))
+    })
+    check(new MapReduceClient[Long, String, String, Long, String, Long] {
+      def map(k: Long, v: String) = Seq((if (v.isEmpty) null else v, k))
+      def reduce(k: String, vs: Iterator[Long]) = Seq((k, vs.sum))
+    })
+  }
+
+  test("startJob reaches the scheduler while the global execution context is saturated") {
+    import spark.implicits._
+    import scala.concurrent.{ExecutionContext, Future}
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    // Blocked futures on every thread of the JVM-wide pool must not
+    // hold a new job back: it runs on its own thread.
+    val threads = Runtime.getRuntime.availableProcessors
+    val started = new CountDownLatch(threads)
+    val release = new CountDownLatch(1)
+    (1 to threads).foreach { _ =>
+      Future { started.countDown(); release.await() }(ExecutionContext.global)
+    }
+    var handle: JobHandle[(String, Long)] = null
+    try {
+      assert(started.await(30, TimeUnit.SECONDS), "the pool never filled")
+      handle = MapReduce.startJob(spark,
+        (1L to 100L).map(i => (i, s"w${i % 7}")).toDS(), WordCountClient)
+      val deadline = System.nanoTime + TimeUnit.SECONDS.toNanos(30)
+      while (handle.getJobState != JobState(Stage.Reduce, 100f) &&
+          System.nanoTime < deadline) Thread.sleep(10)
+      assert(handle.getJobState == JobState(Stage.Reduce, 100f),
+        s"job stuck at ${handle.getJobState} while the pool was busy")
+    } finally {
+      release.countDown()
+      if (handle != null) handle.close()
     }
   }
 

@@ -285,12 +285,31 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("combiner wordcount partial-aggregates before the exchange") {
-    val p = plan("mr_combined_wordcount")
-    assert("ObjectHashAggregate|HashAggregate|SortAggregate".r
-        .findAllIn(p).size >= 2,
-      "runCombined lost its map-side partial aggregate")
+    // The property itself rather than an operator name: each map task
+    // ships at most one combined count per word, which is far fewer
+    // records than the input's tokens.
+    import org.apache.spark.sql.functions._
+    val df = graft.SparkEntry.queries("mr_combined_wordcount")(spark, sf001)
+    val p = df.queryExecution.executedPlan.toString
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,
       "one keyed exchange only — combined values ship, not raw pairs")
+    val Seq((mapTasks, shipped)) = keyedShuffleWrites(df)
+    val words = df.count()
+    val tokens = spark.read.parquet(s"$sf001/documents.parquet")
+      .select(explode(split(col("text"), " ")).as("w"))
+      .filter(col("w") =!= "").count()
+    assert(shipped <= mapTasks * words,
+      s"$shipped records from $mapTasks map tasks over $words words")
+    assert(shipped < tokens, s"$shipped records shipped for $tokens tokens")
+  }
+
+  test("kernel plans group on the key column, with no appended key copy") {
+    // Grouping through a key lambda plans AppendColumns, which decodes
+    // every pair and ships the key a second time.
+    Seq("mr_wordcount", "mr_combined_wordcount", "mr_secondary_sort")
+      .foreach { q =>
+        assert(!plan(q).contains("AppendColumns"), s"$q plans AppendColumns")
+      }
   }
 
   test("cdc roundtrip is exactly two keyed full-outer merges, no window") {
@@ -486,7 +505,7 @@ class PlanShapeSpec extends SparkSpec {
     val p = plan("mr_secondary_sort")
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,
       "expected exactly one group shuffle")
-    assert("Sort \\[value#\\d+L? ASC[^,\\]]*, _2#\\d+[.\\w]* ASC[^\\]]*\\], false".r
+    assert("Sort \\[_1#\\d+L? ASC[^,\\]]*, _2#\\d+[.\\w]* ASC[^\\]]*\\], false".r
         .findFirstIn(p).isDefined,
       "secondary sort value keys did not reach the shuffle-side sort")
   }
